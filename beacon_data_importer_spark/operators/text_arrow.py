@@ -19,10 +19,9 @@ Java-regex / Spark-expression parity contract (each point is what the
 SQL form does, replayed exactly):
 
 * ``F.trim`` strips ASCII SPACE (0x20) only → ``str.strip(" ")``.
-* ``F.lower`` on this corpus (ASCII) ≡ ``str.lower()``.  (Known
-  non-ASCII caveat: a handful of Unicode code points lowercase
-  differently in Java vs Python — the corpus contract is ASCII text,
-  and the parity test would catch a violation.)
+* ``F.lower`` on this corpus (ASCII) ≡ ``str.lower()``.  The usual
+  non-ASCII suspects (İ, ß/ẞ, word-final Σ) lowercase identically too;
+  the adversarial parity test pins them.
 * ``F.split(s, r"\\s+")`` uses Java ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]``
   (ASCII-only) with limit −1 (keeps leading AND trailing empty
   tokens).  Python's ``re.split(r"\\s+", s, flags=re.ASCII)`` matches
@@ -154,8 +153,10 @@ def minhash_signatures_arrow(
     path) computed in one Arrow kernel pass.  Output: (id, sig
     array<bigint>).  Only (id, text) cross the Python boundary —
     callers keep column pruning by construction."""
+    # the kernel passes the id column through under the declared
+    # ``id bigint``: cast here so any integral id type plans correctly
     narrowed = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("__t")
+        F.col(id_col).cast("bigint").alias("id"), F.col(text_col).alias("__t")
     )
     return narrowed.mapInArrow(
         _make_minhash_kernel(num_hashes, shingle_n),

@@ -2,9 +2,11 @@
 reference's ``prepare-calls`` command (``prepare_calls.py:20-191``).
 
 One shared base frame (cached — the direct fix for the reference's ~12×
-CSV re-parse, ``prepare_calls.py:145-156,176-191``), nine derived frames,
-and a QA frame expressed as five real left joins instead of five
-driver-memory hash maps.
+CSV re-parse, ``prepare_calls.py:145-156,176-191``) that also carries the
+labeled "Label: value" pieces of every note body, computed once per row;
+nine derived frames; and a QA frame built from one keyed aggregate over
+the base (one ``groupBy("nhs_number")`` and one broadcast join back)
+instead of five driver-memory hash maps.
 
 Faithfully reproduced quirks (SURVEY §7.6.5):
   * the ``support_already_geting`` typo silently drops that field from
@@ -22,9 +24,9 @@ Spark has none) — the base frame carries ``__source_row`` assigned from
 CSV file order via zipWithIndex.
 
 100 TB posture: everything below is filters/projections/explode (narrow)
-plus the QA joins (broadcast — need-tables are per-import batches,
-bounded).  ``.cache()`` replaces re-parse; at warehouse scale the base
-would be a written staging table.
+plus the QA aggregate (one exchange; its result, one row per contact of
+the import batch, is broadcast back).  ``.cache()`` replaces re-parse;
+at warehouse scale the base would be a written staging table.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config.calls_schema import FIELDS, LABELED_FIELDS, LOGICAL_NAMES
+from ..config.calls_schema import FIELDS, LABELED_FIELDS, LABELS, LOGICAL_NAMES
 from ..functions import expressions as E
 from ..operators.flatmap import explode_counted
 from ..sources.csv import col_exact, read_csv_stringly
@@ -59,6 +61,10 @@ NEEDS_FIELDS = ["nhs_number", "category", "name", "created_at", "updated_at"]
 NOTES_FIELDS = ["nhs_number", "category", "body", "created_at", "updated_at"]
 
 ROW = "__source_row"
+#: the base column holding each row's compose_body pieces, one per
+#: LABELED_FIELDS entry ("Label: value", or NULL for a blank value)
+PIECES = "__pieces"
+_PIECE_AT = {logical: i for i, (_, logical) in enumerate(LABELED_FIELDS)}
 
 
 @dataclass(frozen=True)
@@ -141,7 +147,8 @@ def base_spreadsheet(spark: SparkSession, calls_file_path: str) -> DataFrame:
     """The shared base plan (``prepare_calls.py:33-41``): windows-1252
     scan → rename → non-empty-date filter → provenance JSON (over RAW
     values — serialization happens before date conversion) → date parse →
-    created/updated stamps.  Cached: ~12 downstream consumers."""
+    created/updated stamps → the labeled body pieces (``PIECES``).
+    Cached: ~12 downstream consumers, 8 of which compose a body."""
     df = read_csv_stringly(spark, calls_file_path, encoding="windows-1252")
     validate_calls_header(df)
     # rename via aliasing select: the original headers contain dots/colons
@@ -158,22 +165,39 @@ def base_spreadsheet(spark: SparkSession, calls_file_path: str) -> DataFrame:
     )
     df = df.withColumn("created_at", F.col("latest_attempt_date"))
     df = df.withColumn("updated_at", F.col("latest_attempt_date"))
+    df = df.withColumn(
+        PIECES,
+        F.array(*E.labeled_pieces(
+            (label, F.col(logical)) for label, logical in LABELED_FIELDS
+        )),
+    )
     return df.cache()
 
 
-def _compose(overrides: dict[str, Column] | None = None, **kw) -> Column:
-    """compose_body over the full labeled field list, with per-pipeline
-    overrides for converted columns (food_priority, callback_date)."""
-    overrides = overrides or {}
-    labeled = [
-        (label, overrides.get(logical, F.col(logical)))
-        for label, logical in LABELED_FIELDS
-    ]
-    return E.compose_body(labeled, **kw)
+def _compose(
+    prefix: list[str | Column] | None = None,
+    override: tuple[str, Column] | None = None,
+) -> Column:
+    """compose_body over the full labeled field list, from the pieces
+    cached on the base: prefix lines (literal, or a Column that is NULL
+    when the line is absent) in front, and optionally one converted field
+    (food_priority, callback_date) re-rendered at its position."""
+    pieces = F.col(PIECES)
+    if override is not None:
+        logical, value = override
+        i = _PIECE_AT[logical]
+        pieces = F.concat(
+            F.slice(pieces, 1, i),
+            F.array(*E.labeled_pieces([(LABELS[logical], value)])),
+            F.slice(pieces, i + 2, len(LABELED_FIELDS) - i - 1),
+        )
+    lines = [F.lit(p) if isinstance(p, str) else p for p in prefix or []]
+    return F.concat_ws("\n", *lines, pieces)
 
 
 # ---------------------------------------------------------------------------
-# predicates (F3–F5, ``prepare_calls.py:308-336``)
+# row rules (F3–F5 and the per-frame expressions, ``prepare_calls.py:
+# 235-348``) — shared by derive_frames and the QA aggregate
 # ---------------------------------------------------------------------------
 
 def _needs_food_raw() -> Column:
@@ -212,28 +236,19 @@ def _needs_other_support() -> Column:
     )
 
 
-# ---------------------------------------------------------------------------
-# the nine derived frames
-# ---------------------------------------------------------------------------
+def _status(completed_on: Column) -> Column:
+    return F.when(completed_on.isNotNull(), "Completed").otherwise("To do")
 
-def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
-    """All derived frames, each still carrying __source_row (callers
-    project it away via the *_FIELDS lists; QA uses it for source-order
-    string aggregation)."""
-    frames: dict[str, DataFrame] = {}
 
-    # original_triage_needs (``prepare_calls.py:46-52``)
-    frames["original_triage_needs"] = base.select(
-        ROW,
-        *[F.col(c) for c in ("nhs_number", "created_at", "updated_at")],
-        F.lit("phone triage").alias("category"),
-        F.lit(MSG_ORIGINAL_TRIAGE_NEED).alias("name"),
-        E.determine_completion(
-            "was_contact_made", ["yes", "no 3 attempts made"], "latest_attempt_date"
-        ).alias("completed_on"),
+def _triage_completed_on() -> Column:
+    return E.determine_completion(
+        "was_contact_made", ["yes", "no 3 attempts made"], "latest_attempt_date"
     )
 
-    # original_triage_call_notes via flatMap (``prepare_calls.py:55-61,248-274``)
+
+def _call_note_category_and_count() -> tuple[Column, Column]:
+    """Category and number of the call-note rows a call-log row yields
+    (``prepare_calls.py:248-274``)."""
     lwcm = F.lower(F.col("was_contact_made"))
     failure_cat = F.when(
         F.col("outcome") == "Left voicemail", "phone_message"
@@ -257,6 +272,97 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
         .when(lwcm == "no 3 attempts made", 3)
         .otherwise(0)  # G2: unmatched rows yield zero note rows
     )
+    return category, count
+
+
+def _food_priority() -> Column:
+    """The parsed priority digit of the raw ``food_priority`` cell."""
+    return E.parse_food_priority("food_priority")
+
+
+def _food_completed_on(priority: Column) -> Column:
+    return F.when(priority.isin("1", "2"), F.col("latest_attempt_date"))
+
+
+def _food_block(priority: Column, user: int) -> Column:
+    """The QA sheet's food-need cell for a food need of ``priority``."""
+    return F.concat(
+        F.lit("Food need created\nPriority: "),
+        F.coalesce(priority, F.lit("")),
+        F.lit("\nStatus: "),
+        _status(_food_completed_on(priority)),
+        F.lit("\nAssigned to: "),
+        F.lit(user).cast("string"),
+    )
+
+
+def _callback_date() -> Column:
+    """The date embedded in the raw ``callback_date`` cell, or NULL."""
+    return E.parse_embedded_date("callback_date")
+
+
+def _needs_callback(callback_date: Column) -> Column:
+    # the reference's `book_weekly_food_delivery == True` disjunct is dead
+    # (string vs Python True) and is reproduced as dead
+    return (
+        callback_date.isNotNull()
+        | _needs_food_raw()
+        | (F.col("outcome") == "Call back ")  # trailing space faithful
+    )
+
+
+def _remaining_pipelines(users: CallsUsers) -> list[tuple[str, Column, str, Column]]:
+    """The four remaining-needs pipelines in output order
+    (``prepare_calls.py:92-129,342-348``): frame name, row predicate,
+    category and assigned user."""
+    other_user = (
+        F.when(_has_complex_other_need(), users.complex_needs_user)
+        .when(_has_simple_other_need(), users.simple_needs_user)
+        .otherwise(users.call_log_review_user)
+    )
+    return [
+        (
+            "prescription_needs",
+            F.col("addl_medication_prescriptions") != "",
+            "prescription pickups",
+            F.lit(users.simple_needs_user),
+        ),
+        (
+            "mental_wellbeing_needs",
+            F.col("addl_mental_wellbeing") != "",
+            "physical and mental wellbeing",
+            F.lit(users.complex_needs_user),
+        ),
+        (
+            "financial_needs",
+            F.col("addl_financial") != "",
+            "financial support",
+            F.lit(users.complex_needs_user),
+        ),
+        ("other_needs", _needs_other_support(), "other", other_user),
+    ]
+
+
+# ---------------------------------------------------------------------------
+# the nine derived frames
+# ---------------------------------------------------------------------------
+
+def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
+    """All derived frames, each still carrying __source_row (callers
+    project it away via the *_FIELDS lists)."""
+    frames: dict[str, DataFrame] = {}
+
+    # original_triage_needs (``prepare_calls.py:46-52``)
+    frames["original_triage_needs"] = base.select(
+        ROW,
+        *[F.col(c) for c in ("nhs_number", "created_at", "updated_at")],
+        F.lit("phone triage").alias("category"),
+        F.lit(MSG_ORIGINAL_TRIAGE_NEED).alias("name"),
+        _triage_completed_on().alias("completed_on"),
+    )
+
+    # original_triage_call_notes via flatMap (``prepare_calls.py:55-61,248-274``)
+    category, count = _call_note_category_and_count()
     notes_base = base.select(
         ROW,
         "nhs_number",
@@ -285,7 +391,7 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
 
     # food_needs (``prepare_calls.py:70-80``)
     food = base.filter(_needs_food_raw()).withColumn(
-        "food_priority", E.parse_food_priority("food_priority")
+        "food_priority", _food_priority()
     )
     supplemental = F.when(
         F.col("food_priority").isNotNull(),
@@ -298,12 +404,9 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
     ).otherwise(
         F.to_json(F.struct(F.lit("Grocery delivery").alias("food_service_type")))
     )
-    completed = F.when(
-        F.col("food_priority").isin("1", "2"), F.col("latest_attempt_date")
-    )
     food = (
         food.withColumn("supplemental_data", supplemental)
-        .withColumn("completed_on", completed)
+        .withColumn("completed_on", _food_completed_on(F.col("food_priority")))
         .withColumn("user_id", F.lit(users.food_needs_user))
     )
     frames["food_needs"] = food.withColumn(
@@ -311,23 +414,17 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
     ).withColumn(
         "name",
         _compose(
-            overrides={"food_priority": F.col("food_priority")},
-            prefix_lines=[MSG_GENERIC_NEED],
-            prefix_cols=[
-                F.when(F.col("completed_on").isNotNull(), MSG_CLOSED_FOOD_NEED)
+            [
+                MSG_GENERIC_NEED,
+                F.when(F.col("completed_on").isNotNull(), MSG_CLOSED_FOOD_NEED),
             ],
+            override=("food_priority", F.col("food_priority")),
         ),
     )
 
-    # callback_needs (``prepare_calls.py:82-90``); the reference's
-    # `book_weekly_food_delivery == True` disjunct is dead (string vs
-    # Python True) and is reproduced as dead.
-    cb = base.withColumn("callback_date", E.parse_embedded_date("callback_date"))
-    cb = cb.filter(
-        F.col("callback_date").isNotNull()
-        | _needs_food_raw()
-        | (F.col("outcome") == "Call back ")  # trailing space faithful
-    )
+    # callback_needs (``prepare_calls.py:82-90``)
+    cb = base.withColumn("callback_date", _callback_date())
+    cb = cb.filter(_needs_callback(F.col("callback_date")))
     frames["callback_needs"] = cb.select(
         ROW,
         "nhs_number",
@@ -335,61 +432,26 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
         "updated_at",
         F.lit("phone triage").alias("category"),
         _compose(
-            overrides={"callback_date": F.col("callback_date").cast("string")},
-            prefix_lines=[MSG_CALLBACK_NEED],
+            [MSG_CALLBACK_NEED],
+            override=("callback_date", F.col("callback_date").cast("string")),
         ).alias("name"),
-        F.coalesce(
-            F.col("callback_date"), F.date_add(F.col("latest_attempt_date"), 6)
-        ).alias("start_on"),
+        E.callback_start_date("callback_date", "latest_attempt_date").alias(
+            "start_on"
+        ),
     )
 
-    # prescription / mental-wellbeing / financial needs
-    # (``prepare_calls.py:92-117``)
-    for key, flag, cat, user in (
-        (
-            "prescription_needs",
-            "addl_medication_prescriptions",
-            "prescription pickups",
-            users.simple_needs_user,
-        ),
-        (
-            "mental_wellbeing_needs",
-            "addl_mental_wellbeing",
-            "physical and mental wellbeing",
-            users.complex_needs_user,
-        ),
-        (
-            "financial_needs",
-            "addl_financial",
-            "financial support",
-            users.complex_needs_user,
-        ),
-    ):
-        frames[key] = base.filter(F.col(flag) != "").select(
+    # prescription / mental-wellbeing / financial / other needs
+    # (``prepare_calls.py:92-129``)
+    for key, wanted, cat, user in _remaining_pipelines(users):
+        frames[key] = base.filter(wanted).select(
             ROW,
             "nhs_number",
             "created_at",
             "updated_at",
             F.lit(cat).alias("category"),
-            _compose(prefix_lines=[MSG_OTHER_NEED]).alias("name"),
-            F.lit(user).alias("user_id"),
+            _compose([MSG_OTHER_NEED]).alias("name"),
+            user.alias("user_id"),
         )
-
-    # other_needs (``prepare_calls.py:119-129,342-348``)
-    other_user = (
-        F.when(_has_complex_other_need(), users.complex_needs_user)
-        .when(_has_simple_other_need(), users.simple_needs_user)
-        .otherwise(users.call_log_review_user)
-    )
-    frames["other_needs"] = base.filter(_needs_other_support()).select(
-        ROW,
-        "nhs_number",
-        "created_at",
-        "updated_at",
-        F.lit("other").alias("category"),
-        _compose(prefix_lines=[MSG_OTHER_NEED]).alias("name"),
-        other_user.alias("user_id"),
-    )
 
     # contact_profile_updates (``prepare_calls.py:132-143``); the
     # additional_info pluck reproduces the reference's
@@ -417,121 +479,71 @@ def derive_frames(base: DataFrame, users: CallsUsers) -> dict[str, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# QA (five left joins replacing five driver hash maps,
+# QA (one keyed aggregate replacing five driver hash maps,
 # ``prepare_calls.py:145-173``)
 # ---------------------------------------------------------------------------
 
-def _first_by_source(df: DataFrame, cols: list[str]) -> DataFrame:
-    w = Window.partitionBy("nhs_number").orderBy(ROW)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("nhs_number", *cols)
-    )
+def quality_assurance(base: DataFrame, users: CallsUsers) -> DataFrame:
+    """Each call-log row with what its contact got across all frames.
 
-
-def quality_assurance(base: DataFrame, frames: dict[str, DataFrame]) -> DataFrame:
-    qa = base.withColumn("call_log", _compose())
-
-    # original_triage_status — every base row has a triage need
-    otn = _first_by_source(frames["original_triage_needs"], ["completed_on"])
-    qa = qa.join(
-        F.broadcast(otn.withColumnRenamed("completed_on", "__otn_completed")),
-        "nhs_number",
-        "left",
-    ).withColumn(
-        "original_triage_status",
-        F.when(F.col("__otn_completed").isNotNull(), "Completed").otherwise("To do"),
-    )
-
-    # call-note categories, source-order comma-joined (multi-valued lookup)
-    notes = frames["original_triage_call_notes"]
-    notes_agg = notes.groupBy("nhs_number").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(ROW, "__attempt", "category"))
-                ),
-                lambda x: x["category"],
+    The reference's five lookups (first triage need, all call notes,
+    first food need, first callback need, all remaining needs) are one
+    ``groupBy("nhs_number")`` over the base, evaluated with the same row
+    rules as :func:`derive_frames`: a first-wins lookup is
+    ``min_by(value, when(predicate, __source_row))``, a multi-valued one a
+    ``collect_list`` sorted into source order (NULL when empty).  The
+    aggregate is broadcast back onto the base, which keeps its row
+    order."""
+    row = F.col(ROW)
+    category, count = _call_note_category_and_count()
+    notes = F.array_sort(
+        F.collect_list(F.struct(row, F.array_repeat(category, count).alias("c")))
+    )["c"]
+    # a row's remaining needs, NULL where a pipeline passes it by; sorting
+    # on (pipeline, source row) gives the 4-way cat's order
+    row_needs = F.array(*[
+        F.when(
+            wanted,
+            F.struct(
+                F.lit(i).alias("pipe"),
+                row,
+                F.concat(
+                    F.initcap(F.lit(cat)),
+                    F.lit(" (Assigned to "),
+                    user.cast("string"),
+                    F.lit(")"),
+                ).alias("line"),
             ),
-            ", ",
-        ).alias("original_triage_call_notes")
-    )
-    qa = qa.join(F.broadcast(notes_agg), "nhs_number", "left")
-
-    # food need status block
-    food = _first_by_source(
-        frames["food_needs"], ["completed_on", "user_id", "supplemental_data"]
-    )
-    food_block = F.concat(
-        F.lit("Food need created\nPriority: "),
-        F.coalesce(
-            F.get_json_object(F.col("supplemental_data"), "$.food_priority"),
-            F.lit(""),
+        )
+        for i, (_, wanted, cat, user) in enumerate(_remaining_pipelines(users))
+    ])
+    remaining = F.array_sort(
+        F.array_compact(F.flatten(F.collect_list(row_needs)))
+    )["line"]
+    callback_date = _callback_date()
+    lookups = base.groupBy("nhs_number").agg(
+        F.min_by(_status(_triage_completed_on()), row).alias(
+            "original_triage_status"
         ),
-        F.lit("\nStatus: "),
-        F.when(F.col("completed_on").isNotNull(), "Completed").otherwise("To do"),
-        F.lit("\nAssigned to: "),
-        F.col("user_id").cast("string"),
-    )
-    qa = qa.join(
-        F.broadcast(food.select("nhs_number", food_block.alias("food_need"))),
-        "nhs_number",
-        "left",
-    )
-
-    # callback need block
-    cbn = _first_by_source(frames["callback_needs"], ["start_on"])
-    cb_block = F.concat(
-        F.lit("Callback need created\nStart on: "),
-        F.col("start_on").cast("string"),
-    )
-    qa = qa.join(
-        F.broadcast(cbn.select("nhs_number", cb_block.alias("callback_need"))),
-        "nhs_number",
-        "left",
-    )
-
-    # remaining needs: 4-way cat in pipeline order, then per-key
-    # newline-joined "Category.title() (Assigned to N)" lines
-    remaining = None
-    for idx, key in enumerate(
-        ("prescription_needs", "mental_wellbeing_needs", "financial_needs", "other_needs")
-    ):
-        f = frames[key].select(
-            "nhs_number",
-            F.lit(idx).alias("__pipe"),
-            F.col(ROW).alias("__r"),
-            "category",
-            "user_id",
-        )
-        remaining = f if remaining is None else remaining.unionByName(f)
-    remaining_agg = (
-        remaining.groupBy("nhs_number")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__pipe", "__r", "category", "user_id"))
-            ).alias("__items")
-        )
-        .select(
-            "nhs_number",
-            F.array_join(
-                F.transform(
-                    F.col("__items"),
-                    lambda x: F.concat(
-                        F.initcap(x["category"]),
-                        F.lit(" (Assigned to "),
-                        x["user_id"].cast("string"),
-                        F.lit(")"),
-                    ),
+        F.nullif(F.array_join(F.flatten(notes), ", "), F.lit("")).alias(
+            "original_triage_call_notes"
+        ),
+        F.min_by(
+            _food_block(_food_priority(), users.food_needs_user),
+            F.when(_needs_food_raw(), row),
+        ).alias("food_need"),
+        F.min_by(
+            F.concat(
+                F.lit("Callback need created\nStart on: "),
+                E.callback_start_date(callback_date, "latest_attempt_date").cast(
+                    "string"
                 ),
-                "\n",
-            ).alias("remaining_needs"),
-        )
+            ),
+            F.when(_needs_callback(callback_date), row),
+        ).alias("callback_need"),
+        F.nullif(F.array_join(remaining, "\n"), F.lit("")).alias("remaining_needs"),
     )
-    qa = qa.join(F.broadcast(remaining_agg), "nhs_number", "left")
-
-    return qa.select(
+    return base.join(F.broadcast(lookups), "nhs_number", "left").select(
         "nhs_number",
         "latest_attempt_date",
         "original_triage_status",
@@ -539,7 +551,7 @@ def quality_assurance(base: DataFrame, frames: dict[str, DataFrame]) -> DataFram
         "food_need",
         "callback_need",
         "remaining_needs",
-        "call_log",
+        _compose().alias("call_log"),
     )
 
 
@@ -572,7 +584,7 @@ def prepare_calls(
         remaining = f if remaining is None else remaining.unionByName(f)
 
     return {
-        "quality_assurance": quality_assurance(base, frames),
+        "quality_assurance": quality_assurance(base, users),
         "contact_profile_updates": cut(
             "contact_profile_updates",
             [

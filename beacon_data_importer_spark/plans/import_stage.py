@@ -6,7 +6,8 @@ three scripts; the one hard construct is the data-modifying CTE with
 RETURNING (insert triage needs, capture generated ids, attach notes to
 those fresh ids — ``import_original_triage_needs_and_notes.sql:5-40``).
 Spark emulation: assign ``id = max_existing + row_number()`` BEFORE the
-append, keep the id-bearing frame, and run the notes join against it.
+append (``max_existing`` a one-row aggregate broadcast in the JVM), keep
+the id-bearing frame, and run the notes join against it.
 Note multiplication semantics are preserved: a contact with N inserted
 needs × M staged notes yields N×M note rows, exactly like the SQL.
 
@@ -20,12 +21,14 @@ the per-import staging batch, never the full fact table.
 
 from __future__ import annotations
 
+import csv
+import os
+import shutil
 from dataclasses import dataclass
+from os.path import join
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     BooleanType,
     DateType,
@@ -88,11 +91,15 @@ def read_staging(spark: SparkSession, csv_path: str, kind: str) -> DataFrame:
     + typed-tmp-table step, S6/S7).  Empty cells → NULL, then cast per
     the declared schema; 'True'/'False' strings → boolean."""
     schema = STAGING_SCHEMAS[kind]
+    # the header, read here, names the (all-string) columns: Spark would
+    # otherwise run one job per file to infer them
+    with open(csv_path, newline="") as fh:
+        header = next(csv.reader(fh), [])
     # multiLine: note bodies / need names contain embedded newlines
     # (compose_body); escape='"' matches csv-writer quote doubling.
     raw = (
-        spark.read.option("header", True)
-        .option("inferSchema", False)
+        spark.read.schema(StructType([StructField(c, StringType()) for c in header]))
+        .option("header", True)
         .option("multiLine", True)
         .option("escape", '"')
         .csv(csv_path)
@@ -115,17 +122,21 @@ def read_staging(spark: SparkSession, csv_path: str, kind: str) -> DataFrame:
     return raw.select(*cols)
 
 
-def _max_id(df: DataFrame, id_col: str = "id") -> int:
-    """Current max surrogate id (0 for an empty table).  A driver-side
-    scalar — one value, not a materialization — and one such job per
-    import BATCH, which is fine for the reference's dimension-sized
-    imports (RETURNING emulation inherently reads back a scalar).  Do
-    NOT reach for this on a per-row or per-partition cadence: the
-    fact-table path is ``operators/surrogate.assign_surrogate_ids_
-    scalable`` (zipWithIndex-free prefix-sum ids), which never runs a
-    driver-side read at all."""
-    row = df.agg(F.max(id_col).alias("m")).collect()[0]
-    return int(row.m) if row.m is not None else 0
+def _ids_after(
+    df: DataFrame, order_by: list[str | Column], table: DataFrame
+) -> DataFrame:
+    """``assign_surrogate_ids`` numbering past ``table``'s largest ``id``
+    (0 when it is empty) — the RETURNING emulation's id watermark.  The
+    watermark is a one-row aggregate broadcast onto ``df`` in the JVM,
+    never a scalar collected to the driver: reading ``table`` is part of
+    the query that writes the ids."""
+    top = table.agg(F.coalesce(F.max("id"), F.lit(0)).cast("long").alias("__top"))
+    return (
+        assign_surrogate_ids(df, order_by, id_col="id")
+        .crossJoin(F.broadcast(top))
+        .withColumn("id", F.col("id") + F.col("__top"))
+        .drop("__top")
+    )
 
 
 @dataclass
@@ -141,6 +152,58 @@ def contacts_map(contacts: DataFrame) -> DataFrame:
     return contacts.select(F.col("id").alias("contact_id"), "nhs_number")
 
 
+def _append(table: DataFrame, rows: DataFrame) -> DataFrame:
+    """``INSERT INTO table SELECT …``: the table's columns that ``rows``
+    has, the rest NULL."""
+    return table.unionByName(
+        rows.select(*[c for c in table.columns if c in rows.columns]),
+        allowMissingColumns=True,
+    )
+
+
+def _insert_needs(
+    contacts: DataFrame, batches: list[DataFrame], needs: DataFrame
+) -> DataFrame:
+    """The INSERT…SELECT of staged needs (``import_identified_needs.sql:
+    6-27``, ``import_original_triage_needs_and_notes.sql:5-20``): resolve
+    each contact id (inner join — unmatched NHS numbers drop out) and
+    number the rows past ``needs``' max id in one window, batch by batch,
+    then by (nhs_number, category, name).  Postgres RETURNING order is
+    arbitrary; the engine pins this deterministic one.  Rows keep
+    ``__batch`` (their index in ``batches``)."""
+    staged = None
+    for i, batch in enumerate(batches):
+        batch = batch.withColumn("__batch", F.lit(i))
+        staged = (
+            batch
+            if staged is None
+            else staged.unionByName(batch, allowMissingColumns=True)
+        )
+    resolved = staged.join(F.broadcast(contacts_map(contacts)), "nhs_number")
+    return _ids_after(resolved, ["__batch", "nhs_number", "category", "name"], needs)
+
+
+def _attach_notes(
+    contacts: DataFrame,
+    tmp_notes: DataFrame,
+    inserted_triage: DataFrame,
+    notes: DataFrame,
+) -> DataFrame:
+    """notes ⋈ contacts_map ⋈ inserted triage needs ON contact_id, numbered
+    past ``notes``' max id.  N×M fan-out preserved (``…sql:29-39``)."""
+    ins_keys = inserted_triage.select(
+        F.col("id").alias("need_id"), F.col("contact_id").alias("__cid")
+    )
+    attached = (
+        tmp_notes.join(F.broadcast(contacts_map(contacts)), "nhs_number")
+        .join(ins_keys, F.col("contact_id") == F.col("__cid"))
+        .select(
+            "need_id", "category", "body", "created_at", "updated_at", "import_data"
+        )
+    )
+    return _ids_after(attached, ["need_id", "category", "body"], notes)
+
+
 def import_original_triage_needs_and_notes(
     contacts: DataFrame,
     needs: DataFrame,
@@ -149,49 +212,14 @@ def import_original_triage_needs_and_notes(
     tmp_notes: DataFrame,
 ) -> ImportResult:
     """``import_original_triage_needs_and_notes.sql`` — the RETURNING
-    pipeline.  Order of generated ids: (nhs_number, __source ordering via
-    row_number over nhs_number) — Postgres RETURNING order is arbitrary;
-    the engine pins a deterministic one."""
-    cmap = F.broadcast(contacts_map(contacts))
-
-    resolved = tmp_needs.join(cmap, "nhs_number")  # inner: unmatched drop out
-    inserted = assign_surrogate_ids(
-        resolved,
-        ["nhs_number", "category", "name"],
-        id_col="id",
-        start_after=_max_id(needs),
+    pipeline: insert the triage needs, then attach the staged notes to
+    those fresh ids."""
+    inserted = _insert_needs(contacts, [tmp_needs], needs)
+    return ImportResult(
+        contacts=contacts,
+        needs=_append(needs, inserted),
+        notes=_append(notes, _attach_notes(contacts, tmp_notes, inserted, notes)),
     )
-    new_needs = inserted.select(
-        "id",
-        "contact_id",
-        "category",
-        "name",
-        "created_at",
-        "updated_at",
-        "completed_on",
-    )
-    needs_out = needs.unionByName(new_needs, allowMissingColumns=True)
-
-    # notes ⋈ contacts_map ⋈ inserted_needs ON contact_id — N×M fan-out
-    # preserved (``…sql:29-39``)
-    ins_keys = inserted.select(
-        F.col("id").alias("need_id"), F.col("contact_id").alias("__cid")
-    )
-    attached = (
-        tmp_notes.join(cmap, "nhs_number")
-        .join(ins_keys, F.col("contact_id") == F.col("__cid"))
-        .select(
-            "need_id", "category", "body", "created_at", "updated_at", "import_data"
-        )
-    )
-    new_notes = assign_surrogate_ids(
-        attached,
-        ["need_id", "category", "body"],
-        id_col="id",
-        start_after=_max_id(notes),
-    )
-    notes_out = notes.unionByName(new_notes, allowMissingColumns=True)
-    return ImportResult(contacts=contacts, needs=needs_out, notes=notes_out)
 
 
 def import_identified_needs(
@@ -199,27 +227,7 @@ def import_identified_needs(
 ) -> DataFrame:
     """``import_identified_needs.sql:6-27`` — INSERT…SELECT with the
     contact-id resolution join."""
-    cmap = F.broadcast(contacts_map(contacts))
-    resolved = tmp_identified_needs.join(cmap, "nhs_number")
-    inserted = assign_surrogate_ids(
-        resolved,
-        ["nhs_number", "category", "name"],
-        id_col="id",
-        start_after=_max_id(needs),
-    )
-    new_needs = inserted.select(
-        "id",
-        "contact_id",
-        "category",
-        "name",
-        "created_at",
-        "updated_at",
-        "completed_on",
-        "supplemental_data",
-        "user_id",
-        "start_on",
-    )
-    return needs.unionByName(new_needs, allowMissingColumns=True)
+    return _append(needs, _insert_needs(contacts, [tmp_identified_needs], needs))
 
 
 PROFILE_COLS = [
@@ -277,6 +285,21 @@ def init_contacts_from_csv(spark: SparkSession, contacts_csv: str) -> DataFrame:
     )
 
 
+def _table_or_empty(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The parquet table at ``path``, or — before its first import — an
+    empty relation of ``schema`` built in the JVM.  (``createDataFrame([],
+    schema)`` would parallelize the empty list through Python workers.)"""
+    if os.path.exists(path):
+        return spark.read.parquet(path)
+    jspark = spark._jsparkSession
+    return DataFrame(
+        jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())
+        ),
+        spark,
+    )
+
+
 def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, int]:
     """Execute the full import workflow (``README.md:64-101``) against a
     parquet database directory:
@@ -284,60 +307,47 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
       1. load staging CSVs into typed frames (tmp tables);
          the three needs files (food/callback/remaining) union into
          tmp_identified_needs exactly like the three ``\\COPY`` calls;
-      2. triage needs + notes via the RETURNING pipeline;
-      3. identified needs INSERT…SELECT;
+      2. insert triage and identified needs in one numbering window,
+         triage ids first — the ids the two scripts give when run in turn;
+      3. attach the staged notes to the fresh triage ids (RETURNING);
       4. contact profile UPDATE…FROM;
-      5. atomically swap the new table versions in.
+      5. write each new table version, then swap them in.
 
-    Returns row counts per table.  Writes go to ``*.new`` then rename —
-    Spark cannot overwrite an input path it is lazily reading.
+    No value is read back to the driver: the id watermarks are JVM-side
+    aggregates, the inserted needs are cached once for both the needs and
+    the notes write, and the returned row counts per table are observed
+    on the writes themselves.  Writes go to ``*.new`` then rename — Spark
+    cannot overwrite an input path it is lazily reading.
     """
-    import os
-    import shutil
-    from os.path import join
-
     contacts = spark.read.parquet(join(db_dir, "contacts.parquet"))
+    needs = _table_or_empty(spark, join(db_dir, "needs.parquet"), NEEDS_SCHEMA)
+    notes = _table_or_empty(spark, join(db_dir, "notes.parquet"), NOTES_SCHEMA)
 
-    def load_or_empty(name: str, schema: StructType) -> DataFrame:
-        p = join(db_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            return spark.read.parquet(p)
-        return spark.createDataFrame([], schema)
+    def staged(name: str, kind: str) -> DataFrame:
+        return read_staging(spark, join(staging_dir, f"{name}.csv"), kind)
 
-    needs = load_or_empty("needs", NEEDS_SCHEMA)
-    notes = load_or_empty("notes", NOTES_SCHEMA)
+    tmp_triage = staged("original_triage_needs", "original_triage_needs")
+    tmp_notes = staged("original_triage_notes", "original_triage_notes")
+    tmp_ident = staged("food_needs", "identified_needs")
+    for name in ("callback_needs", "remaining_needs"):
+        tmp_ident = tmp_ident.unionByName(staged(name, "identified_needs"))
+    tmp_updates = staged("contact_profile_updates", "contact_profile_updates")
 
-    tmp_triage = read_staging(
-        spark, join(staging_dir, "original_triage_needs.csv"), "original_triage_needs"
-    )
-    tmp_notes = read_staging(
-        spark, join(staging_dir, "original_triage_notes.csv"), "original_triage_notes"
-    )
-    ident_parts = []
-    for f in ("food_needs.csv", "callback_needs.csv", "remaining_needs.csv"):
-        df = read_staging(spark, join(staging_dir, f), "identified_needs")
-        ident_parts.append(df)
-    tmp_ident = ident_parts[0]
-    for df in ident_parts[1:]:
-        tmp_ident = tmp_ident.unionByName(df)
-    tmp_updates = read_staging(
-        spark,
-        join(staging_dir, "contact_profile_updates.csv"),
-        "contact_profile_updates",
-    )
-
-    res = import_original_triage_needs_and_notes(
-        contacts, needs, notes, tmp_triage, tmp_notes
-    )
-    needs2 = import_identified_needs(contacts, res.needs, tmp_ident)
-    contacts2 = import_contact_profile_updates(contacts, tmp_updates)
-
-    outputs = {"contacts": contacts2, "needs": needs2, "notes": res.notes}
+    inserted = _insert_needs(contacts, [tmp_triage, tmp_ident], needs).cache()
+    triage = inserted.filter(F.col("__batch") == 0)
+    outputs = {
+        "contacts": import_contact_profile_updates(contacts, tmp_updates),
+        "needs": _append(needs, inserted),
+        "notes": _append(notes, _attach_notes(contacts, tmp_notes, triage, notes)),
+    }
     counts: dict[str, int] = {}
     for name, df in outputs.items():
-        new = join(db_dir, f"{name}.parquet.new")
-        df.write.mode("overwrite").parquet(new)
-        counts[name] = spark.read.parquet(new).count()
+        written = Observation(name)
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(join(db_dir, f"{name}.parquet.new"))
+        counts[name] = written.get["rows"]
+    inserted.unpersist()
     for name in outputs:
         final = join(db_dir, f"{name}.parquet")
         if os.path.exists(final):

@@ -83,11 +83,16 @@ def read_table_parallel(
     dominates small inputs).  Per-row values are partitioning-
     invariant, so results are unchanged either way (oracle-gated).
     """
+    if name not in _PARALLEL_KEY:
+        raise ValueError(
+            f"no repartition key for table {name!r}; "
+            f"read_table_parallel knows {sorted(_PARALLEL_KEY)}"
+        )
     df = read_table(spark, sf_dir, name)
     target = n or spark.sparkContext.defaultParallelism
     if _scan_splits(spark, sf_dir, name) >= target:
         return df
-    return df.repartition(target, _PARALLEL_KEY.get(name, "doc_id"))
+    return df.repartition(target, _PARALLEL_KEY[name])
 
 
 def register_views(

@@ -109,11 +109,11 @@ GDS_ROWS = [
 ]
 
 
-def write_calls_csv(path: str) -> None:
+def write_calls_csv(path: str, rows: list[list[str]] = CALLS_ROWS) -> None:
     buf = io.StringIO()
     w = csv.writer(buf)
     w.writerow(ORIGINAL_HEADERS)
-    w.writerows(CALLS_ROWS)
+    w.writerows(rows)
     Path(path).write_bytes(buf.getvalue().encode("windows-1252"))
 
 

@@ -181,15 +181,115 @@ def test_run_import_end_to_end(spark, tmp_path):
     assert all(n.import_data for n in imp)
 
 
-def test_max_id_scalar_semantics(spark):
-    """VERDICT r4 item 7: _max_id is a bounded driver-side scalar (one
-    row per import batch) — 0 on empty, max otherwise, NULL-safe.  The
-    per-row/fact-scale path is assign_surrogate_ids_scalable, which
-    never reads back to the driver."""
-    assert imp._max_id(_empty_needs(spark)) == 0
-    df = spark.createDataFrame([(3,), (41,), (7,)], "id long")
-    assert imp._max_id(df) == 41
-    with_null = spark.createDataFrame(
-        [Row(id=None)], "id long"
+def test_ids_after_watermark_semantics(spark):
+    """New ids continue past the table's max id: from 1 on an empty
+    table, from max + 1 otherwise, NULL ids ignored."""
+    new = spark.createDataFrame([("a",), ("b",)], "k string")
+
+    def ids(table):
+        return sorted(r.id for r in imp._ids_after(new, ["k"], table).collect())
+
+    assert ids(_empty_needs(spark)) == [1, 2]
+    assert ids(spark.createDataFrame([(3,), (41,), (7,)], "id long")) == [42, 43]
+    assert ids(spark.createDataFrame([Row(id=None)], "id long")) == [1, 2]
+
+
+def test_run_import_twice_into_existing_db(spark, tmp_path):
+    """The existing-DB path: two imports of the same staged batch into a
+    DB that already holds needs and notes.  New ids continue from each
+    table's max, identified-need ids follow the batch's triage ids, notes
+    attach to the fresh triage ids only (N×M per contact), and the
+    returned counts equal the row counts in the written parquet files."""
+    import csv
+    import glob
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    import fixtures
+    from beacon_data_importer_spark.plans.calls import (
+        MSG_ORIGINAL_TRIAGE_NEED,
+        CallsUsers,
+        prepare_calls,
     )
-    assert imp._max_id(with_null) == 0
+    from beacon_data_importer_spark.sources.csv import write_csv_file
+
+    staging, db = tmp_path / "staging", tmp_path / "db"
+    staging.mkdir()
+    calls_csv = str(tmp_path / "calls.csv")
+    fixtures.write_calls_csv(calls_csv)
+    for name, df in prepare_calls(spark, calls_csv, CallsUsers(101, 102, 103, 104)).items():
+        write_csv_file(df, str(staging / f"{name}.csv"))
+
+    nhs_by_contact = {10: "900000001", 20: "900000002", 30: "900000004"}
+    spark.createDataFrame(
+        [(i, n, None, None, None, None) for i, n in nhs_by_contact.items()],
+        "id long, nhs_number string, additional_info string, "
+        "delivery_details string, dietary_details string, "
+        "has_covid_symptoms boolean",
+    ).write.parquet(str(db / "contacts.parquet"))
+    spark.createDataFrame(
+        [(5, 10, "phone triage", "old", D(2020, 1, 1), D(2020, 1, 1),
+          None, None, None, None),
+         (9, 20, "other", "old", D(2020, 1, 1), D(2020, 1, 1),
+          None, None, 104, None)],
+        imp.NEEDS_SCHEMA,
+    ).write.parquet(str(db / "needs.parquet"))
+    spark.createDataFrame(
+        [(3, 5, "phone_import", "old", D(2020, 1, 1), D(2020, 1, 1), None),
+         (40, 9, "phone_success", "old", D(2020, 1, 1), D(2020, 1, 1), None)],
+        imp.NOTES_SCHEMA,
+    ).write.parquet(str(db / "notes.parquet"))
+
+    def staged_per_contact(*names: str) -> Counter:
+        out: Counter = Counter()
+        for name in names:
+            with open(staging / f"{name}.csv", newline="") as fh:
+                out.update(r["nhs_number"] for r in csv.DictReader(fh))
+        return Counter({n: out[n] for n in nhs_by_contact.values() if out[n]})
+
+    triage_per = staged_per_contact("original_triage_needs")
+    notes_per = staged_per_contact("original_triage_notes")
+    n_triage = sum(triage_per.values())
+    n_ident = sum(staged_per_contact(
+        "food_needs", "callback_needs", "remaining_needs").values())
+    n_notes = sum(k * notes_per[n] for n, k in triage_per.items())
+    assert (n_triage, n_ident, n_notes) == (4, 3, 14)
+
+    def parquet_rows(name: str) -> int:
+        return sum(pq.read_metadata(f).num_rows
+                   for f in glob.glob(str(db / f"{name}.parquet" / "*.parquet")))
+
+    needs_top, notes_top, old_needs, old_notes = 9, 40, 2, 2
+    for k in (1, 2):
+        counts = imp.run_import(spark, str(db), str(staging))
+        assert counts == {name: parquet_rows(name)
+                          for name in ("contacts", "needs", "notes")}
+        assert counts == {"contacts": 3,
+                          "needs": old_needs + k * (n_triage + n_ident),
+                          "notes": old_notes + k * n_notes}
+
+        needs = spark.read.parquet(str(db / "needs.parquet"))
+        new = needs.filter(needs.id > needs_top).collect()
+        triage = [r for r in new if r.name == MSG_ORIGINAL_TRIAGE_NEED]
+        ident = [r for r in new if r.name != MSG_ORIGINAL_TRIAGE_NEED]
+        triage_ids = sorted(r.id for r in triage)
+        assert triage_ids == list(range(needs_top + 1, needs_top + 1 + n_triage))
+        assert sorted(r.id for r in ident) == list(
+            range(triage_ids[-1] + 1, triage_ids[-1] + 1 + n_ident))
+        # triage ids in nhs_number order
+        assert [nhs_by_contact[r.contact_id] for r in sorted(triage, key=lambda r: r.id)] \
+            == sorted(nhs_by_contact[r.contact_id] for r in triage)
+
+        notes = spark.read.parquet(str(db / "notes.parquet"))
+        fresh = notes.filter(notes.id > notes_top).collect()
+        assert sorted(r.id for r in fresh) == list(
+            range(notes_top + 1, notes_top + 1 + n_notes))
+        assert {r.need_id for r in fresh} == set(triage_ids)
+        contact_of = {r.id: r.contact_id for r in triage}
+        assert Counter(nhs_by_contact[contact_of[r.need_id]] for r in fresh) == Counter(
+            {n: k * notes_per[n] for n, k in triage_per.items()})
+        # the rows that were there before are untouched
+        assert notes.filter(notes.id <= notes_top).count() == old_notes + (k - 1) * n_notes
+        needs_top = max(r.id for r in new)
+        notes_top = max(r.id for r in fresh)

@@ -120,3 +120,73 @@ def test_malformed_calls_header_raises_named_error(spark, tmp_path):
         base_spreadsheet(spark, str(bad))
     assert "missing" in str(ei.value)
     assert "'Contact Sucessful '" in str(ei.value) or "expected header" in str(ei.value)
+
+
+# QA lookup corners the branch fixture leaves open.  The normalized
+# comparison above maps NULL and '' to the same cell, so these rows are
+# compared raw: NULL must stay NULL.
+QA_EDGE_ROWS = [
+    # first row passes neither the food nor the callback predicate; the
+    # second passes both, so both QA rows show the second row's needs
+    fixtures._row(nhs_number="910000001", latest_attempt_date="01/05/2020",
+                  was_contact_made="Yes"),
+    fixtures._row(nhs_number="910000001", latest_attempt_date="02/05/2020",
+                  was_contact_made="Yes", outcome="Food referral ",
+                  food_priority="Priority 2"),
+    # no row's was_contact_made matches a branch -> zero call notes
+    fixtures._row(nhs_number="910000002", latest_attempt_date="03/05/2020",
+                  was_contact_made="Perhaps"),
+    fixtures._row(nhs_number="910000002", latest_attempt_date="04/05/2020",
+                  was_contact_made=""),
+    # all four remaining-needs pipelines, spread over two rows in
+    # reverse pipeline order
+    fixtures._row(nhs_number="910000003", latest_attempt_date="05/05/2020",
+                  was_contact_made="Yes", addl_misc_other1="odd jobs",
+                  addl_financial="bills"),
+    fixtures._row(nhs_number="910000003", latest_attempt_date="06/05/2020",
+                  was_contact_made="No 2 attempts made",
+                  addl_mental_wellbeing="lonely",
+                  addl_medication_prescriptions="inhaler",
+                  addl_safeguarding="concern"),
+    # rows with an empty NHS number form one group of their own
+    fixtures._row(nhs_number="", latest_attempt_date="07/05/2020",
+                  was_contact_made="Maybe"),
+    fixtures._row(nhs_number="", latest_attempt_date="08/05/2020",
+                  was_contact_made="Yes", callback_date="call 09/05/2020",
+                  addl_housing_waste="bins"),
+    fixtures._row(nhs_number="910000001", latest_attempt_date="09/05/2020",
+                  was_contact_made="No 3 attempts made",
+                  addl_medication_prescriptions="meds"),
+]
+
+
+def test_quality_assurance_lookup_edges(spark, tmp_path):
+    p = tmp_path / "qa_calls.csv"
+    fixtures.write_calls_csv(str(p), QA_EDGE_ROWS)
+    qa = prepare_calls(spark, str(p), USERS)["quality_assurance"]
+    got = [
+        {c: (v if v is None or isinstance(v, str) else v.isoformat())
+         for c, v in r.asDict().items()}
+        for r in qa.collect()
+    ]
+    want = ref_oracle.build(str(p), 101, 102, 103, 104)["quality_assurance"]
+    assert got == want  # row order included
+
+    by_row = {(r["nhs_number"], r["latest_attempt_date"]): r for r in got}
+    first = by_row[("910000001", "2020-05-01")]
+    assert first["food_need"].startswith("Food need created\nPriority: 2\n")
+    assert first["callback_need"] == "Callback need created\nStart on: 2020-05-08"
+    assert first["original_triage_status"] == "Completed"
+    assert by_row[("910000002", "2020-05-03")]["original_triage_call_notes"] is None
+    assert by_row[("910000003", "2020-05-05")]["remaining_needs"] == "\n".join([
+        "Prescription Pickups (Assigned to 103)",
+        "Physical And Mental Wellbeing (Assigned to 102)",
+        "Financial Support (Assigned to 102)",
+        "Other (Assigned to 104)",
+        "Other (Assigned to 102)",
+    ])
+    blank = by_row[("", "2020-05-07")]
+    assert blank["original_triage_status"] == "To do"
+    assert blank["original_triage_call_notes"] == "phone_success"
+    assert blank["callback_need"] == "Callback need created\nStart on: 2020-05-09"
+    assert blank["remaining_needs"] == "Other (Assigned to 103)"

@@ -164,3 +164,14 @@ def test_cli_query_subcommand_lists_and_runs(capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert out[0].startswith("returnflag,")
     assert len(out) == 3  # header + 2 rows
+
+
+def test_read_table_parallel_rejects_table_without_key(spark, sf_dir):
+    """A table with no declared repartition key fails up front with a
+    ValueError naming it, instead of repartitioning on a guessed column."""
+    import pytest
+
+    from beacon_data_importer_spark.sources.parquet import read_table_parallel
+
+    with pytest.raises(ValueError, match="'orders'"):
+        read_table_parallel(spark, sf_dir, "orders")

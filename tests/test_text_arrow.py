@@ -55,6 +55,13 @@ ADVERSARIAL = [
     (13, "\t\n"),
     (14, None),
     (15, "x\xa0nbsp is NOT java whitespace so stays one token"),
+    # case-mapping corners where Java and Python lowercasing could part:
+    # dotted capital I (-> i + U+0307), sharp s in both cases, and Greek
+    # capital sigma (-> final ς at a word end)
+    (16, "İstanbul old town walk"),
+    (17, "STRAßE und GROẞ here"),
+    (18, "ΟΔΟΣ word final sigma"),
+    (19, "ΣΑΣ ΟΔΟΣ end ΟΔΟΣ"),
 ]
 
 
@@ -68,6 +75,26 @@ def test_minhash_arrow_matches_sql_adversarial(spark):
     from beacon_data_importer_spark.operators.dedup import MINHASH_P
 
     assert got[14] == [MINHASH_P] * 16
+    # the kernel lowercases with str.lower(), the SQL form with Spark's
+    # lower(): pin that they agree on the non-ASCII corners
+    non_ascii = d.filter(F.col("doc_id") >= 16)
+    lowered = {r[0]: r[1] for r in non_ascii.select("doc_id", F.lower("text")).collect()}
+    assert lowered == {i: t.lower() for i, t in ADVERSARIAL if i >= 16}
+    assert lowered[16].startswith("i\u0307stanbul")
+    assert lowered[17] == "straße und groß here"
+    assert lowered[19] == "σας οδος end οδος"
+
+
+def test_minhash_arrow_casts_integral_ids(spark):
+    """A non-bigint id column is cast in the narrowed select, so the
+    kernel's declared ``id bigint`` output holds for it too."""
+    d = spark.createDataFrame(
+        [(i, t) for i, t in ADVERSARIAL if t is not None],
+        "doc_id int, text string",
+    )
+    want = _sigs(minhash_signatures(d, "text", "doc_id", 16))
+    got = _sigs(minhash_signatures_arrow(d, "text", "doc_id", 16))
+    assert got == want
 
 
 def test_minhash_arrow_other_widths(spark):
