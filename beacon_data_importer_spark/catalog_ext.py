@@ -88,10 +88,11 @@ def _docs_parallel(
     """documents scan repartitioned to the core count ONLY when the
     source is under-split (r12: gated on the actual scan split count —
     see sources/parquet.read_table_parallel; at warehouse scale the
-    gate sees splits >= cores and inserts NO Exchange).  ``n``
-    overrides the partition count (Python-batched operators want fewer
-    partitions locally — per-partition Arrow/worker overhead dominates
-    small inputs)."""
+    gate sees splits >= cores and inserts NO Exchange).  ``n`` replaces
+    the core count as the gate's threshold and repartition target: an
+    under-split scan becomes exactly ``n`` partitions, a scan with ``n``
+    or more splits keeps its own (Python-batched operators pass a small
+    ``n`` — per-partition Arrow/worker overhead dominates small inputs)."""
     from .sources.parquet import read_table_parallel
 
     return read_table_parallel(spark, sf_dir, "documents", n)

@@ -78,10 +78,16 @@ def read_table_parallel(
     gate sees splits >= cores, and NO Exchange is inserted (r12 round:
     the r11 form repartitioned unconditionally, which at 100 TB would
     shuffle the full column-pruned table ahead of every consumer).
-    ``n`` overrides the partition count (Python-batched operators want
-    fewer partitions locally — per-partition Arrow/worker overhead
-    dominates small inputs).  Per-row values are partitioning-
-    invariant, so results are unchanged either way (oracle-gated).
+    ``n`` (default: the core count) is the repartition TARGET for an
+    under-split source, and the threshold the gate compares against:
+    a source with fewer than ``n`` splits is repartitioned to exactly
+    ``n`` partitions (Python-batched operators pass a small ``n`` —
+    per-partition Arrow/worker overhead dominates small inputs).  It is
+    not a cap: a source with ``n`` or more splits keeps its own
+    partitioning, because the split gate wins — never shuffle a
+    many-split table just to narrow it (the 100 TB posture).  Per-row
+    values are partitioning-invariant, so results are unchanged either
+    way (oracle-gated).
     """
     if name not in _PARALLEL_KEY:
         raise ValueError(

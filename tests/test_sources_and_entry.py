@@ -175,3 +175,24 @@ def test_read_table_parallel_rejects_table_without_key(spark, sf_dir):
 
     with pytest.raises(ValueError, match="'orders'"):
         read_table_parallel(spark, sf_dir, "orders")
+
+
+def test_read_table_parallel_n_is_target_for_under_split_only(spark, tmp_path):
+    """``n`` is the repartition target for an under-split source; a
+    source with more splits than ``n`` keeps its own partitioning (the
+    split gate wins: no shuffle just to narrow a many-split table)."""
+    from beacon_data_importer_spark.sources.parquet import read_table_parallel
+
+    docs = spark.range(60).selectExpr("id AS doc_id", "CAST(id AS STRING) AS text")
+    many, single = str(tmp_path / "many"), str(tmp_path / "single")
+    docs.repartition(6).write.parquet(f"{many}/documents.parquet")
+    docs.coalesce(1).write.parquet(f"{single}/documents.parquet")
+
+    splits = spark.read.parquet(f"{many}/documents.parquet").rdd.getNumPartitions()
+    assert splits > 2
+    df = read_table_parallel(spark, many, "documents", n=2)
+    assert df.rdd.getNumPartitions() == splits
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+
+    assert spark.read.parquet(f"{single}/documents.parquet").rdd.getNumPartitions() == 1
+    assert read_table_parallel(spark, single, "documents", n=8).rdd.getNumPartitions() == 8

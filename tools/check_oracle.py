@@ -26,7 +26,7 @@ import sys
 import time
 from decimal import Decimal
 
-REPO = os.environ.get("SPARK_GRAFT_REPO", "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 

@@ -40,7 +40,7 @@ import sys
 import numpy as np
 import pandas as pd
 
-REPO = os.environ.get("SPARK_GRAFT_REPO", "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = (
