@@ -14,6 +14,10 @@ insensitive value-hash comparison deterministic):
   * hashing is md5-based (never engine-native hash functions);
   * orderings always carry an id tie-breaker;
   * timestamps render under UTC (session.py pins the zone).
+
+A query that is pure SQL over temp views registers with
+``sql_query(name, render, *tables)``: one ``render(dialect)`` function
+yields both the Spark SQL and the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ from .operators.setops import union_by_name
 from .operators.surrogate import assign_surrogate_ids
 from .operators.upsert import update_from
 from .session import configure_session
-from .sources.parquet import read_table
+from .sources.parquet import read_table, register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -82,6 +86,29 @@ def query(name: str, oracle: str | None = None, registered: bool = True):
         return wrapped
 
     return deco
+
+
+def sql_query(
+    name: str,
+    render: Callable[[str], str],
+    *tables: str,
+    registered: bool = True,
+    doc: str | None = None,
+) -> QueryFn:
+    """Register a pure-SQL query: ``tables`` become temp views
+    (``register_views``), ``render("spark")`` is the Spark SQL, rendered
+    per call, and ``render("duck")`` is the oracle.  The callable is
+    named ``q_<name>`` in ``render``'s module, so QUERIES.md lists it
+    as if it had been written with ``@query``."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir, *tables)
+        return spark.sql(render("spark"))
+
+    run.__name__ = run.__qualname__ = f"q_{name}"
+    run.__module__ = render.__module__
+    run.__doc__ = doc
+    return query(name, oracle=render("duck"), registered=registered)(run)
 
 
 def cents(c: Column) -> Column:
@@ -426,8 +453,7 @@ def q_multiway_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 + J4/J5 — CTE + multi-way equi join, Spark SQL text path
     (``sql/import_identified_needs.sql:1-27``,
     ``import_original_triage_needs_and_notes.sql:29-39``)."""
-    for t in ("customer", "nation", "orders"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "customer", "nation", "orders")
     return spark.sql(
         """
         WITH cmap AS (

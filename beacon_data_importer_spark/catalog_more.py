@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from .catalog import cents, query
 from .operators import similarity as SIM
-from .sources.parquet import read_table, read_table_parallel
+from .sources.parquet import read_table, read_table_parallel, register_views
 
 # ---------------------------------------------------------------------------
 # join families
@@ -1131,7 +1131,7 @@ def q_max_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     max).  Catalyst decorrelates it into an aggregate + equi join — the
     rewrite that makes per-row subqueries viable at scale (naive
     evaluation would be O(rows × groups))."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o.o_orderkey AS orderkey, o.o_custkey AS custkey,
@@ -1162,7 +1162,7 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (small-order revenue).  Decorrelated by Catalyst into a per-part
     aggregate joined back to lineitem; the aggregate side is dimension-
     sized (one row per part) and broadcastable."""
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT CAST(sum(round(l.l_extendedprice * 100, 0)) AS BIGINT)
@@ -1198,7 +1198,7 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPING() disambiguation of real NULLs vs roll-up NULLs.  Spark
     computes all sets from a single shuffle (expand + hash-agg), not one
     job per set — the multi-level report shape at scale."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT
@@ -1284,7 +1284,7 @@ def q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE — all four aggregation levels in one expand + hash-agg pass
     (completes the rollup / grouping-sets / cube trio)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT
@@ -1319,7 +1319,7 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     24-26``).  Candidate generation goes through
     ``operators.blocking.candidate_pairs`` in cost-based ``auto`` mode:
     exact pigeonhole segment blocking (candidate stream ~linear in rows
-    on entropy-bearing names — measured in ``tools/scale_probe.py``)
+    on entropy-bearing names — measured in PERF.md "Exact segment blocking")
     when segment statistics favor it, exhaustive verify within the
     nation block otherwise (this testdata's ``Customer#%09d`` digit
     names carry no segment entropy, so auto picks coarse here — the

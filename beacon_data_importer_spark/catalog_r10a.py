@@ -42,10 +42,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · d) for Qn's asymptotic Gaussian consistency factor
 #: d = 2.21914 (Rousseeuw & Croux 1993); finite-sample corrections
@@ -400,9 +399,10 @@ def _bwmv_sql(dialect: str) -> str:
     """
 
 
-@query("biweight_midvariance", registered=False, oracle=_bwmv_sql("duck"))
-def q_biweight_midvariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey's biweight midvariance of daily revenue with the standard
+sql_query(
+    "biweight_midvariance", _bwmv_sql, "orders",
+    registered=False,
+    doc="""Tukey's biweight midvariance of daily revenue with the standard
     9·MAD tuning radius: u = (y−M)/(9·MAD), BWMV = n·Σ_{|u|<1}
     (y−M)²(1−u²)⁴ / (Σ(1−u²)(1−5u²))² — the robust variance that
     downweights smoothly to zero instead of trimming hard.  ONE ppm
@@ -414,9 +414,8 @@ def q_biweight_midvariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two bounded-frame medians + one aggregate over the
     calendar-day frame; nothing data-sized after the daily rollup.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_bwmv_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -453,9 +452,10 @@ def _trimean_sql(dialect: str) -> str:
     """
 
 
-@query("trimean_bowley_skew", registered=False, oracle=_trimean_sql("duck"))
-def q_trimean_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey's trimean (Q1+2M+Q3)/4 and Bowley's quartile skewness
+sql_query(
+    "trimean_bowley_skew", _trimean_sql, "orders",
+    registered=False,
+    doc="""Tukey's trimean (Q1+2M+Q3)/4 and Bowley's quartile skewness
     (Q3+Q1−2M)/(Q3−Q1) of daily revenue, from exact HINGE order
     statistics: M at rank ⌈n/2⌉, hinges at rank ⌈(⌈n/2⌉+1)/2⌉ from
     each end (Tukey's five-number convention — the hinge fold, not
@@ -467,9 +467,8 @@ def q_trimean_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one bounded-frame rank over the calendar-day aggregate.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_trimean_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -504,9 +503,10 @@ def _medcouple_sql(dialect: str) -> str:
     """
 
 
-@query("medcouple_skew_lite", registered=False, oracle=_medcouple_sql("duck"))
-def q_medcouple_skew_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Medcouple robust skewness of daily revenue: the median of the
+sql_query(
+    "medcouple_skew_lite", _medcouple_sql, "orders",
+    registered=False,
+    doc="""Medcouple robust skewness of daily revenue: the median of the
     kernel h(xᵢ,xⱼ) = ((xⱼ−M)−(M−xᵢ))/(xⱼ−xᵢ) over pairs with
     xᵢ < M < xⱼ.  LITE convention: observations exactly AT the median
     are excluded from both sides (the full Brys-Hubert-Struyf
@@ -520,9 +520,8 @@ def q_medcouple_skew_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the kernel frame is ≤ C(n,2) over calendar days — bounded;
     its global-order median rank is the BOUNDED_FRAME_AUDITED class.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_medcouple_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -564,9 +563,10 @@ def _hampel_sql(dialect: str) -> str:
     """
 
 
-@query("hampel_outlier_flags", registered=False, oracle=_hampel_sql("duck"))
-def q_hampel_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hampel identifier over daily revenue: a ±7-day rolling window
+sql_query(
+    "hampel_outlier_flags", _hampel_sql, "orders",
+    registered=False,
+    doc="""Hampel identifier over daily revenue: a ±7-day rolling window
     median and rolling MAD per day, flagging |y − med| > 3·1.4826·MAD
     (the gate held as the exact integer cross-multiplication
     10⁴·|dev| > 44478·MAD — zero floating point).  The high-breakdown
@@ -581,9 +581,8 @@ def q_hampel_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in days with constant fanout; both medians are PARTITIONED
     windows (per-day groups, never a global sort).
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_hampel_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -785,9 +784,10 @@ def _yuen_sql(dialect: str) -> str:
     """
 
 
-@query("yuen_trimmed_t", registered=False, oracle=_yuen_sql("duck"))
-def q_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yuen-Welch robust two-sample test between BUILDING and
+sql_query(
+    "yuen_trimmed_t", _yuen_sql, "orders", "customer",
+    registered=False,
+    doc="""Yuen-Welch robust two-sample test between BUILDING and
     MACHINERY order values: 20%-trimmed means compared with
     winsorized variances, t = (x̄ₜ₁−x̄ₜ₂)/√(d₁+d₂) with dⱼ =
     s²_wj·(nⱼ−1)/(hⱼ(hⱼ−1)), hⱼ = nⱼ−2gⱼ.  ``welch_t_test`` on these
@@ -805,6 +805,5 @@ def q_yuen_trimmed_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-frame cumulatives — the dunn/ansari class; nothing
     data-sized crosses an exchange after the histogram rollup.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_yuen_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

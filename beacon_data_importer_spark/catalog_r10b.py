@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r6b import _HOLT_BASE_SQL
 from .catalog_r7g import _stl_sql
 from .catalog_r8d import _day_sql
@@ -56,13 +56,6 @@ _DAMP_PHISUM = (900_000, 1_710_000, 2_439_000)
 _MOSUM_G = 60
 #: floor(1e6 · z₀.₉₇₅) — shared asymptotic two-sided 5% gate.
 _Z975_E6 = 1_959_963
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -104,9 +97,10 @@ def _vn_sql(dialect: str) -> str:
     """
 
 
-@query("von_neumann_ratio", registered=False, oracle=_vn_sql("duck"))
-def q_von_neumann_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Von Neumann ratio of daily revenue: η = Σ(Δy)²/Σ(y−ȳ)², the
+sql_query(
+    "von_neumann_ratio", _vn_sql, "orders",
+    registered=False,
+    doc="""Von Neumann ratio of daily revenue: η = Σ(Δy)²/Σ(y−ȳ)², the
     mean-square-successive-difference test.  η ≈ 2 under serial
     independence, < 2 under positive autocorrelation (smooth trend),
     > 2 under alternation.  The deviation sum is held exact via the
@@ -119,9 +113,8 @@ def q_von_neumann_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass over the calendar-day frame; the lag window is
     calendar-bounded.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_vn_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -159,9 +152,10 @@ def _bartels_sql(dialect: str) -> str:
     """
 
 
-@query("bartels_rank_test", registered=False, oracle=_bartels_sql("duck"))
-def q_bartels_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartels' rank version of the von Neumann ratio on daily
+sql_query(
+    "bartels_rank_test", _bartels_sql, "orders",
+    registered=False,
+    doc="""Bartels' rank version of the von Neumann ratio on daily
     revenue: RVN = Σ(rₜ₊₁−rₜ)² / Σ(r−r̄)², with ranks assigned by
     (value, day) row_number — a deterministic permutation, so the
     denominator is EXACTLY n(n²−1)/12 and the statistic is exact
@@ -173,9 +167,8 @@ def q_bartels_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rank map + lag over the calendar-day frame — both
     calendar-bounded windows.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_bartels_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -222,9 +215,10 @@ def _fs_sql(dialect: str) -> str:
     """
 
 
-@query("foster_stuart_records", registered=False, oracle=_fs_sql("duck"))
-def q_foster_stuart_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Foster-Stuart records test on daily revenue: uₜ = 1 iff day t
+sql_query(
+    "foster_stuart_records", _fs_sql, "orders",
+    registered=False,
+    doc="""Foster-Stuart records test on daily revenue: uₜ = 1 iff day t
     sets a new maximum, lₜ = 1 iff a new minimum; D = Σ(u−l) reads
     trend (records should split evenly under stationarity), S =
     Σ(u+l) reads dispersion change.  Record indicators are pure ORDER
@@ -237,9 +231,8 @@ def q_foster_stuart_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two running-extreme windows over the calendar-day frame.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_fs_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -297,9 +290,10 @@ def _mosum_sql(dialect: str) -> str:
     """
 
 
-@query("mosum_changepoint", registered=False, oracle=_mosum_sql("duck"))
-def q_mosum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSUM break scan over daily revenue: for every day t with full
+sql_query(
+    "mosum_changepoint", _mosum_sql, "orders",
+    registered=False,
+    doc="""MOSUM break scan over daily revenue: for every day t with full
     flanks, the moving-sum contrast |Σ(next {_MOSUM_G} days) −
     Σ(last {_MOSUM_G} days)|, maximized over t (ties → earliest day),
     normalized by σ̂√(2G) and gated at the 3σ house convention.  A
@@ -312,9 +306,8 @@ def q_mosum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two fixed-width ROWS windows over the calendar-day frame
     plus one bounded argmax rank — the calendar-bounded class.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_mosum_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -354,9 +347,10 @@ def _rud_sql(dialect: str) -> str:
     """
 
 
-@query("runs_up_down_test", registered=False, oracle=_rud_sql("duck"))
-def q_runs_up_down_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runs-up-and-down test on daily revenue: successive differences
+sql_query(
+    "runs_up_down_test", _rud_sql, "orders",
+    registered=False,
+    doc="""Runs-up-and-down test on daily revenue: successive differences
     become a ±1 direction sequence (zero differences dropped — the
     standard tie treatment), R = 1 + number of direction changes,
     compared against E[R] = (2N−1)/3 and Var = (16N−29)/90 with N =
@@ -367,9 +361,8 @@ def q_runs_up_down_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two lag windows over the calendar-day frame.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_rud_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -611,9 +604,10 @@ def _sstrength_sql(dialect: str) -> str:
     """
 
 
-@query("seasonal_strength_audit", registered=False, oracle=_sstrength_sql("duck"))
-def q_seasonal_strength_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wang-Smith-Hyndman decomposition-strength features from the
+sql_query(
+    "seasonal_strength_audit", _sstrength_sql, "orders",
+    registered=False,
+    doc="""Wang-Smith-Hyndman decomposition-strength features from the
     ``stl_decomposition_lite`` components: F_s = max(0, 1 −
     Var(R)/Var(S+R)) and F_t = max(0, 1 − Var(R)/Var(T+R)) over the
     months with a defined trend.  The triage read for the forecasting
@@ -626,6 +620,5 @@ def q_seasonal_strength_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: reuses the STL device (calendar-bounded month windows) and
     adds one aggregation.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_sstrength_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

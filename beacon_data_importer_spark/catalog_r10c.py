@@ -44,10 +44,7 @@ from __future__ import annotations
 import math
 from statistics import NormalDist
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: floor(1e6 · χ²₀.₀₅) for df = 10 (Bowker, 5 priorities) and df = 2
 #: (Stuart-Maxwell, 3 classes).
@@ -82,13 +79,6 @@ _BY_TABLE: list[tuple[int, int, int]] = [
     for i in range(1, m + 1)
 ]
 _BY_VALUES_SQL = ", ".join(f"({m}, {i}, {t})" for m, i, t in _BY_TABLE)
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -164,9 +154,10 @@ def _bowker_sql(dialect: str) -> str:
     """
 
 
-@query("bowker_symmetry_test", registered=False, oracle=_bowker_sql("duck"))
-def q_bowker_symmetry_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bowker's symmetry test on the 5×5 order-priority transition
+sql_query(
+    "bowker_symmetry_test", _bowker_sql, "orders",
+    registered=False,
+    doc="""Bowker's symmetry test on the 5×5 order-priority transition
     table (each customer's first-order priority, 1997 → 1998):
     χ² = Σ_{{i<j}} (nᵢⱼ−nⱼᵢ)²/(nᵢⱼ+nⱼᵢ), df = off-diagonal pairs
     with traffic.  Symmetry means priority changes are direction-free
@@ -179,9 +170,8 @@ def q_bowker_symmetry_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the transition table is built from PARTITIONED first-order
     windows and collapses to ≤25 cells before any global step.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_bowker_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -243,9 +233,10 @@ def _sm_sql(dialect: str) -> str:
     """
 
 
-@query("stuart_maxwell_test", registered=False, oracle=_sm_sql("duck"))
-def q_stuart_maxwell_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stuart-Maxwell marginal-homogeneity test on the collapsed 3×3
+sql_query(
+    "stuart_maxwell_test", _sm_sql, "orders",
+    registered=False,
+    doc="""Stuart-Maxwell marginal-homogeneity test on the collapsed 3×3
     priority transition table (high = urgent/high, med, low): with
     d = (r₁−c₁, r₂−c₂) and the 2×2 covariance S (Sᵢᵢ = rᵢ+cᵢ−2nᵢᵢ,
     S₁₂ = −(n₁₂+n₂₁)), χ² = d'S⁻¹d expanded by CRAMER'S RULE —
@@ -257,9 +248,8 @@ def q_stuart_maxwell_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same partitioned-window transition device, 9 cells.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_sm_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -292,9 +282,10 @@ def _lambda_sql(dialect: str) -> str:
     """
 
 
-@query("lambda_goodman_kruskal", registered=False, oracle=_lambda_sql("duck"))
-def q_lambda_goodman_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal λ over the region × market-segment table:
+sql_query(
+    "lambda_goodman_kruskal", _lambda_sql, "customer", "nation", "region",
+    registered=False,
+    doc="""Goodman-Kruskal λ over the region × market-segment table:
     λ(Y|X) = (Σₓ maxᵧ n_xy − maxᵧ n_·y)/(N − maxᵧ n_·y) — the
     proportional reduction in MODAL prediction error from knowing the
     row category; both directions emitted (λ is asymmetric).  Pure
@@ -306,9 +297,8 @@ def q_lambda_goodman_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast-dim aggregation to ≤25 cells; everything
     after runs on the cell frame.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "nation", "region")
-    return spark.sql(_lambda_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -343,9 +333,10 @@ def _gk_tau_sql(dialect: str) -> str:
     """
 
 
-@query("goodman_kruskal_tau", registered=False, oracle=_gk_tau_sql("duck"))
-def q_goodman_kruskal_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal τ(Y|X) over the same region × segment table as
+sql_query(
+    "goodman_kruskal_tau", _gk_tau_sql, "customer", "nation", "region",
+    registered=False,
+    doc="""Goodman-Kruskal τ(Y|X) over the same region × segment table as
     ``lambda_goodman_kruskal``: the PRE measure under PROPORTIONAL
     prediction — τ = (N·Σₓ(Σᵧn²ₓᵧ/nₓ·) − Σᵧn²·ᵧ)/(N² − Σᵧn²·ᵧ).
     Where λ only rewards moving the MODE, τ rewards any sharpening of
@@ -355,9 +346,8 @@ def q_goodman_kruskal_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the ≤25-cell device; two tiny aggregates.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "nation", "region")
-    return spark.sql(_gk_tau_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -399,9 +389,10 @@ def _theil_u_sql(dialect: str) -> str:
     """
 
 
-@query("theil_uncertainty_coeff", registered=False, oracle=_theil_u_sql("duck"))
-def q_theil_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's uncertainty coefficient U(Y|X) = I(X;Y)/H(Y) on the
+sql_query(
+    "theil_uncertainty_coeff", _theil_u_sql, "customer", "nation", "region",
+    registered=False,
+    doc="""Theil's uncertainty coefficient U(Y|X) = I(X;Y)/H(Y) on the
     region × segment table: the fraction of the segment distribution's
     entropy explained by region.  Completes the PRE triple — λ (mode),
     τ (variance), U (entropy) — on the SAME table, so disagreement
@@ -413,9 +404,8 @@ def q_theil_uncertainty_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ≤25-cell frame windows after one broadcast-dim aggregate.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "nation", "region")
-    return spark.sql(_theil_u_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -453,9 +443,10 @@ def _yule_sql(dialect: str) -> str:
     """
 
 
-@query("yules_q_y", registered=False, oracle=_yule_sql("duck"))
-def q_yules_q_y(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yule's Q and colligation coefficient Y for the 2×2 association
+sql_query(
+    "yules_q_y", _yule_sql, "lineitem",
+    registered=False,
+    doc="""Yule's Q and colligation coefficient Y for the 2×2 association
     between returned lineitems and large quantities (> 25): Q =
     (ad−bc)/(ad+bc) — the odds ratio mapped onto [−1,1] — and Y =
     (√ad−√bc)/(√ad+√bc), Q's square-root-damped sibling that resists
@@ -468,9 +459,8 @@ def q_yules_q_y(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE full scan collapsing to four counters — map-side
     combine does all the work; no exchange carries data-sized rows.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_yule_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -541,9 +531,10 @@ def _newcombe_sql(dialect: str) -> str:
     """
 
 
-@query("newcombe_diff_ci", registered=False, oracle=_newcombe_sql("duck"))
-def q_newcombe_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newcombe-Wilson 95% CI for the DIFFERENCE in urgent-order share
+sql_query(
+    "newcombe_diff_ci", _newcombe_sql, "orders", "customer",
+    registered=False,
+    doc="""Newcombe-Wilson 95% CI for the DIFFERENCE in urgent-order share
     between BUILDING and MACHINERY customers: take each segment's
     Wilson interval (``wilson_score_interval``'s exact-ppm device,
     same z² literal) and square-and-add the inner arms — lower =
@@ -555,9 +546,8 @@ def q_newcombe_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one 2-row aggregation behind a broadcast dim join.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_newcombe_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -626,9 +616,10 @@ def _by_sql(dialect: str) -> str:
     """
 
 
-@query("benjamini_yekutieli_audit", registered=False, oracle=_by_sql("duck"))
-def q_benjamini_yekutieli_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benjamini-Yekutieli FDR control (q = 0.10) over the SAME m ≤ 25
+sql_query(
+    "benjamini_yekutieli_audit", _by_sql, "orders", "lineitem", "customer",
+    registered=False,
+    doc="""Benjamini-Yekutieli FDR control (q = 0.10) over the SAME m ≤ 25
     per-nation two-proportion tests as ``fdr_bh_audit``, with the
     harmonic dependence penalty: p₍ᵢ₎ ≤ q·i/(m·c(m)), c(m) = Σ_{{j≤m}}
     1/j.  The per-nation z-statistics share the pooled return-rate
@@ -643,6 +634,5 @@ def q_benjamini_yekutieli_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-sized aggregation (per-order return flag, map-side
     combined) then ≤25-row frames throughout.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "lineitem", "customer")
-    return spark.sql(_by_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

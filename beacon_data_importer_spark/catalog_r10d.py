@@ -46,25 +46,15 @@ Reference parity: beyond-reference embedding/graph/layout tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .catalog_r8e import _cos_e6, _cos_e6_pre, _dot, _norm
+from .catalog import sql_query
+from .catalog_r8e import _cos_e6_pre, _dot, _norm
 from .catalog_r9e import _cent_assign_ctes
-from .sources.parquet import read_table
 
 _CORE_K = 4
 _KNN_K = 5
 _OVERLAP_K = 10
 _OVERLAP_QUERY_MOD = 50  # the catalog-wide 2% query-set rule
 _PLAN_PARTS = 32
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -112,9 +102,10 @@ def _core_sql(dialect: str) -> str:
     """
 
 
-@query("hdbscan_core_distances", registered=False, oracle=_core_sql("duck"))
-def q_hdbscan_core_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HDBSCAN-style core distances over the IVF-celled corpus: for
+sql_query(
+    "hdbscan_core_distances", _core_sql, "embeddings",
+    registered=False,
+    doc="""HDBSCAN-style core distances over the IVF-celled corpus: for
     every vector, the distance to its {_CORE_K}-th nearest neighbor
     WITHIN its cell (cosine distance, one ppm floor per pair), rolled
     up per cell (count / mean / max).  Core distance is the inverse
@@ -126,12 +117,11 @@ def q_hdbscan_core_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the kNN join is cell-scoped — quadratic in the CELL
     population, not the corpus (bounded by the capacity doctrine,
-    tools/semdedup_scale_probe.py); the rank window partitions per
+    PERF.md "Scale probe: semantic_dedup"); the rank window partitions per
     point.  Nothing global except the nlist-row rollup.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_core_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -171,9 +161,10 @@ def _recip_sql(dialect: str) -> str:
     """
 
 
-@query("knn_reciprocity_audit", registered=False, oracle=_recip_sql("duck"))
-def q_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocity of the within-cell {_KNN_K}-NN digraph: the share
+sql_query(
+    "knn_reciprocity_audit", _recip_sql, "embeddings",
+    registered=False,
+    doc="""Reciprocity of the within-cell {_KNN_K}-NN digraph: the share
     of edges a→b with b→a also present.  High-dimensional kNN graphs
     degrade through HUBNESS — a few points appear in everyone's
     neighbor list while most appear in none — and reciprocity is its
@@ -187,9 +178,8 @@ def q_knn_reciprocity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-equi-join on (dst, src) — shuffle on vector ids, no skew
     (out-degree is exactly k for every source).
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_recip_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -256,9 +246,10 @@ def _drift_sql(dialect: str) -> str:
     """
 
 
-@query("centroid_drift_audit", registered=False, oracle=_drift_sql("duck"))
-def q_centroid_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF centroid staleness: per cell, the cosine drift (ppm)
+sql_query(
+    "centroid_drift_audit", _drift_sql, "embeddings",
+    registered=False,
+    doc="""IVF centroid staleness: per cell, the cosine drift (ppm)
     between the STORED centroid and the RECOMPUTED mean of the
     vectors currently assigned to it.  The deterministic hash-picked
     centroids every catalog IVF query uses are a stand-in for a
@@ -275,9 +266,8 @@ def q_centroid_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined to nlist·64) and an nlist-row join — no quadratic step
     anywhere.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_drift_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -340,9 +330,10 @@ def _overlap_sql(dialect: str) -> str:
     """
 
 
-@query("cosine_dot_topk_overlap", registered=False, oracle=_overlap_sql("duck"))
-def q_cosine_dot_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per query, the overlap@{_OVERLAP_K} between the cosine-ranked
+sql_query(
+    "cosine_dot_topk_overlap", _overlap_sql, "embeddings",
+    registered=False,
+    doc="""Per query, the overlap@{_OVERLAP_K} between the cosine-ranked
     and the raw-inner-product-ranked top lists over the corpus.  The
     two metrics agree exactly on unit-norm vectors; any gap measures
     how much NORM SKEW is steering a dot-product (MIPS) index away
@@ -365,9 +356,8 @@ def q_cosine_dot_topk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     production sizing keeps the query sample fixed as the corpus
     grows.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_overlap_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -406,9 +396,10 @@ def _contrast_sql(dialect: str) -> str:
     """
 
 
-@query("ann_contrast_audit", registered=False, oracle=_contrast_sql("duck"))
-def q_ann_contrast_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative contrast per query: mean corpus cosine distance over
+sql_query(
+    "ann_contrast_audit", _contrast_sql, "embeddings",
+    registered=False,
+    doc="""Relative contrast per query: mean corpus cosine distance over
     nearest-neighbor distance (He et al.'s query-difficulty measure).
     RC → 1 is the curse-of-dimensionality regime — the true neighbor
     is barely closer than a random point, so EVERY ANN index needs
@@ -422,9 +413,8 @@ def q_ann_contrast_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-query-set audit shape (no window, pure partial
     aggregation, map-side combined).
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_contrast_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -466,9 +456,10 @@ def _dgini_sql(dialect: str) -> str:
     """
 
 
-@query("graph_degree_gini", registered=False, oracle=_dgini_sql("duck"))
-def q_graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of the supplier-degree distribution over the
+sql_query(
+    "graph_degree_gini", _dgini_sql, "lineitem",
+    registered=False,
+    doc="""Gini coefficient of the supplier-degree distribution over the
     distinct supplier→part edge set: G = (2Σᵢi·x₍ᵢ₎ − (N+1)Σx)/(NΣx),
     evaluated in the TIE-GROUPED histogram form — a degree value d
     with multiplicity m starting after cumulative count a contributes
@@ -482,9 +473,8 @@ def q_graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct-edge aggregate (map-side combined) → per-supplier
     counts → bounded distinct-degree histogram.
 
-    Reference parity: beyond-reference graph tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_dgini_sql("spark"))
+    Reference parity: beyond-reference graph tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -543,9 +533,10 @@ def _planner_sql(dialect: str) -> str:
     """
 
 
-@query("range_partition_planner", registered=False, oracle=_planner_sql("duck"))
-def q_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range-partition boundary plan for orders on o_totalprice:
+sql_query(
+    "range_partition_planner", _planner_sql, "orders",
+    registered=False,
+    doc="""Range-partition boundary plan for orders on o_totalprice:
     {_PLAN_PARTS} boundaries read off the $10-bucket cumulative
     histogram at the i·N/{_PLAN_PARTS} targets, emitted with each
     planned partition's row count and skew ratio (rows·P/N, ppm —
@@ -567,9 +558,8 @@ def q_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note (honest costing): the correlated max-subqueries are
     evaluated per partition row ({_PLAN_PARTS} of them) against the
-    bounded histogram — constant work, chosen for oracle clarity."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_planner_sql("spark"))
+    bounded histogram — constant work, chosen for oracle clarity.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -616,9 +606,10 @@ def _loglen_sql(dialect: str) -> str:
     """
 
 
-@query("doc_length_lognormal_fit", registered=False, oracle=_loglen_sql("duck"))
-def q_doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Method-of-moments lognormal fit of document lengths: per-doc
+sql_query(
+    "doc_length_lognormal_fit", _loglen_sql, "documents",
+    registered=False,
+    doc="""Method-of-moments lognormal fit of document lengths: per-doc
     micro-nat floors of ln(n_chars) (the house floored-ln device —
     one deterministic IEEE ln per doc, integer-exact aggregation
     after), giving μ̂ and σ̂² of the log-length distribution, plus
@@ -634,6 +625,5 @@ def q_doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan aggregate + a bounded distinct-length histogram
     cumulative.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_loglen_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)

@@ -32,10 +32,7 @@ Reference parity: beyond-reference text tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: floor(1e6 · χ²₀.₀₅) at df = 19 (20 sources − 1).
 _CHI2_DF19_E6 = 30_143_527
@@ -49,13 +46,6 @@ _STOPWORDS = (
     "which or from are was not but had his they her she you we"
 ).split()
 _STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _tok_cte(dialect: str) -> str:
@@ -121,9 +111,10 @@ def _kl_sql(dialect: str) -> str:
     """
 
 
-@query("kl_source_divergence", registered=False, oracle=_kl_sql("duck"))
-def q_kl_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source KL divergence from the corpus unigram distribution:
+sql_query(
+    "kl_source_divergence", _kl_sql, "documents",
+    registered=False,
+    doc="""Per-source KL divergence from the corpus unigram distribution:
     KL(P̃_s ‖ P_c) with add-1 smoothing on the source side over the
     CORPUS vocab (so every grid term is defined; P̃_s sums to exactly
     1 over the vocab) and the ML corpus estimate on the reference
@@ -138,9 +129,8 @@ def q_kl_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells; the smoothing grid is sources × vocab — vocab-bounded, 20×
     the vocab frame, never token-volume.  No window anywhere.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_kl_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -194,9 +184,10 @@ def _js_sql(dialect: str) -> str:
     """
 
 
-@query("js_divergence_sources", registered=False, oracle=_js_sql("duck"))
-def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between every source pair's
+sql_query(
+    "js_divergence_sources", _js_sql, "documents",
+    registered=False,
+    doc="""Pairwise Jensen-Shannon divergence between every source pair's
     unigram distribution: JS = ½KL(A‖M) + ½KL(B‖M), M = (A+B)/2.
     JS needs NO smoothing, and the split exploited here makes it
     cheap: a word private to one source contributes exactly p/2 bits
@@ -212,9 +203,8 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in the vocab × a bounded pair constant; no cross join of
     token volumes.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_js_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -273,9 +263,10 @@ def _msttr_sql(dialect: str) -> str:
     """
 
 
-@query("msttr_lexical_diversity", registered=False, oracle=_msttr_sql("duck"))
-def q_msttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean segmental type-token ratio per source: each document's
+sql_query(
+    "msttr_lexical_diversity", _msttr_sql, "documents",
+    registered=False,
+    doc="""Mean segmental type-token ratio per source: each document's
     token stream is cut into consecutive FULL {_MSTTR_SEG}-token
     segments, TTR = distinct/{_MSTTR_SEG} per segment, averaged per
     source (exact integers: Σ distinct·10⁶ div (segments·{_MSTTR_SEG})).
@@ -288,9 +279,8 @@ def q_msttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one position-exploded pass, then keyed aggregates — the
     segment grain is (doc, seg), all partitioned, no windows.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_msttr_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -331,9 +321,10 @@ def _stopchi_sql(dialect: str) -> str:
     """
 
 
-@query("stopword_chi2_drift", registered=False, oracle=_stopchi_sql("duck"))
-def q_stopword_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """χ² homogeneity of the English-stopword token share across
+sql_query(
+    "stopword_chi2_drift", _stopchi_sql, "documents",
+    registered=False,
+    doc="""χ² homogeneity of the English-stopword token share across
     sources: observed per-source stopword counts vs expectation under
     a common rate, χ² = Σ(o_s − n_s·O/N)²/(n_s·O/N) held exact by the
     (o_s·N − n_s·O)² cross-multiplication — one ppm floor per source.
@@ -345,9 +336,8 @@ def q_stopword_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one token-level scan collapsing map-side to 20 counters.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_stopchi_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -382,9 +372,10 @@ def _hapax_sql(dialect: str) -> str:
     """
 
 
-@query("hapax_ratio_by_source", registered=False, oracle=_hapax_sql("duck"))
-def q_hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-growth fingerprints per source: hapax-legomena share
+sql_query(
+    "hapax_ratio_by_source", _hapax_sql, "documents",
+    registered=False,
+    doc="""Vocabulary-growth fingerprints per source: hapax-legomena share
     V₁/V, Sichel's dis-legomena share V₂/V, and Honoré's richness
     R = 100·ln(N)·V/(V−V₁) (e2, one ln+floor on exact counts; NULL if
     every word is a hapax).  Hapax share is the sharpest cheap
@@ -397,6 +388,5 @@ def q_hapax_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-source word counts (map-side combined), then a
     per-source aggregate over the vocab frame; no windows.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_hapax_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)

@@ -29,22 +29,12 @@ J1's first-wins dedup is the reference's only dedup surface).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: md5 first-hex-char band for a chunk boundary: 2/16 = 1/8 of tokens
 #: end a chunk → mean chunk length 8 tokens.
 _CDC_BAND = ("0", "1")
 _NGRAM_N = 8
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -116,9 +106,10 @@ def _cdc_sql(dialect: str) -> str:
     """
 
 
-@query("cdc_chunk_dedup", registered=False, oracle=_cdc_sql("duck"))
-def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunk dedup over the corpus: each document's
+sql_query(
+    "cdc_chunk_dedup", _cdc_sql, "documents",
+    registered=False,
+    doc="""Content-defined chunk dedup over the corpus: each document's
     token stream is cut AFTER every token whose md5 starts in the
     {{0,1}} hex band (P = 1/8 → mean chunk ≈ 8 tokens), chunks are
     rehashed, and duplicate mass is measured corpus-wide.  The CDC
@@ -134,9 +125,8 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the same shuffle posture as ``passage_dedup``, no
     global window, no pair expansion.
 
-    Reference parity: beyond-reference dedup tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_cdc_sql("spark"))
+    Reference parity: beyond-reference dedup tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -200,11 +190,10 @@ def _xsource_sql(dialect: str) -> str:
     """
 
 
-@query("cross_source_ngram_overlap", registered=False, oracle=_xsource_sql("duck"))
-def q_cross_source_ngram_overlap(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Directed {_NGRAM_N}-gram containment between source pairs:
+sql_query(
+    "cross_source_ngram_overlap", _xsource_sql, "documents",
+    registered=False,
+    doc="""Directed {_NGRAM_N}-gram containment between source pairs:
     |shingles(a) ∩ shingles(b)| / |shingles(a)| for the top-25 most
     contaminated ordered pairs (deterministic tie-break).  The
     source-grain contamination matrix: a high (a→b) with a low (b→a)
@@ -221,9 +210,8 @@ def q_cross_source_ngram_overlap(
     ``shingle_containment_pairs``, whose df-cap device applies as-is
     if a production corpus has hot shingles.
 
-    Reference parity: beyond-reference dedup tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_xsource_sql("spark"))
+    Reference parity: beyond-reference dedup tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -241,11 +229,10 @@ def _wdbt_sql(dialect: str) -> str:
     """
 
 
-@query("watermark_dedup_batch_twin", registered=False, oracle=_wdbt_sql("duck"))
-def q_watermark_dedup_batch_twin(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Exact per-hour distinct users per event type — the BATCH twin
+sql_query(
+    "watermark_dedup_batch_twin", _wdbt_sql, "events",
+    registered=False,
+    doc="""Exact per-hour distinct users per event type — the BATCH twin
     of ``streaming/events.py::windowed_distinct_users(exact=True)``,
     whose streaming plan chains ``dropDuplicatesWithinWatermark`` on
     (user, type, hour) into a windowed count because streaming
@@ -262,6 +249,5 @@ def q_watermark_dedup_batch_twin(
     map-side); streaming side holds per-(window, type) user state
     bounded by the watermark horizon.
 
-    Reference parity: beyond-reference streaming tier."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_wdbt_sql("spark"))
+    Reference parity: beyond-reference streaming tier.""",
+)

@@ -46,10 +46,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _ordinal_pairs_sql, _two_group_hist_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · z₀.₉₇₅) — two-sided 5% normal gate (Mann-Kendall z).
 _Z975_E6 = 1_959_963
@@ -107,9 +106,9 @@ def _hoeffding_sql(dialect: str) -> str:
     """
 
 
-@query("hoeffding_d", oracle=_hoeffding_sql("duck"))
-def q_hoeffding_d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hoeffding's D between day index and daily revenue, the
+sql_query(
+    "hoeffding_d", _hoeffding_sql, "orders",
+    doc="""Hoeffding's D between day index and daily revenue, the
     dependence test with power against ALL alternatives (including the
     non-monotone shapes rho/tau/xi miss).  Hollander-Wolfe computing
     form, 30× scaling so D ∈ [−0.5, 1]:
@@ -130,9 +129,8 @@ def q_hoeffding_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume-bearing exchange is the daily aggregate (map-side
     combinable).  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_hoeffding_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -271,9 +269,9 @@ def _blomqvist_sql(dialect: str) -> str:
     """
 
 
-@query("blomqvist_beta", oracle=_blomqvist_sql("duck"))
-def q_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blomqvist's beta (the medial correlation): sign agreement of
+sql_query(
+    "blomqvist_beta", _blomqvist_sql, "orders",
+    doc="""Blomqvist's beta (the medial correlation): sign agreement of
     (t − med t, y − med y) quadrants, β = (n₁ − n₂)/(n₁ + n₂).  The
     50%-breakdown dependence coefficient — one wild day cannot move it
     — and the natural robust companion to ``blomqvist``-free rho/tau.
@@ -286,9 +284,8 @@ def q_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (BOUNDED_FRAME_AUDITED), one broadcastable 1-row median
     row, one pass over the day frame.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_blomqvist_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -317,11 +314,9 @@ def _footrule_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "spearman_footrule", oracle=_footrule_sql("duck")
-)
-def q_spearman_footrule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman's footrule between the time order and the revenue
+sql_query(
+    "spearman_footrule", _footrule_sql, "orders",
+    doc="""Spearman's footrule between the time order and the revenue
     order of the daily frame: F = Σ|Rᵢ − Sᵢ| (the L1 permutation
     distance, the metric behind rank-fusion diagnostics), normalized
     by Diaconis-Graham to sim = 1 − 3F/(n² − 1) ∈ [−0.5, 1], which is
@@ -333,9 +328,8 @@ def q_spearman_footrule(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (BOUNDED_FRAME_AUDITED) and a 1-row aggregate — the daily
     aggregate is the only volume-bearing exchange.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_footrule_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -383,11 +377,9 @@ def _mk_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "mann_kendall_test", oracle=_mk_sql("duck")
-)
-def q_mann_kendall_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on daily revenue — the standard
+sql_query(
+    "mann_kendall_test", _mk_sql, "orders",
+    doc="""Mann-Kendall trend test on daily revenue — the standard
     nonparametric monotone-trend gate (the WMO/hydrology workhorse):
     S = Σᵢ<ⱼ sign(yⱼ − yᵢ), tie-corrected Var(S) = [n(n−1)(2n+5) −
     Σ_g t_g(t_g−1)(2t_g+5)]/18, continuity-corrected z = (S∓1)/√Var.
@@ -402,9 +394,8 @@ def q_mann_kendall_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the theil_sen class); tie groups via one bounded GROUP BY y.  No
     window at all.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_mk_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -457,9 +448,9 @@ def _cucconi_sql(dialect: str) -> str:
     """
 
 
-@query("cucconi_test", oracle=_cucconi_sql("duck"))
-def q_cucconi_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cucconi's two-sample location-scale test (BUILDING vs MACHINERY
+sql_query(
+    "cucconi_test", _cucconi_sql, "orders", "customer",
+    doc="""Cucconi's two-sample location-scale test (BUILDING vs MACHINERY
     order values): U from squared ranks, V from squared CONTRARY ranks
     (N+1−R), combined through their exact null correlation
     ρ = 2(N²−4)/((2N+1)(8N+11)) − 1 into
@@ -476,9 +467,8 @@ def q_cucconi_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     $10-bucket frame (price-range-bounded, BOUNDED_FRAME_AUDITED) and
     a per-group 1-row reduction.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_cucconi_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -539,9 +529,9 @@ def _cronbach_sql(dialect: str) -> str:
     """
 
 
-@query("cronbach_alpha", oracle=_cronbach_sql("duck"))
-def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cronbach's alpha over the per-customer 3-item revenue profile:
+sql_query(
+    "cronbach_alpha", _cronbach_sql, "orders",
+    doc="""Cronbach's alpha over the per-customer 3-item revenue profile:
     items = revenue (cents div 1000) in each calendar TERTILE of the
     order-date range (item k = (3·day_offset) div span ∈ {{0,1,2}}),
     α = (k/(k−1))·(1 − Σᵢσᵢ²/σ²_total).  The classical reliability
@@ -558,9 +548,8 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (map-side combinable).  DECIMAL(38)/HUGEINT holds the
     ≤1e24 products.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_cronbach_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -590,9 +579,9 @@ def _tauc_sql(dialect: str) -> str:
     """
 
 
-@query("stuart_tau_c", oracle=_tauc_sql("duck"))
-def q_stuart_tau_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stuart's tau-c between discount and quantity: τ_c =
+sql_query(
+    "stuart_tau_c", _tauc_sql, "lineitem",
+    doc="""Stuart's tau-c between discount and quantity: τ_c =
     2m(P − Q)/(N²(m − 1)) with m = min(#rows, #cols) of the ordinal
     table — the member of the tau family built for RECTANGULAR tables,
     where tau-b cannot reach ±1.  Completes the house set from the
@@ -607,6 +596,5 @@ def q_stuart_tau_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤11×50 cells), the bounded B² cell cross, a 3-aggregate dims row.
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_tauc_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

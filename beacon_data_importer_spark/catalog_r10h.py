@@ -44,10 +44,7 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: KMV sketch size: rel. std. error ≈ 1/√(k−2) ≈ 9%.  128 (not the
 #: production 1024+) so the sketch stays meaningfully SMALLER than the
@@ -56,13 +53,6 @@ from .sources.parquet import read_table
 _KMV_K = 128
 #: 2^60 — the hash-space size of portable_hash64 (15 hex digits).
 _HASH_SPACE = 1 << 60
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _cust_hist_sql(dialect: str) -> str:
@@ -124,9 +114,9 @@ def _hoover_sql(dialect: str) -> str:
     """
 
 
-@query("hoover_index", oracle=_hoover_sql("duck"))
-def q_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hoover (Robin Hood) index of customer revenue: the fraction of
+sql_query(
+    "hoover_index", _hoover_sql, "customer", "orders",
+    doc="""Hoover (Robin Hood) index of customer revenue: the fraction of
     total revenue that must be transferred from above-mean to
     below-mean customers to equalize — ½·Σ|xᵢ − μ|/Σx, the most
     interpretable inequality number and the max vertical gap of the
@@ -139,9 +129,8 @@ def q_hoover_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-balanced); everything after runs on the bounded
     DISTINCT-bucket histogram — no window needed at all.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_hoover_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -175,11 +164,9 @@ def _gmd_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "gini_mean_difference", oracle=_gmd_sql("duck")
-)
-def q_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini's mean difference Δ = E|X − X'| of customer revenue, the
+sql_query(
+    "gini_mean_difference", _gmd_sql, "customer", "orders",
+    doc="""Gini's mean difference Δ = E|X − X'| of customer revenue, the
     U-statistic scale estimate (denominator n(n−1)) Gini built his
     index from.  The Σᵢⱼ|vᵢ−vⱼ| pair mass comes from the SAME
     ascending-cumulative device as ``gini_lorenz_audit`` — each bucket
@@ -193,9 +180,8 @@ def q_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the cumulative window over the DISTINCT $1000-bucket frame
     (price-range-bounded, BOUNDED_FRAME_AUDITED).  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_gmd_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -225,9 +211,9 @@ def _atkinson_sql(dialect: str) -> str:
     """
 
 
-@query("atkinson_index", oracle=_atkinson_sql("duck"))
-def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atkinson inequality index at ε = 1: A = 1 − geomean/mean, the
+sql_query(
+    "atkinson_index", _atkinson_sql, "customer", "orders",
+    doc="""Atkinson inequality index at ε = 1: A = 1 − geomean/mean, the
     welfare-theoretic read ("what fraction of total revenue could be
     discarded if it were equally distributed, for equal welfare").
     The geometric mean uses the house float-determinism device: ln is
@@ -242,9 +228,8 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: custkey-hash shuffle into the bounded bucket histogram; no
     window.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_atkinson_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -307,11 +292,9 @@ def _theil_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "theil_t_decomposition", oracle=_theil_sql("duck")
-)
-def q_theil_t_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's T inequality of customer revenue with the additive
+sql_query(
+    "theil_t_decomposition", _theil_sql, "customer", "orders", "nation",
+    doc="""Theil's T inequality of customer revenue with the additive
     between-nation / within-nation decomposition — the property entropy
     indexes are chosen for (Gini does not decompose):
 
@@ -330,9 +313,8 @@ def q_theil_t_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one custkey-hash shuffle, one bounded (nation × bucket)
     histogram, a 25-row nation rollup.  No window.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders", "nation")
-    return spark.sql(_theil_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -380,9 +362,9 @@ def _palma_sql(dialect: str) -> str:
     """
 
 
-@query("palma_ratio", oracle=_palma_sql("duck"))
-def q_palma_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Palma ratio of customer revenue: top-10% share over bottom-40%
+sql_query(
+    "palma_ratio", _palma_sql, "customer", "orders",
+    doc="""Palma ratio of customer revenue: top-10% share over bottom-40%
     share — the inequality read policy work prefers to the Gini
     (Palma's observation: the middle 50% share is stable; inequality
     action is in the tails).  Binned-EXACT tail split: the boundary
@@ -397,9 +379,8 @@ def q_palma_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     $1000-bucket frame (price-range-bounded, BOUNDED_FRAME_AUDITED),
     two 1-row boundary reads.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_palma_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -432,9 +413,9 @@ def _lac_sql(dialect: str) -> str:
     """
 
 
-@query("lorenz_asymmetry", oracle=_lac_sql("duck"))
-def q_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lorenz asymmetry coefficient LAC = F(μ) + L(μ): the population
+sql_query(
+    "lorenz_asymmetry", _lac_sql, "customer", "orders",
+    doc="""Lorenz asymmetry coefficient LAC = F(μ) + L(μ): the population
     share below the mean plus the revenue share below the mean.
     LAC > 1 ⇒ inequality is driven by a few LARGE values; LAC < 1 ⇒ by
     many small ones — the directional information a symmetric Gini
@@ -448,9 +429,8 @@ def q_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: custkey-hash shuffle, one conditional aggregate over the
     bounded bucket histogram.  No window.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_lac_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -486,11 +466,9 @@ def _hill_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "hill_diversity_numbers", oracle=_hill_sql("duck")
-)
-def q_hill_diversity_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill numbers of the document source distribution — the unified
+sql_query(
+    "hill_diversity_numbers", _hill_sql, "documents",
+    doc="""Hill numbers of the document source distribution — the unified
     diversity family ᵠD = (Σpᵢᵠ)^(1/(1−q)): q=0 the source richness,
     q=1 exp(Shannon entropy) (the effective source count weighting by
     frequency), q=2 the inverse Simpson index (weighting dominant
@@ -506,9 +484,8 @@ def q_hill_diversity_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
     out.
 
     Reference parity: beyond-reference statistics tier (documents
-    table — LLM-pipeline corpus surface)."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_hill_sql("spark"))
+    table — LLM-pipeline corpus surface).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -559,11 +536,9 @@ def _kmv_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kmv_distinct_audit", oracle=_kmv_sql("duck")
-)
-def q_kmv_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV (k-minimum-values) cardinality sketch audit: estimate the
+sql_query(
+    "kmv_distinct_audit", _kmv_sql, "lineitem",
+    doc="""KMV (k-minimum-values) cardinality sketch audit: estimate the
     distinct part-key count of lineitem as (k−1)·H/h₍ₖ₎ — h₍ₖ₎ the
     k-th smallest 60-bit portable hash (k=_KMV_K=128, H=2⁶⁰), with
     the underfilled-sketch guard: when fewer than k distinct hashes
@@ -588,6 +563,5 @@ def q_kmv_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely (partial k-mins merge); here both run so the audit can
     price the estimate.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_kmv_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -40,23 +40,13 @@ analytics; SURVEY §2 X-series is covered by catalog.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r10e import _tok_cte
-from .sources.parquet import read_table
 
 #: Gries DP document-frequency floor: terms with fewer total
 #: occurrences than this are skipped (every rare term is trivially
 #: "concentrated"; the dispersion read is about REAL vocabulary).
 _DP_MIN_FREQ = 30
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _spectrum_cte(dialect: str) -> str:
@@ -100,11 +90,9 @@ def _yule_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "yule_k_vocabulary", oracle=_yule_sql("duck")
-)
-def q_yule_k_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Yule's characteristic K of the corpus vocabulary:
+sql_query(
+    "yule_k_vocabulary", _yule_sql, "documents",
+    doc="""Yule's characteristic K of the corpus vocabulary:
     K = 10⁴·(Σc² − N)/N² (e6-scaled on top of Yule's own 10⁴), with
     Simpson's repeat rate Σc(c−1)/(N(N−1)) — the unbiased probability
     that two random token draws are the same type.  Both are
@@ -118,9 +106,8 @@ def q_yule_k_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized and map-side combinable; one 1-row reduction.  No
     window.  1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_yule_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -155,14 +142,9 @@ def _honore_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "honore_sichel_richness",
-    oracle=_honore_sql("duck"),
-)
-def q_honore_sichel_richness(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Honoré's R = 100·ln N/(1 − V₁/V) and Sichel's S = V₂/V from the
+sql_query(
+    "honore_sichel_richness", _honore_sql, "documents",
+    doc="""Honoré's R = 100·ln N/(1 − V₁/V) and Sichel's S = V₂/V from the
     first two frequency-spectrum slots (V₁ hapax legomena, V₂ dis
     legomena).  The richness pair complements ``heaps_law_fit``'s
     growth exponent: R diverges as the hapax share approaches 1 (an
@@ -176,9 +158,8 @@ def q_honore_sichel_richness(
     frequencies; everything after is ≤ a handful of rows.  No window.
     1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_honore_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -216,11 +197,9 @@ def _gt_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "good_turing_smoothing", oracle=_gt_sql("duck")
-)
-def q_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing frequency-spectrum smoothing: for r = 1..5 the
+sql_query(
+    "good_turing_smoothing", _gt_sql, "documents",
+    doc="""Good-Turing frequency-spectrum smoothing: for r = 1..5 the
     adjusted count r* = (r+1)·n_{r+1}/n_r, plus the r = 0 row holding
     the total token count and the MISSING MASS p₀ = n₁/N — the
     probability the next token is an unseen type, the quantity every
@@ -234,9 +213,8 @@ def q_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: spectrum aggregate (vocab-sized, map-side combinable), a
     5-row grid join.  No window.  6 rows out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_gt_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -287,12 +265,9 @@ def _keyness_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "log_likelihood_keyness",
-    oracle=_keyness_sql("duck"),
-)
-def q_log_likelihood_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dunning's log-likelihood keyness of the English sub-corpus vs
+sql_query(
+    "log_likelihood_keyness", _keyness_sql, "documents",
+    doc="""Dunning's log-likelihood keyness of the English sub-corpus vs
     the rest: per term, G² = 2·[a·ln(a/ê_a) + b·ln(b/ê_b)] with
     expected counts proportional to sub-corpus sizes — the
     corpus-linguistics standard for "which terms characterize this
@@ -307,9 +282,8 @@ def q_log_likelihood_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered with deterministic (g2, w) tiebreak — k-bounded, no
     global window.  20 rows out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_keyness_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -360,11 +334,9 @@ def _dp_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "gries_dp_dispersion", oracle=_dp_sql("duck")
-)
-def q_gries_dp_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gries' Deviation of Proportions per term across the source
+sql_query(
+    "gries_dp_dispersion", _dp_sql, "documents",
+    doc="""Gries' Deviation of Proportions per term across the source
     shards: DP = ½·Σ_s |c_ts/c_t − N_s/N| ∈ [0, ~1) — 0 when a term's
     occurrences follow the shard sizes exactly, →1 when all its mass
     sits in one shard.  THE corpus-linguistics dispersion measure, and
@@ -385,9 +357,8 @@ def q_gries_dp_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-20 via TakeOrdered (k-bounded, no global window).  20 rows
     out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_dp_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -443,11 +414,9 @@ def _rep_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "repetition_ngram_ratio", oracle=_rep_sql("duck")
-)
-def q_repetition_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document bigram repetition gate, corpus roll-up: for each
+sql_query(
+    "repetition_ngram_ratio", _rep_sql, "documents",
+    doc="""Per-document bigram repetition gate, corpus roll-up: for each
     document the TOP bigram's share of all bigram occurrences (the
     Gopher repetition family's "fraction of characters in the most
     common n-gram", at bigram granularity), reported as the
@@ -463,6 +432,5 @@ def q_repetition_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate shuffles on doc_id (hash-balanced, combinable); per-doc
     reduction then one global row.  No window.  1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_rep_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)

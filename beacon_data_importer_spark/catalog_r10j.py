@@ -33,11 +33,8 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r10e import _tok_cte
-from .sources.parquet import read_table
 
 #: Collocation frequency floor (bigrams rarer than this are skipped —
 #: PMI on hapax pairs is pure noise).
@@ -50,13 +47,6 @@ _PMI_MIN_FREQ = 10
 _KMV_SHARD_K = 64
 #: 2^60 — the hash-space size of portable_hash64 (15 hex digits).
 _HASH_SPACE = 1 << 60
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _bigram_pair_cte(dialect: str) -> str:
@@ -129,11 +119,9 @@ def _pmi_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pmi_collocations", oracle=_pmi_sql("duck")
-)
-def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining over within-document word bigrams: PMI =
+sql_query(
+    "pmi_collocations", _pmi_sql, "documents",
+    doc="""Collocation mining over within-document word bigrams: PMI =
     ln(p(xy)/(p(x)p(y))) and logDice = 14 + log₂(2·c_xy/(c_x+c_y)) per
     pair, frequency-floored at {_PMI_MIN_FREQ}, top-20 by logDice
     (the Sketch Engine standard — bounded in (−∞, 14], stable under
@@ -149,9 +137,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     with deterministic (score, w1, w2) tiebreak — no global window.
     20 rows out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_pmi_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -219,11 +206,9 @@ def _entropy_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "char_entropy_rate", oracle=_entropy_sql("duck")
-)
-def q_char_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level entropy rate of the corpus: unigram entropy H₁,
+sql_query(
+    "char_entropy_rate", _entropy_sql, "documents",
+    doc="""Character-level entropy rate of the corpus: unigram entropy H₁,
     bigram entropy H₂ (both in nats, e6-scaled), the first-order
     conditional entropy H₂ − H₁ — Shannon's entropy-rate
     approximation, i.e. how predictable the next character is — and
@@ -242,9 +227,8 @@ def q_char_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — no join); both aggregates collapse to alphabet-bounded
     frames map-side.  No window.  1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_entropy_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -308,14 +292,9 @@ def _aniso_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "embedding_anisotropy_audit",
-    oracle=_aniso_sql("duck"),
-)
-def q_embedding_anisotropy_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Embedding-geometry health: the average/min/max cosine between
+sql_query(
+    "embedding_anisotropy_audit", _aniso_sql, "embeddings",
+    doc="""Embedding-geometry health: the average/min/max cosine between
     each vector and the corpus centroid (Ethayarajh's anisotropy
     probe), the centroid's norm (per vector — the SUM vector's norm
     divided by n, so the e6 fixed-point mean needs no per-dimension
@@ -335,9 +314,8 @@ def q_embedding_anisotropy_audit(
     combinable; the dim-row mean table broadcasts.  No window.  1 row
     out.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_aniso_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -414,11 +392,9 @@ def _kmv_merge_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kmv_merge_audit", oracle=_kmv_merge_sql("duck")
-)
-def q_kmv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV sketch MERGEABILITY audit over calendar shards: each order
+sql_query(
+    "kmv_merge_audit", _kmv_merge_sql, "orders",
+    doc="""KMV sketch MERGEABILITY audit over calendar shards: each order
     MONTH keeps its own k-minimum-hash sketch of the customer keys it
     saw (the per-partition state at 100 TB — a daily/monthly ingest
     writes one tiny sketch per partition), the sketches union-merge by
@@ -442,6 +418,5 @@ def q_kmv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches persist with the partition and merging is metadata-sized
     work — the audit prices exactly that path.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_kmv_merge_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

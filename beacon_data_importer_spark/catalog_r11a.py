@@ -49,12 +49,9 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · z₀.₉₇₅) — shared two-sided 5% normal gate.
 _Z975_E6 = 1_959_963
@@ -66,13 +63,6 @@ _CVM_CRIT_E6 = 461_361
 _BWS_CRIT_E6 = 2_493_000
 #: floor(1e6 · χ²(df=2, α=0.05)) — D'Agostino K² gate.
 _CHI2_DF2_E6 = 5_991_464
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -107,9 +97,9 @@ def _cvm_sql(dialect: str) -> str:
     """
 
 
-@query("cramer_von_mises_2sample", oracle=_cvm_sql("duck"))
-def q_cramer_von_mises_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Cramér-von Mises criterion between BUILDING and
+sql_query(
+    "cramer_von_mises_2sample", _cvm_sql, "orders", "customer",
+    doc="""Two-sample Cramér-von Mises criterion between BUILDING and
     MACHINERY order values: T = (nm/N²)·Σ_z (F_n(z) − G_m(z))², the
     sum running over all N sample points (each $10 bucket contributes
     its occupancy times the squared inclusive-CDF gap — the standard
@@ -126,9 +116,8 @@ def q_cramer_von_mises_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     $10-bucket frame (price-range-bounded, BOUNDED_FRAME_AUDITED).
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_cvm_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -201,9 +190,9 @@ def _bws_sql(dialect: str) -> str:
     """
 
 
-@query("bws_test", oracle=_bws_sql("duck"))
-def q_bws_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baumgartner-Weiß-Schindler two-sample test (BUILDING vs
+sql_query(
+    "bws_test", _bws_sql, "orders", "customer",
+    doc="""Baumgartner-Weiß-Schindler two-sample test (BUILDING vs
     MACHINERY): B = (B_X + B_Y)/2 with
 
       B_X = (1/n)·Σᵢ (Rᵢ − (N+1)·i/(n+1))²
@@ -225,9 +214,8 @@ def q_bws_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (the bucket frame already carries the cumulative ranks).
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_bws_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -299,9 +287,9 @@ def _st_sql(dialect: str) -> str:
     """
 
 
-@query("siegel_tukey_test", oracle=_st_sql("duck"))
-def q_siegel_tukey_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Siegel-Tukey scale test (BUILDING vs MACHINERY): combined-order
+sql_query(
+    "siegel_tukey_test", _st_sql, "orders", "customer",
+    doc="""Siegel-Tukey scale test (BUILDING vs MACHINERY): combined-order
     positions are relabeled alternately from the extremes inward —
     1 to the minimum; 2, 3 to the two maxima; 4, 5 to the next two
     minima; … — and a Wilcoxon rank-sum runs on the LABELS, so a
@@ -318,9 +306,8 @@ def q_siegel_tukey_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the bucket's index range — no expansion at all), then one 1-row
     reduction over the price-range-bounded bucket frame.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_st_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -433,9 +420,9 @@ def _k2_sql(dialect: str) -> str:
     """
 
 
-@query("dagostino_k2_test", oracle=_k2_sql("duck"))
-def q_dagostino_k2_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D'Agostino-Pearson K² omnibus normality test on daily revenue:
+sql_query(
+    "dagostino_k2_test", _k2_sql, "orders",
+    doc="""D'Agostino-Pearson K² omnibus normality test on daily revenue:
     the sample skewness √b₁ through the Johnson-SU transform
     (D'Agostino 1970) and the kurtosis b₂ through the Anscombe-Glynn
     cube-root transform (1983) give z's that are N(0,1) at the ACTUAL
@@ -449,9 +436,8 @@ def q_dagostino_k2_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-day frame; everything else is a 1-row scalar pipeline.
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_k2_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -499,9 +485,9 @@ def _prr_sql(dialect: str) -> str:
     """
 
 
-@query("poisson_rate_ratio_ci", oracle=_prr_sql("duck"))
-def q_poisson_rate_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson rate ratio of urgent orders, BUILDING vs MACHINERY,
+sql_query(
+    "poisson_rate_ratio_ci", _prr_sql, "orders", "customer",
+    doc="""Poisson rate ratio of urgent orders, BUILDING vs MACHINERY,
     with the 95% log-scale CI: RR = (a₁/n₁)/(a₂/n₂) and
     RR·exp(±z·√(1/a₁ + 1/a₂)) — the event-count-information interval
     (the variance of ln RR depends only on the EVENT counts), the
@@ -515,9 +501,8 @@ def q_poisson_rate_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one 2-row aggregation behind a broadcast dim join.  1 row
     out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_prr_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -567,9 +552,9 @@ def _lmom_sql(dialect: str) -> str:
     """
 
 
-@query("l_moments_ratios", oracle=_lmom_sql("duck"))
-def q_l_moments_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hosking's sample L-moments of daily revenue: with the
+sql_query(
+    "l_moments_ratios", _lmom_sql, "orders",
+    doc="""Hosking's sample L-moments of daily revenue: with the
     probability-weighted moments bᵣ = n⁻¹·Σ y₍ᵢ₎·C(i−1, r)/C(n−1, r),
 
       λ₁ = b₀, λ₂ = 2b₁ − b₀, λ₃ = 6b₂ − 6b₁ + b₀,
@@ -591,6 +576,5 @@ def q_l_moments_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one bounded global-order rank window on the calendar-day
     frame (BOUNDED_FRAME_AUDITED), one moment aggregate.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_lmom_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -51,21 +51,11 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r10c import _priority_pairs_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · z₀.₉₇₅) — the Bland-Altman LoA multiplier, ppm.
 _Z975_E6 = 1_959_963
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _year_rev_pairs_sql(dialect: str) -> str:
@@ -136,11 +126,9 @@ def _kripp_sql(dialect: str) -> str:
     """
 
 
-@query("krippendorff_alpha_nominal", oracle=_kripp_sql("duck"))
-def q_krippendorff_alpha_nominal(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Krippendorff's alpha (nominal metric, 2 raters) for the
+sql_query(
+    "krippendorff_alpha_nominal", _kripp_sql, "orders",
+    doc="""Krippendorff's alpha (nominal metric, 2 raters) for the
     1997-vs-1998 first-order priority of each customer: α = 1 −
     D_o/D_e, D_o the observed disagreement of the COINCIDENCE matrix
     (each customer contributes its pair in both orders; n = 2·units),
@@ -155,9 +143,8 @@ def q_krippendorff_alpha_nominal(
     Scale: the partitioned first-order window device
     (``_priority_pairs_sql``), then ≤25-cell frames.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_kripp_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -211,9 +198,9 @@ def _ac1_sql(dialect: str) -> str:
     """
 
 
-@query("gwet_ac1_agreement", oracle=_ac1_sql("duck"))
-def q_gwet_ac1_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gwet's AC1 agreement between the 1997 and 1998 first-order
+sql_query(
+    "gwet_ac1_agreement", _ac1_sql, "orders",
+    doc="""Gwet's AC1 agreement between the 1997 and 1998 first-order
     priorities: AC1 = (p_a − p_e)/(1 − p_e) with the GWET chance term
     p_e = 1/(K−1)·Σ_c π_c(1−π_c), π_c the pooled category share.
     Built for the kappa paradox: when one category dominates, κ's
@@ -229,9 +216,8 @@ def q_gwet_ac1_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the partitioned first-order window device, ≤25-cell
     frames after.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ac1_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -291,9 +277,9 @@ def _wkappa_sql(dialect: str) -> str:
     """
 
 
-@query("weighted_kappa_ordinal", oracle=_wkappa_sql("duck"))
-def q_weighted_kappa_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's weighted kappa on the ordinal 5-level priority
+sql_query(
+    "weighted_kappa_ordinal", _wkappa_sql, "orders",
+    doc="""Cohen's weighted kappa on the ordinal 5-level priority
     transition (1997 → 1998), linear and quadratic disagreement
     weights: κ_w = 1 − Σv_ij·o_ij / Σv_ij·e_ij with v = |i−j| (linear)
     or (i−j)² (quadratic) and e_ij = r_i·c_j/n.  The unweighted
@@ -309,9 +295,8 @@ def q_weighted_kappa_ordinal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partitioned first-order windows, then ≤25-cell and
     ≤5-row marginal frames.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_wkappa_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -358,9 +343,9 @@ def _ccc_sql(dialect: str) -> str:
     """
 
 
-@query("lins_ccc", oracle=_ccc_sql("duck"))
-def q_lins_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lin's concordance correlation coefficient between each
+sql_query(
+    "lins_ccc", _ccc_sql, "orders",
+    doc="""Lin's concordance correlation coefficient between each
     customer's 1997 and 1998 revenue ($10 units, both-years
     customers): ρ_c = 2s_xy/(s_x² + s_y² + (x̄−ȳ)²) = r·C_b.
     Pearson's r rewards tightness around ANY line; ρ_c only around
@@ -376,9 +361,8 @@ def q_lins_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join on ck (both sides pre-aggregated, co-partitioned), then
     a 1-row moment reduction.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ccc_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -423,9 +407,9 @@ def _ba_sql(dialect: str) -> str:
     """
 
 
-@query("bland_altman_agreement", oracle=_ba_sql("duck"))
-def q_bland_altman_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bland-Altman limits of agreement between 1997 and 1998
+sql_query(
+    "bland_altman_agreement", _ba_sql, "orders",
+    doc="""Bland-Altman limits of agreement between 1997 and 1998
     per-customer revenue: bias = mean(x−y), SD of the differences,
     LoA = bias ± 1.96·SD, and the count of customers outside the
     limits (≈5% under normal differences — a materially larger count
@@ -440,9 +424,8 @@ def q_bland_altman_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the paired-years frame, one moment row, one counting pass
     against broadcast scalar limits.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ba_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -485,9 +468,9 @@ def _deming_sql(dialect: str) -> str:
     """
 
 
-@query("deming_regression", oracle=_deming_sql("duck"))
-def q_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deming regression (errors-in-both-variables, error-variance
+sql_query(
+    "deming_regression", _deming_sql, "orders",
+    doc="""Deming regression (errors-in-both-variables, error-variance
     ratio λ = 1) of 1998 on 1997 per-customer revenue: β =
     (s_yy − s_xx + √((s_yy−s_xx)² + 4s_xy²))/(2s_xy), the
     total-least-squares slope, with the OLS slope alongside.  When x
@@ -501,6 +484,5 @@ def q_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: paired-years frame, one moment aggregation.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_deming_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -50,8 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import query, sql_query
 
 #: floor(1e6 · z₀.₉₇₅).
 _Z975_E6 = 1_959_963
@@ -148,9 +147,9 @@ def _moran_sql(dialect: str) -> str:
     """
 
 
-@query("moran_i_region", oracle=_moran_sql("duck"))
-def q_moran_i_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moran's I of per-nation revenue on the same-region contiguity
+sql_query(
+    "moran_i_region", _moran_sql, "nation", "customer", "orders",
+    doc="""Moran's I of per-nation revenue on the same-region contiguity
     matrix: I = (n/W)·Σ_{{i≠j}} w_ij·z_i·z_j / Σz_i², binary w within
     regions, with E[I] = −1/(n−1) and the normality-null z.  For a
     block-diagonal weight matrix the cross mass collapses per region
@@ -164,9 +163,8 @@ def q_moran_i_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one custkey/nation rollup behind broadcast dims, then
     25-row frames.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "nation", "customer", "orders")
-    return spark.sql(_moran_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -215,9 +213,9 @@ def _geary_sql(dialect: str) -> str:
     """
 
 
-@query("geary_c_region", oracle=_geary_sql("duck"))
-def q_geary_c_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geary's C of per-nation revenue on the same-region contiguity
+sql_query(
+    "geary_c_region", _geary_sql, "nation", "customer", "orders",
+    doc="""Geary's C of per-nation revenue on the same-region contiguity
     matrix: C = (n−1)·Σw_ij(xᵢ−xⱼ)² / (2W·Σ(xᵢ−x̄)²) — the
     squared-difference autocorrelation, reciprocally related to but
     not determined by Moran's I (I is a global covariance; C reacts
@@ -231,9 +229,8 @@ def q_geary_c_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical frame to ``moran_i_region`` — broadcast-dim
     rollup, 5-region reduction.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "nation", "customer", "orders")
-    return spark.sql(_geary_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -289,9 +286,9 @@ def _jc_sql(dialect: str) -> str:
     """
 
 
-@query("join_count_bw_region", oracle=_jc_sql("duck"))
-def q_join_count_bw_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-count statistics for the binary high/low-revenue label on
+sql_query(
+    "join_count_bw_region", _jc_sql, "nation", "customer", "orders",
+    doc="""Join-count statistics for the binary high/low-revenue label on
     the same-region nation adjacency: observed BB (both-high), BW
     (mixed) and WW joins against their NONFREE-sampling
     (hypergeometric) expectations E[BB] = J·n_b(n_b−1)/(n(n−1)),
@@ -305,9 +302,8 @@ def q_join_count_bw_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the 25-row nation frame; join counts collapse per region
     (block-diagonal device — no pair join).  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "nation", "customer", "orders")
-    return spark.sql(_jc_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -368,9 +364,9 @@ def _mte_sql(dialect: str) -> str:
     """
 
 
-@query("markov_transition_entropy", oracle=_mte_sql("duck"))
-def q_markov_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entropy rate of the per-user event-type Markov chain:
+sql_query(
+    "markov_transition_entropy", _mte_sql, "events",
+    doc="""Entropy rate of the per-user event-type Markov chain:
     H = −Σ_s,t (c_st/N)·ln(c_st/c_s) over the empirical transition
     counts, against the zeroth-order marginal entropy H₀ of the
     next-event distribution.  H₀ − H is the sequential
@@ -387,9 +383,8 @@ def q_markov_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition counts collapse to the alphabet² frame map-side.
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_mte_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -565,9 +560,9 @@ def _edwards_sql(dialect: str) -> str:
     """
 
 
-@query("edwards_seasonality_test", oracle=_edwards_sql("duck"))
-def q_edwards_seasonality_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edwards' test for cyclic (seasonal) trend on monthly order
+sql_query(
+    "edwards_seasonality_test", _edwards_sql, "orders",
+    doc="""Edwards' test for cyclic (seasonal) trend on monthly order
     counts: with the variance-stabilizing d_m = √c_m and month angles
     θ_m = 2π(m−½)/12, the first-harmonic amplitudes a = Σd·cos θ,
     b = Σd·sin θ give X² = (a² + b²)/(3/2) ~ χ²(2) under no
@@ -581,6 +576,5 @@ def q_edwards_seasonality_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a 12-row aggregate; all trig on 12 scalars.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_edwards_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -47,12 +47,9 @@ reference ships no analytics; SURVEY §2 X-series is in catalog.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r9a import _two_group_hist_sql
 from .catalog_r8d import _day_sql
-from .sources.parquet import read_table
 
 #: RBO persistence and evaluation depth.
 _RBO_P = 0.9
@@ -76,13 +73,6 @@ _ACE_CUT = 10
 
 #: number of ANN audit query vectors.
 _MAP_Q = 8
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -185,9 +175,9 @@ def _rbo_sql(dialect: str) -> str:
     """
 
 
-@query("rbo_ranking_overlap", oracle=_rbo_sql("duck"))
-def q_rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-Biased Overlap (p = {p}, depth {d}) between the
+sql_query(
+    "rbo_ranking_overlap", _rbo_sql, "embeddings",
+    doc="""Rank-Biased Overlap (p = {p}, depth {d}) between the
     exact-cosine and raw-dot rankings against query vector 0:
     RBO_base = (1−p)·Σ_{{d=1..D}} p^(d−1)·|A_d ∩ B_d|/d.  The item-
     centric identity — an item with ranks (r_A, r_B) joins every
@@ -205,13 +195,9 @@ def q_rbo_ranking_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver merge — the full corpus ranking never materializes), a
     {d}-row equi-join against the literal tail table.  1 row out.
 
-    Reference parity: beyond-reference ANN-audit tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_rbo_sql("spark"))
-
-
-q_rbo_ranking_overlap.__doc__ = (q_rbo_ranking_overlap.__doc__ or "").format(
-    p=_RBO_P, d=_RBO_DEPTH
+    Reference parity: beyond-reference ANN-audit tier.""".format(
+        p=_RBO_P, d=_RBO_DEPTH
+    ),
 )
 
 
@@ -298,9 +284,9 @@ def _map_sql(dialect: str) -> str:
     """
 
 
-@query("map_mrr_ann_audit", oracle=_map_sql("duck"))
-def q_map_mrr_ann_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MRR and MAP@10 of the raw dot-product ranking against
+sql_query(
+    "map_mrr_ann_audit", _map_sql, "embeddings",
+    doc="""MRR and MAP@10 of the raw dot-product ranking against
     exact-cosine top-10 relevance, averaged over {q} query vectors:
     MRR = mean(1/rank of the first relevant hit), AP@10 =
     (1/10)·Σ_hits precision@(hit rank) — the IR-standard graded pair
@@ -316,13 +302,7 @@ def q_map_mrr_ann_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring pass; per-query rank windows are PARTITIONED (distribute
     across executors).  1 row out.
 
-    Reference parity: beyond-reference ANN-audit tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_map_sql("spark"))
-
-
-q_map_mrr_ann_audit.__doc__ = (q_map_mrr_ann_audit.__doc__ or "").format(
-    q=_MAP_Q
+    Reference parity: beyond-reference ANN-audit tier.""".format(q=_MAP_Q),
 )
 
 
@@ -405,9 +385,9 @@ def _ace_sql(dialect: str) -> str:
     """
 
 
-@query("ace_richness_estimate", oracle=_ace_sql("duck"))
-def q_ace_richness_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ACE (Abundance-based Coverage Estimator) of total vocabulary
+sql_query(
+    "ace_richness_estimate", _ace_sql, "documents",
+    doc="""ACE (Abundance-based Coverage Estimator) of total vocabulary
     size: S_ACE = S_abund + S_rare/C + (F₁/C)·γ², with C = 1 −
     F₁/n_rare the Good-Turing sample coverage of the rare group
     (counts ≤ {cut}) and γ² the rare-group CV correction
@@ -428,13 +408,7 @@ def q_ace_richness_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: positional 4-gram explode (linear, no join) → spectrum
     reduction (context-vocab-sized, map-side combinable).  1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_ace_sql("spark"))
-
-
-q_ace_richness_estimate.__doc__ = (q_ace_richness_estimate.__doc__ or "").format(
-    cut=_ACE_CUT
+    Reference parity: beyond-reference text tier.""".format(cut=_ACE_CUT),
 )
 
 
@@ -491,9 +465,9 @@ def _chao_shared_sql(dialect: str) -> str:
     """
 
 
-@query("chao_shared_species", oracle=_chao_shared_sql("duck"))
-def q_chao_shared_species(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chao1-type lower bound for the SHARED vocabulary of the two
+sql_query(
+    "chao_shared_species", _chao_shared_sql, "documents",
+    doc="""Chao1-type lower bound for the SHARED vocabulary of the two
     largest sources: S₁₂ = D₁₂ + f₁₊·f₊₁/(2(f₁₁+1)) — D₁₂ the
     observed shared types, f₁₊ shared types seen exactly ONCE in
     source A, f₊₁ once in B, f₁₁ once in both (the +1 bias guard for
@@ -507,9 +481,8 @@ def q_chao_shared_species(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: token explode (linear), (w) conditional aggregate
     (vocab-sized, combinable), a 1-row reduction.  1 row out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_chao_shared_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -549,9 +522,9 @@ def _qte_sql(dialect: str) -> str:
     """
 
 
-@query("quantile_treatment_effects", oracle=_qte_sql("duck"))
-def q_quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decile-by-decile quantile differences between BUILDING and
+sql_query(
+    "quantile_treatment_effects", _qte_sql, "orders", "customer",
+    doc="""Decile-by-decile quantile differences between BUILDING and
     MACHINERY order values ($10 buckets): QTE(τ) = Q₁(τ) − Q₂(τ) for
     τ = 0.1 … 0.9, the distributional treatment-effect profile.  A
     mean comparison collapses the whole story to one number — two
@@ -564,9 +537,8 @@ def q_quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the $10-bucket cumulative device (price-range-bounded)
     joined against a 9-row decile grid.  9 rows out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_qte_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -604,9 +576,9 @@ def _cvar_sql(dialect: str) -> str:
     """
 
 
-@query("expected_shortfall_cvar", oracle=_cvar_sql("duck"))
-def q_expected_shortfall_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-at-Risk and Expected Shortfall of daily revenue (the LOW
+sql_query(
+    "expected_shortfall_cvar", _cvar_sql, "orders",
+    doc="""Value-at-Risk and Expected Shortfall of daily revenue (the LOW
     tail — worst trading days): with k = ⌈0.05·n⌉, VaR₅% is the k-th
     smallest daily revenue (exact order statistic, (y, t) tie-break)
     and CVaR₅% the mean of those k worst days.  CVaR is the COHERENT
@@ -623,6 +595,5 @@ def q_expected_shortfall_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (BOUNDED_FRAME_AUDITED), one conditional aggregate.  1 row
     out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_cvar_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

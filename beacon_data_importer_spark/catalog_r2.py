@@ -489,10 +489,11 @@ def q_fuzzy_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition scheme, PVLDB'11).  Blocking is EXACT, so this oracle is
     the plain exhaustive join — identical output to fuzzy_name_pairs by
     theorem, reached through a candidate stream that stays ~linear in
-    rows when segment values carry entropy (tools/scale_probe.py shows
-    the growth curves; on this digit-name testdata the cost-based auto
-    mode instead picks the coarse path, which is why the shared ER
-    stage and this forced variant are separate queries)."""
+    rows when segment values carry entropy (PERF.md "Exact segment
+    blocking" shows the growth curves; on this digit-name testdata
+    the cost-based auto mode instead picks the coarse path, which is
+    why the shared ER stage and this forced variant are separate
+    queries)."""
     from .operators.blocking import candidate_pairs
 
     # Nation-subset slice (nationkey < 5, ~1/5 of rows): the forced

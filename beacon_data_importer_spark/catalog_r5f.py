@@ -123,7 +123,7 @@ def q_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = edges.agg(F.min("a").alias("s"))
     dist = src.select(F.col("s").alias("v"), F.lit(0).alias("d"))
     # Each round is MATERIALIZED (localCheckpoint), not left to lazy
-    # lineage: tools/sssp_probe.py measured the unrolled plan
+    # lineage: PERF.md's weighted_sssp probe measured the unrolled plan
     # compounding catastrophically for this join-expansion shape
     # (1×/sf0.1: 2.3 s at 6 rounds but 329 s at 12, vs flat
     # ~0.2 s/round materialized) — the frontier EXPANDS for

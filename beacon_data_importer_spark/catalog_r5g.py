@@ -155,7 +155,7 @@ _CF_K = 5
 # Baskets wider than this are excluded entirely (pair AND popularity
 # stages, keeping the cosine denominator consistent with the numerator
 # corpus): one planted W=20k basket measured
-# 449 s vs the corpus's 5.6 s (tools/scale_probe.py cf — W²/2 pairs out
+# 449 s vs the corpus's 5.6 s (PERF.md item-item CF probe — W²/2 pairs out
 # of a single row group, skew no partitioning fixes).  64 is far above
 # this corpus's max width, so locally the cap is a no-op — it exists
 # for the 100 TB case where one bot cart would otherwise own the job.
@@ -223,7 +223,7 @@ def q_item_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: work is baskets × width², linear in rows for bounded
     width — measured flat-or-better rows/sec at 8× basket
     amplification, while ONE planted 20k-part mega-basket cost 80×
-    the whole corpus (tools/scale_probe.py cf) — hence the
+    the whole corpus (PERF.md item-item CF probe) — hence the
     ``_CF_MAX_WIDTH`` cap, a no-op on this corpus and the documented
     bot-cart guard at scale (same doctrine as the LSH ``max_bucket``).
 

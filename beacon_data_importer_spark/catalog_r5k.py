@@ -45,8 +45,8 @@ _SEQ_TOPK = 20
 # customers with more distinct parts than this are excluded from the
 # pair stage — a no-op on this corpus (max width 105 at sf0.1) and the
 # bot-cart guard at scale (the measured _CF_MAX_WIDTH doctrine:
-# tools/scale_probe.py cf showed one planted mega-entity costing 80×
-# the corpus)
+# PERF.md "Scale probe: item-item CF basket scaling" — one planted
+# mega-entity cost 80× the corpus)
 _SEQ_MAX_WIDTH = 128
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import query
-from .sources.parquet import load_tables
+from .sources.parquet import register_views
 
 # ---------------------------------------------------------------------------
 # pipe_syntax_pricing
@@ -56,7 +56,7 @@ def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: same as pricing_summary — one pushed-filter scan, hash agg
     with map-side partials, one exchange on the 2×2 key."""
-    load_tables(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         FROM lineitem
@@ -105,7 +105,7 @@ def q_sql_udf_taxed_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: one cents-rounding at the defined boundary (the
     module's cents discipline) — the UDF body multiplies in DOUBLE
     exactly like the classic queries do before rounding."""
-    load_tables(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, "lineitem")
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION taxed_revenue_cents(

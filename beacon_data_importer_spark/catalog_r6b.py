@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -229,13 +229,10 @@ def _ipf_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ipf_raking_weights",
+sql_query(
+    "ipf_raking_weights", _ipf_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_ipf_sql("duck"),
-)
-def q_ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative proportional fitting (raking): per-cell weights that
+    doc="""Iterative proportional fitting (raking): per-cell weights that
     pull the ORDER sample's (nation × segment) composition toward the
     CUSTOMER population's marginals on both axes — {r} full rounds,
     each one row-scale then column-scale, every adjustment factor
@@ -255,14 +252,7 @@ def q_ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     125 rows here, bounded by attribute cardinality, NEVER by data
     volume); the only volume-bearing work is the one sample aggregate.
     The partitioned window sums are per-axis (≤ max marginal
-    cardinality per partition), not global."""
-    for t in ("orders", "customer"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_ipf_sql("spark"))
-
-
-q_ipf_raking_weights.__doc__ = (q_ipf_raking_weights.__doc__ or "").format(
-    r=_IPF_ROUNDS
+    cardinality per partition), not global.""".format(r=_IPF_ROUNDS),
 )
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -149,13 +149,10 @@ def _fs_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "fellegi_sunter_em",
+sql_query(
+    "fellegi_sunter_em", _fs_sql, "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_fs_sql("duck"),
-)
-def q_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi-Sunter probabilistic record linkage fit by EM.
+    doc="""Fellegi-Sunter probabilistic record linkage fit by EM.
 
     Nation-blocked customer pairs are reduced to their 3-bit agreement
     pattern (segment / balance-sign / name-suffix) and COUNTED — from
@@ -182,14 +179,9 @@ def q_fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost-based composite keys), not the EM.
 
     Reference parity: beyond-reference — the reference links records
-    by exact key only (contact_id joins, ``sql/calls.sql``)."""
-    for t in ("customer",):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_fs_sql("spark"))
-
-
-q_fellegi_sunter_em.__doc__ = (q_fellegi_sunter_em.__doc__ or "").format(
-    it=_FS_ITERS
+    by exact key only (contact_id joins, ``sql/calls.sql``).""".format(
+        it=_FS_ITERS
+    ),
 )
 
 

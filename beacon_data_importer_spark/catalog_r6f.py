@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -138,13 +138,10 @@ def _acf_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "acf_daily_revenue",
+sql_query(
+    "acf_daily_revenue", _acf_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_acf_sql("duck"),
-)
-def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of daily revenue at lags {lags} — the first
+    doc="""Autocorrelation of daily revenue at lags {lags} — the first
     chart every forecaster draws (is there weekly structure? monthly?)
     and the diagnostic that justifies (or kills) the seasonal terms in
     ``hourly_seasonality`` / ``holt_linear_forecast``.
@@ -163,11 +160,7 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     kaplan_meier's windows; the only volume-bearing exchange is the
     daily aggregate (map-side combined).
 
-    Reference parity: beyond-reference time-series tier."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_acf_sql("spark"))
-
-
-q_acf_daily_revenue.__doc__ = (q_acf_daily_revenue.__doc__ or "").format(
-    lags=_ACF_LAGS
+    Reference parity: beyond-reference time-series tier.""".format(
+        lags=_ACF_LAGS
+    ),
 )

@@ -24,11 +24,7 @@ closes the two-table-join case.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: deterministic "new arrivals": 10% of orders, 5% of customers
 _IVM_SPLIT_SQL = {
@@ -109,13 +105,10 @@ def _ivm_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "join_view_delta_maintain",
+sql_query(
+    "join_view_delta_maintain", _ivm_sql, "customer", "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_ivm_sql("duck"),
-)
-def q_join_view_delta_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental maintenance of a join-aggregate view when BOTH base
+    doc="""Incremental maintenance of a join-aggregate view when BOTH base
     tables receive inserts — the ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB algebra, run
     head-to-head against a full recompute with a per-group match flag
     (1 everywhere, asserted in tests AND by the cross-engine hash: any
@@ -132,7 +125,5 @@ def q_join_view_delta_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     join case.
 
     Reference parity: the reference's staging INSERT…SELECT loop
-    (README.md:73-78) is the one-table special case."""
-    for t in ("customer", "orders"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_ivm_sql("spark"))
+    (README.md:73-78) is the one-table special case.""",
+)

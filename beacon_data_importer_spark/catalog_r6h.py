@@ -26,9 +26,8 @@ Reference parity: beyond-reference evaluation tiers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -78,13 +77,10 @@ def _pak_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pass_at_k_estimate",
+sql_query(
+    "pass_at_k_estimate", _pak_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_pak_sql("duck"),
-)
-def q_pass_at_k_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pass@{k} over repeated trials: each user is a task, their events
+    doc="""pass@{k} over repeated trials: each user is a task, their events
     the trials, a purchase a success — the estimator is the unbiased
     1 − C(n−c,{k})/C(n,{k}) computed as Π (n−c−i)/(n−i) with one
     truncating division per factor ({k} unrolled literal steps), so no
@@ -99,13 +95,7 @@ def q_pass_at_k_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     task after that — at 100 TB of eval logs the whole metric is one
     shuffle on task id.
 
-    Reference parity: beyond-reference evaluation tier."""
-    read_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_pak_sql("spark"))
-
-
-q_pass_at_k_estimate.__doc__ = (q_pass_at_k_estimate.__doc__ or "").format(
-    k=_PAK_K
+    Reference parity: beyond-reference evaluation tier.""".format(k=_PAK_K),
 )
 
 
@@ -366,13 +356,10 @@ def _cycle_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "preference_cycle_audit",
+sql_query(
+    "preference_cycle_audit", _cycle_sql, "lineitem", "supplier",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_cycle_sql("duck"),
-)
-def q_preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitivity audit of the majority-win preference digraph that
+    doc="""Transitivity audit of the majority-win preference digraph that
     ``bradley_terry_rating`` fits: a→b when a won the majority of
     within-order price duels against b; a triad a→b→c is CYCLIC when c
     also beats a, TRANSITIVE when a beats c.  cyclic_ppm is the
@@ -391,7 +378,5 @@ def q_preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     preference graph.  Triads dedup on the unordered triple (a cyclic
     triangle is reachable from every rotation).
 
-    Reference parity: beyond-reference evaluation tier."""
-    for t in ("lineitem", "supplier"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_cycle_sql("spark"))
+    Reference parity: beyond-reference evaluation tier.""",
+)

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -80,13 +80,10 @@ def _emd_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "emd_drift_audit",
+sql_query(
+    "emd_drift_audit", _emd_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_emd_sql("duck"),
-)
-def q_emd_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Earth Mover's Distance between the pre-/post-{cut} order-value
+    doc="""Earth Mover's Distance between the pre-/post-{cut} order-value
     histograms, in BIN-WIDTH units scaled e6: for histograms on a
     common grid, W₁ = Σ_bins |F̂₁(b) − F̂₂(b)| — each term the exact
     cross-multiplied |cum₁·n₂ − cum₂·n₁| over n₁·n₂, summed before the
@@ -100,13 +97,9 @@ def q_emd_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sanction); one scan + one ≤{nb}-row aggregate.
 
     Reference parity: beyond-reference drift tier (PSI and KS are its
-    siblings; all three now read the same cutoff)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_emd_sql("spark"))
-
-
-q_emd_drift_audit.__doc__ = (q_emd_drift_audit.__doc__ or "").format(
-    cut=_EMD_CUTOFF, nb=_EMD_MAX_BIN + 1
+    siblings; all three now read the same cutoff).""".format(
+        cut=_EMD_CUTOFF, nb=_EMD_MAX_BIN + 1
+    ),
 )
 
 
@@ -307,13 +300,10 @@ def _woe_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "woe_iv_encoding",
+sql_query(
+    "woe_iv_encoding", _woe_sql, "orders", "customer", "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_woe_sql("duck"),
-)
-def q_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-of-Evidence encoding of market segment against the
+    doc="""Weight-of-Evidence encoding of market segment against the
     returned-line label, with the Information Value rollup — the
     credit-scoring feature transform (WoEᵢ = ln(goodᵢ/G ÷ badᵢ/B);
     IV = Σ (goodᵢ/G − badᵢ/B)·WoEᵢ; rule of thumb: IV < 0.02
@@ -331,7 +321,5 @@ def q_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-row, leakage-guarded), feature hashing (unsupervised), WoE
     (per-category, interpretable).
 
-    Reference parity: beyond-reference feature tier."""
-    for t in ("orders", "customer", "lineitem"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_woe_sql("spark"))
+    Reference parity: beyond-reference feature tier.""",
+)

@@ -31,9 +31,8 @@ Reference parity: beyond-reference estimation tiers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -81,13 +80,10 @@ def _cr_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "capture_recapture_estimate",
+sql_query(
+    "capture_recapture_estimate", _cr_sql, "customer", "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_cr_sql("duck"),
-)
-def q_capture_recapture_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chapman capture-recapture: estimate the order-active customer
+    doc="""Chapman capture-recapture: estimate the order-active customer
     population from two independent ~40% hash samples and their
     overlap — N̂ = (n₁+1)(n₂+1)/(m+1) − 1, exact integers.  The true
     count rides along, so the output IS the calibration (the test
@@ -103,10 +99,8 @@ def q_capture_recapture_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples are md5-deterministic (catalog.py portable-hash device,
     CAST-before-modulo per the round-6 coercion audit).
 
-    Reference parity: beyond-reference estimation tier."""
-    for t in ("customer", "orders"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_cr_sql("spark"))
+    Reference parity: beyond-reference estimation tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -254,13 +248,10 @@ def _chow_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "chow_break_test",
+sql_query(
+    "chow_break_test", _chow_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_chow_sql("duck"),
-)
-def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chow structural-break test: did the monthly revenue TREND change
+    doc="""Chow structural-break test: did the monthly revenue TREND change
     at {cut}?  Pooled OLS vs two segment OLS fits; F = ((SSE_p −
     SSE₁ − SSE₂)/k) / ((SSE₁+SSE₂)/(n−2k)), k=2 (intercept + slope).
 
@@ -279,11 +270,7 @@ def q_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the intervention family: DiD (control group), RDD
     (cutoff locality), CUPED (variance reduction), Chow (trend break).
 
-    Reference parity: beyond-reference time-series tier."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_chow_sql("spark"))
-
-
-q_chow_break_test.__doc__ = (q_chow_break_test.__doc__ or "").format(
-    cut=_CHOW_CUTOFF_YM
+    Reference parity: beyond-reference time-series tier.""".format(
+        cut=_CHOW_CUTOFF_YM
+    ),
 )

@@ -17,11 +17,7 @@ Reference parity: beyond-reference experimentation tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 #: floor(1e6·(z_{0.975} + z_power)) — Python-computed once
 _PW_ZSUM_E6 = {80: 2_801_585, 90: 3_241_515}
@@ -62,13 +58,10 @@ def _pw_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ab_power_analysis",
+sql_query(
+    "ab_power_analysis", _pw_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_pw_sql("duck"),
-)
-def q_ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion power analysis from the measured baseline: the
+    doc="""Two-proportion power analysis from the measured baseline: the
     per-arm sample size needed to detect a +10% relative lift on the
     event stream's purchase share (the fraction of events that
     convert — every user purchasing eventually makes the USER-level
@@ -91,6 +84,5 @@ def q_ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     after — the design query you run on 100 TB of historical events
     before the experiment exists.
 
-    Reference parity: beyond-reference experimentation tier."""
-    read_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_pw_sql("spark"))
+    Reference parity: beyond-reference experimentation tier.""",
+)

@@ -51,7 +51,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -108,15 +108,10 @@ def _benford_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "benford_second_digit_audit",
+sql_query(
+    "benford_second_digit_audit", _benford_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_benford_sql("duck"),
-)
-def q_benford_second_digit_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Second-digit Benford forensic over order totals: per second
+    doc="""Second-digit Benford forensic over order totals: per second
     significant digit 0–9, the observed ppm share next to
     floor(1e6·Σₖ log10(1+1/(10k+d))) and the integer chi-square term
     ((obs−exp)²/exp in ppm) — large terms localize WHICH digit
@@ -130,9 +125,8 @@ def q_benford_second_digit_audit(
     engines while log10 at power-of-ten boundaries is not.
 
     One map-side-combinable aggregation over orders plus a 10-row
-    broadcast of the total; at 100 TB it is a single scan."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_benford_sql("spark"))
+    broadcast of the total; at 100 TB it is a single scan.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -257,13 +251,10 @@ def _simpson_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "simpson_paradox_audit",
+sql_query(
+    "simpson_paradox_audit", _simpson_sql, "lineitem", "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_simpson_sql("duck"),
-)
-def q_simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox census: the sign of the discount↔price
+    doc="""Simpson's-paradox census: the sign of the discount↔price
     covariance pooled over all lineitems vs within each customer
     nation.  A stratum whose sign opposes the pooled sign
     (sign_flipped) is an aggregation-reversal — the report-level
@@ -274,10 +265,8 @@ def q_simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two shuffle equi-joins (lineitem→orders→customer, the standard
     TPC-H spine; AQE handles skew) feeding one map-side-combinable
-    aggregation per stratum plus a 1-row pooled broadcast."""
-    for t in ("lineitem", "orders", "customer"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_simpson_sql("spark"))
+    aggregation per stratum plus a 1-row pooled broadcast.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -321,13 +310,10 @@ def _isotonic_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "isotonic_calibration",
+sql_query(
+    "isotonic_calibration", _isotonic_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_isotonic_sql("duck"),
-)
-def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic (PAV) calibration of return rate on discount bins via
+    doc="""Isotonic (PAV) calibration of return rate on discount bins via
     the minimax identity fit(i) = max_{j≤i} min_{k≥i} rate(j..k) —
     the closed form of pool-adjacent-violators, so no iteration and no
     merge-order ambiguity; the fitted curve is non-decreasing by
@@ -338,11 +324,8 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The full-data pass is one aggregation to B=11 bin rows; the O(B³)
     identity then runs on an 11-row table (bounded broadcast joins —
-    the 100 TB cost is the scan, not the fit)."""
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem"
-    )
-    return spark.sql(_isotonic_sql("spark"))
+    the 100 TB cost is the scan, not the fit).""",
+)
 
 
 # ---------------------------------------------------------------------------

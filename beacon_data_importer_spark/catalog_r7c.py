@@ -38,18 +38,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -94,13 +83,10 @@ def _mk_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "mk_trend_test",
+sql_query(
+    "mk_trend_test", _mk_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_mk_sql("duck"),
-)
-def q_mk_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test on the monthly revenue series: S =
+    doc="""Mann-Kendall trend test on the monthly revenue series: S =
     Σ_{i<j} sign(rev_j − rev_i), tie-corrected variance kept as the
     exact ×18 integer numerator, and the 95% verdict via the
     continuity-corrected z cross-multiplied — 18·(|S|−1)²·1e6 >
@@ -110,9 +96,8 @@ def q_mk_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     all.
 
     One map-side-combinable aggregation to ~76 month rows; the pair
-    join and tie census run on that bounded table."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_mk_sql("spark"))
+    join and tie census run on that bounded table.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -162,13 +147,10 @@ def _runs_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "runs_test",
+sql_query(
+    "runs_test", _runs_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_runs_sql("duck"),
-)
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test: daily revenue classified above/below
+    doc="""Wald-Wolfowitz runs test: daily revenue classified above/below
     the series median (the median is DEFINED as the ((n+1) div 2)-th
     value under the total (rev, day) order — an explicit rank, not an
     engine's interpolating percentile; median-equal days are excluded
@@ -179,9 +161,8 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The day aggregation is the only full-data pass; ranking and the
     lag walk run over the timespan-bounded day series (the
-    acf_daily_revenue shape)."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_runs_sql("spark"))
+    acf_daily_revenue shape).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -223,13 +204,10 @@ def _kendall_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kendall_tau_cells",
+sql_query(
+    "kendall_tau_cells", _kendall_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_kendall_sql("duck"),
-)
-def q_kendall_tau_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-a between discount and quantity via the value-cell
+    doc="""Kendall tau-a between discount and quantity via the value-cell
     contingency collapse: rows aggregate to ≤ 11×50 (discount,
     quantity) cells first, and concordant/discordant mass comes from
     cell-pair products c_a·c_b — C(cells,2) work where the textbook
@@ -243,9 +221,8 @@ def q_kendall_tau_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Complements ``spearman_rho`` (r06-proven): Spearman ranks the
     values, Kendall counts inversions — they disagree exactly when
-    the association is non-monotone in the tails."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_kendall_sql("spark"))
+    the association is non-monotone in the tails.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -282,13 +259,10 @@ def _mcnemar_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "mcnemar_test",
+sql_query(
+    "mcnemar_test", _mcnemar_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_mcnemar_sql("duck"),
-)
-def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar's paired-proportion test: did customer purchase
+    doc="""McNemar's paired-proportion test: did customer purchase
     activity CHANGE between 1997 and 1998?  The same units are
     observed in both periods, so only the discordant cells (active-
     then-inactive vs inactive-then-active) are informative — a
@@ -297,9 +271,8 @@ def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|b−c|−1)²/(b+c) in ppm; 95% cut at the χ²₁ literal 3.841459.
 
     One groupBy over orders to customer-level flags, then a 1-row
-    aggregate — two map-side-combinable shuffles total."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_mcnemar_sql("spark"))
+    aggregate — two map-side-combinable shuffles total.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -347,13 +320,10 @@ def _cramers_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cramers_v",
+sql_query(
+    "cramers_v", _cramers_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_cramers_sql("duck"),
-)
-def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square association + Cramér's V² for the returnflag ×
+    doc="""Chi-square association + Cramér's V² for the returnflag ×
     linestatus contingency.  Each cell's term uses the cleared form
     (O·n − r·c)²/(n·r·c) — the expected count never materializes as a
     rounded intermediate, so the only flooring is the documented
@@ -363,9 +333,8 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced so the normalization is auditable).
 
     One aggregation to the ≤ 3×2 cell table; marginals and terms are
-    broadcast-sized."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_cramers_sql("spark"))
+    broadcast-sized.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -409,13 +378,10 @@ def _grubbs_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "grubbs_outlier",
+sql_query(
+    "grubbs_outlier", _grubbs_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_grubbs_sql("duck"),
-)
-def q_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grubbs-style max-deviation outlier scan of daily revenue: the
+    doc="""Grubbs-style max-deviation outlier scan of daily revenue: the
     day with the largest |x − x̄| surfaces with its squared
     studentized deviation G² = A²(n−1)/(n(nΣx²−S²)) in ppm (A = x·n−S
     clears the mean's division) and a 4σ flag by pure integer
@@ -426,6 +392,5 @@ def q_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout — A² alone reaches ~10²⁵ on this series.
 
     One aggregation to the day series, a 1-row moment broadcast, one
-    bounded ranking."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_grubbs_sql("spark"))
+    bounded ranking.""",
+)

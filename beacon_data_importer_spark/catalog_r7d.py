@@ -36,16 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r2 import _duck_hash64
 from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _spark_hash64(expr: str, seed: int = 0) -> str:
@@ -129,15 +122,10 @@ def _cuped_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cuped_variance_reduction",
+sql_query(
+    "cuped_variance_reduction", _cuped_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_cuped_sql("duck"),
-)
-def q_cuped_variance_reduction(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CUPED adjustment of the 1998 customer-revenue metric by its
+    doc="""CUPED adjustment of the 1998 customer-revenue metric by its
     1997 pre-period value under a deterministic hash 50/50 assignment:
     θ_ppm = (nΣxy−ΣxΣy)·1e6/(nΣxx−Σx²) pooled (pre-period data is
     treatment-independent by construction, so pooling is unbiased),
@@ -156,9 +144,8 @@ def q_cuped_variance_reduction(
     silently, a measured sibling of the round-6 STRING%INT class.
     Each staged quotient here stays far under 2^63.  One
     customer-level aggregation (map-side combinable), then 1-row
-    moment algebra."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_cuped_sql("spark"))
+    moment algebra.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -196,13 +183,10 @@ def _srm_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "srm_check",
+sql_query(
+    "srm_check", _srm_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_srm_sql("duck"),
-)
-def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch guard for a deterministic 50/50 hash
+    doc="""Sample-ratio-mismatch guard for a deterministic 50/50 hash
     assignment of orders: χ² against the designed split collapses to
     A²/n with A = 2·n_a − n (both cells' deviations are ±A/2), flagged
     at the industry-standard α=0.001 (χ²₁ literal 10.827566 ppm) —
@@ -213,9 +197,8 @@ def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical split.
 
     One map-side-combinable count pass; A² rides DECIMAL(38,0)/
-    HUGEINT so the guard itself survives data-lake row counts."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_srm_sql("spark"))
+    HUGEINT so the guard itself survives data-lake row counts.""",
+)
 
 
 # ---------------------------------------------------------------------------

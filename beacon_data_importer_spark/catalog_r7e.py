@@ -23,18 +23,7 @@ Reference parity: beyond-reference statistics/ML tiers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -92,13 +81,10 @@ def _welch_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "welch_t_test",
+sql_query(
+    "welch_t_test", _welch_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_welch_sql("duck"),
-)
-def q_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's two-sample t on mean order value, BUILDING vs MACHINERY
+    doc="""Welch's two-sample t on mean order value, BUILDING vs MACHINERY
     segments: t² = (m̄₁−m̄₂)² / (s₁²/n₁ + s₂²/n₂), assembled entirely
     from staged integer quotients — per-group means and s²/n terms
     floor once each at e6 scale, then one final ratio — so the
@@ -108,9 +94,8 @@ def q_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values coarsen to $10 units so n·Q − S² stays inside
     DECIMAL(38,0) (chow_break doctrine).
 
-    One join + one 2-row aggregation, all map-side combinable."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_welch_sql("spark"))
+    One join + one 2-row aggregation, all map-side combinable.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -156,13 +141,10 @@ def _kappa_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cohens_kappa",
+sql_query(
+    "cohens_kappa", _kappa_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_kappa_sql("duck"),
-)
-def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two deterministic order classifiers —
+    doc="""Cohen's kappa between two deterministic order classifiers —
     price-threshold "expensive" vs priority-derived "urgent": κ =
     (p_o − p_e)/(1 − p_e), the agreement left after discounting what
     the raters' marginal frequencies alone would produce (raw
@@ -171,6 +153,5 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     as e_ij = row·col div n (floored once, same placement both
     engines); κ itself is one final staged ratio in ppm.
 
-    A single map-side-combinable aggregation over orders."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_kappa_sql("spark"))
+    A single map-side-combinable aggregation over orders.""",
+)

@@ -38,10 +38,8 @@ import math
 from statistics import NormalDist
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
 
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import query, sql_query
 
 
 # ONE shared _views (r12 round): documents/embeddings route through the
@@ -98,13 +96,10 @@ def _stl_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "stl_decomposition_lite",
+sql_query(
+    "stl_decomposition_lite", _stl_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_stl_sql("duck"),
-)
-def q_stl_decomposition_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Additive seasonal decomposition of monthly revenue: trend is the
+    doc="""Additive seasonal decomposition of monthly revenue: trend is the
     classic centered moving average over 12 months — endpoints half-
     weighted, computed exactly as (x₋₆ + 2·Σ₋₅..₊₅ + x₊₆) div 24 —
     NULL where the window is incomplete; the seasonal component is the
@@ -116,9 +111,8 @@ def q_stl_decomposition_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One aggregation to the bounded month series; all windows run over
     those ~80 rows.  div truncates toward zero identically in both
-    engines for the negative detrended values (documented device)."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_stl_sql("spark"))
+    engines for the negative detrended values (documented device).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -449,13 +443,10 @@ def _friedman_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "friedman_test",
+sql_query(
+    "friedman_test", _friedman_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_friedman_sql("duck"),
-)
-def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friedman's nonparametric repeated-measures test: market
+    doc="""Friedman's nonparametric repeated-measures test: market
     segments ranked by revenue WITHIN each complete month block
     (months missing a segment are excluded — the test requires
     complete blocks), χ²_F = 12·ΣR_j²/(n·k(k+1)) − 3n(k+1) in ppm,
@@ -469,6 +460,5 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     float average-rank through the integer chain.
 
     One aggregation to ≤ months×5 cells; ranking windows run per
-    month over ≤ 5 rows."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_friedman_sql("spark"))
+    month over ≤ 5 rows.""",
+)

@@ -1,7 +1,7 @@
 """Round-8 catalog, tier 1: scale-posture closures from VERDICT r7.
 
 ``propensity_caliper_match_capped`` promotes the per-bucket control
-cap that ``tools/caliper_skew_probe.py`` measured (312× candidate
+cap that PERF.md's caliper-match adversary probe measured (312× candidate
 reduction; the uncapped form filled the scratch disk under the
 mega-bucket adversary at 400k rows — PERF.md round-7 close) from a
 probe into a registered, oracle-checked operator, mirroring the
@@ -80,8 +80,8 @@ def q_propensity_caliper_match_capped(
     The uncapped bucket join's candidate volume is a DATA property:
     a price-point adversary concentrates all controls into one bucket
     and the join degenerates to |treated| × |controls| — measured
-    scratch-disk death at 400k rows (tools/caliper_skew_probe.py,
-    PERF.md).  The cap ranks controls within each bucket by
+    scratch-disk death at 400k rows (PERF.md, "Probe: caliper-match
+    mega-bucket adversary").  The cap ranks controls within each bucket by
     (score, key) and keeps the first {cap} BEFORE the join, bounding
     candidates per treated unit at 3·{cap} regardless of skew.  The
     match is exact wherever per-bucket control counts ≤ {cap}; every

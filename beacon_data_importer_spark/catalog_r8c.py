@@ -33,18 +33,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -102,13 +91,10 @@ def _tukey_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "tukey_hsd",
+sql_query(
+    "tukey_hsd", _tukey_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_tukey_sql("duck"),
-)
-def q_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey-Kramer HSD on mean order value ($10 units) across the 5
+    doc="""Tukey-Kramer HSD on mean order value ($10 units) across the 5
     regions: for each of the 10 pairs, the mean difference and whether
     |m̄ᵢ−m̄ⱼ| exceeds q·√(MSW/2·(1/nᵢ+1/nⱼ)) — assembled sqrt-free by
     cross-multiplication: significant ⟺ D²·2·df·1e6 > q²ppm·SSW·
@@ -120,9 +106,8 @@ def q_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     range quantile crosses engines.
 
     Scale: one aggregation to 5 group rows (map-side combinable
-    behind broadcast dim joins), then a 5×5 self-join — bounded."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_tukey_sql("spark"))
+    behind broadcast dim joins), then a 5×5 self-join — bounded.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -192,13 +177,10 @@ def _mood_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "mood_median_test",
+sql_query(
+    "mood_median_test", _mood_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_mood_sql("duck"),
-)
-def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mood's median test across the 5 regions: order values coarsen
+    doc="""Mood's median test across the 5 regions: order values coarsen
     to $1000 buckets, the grand median bucket comes from the
     cumulative count over the BOUNDED distinct-bucket frame (the
     rank-defined (n+1) div 2 device — never a data-proportional
@@ -211,9 +193,8 @@ def q_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     both move, this doesn't.
 
     Scale: one bounded-distinct aggregation + one 5-row rollup; the
-    ordered window runs over ~500 bucket rows."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_mood_sql("spark"))
+    ordered window runs over ~500 bucket rows.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -265,13 +246,10 @@ def _ca_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cochran_armitage_trend",
+sql_query(
+    "cochran_armitage_trend", _ca_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_ca_sql("duck"),
-)
-def q_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Armitage trend test: is the urgent-order PROPORTION
+    doc="""Cochran-Armitage trend test: is the urgent-order PROPORTION
     trending across order years (scores s = year−1995)?  Z² =
     U²·N·1e6 div (R(N−R)(N·Σs²n − (Σsn)²)) with U = N·Σsr − R·Σsn —
     the whole statistic from five integer sufficient statistics, one
@@ -281,9 +259,8 @@ def q_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance in the denominator.  Verdict at the z² ppm literal.
 
     Scale: one map-side-combinable aggregation to 7 year rows; the
-    rest is a 1-row computation."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ca_sql("spark"))
+    rest is a 1-row computation.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -330,15 +307,10 @@ def _nb_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "negative_binomial_overdispersion",
+sql_query(
+    "negative_binomial_overdispersion", _nb_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_nb_sql("duck"),
-)
-def q_negative_binomial_overdispersion(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dispersion gate for count modeling: per-customer order counts
+    doc="""Dispersion gate for count modeling: per-customer order counts
     WITH the zero-order customers (the left join is the point —
     dropping zeros understates variance), dispersion index D =
     (nΣx²−S²)·1e6 div (n·S) (population variance over mean), and the
@@ -349,9 +321,8 @@ def q_negative_binomial_overdispersion(
     count regression on this schema.
 
     Scale: one map-side-combinable count per customer, one 1-row
-    moment rollup."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_nb_sql("spark"))
+    moment rollup.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -409,13 +380,10 @@ def _weibull_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "weibull_survival_fit",
+sql_query(
+    "weibull_survival_fit", _weibull_sql, "orders", "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_weibull_sql("duck"),
-)
-def q_weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weibull fit of the order→ship latency by median-rank
+    doc="""Weibull fit of the order→ship latency by median-rank
     regression: distinct latency days (a BOUNDED frame — the ordered
     cumulative window never touches row-proportional data) get
     median-rank plotting positions F̂ = (i−0.3)/(n+0.4) with i the
@@ -428,6 +396,5 @@ def q_weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     kaplan_meier/nelson_aalen tabulate nonparametrically.
 
     Scale: one join + one distinct-day aggregation (map-side
-    combinable); windows and OLS run on the ~120-row day frame."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_weibull_sql("spark"))
+    combinable); windows and OLS run on the ~120-row day frame.""",
+)

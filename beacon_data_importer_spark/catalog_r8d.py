@@ -43,8 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import query, sql_query
 
 
 # ONE shared _views (r12 round): documents/embeddings route through the
@@ -321,13 +320,10 @@ def _lb_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ljung_box_test",
+sql_query(
+    "ljung_box_test", _lb_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_lb_sql("duck"),
-)
-def q_ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ljung-Box portmanteau test on daily revenue: autocorrelations
+    doc="""Ljung-Box portmanteau test on daily revenue: autocorrelations
     r₁..r₁₀ via the cross-multiplied deviation device (dev = n·y − S,
     the n² factors cancel in r_k exactly), Q = n(n+2)Σ r_k²/(n−k) in
     ppm vs the χ²₁₀ gate.  One row per lag plus the shared Q columns.
@@ -335,9 +331,8 @@ def q_ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: lag pairs come from an EQUI-join on b.t = a.t + k over the
     calendar-day frame crossed with the broadcast 10-row lag spine —
     never a range/nested-loop join; calendar gaps simply drop pairs
-    (identically in both engines, pair counts are in the output)."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_lb_sql("spark"))
+    (identically in both engines, pair counts are in the output).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -400,13 +395,10 @@ def _dw_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "durbin_watson_test",
+sql_query(
+    "durbin_watson_test", _dw_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_dw_sql("duck"),
-)
-def q_durbin_watson_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durbin-Watson d on the residuals of daily revenue vs time: the
+    doc="""Durbin-Watson d on the residuals of daily revenue vs time: the
     OLS residual is kept as the EXACT integer D·y − A − B·t (slope and
     intercept never divide; one fixed engine-identical down-shift keeps
     squares inside DECIMAL(38,0) headroom), d = Σ(Δe)²/Σe² in ppm over
@@ -415,9 +407,8 @@ def q_durbin_watson_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (exact bounds are n-dependent table values).
 
     Scale: two aggregations over the bounded calendar-day frame; the
-    only full-data pass is the orders scan feeding the daily sums."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_dw_sql("spark"))
+    only full-data pass is the orders scan feeding the daily sums.""",
+)
 
 
 def _bp_sql(dialect: str) -> str:
@@ -454,21 +445,17 @@ def _bp_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "breusch_pagan_test",
+sql_query(
+    "breusch_pagan_test", _bp_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_bp_sql("duck"),
-)
-def q_breusch_pagan_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breusch-Pagan LM heteroskedasticity test: the squared (scaled)
+    doc="""Breusch-Pagan LM heteroskedasticity test: the squared (scaled)
     OLS residuals of daily revenue regressed back on time, LM = n·R²
     in ppm vs χ²₁.  R² is assembled sqrt-free with the staged-quotient
     device (the ·1e6 quotient against the t-dispersion is taken FIRST
     so the cross product never approaches 1e38).
 
-    Scale: same bounded-day-frame posture as ``durbin_watson_test``."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_bp_sql("spark"))
+    Scale: same bounded-day-frame posture as ``durbin_watson_test``.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -533,13 +520,10 @@ def _jt_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "jonckheere_terpstra",
+sql_query(
+    "jonckheere_terpstra", _jt_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_jt_sql("duck"),
-)
-def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jonckheere-Terpstra ordered-alternative test: is the order-value
+    doc="""Jonckheere-Terpstra ordered-alternative test: is the order-value
     distribution stochastically increasing across order YEARS?  The
     pairwise Mann-Whitney counts are computed from per-year $10-bucket
     histograms — JT·2 = Σ_{i<j} Σ_v [2·c_j(v)·C_i(<v) + c_i(v)c_j(v)]
@@ -551,6 +535,5 @@ def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: histogram rows = years × price buckets (bounded by the
     price RANGE, not row count); the pair stage self-joins that frame
-    on bucket equality — an equi-join of k·V rows, never n² pairs."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_jt_sql("spark"))
+    on bucket equality — an equi-join of k·V rows, never n² pairs.""",
+)

@@ -46,23 +46,13 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 DIM = 64
 _JL_DIMS = 16
 _QUERY_MOD = 50  # vec_id % 50 = 0 → sf-proportional query set
 _TOPK = 10
 _SHORTLIST = 40  # 4k Hamming shortlist before exact re-rank
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -185,13 +175,10 @@ def _bq_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "binary_quantize_search",
+sql_query(
+    "binary_quantize_search", _bq_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_bq_sql("duck"),
-)
-def q_binary_quantize_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 Hamming neighbors per query over 1-bit-quantized
+    doc="""Top-10 Hamming neighbors per query over 1-bit-quantized
     embeddings: sign bits packed into two 32-bit BIGINT words at scan
     time, distance = popcount(xor) — integer-only, no float ever
     crosses the join.  Queries (vec_id % 50) broadcast; the corpus
@@ -201,9 +188,8 @@ def q_binary_quantize_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the packed corpus is 16 B/vector (vs 256 B float32) — the
     brute scan this replaces gets 16× cheaper in bandwidth and the
     distance kernel drops to two popcounts; the shuffle carries only
-    shortlist-sized (query_id, vec_id, hamming) triples."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_bq_sql("spark"))
+    shortlist-sized (query_id, vec_id, hamming) triples.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -322,15 +308,10 @@ def _bqr_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "binary_rerank_recall_audit",
+sql_query(
+    "binary_rerank_recall_audit", _bqr_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_bqr_sql("duck"),
-)
-def q_binary_rerank_recall_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The production binary-quantization pipeline with its honesty
+    doc="""The production binary-quantization pipeline with its honesty
     meter: Hamming shortlist (4k = 40) → exact-cosine re-rank → top-10,
     measured per query against the full-precision brute top-10 (the
     audit deliberately pays for both paths — the
@@ -338,9 +319,8 @@ def q_binary_rerank_recall_audit(
     micro-cosine then vec_id in BOTH stages and BOTH engines.
 
     Scale: the expensive float kernel runs on 4k rows per query
-    instead of the corpus; the corpus-wide stage is popcount-only."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_bqr_sql("spark"))
+    instead of the corpus; the corpus-wide stage is popcount-only.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -474,15 +454,10 @@ def _jl_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "jl_projection_recall_audit",
+sql_query(
+    "jl_projection_recall_audit", _jl_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_jl_sql("duck"),
-)
-def q_jl_projection_recall_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Johnson-Lindenstrauss sketch audit: 64-dim embeddings projected
+    doc="""Johnson-Lindenstrauss sketch audit: 64-dim embeddings projected
     onto 16 deterministic ±1 hyperplanes at scan time, brute top-10 by
     SKETCH cosine, recall measured against full-dim truth per query.
     The projection is computed ONCE per vector in the scan projection
@@ -492,9 +467,8 @@ def q_jl_projection_recall_audit(
     all-pairs stage while keeping real-valued ranking.
 
     Scale: same broadcast-query / streaming-corpus / partitioned
-    window posture as the quantization twins above."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_jl_sql("spark"))
+    window posture as the quantization twins above.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -583,15 +557,10 @@ def _bayes_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "bayes_ab_prob_superiority",
+sql_query(
+    "bayes_ab_prob_superiority", _bayes_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_bayes_sql("duck"),
-)
-def q_bayes_ab_prob_superiority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Exact Bayesian A/B: P(p_B > p_A) under independent Beta(1,1)
+    doc="""Exact Bayesian A/B: P(p_B > p_A) under independent Beta(1,1)
     posteriors for the heavy-purchaser rate by user-id-parity variant.
     The closed-form finite sum Σᵢ B(α_A+i, β_A+β_B)/((β_B+i)·
     B(1+i,β_B)·B(α_A,β_A)) is evaluated by TWO SCALAR folds —
@@ -607,9 +576,8 @@ def q_bayes_ab_prob_superiority(
 
     Scale: everything after the per-user groupBy is ONE row folding a
     conversions-sized array — O(successes), not O(samples), and no
-    recursion, no UDF, no RNG."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_bayes_sql("spark"))
+    recursion, no UDF, no RNG.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -658,13 +626,10 @@ def _rappor_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "rappor_freq_estimate",
+sql_query(
+    "rappor_freq_estimate", _rappor_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_rappor_sql("duck"),
-)
-def q_rappor_freq_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Randomized-response (RAPPOR-style, basic one-time) frequency
+    doc="""Randomized-response (RAPPOR-style, basic one-time) frequency
     estimation over event participation: each (user, type) presence
     bit is flipped with probability f = 1/4 by a deterministic md5
     coin — both engines flip the SAME coins, so the 'noisy' channel is
@@ -675,6 +640,5 @@ def q_rappor_freq_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one users×5-types broadcast grid, one groupBy; the md5
     coin is scan-side JVM work.  The per-type error shrinks as
-    1/√users — visible across the sf ladder."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_rappor_sql("spark"))
+    1/√users — visible across the sf ladder.""",
+)

@@ -39,16 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r8d import _day_sql
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -201,13 +193,10 @@ def _pettitt_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pettitt_changepoint",
+sql_query(
+    "pettitt_changepoint", _pettitt_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_pettitt_sql("duck"),
-)
-def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pettitt's nonparametric changepoint on daily revenue: midranks
+    doc="""Pettitt's nonparametric changepoint on daily revenue: midranks
     via the doubled-rank device over the DISTINCT-value frame (tie
     exact, all integer), U_t = Σ_{i≤t}2R_i − t(n+1) from one cumulative
     window over the calendar-day frame, K = max|U_t| picked by
@@ -217,9 +206,8 @@ def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both windows run over calendar-bounded frames (distinct
     day values / days) — documented in BOUNDED_FRAME_AUDITED; the only
-    full pass is the orders scan into daily sums."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_pettitt_sql("spark"))
+    full pass is the orders scan into daily sums.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -313,13 +301,10 @@ def _croston_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "croston_intermittent",
+sql_query(
+    "croston_intermittent", _croston_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_croston_sql("duck"),
-)
-def q_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Croston's intermittent-demand smoother on ONE supplier's
+    doc="""Croston's intermittent-demand smoother on ONE supplier's
     shipment series (deterministically the min suppkey — per-supplier
     density is sf-invariant, so the series stays sparse at any scale):
     demand-size EWMA z over the size array and demand-interval EWMA p
@@ -336,9 +321,8 @@ def q_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the full scan reduces to one supplier's demand days
     (calendar-bounded ~150 rows), collected into one row's arrays by
-    the holt ys_agg device; both folds run in a single job."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_croston_sql("spark"))
+    the holt ys_agg device; both folds run in a single job.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -392,13 +376,10 @@ def _jb_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "jarque_bera_test",
+sql_query(
+    "jarque_bera_test", _jb_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_jb_sql("duck"),
-)
-def q_jarque_bera_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jarque-Bera normality test on daily revenue: skewness² and
+    doc="""Jarque-Bera normality test on daily revenue: skewness² and
     excess kurtosis from the EXACT integer central moments of the
     cross-multiplied deviations d = n·y − S (the n factors cancel in
     both ratios), assembled with staged quotients — (1e6·M₃/M₂) is
@@ -408,9 +389,8 @@ def q_jarque_bera_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment signature itself.
 
     Scale: one aggregation to the bounded day frame, one 4-moment
-    aggregation, zero joins wider than a 1-row broadcast."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_jb_sql("spark"))
+    aggregation, zero joins wider than a 1-row broadcast.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -474,13 +454,10 @@ def _page_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "page_trend_test",
+sql_query(
+    "page_trend_test", _page_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_page_sql("duck"),
-)
-def q_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page's L test for an ORDERED within-year trend of monthly
+    doc="""Page's L test for an ORDERED within-year trend of monthly
     revenue: ranks are per-year windows (PARTITIONED, 12 rows each,
     row_number with (value, month) total order — the calendar grid has
     no revenue ties in practice and the tiebreak is engine-identical
@@ -494,6 +471,5 @@ def q_page_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one month×year aggregation (84 rows), per-year rank
     windows, one scalar — nothing grows with data volume but the
-    orders scan."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_page_sql("spark"))
+    orders scan.""",
+)

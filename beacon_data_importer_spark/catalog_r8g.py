@@ -41,16 +41,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r8d import _day_sql, _resid_ctes
 from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -263,13 +256,10 @@ def _dunn_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "dunn_posthoc",
+sql_query(
+    "dunn_posthoc", _dunn_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_dunn_sql("duck"),
-)
-def q_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dunn's pairwise post-hoc after Kruskal-Wallis on order values
+    doc="""Dunn's pairwise post-hoc after Kruskal-Wallis on order values
     ($10 buckets) across the 5 regions: pooled DOUBLED midranks from
     the distinct-bucket histogram (tie-exact), per-pair mean-rank₂
     difference and its tie-corrected variance 4·V·(nᵢ+nⱼ)/(nᵢnⱼ) with
@@ -279,9 +269,8 @@ def q_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bonferroni z² gate at α/10.
 
     Scale: histogram + one 5-row pair join (broadcast); the windows
-    run over the price-bounded distinct-bucket frame."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_dunn_sql("spark"))
+    run over the price-bounded distinct-bucket frame.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -351,13 +340,10 @@ def _ab_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ansari_bradley",
+sql_query(
+    "ansari_bradley", _ab_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_ab_sql("duck"),
-)
-def q_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ansari-Bradley two-sample dispersion test: are urgent orders'
+    doc="""Ansari-Bradley two-sample dispersion test: are urgent orders'
     values more SPREAD than the rest?  Center-folded doubled midrank
     scores min(R₂, 2(N+1)−R₂) from the $10-bucket histogram, exact
     integer AB statistic, classical even/odd-N normal moments (the
@@ -366,9 +352,8 @@ def q_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-multiplied with every ratio floored to ppm first.
 
     Scale: histogram device + two aggregations; the window runs over
-    the price-bounded distinct-bucket frame."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ab_sql("spark"))
+    the price-bounded distinct-bucket frame.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -409,13 +394,10 @@ def _smk_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "seasonal_mk_trend",
+sql_query(
+    "seasonal_mk_trend", _smk_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_smk_sql("duck"),
-)
-def q_seasonal_mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hirsch-Slack seasonal Mann-Kendall on monthly revenue: the MK
+    doc="""Hirsch-Slack seasonal Mann-Kendall on monthly revenue: the MK
     S statistic computed WITHIN each calendar month across years
     (same-month pairs only — a 12-month cycle contributes zero), the
     per-season variances n(n−1)(2n+5)/18 summed, continuity-corrected
@@ -424,9 +406,8 @@ def q_seasonal_mk_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     can't be fooled by seasonality.
 
     Scale: one aggregation to the ≤ years×12 grid, a same-month pair
-    join over that bounded grid, two scalars."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_smk_sql("spark"))
+    join over that bounded grid, two scalars.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -478,13 +459,10 @@ def _cook_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cooks_distance_outliers",
+sql_query(
+    "cooks_distance_outliers", _cook_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_cook_sql("duck"),
-)
-def q_cooks_distance_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cook's distance on the daily revenue-vs-time OLS: exact integer
+    doc="""Cook's distance on the daily revenue-vs-time OLS: exact integer
     D-scaled residuals (the durbin_watson device, shared CTEs from
     catalog_r8d), closed-form simple-regression leverage
     h = 1/n + (nt−Σt)²/(n·Sxx·n) floored to ppm, and
@@ -495,9 +473,8 @@ def q_cooks_distance_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     days that BEND THE TREND LINE.
 
     Scale: the day frame is calendar-bounded; leverage/D are scan-side
-    arithmetic over it; top-k is TakeOrderedAndProject."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_cook_sql("spark"))
+    arithmetic over it; top-k is TakeOrderedAndProject.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -533,13 +510,10 @@ def _u2_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "theil_u2_forecast_audit",
+sql_query(
+    "theil_u2_forecast_audit", _u2_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
-    oracle=_u2_sql("duck"),
-)
-def q_theil_u2_forecast_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's U₂² for the drift forecast (ŷ_t = y_{t−1} +
+    doc="""Theil's U₂² for the drift forecast (ŷ_t = y_{t−1} +
     (y_{t−1}−y_{t−2}), error 2y₁−y₀−y₂) against the no-change naive
     (error y₁−y₂) on daily revenue: exact integer sums of squares over
     calendar-consecutive day triples (equi-joins on t+1/t+2; gaps drop
@@ -549,6 +523,5 @@ def q_theil_u2_forecast_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the naive-vs-naive skill ladder's other rung.
 
     Scale: two self equi-joins on the bounded calendar frame, one
-    aggregation — nothing beyond the orders scan grows with data."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_u2_sql("spark"))
+    aggregation — nothing beyond the orders scan grows with data.""",
+)

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r8e import _cos_e6
 from .sources.parquet import read_table
@@ -647,13 +647,10 @@ def _fisher_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "fisher_exact_2x2",
+sql_query(
+    "fisher_exact_2x2", _fisher_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_fisher_sql("duck"),
-)
-def q_fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-sided Fisher exact p-value P(X ≥ a) for the variant ×
+    doc="""One-sided Fisher exact p-value P(X ≥ a) for the variant ×
     heavy-purchaser table: pmf(0) as a product fold over the
     second-margin terms, a walk-up product to pmf(a), and the
     hypergeometric tail Horner-folded over the reversed likelihood
@@ -663,9 +660,8 @@ def q_fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the success margin ≈ quarter of users at every sf).
 
     Scale: one per-user groupBy; the folds run on ONE row over
-    success-count-sized arrays — O(successes), no lgamma, no RNG."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_fisher_sql("spark"))
+    success-count-sized arrays — O(successes), no lgamma, no RNG.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -746,13 +742,10 @@ def _hurst_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "hurst_exponent",
+sql_query(
+    "hurst_exponent", _hurst_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_hurst_sql("duck"),
-)
-def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hurst exponent of daily revenue by R/S analysis: for each
+    doc="""Hurst exponent of daily revenue by R/S analysis: for each
     dyadic window size w ∈ {16..128}, full blocks of w consecutive
     days get their rescaled range R/S = range(cumdev)/√(w·Σy²−S²)
     — range(cumdev) carries the cross-multiplied deviations w·y−S, so
@@ -766,9 +759,8 @@ def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     OLS slope of floored ln(mean R/S) on ln(w).
 
     Scale: block machinery is windows PARTITIONED by (w, block); the
-    day frame is calendar-bounded; the ln/OLS stage sees 4 rows."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_hurst_sql("spark"))
+    day frame is calendar-bounded; the ln/OLS stage sees 4 rows.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -863,15 +855,10 @@ def _pcorr_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "partial_correlation_triples",
+sql_query(
+    "partial_correlation_triples", _pcorr_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_pcorr_sql("duck"),
-)
-def q_partial_correlation_triples(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Partial correlations for the daily (order count, revenue,
+    doc="""Partial correlations for the daily (order count, revenue,
     discount volume) triple: one 9-sum aggregation gives the three
     ppm-floored marginal correlations (sqrt only of EXACT integer
     dispersions), then each pair's third-variable-partialled r² comes
@@ -880,9 +867,8 @@ def q_partial_correlation_triples(
     numerator rides along at 1e3 scale.  ``correlation_matrix`` stops
     at marginals; this is the direct-vs-mediated decomposition.
 
-    Scale: one scan, one aggregation, three constant-width rows."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_pcorr_sql("spark"))
+    Scale: one scan, one aggregation, three constant-width rows.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -949,13 +935,10 @@ def _bartlett_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "bartlett_test",
+sql_query(
+    "bartlett_test", _bartlett_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_bartlett_sql("duck"),
-)
-def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett's variance-homogeneity statistic for order values ($10
+    doc="""Bartlett's variance-homogeneity statistic for order values ($10
     units) across the 5 regions: (N−k)·ln(s_p²) − Σ(nᵢ−1)ln(sᵢ²) with
     every logarithm floored to micro-nats per term (woe_iv device) and
     the variance RATIOS formed from exact integer dispersions before
@@ -966,6 +949,5 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ansari_bradley`` are the robust members; Bartlett is the
     normal-theory power member (pair with ``jarque_bera_test``).
 
-    Scale: one aggregation to 5 rows behind broadcast dim joins."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_bartlett_sql("spark"))
+    Scale: one aggregation to 5 rows behind broadcast dim joins.""",
+)

@@ -32,18 +32,8 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -89,13 +79,10 @@ def _cq_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cochran_q_test",
+sql_query(
+    "cochran_q_test", _cq_sql, "events",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_cq_sql("duck"),
-)
-def q_cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran's Q over the user × event-type engagement panel
+    doc="""Cochran's Q over the user × event-type engagement panel
     (bᵤⱼ = 1 iff user u logged ≥13 events of type j):
     Q = (k−1)(kΣCⱼ² − T²)/(kT − ΣRᵤ²) — column and row totals are the
     only aggregates, every term an exact integer, one ppm quotient
@@ -103,9 +90,8 @@ def q_cochran_q_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator and denominator exactly as the theory says.
 
     Scale: two map-side-combinable groupBys (user×type, then each
-    margin); no joins wider than a 1-row broadcast."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(_cq_sql("spark"))
+    margin); no joins wider than a 1-row broadcast.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -169,13 +155,10 @@ def _mh_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "mantel_haenszel_cmh",
+sql_query(
+    "mantel_haenszel_cmh", _mh_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_mh_sql("duck"),
-)
-def q_mantel_haenszel_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mantel-Haenszel common odds ratio (urgent → high-value) across
+    doc="""Mantel-Haenszel common odds ratio (urgent → high-value) across
     the five region strata plus the continuity-corrected CMH χ²: each
     stratum contributes ad/n, bc/n, E=r₁c₁/n and the hypergeometric
     variance r₁r₂c₁c₂/(n²(n−1)) as per-stratum ppm-floored integers
@@ -183,9 +166,8 @@ def q_mantel_haenszel_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
     for OR and χ².
 
     Scale: one aggregation to 5 stratum rows behind broadcast dim
-    joins; everything after is 1-row arithmetic."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_mh_sql("spark"))
+    joins; everything after is 1-row arithmetic.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -251,13 +233,10 @@ def _kpss_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kpss_stationarity",
+sql_query(
+    "kpss_stationarity", _kpss_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_kpss_sql("duck"),
-)
-def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KPSS level-stationarity test on daily revenue: partial sums of
+    doc="""KPSS level-stationarity test on daily revenue: partial sums of
     the EXACT integer deviations dev = n·y − S (the n factors cancel
     in η), Bartlett long-run variance at q=4 from the same deviation
     autocovariances (equi-joined on t+l against a broadcast lag
@@ -267,9 +246,8 @@ def q_kpss_stationarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the cumulative window runs over the calendar-bounded day
     frame (BOUNDED_FRAME_AUDITED class); autocovariances are
-    equi-joins, no window."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_kpss_sql("spark"))
+    equi-joins, no window.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -414,13 +392,10 @@ def _pacf_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pacf_durbin_levinson",
+sql_query(
+    "pacf_durbin_levinson", _pacf_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_pacf_sql("duck"),
-)
-def q_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial autocorrelations of daily revenue, lags 1..6, by
+    doc="""Partial autocorrelations of daily revenue, lags 1..6, by
     Durbin-Levinson: the autocorrelations are ppm-floored integers
     first (exact autocovariance quotients — the ljung_box deviation
     device), then six UNROLLED 1-row array stages advance
@@ -432,6 +407,5 @@ def q_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix solve.
 
     Scale: the series work is the same bounded-day-frame equi-join
-    machinery as ljung_box/kpss; the DL stages touch one row."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_pacf_sql("spark"))
+    machinery as ljung_box/kpss; the DL stages touch one row.""",
+)

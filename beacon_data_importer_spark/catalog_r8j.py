@@ -24,18 +24,8 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -106,15 +96,10 @@ def _pgram_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "seasonal_periodogram_audit",
+sql_query(
+    "seasonal_periodogram_audit", _pgram_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_pgram_sql("duck"),
-)
-def q_seasonal_periodogram_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Single-frequency spectral power of daily revenue at the four
+    doc="""Single-frequency spectral power of daily revenue at the four
     business periods: per period p, C = Σ dev_t·cos_ppm(t mod p) and
     S = Σ dev_t·sin_ppm(t mod p) with the trig values baked in as
     shared ppm literals (493 rows, broadcast), power = (C/1e6)² +
@@ -124,9 +109,8 @@ def q_seasonal_periodogram_audit(
 
     Scale: one equi-join of the calendar-bounded deviation frame
     against a broadcast 493-row trig table, one 4-group aggregation —
-    the orders scan is the only thing that grows."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_pgram_sql("spark"))
+    the orders scan is the only thing that grows.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -178,13 +162,10 @@ def _mci_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "median_ci_order_stat",
+sql_query(
+    "median_ci_order_stat", _mci_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_mci_sql("duck"),
-)
-def q_median_ci_order_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-free 95% CI for the median order value: the
+    doc="""Distribution-free 95% CI for the median order value: the
     classical order-statistic ranks l = (n − z√n)/2 and
     u = n + 1 − l (binomial normal approximation; √n is the only
     non-integer step and its radicand is exact), then X₍ₗ₎, X₍ₘ₎,
@@ -196,6 +177,5 @@ def q_median_ci_order_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the histogram/cumsum runs over the price-bounded
     distinct-bucket frame (BOUNDED_FRAME_AUDITED class); everything
-    else is 1-row arithmetic."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_mci_sql("spark"))
+    else is 1-row arithmetic.""",
+)

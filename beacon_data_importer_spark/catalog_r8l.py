@@ -24,17 +24,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -85,13 +75,11 @@ def _wilson_sql(dialect: str) -> str:
     """
 
 
-@query(
+sql_query(
     "wilson_score_interval",
+    _wilson_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_wilson_sql("duck"),
-)
-def q_wilson_score_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """95% Wilson score interval for each region's urgent-order share:
+    doc="""95% Wilson score interval for each region's urgent-order share:
     center (a + z²/2)/(n + z²) in pure ppm integers, half-width via
     ONE sqrt whose radicand z²(a(n−a)/n + z²/4) is assembled from
     exact integers in a fixed double-op order (identical literals and
@@ -100,9 +88,8 @@ def q_wilson_score_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     everyone writes and is anti-conservative at the edges; Wilson is
     the production-grade default.
 
-    Scale: one aggregation to 5 rows behind broadcast dim joins."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_wilson_sql("spark"))
+    Scale: one aggregation to 5 rows behind broadcast dim joins.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -170,13 +157,10 @@ def _sprt_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "sprt_boundary_crossing",
+sql_query(
+    "sprt_boundary_crossing", _sprt_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_sprt_sql("duck"),
-)
-def q_sprt_boundary_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald SPRT (H₀: urgent share = 18% vs H₁: 22%; α = β = 0.05)
+    doc="""Wald SPRT (H₀: urgent share = 18% vs H₁: 22%; α = β = 0.05)
     replayed over the calendar: the per-day log-likelihood-ratio
     increment a·ln(p₁/p₀) + (m−a)·ln(q₁/q₀) uses micro-nat LITERALS
     baked at module import (no engine ever calls ln), the cumulative
@@ -187,9 +171,8 @@ def q_sprt_boundary_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPRT looks every day with fixed Wald boundaries.
 
     Scale: one aggregation to the calendar-day frame, one cumulative
-    window over it (BOUNDED_FRAME_AUDITED class), two LIMIT-1 picks."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_sprt_sql("spark"))
+    window over it (BOUNDED_FRAME_AUDITED class), two LIMIT-1 picks.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -286,13 +269,11 @@ def _bd_sql(dialect: str) -> str:
     """
 
 
-@query(
+sql_query(
     "breslow_day_homogeneity",
+    _bd_sql, "orders", "customer", "nation", "region",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_bd_sql("duck"),
-)
-def q_breslow_day_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breslow-Day homogeneity test for the stratified odds ratios:
+    doc="""Breslow-Day homogeneity test for the stratified odds ratios:
     BEFORE trusting ``mantel_haenszel_cmh``'s common OR, check the
     strata actually share one — per stratum, the expected cell ã under
     the common ψ is the in-range root of the Breslow-Day quadratic
@@ -303,6 +284,5 @@ def q_breslow_day_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame:
     total gates on χ²₄.
 
     Scale: one aggregation to 5 stratum rows behind broadcast dim
-    joins; the quadratic/χ² stage is 5-row arithmetic."""
-    _views(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_bd_sql("spark"))
+    joins; the quadratic/χ² stage is 5-row arithmetic.""",
+)

@@ -36,21 +36,11 @@ petl→Postgres importer, has no test surface; SURVEY §2 'beyond' set).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · χ²(df=1, α=0.05)) — shared literal convention (r8d/r8g)
 _CHI2_DF1_E6 = 3_841_458
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -111,13 +101,10 @@ def _wilcoxon_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "wilcoxon_signed_rank",
+sql_query(
+    "wilcoxon_signed_rank", _wilcoxon_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_wilcoxon_sql("duck"),
-)
-def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilcoxon signed-rank test on paired monthly revenue (1997 vs
+    doc="""Wilcoxon signed-rank test on paired monthly revenue (1997 vs
     1998, paired by calendar month): zero differences dropped per the
     classic treatment, |d| ranked with DOUBLED midranks over the
     distinct-|d| frame (tie-exact integers), W₂⁺ = Σ_{{d>0}} R₂ᵢ.
@@ -129,9 +116,8 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one month aggregation (map-side combinable), then ≤12-row
     arithmetic; the rank window runs on the ≤12-row distinct-|d| frame.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_wilcoxon_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -192,13 +178,10 @@ def _sign_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "sign_test_paired",
+sql_query(
+    "sign_test_paired", _sign_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_sign_sql("duck"),
-)
-def q_sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact paired sign test on the same 1997-vs-1998 monthly revenue
+    doc="""Exact paired sign test on the same 1997-vs-1998 monthly revenue
     pairs as ``wilcoxon_signed_rank`` — the two together are the paired
     decision pair (sign test assumes NOTHING about the difference
     distribution; Wilcoxon adds symmetry and buys power).  The exact
@@ -210,9 +193,8 @@ def q_sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the month aggregation is the only data-sized stage; the
     binomial table is 13 rows by construction.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_sign_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -254,13 +236,10 @@ def _cox_stuart_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cox_stuart_trend",
+sql_query(
+    "cox_stuart_trend", _cox_stuart_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_cox_stuart_sql("duck"),
-)
-def q_cox_stuart_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cox-Stuart trend test on daily revenue: day i paired with day
+    doc="""Cox-Stuart trend test on daily revenue: day i paired with day
     i + n/2 (position on the calendar-indexed frame), S⁺ = #(later >
     earlier) among untied pairs, continuity-corrected z² =
     (|2S⁺−m|−1)²/m vs χ²₁ — a sign test against Binomial(m, ½).
@@ -272,9 +251,8 @@ def q_cox_stuart_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BOUNDED_FRAME_AUDITED class); the pair join is an equi-join on
     the offset index.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_cox_stuart_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -313,13 +291,10 @@ def _turning_points_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "turning_points_test",
+sql_query(
+    "turning_points_test", _turning_points_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_turning_points_sql("duck"),
-)
-def q_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Turning-points randomness test on daily revenue: T = count of
+    doc="""Turning-points randomness test on daily revenue: T = count of
     strict local extrema (sign change between consecutive deltas —
     flats excluded), compared against the i.i.d. null T ~
     N(2(n−2)/3, (16n−29)/90).  z² is assembled denominator-free:
@@ -331,9 +306,8 @@ def q_turning_points_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: consecutive triples via two equi-joins on the calendar
     index (BOUNDED_FRAME_AUDITED class), one aggregation row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_turning_points_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 # ---------------------------------------------------------------------------
 # brunner_munzel + cliffs_delta_effect (shared $10-bucket histogram device)
@@ -423,13 +397,10 @@ def _bm_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "brunner_munzel",
+sql_query(
+    "brunner_munzel", _bm_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_bm_sql("duck"),
-)
-def q_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brunner-Munzel / DeLong test of stochastic equality between
+    doc="""Brunner-Munzel / DeLong test of stochastic equality between
     BUILDING and MACHINERY order values: p̂ = P(X₂ > X₁) + ½P(=) from
     $10-bucket histograms (doubled placements 2·#less + #equal — the
     tie-exact integer device), variance from the PER-GROUP placement
@@ -441,9 +412,8 @@ def q_brunner_munzel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one histogram aggregation; the placement window runs on the
     DISTINCT $10-bucket frame (price-range-bounded); output is 1 row.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_bm_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 def _cliffs_sql(dialect: str) -> str:
@@ -477,13 +447,10 @@ def _cliffs_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "cliffs_delta_effect",
+sql_query(
+    "cliffs_delta_effect", _cliffs_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_cliffs_sql("duck"),
-)
-def q_cliffs_delta_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cliff's delta effect size between BUILDING and MACHINERY order
+    doc="""Cliff's delta effect size between BUILDING and MACHINERY order
     values: δ = (#(x₁>x₂) − #(x₁<x₂))/(n₁n₂), the ordinal effect
     measure that p-value tests (``welch_t_test``, ``brunner_munzel``)
     deliberately don't report — at these row counts everything is
@@ -495,9 +462,8 @@ def q_cliffs_delta_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one histogram aggregation + the bounded-frame cumulative;
     1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_cliffs_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -544,13 +510,10 @@ def _hl_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "hodges_lehmann_shift",
+sql_query(
+    "hodges_lehmann_shift", _hl_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_hl_sql("duck"),
-)
-def q_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hodges-Lehmann location-shift estimator between BUILDING and
+    doc="""Hodges-Lehmann location-shift estimator between BUILDING and
     MACHINERY order values: the median of all n₁·n₂ pairwise
     differences — the robust EFFECT SIZE in dollars that the rank
     tests' p-values don't give.  Values coarsen to $1000 buckets
@@ -564,9 +527,8 @@ def q_hodges_lehmann_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (B ≈ price-range/1000), one cumulative over the distinct-diff
     frame.  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_hl_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -612,13 +574,10 @@ def _gamma_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kruskal_gamma",
+sql_query(
+    "kruskal_gamma", _gamma_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_gamma_sql("duck"),
-)
-def q_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goodman-Kruskal gamma between discount and quantity:
+    doc="""Goodman-Kruskal gamma between discount and quantity:
     γ = (C − D)/(C + D) — the tie-EXCLUDING ordinal association,
     bracketing ``kendall_tau_cells``'s tau-a (which divides by ALL
     pairs and is dragged toward 0 by the massive tie mass of two
@@ -629,9 +588,8 @@ def q_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one cell aggregation (map-side combinable), then a
     bounded B² cell cross (B ≤ 550).  1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_gamma_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 def _somers_sql(dialect: str) -> str:
@@ -650,13 +608,10 @@ def _somers_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "somers_d",
+sql_query(
+    "somers_d", _somers_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_somers_sql("duck"),
-)
-def q_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Somers' D between discount and quantity, BOTH directions:
+    doc="""Somers' D between discount and quantity, BOTH directions:
     D(y|x) = (C − D)/(C + D + T_y) penalizes ties on the DEPENDENT
     variable only — the asymmetric ordinal association underlying the
     concordance index (Somers' D of a binary outcome = 2·AUC − 1,
@@ -667,6 +622,5 @@ def q_somers_d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to ``kruskal_gamma`` — bounded cell cross, 1 row.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_somers_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

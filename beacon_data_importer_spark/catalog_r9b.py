@@ -26,21 +26,11 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql, _resid_ctes
-from .sources.parquet import read_table
 
 #: floor(1e6 · χ²(df=1, α=0.05))
 _CHI2_DF1_E6 = 3_841_458
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 def _corr_e6(dialect: str, n: str, su: str, sv: str, suu: str,
@@ -135,15 +125,10 @@ def _qr_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "quantile_regression_irls",
+sql_query(
+    "quantile_regression_irls", _qr_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_qr_sql("duck"),
-)
-def q_quantile_regression_irls(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Median (LAD) regression of daily revenue on time by iteratively
+    doc="""Median (LAD) regression of daily revenue on time by iteratively
     reweighted least squares, 3 steps unrolled: wᵢ = 1/max(|rᵢ|, δ)
     computed as the EXACT integer quotient 1e12 div max(|r_e6|, 1e6)
     of the exact e6-scaled residual (previous step's ppm coefficients
@@ -161,9 +146,8 @@ def q_quantile_regression_irls(
     Catalyst reuses the scan.
 
     Scale: one day aggregation; 3 × (1-row coefficient frame × day
-    frame) map joins.  1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_qr_sql("spark"))
+    frame) map joins.  1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -236,13 +220,10 @@ def _granger_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "granger_lag1_test",
+sql_query(
+    "granger_lag1_test", _granger_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_granger_sql("duck"),
-)
-def q_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 Granger causality: does yesterday's ORDER COUNT predict
+    doc="""Lag-1 Granger causality: does yesterday's ORDER COUNT predict
     today's revenue beyond what yesterday's revenue already does?
     Restricted R² = r²(y, y₋₁); unrestricted R² adds x₋₁ via the
     partial-correlation identity R²ᵤ = (r₁² + r₂² − 2r₁r₂r₁₂)/(1−r₁₂²)
@@ -252,9 +233,8 @@ def q_granger_lag1_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one added regressor, n large).
 
     Scale: one day aggregation, one consecutive-day equi-join, one
-    moment aggregation — 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_granger_sql("spark"))
+    moment aggregation — 1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -297,13 +277,10 @@ def _arch_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "arch_lm_test",
+sql_query(
+    "arch_lm_test", _arch_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_arch_sql("duck"),
-)
-def q_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engle's ARCH(1) LM test on the daily-revenue OLS residuals:
+    doc="""Engle's ARCH(1) LM test on the daily-revenue OLS residuals:
     regress e²ₜ on e²ₜ₋₁ — LM = m·R² where R² is the squared
     ppm-floored correlation of consecutive squared residuals, vs χ²₁.
     Residuals are the ``durbin_watson_test`` frame's EXACT integers
@@ -313,9 +290,8 @@ def q_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether a homoskedastic forecast band (``ewma_control_chart``) is
     even admissible.
 
-    Scale: bounded day frame end to end; 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_arch_sql("spark"))
+    Scale: bounded day frame end to end; 1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -376,13 +352,10 @@ def _yw_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "yule_walker_ar2",
+sql_query(
+    "yule_walker_ar2", _yw_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_yw_sql("duck"),
-)
-def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AR(2) fit of daily revenue by Yule-Walker: φ₁ = r₁(1−r₂)/(1−r₁²)
+    doc="""AR(2) fit of daily revenue by Yule-Walker: φ₁ = r₁(1−r₂)/(1−r₁²)
     and φ₂ = (r₂−r₁²)/(1−r₁²) from the ppm-floored autocorrelations
     (the ``ljung_box_test`` dev = n·y−S device — the n² factors cancel
     exactly in each r_k), the innovation-variance ratio
@@ -391,9 +364,8 @@ def q_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     order; this is the order-2 FIT with its quality number — the
     one-scan parametric baseline every fancier forecaster must beat.
 
-    Scale: one day aggregation, two offset equi-joins, 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_yw_sql("spark"))
+    Scale: one day aggregation, two offset equi-joins, 1 row out.""",
+)
 
 # ---------------------------------------------------------------------------
 # diebold_mariano_test
@@ -435,13 +407,10 @@ def _dm_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "diebold_mariano_test",
+sql_query(
+    "diebold_mariano_test", _dm_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_dm_sql("duck"),
-)
-def q_diebold_mariano_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diebold-Mariano forecast-comparison test over the drift vs
+    doc="""Diebold-Mariano forecast-comparison test over the drift vs
     naive one-step forecasts of daily revenue (``theil_u2``'s exact
     integer error pair): loss differential dₜ = e²_drift − e²_naive
     per calendar-consecutive day triple, z² = d̄²/(V̂(d)/m) assembled
@@ -450,9 +419,8 @@ def q_diebold_mariano_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``theil_u2_forecast_audit`` reports the RATIO of the losses; DM
     says whether the gap is distinguishable from noise.
 
-    Scale: two offset equi-joins on the bounded day frame; 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_dm_sql("spark"))
+    Scale: two offset equi-joins on the bounded day frame; 1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -507,13 +475,10 @@ def _ts_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "tracking_signal_audit",
+sql_query(
+    "tracking_signal_audit", _ts_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_ts_sql("duck"),
-)
-def q_tracking_signal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecast-bias tracking signal for the naive (last-value)
+    doc="""Forecast-bias tracking signal for the naive (last-value)
     forecast of daily revenue: TSₜ = Σe/(Σ|e|/t) — the running
     cumulative error over the running MAD, the classic ops-dashboard
     bias alarm (|TS| > 4 ⇒ the forecast is systematically high or
@@ -522,9 +487,8 @@ def q_tracking_signal_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mase_forecast_audit`` (magnitude) with DIRECTION persistence.
 
     Scale: consecutive-day equi-join + two cumulative windows on the
-    calendar-day frame (BOUNDED_FRAME_AUDITED class); 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ts_sql("spark"))
+    calendar-day frame (BOUNDED_FRAME_AUDITED class); 1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -572,13 +536,10 @@ def _pe_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "permutation_entropy",
+sql_query(
+    "permutation_entropy", _pe_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_pe_sql("duck"),
-)
-def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-3 permutation entropy (Bandt-Pompe) of daily revenue:
+    doc="""Order-3 permutation entropy (Bandt-Pompe) of daily revenue:
     each consecutive-day triple maps to its ordinal pattern (ties
     broken by position — earlier day ranks lower, so the three ≥
     comparisons encode the pattern exactly and identically in both
@@ -589,9 +550,8 @@ def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``hurst_exponent``'s long-memory view.
 
     Scale: row_number over the calendar frame + two offset equi-joins;
-    the entropy stage sees ≤6 rows."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_pe_sql("spark"))
+    the entropy stage sees ≤6 rows.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -631,13 +591,10 @@ def _sen_seasonal_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "sen_slope_seasonal",
+sql_query(
+    "sen_slope_seasonal", _sen_seasonal_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_sen_seasonal_sql("duck"),
-)
-def q_sen_slope_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal Sen's slope of monthly revenue: the median of the
+    doc="""Seasonal Sen's slope of monthly revenue: the median of the
     SAME-MONTH across-year pairwise slopes (January-to-January,
     February-to-February, …) — the magnitude estimate that pairs with
     ``seasonal_mk_trend``'s direction verdict exactly as
@@ -649,9 +606,8 @@ def q_sen_slope_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one month aggregation, a same-month pair join bounded by
     (#years choose 2) per month, one cumulative over ≤252 distinct
-    slopes; 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_sen_seasonal_sql("spark"))
+    slopes; 1 row out.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -727,13 +683,10 @@ def _ecc_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ewma_control_chart",
+sql_query(
+    "ewma_control_chart", _ecc_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_ecc_sql("duck"),
-)
-def q_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA control chart on daily revenue (α = ½, truncated-7 —
+    doc="""EWMA control chart on daily revenue (α = ½, truncated-7 —
     the ``ewma_daily_revenue`` smoother, re-expressed with ×64
     INTEGER weights so the statistic path never touches a float):
     z₆₄ = Σ 2⁶⁻ʲ·y₍ₜ₋ⱼ₎ is exact, monitored days are those with the
@@ -744,6 +697,5 @@ def q_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     band) surface the shifts ``cusum_changepoints`` dates.
 
     Scale: one day aggregation; the 7-lag window runs on the
-    calendar-day frame (BOUNDED_FRAME_AUDITED class); 1 row out."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ecc_sql("spark"))
+    calendar-day frame (BOUNDED_FRAME_AUDITED class); 1 row out.""",
+)

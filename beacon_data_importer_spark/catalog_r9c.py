@@ -33,21 +33,11 @@ Reference parity: beyond-reference statistics/experimentation tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
+from .catalog import sql_query
 
 _CHI2_DF1_E6 = 3_841_458
 _CHI2_DF2_E6 = 5_991_464
 _CHI2_DF4_E6 = 9_487_729
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -96,13 +86,10 @@ def _gtest_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "g_test_independence",
+sql_query(
+    "g_test_independence", _gtest_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_gtest_sql("duck"),
-)
-def q_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Likelihood-ratio G-test on returnflag × linestatus:
+    doc="""Likelihood-ratio G-test on returnflag × linestatus:
     G = 2 Σ O·ln(O·N/(r·c)), each cell's log-likelihood ratio floored
     ONCE to micro-nats (the ``woe_iv`` per-term device; O·N and r·c
     stay exact integers below 2⁵³ before the one double quotient).
@@ -115,9 +102,8 @@ def q_g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one cell aggregation (≤6 cells), margin joins on the
     bounded cell frame; 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_gtest_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -177,15 +163,10 @@ def _ebshrink_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "bayesian_shrinkage_rates",
+sql_query(
+    "bayesian_shrinkage_rates", _ebshrink_sql, "orders", "customer", "nation",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_ebshrink_sql("duck"),
-)
-def q_bayesian_shrinkage_rates(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Empirical-Bayes shrinkage of per-nation urgent-order rates
+    doc="""Empirical-Bayes shrinkage of per-nation urgent-order rates
     under a method-of-moments beta-binomial prior: the prior strength
     κ = m(1−m)/v − 1 comes from the observed across-nation rate mean
     and variance (both from ppm-floored per-nation rates — exact
@@ -198,9 +179,8 @@ def q_bayesian_shrinkage_rates(
     Scale: one aggregation to 25 nation rows behind broadcast dim
     joins; everything after is 25-row arithmetic.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer", "nation")
-    return spark.sql(_ebshrink_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -263,13 +243,10 @@ def _ratio_ci_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ratio_metric_delta_ci",
+sql_query(
+    "ratio_metric_delta_ci", _ratio_ci_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_ratio_ci_sql("duck"),
-)
-def q_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-method 95% CI for the revenue-per-order RATIO metric by
+    doc="""Delta-method 95% CI for the revenue-per-order RATIO metric by
     hash-assigned variant, analyzed at the CUSTOMER grain: the ratio
     of sums R = Σx/Σy has Var ≈ (s²ₓ − 2Rsₓᵧ + R²s²ᵧ)/(n·ȳ²) — using
     per-ORDER rows instead (the classic blunder) ignores the
@@ -280,9 +257,8 @@ def q_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one customer aggregation, 2 variant rows of arithmetic.
 
-    Reference parity: beyond-reference experimentation tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ratio_ci_sql("spark"))
+    Reference parity: beyond-reference experimentation tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -334,13 +310,10 @@ def _evalue_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "evalue_sensitivity",
+sql_query(
+    "evalue_sensitivity", _evalue_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_evalue_sql("duck"),
-)
-def q_evalue_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VanderWeele's E-value for the urgent-priority → high-value
+    doc="""VanderWeele's E-value for the urgent-priority → high-value
     association: E = RR* + √(RR*(RR*−1)) with RR* the risk ratio
     folded above 1 — the minimum strength of association an
     unmeasured confounder would need with BOTH treatment and outcome
@@ -352,9 +325,8 @@ def q_evalue_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one aggregation to a 2×2; 1 row out.
 
-    Reference parity: beyond-reference causal tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_evalue_sql("spark"))
+    Reference parity: beyond-reference causal tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -423,13 +395,10 @@ def _ato_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "overlap_weights_ato",
+sql_query(
+    "overlap_weights_ato", _ato_sql, "orders", "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_ato_sql("duck"),
-)
-def q_overlap_weights_ato(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlap-weighted treatment effect (Li-Morgan-Zaslavsky ATO) of
+    doc="""Overlap-weighted treatment effect (Li-Morgan-Zaslavsky ATO) of
     urgent priority on order→first-ship latency: with h(x) = e(1−e)
     overlap weights, treated units weigh (1−e) and controls weigh e —
     the propensity weighting whose weights are BOUNDED by 1, so a
@@ -443,9 +412,8 @@ def q_overlap_weights_ato(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one order-grain aggregation (min ship latency per order),
     a bounded bucket-rate broadcast join, one final aggregate.
 
-    Reference parity: beyond-reference causal tier."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_ato_sql("spark"))
+    Reference parity: beyond-reference causal tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -499,13 +467,10 @@ def _kw_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kendall_w_concordance",
+sql_query(
+    "kendall_w_concordance", _kw_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_kw_sql("duck"),
-)
-def q_kendall_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's coefficient of concordance W for the within-month
+    doc="""Kendall's coefficient of concordance W for the within-month
     revenue rankings of the 5 market segments (complete months only —
     the ``friedman_test`` frame): W = 12·S/(n²k(k²−1)) assembled
     tie-free as 3·Σ(2Rⱼ − n(k+1))²/(n²k(k²−1)) — the doubled-deviation
@@ -519,6 +484,5 @@ def q_kendall_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one month×segment aggregation; ranks partition by month
     (12-row windows); k = 5 rows of arithmetic.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_kw_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -24,17 +24,7 @@ Reference parity: beyond-reference analytics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -106,13 +96,10 @@ def _gini_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "gini_lorenz_audit",
+sql_query(
+    "gini_lorenz_audit", _gini_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_gini_sql("duck"),
-)
-def q_gini_lorenz_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer-revenue Gini coefficient + Lorenz decile table, zeros
+    doc="""Customer-revenue Gini coefficient + Lorenz decile table, zeros
     included: values coarsen to $1000 buckets, and the mean-absolute-
     difference numerator Σ_{{a<b}} c_a c_b (v_b − v_a) collapses to ONE
     cumulative pass (each bucket contributes v·c·N_below − c·S_below)
@@ -127,9 +114,8 @@ def q_gini_lorenz_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: customer aggregation (map-side combinable), cumulative
     over the DISTINCT $1000-bucket frame (price-range-bounded).
 
-    Reference parity: beyond-reference analytics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_gini_sql("spark"))
+    Reference parity: beyond-reference analytics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -212,13 +198,10 @@ def _dd_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ddsketch_quantile_audit",
+sql_query(
+    "ddsketch_quantile_audit", _dd_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_dd_sql("duck"),
-)
-def q_ddsketch_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relative-error quantile sketch (DDSketch's idea, integer-exact
+    doc="""Relative-error quantile sketch (DDSketch's idea, integer-exact
     construction): order values land in powers-of-two octaves via a
     41-row broadcast literal table — NO log() runs, so the bucket id
     is exact integer arithmetic on both engines — each octave split
@@ -235,9 +218,8 @@ def q_ddsketch_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     price range).  3 rows out.
 
     Reference parity: beyond-reference sketch tier
-    (``quantile_sketch_audit`` is rank-error; this is relative-error)."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_dd_sql("spark"))
+    (``quantile_sketch_audit`` is rank-error; this is relative-error).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -275,15 +257,10 @@ def _zip_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "poisson_zero_inflation_audit",
+sql_query(
+    "poisson_zero_inflation_audit", _zip_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_zip_sql("duck"),
-)
-def q_poisson_zero_inflation_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Zero-inflation screen for the per-customer 1997 order counts
+    doc="""Zero-inflation screen for the per-customer 1997 order counts
     (zeros INCLUDED via the customer left join — the point): a
     Poisson with the observed mean predicts p₀ = e^{{−λ}}, so excess
     zeros ⟺ ln(p̂₀) + λ̂ > 0 — compared entirely in the ln domain
@@ -294,6 +271,5 @@ def q_poisson_zero_inflation_audit(
 
     Scale: one left-join aggregation to customers; 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_zip_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -26,18 +26,8 @@ Reference parity: beyond-reference embedding/graph tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .catalog_r8e import _cos_e6, _cos_e6_pre, _dot, _norm
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
+from .catalog_r8e import _cos_e6_pre, _norm
 
 
 _CENT_MOD = 100  # ivf_search's deterministic centroid rule
@@ -93,13 +83,10 @@ def _balance_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ivf_cell_balance_audit",
+sql_query(
+    "ivf_cell_balance_audit", _balance_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_balance_sql("duck"),
-)
-def q_ivf_cell_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-population balance of the deterministic IVF index: max and
+    doc="""Cell-population balance of the deterministic IVF index: max and
     min cell sizes, imbalance = max/mean (ppm), and the largest cell's
     corpus share.  The IVF cost model — "nprobe cells ≈ nprobe/nlist
     of the corpus" — is a UNIFORMITY assumption; with imbalance k, a
@@ -113,9 +100,8 @@ def q_ivf_cell_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle-replayable window form); the audit aggregate sees
     nlist rows.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_balance_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -182,13 +168,10 @@ def _curve_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "ivf_nprobe_recall_curve",
+sql_query(
+    "ivf_nprobe_recall_curve", _curve_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_curve_sql("duck"),
-)
-def q_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 vs nprobe for the ``ivf_search`` configuration, one
+    doc="""Recall@10 vs nprobe for the ``ivf_search`` configuration, one
     statement, 5 rows: candidates at nprobe=k are the vectors whose
     cells rank ≤ k by query-centroid cosine; each curve point's top-10
     (floored micro-cosine, (sim, id) total order) is scored against
@@ -202,9 +185,8 @@ def q_ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) — it's a measurement, not a serving path; per-np top-k via
     partitioned windows.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_curve_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -284,13 +266,10 @@ def _pq_dist_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pq_distortion_audit",
+sql_query(
+    "pq_distortion_audit", _pq_dist_sql, "embeddings",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_pq_dist_sql("duck"),
-)
-def q_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-subspace quantization distortion of the ``pq_search``
+    doc="""Per-subspace quantization distortion of the ``pq_search``
     codebook (M=8 subspaces × K=16 deterministic codewords): for each
     (vector, subspace), the squared L2 to the NEAREST codeword — the
     exact quantity PQ's ADC approximation replaces true distance with
@@ -304,9 +283,8 @@ def q_pq_distortion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as the production ``pq_encode`` (packed broadcast, no
     shuffle); the audit aggregate sees M rows.
 
-    Reference parity: beyond-reference embedding tier."""
-    _views(spark, sf_dir, "embeddings")
-    return spark.sql(_pq_dist_sql("spark"))
+    Reference parity: beyond-reference embedding tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -350,13 +328,10 @@ def _assort_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "degree_assortativity",
+sql_query(
+    "degree_assortativity", _assort_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_assort_sql("duck"),
-)
-def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the supplier→part shipment graph:
+    doc="""Degree assortativity of the supplier→part shipment graph:
     Pearson correlation, over the DISTINCT edges, of the two
     endpoints' degrees — positive means hub suppliers concentrate on
     hub parts (a core-periphery supply web), negative means hubs fan
@@ -370,6 +345,5 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     two degree aggregations joined back edge-wise, one moment
     aggregate; 1 row out.
 
-    Reference parity: beyond-reference graph tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_assort_sql("spark"))
+    Reference parity: beyond-reference graph tier.""",
+)

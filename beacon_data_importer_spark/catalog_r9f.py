@@ -21,17 +21,7 @@ Reference parity: beyond-reference text tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import sql_query
 
 
 def _tri_cte(dialect: str) -> str:
@@ -108,13 +98,10 @@ def _novelty_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "trigram_novelty_curve",
+sql_query(
+    "trigram_novelty_curve", _novelty_sql, "documents",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_novelty_sql("duck"),
-)
-def q_trigram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Novel-trigram rate along the ingestion order, by doc-id-range
+    doc="""Novel-trigram rate along the ingestion order, by doc-id-range
     decile: a trigram OCCURRENCE is novel iff its type's first
     appearance (exact MIN(doc_id) attribution — deterministic, not
     scan-order) is this document.  Early deciles run hot, the tail
@@ -129,9 +116,8 @@ def q_trigram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), one type-level groupBy (first-doc), one doc-level join
     back, 10 rows out.
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_novelty_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -175,15 +161,10 @@ def _containment_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "shingle_containment_pairs",
+sql_query(
+    "shingle_containment_pairs", _containment_sql, "documents",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_containment_sql("duck"),
-)
-def q_shingle_containment_pairs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Asymmetric near-dup candidates by rare-shingle CONTAINMENT:
+    doc="""Asymmetric near-dup candidates by rare-shingle CONTAINMENT:
     3-word shingle sets per document, the inverted index capped at
     document frequency ≤ {df} (the blocking device — a shingle in
     every doc generates O(n²) pairs and zero signal; a rare shingle
@@ -200,14 +181,10 @@ def q_shingle_containment_pairs(
     quadratic in corpus size; distinct-shingle projection and degree
     joins are ordinary hash shuffles.
 
-    Reference parity: beyond-reference dedup tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_containment_sql("spark"))
-
-
-q_shingle_containment_pairs.__doc__ = (
-    q_shingle_containment_pairs.__doc__ or ""
-).format(df=_SC_DF_MAX, ms=_SC_MIN_SHARED)
+    Reference parity: beyond-reference dedup tier.""".format(
+        df=_SC_DF_MAX, ms=_SC_MIN_SHARED
+    ),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -250,15 +227,10 @@ def _fertility_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "tokenizer_fertility_by_source",
+sql_query(
+    "tokenizer_fertility_by_source", _fertility_sql, "documents",
     registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
-    oracle=_fertility_sql("duck"),
-)
-def q_tokenizer_fertility_by_source(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Tokenizer fertility table by source: tokens-per-whitespace-word
+    doc="""Tokenizer fertility table by source: tokens-per-whitespace-word
     and chars-per-token under the GPT-ish regex tokenizer (alnum
     chunks + one token per punctuation mark — the ``token_length``
     tier's counting rule).  Fertility is THE budget number for a
@@ -270,6 +242,5 @@ def q_tokenizer_fertility_by_source(
 
     Scale: one projection + one source groupBy (map-side combinable).
 
-    Reference parity: beyond-reference text tier."""
-    _views(spark, sf_dir, "documents")
-    return spark.sql(_fertility_sql("spark"))
+    Reference parity: beyond-reference text tier.""",
+)

@@ -32,23 +32,13 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _ordinal_pairs_sql, _two_group_hist_sql
-from .sources.parquet import read_table
 
 #: floor(1e6 · A²(2-sample) 5% asymptotic critical value), Pettitt /
 #: Scholz-Stephens k=2 table
 _AD2_CRIT_E6 = 2_492_000
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -90,15 +80,10 @@ def _ad2_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "anderson_darling_2sample",
+sql_query(
+    "anderson_darling_2sample", _ad2_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_ad2_sql("duck"),
-)
-def q_anderson_darling_2sample(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-sample Anderson-Darling test (Pettitt's ECDF form) between
+    doc="""Two-sample Anderson-Darling test (Pettitt's ECDF form) between
     BUILDING and MACHINERY order values: A² = (N/nm)·Σ_z c_z·(m·F_a −
     n·F_b)²ₙₘ/(H(N−H)) over the distinct $10 buckets (last stratum
     excluded where H = N) — the 1/(H(1−H)) weight is what makes AD the
@@ -112,9 +97,8 @@ def q_anderson_darling_2sample(
     Scale: the r9a two-group histogram device — one aggregation +
     bounded-frame cumulatives; 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_ad2_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -177,13 +161,10 @@ def _ph_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "page_hinkley_drift",
+sql_query(
+    "page_hinkley_drift", _ph_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_ph_sql("duck"),
-)
-def q_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-Hinkley upward mean-shift detector replayed over daily
+    doc="""Page-Hinkley upward mean-shift detector replayed over daily
     revenue: mₜ = Σ(yᵢ − ȳᵢ) with ȳᵢ the RUNNING mean (the classic
     self-normalizing form, δ = 0), PHₜ = mₜ − min_{{i≤t}} mᵢ, alarm
     when PHₜ exceeds λ = 10% of the grand daily mean (a data-scaled
@@ -200,9 +181,8 @@ def q_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: three cumulative windows over the calendar-day frame
     (BOUNDED_FRAME_AUDITED class); 1 row out.
 
-    Reference parity: beyond-reference streaming-analytics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_ph_sql("spark"))
+    Reference parity: beyond-reference streaming-analytics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -272,13 +252,10 @@ def _tsci_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "theil_sen_ci",
+sql_query(
+    "theil_sen_ci", _tsci_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_tsci_sql("duck"),
-)
-def q_theil_sen_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gilbert's 95% confidence interval for Sen's slope on monthly
+    doc="""Gilbert's 95% confidence interval for Sen's slope on monthly
     revenue: the CI endpoints are ORDER STATISTICS of the pairwise
     slopes at ranks (N ∓ C_α)/2 with C_α = z·√(n(n−1)(2n+5)/18) (the
     Mann-Kendall variance; one sqrt of an exact integer expression),
@@ -292,9 +269,8 @@ def q_theil_sen_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one month aggregation, a bounded pair join (n ≈ 84 months
     ⇒ ~3.5k pairs), one cumulative; 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_tsci_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -317,13 +293,10 @@ def _taub_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "kendall_tau_b",
+sql_query(
+    "kendall_tau_b", _taub_sql, "lineitem",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_taub_sql("duck"),
-)
-def q_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall's tau-b between discount and quantity — the
+    doc="""Kendall's tau-b between discount and quantity — the
     tie-CORRECTED association that completes the tau family from the
     single ``kendall_tau_cells`` value-cell device: tau-a divides by
     all pairs (tie-dragged toward 0), gamma excludes ties entirely
@@ -335,9 +308,8 @@ def q_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to ``kruskal_gamma`` — bounded cell cross, 1 row.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(_taub_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -415,13 +387,10 @@ def _mp_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "median_polish_lite",
+sql_query(
+    "median_polish_lite", _mp_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_mp_sql("duck"),
-)
-def q_median_polish_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey median polish of the month × segment revenue grid
+    doc="""Tukey median polish of the month × segment revenue grid
     (complete months only), two row/column sweeps unrolled: row
     medians subtracted (the 5-segment median is exactly rank 3 under
     the (value, segment) total order — no interpolation), then column
@@ -435,6 +404,5 @@ def q_median_polish_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one month×segment aggregation; four partitioned windows
     over the bounded grid (≤ 5·#months rows); 5 rows out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_mp_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)

@@ -32,22 +32,12 @@ Reference parity: beyond-reference statistics/EVT tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .catalog import query
+from .catalog import sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
-from .sources.parquet import read_table
 
 _CHI2_DF2_E6 = 5_991_464
 _CHI2_DF4_E6 = 9_487_729
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -129,13 +119,10 @@ def _xi_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "chatterjee_xi",
+sql_query(
+    "chatterjee_xi", _xi_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_xi_sql("duck"),
-)
-def q_chatterjee_xi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chatterjee's ξ coefficient between daily order count and daily
+    doc="""Chatterjee's ξ coefficient between daily order count and daily
     revenue, BOTH directions: order the days by the conditioning
     variable (ties broken by calendar day — deterministic, both
     engines), rank each day's response (r = #≤, ℓ = #≥, tie-exact),
@@ -150,9 +137,8 @@ def q_chatterjee_xi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair expansion); the consecutive-|Δr| join is an offset equi-join
     on the bounded calendar index.  2 rows out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_xi_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -208,13 +194,10 @@ def _lepage_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "lepage_test",
+sql_query(
+    "lepage_test", _lepage_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_lepage_sql("duck"),
-)
-def q_lepage_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lepage's combined location-scale test between BUILDING and
+    doc="""Lepage's combined location-scale test between BUILDING and
     MACHINERY order values: L = z²_Wilcoxon + z²_Ansari vs χ²₂, both
     z² assembled from ONE $10-bucket histogram pass with the exact
     finite-sampling moments — for a statistic S₁ = Σ_g1 s(v), under
@@ -226,9 +209,8 @@ def q_lepage_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the r9a histogram device, one moment pass, 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_lepage_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -294,13 +276,10 @@ def _quade_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "quade_test",
+sql_query(
+    "quade_test", _quade_sql, "orders", "customer",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_quade_sql("duck"),
-)
-def q_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quade's weighted repeated-measures test on the month × segment
+    doc="""Quade's weighted repeated-measures test on the month × segment
     revenue grid (complete months): within-month ranks r (strict, the
     ``friedman_test`` frame), blocks weighted by the RANK of their
     revenue RANGE (months where segments genuinely differ count more
@@ -312,9 +291,8 @@ def q_quade_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one grid aggregation; per-month windows (5 rows each) and
     one bounded month-rank window; 1 row out.
 
-    Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(_quade_sql("spark"))
+    Reference parity: beyond-reference statistics tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -372,13 +350,10 @@ def _gumbel_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "gumbel_block_maxima",
+sql_query(
+    "gumbel_block_maxima", _gumbel_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_gumbel_sql("duck"),
-)
-def q_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel fit of 30-day block maxima of daily revenue by method of
+    doc="""Gumbel fit of 30-day block maxima of daily revenue by method of
     moments: σ̂ = s√6/π and μ̂ = m̄ − γσ̂ with π and Euler's γ as
     shared double LITERALS.  (Round-11 fix, caught by
     tools/stat_audit.py's independent replay: the sample variance
@@ -397,9 +372,8 @@ def q_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day aggregation → one 30-day block max aggregation
     (both map-side combinable); 1 row out.
 
-    Reference parity: beyond-reference EVT tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_gumbel_sql("spark"))
+    Reference parity: beyond-reference EVT tier.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -453,13 +427,10 @@ def _pot_sql(dialect: str) -> str:
     """
 
 
-@query(
-    "pot_mean_excess",
+sql_query(
+    "pot_mean_excess", _pot_sql, "orders",
     registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
-    oracle=_pot_sql("duck"),
-)
-def q_pot_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peaks-over-threshold tail diagnosis of daily revenue: threshold
+    doc="""Peaks-over-threshold tail diagnosis of daily revenue: threshold
     u = the rank-defined P90 (first distinct value whose cumulative
     count reaches 90% — no interpolation), excesses e = y − u, and the
     generalized-Pareto method-of-moments fit ξ = (1 − m̄²/s²)/2,
@@ -474,6 +445,5 @@ def q_pot_mean_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one day aggregation, one bounded distinct-value cumulative
     for the threshold, one excess-moment pass; 1 row out.
 
-    Reference parity: beyond-reference EVT tier."""
-    _views(spark, sf_dir, "orders")
-    return spark.sql(_pot_sql("spark"))
+    Reference parity: beyond-reference EVT tier.""",
+)

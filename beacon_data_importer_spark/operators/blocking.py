@@ -28,11 +28,11 @@ COMPLETENESS (no true pair is ever missed) is a theorem, not a tuning
 choice — so downstream oracles (exhaustive-join SQL) remain valid no
 matter what the data looks like.  EFFICIENCY depends on segment-value
 entropy: on name-like text the candidate stream grows ~linearly in
-rows (demonstrated in ``tools/scale_probe.py``); on the testdata's
+rows (PERF.md, "Exact segment blocking" growth curves); on the testdata's
 ``Customer#%09d`` names the digits carry almost no entropy and blocking
 honestly degenerates toward the coarse-key stream (the same negative
-result the round-2 PassJoin probe measured — see
-``tools/passjoin_probe.py``).
+result the round-2 PassJoin probe measured — see PERF.md,
+"Segment-blocking (PassJoin) probe").
 
 A dataset-wide common prefix (``Customer#…``) is stripped before
 segmentation: for strings sharing an identical prefix P,

@@ -117,7 +117,7 @@ def minhash_signatures(
     against a literal coefficient array.  The earlier form (one
     ``zip_with``+``array_min`` per seed) re-traversed the x/y arrays 16
     times — the one-pass fold measured ~17% faster at sf0.1 and the gap
-    grows with shingle count (tools/minhash_onepass_probe.py).
+    grows with shingle count (PERF.md, "Design rules by operator class").
 
     Output: (id, sig array<bigint>).  Narrow, no shuffle; fixed-size
     signatures regardless of doc size.  Every step is reproducible in

@@ -99,9 +99,10 @@ def assign_cells(
     rows (embedding payloads included) just to pick one per vector;
     measured ~2× faster on a 100k×20-cell probe locally and the shuffle
     saving is the real win at cluster scale
-    (tools/ivf_assign_probe.py).  Tie-break matches the window form:
-    highest similarity, then lowest cell_id (ascending-cid fold with a
-    strict ``>`` keeps the earlier cell on ties).
+    (PERF.md, "Design rules by operator class").  Tie-break matches
+    the window form: highest similarity, then lowest cell_id
+    (ascending-cid fold with a strict ``>`` keeps the earlier cell on
+    ties).
 
     Output: corpus columns + cell_id + cell_sim_e6.
     """

@@ -1,6 +1,6 @@
 from .csv import read_csv_stringly, write_csv, write_csv_single
 from .jsonl import read_jsonl, read_orc, write_jsonl, write_orc
-from .parquet import load_tables, read_table
+from .parquet import read_table
 
 __all__ = [
     "read_csv_stringly",
@@ -10,6 +10,5 @@ __all__ = [
     "write_jsonl",
     "read_orc",
     "write_orc",
-    "load_tables",
     "read_table",
 ]

@@ -12,19 +12,6 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table (lazy; pruning/pushdown handled by Catalyst).
@@ -114,17 +101,3 @@ def register_views(
         else:
             df = read_table(spark, sf_dir, t)
         df.createOrReplaceTempView(t)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Scan several tables and register each as a temp view so plans can
-    be written in Spark SQL (the reference's Postgres stage analogue,
-    SURVEY §2.9 S7/M1)."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -11,8 +11,11 @@ in the next CORRECTNESS_r{N}.json.
 
 from __future__ import annotations
 
+import ast
+import glob
 import importlib.util
 import os
+import re
 import sys
 
 import pytest
@@ -114,3 +117,121 @@ def test_registered_query_matches_oracle(spark, duck, spark_results, name):
     if sh != dh:
         diff = [(a, b) for a, b in zip(slines, dlines) if a != b][:3]
         pytest.fail(f"{name}: value hash mismatch; first diffs {diff}")
+
+
+# ---------------------------------------------------------------------------
+# Source guards over the catalog modules (AST only — no Spark session)
+# ---------------------------------------------------------------------------
+
+_CATALOG_SOURCES = sorted(
+    glob.glob(
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "beacon_data_importer_spark",
+            "catalog*.py",
+        )
+    )
+)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read())
+
+
+def test_catalog_modules_have_no_unused_imports():
+    """No linter runs in CI: this is the unused-import gate for the
+    catalog modules (every ``from … import`` name must be referenced)."""
+    dead = {}
+    for path in _CATALOG_SOURCES:
+        tree = _parse(path)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        names = [
+            f"{node.lineno}:{a.asname or a.name}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.module != "__future__"
+            for a in node.names
+            if (a.asname or a.name) not in used
+        ]
+        if names:
+            dead[os.path.basename(path)] = names
+    assert not dead, f"unused imports: {dead}"
+
+
+def _plain_view_registration(stmt: ast.stmt) -> bool:
+    """True for a statement ``register_views`` reproduces exactly: a
+    ``register_views``/``_views`` call, or ``read_table(...)`` +
+    ``createOrReplaceTempView`` of tables without a parallel key (those
+    two take the split-gated scan in ``register_views``, so a plain
+    ``read_table`` view of them is a different plan)."""
+    from beacon_data_importer_spark.sources.parquet import _PARALLEL_KEY
+
+    src = ast.unparse(stmt)
+    views = r"(_views|register_views)\(spark, sf_dir(, '\w+')*\)"
+    if re.fullmatch(views, src):
+        return True
+    if isinstance(stmt, ast.For):
+        m = re.fullmatch(
+            r"for (\w+) in \(((?:'\w+',? ?)+)\):\n    "
+            r"read_table\(spark, sf_dir, \1\)\.createOrReplaceTempView\(\1\)",
+            src,
+        )
+        tables = re.findall(r"'(\w+)'", m.group(2)) if m else []
+    else:
+        m = re.fullmatch(
+            r"read_table\(spark, sf_dir, '(\w+)'\)"
+            r"\.createOrReplaceTempView\('\1'\)",
+            src,
+        )
+        tables = [m.group(1)] if m else []
+    return bool(m) and not set(tables) & set(_PARALLEL_KEY)
+
+
+def test_pure_sql_queries_register_through_sql_query():
+    """Ratchet: an ``@query`` whose body only registers views and
+    returns ``spark.sql(R("spark"))`` with ``oracle=R("duck")`` is
+    exactly ``sql_query(name, R, *tables)`` — write it that way."""
+    hand_written = []
+    for path in _CATALOG_SOURCES:
+        for fn in _parse(path).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            oracle = next(
+                (
+                    k.value
+                    for d in fn.decorator_list
+                    if isinstance(d, ast.Call) and ast.unparse(d.func) == "query"
+                    for k in d.keywords
+                    if k.arg == "oracle"
+                ),
+                None,
+            )
+            if not (
+                isinstance(oracle, ast.Call)
+                and isinstance(oracle.func, ast.Name)
+                and [ast.unparse(a) for a in oracle.args] == ["'duck'"]
+            ):
+                continue
+            body = fn.body[1:] if ast.get_docstring(fn) else fn.body
+            if ast.unparse(body[-1]) == (
+                f"return spark.sql({oracle.func.id}('spark'))"
+            ) and all(_plain_view_registration(s) for s in body[:-1]):
+                hand_written.append(f"{os.path.basename(path)}:{fn.name}")
+    assert not hand_written, f"use sql_query for: {hand_written}"
+
+
+def test_sql_query_keeps_query_metadata():
+    """A ``sql_query`` registration looks like the ``@query`` function
+    it replaced: same module, ``q_<name>``, docstring, duck-rendered
+    oracle (QUERIES.md and the driver read these)."""
+    import __spark_entry__ as entry
+    from beacon_data_importer_spark import catalog_r9f
+
+    fn = entry.queries()["trigram_novelty_curve"]
+    assert fn.__module__.endswith("catalog_r9f")
+    assert fn.__name__ == "q_trigram_novelty_curve"
+    assert (fn.__doc__ or "").strip()
+    assert (
+        entry.oracle_sql()["trigram_novelty_curve"]
+        == catalog_r9f._novelty_sql("duck")
+    )

@@ -60,7 +60,9 @@ def test_round11_queries_all_have_audits():
         src = open(m.__file__).read()
         import re
 
-        r11 += re.findall(r'@query\(\s*\n?\s*"([a-z0-9_]+)"', src)
+        r11 += re.findall(
+            r'^(?:@query|sql_query)\(\s*\n?\s*"([a-z0-9_]+)"', src, re.M
+        )
     missing = [q for q in r11 if q not in mod.AUDITS]
     assert len(r11) == 24, f"expected 24 r11 queries, found {len(r11)}"
     assert not missing, f"r11 queries without a stat_audit replay: {missing}"

@@ -28,12 +28,14 @@ SLOT_CAP = 50
 
 
 def _rotation_candidates() -> set[str]:
-    """Queries whose decorator comment marks them as next-round
-    rotation candidates."""
+    """Queries whose ``@query``/``sql_query`` comment marks them as
+    next-round rotation candidates."""
     out: set[str] = set()
     pat = re.compile(
-        r'@query\(\s*\n\s*"([^"]+)",\s*\n\s*registered=False,'
+        r'^(?:@query|sql_query)\(\s*\n\s*"([^"]+)",[^\n]*\n'
+        r"\s*registered=False,"
         r"[^\n]*rotation candidate",
+        re.M,
     )
     pkg = os.path.join(REPO, "beacon_data_importer_spark")
     for fn in sorted(os.listdir(pkg)):
