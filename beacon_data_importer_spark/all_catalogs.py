@@ -26,6 +26,5 @@ for _mod in sorted(
     importlib.import_module(f"beacon_data_importer_spark.{_mod}")
 
 QUERIES = catalog.QUERIES
-EXTRA_QUERIES = catalog.EXTRA_QUERIES
 ORACLES = catalog.ORACLES
-EXTRA_ORACLES = catalog.EXTRA_ORACLES
+DRIVER_SLOTS = catalog.DRIVER_SLOTS

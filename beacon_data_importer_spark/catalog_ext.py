@@ -69,7 +69,6 @@ def _duck_minhash_sig_cte(source: str = "documents") -> str:
 
 @query(
     "dedup_exact",
-    registered=False,  # driver-proven green in CORRECTNESS_r01; slot rotated (see module docstring)
     oracle="""
     SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
            count(*) AS dup_count
@@ -100,7 +99,6 @@ def _docs_parallel(
 
 @query(
     "minhash_signatures",
-    registered=False,
     oracle=f"""
     WITH {_duck_minhash_sig_cte()}
     SELECT id AS doc_id,
@@ -136,7 +134,6 @@ def _duck_band_exprs() -> str:
 
 @query(
     "minhash_near_dup",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH {_duck_minhash_sig_cte()},
     banded AS MATERIALIZED ({_duck_band_exprs()}),
@@ -188,7 +185,6 @@ _DUCK_SIMHASH = f"""
 
 @query(
     "simhash",
-    registered=False,  # driver-proven green in CORRECTNESS_r01; slot rotated (see module docstring)
     oracle=f"""
     SELECT doc_id, {_DUCK_SIMHASH} AS simhash FROM documents
     """,
@@ -206,7 +202,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprint",
-    registered=False,
     oracle="""
     SELECT doc_id,
       md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
@@ -232,7 +227,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "similarity_topk",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to a round-3 query (see catalog.py docstring)
     oracle="""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
                FROM embeddings WHERE vec_id IN (0, 1, 2)),
@@ -265,7 +259,6 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_assign",
-    registered=False,
     oracle="""
     WITH cent AS (SELECT vec_id AS cell_id, embedding AS cvec
                   FROM embeddings WHERE vec_id % 100 = 0)
@@ -322,7 +315,6 @@ _DUCK_PUNCTRATIO = """
 
 @query(
     "text_quality",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to a round-3 query (see catalog.py docstring)
     oracle=f"""
     SELECT doc_id,
       CAST({_DUCK_NTOK} AS INT) AS n_tok_ws,
@@ -356,7 +348,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_id",
-    registered=False,
     oracle=f"""
     SELECT doc_id, lang,
       CASE WHEN {_DUCK_STOPRATIO} > 0.05 THEN 'en' ELSE 'xx' END AS pred_lang
@@ -376,7 +367,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_windowed",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT date_trunc('hour', ts) AS window_start, event_type,
       count(*) AS n_events,
@@ -400,7 +390,6 @@ def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_sessionize",
-    registered=False,
     oracle="""
     WITH flagged AS (
       SELECT user_id, ts, event_id,
@@ -453,7 +442,6 @@ def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_decode",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
     oracle="""
     WITH m AS (
       SELECT doc_id AS media_id,
@@ -493,7 +481,6 @@ _DUCK_SHD = f"list_distinct({_DUCK_SHINGLES.strip()})"
 
 @query(
     "ngram_jaccard_pairs",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {_duck_minhash_sig_cte()},
     banded AS MATERIALIZED ({_duck_band_exprs()}),
@@ -557,7 +544,6 @@ _CLEAN_TAU_POS = 8  # est_jaccard >= 0.5  ⇔  >= 8 of 16 signature positions eq
 
 @query(
     "corpus_clean",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH filt AS (
       SELECT doc_id, text,

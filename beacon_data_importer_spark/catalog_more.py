@@ -25,7 +25,6 @@ from .sources.parquet import read_table, read_table_parallel, register_views
 
 @query(
     "semi_join",
-    registered=False,
     oracle="""
     SELECT c_custkey AS custkey, c_name AS name
     FROM customer c
@@ -44,7 +43,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "asof_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to a round-3 query (see catalog.py docstring)
     oracle="""
     SELECT orderkey, custkey, asof_event, asof_ts FROM (
       SELECT o.o_orderkey AS orderkey, o.o_custkey AS custkey,
@@ -89,7 +87,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "range_join_pairs",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to a round-3 query (see catalog.py docstring)
     oracle="""
     SELECT e1.user_id, count(*) AS n_pairs
     FROM events e1 JOIN events e2
@@ -129,7 +126,6 @@ def q_range_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "distinct_count",
-    registered=False,
     oracle="""
     SELECT c_mktsegment AS segment,
            count(DISTINCT c_nationkey) AS n_nations,
@@ -148,7 +144,6 @@ def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "topk_per_group",
-    registered=False,
     oracle="""
     SELECT o_custkey AS custkey, o_orderkey AS orderkey,
            CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
@@ -183,7 +178,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "exact_quantiles",
-    registered=False,
     oracle="""
     SELECT l_returnflag AS returnflag,
       CAST(floor(quantile_cont(l_quantity, 0.5) * 100) AS BIGINT)
@@ -211,7 +205,6 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hopping_window",
-    registered=False,
     oracle="""
     WITH contrib AS (
       SELECT time_bucket(INTERVAL '30 minutes', ts) AS w, event_type FROM events
@@ -282,7 +275,6 @@ def _spark_bucket() -> F.Column:
 
 @query(
     "vector_lsh_near_dup",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH b AS (
       SELECT vec_id, embedding, {_duck_bucket()} AS bucket FROM embeddings
@@ -323,7 +315,6 @@ def q_vector_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_search",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH cent AS (SELECT vec_id AS cell_id, embedding AS cvec
                   FROM embeddings WHERE vec_id % 100 = 0),
@@ -424,7 +415,6 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skew_salted_agg",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT l_returnflag AS returnflag,
       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
@@ -460,7 +450,6 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "grouped_zscore_pandas",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to a round-3 query (see catalog.py docstring)
     oracle="""
     WITH stats AS (
       SELECT o_custkey,
@@ -531,7 +520,6 @@ def q_grouped_zscore_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scd2_merge",
-    registered=False,  # driver-proven green in CORRECTNESS_r01+r02; slot rotated to fuzzy_pairs_blocked (see catalog.py docstring)
     oracle="""
     WITH upd AS (
       SELECT o_custkey AS custkey, 'BIG SPENDER' AS segment,
@@ -573,7 +561,6 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "high_cardinality_agg",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT l_orderkey AS orderkey, count(*) AS n_lines,
       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
@@ -594,7 +581,6 @@ def q_high_cardinality_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_window_native",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH flagged AS (
       SELECT user_id, ts,
@@ -636,7 +622,6 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pivot_events",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT user_id,
       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
@@ -671,7 +656,6 @@ def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unpivot_metrics",
-    registered=False,
     oracle="""
     SELECT o_orderkey AS orderkey, 'price_cents' AS metric,
            CAST(round(o_totalprice * 100) AS BIGINT) AS value
@@ -695,7 +679,6 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "intersect_except",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH a AS (SELECT c_mktsegment AS segment FROM customer WHERE c_custkey % 2 = 0),
     b AS (SELECT c_mktsegment AS segment FROM customer WHERE c_acctbal > 0)
@@ -723,7 +706,6 @@ def q_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "exists_correlated",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT o.o_orderpriority AS priority, count(*) AS order_count
     FROM orders o
@@ -754,7 +736,6 @@ def q_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_count_distribution",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH c_orders AS (
       SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -781,7 +762,6 @@ def q_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "notin_distinct_suppliers",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT p.p_brand AS brand, p.p_type AS type,
            count(DISTINCT l.l_suppkey) AS supplier_cnt
@@ -894,7 +874,6 @@ def _duck_kmeans_ctes() -> str:
 
 @query(
     "kmeans_clusters",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {_duck_kmeans_ctes()}
     SELECT vec_id, cluster, CAST(floor(dist * 1e6) AS BIGINT) AS dist_e6
@@ -921,7 +900,6 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_kmeans_search",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {{kmeans_ctes}},
     asg AS (SELECT vec_id, ev, cluster FROM fin WHERE rn = 1),
@@ -1004,7 +982,6 @@ def q_ivf_kmeans_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "click_attribution",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT c.event_id AS click_id, p.event_id AS purchase_id,
            c.user_id AS user_id,
@@ -1060,7 +1037,6 @@ def q_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_profile_score",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH base AS (
       SELECT doc_id, lower(trim(text)) AS t,
@@ -1116,7 +1092,6 @@ def q_lang_profile_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "max_order_per_customer",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT o.o_orderkey AS orderkey, o.o_custkey AS custkey,
            CAST(round(o.o_totalprice * 100, 0) AS BIGINT) AS totalprice_cents
@@ -1146,7 +1121,6 @@ def q_max_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "small_quantity_revenue",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT CAST(sum(round(l.l_extendedprice * 100, 0)) AS BIGINT)
              AS revenue_cents,
@@ -1178,7 +1152,6 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "grouping_sets_revenue",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT
       CASE WHEN GROUPING(o_orderpriority) = 0 THEN o_orderpriority END
@@ -1221,7 +1194,6 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "running_totals",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT o_custkey AS custkey, o_orderkey AS orderkey,
       CAST(sum(round(o_totalprice * 100, 0)) OVER (
@@ -1266,7 +1238,6 @@ def q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cube_revenue",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT
       CASE WHEN GROUPING(o_orderpriority) = 0 THEN o_orderpriority END
@@ -1303,7 +1274,6 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fuzzy_name_pairs",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT l.c_custkey AS custkey_a, r.c_custkey AS custkey_b,
            CAST(levenshtein(l.c_name, r.c_name) AS INT) AS edit_dist
@@ -1339,7 +1309,6 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "regex_extract_tokens",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT tok, count(*) AS cnt
     FROM (
@@ -1368,7 +1337,6 @@ def q_regex_extract_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "waiting_customers_q22",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH thr AS (
       SELECT floor(avg(round(c_acctbal * 100))) AS t

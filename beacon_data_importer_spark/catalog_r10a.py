@@ -169,7 +169,7 @@ def _qn_sql(dialect: str, par: int | None = None) -> str:
     """
 
 
-@query("qn_scale_estimator", registered=False, oracle=_qn_sql("duck"))
+@query("qn_scale_estimator", oracle=_qn_sql("duck"))
 def q_qn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rousseeuw-Croux Qn scale of daily revenue: the k-th smallest of
     the C(n,2) pairwise absolute gaps, k = C(⌊n/2⌋+1, 2), scaled by
@@ -275,7 +275,7 @@ def _sn_sql(dialect: str) -> str:
     """
 
 
-@query("sn_scale_estimator", registered=False, oracle=_sn_sql("duck"))
+@query("sn_scale_estimator", oracle=_sn_sql("duck"))
 def q_sn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rousseeuw-Croux Sn scale of daily revenue: the low median over
     i of the high median over j of |yᵢ−yⱼ|, scaled by c = 1.1926.
@@ -401,7 +401,6 @@ def _bwmv_sql(dialect: str) -> str:
 
 sql_query(
     "biweight_midvariance", _bwmv_sql, "orders",
-    registered=False,
     doc="""Tukey's biweight midvariance of daily revenue with the standard
     9·MAD tuning radius: u = (y−M)/(9·MAD), BWMV = n·Σ_{|u|<1}
     (y−M)²(1−u²)⁴ / (Σ(1−u²)(1−5u²))² — the robust variance that
@@ -454,7 +453,6 @@ def _trimean_sql(dialect: str) -> str:
 
 sql_query(
     "trimean_bowley_skew", _trimean_sql, "orders",
-    registered=False,
     doc="""Tukey's trimean (Q1+2M+Q3)/4 and Bowley's quartile skewness
     (Q3+Q1−2M)/(Q3−Q1) of daily revenue, from exact HINGE order
     statistics: M at rank ⌈n/2⌉, hinges at rank ⌈(⌈n/2⌉+1)/2⌉ from
@@ -505,7 +503,6 @@ def _medcouple_sql(dialect: str) -> str:
 
 sql_query(
     "medcouple_skew_lite", _medcouple_sql, "orders",
-    registered=False,
     doc="""Medcouple robust skewness of daily revenue: the median of the
     kernel h(xᵢ,xⱼ) = ((xⱼ−M)−(M−xᵢ))/(xⱼ−xᵢ) over pairs with
     xᵢ < M < xⱼ.  LITE convention: observations exactly AT the median
@@ -565,7 +562,6 @@ def _hampel_sql(dialect: str) -> str:
 
 sql_query(
     "hampel_outlier_flags", _hampel_sql, "orders",
-    registered=False,
     doc="""Hampel identifier over daily revenue: a ±7-day rolling window
     median and rolling MAD per day, flagging |y − med| > 3·1.4826·MAD
     (the gate held as the exact integer cross-multiplication
@@ -629,7 +625,7 @@ def _siegel_sql(dialect: str) -> str:
     """
 
 
-@query("repeated_median_slope", registered=False, oracle=_siegel_sql("duck"))
+@query("repeated_median_slope", oracle=_siegel_sql("duck"))
 def q_repeated_median_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Siegel's repeated median regression of daily revenue on time:
     slope = med_i med_{j≠i} (yⱼ−yᵢ)/(tⱼ−tᵢ), intercept = med(yᵢ −
@@ -786,7 +782,6 @@ def _yuen_sql(dialect: str) -> str:
 
 sql_query(
     "yuen_trimmed_t", _yuen_sql, "orders", "customer",
-    registered=False,
     doc="""Yuen-Welch robust two-sample test between BUILDING and
     MACHINERY order values: 20%-trimmed means compared with
     winsorized variances, t = (x̄ₜ₁−x̄ₜ₂)/√(d₁+d₂) with dⱼ =

@@ -99,7 +99,6 @@ def _vn_sql(dialect: str) -> str:
 
 sql_query(
     "von_neumann_ratio", _vn_sql, "orders",
-    registered=False,
     doc="""Von Neumann ratio of daily revenue: η = Σ(Δy)²/Σ(y−ȳ)², the
     mean-square-successive-difference test.  η ≈ 2 under serial
     independence, < 2 under positive autocorrelation (smooth trend),
@@ -154,7 +153,6 @@ def _bartels_sql(dialect: str) -> str:
 
 sql_query(
     "bartels_rank_test", _bartels_sql, "orders",
-    registered=False,
     doc="""Bartels' rank version of the von Neumann ratio on daily
     revenue: RVN = Σ(rₜ₊₁−rₜ)² / Σ(r−r̄)², with ranks assigned by
     (value, day) row_number — a deterministic permutation, so the
@@ -217,7 +215,6 @@ def _fs_sql(dialect: str) -> str:
 
 sql_query(
     "foster_stuart_records", _fs_sql, "orders",
-    registered=False,
     doc="""Foster-Stuart records test on daily revenue: uₜ = 1 iff day t
     sets a new maximum, lₜ = 1 iff a new minimum; D = Σ(u−l) reads
     trend (records should split evenly under stationarity), S =
@@ -292,7 +289,6 @@ def _mosum_sql(dialect: str) -> str:
 
 sql_query(
     "mosum_changepoint", _mosum_sql, "orders",
-    registered=False,
     doc="""MOSUM break scan over daily revenue: for every day t with full
     flanks, the moving-sum contrast |Σ(next {_MOSUM_G} days) −
     Σ(last {_MOSUM_G} days)|, maximized over t (ties → earliest day),
@@ -349,7 +345,6 @@ def _rud_sql(dialect: str) -> str:
 
 sql_query(
     "runs_up_down_test", _rud_sql, "orders",
-    registered=False,
     doc="""Runs-up-and-down test on daily revenue: successive differences
     become a ±1 direction sequence (zero differences dropped — the
     standard tie treatment), R = 1 + number of direction changes,
@@ -432,7 +427,7 @@ def _damp_duck_sql() -> str:
     """
 
 
-@query("holt_damped_forecast", registered=False, oracle=_damp_duck_sql())
+@query("holt_damped_forecast", oracle=_damp_duck_sql())
 def q_holt_damped_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt smoothing with a DAMPED trend (Gardner-McKenzie, φ=0.9) on
     monthly revenue: lₜ = αyₜ + (1−α)(l+φb), bₜ = β(lₜ−l) + (1−β)φb,
@@ -537,7 +532,7 @@ def _theta_duck_sql() -> str:
     """
 
 
-@query("theta_forecast", registered=False, oracle=_theta_duck_sql())
+@query("theta_forecast", oracle=_theta_duck_sql())
 def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta(0,2) forecast of monthly revenue (Assimakopoulos &
     Nikolopoulos; the M3-competition winner): decompose into the OLS
@@ -606,7 +601,6 @@ def _sstrength_sql(dialect: str) -> str:
 
 sql_query(
     "seasonal_strength_audit", _sstrength_sql, "orders",
-    registered=False,
     doc="""Wang-Smith-Hyndman decomposition-strength features from the
     ``stl_decomposition_lite`` components: F_s = max(0, 1 −
     Var(R)/Var(S+R)) and F_t = max(0, 1 − Var(R)/Var(T+R)) over the

@@ -156,7 +156,6 @@ def _bowker_sql(dialect: str) -> str:
 
 sql_query(
     "bowker_symmetry_test", _bowker_sql, "orders",
-    registered=False,
     doc="""Bowker's symmetry test on the 5×5 order-priority transition
     table (each customer's first-order priority, 1997 → 1998):
     χ² = Σ_{{i<j}} (nᵢⱼ−nⱼᵢ)²/(nᵢⱼ+nⱼᵢ), df = off-diagonal pairs
@@ -235,7 +234,6 @@ def _sm_sql(dialect: str) -> str:
 
 sql_query(
     "stuart_maxwell_test", _sm_sql, "orders",
-    registered=False,
     doc="""Stuart-Maxwell marginal-homogeneity test on the collapsed 3×3
     priority transition table (high = urgent/high, med, low): with
     d = (r₁−c₁, r₂−c₂) and the 2×2 covariance S (Sᵢᵢ = rᵢ+cᵢ−2nᵢᵢ,
@@ -284,7 +282,6 @@ def _lambda_sql(dialect: str) -> str:
 
 sql_query(
     "lambda_goodman_kruskal", _lambda_sql, "customer", "nation", "region",
-    registered=False,
     doc="""Goodman-Kruskal λ over the region × market-segment table:
     λ(Y|X) = (Σₓ maxᵧ n_xy − maxᵧ n_·y)/(N − maxᵧ n_·y) — the
     proportional reduction in MODAL prediction error from knowing the
@@ -335,7 +332,6 @@ def _gk_tau_sql(dialect: str) -> str:
 
 sql_query(
     "goodman_kruskal_tau", _gk_tau_sql, "customer", "nation", "region",
-    registered=False,
     doc="""Goodman-Kruskal τ(Y|X) over the same region × segment table as
     ``lambda_goodman_kruskal``: the PRE measure under PROPORTIONAL
     prediction — τ = (N·Σₓ(Σᵧn²ₓᵧ/nₓ·) − Σᵧn²·ᵧ)/(N² − Σᵧn²·ᵧ).
@@ -391,7 +387,6 @@ def _theil_u_sql(dialect: str) -> str:
 
 sql_query(
     "theil_uncertainty_coeff", _theil_u_sql, "customer", "nation", "region",
-    registered=False,
     doc="""Theil's uncertainty coefficient U(Y|X) = I(X;Y)/H(Y) on the
     region × segment table: the fraction of the segment distribution's
     entropy explained by region.  Completes the PRE triple — λ (mode),
@@ -445,7 +440,6 @@ def _yule_sql(dialect: str) -> str:
 
 sql_query(
     "yules_q_y", _yule_sql, "lineitem",
-    registered=False,
     doc="""Yule's Q and colligation coefficient Y for the 2×2 association
     between returned lineitems and large quantities (> 25): Q =
     (ad−bc)/(ad+bc) — the odds ratio mapped onto [−1,1] — and Y =
@@ -533,7 +527,6 @@ def _newcombe_sql(dialect: str) -> str:
 
 sql_query(
     "newcombe_diff_ci", _newcombe_sql, "orders", "customer",
-    registered=False,
     doc="""Newcombe-Wilson 95% CI for the DIFFERENCE in urgent-order share
     between BUILDING and MACHINERY customers: take each segment's
     Wilson interval (``wilson_score_interval``'s exact-ppm device,
@@ -618,7 +611,6 @@ def _by_sql(dialect: str) -> str:
 
 sql_query(
     "benjamini_yekutieli_audit", _by_sql, "orders", "lineitem", "customer",
-    registered=False,
     doc="""Benjamini-Yekutieli FDR control (q = 0.10) over the SAME m ≤ 25
     per-nation two-proportion tests as ``fdr_bh_audit``, with the
     harmonic dependence penalty: p₍ᵢ₎ ≤ q·i/(m·c(m)), c(m) = Σ_{{j≤m}}

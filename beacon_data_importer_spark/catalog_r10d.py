@@ -104,7 +104,6 @@ def _core_sql(dialect: str) -> str:
 
 sql_query(
     "hdbscan_core_distances", _core_sql, "embeddings",
-    registered=False,
     doc="""HDBSCAN-style core distances over the IVF-celled corpus: for
     every vector, the distance to its {_CORE_K}-th nearest neighbor
     WITHIN its cell (cosine distance, one ppm floor per pair), rolled
@@ -163,7 +162,6 @@ def _recip_sql(dialect: str) -> str:
 
 sql_query(
     "knn_reciprocity_audit", _recip_sql, "embeddings",
-    registered=False,
     doc="""Reciprocity of the within-cell {_KNN_K}-NN digraph: the share
     of edges a→b with b→a also present.  High-dimensional kNN graphs
     degrade through HUBNESS — a few points appear in everyone's
@@ -248,7 +246,6 @@ def _drift_sql(dialect: str) -> str:
 
 sql_query(
     "centroid_drift_audit", _drift_sql, "embeddings",
-    registered=False,
     doc="""IVF centroid staleness: per cell, the cosine drift (ppm)
     between the STORED centroid and the RECOMPUTED mean of the
     vectors currently assigned to it.  The deterministic hash-picked
@@ -332,7 +329,6 @@ def _overlap_sql(dialect: str) -> str:
 
 sql_query(
     "cosine_dot_topk_overlap", _overlap_sql, "embeddings",
-    registered=False,
     doc="""Per query, the overlap@{_OVERLAP_K} between the cosine-ranked
     and the raw-inner-product-ranked top lists over the corpus.  The
     two metrics agree exactly on unit-norm vectors; any gap measures
@@ -398,7 +394,6 @@ def _contrast_sql(dialect: str) -> str:
 
 sql_query(
     "ann_contrast_audit", _contrast_sql, "embeddings",
-    registered=False,
     doc="""Relative contrast per query: mean corpus cosine distance over
     nearest-neighbor distance (He et al.'s query-difficulty measure).
     RC → 1 is the curse-of-dimensionality regime — the true neighbor
@@ -458,7 +453,6 @@ def _dgini_sql(dialect: str) -> str:
 
 sql_query(
     "graph_degree_gini", _dgini_sql, "lineitem",
-    registered=False,
     doc="""Gini coefficient of the supplier-degree distribution over the
     distinct supplier→part edge set: G = (2Σᵢi·x₍ᵢ₎ − (N+1)Σx)/(NΣx),
     evaluated in the TIE-GROUPED histogram form — a degree value d
@@ -535,7 +529,6 @@ def _planner_sql(dialect: str) -> str:
 
 sql_query(
     "range_partition_planner", _planner_sql, "orders",
-    registered=False,
     doc="""Range-partition boundary plan for orders on o_totalprice:
     {_PLAN_PARTS} boundaries read off the $10-bucket cumulative
     histogram at the i·N/{_PLAN_PARTS} targets, emitted with each
@@ -608,7 +601,6 @@ def _loglen_sql(dialect: str) -> str:
 
 sql_query(
     "doc_length_lognormal_fit", _loglen_sql, "documents",
-    registered=False,
     doc="""Method-of-moments lognormal fit of document lengths: per-doc
     micro-nat floors of ln(n_chars) (the house floored-ln device —
     one deterministic IEEE ln per doc, integer-exact aggregation

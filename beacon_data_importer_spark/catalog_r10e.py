@@ -113,7 +113,6 @@ def _kl_sql(dialect: str) -> str:
 
 sql_query(
     "kl_source_divergence", _kl_sql, "documents",
-    registered=False,
     doc="""Per-source KL divergence from the corpus unigram distribution:
     KL(P̃_s ‖ P_c) with add-1 smoothing on the source side over the
     CORPUS vocab (so every grid term is defined; P̃_s sums to exactly
@@ -186,7 +185,6 @@ def _js_sql(dialect: str) -> str:
 
 sql_query(
     "js_divergence_sources", _js_sql, "documents",
-    registered=False,
     doc="""Pairwise Jensen-Shannon divergence between every source pair's
     unigram distribution: JS = ½KL(A‖M) + ½KL(B‖M), M = (A+B)/2.
     JS needs NO smoothing, and the split exploited here makes it
@@ -265,7 +263,6 @@ def _msttr_sql(dialect: str) -> str:
 
 sql_query(
     "msttr_lexical_diversity", _msttr_sql, "documents",
-    registered=False,
     doc="""Mean segmental type-token ratio per source: each document's
     token stream is cut into consecutive FULL {_MSTTR_SEG}-token
     segments, TTR = distinct/{_MSTTR_SEG} per segment, averaged per
@@ -323,7 +320,6 @@ def _stopchi_sql(dialect: str) -> str:
 
 sql_query(
     "stopword_chi2_drift", _stopchi_sql, "documents",
-    registered=False,
     doc="""χ² homogeneity of the English-stopword token share across
     sources: observed per-source stopword counts vs expectation under
     a common rate, χ² = Σ(o_s − n_s·O/N)²/(n_s·O/N) held exact by the
@@ -374,7 +370,6 @@ def _hapax_sql(dialect: str) -> str:
 
 sql_query(
     "hapax_ratio_by_source", _hapax_sql, "documents",
-    registered=False,
     doc="""Vocabulary-growth fingerprints per source: hapax-legomena share
     V₁/V, Sichel's dis-legomena share V₂/V, and Honoré's richness
     R = 100·ln(N)·V/(V−V₁) (e2, one ln+floor on exact counts; NULL if

@@ -108,7 +108,6 @@ def _cdc_sql(dialect: str) -> str:
 
 sql_query(
     "cdc_chunk_dedup", _cdc_sql, "documents",
-    registered=False,
     doc="""Content-defined chunk dedup over the corpus: each document's
     token stream is cut AFTER every token whose md5 starts in the
     {{0,1}} hex band (P = 1/8 → mean chunk ≈ 8 tokens), chunks are
@@ -192,7 +191,6 @@ def _xsource_sql(dialect: str) -> str:
 
 sql_query(
     "cross_source_ngram_overlap", _xsource_sql, "documents",
-    registered=False,
     doc="""Directed {_NGRAM_N}-gram containment between source pairs:
     |shingles(a) ∩ shingles(b)| / |shingles(a)| for the top-25 most
     contaminated ordered pairs (deterministic tie-break).  The
@@ -231,7 +229,6 @@ def _wdbt_sql(dialect: str) -> str:
 
 sql_query(
     "watermark_dedup_batch_twin", _wdbt_sql, "events",
-    registered=False,
     doc="""Exact per-hour distinct users per event type — the BATCH twin
     of ``streaming/events.py::windowed_distinct_users(exact=True)``,
     whose streaming plan chains ``dropDuplicatesWithinWatermark`` on

@@ -36,7 +36,6 @@ from .sources.parquet import read_table
 
 @query(
     "min_cost_supplier",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
@@ -107,8 +106,6 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "min_cost_supplier_agg",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH ps AS (
       SELECT l_partkey, l_suppkey,
@@ -185,7 +182,6 @@ def q_min_cost_supplier_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_supplier_q15",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH rev AS (
       SELECT l_suppkey AS suppkey,
@@ -274,7 +270,6 @@ def _duck_cc_ctes(iters: int = _CC_ITERS) -> str:
 
 @query(
     "entity_clusters",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH {_duck_cc_ctes()}
     SELECT v AS custkey, lbl AS cluster_id FROM l{_CC_ITERS}
@@ -301,7 +296,6 @@ def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "entity_survivors",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {_duck_cc_ctes()},
     members AS (
@@ -355,8 +349,6 @@ def q_entity_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "entity_golden_records",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle=f"""
     WITH {_duck_cc_ctes()},
     ostats AS (
@@ -429,8 +421,6 @@ def q_entity_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "entity_components",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle="""
     WITH RECURSIVE pairs AS (
       SELECT l.c_custkey AS a, r.c_custkey AS b
@@ -470,7 +460,6 @@ def q_entity_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fuzzy_pairs_blocked",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT l.c_custkey AS custkey_a, r.c_custkey AS custkey_b,
            CAST(levenshtein(l.c_name, r.c_name) AS INT) AS edit_dist
@@ -558,7 +547,6 @@ def _duck_pq_ctes() -> str:
 
 @query(
     "pq_search",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {_duck_pq_ctes()},
     scored AS (
@@ -598,7 +586,6 @@ _PQ_SHORTLIST = 200
 
 @query(
     "pq_search_rerank",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle=f"""
     WITH {_duck_pq_ctes()},
     scored AS (
@@ -646,7 +633,6 @@ def q_pq_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "important_parts_q11",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH pv AS (
       SELECT l.l_partkey AS partkey,
@@ -702,7 +688,6 @@ def q_important_parts_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "blamed_suppliers_q21",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     WITH late AS (
       SELECT l.l_orderkey, l.l_suppkey
@@ -766,7 +751,6 @@ def q_blamed_suppliers_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rolling_30d_spend",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT o_custkey AS custkey,
            CAST(datediff('day', DATE '1970-01-01', o_orderdate) AS BIGINT)
@@ -808,7 +792,6 @@ def q_rolling_30d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ntile_percentiles",
-    registered=False,  # driver-proven green in r01/r02; slot rotated to a round-3 query (rotation policy)
     oracle="""
     SELECT c_custkey AS custkey,
            c_nationkey AS nationkey,
@@ -855,8 +838,6 @@ def _duck_hash64(expr: str, seed: int = 0) -> str:
 
 @query(
     "dataset_split",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, n_chars,
@@ -895,8 +876,6 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_quota_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle=f"""
     SELECT doc_id, source FROM (
       SELECT doc_id, source,
@@ -928,8 +907,6 @@ def q_source_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sequence_packing",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle=f"""
     WITH toks AS (
       SELECT doc_id AS id,
@@ -964,8 +941,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "nation_volume_q7",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle="""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            CAST(year(l.l_shipdate) AS INT) AS ship_year,
@@ -1029,8 +1004,6 @@ def q_nation_volume_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mixture_weighted_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 slot): promoted per rotation policy — no driver row in r01/r02
     oracle=f"""
     WITH rated AS (
       SELECT doc_id, source,

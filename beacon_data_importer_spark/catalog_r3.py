@@ -7,11 +7,9 @@ oracle-replayed) and hard-capacity best-fit-decreasing (per-shard Arrow
 escape hatch, oracle-replayed via a recursive placement CTE) — plus the
 pack-utilization QA histogram.  Sampling gains exact-count stratified
 selection and config-table mixture weights (broadcast-joined, with a
-default-rate fallback).  All new queries are EXTRAS (registered=False):
-the 50 driver slots are occupied this round by the rotation that
-promotes every not-yet-driver-proven query (see catalog.py docstring);
-these run under the local type-sensitive gate and rotate into slots
-next round.
+default-rate fallback).  Whether a query holds one of the 50 driver
+slots is decided by ``catalog.DRIVER_SLOTS``; the rest run under the
+local type-sensitive gate.
 
 Oracle style follows catalog_r2: exact-integer window arithmetic that
 DuckDB replays bit-for-bit, config tables as VALUES CTEs, and
@@ -66,8 +64,6 @@ _SERPENTINE_CTES = f"""
 
 @query(
     "pack_bins_balanced",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_SERPENTINE_CTES + "SELECT id, shard, n_tokens, pack_id FROM packed",
 )
 def q_pack_bins_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,8 +83,6 @@ def q_pack_bins_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_utilization",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_SERPENTINE_CTES
     + """,
     per_pack AS (
@@ -121,8 +115,6 @@ def q_pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_bins_bestfit",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH RECURSIVE base AS (
       SELECT doc_id AS id,
@@ -188,8 +180,6 @@ def q_pack_bins_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stratified_exact_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH targets(lang, target_n) AS (
       VALUES ('en', 150), ('de', 40), ('es', 40), ('fr', 100), ('zh', 30)
@@ -226,8 +216,6 @@ def q_stratified_exact_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mixture_config_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH rates(source, rate_bp) AS (
       VALUES ('src0', 9000), ('src1', 8000), ('src2', 7000), ('src3', 6000),
@@ -279,8 +267,6 @@ def q_mixture_config_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "local_supplier_volume_q5",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT n_name AS nation,
            CAST(sum(round(l_extendedprice * (1 - l_discount) * 100))
@@ -340,8 +326,6 @@ def q_local_supplier_volume_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "forecast_revenue_q6",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT CAST(sum(round(l_extendedprice * l_discount * 100)) AS BIGINT)
              AS revenue_cents,
@@ -378,8 +362,6 @@ def q_forecast_revenue_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "market_share_q8",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH vol AS (
       SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
@@ -460,8 +442,6 @@ def q_market_share_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "product_profit_q9",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
       CAST(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100)
@@ -516,8 +496,6 @@ def q_product_profit_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "returned_items_q10",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT c.c_custkey, c.c_name, n.n_name AS nation,
            CAST(sum(round(l.l_extendedprice * (1 - l.l_discount) * 100))
@@ -567,8 +545,6 @@ def q_returned_items_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "late_lines_priority_q12",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT l.l_linestatus,
       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -615,8 +591,6 @@ def q_late_lines_priority_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "promo_revenue_q14",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT
       CAST(sum(CASE WHEN p.p_type = 'PROMO'
@@ -666,8 +640,6 @@ def q_promo_revenue_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "large_volume_customers_q18",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH big AS (
       SELECT l_orderkey,
@@ -714,8 +686,6 @@ def q_large_volume_customers_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "brand_bracket_revenue_q19",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     SELECT CAST(sum(round(l.l_extendedprice * (1 - l.l_discount) * 100))
                 AS BIGINT) AS revenue_cents,
@@ -775,8 +745,6 @@ def q_brand_bracket_revenue_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "excess_share_suppliers_q20",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH ps AS (
       SELECT l.l_partkey, l.l_suppkey,
@@ -845,8 +813,6 @@ _DUCK_TOKS_Q = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
 @query(
     "gopher_quality_signals",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, {_DUCK_TOKS_Q} AS tk,
@@ -993,8 +959,6 @@ _DUCK_SQ_CTES = """
 
 @query(
     "sq8_search",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH {_DUCK_SQ_CTES}
     SELECT r.vec_id AS neighbor_id,
@@ -1028,8 +992,6 @@ def q_sq8_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sq8_search_rerank",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH {_DUCK_SQ_CTES},
     short AS (
@@ -1072,8 +1034,6 @@ def q_sq8_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontaminate_ngrams",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk
@@ -1112,8 +1072,6 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pii_redaction",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH synth AS (
       SELECT doc_id,

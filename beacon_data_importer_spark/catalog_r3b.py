@@ -22,10 +22,10 @@ curation run actually executes:
     template/boilerplate signal (CCNet/C4-style duplicate-line
     fraction, lifted to shingles because this testdata is single-line).
 
-All queries are EXTRAS (registered=False): the 50 driver slots are full
-this round (rotation policy, catalog.py); the local type-sensitive gate
-(tools/check_oracle.py + tests/test_extra_queries.py) checks them
-against the same DuckDB oracles the driver would run.
+Queries outside ``catalog.DRIVER_SLOTS`` are checked by the local
+type-sensitive gate (tools/check_oracle.py +
+tests/test_extra_queries.py) against the same DuckDB oracles the driver
+would run.
 
 Scale notes are per-query docstrings; none of these plans pair docs
 outside a size-guarded band bucket, none collect to the driver.
@@ -103,8 +103,6 @@ def _doc_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "near_dup_clusters",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH RECURSIVE {_DUCK_DOC_CC}
     SELECT v AS doc_id, lbl AS cluster_id FROM lab
@@ -129,8 +127,6 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "near_dup_keep",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH RECURSIVE {_DUCK_DOC_CC},
     m AS MATERIALIZED (
@@ -233,8 +229,6 @@ def _duck_band_exprs_named(prefix: str) -> str:
 
 @query(
     "incremental_dedup",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH corpus AS (SELECT * FROM documents WHERE source = 'src0'),
     batch AS (SELECT * FROM documents WHERE source <> 'src0'),
@@ -322,8 +316,6 @@ _COMMON_DF = 5  # a shingle in >= this many docs is "corpus-common"
 
 @query(
     "boilerplate_shingle_fraction",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=f"""
     WITH per_doc AS (
       SELECT doc_id, list_distinct({_DUCK_SHINGLES}) AS sh FROM documents
@@ -526,8 +518,6 @@ _DUCK_CURATE_CTES = f"""
 
 @query(
     "corpus_curate",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_DUCK_CURATE_CTES
     + "SELECT doc_id, CAST(n AS BIGINT) AS n_tokens FROM curated",
 )
@@ -730,8 +720,6 @@ def _duck_ivfpq_oracle() -> str:
 
 @query(
     "ivfpq_search",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_duck_ivfpq_oracle(),
 )
 def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,8 +792,6 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "token_length_histogram",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH t AS (
       SELECT CASE WHEN trim(text) = '' THEN 0
@@ -845,8 +831,6 @@ def q_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_mix_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH g AS (
       SELECT source, lang, count(*) AS n_docs,
@@ -975,8 +959,6 @@ def _duck_ivfpq_residual_oracle() -> str:
 
 @query(
     "ivfpq_residual_search",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_duck_ivfpq_residual_oracle(),
 )
 def q_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,8 +1083,6 @@ def q_ivfpq_residual_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "json_payload_extract",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH payloads AS (
       SELECT doc_id,
@@ -1196,8 +1176,6 @@ def q_json_payload_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "flatmap_attempts_udtf",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH base AS (
       SELECT o_orderkey AS orderkey,
@@ -1474,8 +1452,6 @@ def _fit_pq_codebooks(ev) -> list:
 
 @query(
     "pq_kmeans_search_rerank",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_duck_pq_kmeans_oracle(),
 )
 def q_pq_kmeans_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1543,8 +1519,6 @@ def q_pq_kmeans_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "entity_components_star",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH RECURSIVE pairs AS (
       SELECT l.c_custkey AS a, r.c_custkey AS b
@@ -1593,8 +1567,6 @@ def q_entity_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_sample_docs",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle="""
     WITH keyed AS (
       SELECT doc_id, n_chars,
@@ -1634,8 +1606,6 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_to_shards",
-    registered=False,  # driver-proven green in CORRECTNESS_r03; slot rotated (see catalog.py docstring)
-    # registered (round-3 late rotation): never driver-proven; promoted per rotation policy
     oracle=_DUCK_CURATE_CTES
     + """,
     cbase AS (
@@ -1704,7 +1674,6 @@ _CHUNK_STRIDE = 48  # 16-token overlap
 
 @query(
     "chunk_documents",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk,
@@ -1789,7 +1758,6 @@ q_chunk_documents.__doc__ = (q_chunk_documents.__doc__ or "").format(size=_CHUNK
 
 @query(
     "funnel_progression",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH u1 AS MATERIALIZED (
       SELECT user_id, min(ts) AS t1 FROM events

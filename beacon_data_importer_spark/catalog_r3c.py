@@ -47,11 +47,9 @@ Original queries detailed below:
     bipartite graph, in exact e6-scaled integer arithmetic so the
     oracle replays the iterations as chained CTEs.
 
-All are EXTRAS (registered=False): the 50 driver slots were rotated to
-the never-proven queries this round (catalog.py rotation policy); the
-local type-sensitive gate (tools/check_oracle.py via
-tests/test_extra_queries.py) checks them against the DuckDB oracles
-below.
+Queries outside ``catalog.DRIVER_SLOTS`` are checked by the local
+type-sensitive gate (tools/check_oracle.py via
+tests/test_extra_queries.py) against the DuckDB oracles below.
 
 Cross-engine determinism notes (module conventions, catalog.py):
   * BM25 uses the RATIONAL idf variant (N - df + 0.5)/(df + 0.5) —
@@ -105,7 +103,6 @@ _DUCK_PASSAGES = f"""
 
 @query(
     "passage_dedup",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH {_DUCK_PASSAGES},
     mk AS MATERIALIZED (
@@ -168,7 +165,6 @@ _BM25_TOPK = 10
 
 @query(
     "bm25_search",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk,
@@ -273,7 +269,6 @@ q_bm25_search.__doc__ = (q_bm25_search.__doc__ or "").format(terms="/".join(_BM2
 
 @query(
     "cohort_retention",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH weeks AS MATERIALIZED (
       SELECT DISTINCT user_id,
@@ -329,7 +324,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_transitions",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH seq AS MATERIALIZED (
       SELECT user_id, event_type,
@@ -393,7 +387,6 @@ _TOPTERMS_K = 5
 
 @query(
     "source_top_terms",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT source, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk
@@ -495,7 +488,6 @@ def _duck_pr_iter(prev: str, cur: str) -> str:
 
 @query(
     "pagerank_parts",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH raw AS MATERIALIZED (
       SELECT DISTINCT l_partkey * 2 AS p, l_suppkey * 2 + 1 AS s
@@ -606,7 +598,6 @@ q_pagerank_parts.__doc__ = (q_pagerank_parts.__doc__ or "").format(it=_PR_ITERS,
 
 @query(
     "data_quality_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT 'custkey_complete' AS check_name,
            CAST(count(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT)
@@ -710,7 +701,6 @@ def q_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "forward_fill_events",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT event_id, user_id,
            last_value(CASE WHEN event_type = 'purchase' THEN value END
@@ -761,7 +751,6 @@ _TEMP_BUDGET = 200
 
 @query(
     "temperature_mixture_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH counts AS MATERIALIZED (
       SELECT source, count(*) AS c FROM documents GROUP BY source
@@ -834,7 +823,6 @@ def q_temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "robust_outliers",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH base AS MATERIALIZED (
       SELECT c_nationkey AS nationkey, o_totalprice AS price
@@ -917,7 +905,6 @@ _COOC_TOPK = 20
 
 @query(
     "token_cooccurrence",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id,
@@ -1003,7 +990,6 @@ def q_token_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "snapshot_diff",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH old AS MATERIALIZED (
       SELECT c_custkey AS k, c_name, c_acctbal FROM customer
@@ -1079,7 +1065,6 @@ _TRI_MIN_SHARED = 3
 
 @query(
     "triangle_count",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH cp AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -1168,7 +1153,6 @@ q_triangle_count.__doc__ = (q_triangle_count.__doc__ or "").format(m=_TRI_MIN_SH
 
 @query(
     "dataset_split_grouped",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH assigned AS (
       SELECT source, n_chars,
@@ -1215,7 +1199,6 @@ def q_dataset_split_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_eval",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=None,  # assigned below — needs fragments from catalog_ext/r3b
 )
 def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,12 +1322,11 @@ def _install_dedup_eval_oracle() -> None:
     """The oracle composes shared fragments from catalog_ext/catalog_r3b
     (minhash signature chain + banded LSH pairs) — assembled after both
     modules are importable to keep the fragment single-sourced."""
-    from .catalog import EXTRA_ORACLES, ORACLES, QUERIES
+    from .catalog import ORACLES
     from .catalog_ext import _DUCK_SHINGLES, _duck_minhash_sig_cte
     from .catalog_r3b import _DUCK_LSH_PAIRS
 
-    target = ORACLES if "dedup_eval" in QUERIES else EXTRA_ORACLES
-    target["dedup_eval"] = f"""
+    ORACLES["dedup_eval"] = f"""
     WITH samp AS MATERIALIZED (
       SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
     ),
@@ -1410,7 +1392,6 @@ _install_dedup_eval_oracle()
 
 @query(
     "skew_salted_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH big AS (
       SELECT CASE WHEN l_suppkey % 3 = 0 THEN 0
@@ -1478,7 +1459,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "wow_growth",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH weekly AS MATERIALIZED (
       SELECT c.c_nationkey AS nationkey,
@@ -1553,7 +1533,6 @@ def q_wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ship_latency_histogram",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH lat AS MATERIALIZED (
       SELECT date_diff('day', o.o_orderdate, l.l_shipdate) // 7 AS bucket_wk
@@ -1603,7 +1582,6 @@ def q_ship_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "impute_group_mean",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH masked AS MATERIALIZED (
       SELECT event_id, event_type,
@@ -1662,7 +1640,6 @@ def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_test_ztest",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH assign AS MATERIALIZED (
       SELECT user_id,
@@ -1752,7 +1729,6 @@ def q_ab_test_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rfm_segments",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH mx AS (SELECT max(o_orderdate) AS mxd FROM orders),
     rfm AS MATERIALIZED (
@@ -1823,7 +1799,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pareto_frontier",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH pts AS MATERIALIZED (
       SELECT CAST(round(p_retailprice * 100) AS BIGINT) AS price_c,
@@ -1884,7 +1859,6 @@ _PATHS_TOPK = 15
 
 @query(
     "event_paths",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH seq AS MATERIALIZED (
       SELECT user_id, event_type,
@@ -1933,7 +1907,6 @@ def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dim_date",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH bounds AS (
       SELECT min(o_orderdate) AS lo, max(o_orderdate) AS hi FROM orders
@@ -1992,7 +1965,6 @@ def q_dim_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cohort_ltv",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH firsts AS MATERIALIZED (
       SELECT o_custkey AS ck,
@@ -2081,7 +2053,6 @@ _FHASH_BUCKETS = 16
 
 @query(
     "feature_hashing",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id, u.tok
@@ -2134,7 +2105,6 @@ q_feature_hashing.__doc__ = (q_feature_hashing.__doc__ or "").format(b=_FHASH_BU
 
 @query(
     "quantile_normalize",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT o_orderkey,
            CAST(floor(
@@ -2179,7 +2149,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winsorized_mean",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH base AS MATERIALIZED (
       SELECT c_nationkey AS nationkey, o_totalprice AS price
@@ -2260,7 +2229,6 @@ _DEBOUNCE_S = 300
 
 @query(
     "event_debounce",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH gaps AS MATERIALIZED (
       SELECT event_id, user_id, event_type, ts,
@@ -2337,7 +2305,6 @@ def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "region_share",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH rev AS MATERIALIZED (
       SELECT r.r_name AS region, n.n_name AS nation,
@@ -2414,7 +2381,6 @@ def q_region_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "conversion_hazard",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH v AS MATERIALIZED (
       SELECT user_id, min(ts) AS t0 FROM events
@@ -2529,7 +2495,6 @@ def q_conversion_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skew_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH ck AS (
       SELECT 'orders.o_custkey' AS keyname, o_custkey AS k FROM orders
@@ -2603,7 +2568,6 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "resample_interpolate",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH obs AS MATERIALIZED (
       SELECT user_id, ts, value, event_id FROM events
@@ -2767,7 +2731,6 @@ def _duck_bfs_iter(prev: str, cur: str) -> str:
 
 @query(
     "bfs_hops",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH cp AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -2835,7 +2798,6 @@ _RULES_TOPK = 20
 
 @query(
     "basket_rules",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH items AS MATERIALIZED (
       SELECT DISTINCT l_orderkey AS o, l_partkey AS item FROM lineitem
@@ -2942,7 +2904,6 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cascade_delete_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH victims AS MATERIALIZED (
       SELECT c_custkey AS ck FROM customer WHERE c_custkey % 53 = 0

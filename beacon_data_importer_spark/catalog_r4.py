@@ -19,7 +19,7 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import cents, query
+from .catalog import ORACLES, QUERIES, cents, query
 from .catalog_r2 import _duck_hash64
 from .operators.distinct_window import sliding_distinct_count
 from .sources.parquet import read_table
@@ -31,7 +31,6 @@ from .sources.parquet import read_table
 
 @query(
     "grouped_linreg",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     WITH pts AS (
       SELECT c_nationkey AS nationkey,
@@ -120,7 +119,6 @@ def q_grouped_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rolling_distinct_customers",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT o_orderpriority AS priority,
            CAST(datediff('day', DATE '1992-01-01', o_orderdate) AS BIGINT)
@@ -193,7 +191,6 @@ def q_rolling_distinct_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hll_distinct_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT l_returnflag AS returnflag,
            CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_distinct,
@@ -238,7 +235,6 @@ _KFOLD_K = 5
 
 @query(
     "kfold_assignment",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     SELECT
       CAST({_duck_hash64("CAST(doc_id AS VARCHAR)", seed=7)} % {_KFOLD_K}
@@ -309,7 +305,6 @@ def _stage_path(tag: str, sf_dir: str) -> str:
 
 @query(
     "bucketed_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT c_nationkey AS nationkey,
            count(*) AS n_orders,
@@ -380,7 +375,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "partitioned_scan_prune",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT source, count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars
@@ -444,7 +438,6 @@ def _zval_sql(x: str, y: str, bits: int = _Z_BITS) -> str:
 
 @query(
     "zorder_layout",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH pts AS (
       SELECT (o_custkey & {2**_Z_BITS - 1}) AS x,
@@ -546,7 +539,6 @@ q_zorder_layout.__doc__ = (q_zorder_layout.__doc__ or "").replace(
 
 @query(
     "asof_join_nearest",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT purchase_id, user_id, nearest_click, gap_us FROM (
       SELECT p.event_id AS purchase_id, p.user_id,
@@ -626,7 +618,6 @@ def _cksum(c: Column) -> Column:
 
 @query(
     "jsonl_roundtrip",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     SELECT lang, count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
@@ -664,7 +655,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orc_roundtrip",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=f"""
     SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
            count(*) AS n_rows,
@@ -744,7 +734,6 @@ def _semantic_dedup_oracle() -> str:
 
 @query(
     "semantic_dedup",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=None,  # assigned below — composes the kmeans CTE chain
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,14 +799,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_semantic_dedup_oracle() -> None:
-    from .catalog import EXTRA_ORACLES, ORACLES, QUERIES
-
-    target = ORACLES if "semantic_dedup" in QUERIES else EXTRA_ORACLES
-    target["semantic_dedup"] = _semantic_dedup_oracle()
-
-
-_install_semantic_dedup_oracle()
+ORACLES["semantic_dedup"] = _semantic_dedup_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -853,7 +835,6 @@ def _split_leakage_oracle() -> str:
 
 @query(
     "split_leakage_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r04; slot rotated (see catalog.py docstring)
     oracle=None,  # assigned below — composes the corpus-LSH fragments
 )
 def q_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,14 +866,7 @@ def q_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_split_leakage_oracle() -> None:
-    from .catalog import EXTRA_ORACLES, ORACLES, QUERIES
-
-    target = ORACLES if "split_leakage_report" in QUERIES else EXTRA_ORACLES
-    target["split_leakage_report"] = _split_leakage_oracle()
-
-
-_install_split_leakage_oracle()
+ORACLES["split_leakage_report"] = _split_leakage_oracle()
 
 
 # ===========================================================================
@@ -904,7 +878,6 @@ _install_split_leakage_oracle()
 
 @query(
     "argmax_per_group",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT nationkey, top_customer, top_acctbal_cents,
            bottom_customer, bottom_acctbal_cents FROM (
@@ -958,7 +931,6 @@ def q_argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "time_weighted_avg",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH pts AS (
       SELECT user_id, epoch_us(ts) AS t,
@@ -1018,7 +990,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_median",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH w AS (
       SELECT l_returnflag AS returnflag,
@@ -1090,7 +1061,6 @@ _CKBUCKETS = 64
 
 @query(
     "bucket_checksum_diff",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH old AS (
       SELECT o_orderkey AS k,
@@ -1184,7 +1154,6 @@ q_bucket_checksum_diff.__doc__ = (q_bucket_checksum_diff.__doc__ or "").format(
 
 @query(
     "quantile_sketch_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH r AS (
       SELECT l_returnflag AS returnflag,
@@ -1316,7 +1285,6 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "chi_square_independence",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH obs AS (
       SELECT c_mktsegment AS seg, o_orderpriority AS pri,
@@ -1389,7 +1357,6 @@ def q_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "benford_digit_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH d AS (
       SELECT CAST(substring(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
@@ -1442,7 +1409,6 @@ _QLR_BUCKETS = 16
 
 @query(
     "quality_lr_score",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id, u.tok
@@ -1544,7 +1510,6 @@ q_quality_lr_score.__doc__ = (q_quality_lr_score.__doc__ or "").format(
 
 @query(
     "multimodal_frame_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH m AS (
       SELECT doc_id AS media_id,
@@ -1596,7 +1561,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_resize_plan",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH m AS (
       SELECT doc_id AS media_id, text FROM documents
@@ -1665,7 +1629,6 @@ def _walks_oracle() -> str:
 
 @query(
     "random_walks",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH e0 AS MATERIALIZED (
       SELECT l.a, l.b FROM (
@@ -1742,7 +1705,6 @@ _NEYMAN_TOTAL = 1000
 
 @query(
     "neyman_allocation",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH s AS (
       SELECT c_nationkey AS nationkey,
@@ -1873,7 +1835,6 @@ _BOM_LEVELS = 6  # 8^6 > any part key at the test SFs
 
 @query(
     "bom_rollup",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH parts AS (
       SELECT p_partkey AS p,
@@ -1943,7 +1904,6 @@ q_bom_rollup.__doc__ = (q_bom_rollup.__doc__ or "").format(
 
 @query(
     "yoy_growth",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH m AS (
       SELECT CAST(extract(year FROM o_orderdate) AS BIGINT) AS yr,
@@ -1991,7 +1951,6 @@ def q_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cumulative_distinct_customers",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH d AS (
       SELECT o_orderpriority AS priority, o_custkey AS ck,
@@ -2053,7 +2012,6 @@ _FW_COLS = (  # (name, width) — fixed-width layout for the nation table
 
 @query(
     "fixed_width_roundtrip",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT CAST(n_nationkey AS BIGINT) AS nationkey,
            trim(n_name) AS name,
@@ -2100,7 +2058,6 @@ def q_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "variant_json_stats",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
@@ -2142,7 +2099,6 @@ _CORR_PAIRS = (("qty", "price"), ("qty", "disc"), ("price", "disc"))
 
 @query(
     "correlation_matrix",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH b AS (
       SELECT CAST(round(l_quantity * 100) AS BIGINT) AS qty,
@@ -2236,7 +2192,6 @@ _SCD2_ASOF = "1995-06-01"
 
 @query(
     "scd2_asof_view",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH upd AS (
       SELECT o_custkey AS custkey, 'BIG SPENDER' AS segment,
@@ -2267,9 +2222,7 @@ def q_scd2_asof_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     history table partitions by valid_from range so the as-of read
     prunes whole partitions).  Exactly one row per key survives —
     intervals per key are disjoint by construction."""
-    from .catalog import EXTRA_QUERIES, QUERIES
-
-    hist = {**QUERIES, **EXTRA_QUERIES}["scd2_merge"](spark, sf_dir)
+    hist = QUERIES["scd2_merge"](spark, sf_dir)
     d = F.lit(_SCD2_ASOF).cast("date")
     return hist.filter(
         (F.col("valid_from") <= d)
@@ -2282,7 +2235,6 @@ q_scd2_asof_view.__doc__ = (q_scd2_asof_view.__doc__ or "").format(d=_SCD2_ASOF)
 
 @query(
     "trending_parts",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH weekly AS (
       SELECT l_partkey AS part,
@@ -2347,7 +2299,6 @@ def q_trending_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scd2_temporal_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH upd AS (
       SELECT o_custkey AS custkey, 'BIG SPENDER' AS segment,
@@ -2387,9 +2338,7 @@ def q_scd2_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out is bounded by versions-per-key — never a range cross
     join.  Exactly one version matches per (key, date) because
     intervals per key partition the timeline."""
-    from .catalog import EXTRA_QUERIES, QUERIES
-
-    hist = {**QUERIES, **EXTRA_QUERIES}["scd2_merge"](spark, sf_dir)
+    hist = QUERIES["scd2_merge"](spark, sf_dir)
     o = read_table(spark, sf_dir, "orders")
     od = F.to_date("o_orderdate")
     j = o.join(
@@ -2431,7 +2380,6 @@ def _lpa_oracle() -> str:
 
 @query(
     "label_propagation_communities",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH e0 AS MATERIALIZED (
       SELECT l.a, l.b FROM (
@@ -2507,7 +2455,6 @@ q_label_propagation_communities.__doc__ = (
 
 @query(
     "corpus_diversity_report",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH toks AS (
       SELECT source, u.tok
@@ -2621,7 +2568,6 @@ def _dup_rate_oracle() -> str:
 
 @query(
     "dup_rate_by_source",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=None,  # assigned below — composes the corpus-LSH fragments
 )
 def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2660,19 +2606,11 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _install_dup_rate_oracle() -> None:
-    from .catalog import EXTRA_ORACLES, ORACLES, QUERIES
-
-    target = ORACLES if "dup_rate_by_source" in QUERIES else EXTRA_ORACLES
-    target["dup_rate_by_source"] = _dup_rate_oracle()
-
-
-_install_dup_rate_oracle()
+ORACLES["dup_rate_by_source"] = _dup_rate_oracle()
 
 
 @query(
     "order_to_ship_funnel_daily",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH li AS (
       SELECT l_orderkey,
@@ -2756,7 +2694,6 @@ _EWMA_NUM_DUCK, _EWMA_DEN_DUCK = _ewma_terms(
 
 @query(
     "ewma_daily_revenue",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH daily AS (
       SELECT CAST(datediff('day', DATE '1992-01-01',
@@ -2809,7 +2746,6 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hourly_seasonality",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH tot AS (SELECT count(*) AS t FROM events)
     SELECT CAST(isodow(ts) AS INT) AS weekday,

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import cents, query
+from .catalog import ORACLES, QUERIES, cents, query
 from .catalog_r2 import _duck_hash64
 from .sources.parquet import read_table
 
@@ -27,7 +27,6 @@ from .sources.parquet import read_table
 
 @query(
     "cdc_apply",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH log AS (
       SELECT o_orderkey AS k, 0 AS seq, 'U' AS op,
@@ -125,7 +124,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incremental_agg_merge",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT o_orderpriority AS priority,
            CAST(count(*) AS BIGINT) AS n_orders,
@@ -190,7 +188,6 @@ def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gaps_islands",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH months AS (
       SELECT DISTINCT o_custkey AS custkey,
@@ -263,7 +260,6 @@ def q_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "rolling_correlation",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH daily AS (
       SELECT CAST(year(o_orderdate) AS INT) AS yr,
@@ -369,7 +365,6 @@ def q_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_gap_features",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH seq AS (
       SELECT o_custkey AS custkey,
@@ -453,7 +448,6 @@ def q_order_gap_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "loo_target_encoding",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH seg AS (
       SELECT c_mktsegment AS segment,
@@ -517,7 +511,6 @@ _CUPED_SPLIT = "1996-01-01"
 
 @query(
     "cuped_adjustment",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH units AS MATERIALIZED (
       SELECT o_custkey AS custkey,
@@ -637,7 +630,6 @@ _SPLIT_T1 = "1997-01-31"  # 30-day embargo
 
 @query(
     "temporal_purged_split",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH tagged AS MATERIALIZED (
       SELECT o_custkey,
@@ -737,7 +729,6 @@ _NEG_K = 3
 
 @query(
     "negative_sampling",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH pos AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS custkey, l.l_partkey AS partkey
@@ -873,7 +864,6 @@ _BLOOM_SEEDS = (21, 22)  # one hash per seed
 
 @query(
     "bloom_prune_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH dim AS MATERIALIZED (
       SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -1023,7 +1013,6 @@ _CMS_TOPK = 20
 
 @query(
     "cms_frequency_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH cells AS MATERIALIZED (
       SELECT d.d,
@@ -1145,7 +1134,6 @@ q_cms_frequency_audit.__doc__ = (q_cms_frequency_audit.__doc__ or "").format(
 
 @query(
     "sketch_reaggregation_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT)
              AS ym,
@@ -1199,15 +1187,8 @@ _CAL_BINS = 10
 _CAL_LABEL_CHARS = 500
 
 
-def _qlr_oracle() -> str:
-    from .catalog import EXTRA_ORACLES, ORACLES
-
-    return ORACLES.get("quality_lr_score") or EXTRA_ORACLES["quality_lr_score"]
-
-
 @query(
     "score_calibration",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=None,  # assigned below — composes the quality_lr_score oracle
 )
 def q_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1225,13 +1206,9 @@ def q_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no single-task global window.  Mean score is floor-of-double
     (scores can be negative — integer div would diverge between
     engines); label rate is exact integer ppm."""
-    from .catalog import EXTRA_QUERIES, QUERIES
     from .operators.order import global_ntile
 
-    scores_fn = QUERIES.get("quality_lr_score") or EXTRA_QUERIES[
-        "quality_lr_score"
-    ]
-    scores = scores_fn(spark, sf_dir)
+    scores = QUERIES["quality_lr_score"](spark, sf_dir)
     d = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("n_chars") >= _CAL_LABEL_CHARS).alias("label"),
@@ -1266,12 +1243,8 @@ q_score_calibration.__doc__ = (q_score_calibration.__doc__ or "").format(
 )
 
 
-def _install_score_calibration_oracle() -> None:
-    from .catalog import EXTRA_ORACLES, ORACLES, QUERIES
-
-    target = ORACLES if "score_calibration" in QUERIES else EXTRA_ORACLES
-    target["score_calibration"] = f"""
-    WITH scores AS MATERIALIZED ({_qlr_oracle()}),
+ORACLES["score_calibration"] = f"""
+    WITH scores AS MATERIALIZED ({ORACLES["quality_lr_score"]}),
     binned AS (
       SELECT doc_id, lr_score_e6,
              ntile({_CAL_BINS}) OVER (ORDER BY lr_score_e6, doc_id)
@@ -1291,9 +1264,6 @@ def _install_score_calibration_oracle() -> None:
     """
 
 
-_install_score_calibration_oracle()
-
-
 # ---------------------------------------------------------------------------
 # vocab_coverage — OOV rate per source against the corpus top-k vocab
 # ---------------------------------------------------------------------------
@@ -1303,7 +1273,6 @@ _VOCAB_K = 500
 
 @query(
     "vocab_coverage",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT source, u.tok
@@ -1384,7 +1353,6 @@ q_vocab_coverage.__doc__ = (q_vocab_coverage.__doc__ or "").format(
 
 @query(
     "readability_scores",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH per_doc AS MATERIALIZED (
       SELECT source,
@@ -1514,7 +1482,6 @@ def _entropy_oracle() -> str:
 
 @query(
     "column_entropy_profile",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=_entropy_oracle(),
 )
 def q_column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1606,7 +1573,6 @@ def _kcore_oracle() -> str:
 
 @query(
     "kcore_decomposition",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=_kcore_oracle(),
 )
 def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1691,7 +1657,6 @@ _WM_DELAY_US = 2 * 3600 * 1_000_000  # 2-hour watermark
 
 @query(
     "late_data_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH arr AS (
       SELECT event_type, epoch_us(ts) AS es,
@@ -1769,7 +1734,6 @@ _ANOM_Z_MICRO = 2_000_000  # |z| >= 2
 
 @query(
     "rolling_anomaly_flags",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH daily AS (
       SELECT CAST(year(o_orderdate) AS INT) AS yr,
@@ -1931,7 +1895,6 @@ def _linkpred_oracle() -> str:
 
 @query(
     "link_prediction_scores",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle=_linkpred_oracle(),
 )
 def q_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2000,7 +1963,6 @@ q_link_prediction_scores.__doc__ = (
 
 @query(
     "distribution_drift_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH es AS (
       SELECT event_type, epoch_us(ts) AS e FROM events
@@ -2095,7 +2057,6 @@ def q_distribution_drift_audit(
 
 @query(
     "max_drawdown",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH daily AS (
       SELECT CAST(year(o_orderdate) AS INT) AS yr,
@@ -2180,7 +2141,6 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_vocab_overlap",
-    registered=False,  # driver-proven green in CORRECTNESS_r05; slot rotated (see catalog.py docstring)
     oracle="""
     WITH toks AS MATERIALIZED (
       SELECT source, u.tok
@@ -2338,7 +2298,6 @@ def _mi_oracle() -> str:
 
 @query(
     "mutual_information",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=_mi_oracle(),
 )
 def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2407,7 +2366,6 @@ _ATTR_WINDOW_US = 7 * 24 * 3600 * 1_000_000  # 7-day lookback
 
 @query(
     "last_touch_attribution",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH e AS (
       SELECT user_id, event_type, epoch_us(ts) AS es, event_id, value
@@ -2508,7 +2466,6 @@ def q_last_touch_attribution(
 
 @query(
     "embedding_drift_by_label",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH comp AS MATERIALIZED (
       SELECT label, pos, sum(q) AS s, count(*) AS nv FROM (
@@ -2605,7 +2562,6 @@ _LOR_TOPN = 30
 
 @query(
     "token_shift_lor",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH toks AS MATERIALIZED (
       SELECT lang, u.tok
@@ -2731,7 +2687,6 @@ def q_token_shift_lor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "theil_sen_trend",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH daily AS MATERIALIZED (
       SELECT CAST(year(o_orderdate) AS INT) AS yr,
@@ -2829,7 +2784,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "anova_oneway",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH obs AS (
       SELECT c.c_mktsegment AS seg,
@@ -2955,7 +2909,6 @@ _PF_DUCK_SH = (
 
 @query(
     "prefix_filter_jaccard_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH sh AS MATERIALIZED (
       SELECT doc_id, {_PF_DUCK_SH} AS s
@@ -3122,7 +3075,6 @@ def _clustering_oracle() -> str:
 
 @query(
     "clustering_coefficient",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=_clustering_oracle(),
 )
 def q_clustering_coefficient(
@@ -3191,7 +3143,6 @@ def q_clustering_coefficient(
 
 @query(
     "embedding_dim_health",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH comp AS MATERIALIZED (
       SELECT pos, q FROM (
@@ -3282,7 +3233,6 @@ _FDIV = "cast(({a} - pmod({a}, cast({b} as decimal(38,0)))) / {b} as decimal(38,
 
 @query(
     "ipw_treatment_effect",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH peru AS MATERIALIZED (
       SELECT user_id,
@@ -3408,7 +3358,6 @@ def q_ipw_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "revenue_concentration",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH ranked AS MATERIALIZED (
       SELECT CAST(year(o_orderdate) AS INT) AS yr,

@@ -94,7 +94,6 @@ _BPE_TOKENIZE_ORACLE = f"""
 
 @query(
     "bpe_tokenize",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_BPE_TOKENIZE_ORACLE,
 )
 def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,7 +201,6 @@ def _merge_audit_oracle() -> str:
 
 @query(
     "bpe_merge_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_merge_audit_oracle(),
 )
 def q_bpe_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,7 +272,6 @@ def q_bpe_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fifo_allocation",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH inv AS (
       SELECT o_custkey AS c,
@@ -383,7 +380,6 @@ def q_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "revenue_recognition",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH span AS (
       SELECT o.o_orderkey,
@@ -470,7 +466,6 @@ def q_revenue_recognition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kaplan_meier",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH subj AS (
       SELECT date_diff('day', o.o_orderdate, s.first_ship) AS t,

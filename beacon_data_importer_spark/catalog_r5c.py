@@ -79,7 +79,6 @@ def _geo_hash_col(prefix: str) -> Column:
 
 @query(
     "geo_grid_join",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH pts AS (
       SELECT c_custkey AS k,
@@ -212,7 +211,6 @@ def _hrw_owner_sql(nodes: list[str], alias: str) -> str:
 
 @query(
     "rendezvous_sharding",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH a8 AS ({_hrw_owner_sql(_HRW_NODES_8, "owner8")}),
     a9 AS ({_hrw_owner_sql(_HRW_NODES_9, "owner9")})
@@ -303,7 +301,6 @@ def _zm_layout_sql(layout: str, order_by: str) -> str:
 
 @query(
     "zonemap_skip_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     {_zm_layout_sql("ingest", "l_orderkey, l_linenumber, CAST(l_shipdate AS DATE)")}
     UNION ALL
@@ -405,7 +402,6 @@ _CARD_TOPK = 5
 
 @query(
     "join_cardinality_estimate",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH per_key AS (
       SELECT p.p_brand AS brand, l.l_partkey AS k,
@@ -518,7 +514,6 @@ def q_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cusum_changepoints",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH daily AS (
       SELECT CAST(datediff('day', DATE '1992-01-01',
@@ -637,7 +632,6 @@ _ENC_COLS_SQL = [
 
 @query(
     "encoding_advisor",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH cells AS (
       {" UNION ALL ".join(

@@ -72,7 +72,6 @@ def _fd_sql(name: str, table: str, det: list[str], dep: str) -> str:
 
 @query(
     "fd_violation_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=" UNION ALL ".join(_fd_sql(*fd) for fd in _FDS),
 )
 def q_fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,7 +136,6 @@ def _boot_w_sql(u: str) -> str:
 
 @query(
     "bootstrap_ci_revenue",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH reps AS (SELECT unnest(generate_series(0, {_BOOT_B - 1})) AS b),
     weighted AS (
@@ -270,7 +268,6 @@ _QINI_DECILES = 10
 
 @query(
     "qini_uplift",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH spend AS (
       SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
@@ -407,7 +404,6 @@ q_qini_uplift.__doc__ = (q_qini_uplift.__doc__ or "").format(d=_QINI_DECILES)
 
 @query(
     "top_p_vocab",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH toks AS MATERIALIZED (
       SELECT source, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk

@@ -72,7 +72,6 @@ def _kanon_sql(name: str, qi: list[str]) -> str:
 
 @query(
     "k_anonymity_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=" UNION ALL ".join(_kanon_sql(n, q) for n, q in _KANON_QIS),
 )
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,7 +145,6 @@ q_k_anonymity_audit.__doc__ = (q_k_anonymity_audit.__doc__ or "").format(
 
 @query(
     "max_concurrent_orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH raw AS (
       SELECT o.o_orderkey,

@@ -65,7 +65,6 @@ def _duck_sssp_iter(prev: str, cur: str) -> str:
 
 @query(
     "weighted_sssp",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH cp AS MATERIALIZED (
       SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -181,7 +180,6 @@ _BH_VALUES_SQL = ", ".join(f"({m}, {i}, {t})" for m, i, t in _BH_TABLE)
 
 @query(
     "fdr_bh_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH per_order AS (
       SELECT o.o_orderkey, o.o_custkey,
@@ -379,7 +377,6 @@ _CONF_SHIFT = 100000
 
 @query(
     "conformal_interval_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH subj AS (
       SELECT o.o_orderkey, o.o_orderpriority AS grp,
@@ -577,7 +574,6 @@ def _duck_busdays(col: str) -> str:
 
 @query(
     "business_day_latency",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH per_order AS (
       SELECT o.o_orderpriority AS priority,
@@ -676,7 +672,6 @@ _LL_VALUES_SQL = ", ".join(
 
 @query(
     "littles_law_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH raw AS (
       SELECT CAST(datediff('day', DATE '1992-01-01',
@@ -810,7 +805,6 @@ _DP_SEED = 77
 
 @query(
     "dp_noisy_counts",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH counts AS (
       SELECT c_nationkey AS nationkey, CAST(count(*) AS BIGINT) AS n_true

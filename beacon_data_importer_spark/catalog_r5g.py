@@ -59,7 +59,6 @@ def _mrl_duck_topk(d: int) -> str:
 
 @query(
     "matryoshka_recall_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qvec
                FROM embeddings
@@ -164,7 +163,6 @@ _CF_MAX_WIDTH = 64
 
 @query(
     "item_item_cf_topk",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH it0 AS MATERIALIZED (
       SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
@@ -348,7 +346,6 @@ def _did_sql(scenario: str, cutoff: str) -> str:
 
 @query(
     "did_estimate",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH cells AS (
       {" UNION ALL ".join(_did_sql(s, c) for s, c in _DID_SCENARIOS)}

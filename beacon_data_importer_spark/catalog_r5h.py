@@ -37,7 +37,6 @@ from .sources.parquet import read_table
 
 @query(
     "recursive_bom_rollup",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH RECURSIVE walk(node, v) AS (
       SELECT p_partkey AS node,
@@ -153,7 +152,6 @@ def _rrf_duck_bm25_ranked() -> str:
 
 @query(
     "rrf_hybrid_search",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH {_rrf_duck_bm25_ranked()},
     q AS (SELECT embedding AS qvec FROM embeddings

@@ -57,7 +57,6 @@ _DUCK_COS = (
 
 @query(
     "ann_ndcg_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH qv AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
     cent AS (SELECT vec_id AS cell_id, embedding AS cvec
@@ -223,7 +222,6 @@ _PSI_MAX_BIN = 10  # bins 0..10 (top bin open-ended)
 
 @query(
     "psi_drift_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH binned AS (
       SELECT least({_PSI_MAX_BIN},
@@ -353,7 +351,6 @@ _EQD_BUCKETS = 16
 
 @query(
     "equidepth_histogram",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH t AS (
       SELECT ntile({_EQD_BUCKETS}) OVER (

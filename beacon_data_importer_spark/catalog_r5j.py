@@ -38,7 +38,6 @@ _SNM_LEV = 2  # verification threshold on the candidate pairs
 
 @query(
     "sorted_neighborhood_pairs",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH ranked AS (
       SELECT c_custkey, c_name,
@@ -125,7 +124,6 @@ q_sorted_neighborhood_pairs.__doc__ = (
 
 @query(
     "mase_forecast_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH monthly AS (
       SELECT year(CAST(o_orderdate AS DATE)) * 12

@@ -52,7 +52,6 @@ _SEQ_MAX_WIDTH = 128
 
 @query(
     "sequential_purchase_rules",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH cp0 AS MATERIALIZED (
       SELECT o.o_custkey AS c, l.l_partkey AS p,
@@ -189,7 +188,6 @@ q_sequential_purchase_rules.__doc__ = (
 
 @query(
     "t_closeness_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH cells AS (
       SELECT c_nationkey AS nationkey, c_mktsegment AS seg,
@@ -295,7 +293,6 @@ _BRIER_LABEL_CHARS = 300  # outcome: document longer than this
 
 @query(
     "brier_decomposition",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, n_chars, {_DUCK_NTOK} AS ntok FROM documents

@@ -34,7 +34,6 @@ from .sources.parquet import read_table
 
 @query(
     "xml_roundtrip",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     SELECT lang, count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
@@ -148,7 +147,6 @@ def _register_sensor_source(spark: SparkSession) -> None:
 
 @query(
     "python_datasource_scan",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH gen AS (
       SELECT g // {_PYDS_READINGS} AS sensor_id,

@@ -31,7 +31,6 @@ from .sources.parquet import register_views
 
 @query(
     "pipe_syntax_pricing",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     SELECT l_returnflag AS returnflag, l_linestatus AS linestatus,
       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT)
@@ -81,7 +80,6 @@ def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_udf_taxed_margin",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     SELECT l_returnflag AS returnflag,
            CAST(sum(CAST(round(

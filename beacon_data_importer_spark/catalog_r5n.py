@@ -34,7 +34,6 @@ from .sources.parquet import read_table
 
 @query(
     "nelson_aalen_hazard",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle="""
     WITH first_ship AS (
       SELECT l_orderkey, min(l_shipdate) AS fs FROM lineitem
@@ -150,7 +149,6 @@ _HP_FINAL_E6 = 1_959_964  # final-look boundary floor(1e6 * 1.959964)
 
 @query(
     "interim_analysis_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH per_order AS (
       SELECT year(CAST(o.o_orderdate AS DATE)) AS yr,
@@ -332,7 +330,6 @@ _BRA_LEV = 2
 
 @query(
     "blocking_recall_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH truth AS (
       SELECT l.c_custkey AS a, r.c_custkey AS b

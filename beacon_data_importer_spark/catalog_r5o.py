@@ -26,7 +26,6 @@ _REPLAY_SEED = 53  # split hash; buckets 0-6 train, 7-9 eval
 
 @query(
     "bandit_replay_eval",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH subj AS (
       SELECT o.o_orderkey,

@@ -61,7 +61,6 @@ _SHAP_SUBSETS_SQL = ", ".join(f"({s})" for s in range(8))
 
 @query(
     "shapley_attribution",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH per_user AS (
       SELECT user_id,
@@ -232,7 +231,6 @@ def _rdd_sql(h: int) -> str:
 
 @query(
     "rdd_estimate",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=" UNION ALL ".join(_rdd_sql(h) for h in _RDD_BANDWIDTHS),
 )
 def q_rdd_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,7 +316,6 @@ _PS_RATES_SQL = ", ".join(f"('{s}', {r})" for s, r in _PS_RATES)
 
 @query(
     "poststratification_estimate",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH rates AS (SELECT * FROM (VALUES {_PS_RATES_SQL}) AS r(seg, rate)),
     pop AS (

@@ -63,7 +63,6 @@ def _spark_rank2(df: DataFrame, col: str) -> DataFrame:
 
 @query(
     "spearman_rho",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH vals AS (
       SELECT CAST(round(l_quantity * 100) AS BIGINT) AS x,
@@ -190,7 +189,6 @@ def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kruskal_wallis",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
     oracle=f"""
     WITH vals AS (
       SELECT CAST(round(l_quantity * 100) AS BIGINT) AS x,

@@ -52,9 +52,6 @@ _DEC = "decimal(38,0)"
 
 @query(
     "click_attribution_outer",
-    registered=False,  # driver-proven green in CORRECTNESS_r06; slot rotated (see module docstring)
-    # interval join — promoted so the outer-join semantics get a driver
-    # CORRECTNESS row (VERDICT r5 item 6); encoding_advisor yielded the slot.
     oracle="""
     SELECT c.event_id AS click_id, p.event_id AS purchase_id,
            c.user_id AS user_id,
@@ -112,7 +109,6 @@ def q_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "auc_mann_whitney",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH labeled AS (
       SELECT CAST(round(o.o_totalprice * 100) AS BIGINT) AS score,
@@ -198,7 +194,6 @@ def q_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l_diversity_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH joined AS (
       SELECT c.c_nationkey AS nation, c.c_mktsegment AS segment,
@@ -289,7 +284,6 @@ _IV_U_DUCK = (
 
 @query(
     "iv_wald_estimate",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH assigned AS (
       SELECT c.c_custkey,
@@ -413,7 +407,6 @@ _PERM_K = 64  # deterministic relabeled replicas
 
 @query(
     "permutation_test_revenue",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH base AS (
       SELECT o_orderkey,

@@ -130,7 +130,6 @@ _HOLT_BASE_SQL = """
 
 @query(
     "holt_linear_forecast",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_holt_duck_sql(),
 )
 def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,7 +230,6 @@ def _ipf_sql(dialect: str) -> str:
 
 sql_query(
     "ipf_raking_weights", _ipf_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Iterative proportional fitting (raking): per-cell weights that
     pull the ORDER sample's (nation × segment) composition toward the
     CUSTOMER population's marginals on both axes — {r} full rounds,
@@ -266,7 +264,6 @@ _CHUNK_HOP = 2048  # 50% overlap
 
 @query(
     "audio_chunk_plan",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     SELECT d.doc_id,
            CAST(k.k AS BIGINT) AS chunk_idx,

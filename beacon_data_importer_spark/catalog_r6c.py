@@ -151,7 +151,6 @@ def _fs_sql(dialect: str) -> str:
 
 sql_query(
     "fellegi_sunter_em", _fs_sql, "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Fellegi-Sunter probabilistic record linkage fit by EM.
 
     Nation-blocked customer pairs are reduced to their 3-bit agreement
@@ -260,7 +259,6 @@ def _dsir_sql(dialect: str) -> str:
 
 @query(
     "dsir_importance_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_dsir_sql("duck"),
 )
 def q_dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,7 +303,6 @@ _HNM_QUERY_MOD = 20  # vec_id % 20 == 0 → 5% of vectors are queries
 
 @query(
     "hard_negative_mining",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qvec, label AS qlabel

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import EXTRA_ORACLES, EXTRA_QUERIES as _EXT, ORACLES, QUERIES as _REG, query
+from .catalog import ORACLES, QUERIES, query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -101,17 +101,9 @@ def _mba_sql(dialect: str, truth_sql: str) -> str:
     """
 
 
-def _mba_oracle() -> str:
-    return _mba_sql("duck", EXTRA_ORACLES.get(
-        "prefix_filter_jaccard_join",
-        ORACLES.get("prefix_filter_jaccard_join", ""),
-    ))
-
-
 @query(
     "minhash_band_advisor",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
-    oracle=_mba_oracle(),
+    oracle=_mba_sql("duck", ORACLES["prefix_filter_jaccard_join"]),
 )
 def q_minhash_band_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding advisor: which (bands × rows) split of the 16-hash
@@ -135,7 +127,7 @@ def q_minhash_band_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: beyond-reference dedup tier
     (operators/dedup.py:194 ``lsh_bands`` is the consumer)."""
-    truth = {**_REG, **_EXT}["prefix_filter_jaccard_join"](spark, sf_dir)
+    truth = QUERIES["prefix_filter_jaccard_join"](spark, sf_dir)
     truth.createOrReplaceTempView("__mba_truth")
     return spark.sql(
         _mba_sql("spark", "SELECT * FROM __mba_truth")
@@ -156,7 +148,6 @@ _DECAY_TOPK = 20
 
 @query(
     "decayed_topk",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH per_cust AS (
       SELECT o_custkey,
@@ -284,7 +275,6 @@ def _pinball_duck() -> str:
 
 @query(
     "pinball_quantile_eval",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_pinball_duck(),
 )
 def q_pinball_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -48,7 +48,6 @@ _KS_PACK = 2_147_483_648  # 2^31: packs both groups' counts in one int64
 
 @query(
     "ks_two_sample",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH vals AS (
       SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS x,
@@ -168,7 +167,6 @@ _LR_CHI2_05_E6 = 3_841_459  # χ²(1, 0.05) · 1e6
 
 @query(
     "logrank_test",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH subj AS (
       SELECT date_diff('day', o.o_orderdate, s.first_ship) AS t,
@@ -352,7 +350,6 @@ _LATERAL_SQL = """
 
 @query(
     "lateral_topn_per_group",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_LATERAL_SQL,
 )
 def q_lateral_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:

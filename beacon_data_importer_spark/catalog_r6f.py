@@ -43,7 +43,6 @@ _VARIANT_SQL = (
 
 @query(
     "collated_distinct_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH v AS (SELECT {_VARIANT_SQL} AS name FROM part)
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -140,7 +139,6 @@ def _acf_sql(dialect: str) -> str:
 
 sql_query(
     "acf_daily_revenue", _acf_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Autocorrelation of daily revenue at lags {lags} — the first
     chart every forecaster draws (is there weekly structure? monthly?)
     and the diagnostic that justifies (or kills) the seasonal terms in

@@ -107,7 +107,6 @@ def _ivm_sql(dialect: str) -> str:
 
 sql_query(
     "join_view_delta_maintain", _ivm_sql, "customer", "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Incremental maintenance of a join-aggregate view when BOTH base
     tables receive inserts — the ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB algebra, run
     head-to-head against a full recompute with a per-group match flag

@@ -79,7 +79,6 @@ def _pak_sql(dialect: str) -> str:
 
 sql_query(
     "pass_at_k_estimate", _pak_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""pass@{k} over repeated trials: each user is a task, their events
     the trials, a purchase a success — the estimator is the unbiased
     1 − C(n−c,{k})/C(n,{k}) computed as Π (n−c−i)/(n−i) with one
@@ -221,7 +220,6 @@ def _bt_sql(dialect: str) -> str:
 
 @query(
     "bradley_terry_rating",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_bt_sql("duck"),
 )
 def q_bradley_terry_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -358,7 +356,6 @@ def _cycle_sql(dialect: str) -> str:
 
 sql_query(
     "preference_cycle_audit", _cycle_sql, "lineitem", "supplier",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Transitivity audit of the majority-win preference digraph that
     ``bradley_terry_rating`` fits: a→b when a won the majority of
     within-order price duels against b; a triad a→b→c is CYCLIC when c

@@ -82,7 +82,6 @@ def _emd_sql(dialect: str) -> str:
 
 sql_query(
     "emd_drift_audit", _emd_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Earth Mover's Distance between the pre-/post-{cut} order-value
     histograms, in BIN-WIDTH units scaled e6: for histograms on a
     common grid, W₁ = Σ_bins |F̂₁(b) − F̂₂(b)| — each term the exact
@@ -113,7 +112,6 @@ _SPLIT_TOPN = 5
 
 @query(
     "best_split_finder",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH labeled AS (
       SELECT CAST(round(o.o_totalprice * 100) AS BIGINT) AS x,
@@ -302,7 +300,6 @@ def _woe_sql(dialect: str) -> str:
 
 sql_query(
     "woe_iv_encoding", _woe_sql, "orders", "customer", "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Weight-of-Evidence encoding of market segment against the
     returned-line label, with the Information Value rollup — the
     credit-scoring feature transform (WoEᵢ = ln(goodᵢ/G ÷ badᵢ/B);

@@ -82,7 +82,6 @@ def _cr_sql(dialect: str) -> str:
 
 sql_query(
     "capture_recapture_estimate", _cr_sql, "customer", "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Chapman capture-recapture: estimate the order-active customer
     population from two independent ~40% hash samples and their
     overlap — N̂ = (n₁+1)(n₂+1)/(m+1) − 1, exact integers.  The true
@@ -140,7 +139,6 @@ def _chao_sql(dialect: str) -> str:
 
 @query(
     "chao1_unseen_vocab",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_chao_sql("duck"),
 )
 def q_chao1_unseen_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,7 +248,6 @@ def _chow_sql(dialect: str) -> str:
 
 sql_query(
     "chow_break_test", _chow_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Chow structural-break test: did the monthly revenue TREND change
     at {cut}?  Pooled OLS vs two segment OLS fits; F = ((SSE_p −
     SSE₁ − SSE₂)/k) / ((SSE₁+SSE₂)/(n−2k)), k=2 (intercept + slope).

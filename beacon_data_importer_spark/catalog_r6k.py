@@ -60,7 +60,6 @@ def _pw_sql(dialect: str) -> str:
 
 sql_query(
     "ab_power_analysis", _pw_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Two-proportion power analysis from the measured baseline: the
     per-arm sample size needed to detect a +10% relative lift on the
     event stream's purchase share (the fraction of events that

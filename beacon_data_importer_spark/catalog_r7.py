@@ -276,7 +276,6 @@ def _hnm_ivf_triples(
 
 @query(
     "hard_negative_mining_ivf",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="WITH " + _hnm_ivf_scored_ctes().strip()
     + ",\n" + _hnm_triples_sql("scored"),
 )
@@ -314,7 +313,6 @@ def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hard_negative_recall_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH {_hnm_ivf_scored_ctes().strip()},
     ivf AS (
@@ -397,7 +395,6 @@ def q_hard_negative_recall_audit(
 
 @query(
     "event_type_distinct_sketch",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     SELECT event_type,
            CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,

@@ -110,7 +110,6 @@ def _benford_sql(dialect: str) -> str:
 
 sql_query(
     "benford_second_digit_audit", _benford_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Second-digit Benford forensic over order totals: per second
     significant digit 0–9, the observed ppm share next to
     floor(1e6·Σₖ log10(1+1/(10k+d))) and the integer chi-square term
@@ -175,7 +174,6 @@ def _zipf_sql(dialect: str) -> str:
 
 @query(
     "zipf_slope_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=_zipf_sql("duck"),
 )
 def q_zipf_slope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,7 +251,6 @@ def _simpson_sql(dialect: str) -> str:
 
 sql_query(
     "simpson_paradox_audit", _simpson_sql, "lineitem", "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Simpson's-paradox census: the sign of the discount↔price
     covariance pooled over all lineitems vs within each customer
     nation.  A stratum whose sign opposes the pooled sign
@@ -312,7 +309,6 @@ def _isotonic_sql(dialect: str) -> str:
 
 sql_query(
     "isotonic_calibration", _isotonic_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     doc="""Isotonic (PAV) calibration of return rate on discount bins via
     the minimax identity fit(i) = max_{j≤i} min_{k≥i} rate(j..k) —
     the closed form of pool-adjacent-violators, so no iteration and no
@@ -337,7 +333,6 @@ _CALIPER_C = 10_000  # match window: |price difference| ≤ $100, in cents
 
 @query(
     "propensity_caliper_match",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH sc AS (
       SELECT o_orderkey AS k,
@@ -432,7 +427,6 @@ _SKY_BUCKET_C = 1_000_000  # spend bucket width for the partitioned pass
 
 @query(
     "pareto_skyline",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle="""
     WITH agg AS (
       SELECT o_custkey,
@@ -520,7 +514,6 @@ _HH_MAX_TRACKED = 10_000
 
 @query(
     "heavy_hitters_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r07; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH words AS (
       SELECT unnest(string_split(text, ' ')) AS w FROM documents

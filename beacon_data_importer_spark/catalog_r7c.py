@@ -85,7 +85,6 @@ def _mk_sql(dialect: str) -> str:
 
 sql_query(
     "mk_trend_test", _mk_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Mann-Kendall trend test on the monthly revenue series: S =
     Σ_{i<j} sign(rev_j − rev_i), tie-corrected variance kept as the
     exact ×18 integer numerator, and the 95% verdict via the
@@ -149,7 +148,6 @@ def _runs_sql(dialect: str) -> str:
 
 sql_query(
     "runs_test", _runs_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Wald-Wolfowitz runs test: daily revenue classified above/below
     the series median (the median is DEFINED as the ((n+1) div 2)-th
     value under the total (rev, day) order — an explicit rank, not an
@@ -206,7 +204,6 @@ def _kendall_sql(dialect: str) -> str:
 
 sql_query(
     "kendall_tau_cells", _kendall_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Kendall tau-a between discount and quantity via the value-cell
     contingency collapse: rows aggregate to ≤ 11×50 (discount,
     quantity) cells first, and concordant/discordant mass comes from
@@ -261,7 +258,6 @@ def _mcnemar_sql(dialect: str) -> str:
 
 sql_query(
     "mcnemar_test", _mcnemar_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""McNemar's paired-proportion test: did customer purchase
     activity CHANGE between 1997 and 1998?  The same units are
     observed in both periods, so only the discordant cells (active-
@@ -322,7 +318,6 @@ def _cramers_sql(dialect: str) -> str:
 
 sql_query(
     "cramers_v", _cramers_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Chi-square association + Cramér's V² for the returnflag ×
     linestatus contingency.  Each cell's term uses the cleared form
     (O·n − r·c)²/(n·r·c) — the expected count never materializes as a
@@ -380,7 +375,6 @@ def _grubbs_sql(dialect: str) -> str:
 
 sql_query(
     "grubbs_outlier", _grubbs_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Grubbs-style max-deviation outlier scan of daily revenue: the
     day with the largest |x − x̄| surfaces with its squared
     studentized deviation G² = A²(n−1)/(n(nΣx²−S²)) in ppm (A = x·n−S

@@ -124,7 +124,6 @@ def _cuped_sql(dialect: str) -> str:
 
 sql_query(
     "cuped_variance_reduction", _cuped_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""CUPED adjustment of the 1998 customer-revenue metric by its
     1997 pre-period value under a deterministic hash 50/50 assignment:
     θ_ppm = (nΣxy−ΣxΣy)·1e6/(nΣxx−Σx²) pooled (pre-period data is
@@ -185,7 +184,6 @@ def _srm_sql(dialect: str) -> str:
 
 sql_query(
     "srm_check", _srm_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Sample-ratio-mismatch guard for a deterministic 50/50 hash
     assignment of orders: χ² against the designed split collapses to
     A²/n with A = 2·n_a − n (both cells' deviations are ±A/2), flagged
@@ -242,7 +240,6 @@ def _winsor_sql(dialect: str) -> str:
 
 @query(
     "winsorized_mean_revenue",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_winsor_sql("duck"),
 )
 def q_winsorized_mean_revenue(

@@ -83,7 +83,6 @@ def _welch_sql(dialect: str) -> str:
 
 sql_query(
     "welch_t_test", _welch_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Welch's two-sample t on mean order value, BUILDING vs MACHINERY
     segments: t² = (m̄₁−m̄₂)² / (s₁²/n₁ + s₂²/n₂), assembled entirely
     from staged integer quotients — per-group means and s²/n terms
@@ -143,7 +142,6 @@ def _kappa_sql(dialect: str) -> str:
 
 sql_query(
     "cohens_kappa", _kappa_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Cohen's kappa between two deterministic order classifiers —
     price-threshold "expensive" vs priority-derived "urgent": κ =
     (p_o − p_e)/(1 − p_e), the agreement left after discounting what

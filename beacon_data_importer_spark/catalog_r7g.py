@@ -98,7 +98,6 @@ def _stl_sql(dialect: str) -> str:
 
 sql_query(
     "stl_decomposition_lite", _stl_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Additive seasonal decomposition of monthly revenue: trend is the
     classic centered moving average over 12 months — endpoints half-
     weighted, computed exactly as (x₋₆ + 2·Σ₋₅..₊₅ + x₊₆) div 24 —
@@ -217,7 +216,6 @@ def _holm_sql() -> str:
 
 @query(
     "holm_bonferroni",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_holm_sql(),
 )
 def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,7 +371,6 @@ def _levene_spark_hist_sql() -> str:
 
 @query(
     "levene_test",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_levene_sql("duck"),
 )
 def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,7 +442,6 @@ def _friedman_sql(dialect: str) -> str:
 
 sql_query(
     "friedman_test", _friedman_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Friedman's nonparametric repeated-measures test: market
     segments ranked by revenue WITHIN each complete month block
     (months missing a segment are excluded — the test requires

@@ -85,7 +85,6 @@ def _heaps_oracle() -> str:
 
 @query(
     "heaps_law_fit",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_heaps_oracle(),
 )
 def q_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,7 +173,6 @@ _BURST_TOPK = 20
 
 @query(
     "word_burstiness_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH words AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents

@@ -33,7 +33,6 @@ from .sources.parquet import read_table
 
 @query(
     "theta_set_ops_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle="""
     WITH cust AS (
       SELECT o_custkey,

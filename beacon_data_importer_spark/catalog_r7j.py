@@ -169,7 +169,6 @@ def _mra_oracle() -> str:
 
 @query(
     "markov_removal_attribution",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_mra_oracle(),
 )
 def q_markov_removal_attribution(

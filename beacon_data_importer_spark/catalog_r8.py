@@ -30,7 +30,6 @@ _CTRL_CAP = 64       # max controls kept per bucket (probe-backed)
 
 @query(
     "propensity_caliper_match_capped",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH sc AS (
       SELECT o_orderkey AS k,
@@ -184,7 +183,6 @@ def _hnm_scaled_oracle() -> str:
 
 @query(
     "hard_negative_mining_ivf_scaled",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_hnm_scaled_oracle(),
 )
 def q_hard_negative_mining_ivf_scaled(
@@ -243,7 +241,6 @@ def _hnm_scaled_audit_oracle() -> str:
 
 @query(
     "hard_negative_scaled_recall_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_hnm_scaled_audit_oracle(),
 )
 def q_hard_negative_scaled_recall_audit(

@@ -151,7 +151,6 @@ def _hw_sql(dialect: str) -> str:
 
 @query(
     "holt_winters_seasonal",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_hw_sql("duck"),
 )
 def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +186,6 @@ _THETA_B = "purchase"
 
 @query(
     "event_type_theta_overlap",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH flags AS (
       SELECT user_id,

@@ -93,7 +93,6 @@ def _tukey_sql(dialect: str) -> str:
 
 sql_query(
     "tukey_hsd", _tukey_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Tukey-Kramer HSD on mean order value ($10 units) across the 5
     regions: for each of the 10 pairs, the mean difference and whether
     |m̄ᵢ−m̄ⱼ| exceeds q·√(MSW/2·(1/nᵢ+1/nⱼ)) — assembled sqrt-free by
@@ -179,7 +178,6 @@ def _mood_sql(dialect: str) -> str:
 
 sql_query(
     "mood_median_test", _mood_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Mood's median test across the 5 regions: order values coarsen
     to $1000 buckets, the grand median bucket comes from the
     cumulative count over the BOUNDED distinct-bucket frame (the
@@ -248,7 +246,6 @@ def _ca_sql(dialect: str) -> str:
 
 sql_query(
     "cochran_armitage_trend", _ca_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Cochran-Armitage trend test: is the urgent-order PROPORTION
     trending across order years (scores s = year−1995)?  Z² =
     U²·N·1e6 div (R(N−R)(N·Σs²n − (Σsn)²)) with U = N·Σsr − R·Σsn —
@@ -309,7 +306,6 @@ def _nb_sql(dialect: str) -> str:
 
 sql_query(
     "negative_binomial_overdispersion", _nb_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Dispersion gate for count modeling: per-customer order counts
     WITH the zero-order customers (the left join is the point —
     dropping zeros understates variance), dispersion index D =
@@ -382,7 +378,6 @@ def _weibull_sql(dialect: str) -> str:
 
 sql_query(
     "weibull_survival_fit", _weibull_sql, "orders", "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Weibull fit of the order→ship latency by median-rank
     regression: distinct latency days (a BOUNDED frame — the ordered
     cumulative window never touches row-proportional data) get

@@ -185,7 +185,6 @@ _COX_DUCK_DAYS, _COX_DUCK_NEWTON = _cox_sql("duck")
 
 @query(
     "cox_ph_binary",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=f"WITH {_COX_DUCK_DAYS},\n    {_COX_DUCK_NEWTON}",
 )
 def q_cox_ph_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,7 +321,6 @@ def _lb_sql(dialect: str) -> str:
 
 sql_query(
     "ljung_box_test", _lb_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Ljung-Box portmanteau test on daily revenue: autocorrelations
     r₁..r₁₀ via the cross-multiplied deviation device (dev = n·y − S,
     the n² factors cancel in r_k exactly), Q = n(n+2)Σ r_k²/(n−k) in
@@ -397,7 +395,6 @@ def _dw_sql(dialect: str) -> str:
 
 sql_query(
     "durbin_watson_test", _dw_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Durbin-Watson d on the residuals of daily revenue vs time: the
     OLS residual is kept as the EXACT integer D·y − A − B·t (slope and
     intercept never divide; one fixed engine-identical down-shift keeps
@@ -447,7 +444,6 @@ def _bp_sql(dialect: str) -> str:
 
 sql_query(
     "breusch_pagan_test", _bp_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Breusch-Pagan LM heteroskedasticity test: the squared (scaled)
     OLS residuals of daily revenue regressed back on time, LM = n·R²
     in ppm vs χ²₁.  R² is assembled sqrt-free with the staged-quotient
@@ -522,7 +518,6 @@ def _jt_sql(dialect: str) -> str:
 
 sql_query(
     "jonckheere_terpstra", _jt_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Jonckheere-Terpstra ordered-alternative test: is the order-value
     distribution stochastically increasing across order YEARS?  The
     pairwise Mann-Whitney counts are computed from per-year $10-bucket

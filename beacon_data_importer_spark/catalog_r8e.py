@@ -177,7 +177,6 @@ def _bq_sql(dialect: str) -> str:
 
 sql_query(
     "binary_quantize_search", _bq_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Top-10 Hamming neighbors per query over 1-bit-quantized
     embeddings: sign bits packed into two 32-bit BIGINT words at scan
     time, distance = popcount(xor) — integer-only, no float ever
@@ -310,7 +309,6 @@ def _bqr_sql(dialect: str) -> str:
 
 sql_query(
     "binary_rerank_recall_audit", _bqr_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""The production binary-quantization pipeline with its honesty
     meter: Hamming shortlist (4k = 40) → exact-cosine re-rank → top-10,
     measured per query against the full-precision brute top-10 (the
@@ -456,7 +454,6 @@ def _jl_sql(dialect: str) -> str:
 
 sql_query(
     "jl_projection_recall_audit", _jl_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Johnson-Lindenstrauss sketch audit: 64-dim embeddings projected
     onto 16 deterministic ±1 hyperplanes at scan time, brute top-10 by
     SKETCH cosine, recall measured against full-dim truth per query.
@@ -559,7 +556,6 @@ def _bayes_sql(dialect: str) -> str:
 
 sql_query(
     "bayes_ab_prob_superiority", _bayes_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Exact Bayesian A/B: P(p_B > p_A) under independent Beta(1,1)
     posteriors for the heavy-purchaser rate by user-id-parity variant.
     The closed-form finite sum Σᵢ B(α_A+i, β_A+β_B)/((β_B+i)·
@@ -628,7 +624,6 @@ def _rappor_sql(dialect: str) -> str:
 
 sql_query(
     "rappor_freq_estimate", _rappor_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Randomized-response (RAPPOR-style, basic one-time) frequency
     estimation over event participation: each (user, type) presence
     bit is flipped with probability f = 1/4 by a deterministic md5

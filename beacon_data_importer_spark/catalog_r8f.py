@@ -112,7 +112,6 @@ _LM_DUCK_TOK, _LM_DUCK_REST = _lm_sql("duck")
 
 @query(
     "bigram_lm_perplexity",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_LM_DUCK_REST.replace(
         "WITH barr AS (",
         f"WITH tok AS ({_LM_DUCK_TOK}),\n    barr AS (",
@@ -195,7 +194,6 @@ def _pettitt_sql(dialect: str) -> str:
 
 sql_query(
     "pettitt_changepoint", _pettitt_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Pettitt's nonparametric changepoint on daily revenue: midranks
     via the doubled-rank device over the DISTINCT-value frame (tie
     exact, all integer), U_t = Σ_{i≤t}2R_i − t(n+1) from one cumulative
@@ -303,7 +301,6 @@ def _croston_sql(dialect: str) -> str:
 
 sql_query(
     "croston_intermittent", _croston_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Croston's intermittent-demand smoother on ONE supplier's
     shipment series (deterministically the min suppkey — per-supplier
     density is sf-invariant, so the series stays sparse at any scale):
@@ -378,7 +375,6 @@ def _jb_sql(dialect: str) -> str:
 
 sql_query(
     "jarque_bera_test", _jb_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Jarque-Bera normality test on daily revenue: skewness² and
     excess kurtosis from the EXACT integer central moments of the
     cross-multiplied deviations d = n·y − S (the n factors cancel in
@@ -456,7 +452,6 @@ def _page_sql(dialect: str) -> str:
 
 sql_query(
     "page_trend_test", _page_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Page's L test for an ORDERED within-year trend of monthly
     revenue: ranks are per-year windows (PARTITIONED, 12 rows each,
     row_number with (value, month) total order — the calendar grid has

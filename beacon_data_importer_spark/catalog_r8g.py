@@ -108,7 +108,6 @@ def _hits_sql(dialect: str) -> str:
 
 @query(
     "hits_hub_authority",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     oracle=_hits_sql("duck"),
 )
 def q_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +257,6 @@ def _dunn_sql(dialect: str) -> str:
 
 sql_query(
     "dunn_posthoc", _dunn_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Dunn's pairwise post-hoc after Kruskal-Wallis on order values
     ($10 buckets) across the 5 regions: pooled DOUBLED midranks from
     the distinct-bucket histogram (tie-exact), per-pair mean-rank₂
@@ -342,7 +340,6 @@ def _ab_sql(dialect: str) -> str:
 
 sql_query(
     "ansari_bradley", _ab_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Ansari-Bradley two-sample dispersion test: are urgent orders'
     values more SPREAD than the rest?  Center-folded doubled midrank
     scores min(R₂, 2(N+1)−R₂) from the $10-bucket histogram, exact
@@ -396,7 +393,6 @@ def _smk_sql(dialect: str) -> str:
 
 sql_query(
     "seasonal_mk_trend", _smk_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Hirsch-Slack seasonal Mann-Kendall on monthly revenue: the MK
     S statistic computed WITHIN each calendar month across years
     (same-month pairs only — a 12-month cycle contributes zero), the
@@ -461,7 +457,6 @@ def _cook_sql(dialect: str) -> str:
 
 sql_query(
     "cooks_distance_outliers", _cook_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Cook's distance on the daily revenue-vs-time OLS: exact integer
     D-scaled residuals (the durbin_watson device, shared CTEs from
     catalog_r8d), closed-form simple-regression leverage
@@ -512,7 +507,6 @@ def _u2_sql(dialect: str) -> str:
 
 sql_query(
     "theil_u2_forecast_audit", _u2_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r08; slot rotated (see catalog.py docstring)
     doc="""Theil's U₂² for the drift forecast (ŷ_t = y_{t−1} +
     (y_{t−1}−y_{t−2}), error 2y₁−y₀−y₂) against the no-change naive
     (error y₁−y₂) on daily revenue: exact integer sums of squares over

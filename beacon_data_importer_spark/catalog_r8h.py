@@ -465,7 +465,6 @@ def _mmr_greedy(spark: SparkSession, short_df: DataFrame) -> DataFrame:
 
 @query(
     "mmr_diversified_rerank",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     oracle=(
         lambda sl=_mmr_ivf_short_duck(),
         ps=_mmr_base_sql("duck")[1],
@@ -501,7 +500,6 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mmr_shortlist_recall_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     oracle=f"""
     WITH bshort AS ({_mmr_base_sql("duck")[0]}),
     ishort AS ({_mmr_ivf_short_duck()}),
@@ -649,7 +647,6 @@ def _fisher_sql(dialect: str) -> str:
 
 sql_query(
     "fisher_exact_2x2", _fisher_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""One-sided Fisher exact p-value P(X ≥ a) for the variant ×
     heavy-purchaser table: pmf(0) as a product fold over the
     second-margin terms, a walk-up product to pmf(a), and the
@@ -744,7 +741,6 @@ def _hurst_sql(dialect: str) -> str:
 
 sql_query(
     "hurst_exponent", _hurst_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Hurst exponent of daily revenue by R/S analysis: for each
     dyadic window size w ∈ {16..128}, full blocks of w consecutive
     days get their rescaled range R/S = range(cumdev)/√(w·Σy²−S²)
@@ -857,7 +853,6 @@ def _pcorr_sql(dialect: str) -> str:
 
 sql_query(
     "partial_correlation_triples", _pcorr_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Partial correlations for the daily (order count, revenue,
     discount volume) triple: one 9-sum aggregation gives the three
     ppm-floored marginal correlations (sqrt only of EXACT integer
@@ -937,7 +932,6 @@ def _bartlett_sql(dialect: str) -> str:
 
 sql_query(
     "bartlett_test", _bartlett_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Bartlett's variance-homogeneity statistic for order values ($10
     units) across the 5 regions: (N−k)·ln(s_p²) − Σ(nᵢ−1)ln(sᵢ²) with
     every logarithm floored to micro-nats per term (woe_iv device) and

@@ -81,7 +81,6 @@ def _cq_sql(dialect: str) -> str:
 
 sql_query(
     "cochran_q_test", _cq_sql, "events",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Cochran's Q over the user × event-type engagement panel
     (bᵤⱼ = 1 iff user u logged ≥13 events of type j):
     Q = (k−1)(kΣCⱼ² − T²)/(kT − ΣRᵤ²) — column and row totals are the
@@ -157,7 +156,6 @@ def _mh_sql(dialect: str) -> str:
 
 sql_query(
     "mantel_haenszel_cmh", _mh_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Mantel-Haenszel common odds ratio (urgent → high-value) across
     the five region strata plus the continuity-corrected CMH χ²: each
     stratum contributes ad/n, bc/n, E=r₁c₁/n and the hypergeometric
@@ -235,7 +233,6 @@ def _kpss_sql(dialect: str) -> str:
 
 sql_query(
     "kpss_stationarity", _kpss_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""KPSS level-stationarity test on daily revenue: partial sums of
     the EXACT integer deviations dev = n·y − S (the n factors cancel
     in η), Bartlett long-run variance at q=4 from the same deviation
@@ -394,7 +391,6 @@ def _pacf_sql(dialect: str) -> str:
 
 sql_query(
     "pacf_durbin_levinson", _pacf_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Partial autocorrelations of daily revenue, lags 1..6, by
     Durbin-Levinson: the autocorrelations are ppm-floored integers
     first (exact autocovariance quotients — the ljung_box deviation

@@ -98,7 +98,6 @@ def _pgram_sql(dialect: str) -> str:
 
 sql_query(
     "seasonal_periodogram_audit", _pgram_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Single-frequency spectral power of daily revenue at the four
     business periods: per period p, C = Σ dev_t·cos_ppm(t mod p) and
     S = Σ dev_t·sin_ppm(t mod p) with the trig values baked in as
@@ -164,7 +163,6 @@ def _mci_sql(dialect: str) -> str:
 
 sql_query(
     "median_ci_order_stat", _mci_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Distribution-free 95% CI for the median order value: the
     classical order-statistic ranks l = (n − z√n)/2 and
     u = n + 1 − l (binomial normal approximation; √n is the only

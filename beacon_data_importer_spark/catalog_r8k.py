@@ -86,7 +86,6 @@ def _hhm_oracle() -> str:
 
 @query(
     "heavy_hitters_merge_audit",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     oracle=_hhm_oracle(),
 )
 def q_heavy_hitters_merge_audit(

@@ -78,7 +78,6 @@ def _wilson_sql(dialect: str) -> str:
 sql_query(
     "wilson_score_interval",
     _wilson_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""95% Wilson score interval for each region's urgent-order share:
     center (a + z²/2)/(n + z²) in pure ppm integers, half-width via
     ONE sqrt whose radicand z²(a(n−a)/n + z²/4) is assembled from
@@ -159,7 +158,6 @@ def _sprt_sql(dialect: str) -> str:
 
 sql_query(
     "sprt_boundary_crossing", _sprt_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Wald SPRT (H₀: urgent share = 18% vs H₁: 22%; α = β = 0.05)
     replayed over the calendar: the per-day log-likelihood-ratio
     increment a·ln(p₁/p₀) + (m−a)·ln(q₁/q₀) uses micro-nat LITERALS
@@ -272,7 +270,6 @@ def _bd_sql(dialect: str) -> str:
 sql_query(
     "breslow_day_homogeneity",
     _bd_sql, "orders", "customer", "nation", "region",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Breslow-Day homogeneity test for the stratified odds ratios:
     BEFORE trusting ``mantel_haenszel_cmh``'s common OR, check the
     strata actually share one — per stratum, the expected cell ã under

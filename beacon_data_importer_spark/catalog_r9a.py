@@ -103,7 +103,6 @@ def _wilcoxon_sql(dialect: str) -> str:
 
 sql_query(
     "wilcoxon_signed_rank", _wilcoxon_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Wilcoxon signed-rank test on paired monthly revenue (1997 vs
     1998, paired by calendar month): zero differences dropped per the
     classic treatment, |d| ranked with DOUBLED midranks over the
@@ -180,7 +179,6 @@ def _sign_sql(dialect: str) -> str:
 
 sql_query(
     "sign_test_paired", _sign_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Exact paired sign test on the same 1997-vs-1998 monthly revenue
     pairs as ``wilcoxon_signed_rank`` — the two together are the paired
     decision pair (sign test assumes NOTHING about the difference
@@ -238,7 +236,6 @@ def _cox_stuart_sql(dialect: str) -> str:
 
 sql_query(
     "cox_stuart_trend", _cox_stuart_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Cox-Stuart trend test on daily revenue: day i paired with day
     i + n/2 (position on the calendar-indexed frame), S⁺ = #(later >
     earlier) among untied pairs, continuity-corrected z² =
@@ -293,7 +290,6 @@ def _turning_points_sql(dialect: str) -> str:
 
 sql_query(
     "turning_points_test", _turning_points_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Turning-points randomness test on daily revenue: T = count of
     strict local extrema (sign change between consecutive deltas —
     flats excluded), compared against the i.i.d. null T ~
@@ -399,7 +395,6 @@ def _bm_sql(dialect: str) -> str:
 
 sql_query(
     "brunner_munzel", _bm_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Brunner-Munzel / DeLong test of stochastic equality between
     BUILDING and MACHINERY order values: p̂ = P(X₂ > X₁) + ½P(=) from
     $10-bucket histograms (doubled placements 2·#less + #equal — the
@@ -449,7 +444,6 @@ def _cliffs_sql(dialect: str) -> str:
 
 sql_query(
     "cliffs_delta_effect", _cliffs_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Cliff's delta effect size between BUILDING and MACHINERY order
     values: δ = (#(x₁>x₂) − #(x₁<x₂))/(n₁n₂), the ordinal effect
     measure that p-value tests (``welch_t_test``, ``brunner_munzel``)
@@ -512,7 +506,6 @@ def _hl_sql(dialect: str) -> str:
 
 sql_query(
     "hodges_lehmann_shift", _hl_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Hodges-Lehmann location-shift estimator between BUILDING and
     MACHINERY order values: the median of all n₁·n₂ pairwise
     differences — the robust EFFECT SIZE in dollars that the rank
@@ -576,7 +569,6 @@ def _gamma_sql(dialect: str) -> str:
 
 sql_query(
     "kruskal_gamma", _gamma_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Goodman-Kruskal gamma between discount and quantity:
     γ = (C − D)/(C + D) — the tie-EXCLUDING ordinal association,
     bracketing ``kendall_tau_cells``'s tau-a (which divides by ALL
@@ -610,7 +602,6 @@ def _somers_sql(dialect: str) -> str:
 
 sql_query(
     "somers_d", _somers_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Somers' D between discount and quantity, BOTH directions:
     D(y|x) = (C − D)/(C + D + T_y) penalizes ties on the DEPENDENT
     variable only — the asymmetric ordinal association underlying the

@@ -127,7 +127,6 @@ def _qr_sql(dialect: str) -> str:
 
 sql_query(
     "quantile_regression_irls", _qr_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Median (LAD) regression of daily revenue on time by iteratively
     reweighted least squares, 3 steps unrolled: wᵢ = 1/max(|rᵢ|, δ)
     computed as the EXACT integer quotient 1e12 div max(|r_e6|, 1e6)
@@ -222,7 +221,6 @@ def _granger_sql(dialect: str) -> str:
 
 sql_query(
     "granger_lag1_test", _granger_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Lag-1 Granger causality: does yesterday's ORDER COUNT predict
     today's revenue beyond what yesterday's revenue already does?
     Restricted R² = r²(y, y₋₁); unrestricted R² adds x₋₁ via the
@@ -279,7 +277,6 @@ def _arch_sql(dialect: str) -> str:
 
 sql_query(
     "arch_lm_test", _arch_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Engle's ARCH(1) LM test on the daily-revenue OLS residuals:
     regress e²ₜ on e²ₜ₋₁ — LM = m·R² where R² is the squared
     ppm-floored correlation of consecutive squared residuals, vs χ²₁.
@@ -354,7 +351,6 @@ def _yw_sql(dialect: str) -> str:
 
 sql_query(
     "yule_walker_ar2", _yw_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""AR(2) fit of daily revenue by Yule-Walker: φ₁ = r₁(1−r₂)/(1−r₁²)
     and φ₂ = (r₂−r₁²)/(1−r₁²) from the ppm-floored autocorrelations
     (the ``ljung_box_test`` dev = n·y−S device — the n² factors cancel
@@ -409,7 +405,6 @@ def _dm_sql(dialect: str) -> str:
 
 sql_query(
     "diebold_mariano_test", _dm_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Diebold-Mariano forecast-comparison test over the drift vs
     naive one-step forecasts of daily revenue (``theil_u2``'s exact
     integer error pair): loss differential dₜ = e²_drift − e²_naive
@@ -477,7 +472,6 @@ def _ts_sql(dialect: str) -> str:
 
 sql_query(
     "tracking_signal_audit", _ts_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Forecast-bias tracking signal for the naive (last-value)
     forecast of daily revenue: TSₜ = Σe/(Σ|e|/t) — the running
     cumulative error over the running MAD, the classic ops-dashboard
@@ -538,7 +532,6 @@ def _pe_sql(dialect: str) -> str:
 
 sql_query(
     "permutation_entropy", _pe_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Order-3 permutation entropy (Bandt-Pompe) of daily revenue:
     each consecutive-day triple maps to its ordinal pattern (ties
     broken by position — earlier day ranks lower, so the three ≥
@@ -593,7 +586,6 @@ def _sen_seasonal_sql(dialect: str) -> str:
 
 sql_query(
     "sen_slope_seasonal", _sen_seasonal_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Seasonal Sen's slope of monthly revenue: the median of the
     SAME-MONTH across-year pairwise slopes (January-to-January,
     February-to-February, …) — the magnitude estimate that pairs with
@@ -685,7 +677,6 @@ def _ecc_sql(dialect: str) -> str:
 
 sql_query(
     "ewma_control_chart", _ecc_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""EWMA control chart on daily revenue (α = ½, truncated-7 —
     the ``ewma_daily_revenue`` smoother, re-expressed with ×64
     INTEGER weights so the statistic path never touches a float):

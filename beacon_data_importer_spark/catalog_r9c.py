@@ -88,7 +88,6 @@ def _gtest_sql(dialect: str) -> str:
 
 sql_query(
     "g_test_independence", _gtest_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Likelihood-ratio G-test on returnflag × linestatus:
     G = 2 Σ O·ln(O·N/(r·c)), each cell's log-likelihood ratio floored
     ONCE to micro-nats (the ``woe_iv`` per-term device; O·N and r·c
@@ -165,7 +164,6 @@ def _ebshrink_sql(dialect: str) -> str:
 
 sql_query(
     "bayesian_shrinkage_rates", _ebshrink_sql, "orders", "customer", "nation",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Empirical-Bayes shrinkage of per-nation urgent-order rates
     under a method-of-moments beta-binomial prior: the prior strength
     κ = m(1−m)/v − 1 comes from the observed across-nation rate mean
@@ -245,7 +243,6 @@ def _ratio_ci_sql(dialect: str) -> str:
 
 sql_query(
     "ratio_metric_delta_ci", _ratio_ci_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Delta-method 95% CI for the revenue-per-order RATIO metric by
     hash-assigned variant, analyzed at the CUSTOMER grain: the ratio
     of sums R = Σx/Σy has Var ≈ (s²ₓ − 2Rsₓᵧ + R²s²ᵧ)/(n·ȳ²) — using
@@ -312,7 +309,6 @@ def _evalue_sql(dialect: str) -> str:
 
 sql_query(
     "evalue_sensitivity", _evalue_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""VanderWeele's E-value for the urgent-priority → high-value
     association: E = RR* + √(RR*(RR*−1)) with RR* the risk ratio
     folded above 1 — the minimum strength of association an
@@ -397,7 +393,6 @@ def _ato_sql(dialect: str) -> str:
 
 sql_query(
     "overlap_weights_ato", _ato_sql, "orders", "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Overlap-weighted treatment effect (Li-Morgan-Zaslavsky ATO) of
     urgent priority on order→first-ship latency: with h(x) = e(1−e)
     overlap weights, treated units weigh (1−e) and controls weigh e —
@@ -469,7 +464,6 @@ def _kw_sql(dialect: str) -> str:
 
 sql_query(
     "kendall_w_concordance", _kw_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Kendall's coefficient of concordance W for the within-month
     revenue rankings of the 5 market segments (complete months only —
     the ``friedman_test`` frame): W = 12·S/(n²k(k²−1)) assembled

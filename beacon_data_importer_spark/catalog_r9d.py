@@ -98,7 +98,6 @@ def _gini_sql(dialect: str) -> str:
 
 sql_query(
     "gini_lorenz_audit", _gini_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Customer-revenue Gini coefficient + Lorenz decile table, zeros
     included: values coarsen to $1000 buckets, and the mean-absolute-
     difference numerator Σ_{{a<b}} c_a c_b (v_b − v_a) collapses to ONE
@@ -200,7 +199,6 @@ def _dd_sql(dialect: str) -> str:
 
 sql_query(
     "ddsketch_quantile_audit", _dd_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Relative-error quantile sketch (DDSketch's idea, integer-exact
     construction): order values land in powers-of-two octaves via a
     41-row broadcast literal table — NO log() runs, so the bucket id
@@ -259,7 +257,6 @@ def _zip_sql(dialect: str) -> str:
 
 sql_query(
     "poisson_zero_inflation_audit", _zip_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Zero-inflation screen for the per-customer 1997 order counts
     (zeros INCLUDED via the customer left join — the point): a
     Poisson with the observed mean predicts p₀ = e^{{−λ}}, so excess

@@ -85,7 +85,6 @@ def _balance_sql(dialect: str) -> str:
 
 sql_query(
     "ivf_cell_balance_audit", _balance_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Cell-population balance of the deterministic IVF index: max and
     min cell sizes, imbalance = max/mean (ppm), and the largest cell's
     corpus share.  The IVF cost model — "nprobe cells ≈ nprobe/nlist
@@ -170,7 +169,6 @@ def _curve_sql(dialect: str) -> str:
 
 sql_query(
     "ivf_nprobe_recall_curve", _curve_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Recall@10 vs nprobe for the ``ivf_search`` configuration, one
     statement, 5 rows: candidates at nprobe=k are the vectors whose
     cells rank ≤ k by query-centroid cosine; each curve point's top-10
@@ -268,7 +266,6 @@ def _pq_dist_sql(dialect: str) -> str:
 
 sql_query(
     "pq_distortion_audit", _pq_dist_sql, "embeddings",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Per-subspace quantization distortion of the ``pq_search``
     codebook (M=8 subspaces × K=16 deterministic codewords): for each
     (vector, subspace), the squared L2 to the NEAREST codeword — the
@@ -330,7 +327,6 @@ def _assort_sql(dialect: str) -> str:
 
 sql_query(
     "degree_assortativity", _assort_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Degree assortativity of the supplier→part shipment graph:
     Pearson correlation, over the DISTINCT edges, of the two
     endpoints' degrees — positive means hub suppliers concentrate on

@@ -100,7 +100,6 @@ def _novelty_sql(dialect: str) -> str:
 
 sql_query(
     "trigram_novelty_curve", _novelty_sql, "documents",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Novel-trigram rate along the ingestion order, by doc-id-range
     decile: a trigram OCCURRENCE is novel iff its type's first
     appearance (exact MIN(doc_id) attribution — deterministic, not
@@ -163,7 +162,6 @@ def _containment_sql(dialect: str) -> str:
 
 sql_query(
     "shingle_containment_pairs", _containment_sql, "documents",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Asymmetric near-dup candidates by rare-shingle CONTAINMENT:
     3-word shingle sets per document, the inverted index capped at
     document frequency ≤ {df} (the blocking device — a shingle in
@@ -229,7 +227,6 @@ def _fertility_sql(dialect: str) -> str:
 
 sql_query(
     "tokenizer_fertility_by_source", _fertility_sql, "documents",
-    registered=False,  # driver-proven green in CORRECTNESS_r09; slot rotated (see catalog.py docstring)
     doc="""Tokenizer fertility table by source: tokens-per-whitespace-word
     and chars-per-token under the GPT-ish regex tokenizer (alnum
     chunks + one token per punctuation mark — the ``token_length``

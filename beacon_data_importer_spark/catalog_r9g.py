@@ -82,7 +82,6 @@ def _ad2_sql(dialect: str) -> str:
 
 sql_query(
     "anderson_darling_2sample", _ad2_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Two-sample Anderson-Darling test (Pettitt's ECDF form) between
     BUILDING and MACHINERY order values: A² = (N/nm)·Σ_z c_z·(m·F_a −
     n·F_b)²ₙₘ/(H(N−H)) over the distinct $10 buckets (last stratum
@@ -163,7 +162,6 @@ def _ph_sql(dialect: str) -> str:
 
 sql_query(
     "page_hinkley_drift", _ph_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Page-Hinkley upward mean-shift detector replayed over daily
     revenue: mₜ = Σ(yᵢ − ȳᵢ) with ȳᵢ the RUNNING mean (the classic
     self-normalizing form, δ = 0), PHₜ = mₜ − min_{{i≤t}} mᵢ, alarm
@@ -254,7 +252,6 @@ def _tsci_sql(dialect: str) -> str:
 
 sql_query(
     "theil_sen_ci", _tsci_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Gilbert's 95% confidence interval for Sen's slope on monthly
     revenue: the CI endpoints are ORDER STATISTICS of the pairwise
     slopes at ranks (N ∓ C_α)/2 with C_α = z·√(n(n−1)(2n+5)/18) (the
@@ -295,7 +292,6 @@ def _taub_sql(dialect: str) -> str:
 
 sql_query(
     "kendall_tau_b", _taub_sql, "lineitem",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Kendall's tau-b between discount and quantity — the
     tie-CORRECTED association that completes the tau family from the
     single ``kendall_tau_cells`` value-cell device: tau-a divides by
@@ -389,7 +385,6 @@ def _mp_sql(dialect: str) -> str:
 
 sql_query(
     "median_polish_lite", _mp_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Tukey median polish of the month × segment revenue grid
     (complete months only), two row/column sweeps unrolled: row
     medians subtracted (the 5-segment median is exactly rank 3 under

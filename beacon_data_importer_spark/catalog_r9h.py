@@ -121,7 +121,6 @@ def _xi_sql(dialect: str) -> str:
 
 sql_query(
     "chatterjee_xi", _xi_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Chatterjee's ξ coefficient between daily order count and daily
     revenue, BOTH directions: order the days by the conditioning
     variable (ties broken by calendar day — deterministic, both
@@ -196,7 +195,6 @@ def _lepage_sql(dialect: str) -> str:
 
 sql_query(
     "lepage_test", _lepage_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Lepage's combined location-scale test between BUILDING and
     MACHINERY order values: L = z²_Wilcoxon + z²_Ansari vs χ²₂, both
     z² assembled from ONE $10-bucket histogram pass with the exact
@@ -278,7 +276,6 @@ def _quade_sql(dialect: str) -> str:
 
 sql_query(
     "quade_test", _quade_sql, "orders", "customer",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Quade's weighted repeated-measures test on the month × segment
     revenue grid (complete months): within-month ranks r (strict, the
     ``friedman_test`` frame), blocks weighted by the RANK of their
@@ -352,7 +349,6 @@ def _gumbel_sql(dialect: str) -> str:
 
 sql_query(
     "gumbel_block_maxima", _gumbel_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Gumbel fit of 30-day block maxima of daily revenue by method of
     moments: σ̂ = s√6/π and μ̂ = m̄ − γσ̂ with π and Euler's γ as
     shared double LITERALS.  (Round-11 fix, caught by
@@ -429,7 +425,6 @@ def _pot_sql(dialect: str) -> str:
 
 sql_query(
     "pot_mean_excess", _pot_sql, "orders",
-    registered=False,  # driver-proven green in CORRECTNESS_r10; slot rotated (see catalog.py)
     doc="""Peaks-over-threshold tail diagnosis of daily revenue: threshold
     u = the rank-defined P90 (first distinct value whose cumulative
     count reaches 90% — no interpolation), excesses e = y − u, and the

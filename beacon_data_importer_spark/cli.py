@@ -94,7 +94,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "query":
         from . import all_catalogs as _cat  # imports every catalog module
 
-        registry = {**_cat.QUERIES, **_cat.EXTRA_QUERIES}
+        registry = _cat.QUERIES
         if args.list or not args.name:
             for n in sorted(registry):
                 print(n)

@@ -207,7 +207,7 @@ def pack_bins_bestfit(
     given (shard, tokens, id), so reruns and repartitionings agree —
     but the placement rule is a loop, not a SQL expression, so this
     operator carries invariant tests instead of a DuckDB hash oracle
-    (catalog ROWS_ONLY; same policy as the sketch estimates).
+    (the catalog's ``pack_bins_bestfit`` adds a recursive-CTE replay).
 
     Returns (id, shard, n_tokens, pack_id) with pack_id unique within
     shard.

@@ -103,8 +103,9 @@ def approx_heavy_hitters(
     (item, cnt) rows re-sorted deterministically (cnt desc, item asc) —
     the sketch's own tie order is unspecified.
 
-    Engine-specific estimates → no DuckDB oracle, same documented
-    policy as the HLL/GK sketches (catalog.py ROWS_ONLY rationale).
+    Engine-specific estimates → no DuckDB oracle of their own, as for
+    the HLL/GK sketches (``heavy_hitters_audit`` referees them against
+    the exact top-k).
     """
     sk = df.agg(
         F.expr(

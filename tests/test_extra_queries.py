@@ -1,8 +1,8 @@
-"""CI gate for the EXTRA catalog queries (registered=False).
+"""CI gate for the EXTRA catalog queries (outside ``DRIVER_SLOTS``).
 
-The driver's correctness gate verifies the first 50 registered queries;
-extras — queries whose operator coverage is subsumed by a registered
-query — are verified HERE with exactly the driver-mimicking comparison
+The driver's correctness gate verifies the first 50 entries of
+``queries()`` (the ``catalog.DRIVER_SLOTS`` names); every other query is
+verified HERE with exactly the driver-mimicking comparison
 from tools/check_oracle.py (row count, sorted columns, type-sensitive
 order-insensitive value hash vs the DuckDB oracle).  This keeps every
 catalog entry under an automated cross-engine check even when it does
@@ -57,16 +57,18 @@ def _extra_names():
     # coverage depended on pytest's collection ORDER (round-7 find).
     from beacon_data_importer_spark import all_catalogs as catalog
 
-    return sorted(catalog.EXTRA_QUERIES)
+    return sorted(set(catalog.QUERIES) - set(catalog.DRIVER_SLOTS))
 
 
 def test_registered_query_count_is_at_most_50():
+    import __spark_entry__ as entry
     from beacon_data_importer_spark import all_catalogs as catalog
 
-    assert len(catalog.QUERIES) <= 50, (
-        "driver gate checks the first 50 queries; demote the overflow to "
-        "EXTRA_QUERIES (registered=False)"
-    )
+    assert len(catalog.DRIVER_SLOTS) == 50, "the driver gate checks 50 slots"
+    unknown = set(catalog.DRIVER_SLOTS) - set(catalog.QUERIES)
+    assert not unknown, f"DRIVER_SLOTS names no registered query: {unknown}"
+    assert set(catalog.ORACLES) == set(catalog.QUERIES), "every query has an oracle"
+    assert set(list(entry.queries())[:50]) == set(catalog.DRIVER_SLOTS)
 
 
 @pytest.fixture(scope="module")
@@ -87,7 +89,7 @@ def spark_results(spark):
     built = {}
     for n in _extra_names():
         try:
-            built[n] = catalog.EXTRA_QUERIES[n](spark, SF_DIR)
+            built[n] = catalog.QUERIES[n](spark, SF_DIR)
         except Exception as ex:  # surfaced by that query's own test
             built[n] = ex
 
@@ -111,15 +113,7 @@ def test_extra_query_matches_oracle(spark, duck, spark_results, name):
     spdf = spark_results[name]
     if isinstance(spdf, Exception):
         raise spdf
-    if name in catalog.ROWS_ONLY:
-        # documented no-SQL-twin query (catalog.ROWS_ONLY): the oracle
-        # compare is replaced by a dedicated invariant test elsewhere;
-        # here just require a non-trivial result.
-        assert name not in catalog.EXTRA_ORACLES, f"{name}: ROWS_ONLY yet has oracle"
-        assert len(spdf) > 0, f"{name}: ROWS_ONLY query returned no rows"
-        return
-    assert name in catalog.EXTRA_ORACLES, f"extra {name} has no oracle"
-    dpdf = duck.execute(catalog.EXTRA_ORACLES[name]).df()
+    dpdf = duck.execute(catalog.ORACLES[name]).df()
 
     assert len(spdf) == len(dpdf), f"{name}: rowcount {len(spdf)} != {len(dpdf)}"
     assert sorted(spdf.columns) == sorted(dpdf.columns), f"{name}: schema"

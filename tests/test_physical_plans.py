@@ -274,7 +274,7 @@ def test_all_catalog_plans_stay_jvm_side():
         "multimodal_resize_plan",   # decode_media feeds the Column-only resize math
         "multimodal_frame_stats",   # same surface
         "grouped_zscore_pandas",    # exists to MEASURE the escape hatch
-        "pack_bins_bestfit",        # sequential placement loop (ROWS_ONLY)
+        "pack_bins_bestfit",        # sequential placement loop (applyInPandas)
         "flatmap_attempts_udtf",    # exists to demonstrate the UDTF path
     }
     audit = json.loads(

@@ -14,18 +14,14 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
+from beacon_data_importer_spark.catalog import QUERIES
 import beacon_data_importer_spark.catalog_r3c  # noqa: F401 (registers queries)
 from beacon_data_importer_spark.catalog_r3c import _BM25_TERMS, _PASSAGE_W
-
-# Slot rotation moves queries between QUERIES and EXTRA_QUERIES across
-# rounds; these invariant tests are registration-agnostic.
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
 
 
 @pytest.fixture(scope="module")
 def passage_result(spark, sf_dir):
-    df = ALL_QUERIES["passage_dedup"](spark, sf_dir)
+    df = QUERIES["passage_dedup"](spark, sf_dir)
     df = df.persist()
     yield df
     df.unpersist()
@@ -82,7 +78,7 @@ def test_passage_dedup_global_first_occurrence(spark, sf_dir):
     unique corpus-wide — re-running the dedup on its own output at the
     same anchors removes nothing.  Idempotence is the defining property
     of exact dedup."""
-    out1 = ALL_QUERIES["passage_dedup"](spark, sf_dir).select(
+    out1 = QUERIES["passage_dedup"](spark, sf_dir).select(
         "doc_id", F.col("clean_text").alias("text")
     )
     # rebuild passages from the deduped text at the same window size;
@@ -116,7 +112,7 @@ def test_passage_dedup_global_first_occurrence(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def bm25_result(spark, sf_dir):
-    df = ALL_QUERIES["bm25_search"](spark, sf_dir)
+    df = QUERIES["bm25_search"](spark, sf_dir)
     rows = df.collect()
     return rows
 
@@ -148,7 +144,7 @@ def test_bm25_hits_contain_a_query_term(spark, sf_dir, bm25_result):
 
 
 def test_event_transitions_shares_sum_to_unity(spark, sf_dir):
-    rows = ALL_QUERIES["event_transitions"](spark, sf_dir).collect()
+    rows = QUERIES["event_transitions"](spark, sf_dir).collect()
     assert rows
     by_from = {}
     for r in rows:
@@ -160,7 +156,7 @@ def test_event_transitions_shares_sum_to_unity(spark, sf_dir):
 
 
 def test_cohort_retention_offsets_start_at_zero(spark, sf_dir):
-    rows = ALL_QUERIES["cohort_retention"](spark, sf_dir).collect()
+    rows = QUERIES["cohort_retention"](spark, sf_dir).collect()
     assert rows
     assert all(r.week_offset >= 0 for r in rows)
     # every cohort has an offset-0 row (its own first week)
@@ -170,7 +166,7 @@ def test_cohort_retention_offsets_start_at_zero(spark, sf_dir):
 
 
 def test_source_top_terms_shape(spark, sf_dir):
-    rows = ALL_QUERIES["source_top_terms"](spark, sf_dir).collect()
+    rows = QUERIES["source_top_terms"](spark, sf_dir).collect()
     assert rows
     per_src = {}
     for r in rows:
@@ -185,14 +181,14 @@ def test_source_top_terms_shape(spark, sf_dir):
 
 
 def test_pagerank_mass_and_determinism(spark, sf_dir):
-    df = ALL_QUERIES["pagerank_parts"](spark, sf_dir)
+    df = QUERIES["pagerank_parts"](spark, sf_dir)
     rows = df.collect()
     assert 0 < len(rows) <= 20
     # ranks stay positive and the teleport floor holds
     assert all(r.score_e6 >= 150000 for r in rows)
     assert all(r.kind in ("part", "supplier") for r in rows)
     # deterministic: a second run returns identical rows in order
-    again = ALL_QUERIES["pagerank_parts"](spark, sf_dir).collect()
+    again = QUERIES["pagerank_parts"](spark, sf_dir).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in again]
 
 
@@ -273,7 +269,7 @@ def test_quality_row_checks_requires_predicates(spark):
 
 
 def test_forward_fill_carries_last_purchase(spark, sf_dir):
-    out = ALL_QUERIES["forward_fill_events"](spark, sf_dir)
+    out = QUERIES["forward_fill_events"](spark, sf_dir)
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
     # users with no purchase at all must be all-NULL
     import pyspark.sql.functions as SF
@@ -317,7 +313,7 @@ def test_temperature_sample_flattens_the_mixture(spark, sf_dir):
     count ratios."""
     import pyspark.sql.functions as SF
 
-    out = ALL_QUERIES["temperature_mixture_sample"](spark, sf_dir)
+    out = QUERIES["temperature_mixture_sample"](spark, sf_dir)
     got = {
         r.source: r.n
         for r in out.groupBy("source").agg(SF.count(SF.lit(1)).alias("n")).collect()
@@ -338,7 +334,7 @@ def test_temperature_sample_flattens_the_mixture(spark, sf_dir):
 
 
 def test_robust_outliers_bounds(spark, sf_dir):
-    rows = ALL_QUERIES["robust_outliers"](spark, sf_dir).collect()
+    rows = QUERIES["robust_outliers"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.mad_cents >= 0 and r.median_cents > 0
@@ -347,7 +343,7 @@ def test_robust_outliers_bounds(spark, sf_dir):
 
 
 def test_token_cooccurrence_symmetric_and_bounded(spark, sf_dir):
-    rows = ALL_QUERIES["token_cooccurrence"](spark, sf_dir).collect()
+    rows = QUERIES["token_cooccurrence"](spark, sf_dir).collect()
     assert 0 < len(rows) <= 20
     for r in rows:
         assert r.term_a < r.term_b  # canonical unordered pairs
@@ -373,7 +369,7 @@ def test_snapshot_diff_operator_all_change_types(spark):
 
 
 def test_triangle_count_is_consistent(spark, sf_dir):
-    r = ALL_QUERIES["triangle_count"](spark, sf_dir).collect()[0]
+    r = QUERIES["triangle_count"](spark, sf_dir).collect()[0]
     assert r.n_nodes > 0 and r.n_edges > 0
     # triangles bounded by C(edges over any vertex): sanity ceiling
     assert 0 <= r.n_triangles <= r.n_edges ** 2
@@ -395,7 +391,7 @@ def test_dataset_split_grouped_is_leakage_safe(spark, sf_dir):
 
 
 def test_dedup_eval_confusion_matrix_consistent(spark, sf_dir):
-    r = ALL_QUERIES["dedup_eval"](spark, sf_dir).collect()[0]
+    r = QUERIES["dedup_eval"](spark, sf_dir).collect()[0]
     assert r.tp + r.fp == r.n_predicted_pairs
     assert r.tp + r.fn == r.n_truth_pairs
     if r.n_predicted_pairs:
@@ -437,7 +433,7 @@ def test_salted_join_spreads_the_hot_key(spark):
 
 
 def test_pareto_frontier_is_mutually_nondominated(spark, sf_dir):
-    rows = ALL_QUERIES["pareto_frontier"](spark, sf_dir).collect()
+    rows = QUERIES["pareto_frontier"](spark, sf_dir).collect()
     assert rows
     pts = [(r.price_c, r.size) for r in rows]
     for i, (pa, sa) in enumerate(pts):

@@ -14,9 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r4  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 @contextlib.contextmanager
@@ -43,7 +41,7 @@ def test_bucketed_join_has_no_exchange_on_the_join_key(spark, sf_dir):
     # becomes visible as a SortMergeJoin with no Exchange below it.
     with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         with _conf(spark, "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"):
-            plan = _executed_plan(ALL_QUERIES["bucketed_join"](spark, sf_dir))
+            plan = _executed_plan(QUERIES["bucketed_join"](spark, sf_dir))
     assert "SortMergeJoin" in plan, plan
     assert "Bucketed: true" in plan, plan
     # the only allowed exchange is the post-join nationkey aggregation
@@ -53,7 +51,7 @@ def test_bucketed_join_has_no_exchange_on_the_join_key(spark, sf_dir):
 
 
 def test_partitioned_scan_prunes_at_planning_time(spark, sf_dir):
-    df = ALL_QUERIES["partitioned_scan_prune"](spark, sf_dir)
+    df = QUERIES["partitioned_scan_prune"](spark, sf_dir)
     plan = _executed_plan(df)
     assert "PartitionFilters: [" in plan
     # the source predicate must be a partition filter, not a data filter
@@ -76,7 +74,7 @@ def test_zorder_prunes_where_linear_sort_cannot(spark, sf_dir):
     from beacon_data_importer_spark.sources.parquet import read_table
     from pyspark.sql import Window
 
-    rows = ALL_QUERIES["zorder_layout"](spark, sf_dir).collect()
+    rows = QUERIES["zorder_layout"](spark, sf_dir).collect()
     assert len(rows) == _Z_FILES
     z_scanned = sum(1 for r in rows if r["scanned_for_box"])
     assert 0 < z_scanned < _Z_FILES, "Z-order layout prunes nothing"
@@ -168,7 +166,7 @@ def test_concurrent_layout_staging_is_safe(spark, sf_dir):
     def run():
         try:
             rows = sorted(
-                map(tuple, ALL_QUERIES["bucketed_join"](spark, sf_dir).collect())
+                map(tuple, QUERIES["bucketed_join"](spark, sf_dir).collect())
             )
             results.append(rows)
         except Exception as e:  # noqa: BLE001 — surfacing into the assert

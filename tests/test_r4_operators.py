@@ -9,9 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r4  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_rolling_distinct_matches_naive_window_form(spark, sf_dir):
@@ -19,7 +17,7 @@ def test_rolling_distinct_matches_naive_window_form(spark, sf_dir):
     with the quadratic collect_list formulation it replaced."""
     from beacon_data_importer_spark.sources.parquet import read_table
 
-    fast = ALL_QUERIES["rolling_distinct_customers"](spark, sf_dir)
+    fast = QUERIES["rolling_distinct_customers"](spark, sf_dir)
 
     o = read_table(spark, sf_dir, "orders")
     day_no = F.datediff(
@@ -50,7 +48,7 @@ def test_semantic_dedup_first_wins_rule(spark, sf_dir):
     from beacon_data_importer_spark.operators.kmeans import assign_clusters
     from beacon_data_importer_spark.sources.parquet import read_table
 
-    out = {r["vec_id"]: r for r in ALL_QUERIES["semantic_dedup"](spark, sf_dir).collect()}
+    out = {r["vec_id"]: r for r in QUERIES["semantic_dedup"](spark, sf_dir).collect()}
 
     e = read_table(spark, sf_dir, "embeddings")
     centroids = _kmeans_fit_cached(spark, sf_dir)
@@ -90,7 +88,7 @@ def test_time_weighted_avg_bounded_by_value_range(spark, sf_dir):
 
     twa = {
         r["user_id"]: r["twa_e6"]
-        for r in ALL_QUERIES["time_weighted_avg"](spark, sf_dir).collect()
+        for r in QUERIES["time_weighted_avg"](spark, sf_dir).collect()
     }
     e = read_table(spark, sf_dir, "events")
     rng = {
@@ -118,7 +116,7 @@ def test_weighted_median_splits_the_weight(spark, sf_dir):
 
     meds = {
         r["returnflag"]: (r["weighted_median_cents"], r["total_weight"])
-        for r in ALL_QUERIES["weighted_median"](spark, sf_dir).collect()
+        for r in QUERIES["weighted_median"](spark, sf_dir).collect()
     }
     li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("rf"),
@@ -146,7 +144,7 @@ def test_bucket_checksum_diff_flags_exactly_the_mutated_buckets(spark, sf_dir):
     from beacon_data_importer_spark.catalog_r4 import _CKBUCKETS
     from beacon_data_importer_spark.sources.parquet import read_table
 
-    rows = ALL_QUERIES["bucket_checksum_diff"](spark, sf_dir).collect()
+    rows = QUERIES["bucket_checksum_diff"](spark, sf_dir).collect()
     got = {r["bucket"]: r["differs"] for r in rows}
 
     o = read_table(spark, sf_dir, "orders")
@@ -166,7 +164,7 @@ def test_bucket_checksum_diff_flags_exactly_the_mutated_buckets(spark, sf_dir):
 
 
 def test_argmax_per_group_dominance(spark, sf_dir):
-    rows = ALL_QUERIES["argmax_per_group"](spark, sf_dir).collect()
+    rows = QUERIES["argmax_per_group"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r["top_acctbal_cents"] >= r["bottom_acctbal_cents"]

@@ -12,9 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__  # noqa: F401 (registers the full catalog)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def _edge_list(spark, sf_dir):
@@ -57,7 +55,7 @@ def test_kcore_matches_pure_python_peel(spark, sf_dir):
     }
     got = {
         r.vertex: r.deg_in_core
-        for r in ALL_QUERIES["kcore_decomposition"](spark, sf_dir).collect()
+        for r in QUERIES["kcore_decomposition"](spark, sf_dir).collect()
     }
     assert got == want
     assert len(got) > 0
@@ -85,7 +83,7 @@ def test_clustering_coefficient_matches_brute_force(spark, sf_dir):
         want[v] = (d, t, (t * 2_000_000) // (d * (d - 1)))
     got = {
         r.vertex: (r.degree, r.n_triangles, r.cc_micro)
-        for r in ALL_QUERIES["clustering_coefficient"](
+        for r in QUERIES["clustering_coefficient"](
             spark, sf_dir
         ).collect()
     }
@@ -124,7 +122,7 @@ def test_link_prediction_matches_brute_force(spark, sf_dir):
     )[:_LINKPRED_TOPN]
     got = [
         (r.n_cn, r.aa_micro, r.a, r.b)
-        for r in ALL_QUERIES["link_prediction_scores"](
+        for r in QUERIES["link_prediction_scores"](
             spark, sf_dir
         ).collect()
     ]
@@ -176,7 +174,7 @@ def test_prefix_filter_complete_vs_exhaustive(spark, sf_dir):
 
     got = {
         (r.id_a, r.id_b, r.jaccard_e6)
-        for r in ALL_QUERIES["prefix_filter_jaccard_join"](
+        for r in QUERIES["prefix_filter_jaccard_join"](
             spark, sf_dir
         ).collect()
     }
@@ -242,7 +240,7 @@ def test_anova_matches_numpy_float_reference(spark, sf_dir):
 
     from beacon_data_importer_spark.sources.parquet import read_table
 
-    r = ALL_QUERIES["anova_oneway"](spark, sf_dir).collect()[0]
+    r = QUERIES["anova_oneway"](spark, sf_dir).collect()[0]
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer")
     rows = (
@@ -273,7 +271,7 @@ def test_max_drawdown_matches_python_scan(spark, sf_dir):
 
     got = {
         r.yr: (r.trough_ep, r.trough_cents, r.peak_cents, r.drawdown_ppm)
-        for r in ALL_QUERIES["max_drawdown"](spark, sf_dir).collect()
+        for r in QUERIES["max_drawdown"](spark, sf_dir).collect()
     }
     o = read_table(spark, sf_dir, "orders").collect()
     import datetime
@@ -308,7 +306,7 @@ def test_mutual_information_matches_python(spark, sf_dir):
 
     got = {
         (r.tbl, r.colx, r.coly): (r.n_cells, r.n_rows, r.mi_microbits)
-        for r in ALL_QUERIES["mutual_information"](spark, sf_dir).collect()
+        for r in QUERIES["mutual_information"](spark, sf_dir).collect()
     }
     for tbl, cx, cy in _MI_PAIRS:
         rows = read_table(spark, sf_dir, tbl).select(cx, cy).collect()
@@ -340,7 +338,7 @@ def test_embedding_drift_matches_numpy_cosine_of_means(spark, sf_dir):
 
     got = {
         r.label: r.cos_to_corpus_micro
-        for r in ALL_QUERIES["embedding_drift_by_label"](
+        for r in QUERIES["embedding_drift_by_label"](
             spark, sf_dir
         ).collect()
     }
@@ -370,7 +368,7 @@ def test_gini_matches_python_reference(spark, sf_dir):
     got = {
         r.yr: (r.n_orders, r.total_cents, r.gini_micro,
                r.top_decile_share_ppm)
-        for r in ALL_QUERIES["revenue_concentration"](
+        for r in QUERIES["revenue_concentration"](
             spark, sf_dir
         ).collect()
     }

@@ -12,10 +12,8 @@ from collections import Counter, defaultdict
 from pyspark.sql import functions as F
 
 import __spark_entry__  # noqa: F401 (registers the full catalog)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
+from beacon_data_importer_spark.catalog import QUERIES
 from beacon_data_importer_spark.catalog_r5b import BPE_MERGES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
 
 
 def _bpe_encode(word: str) -> list[str]:
@@ -59,10 +57,10 @@ def test_bpe_tokenize_matches_list_encoder(spark, sf_dir):
         acc[3] += sum(len(_bpe_encode(w)) for w in words)
     got = {
         r.source: [r.n_docs, r.n_words, r.n_chars, r.n_tokens]
-        for r in ALL_QUERIES["bpe_tokenize"](spark, sf_dir).collect()
+        for r in QUERIES["bpe_tokenize"](spark, sf_dir).collect()
     }
     assert got == dict(want)
-    for r in ALL_QUERIES["bpe_tokenize"](spark, sf_dir).collect():
+    for r in QUERIES["bpe_tokenize"](spark, sf_dir).collect():
         assert r.tokens_per_word_ppm == r.n_tokens * 1_000_000 // r.n_words
         assert r.chars_per_token_ppm == r.n_chars * 1_000_000 // r.n_tokens
 
@@ -94,7 +92,7 @@ def test_bpe_merge_audit_matches_list_encoder(spark, sf_dir):
                 distinct[rank] += 1
     got = {
         r.rank: (r.pair, r.merged, r.firings, r.distinct_words)
-        for r in ALL_QUERIES["bpe_merge_audit"](spark, sf_dir).collect()
+        for r in QUERIES["bpe_merge_audit"](spark, sf_dir).collect()
     }
     want = {
         rank: (f"{a}+{b}", a + b, firings[rank], distinct[rank])
@@ -103,7 +101,7 @@ def test_bpe_merge_audit_matches_list_encoder(spark, sf_dir):
     }
     assert got == want
     # conservation: every firing removes exactly one token
-    tok_rows = ALL_QUERIES["bpe_tokenize"](spark, sf_dir).collect()
+    tok_rows = QUERIES["bpe_tokenize"](spark, sf_dir).collect()
     n_chars = sum(r.n_chars for r in tok_rows)
     n_tokens = sum(r.n_tokens for r in tok_rows)
     assert n_chars - n_tokens == sum(firings.values())
@@ -146,7 +144,7 @@ def test_fifo_allocation_matches_sequential_waterfall(spark, sf_dir):
                         inv_left = invs[inv_idx][2]
     got = {
         r.pay_idx: (r.n_pairs, r.allocated_cents, r.n_customers)
-        for r in ALL_QUERIES["fifo_allocation"](spark, sf_dir).collect()
+        for r in QUERIES["fifo_allocation"](spark, sf_dir).collect()
     }
     want = {
         j: (n_pairs[j], allocated[j], len(cust_hit[j]))
@@ -190,7 +188,7 @@ def test_revenue_recognition_matches_python_spread(spark, sf_dir):
             contributing[mon] += 1
     got = {
         (r.mon.year, r.mon.month): (r.recognized_cents, r.n_orders)
-        for r in ALL_QUERIES["revenue_recognition"](spark, sf_dir).collect()
+        for r in QUERIES["revenue_recognition"](spark, sf_dir).collect()
     }
     want = {k: (ledger[k], contributing[k]) for k in ledger}
     assert got == want
@@ -238,6 +236,6 @@ def test_kaplan_meier_matches_python_estimator(spark, sf_dir):
         n_risk -= n_sub
     got = {
         r.t_days: (r.n_at_risk, r.n_events, r.n_censored, r.log_surv_micro)
-        for r in ALL_QUERIES["kaplan_meier"](spark, sf_dir).collect()
+        for r in QUERIES["kaplan_meier"](spark, sf_dir).collect()
     }
     assert got == want

@@ -12,9 +12,7 @@ from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5e  # noqa: F401 (registers queries)
 import beacon_data_importer_spark.catalog_r5f  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +49,7 @@ def test_weighted_sssp_matches_python_bellman_ford(spark, sf_dir):
 
     got = {
         r["dist"]: r["n_nodes"]
-        for r in ALL_QUERIES["weighted_sssp"](spark, sf_dir).collect()
+        for r in QUERIES["weighted_sssp"](spark, sf_dir).collect()
     }
     assert got == expected
 
@@ -67,7 +65,7 @@ def test_fdr_bh_matches_python_stepup(spark, sf_dir):
     and rejections must form a prefix of the rank order (step-up law)."""
     from beacon_data_importer_spark.catalog_r5f import _BH_TABLE
 
-    rows = ALL_QUERIES["fdr_bh_audit"](spark, sf_dir).collect()
+    rows = QUERIES["fdr_bh_audit"](spark, sf_dir).collect()
     assert rows
     m = rows[0]["m_tests"]
     assert all(r["m_tests"] == m for r in rows) and len(rows) == m
@@ -180,7 +178,7 @@ def test_conformal_qhat_is_exact_order_statistic(spark, sf_dir):
             r["n_covered"],
             r["coverage_ppm"],
         )
-        for r in ALL_QUERIES["conformal_interval_audit"](
+        for r in QUERIES["conformal_interval_audit"](
             spark, sf_dir
         ).collect()
     }
@@ -221,12 +219,12 @@ def test_littles_law_identities(spark, sf_dir):
     Σ_years integral == Σ_years durations (L = λW exactly over the full
     horizon).  (2) The yearly integrals must equal the sweep-line
     concurrency profile of max_concurrent_orders summed per year."""
-    ll = ALL_QUERIES["littles_law_audit"](spark, sf_dir).collect()
+    ll = QUERIES["littles_law_audit"](spark, sf_dir).collect()
     assert sum(r["open_day_integral"] for r in ll) == sum(
         r["sum_durations"] for r in ll
     )
 
-    prof = ALL_QUERIES["max_concurrent_orders"](spark, sf_dir).collect()
+    prof = QUERIES["max_concurrent_orders"](spark, sf_dir).collect()
     prof = sorted(prof, key=lambda r: r["day_no"])
     from beacon_data_importer_spark.catalog_r5f import _LL_YEARS
 
@@ -264,13 +262,13 @@ def test_dp_noise_structure(spark, sf_dir):
         portable_hash64,
     )
 
-    rows = ALL_QUERIES["dp_noisy_counts"](spark, sf_dir).collect()
+    rows = QUERIES["dp_noisy_counts"](spark, sf_dir).collect()
     assert rows
     bound = int(1e6 * math.log(1e6)) + 1
     ks = {
         r["nationkey"]: r["k"]
         for r in (
-            ALL_QUERIES["dp_noisy_counts"](spark, sf_dir)
+            QUERIES["dp_noisy_counts"](spark, sf_dir)
             .sparkSession.range(0, 25)
             .select(
                 F.col("id").cast("int").alias("nationkey"),

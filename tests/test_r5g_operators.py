@@ -10,9 +10,7 @@ import math
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5g  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_matryoshka_full_dim_is_its_own_truth(spark, sf_dir):
@@ -26,7 +24,7 @@ def test_matryoshka_full_dim_is_its_own_truth(spark, sf_dir):
         _MRL_QUERIES,
     )
 
-    rows = ALL_QUERIES["matryoshka_recall_audit"](spark, sf_dir).collect()
+    rows = QUERIES["matryoshka_recall_audit"](spark, sf_dir).collect()
     grid = {(r["dim"], r["query_id"]) for r in rows}
     assert grid == {(d, q) for d in _MRL_DIMS for q in _MRL_QUERIES}
     for r in rows:
@@ -89,7 +87,7 @@ def test_item_item_cf_matches_python_recompute(spark, sf_dir):
 
     got = {
         (r["item"], r["neighbor"], r["n_co"], r["cosine_e6"])
-        for r in ALL_QUERIES["item_item_cf_topk"](spark, sf_dir).collect()
+        for r in QUERIES["item_item_cf_topk"](spark, sf_dir).collect()
     }
     assert got == expected
 
@@ -97,7 +95,7 @@ def test_item_item_cf_matches_python_recompute(spark, sf_dir):
 def test_cf_scores_are_symmetric(spark, sf_dir):
     """Cosine is symmetric: wherever both directions of a pair survive
     their items' top-k, the scores must be identical."""
-    rows = ALL_QUERIES["item_item_cf_topk"](spark, sf_dir).collect()
+    rows = QUERIES["item_item_cf_topk"](spark, sf_dir).collect()
     score = {(r["item"], r["neighbor"]): r["cosine_e6"] for r in rows}
     checked = 0
     for (a, b), s in score.items():
@@ -115,7 +113,7 @@ def test_did_reconciles_and_carries_placebo(spark, sf_dir):
 
     rows = {
         r["scenario"]: r
-        for r in ALL_QUERIES["did_estimate"](spark, sf_dir).collect()
+        for r in QUERIES["did_estimate"](spark, sf_dir).collect()
     }
     assert set(rows) == {"actual", "placebo"}
     n_orders = read_table(spark, sf_dir, "orders").count()

@@ -5,17 +5,15 @@ hybrid retrieval).
 from __future__ import annotations
 
 import beacon_data_importer_spark.catalog_r5h  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_recursive_cte_matches_closed_form(spark, sf_dir):
     """Spark's WITH RECURSIVE walk must agree row-for-row with the
     closed-form ancestor-array rollup (bom_rollup) — engine-native
     recursion cross-validated by arithmetic that cannot be wrong."""
-    rec = ALL_QUERIES["recursive_bom_rollup"](spark, sf_dir)
-    closed = ALL_QUERIES["bom_rollup"](spark, sf_dir)
+    rec = QUERIES["recursive_bom_rollup"](spark, sf_dir)
+    closed = QUERIES["bom_rollup"](spark, sf_dir)
     assert rec.exceptAll(closed).count() == 0
     assert closed.exceptAll(rec).count() == 0
 
@@ -27,7 +25,7 @@ def test_recursive_root_covers_every_part(spark, sf_dir):
 
     rows = {
         r["node"]: r
-        for r in ALL_QUERIES["recursive_bom_rollup"](spark, sf_dir).collect()
+        for r in QUERIES["recursive_bom_rollup"](spark, sf_dir).collect()
     }
     n_parts = read_table(spark, sf_dir, "part").count()
     assert rows[0]["n_subtree_parts"] == n_parts
@@ -43,7 +41,7 @@ def test_rrf_fusion_reconciles(spark, sf_dir):
         _RRF_TOPK,
     )
 
-    rows = ALL_QUERIES["rrf_hybrid_search"](spark, sf_dir).collect()
+    rows = QUERIES["rrf_hybrid_search"](spark, sf_dir).collect()
     assert len(rows) == _RRF_TOPK
     scores = []
     for r in rows:

@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_more  # noqa: F401 (registers ivf_search)
 import beacon_data_importer_spark.catalog_r5i  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_ndcg_recomputes_from_the_two_rankings(spark, sf_dir):
@@ -43,7 +41,7 @@ def test_ndcg_recomputes_from_the_two_rankings(spark, sf_dir):
     # approximate arm = the ivf_search query's neighbor list (same shape)
     approx_ids = [
         r["neighbor_id"]
-        for r in ALL_QUERIES["ivf_search"](spark, sf_dir).collect()
+        for r in QUERIES["ivf_search"](spark, sf_dir).collect()
     ]
     ilog = dict(_NDCG_ILOG)
     expected_dcg = sum(
@@ -52,7 +50,7 @@ def test_ndcg_recomputes_from_the_two_rankings(spark, sf_dir):
     )
     expected_hits = sum(1 for nid in approx_ids if nid in rel)
 
-    row = ALL_QUERIES["ann_ndcg_audit"](spark, sf_dir).collect()[0]
+    row = QUERIES["ann_ndcg_audit"](spark, sf_dir).collect()[0]
     assert row["idcg_units"] == _NDCG_IDCG
     assert row["dcg_units"] == expected_dcg
     assert row["n_hits"] == expected_hits
@@ -64,7 +62,7 @@ def test_psi_terms_reconcile(spark, sf_dir):
     """Per-row identities: the total equals the term sum on every row,
     terms are non-negative exactly when shares diverge in ln's
     direction, and equal shares contribute zero."""
-    rows = ALL_QUERIES["psi_drift_audit"](spark, sf_dir).collect()
+    rows = QUERIES["psi_drift_audit"](spark, sf_dir).collect()
     assert rows
     total = sum(r["psi_term_e12"] for r in rows)
     for r in rows:
@@ -82,7 +80,7 @@ def test_equidepth_buckets_are_balanced_and_ordered(spark, sf_dir):
     from beacon_data_importer_spark.catalog_r5i import _EQD_BUCKETS
 
     rows = sorted(
-        ALL_QUERIES["equidepth_histogram"](spark, sf_dir).collect(),
+        QUERIES["equidepth_histogram"](spark, sf_dir).collect(),
         key=lambda r: r["bucket"],
     )
     assert [r["bucket"] for r in rows] == list(range(1, _EQD_BUCKETS + 1))

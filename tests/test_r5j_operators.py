@@ -7,9 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5j  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_global_rank_is_the_exact_permutation(shuffle4, spark, sf_dir):
@@ -64,7 +62,7 @@ def test_snm_matches_sequential_scan(spark, sf_dir):
 
     got = {
         (r["key_a"], r["key_b"], r["gap"], r["lev"])
-        for r in ALL_QUERIES["sorted_neighborhood_pairs"](
+        for r in QUERIES["sorted_neighborhood_pairs"](
             spark, sf_dir
         ).collect()
     }
@@ -94,7 +92,7 @@ def test_mase_recomputes_from_monthly_series(spark, sf_dir):
             en += abs(rev - monthly[m - 1])
             n += 1
 
-    row = ALL_QUERIES["mase_forecast_audit"](spark, sf_dir).collect()[0]
+    row = QUERIES["mase_forecast_audit"](spark, sf_dir).collect()[0]
     assert row["n_months"] == n
     assert row["sum_abs_err_seasonal"] == es
     assert row["sum_abs_err_naive"] == en

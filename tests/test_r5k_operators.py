@@ -7,9 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5k  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_sequential_rules_match_python_recompute(spark, sf_dir):
@@ -65,7 +63,7 @@ def test_sequential_rules_match_python_recompute(spark, sf_dir):
     got = [
         (r["part_a"], r["part_b"], r["n_cust_ab"], r["n_cust_a"],
          r["confidence_ppm"])
-        for r in ALL_QUERIES["sequential_purchase_rules"](
+        for r in QUERIES["sequential_purchase_rules"](
             spark, sf_dir
         ).collect()
     ]
@@ -75,7 +73,7 @@ def test_sequential_rules_match_python_recompute(spark, sf_dir):
 def test_t_closeness_bounds_and_worst_group(spark, sf_dir):
     """TVD is in [0, 1e6]; the broadcast max equals the max of the
     per-group column; homogeneous-with-global groups score near 0."""
-    rows = ALL_QUERIES["t_closeness_audit"](spark, sf_dir).collect()
+    rows = QUERIES["t_closeness_audit"](spark, sf_dir).collect()
     assert rows
     mx = max(r["t_ppm"] for r in rows)
     for r in rows:
@@ -86,7 +84,7 @@ def test_t_closeness_bounds_and_worst_group(spark, sf_dir):
 def test_brier_identity_and_recompute(spark, sf_dir):
     """BS = REL − RES + UNC must hold exactly on every row, and all
     three components must recompute from the per-bin integers."""
-    rows = ALL_QUERIES["brier_decomposition"](spark, sf_dir).collect()
+    rows = QUERIES["brier_decomposition"](spark, sf_dir).collect()
     assert len(rows) > 0
     nn = sum(r["n_k"] for r in rows)
     ee = sum(r["e_k"] for r in rows)

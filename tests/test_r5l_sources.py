@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r4  # noqa: F401 (jsonl_roundtrip)
 import beacon_data_importer_spark.catalog_r5l  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_xml_roundtrip_equals_jsonl_roundtrip_and_source_table(spark, sf_dir):
@@ -20,8 +18,8 @@ def test_xml_roundtrip_equals_jsonl_roundtrip_and_source_table(spark, sf_dir):
     from beacon_data_importer_spark.catalog_r4 import _cksum
     from beacon_data_importer_spark.sources.parquet import read_table
 
-    xml = ALL_QUERIES["xml_roundtrip"](spark, sf_dir)
-    jsonl = ALL_QUERIES["jsonl_roundtrip"](spark, sf_dir)
+    xml = QUERIES["xml_roundtrip"](spark, sf_dir)
+    jsonl = QUERIES["jsonl_roundtrip"](spark, sf_dir)
     direct = (
         read_table(spark, sf_dir, "documents")
         .groupBy("lang")
@@ -64,7 +62,7 @@ def test_python_datasource_matches_generator_and_parallelism(spark, sf_dir):
             r["max_value"],
             r["weighted_cksum"],
         )
-        for r in ALL_QUERIES["python_datasource_scan"](
+        for r in QUERIES["python_datasource_scan"](
             spark, sf_dir
         ).collect()
     }

@@ -5,17 +5,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5m  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_pipe_syntax_equals_classic_form(spark, sf_dir):
     """The pipe-syntax query must agree row-for-row with the classic
     pricing_summary on their shared columns — Catalyst must compile
     both syntaxes to the same result."""
-    pipe = ALL_QUERIES["pipe_syntax_pricing"](spark, sf_dir)
-    classic = ALL_QUERIES["pricing_summary"](spark, sf_dir).select(
+    pipe = QUERIES["pipe_syntax_pricing"](spark, sf_dir)
+    classic = QUERIES["pricing_summary"](spark, sf_dir).select(
         "returnflag",
         "linestatus",
         "sum_qty_cents",
@@ -37,7 +35,7 @@ def test_sql_udf_inlines_without_python(spark, sf_dir):
     """The SQL UDF plan must contain no Python evaluation node (it
     inlines into Catalyst), and the result must equal the same
     expression written inline."""
-    df = ALL_QUERIES["sql_udf_taxed_margin"](spark, sf_dir)
+    df = QUERIES["sql_udf_taxed_margin"](spark, sf_dir)
     txt = df._jdf.queryExecution().executedPlan().toString()
     for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert marker not in txt

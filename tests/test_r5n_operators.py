@@ -6,9 +6,7 @@ from __future__ import annotations
 
 import beacon_data_importer_spark.catalog_r5b  # noqa: F401 (kaplan_meier)
 import beacon_data_importer_spark.catalog_r5n  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_nelson_aalen_dominates_km_log_survival(spark, sf_dir):
@@ -17,11 +15,11 @@ def test_nelson_aalen_dominates_km_log_survival(spark, sf_dir):
     the event-time grid and risk sets match kaplan_meier exactly."""
     na = {
         r["t_days"]: r
-        for r in ALL_QUERIES["nelson_aalen_hazard"](spark, sf_dir).collect()
+        for r in QUERIES["nelson_aalen_hazard"](spark, sf_dir).collect()
     }
     km = {
         r["t_days"]: r
-        for r in ALL_QUERIES["kaplan_meier"](spark, sf_dir).collect()
+        for r in QUERIES["kaplan_meier"](spark, sf_dir).collect()
     }
     assert set(na) == set(km)
     prev = 0
@@ -50,7 +48,7 @@ def test_interim_looks_are_cumulative_and_flagged(spark, sf_dir):
     )
 
     rows = sorted(
-        ALL_QUERIES["interim_analysis_audit"](spark, sf_dir).collect(),
+        QUERIES["interim_analysis_audit"](spark, sf_dir).collect(),
         key=lambda r: r["look_year"],
     )
     assert rows
@@ -75,18 +73,11 @@ def test_blocking_recall_reconciles_with_pair_queries(spark, sf_dir):
     close (both ≥ n_both; recall = n_both/n_truth; snm_only =
     n_snm − n_both)."""
     import beacon_data_importer_spark.catalog_r5j  # noqa: F401
-    # merged registry: slot rotation moves queries between QUERIES and
-    # EXTRA_QUERIES across rounds, so never look one up in a single dict
-    from beacon_data_importer_spark.catalog import (
-        EXTRA_QUERIES,
-        QUERIES,
-    )
     from beacon_data_importer_spark.plans.er import customer_fuzzy_pairs
 
-    live = {**QUERIES, **EXTRA_QUERIES}
-    row = ALL_QUERIES["blocking_recall_audit"](spark, sf_dir).collect()[0]
+    row = QUERIES["blocking_recall_audit"](spark, sf_dir).collect()[0]
     n_truth = customer_fuzzy_pairs(spark, sf_dir, k=2).count()
-    n_snm = live["sorted_neighborhood_pairs"](spark, sf_dir).count()
+    n_snm = QUERIES["sorted_neighborhood_pairs"](spark, sf_dir).count()
     assert row["n_truth"] == n_truth
     assert row["n_snm"] == n_snm
     assert row["n_both"] <= min(n_truth, n_snm)

@@ -5,9 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5o  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_replay_matches_python_recompute(spark, sf_dir):
@@ -88,6 +86,6 @@ def test_replay_matches_python_recompute(spark, sf_dir):
             r["replay_value_ppm"],
             r["lift_ppm"],
         )
-        for r in ALL_QUERIES["bandit_replay_eval"](spark, sf_dir).collect()
+        for r in QUERIES["bandit_replay_eval"](spark, sf_dir).collect()
     }
     assert got == expected

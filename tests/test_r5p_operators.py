@@ -9,9 +9,7 @@ from itertools import permutations
 from pyspark.sql import functions as F
 
 import beacon_data_importer_spark.catalog_r5p  # noqa: F401 (registers queries)
-from beacon_data_importer_spark.catalog import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from beacon_data_importer_spark.catalog import QUERIES
 
 
 def test_shapley_efficiency_and_permutation_definition(spark, sf_dir):
@@ -54,7 +52,7 @@ def test_shapley_efficiency_and_permutation_definition(spark, sf_dir):
 
     rows = {
         r["channel"]: r
-        for r in ALL_QUERIES["shapley_attribution"](spark, sf_dir).collect()
+        for r in QUERIES["shapley_attribution"](spark, sf_dir).collect()
     }
     assert {ch: rows[ch]["phi_x6"] for ch in bits} == phi6
     total = sum(phi6.values())
@@ -69,7 +67,7 @@ def test_rdd_bandwidths_nest_and_reconcile(spark, sf_dir):
     and each effect must equal the mean difference of its own row."""
     rows = {
         r["bandwidth_cents"]: r
-        for r in ALL_QUERIES["rdd_estimate"](spark, sf_dir).collect()
+        for r in QUERIES["rdd_estimate"](spark, sf_dir).collect()
     }
     h1, h2 = sorted(rows)
     assert rows[h1]["n_left"] <= rows[h2]["n_left"]
@@ -117,7 +115,7 @@ def test_poststratification_algebra_recomputes(spark, sf_dir):
     naive = sum(s_s.values()) // n_samp
     ps = sum(pop_n[g] * (s_s[g] // s_n[g]) for g in pop_n) // n_pop
 
-    row = ALL_QUERIES["poststratification_estimate"](
+    row = QUERIES["poststratification_estimate"](
         spark, sf_dir
     ).collect()[0]
     assert (

@@ -18,7 +18,7 @@ from beacon_data_importer_spark.sources.parquet import read_table
 
 
 def _q(name):
-    return {**cat.QUERIES, **cat.EXTRA_QUERIES}[name]
+    return cat.QUERIES[name]
 
 
 def test_global_running_sum_matches_single_task_window(shuffle4, spark, sf_dir):

@@ -23,7 +23,7 @@ from beacon_data_importer_spark.sources.parquet import read_table
 
 
 def _q(name):
-    return {**cat.QUERIES, **cat.EXTRA_QUERIES}[name]
+    return cat.QUERIES[name]
 
 
 def _h60(s: str) -> int:

@@ -20,7 +20,7 @@ from beacon_data_importer_spark.sources.parquet import read_table
 
 
 def _q(name):
-    return {**cat.QUERIES, **cat.EXTRA_QUERIES}[name]
+    return cat.QUERIES[name]
 
 
 def test_band_advisor_matches_python_and_is_monotone(spark, sf_dir):

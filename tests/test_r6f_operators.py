@@ -11,7 +11,7 @@ from beacon_data_importer_spark.sources.parquet import read_table
 
 
 def _q(name):
-    return {**cat.QUERIES, **cat.EXTRA_QUERIES}[name]
+    return cat.QUERIES[name]
 
 
 def test_collated_distinct_collapses_planted_variants(spark, sf_dir):

@@ -19,7 +19,7 @@ from beacon_data_importer_spark.sources.parquet import read_table
 
 
 def _q(name):
-    return {**cat.QUERIES, **cat.EXTRA_QUERIES}[name]
+    return cat.QUERIES[name]
 
 
 def _u(seed: str, key: int) -> int:

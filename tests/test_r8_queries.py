@@ -11,20 +11,18 @@ from pyspark.sql import functions as F
 from beacon_data_importer_spark import all_catalogs  # noqa: F401
 from beacon_data_importer_spark import catalog as cat
 
-ALL_QUERIES = {**cat.QUERIES, **cat.EXTRA_QUERIES}
-
 
 def test_capped_caliper_is_exact_where_census_is_clean(spark, sf_dir):
     """The cap doctrine's exactness clause, asserted: on every treated
     key whose matched control lives in a bucket with ≤ CAP controls,
     the capped match must equal the uncapped exact match.  (Globally
     they may differ — that is what the census records.)"""
-    capped = ALL_QUERIES["propensity_caliper_match_capped"](
+    capped = cat.QUERIES["propensity_caliper_match_capped"](
         spark, sf_dir
     ).collect()
     exact = {
         r["treated_key"]: (r["control_key"], r["score_diff_cents"])
-        for r in ALL_QUERIES["propensity_caliper_match"](
+        for r in cat.QUERIES["propensity_caliper_match"](
             spark, sf_dir
         ).collect()
     }
@@ -45,7 +43,7 @@ def test_capped_caliper_is_exact_where_census_is_clean(spark, sf_dir):
 
 def test_capped_caliper_census_columns_are_constant(spark, sf_dir):
     """The census is a global property: identical on every row."""
-    rows = ALL_QUERIES["propensity_caliper_match_capped"](
+    rows = cat.QUERIES["propensity_caliper_match_capped"](
         spark, sf_dir
     ).collect()
     assert len({(r["n_buckets_over_cap"], r["max_bucket_controls"])
@@ -56,7 +54,7 @@ def test_hnm_scaled_agreement_meets_production_bar(spark, sf_dir):
     """VERDICT r7 item 4's done-bar: the ratio-scaled miner agrees
     with the brute-exact truth on ≥0.9 of both positives and hard
     negatives (measured 0.92/0.96 at sf0.001, 0.96/0.96 at sf0.1)."""
-    r = ALL_QUERIES["hard_negative_scaled_recall_audit"](
+    r = cat.QUERIES["hard_negative_scaled_recall_audit"](
         spark, sf_dir
     ).collect()[0]
     assert r["n_queries"] > 0

@@ -1,4 +1,4 @@
-"""CI gate for the 50 REGISTERED catalog queries.
+"""CI gate for the 50 driver-slot catalog queries (``DRIVER_SLOTS``).
 
 The authoritative check is the driver's sf0.01 gate, but that only runs
 once per round — this module applies the identical driver-mimicking
@@ -60,7 +60,7 @@ def _registered_names():
     # ZERO per-query CI (round-7 find; same fix as test_extra_queries).
     from beacon_data_importer_spark import all_catalogs as catalog
 
-    return sorted(catalog.QUERIES)
+    return sorted(catalog.DRIVER_SLOTS)
 
 
 @pytest.fixture(scope="module")
@@ -101,13 +101,6 @@ def test_registered_query_matches_oracle(spark, duck, spark_results, name):
     spdf = spark_results[name]
     if isinstance(spdf, Exception):
         raise spdf
-    if name not in catalog.ORACLES:
-        # Every registered query must carry an oracle: a driver slot
-        # without one only gets the weak rows-only check, which is not
-        # the bar this repo holds itself to.  (Genuinely
-        # non-SQL-expressible ops belong in EXTRA_QUERIES with their own
-        # dedicated tests, not in a driver slot.)
-        pytest.fail(f"registered query {name!r} has no oracle_sql entry")
     dpdf = duck.execute(catalog.ORACLES[name]).df()
 
     assert len(spdf) == len(dpdf), f"{name}: rowcount {len(spdf)} != {len(dpdf)}"
@@ -235,3 +228,29 @@ def test_sql_query_keeps_query_metadata():
         entry.oracle_sql()["trigram_novelty_curve"]
         == catalog_r9f._novelty_sql("duck")
     )
+
+
+def test_driver_slots_are_the_only_slot_policy():
+    """Ratchet: ``catalog.DRIVER_SLOTS`` is the one place that decides
+    the driver's 50 slots.  No ``query``/``sql_query`` call takes a
+    per-query ``registered`` flag, and no second registry
+    (``EXTRA_QUERIES``/``EXTRA_ORACLES``) or oracle-exemption set
+    (``ROWS_ONLY``) comes back."""
+    retired = {"EXTRA_QUERIES", "EXTRA_ORACLES", "ROWS_ONLY"}
+    pkg = os.path.dirname(_CATALOG_SOURCES[0])
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                callee = ast.unparse(node.func).split(".")[-1]
+                if callee in ("query", "sql_query") and any(
+                    k.arg == "registered" for k in node.keywords
+                ):
+                    found.append(f"{rel}:{node.lineno}: registered=")
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            else:
+                names = [getattr(node, "id", None) or getattr(node, "attr", None)]
+            found += [f"{rel}:{node.lineno}: {n}" for n in names if n in retired]
+    assert not found, f"slot policy outside DRIVER_SLOTS: {found}"

@@ -16,8 +16,8 @@ round whose tracked artifact has a fully green row
 (rows+schema+hash) for the query; "local gate" = no driver
 row yet (verified every round by tools/check_oracle.py and the
 per-query CI in tests/test_registered_queries.py /
-tests/test_extra_queries.py).  Slot-rotation policy lives in
-beacon_data_importer_spark/catalog.py's module docstring.
+tests/test_extra_queries.py).  Slot-rotation policy lives in the
+docstring of ``DRIVER_SLOTS`` in beacon_data_importer_spark/catalog.py.
 """
 
 from __future__ import annotations
@@ -70,11 +70,10 @@ def main() -> None:
     from beacon_data_importer_spark import catalog as cat
 
     proven = _first_proven()
-    n_q, n_x = len(cat.QUERIES), len(cat.EXTRA_QUERIES)
-    n_all = n_q + n_x
-    n_proven = sum(
-        1 for n in list(cat.QUERIES) + list(cat.EXTRA_QUERIES) if n in proven
-    )
+    slots = set(cat.DRIVER_SLOTS)
+    n_all, n_q = len(cat.QUERIES), len(slots)
+    n_x = n_all - n_q
+    n_proven = sum(1 for n in cat.QUERIES if n in proven)
     print("# Query catalog index\n")
     print(
         f"{n_q} registered (driver slots) + {n_x} extras = {n_all} queries, "
@@ -87,12 +86,12 @@ def main() -> None:
         "catalog changes.\n"
     )
     for title, reg in (("Registered", True), ("Extras", False)):
-        src = cat.QUERIES if reg else cat.EXTRA_QUERIES
-        print(f"\n## {title} ({len(src)})\n")
+        names = sorted(n for n in cat.QUERIES if (n in slots) == reg)
+        print(f"\n## {title} ({len(names)})\n")
         print("| query | function | proven | summary |")
         print("|---|---|---|---|")
-        for name in sorted(src):
-            fn = src[name]
+        for name in names:
+            fn = cat.QUERIES[name]
             mod = fn.__module__.split(".")[-1]
             doc = (fn.__doc__ or "").strip().split("\n\n")[0]
             doc = " ".join(doc.split())

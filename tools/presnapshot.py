@@ -15,9 +15,9 @@ happens under --fix and only when the key set actually drifted):
    tests/test_physical_plans.py::test_plan_audit_artifact_covers_whole_catalog
    asserts — caught here before the commit instead of after).
 2. QUERIES.md is byte-identical to a fresh tools/gen_query_index.py run
-   (registration flags, proof provenance, and counts all live there).
-3. The registered-slot count is exactly 50 and every registered query
-   has an oracle (the driver gate's shape).
+   (slot membership, proof provenance, and counts all live there).
+3. ``DRIVER_SLOTS`` names exactly 50 registered queries and every
+   query has an oracle (the driver gate's shape).
 4. No two catalog queries collide on a NORMALIZED name (underscores
    stripped / token multiset).  Round 7 shipped `k_core_decomposition`
    next to round-5's `kcore_decomposition` and `target_encoding_loo`
@@ -95,14 +95,14 @@ def main() -> int:
     # 3. driver-gate shape
     from beacon_data_importer_spark import catalog as cat
 
-    if len(cat.QUERIES) != 50:
-        problems.append(f"registered slots = {len(cat.QUERIES)}, want 50")
-    oracles = entry.oracle_sql()
-    no_oracle = sorted(
-        n for n in cat.QUERIES if n not in oracles and n not in cat.ROWS_ONLY
-    )
+    if len(cat.DRIVER_SLOTS) != 50:
+        problems.append(f"driver slots = {len(cat.DRIVER_SLOTS)}, want 50")
+    unknown = sorted(set(cat.DRIVER_SLOTS) - set(cat.QUERIES))
+    if unknown:
+        problems.append(f"driver slots naming no query: {unknown}")
+    no_oracle = sorted(set(cat.QUERIES) - set(cat.ORACLES))
     if no_oracle:
-        problems.append(f"registered queries without oracle: {no_oracle}")
+        problems.append(f"queries without oracle: {no_oracle}")
 
     # 4. normalized-name collisions (k_core vs kcore, reordered tokens)
     by_norm: dict[tuple, list[str]] = {}
