@@ -17,7 +17,10 @@ insensitive value-hash comparison deterministic):
 
 A query that is pure SQL over temp views registers with
 ``sql_query(name, render, *tables)``: one ``render(dialect)`` function
-yields both the Spark SQL and the DuckDB oracle.
+yields both the Spark SQL (``render(SPARK)``) and the DuckDB oracle
+(``render(DUCK)``).  Where the two engines spell a construct
+differently, the template asks its ``Dialect`` (``dialect.div``,
+``dialect.big``, ...) instead of branching on the engine name.
 """
 
 from __future__ import annotations
@@ -39,6 +42,59 @@ from .session import configure_session
 from .sources.parquet import read_table, register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+class Dialect(str):
+    """The engine a shared SQL template renders for, and how that engine
+    spells what the two disagree on.  ``SPARK`` and ``DUCK`` are the
+    only instances; as a ``str`` each formats, hashes and compares as
+    its name."""
+
+    __slots__ = ()
+
+    @property
+    def spark(self) -> bool:
+        return self == "spark"
+
+    @property
+    def div(self) -> str:
+        """Integer division operator, padded with spaces."""
+        return " div " if self.spark else " // "
+
+    @property
+    def big(self) -> str:
+        """The 128-bit integer type exact wide sums are cast to."""
+        return "DECIMAL(38,0)" if self.spark else "HUGEINT"
+
+    def series(self, lo: int | str, hi: int | str) -> str:
+        """Generator of one row per integer in ``[lo, hi]``."""
+        if self.spark:
+            return f"explode(sequence({lo}, {hi}))"
+        return f"unnest(generate_series({lo}, {hi}))"
+
+    def datediff(self, start: str, end: str) -> str:
+        """Whole days from ``start`` to ``end``."""
+        if self.spark:
+            return f"datediff({end}, {start})"
+        return f"datediff('day', {start}, {end})"
+
+    def broadcast(self, *aliases: str) -> str:
+        """Broadcast-join hint (with its trailing space) for ``aliases``;
+        DuckDB takes no hint, so it renders empty there."""
+        if not self.spark:
+            return ""
+        hints = ", ".join(f"BROADCAST({a})" for a in aliases)
+        return f"/*+ {hints} */ "
+
+    def values(self, rows: str, alias: str) -> str:
+        """Inline table ``VALUES rows`` named ``alias`` (``t(a, b)``)."""
+        if self.spark:
+            return f"VALUES {rows} AS {alias}"
+        return f"(VALUES {rows}) {alias}"
+
+
+SPARK = Dialect("spark")
+DUCK = Dialect("duck")
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -129,24 +185,24 @@ def query(name: str, oracle: str | None = None):
 
 def sql_query(
     name: str,
-    render: Callable[[str], str],
+    render: Callable[[Dialect], str],
     *tables: str,
     doc: str | None = None,
 ) -> QueryFn:
     """Register a pure-SQL query: ``tables`` become temp views
-    (``register_views``), ``render("spark")`` is the Spark SQL, rendered
-    per call, and ``render("duck")`` is the oracle.  The callable is
+    (``register_views``), ``render(SPARK)`` is the Spark SQL, rendered
+    per call, and ``render(DUCK)`` is the oracle.  The callable is
     named ``q_<name>`` in ``render``'s module, so QUERIES.md lists it
     as if it had been written with ``@query``."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_views(spark, sf_dir, *tables)
-        return spark.sql(render("spark"))
+        return spark.sql(render(SPARK))
 
     run.__name__ = run.__qualname__ = f"q_{name}"
     run.__module__ = render.__module__
     run.__doc__ = doc
-    return query(name, oracle=render("duck"))(run)
+    return query(name, oracle=render(DUCK))(run)
 
 
 def cents(c: Column) -> Column:

@@ -42,9 +42,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
+from .sources.parquet import register_views
 
 #: floor(1e6 · d) for Qn's asymptotic Gaussian consistency factor
 #: d = 2.21914 (Rousseeuw & Croux 1993); finite-sample corrections
@@ -57,13 +58,6 @@ _HAMPEL_K_E4 = 44_478
 #: floor(1e6 · z₀.₉₇₅) — asymptotic two-sided 5% gate for Yuen's t
 #: (df > 100 at every SF, where t ≈ z; documented approximation).
 _Z975_E6 = 1_959_963
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -104,7 +98,7 @@ def _day_kernel(spark: SparkSession, kernel, schema: str) -> DataFrame:
     (t, y) rows — ~2.4k for the 7-year TPC-H calendar, regardless of
     scale factor — enter the kernel, and each kernel bounds its live
     buffers to O(``_KERNEL_CHUNK``) cells (see note there)."""
-    day = spark.sql(f"WITH {_day_sql('spark')} SELECT t, y FROM day")
+    day = spark.sql(f"WITH {_day_sql(SPARK)} SELECT t, y FROM day")
     return day.coalesce(1).mapInArrow(kernel, schema)
 
 
@@ -138,7 +132,7 @@ def _gather_ty(batches):
 # ---------------------------------------------------------------------------
 
 
-def _qn_sql(dialect: str, par: int | None = None) -> str:
+def _qn_sql(dialect: Dialect, par: int | None = None) -> str:
     # par: explicit repartition of the streamed pair side so the
     # calendar-bounded O(n^2) expansion runs on all cores instead of
     # the single AQE-coalesced partition (r11 round, guide §2;
@@ -146,7 +140,6 @@ def _qn_sql(dialect: str, par: int | None = None) -> str:
     src = (f"(SELECT /*+ REPARTITION({par}) */ * FROM day)"
            if par else "day")
 
-    div = " div " if dialect == "spark" else " // "
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -159,17 +152,17 @@ def _qn_sql(dialect: str, par: int | None = None) -> str:
     ),
     k AS (
       SELECT n,
-        ((n{div}2 + 1) * (n{div}2)){div}2 AS k
+        ((n{dialect.div}2 + 1) * (n{dialect.div}2)){dialect.div}2 AS k
       FROM n
     )
     SELECT k.n AS n_days, k.k AS k_order,
       r.d AS qn_raw,
-      CAST(({_QN_D_E6} * r.d){div}1000000 AS BIGINT) AS qn_scaled
+      CAST(({_QN_D_E6} * r.d){dialect.div}1000000 AS BIGINT) AS qn_scaled
     FROM ranked r CROSS JOIN k WHERE r.r = k.k
     """
 
 
-@query("qn_scale_estimator", oracle=_qn_sql("duck"))
+@query("qn_scale_estimator", oracle=_qn_sql(DUCK))
 def q_qn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rousseeuw-Croux Qn scale of daily revenue: the k-th smallest of
     the C(n,2) pairwise absolute gaps, k = C(⌊n/2⌋+1, 2), scaled by
@@ -196,7 +189,7 @@ def q_qn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pure-SQL form.
 
     Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, "orders")
 
     def _qn(batches):
         import numpy as np
@@ -248,8 +241,7 @@ def q_qn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sn_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _sn_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -264,18 +256,18 @@ def _sn_sql(dialect: str) -> str:
       FROM pairs
     ),
     himed AS (
-      SELECT i, d AS hm FROM per_i WHERE r = m{div}2 + 1
+      SELECT i, d AS hm FROM per_i WHERE r = m{dialect.div}2 + 1
     ),
     outer_rank AS (
       SELECT hm, row_number() OVER (ORDER BY hm) AS r FROM himed
     )
     SELECT n.n AS n_days, o.hm AS sn_raw,
-      CAST(({_SN_C_E6} * o.hm){div}1000000 AS BIGINT) AS sn_scaled
-    FROM outer_rank o CROSS JOIN n WHERE o.r = (n.n + 1){div}2
+      CAST(({_SN_C_E6} * o.hm){dialect.div}1000000 AS BIGINT) AS sn_scaled
+    FROM outer_rank o CROSS JOIN n WHERE o.r = (n.n + 1){dialect.div}2
     """
 
 
-@query("sn_scale_estimator", oracle=_sn_sql("duck"))
+@query("sn_scale_estimator", oracle=_sn_sql(DUCK))
 def q_sn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rousseeuw-Croux Sn scale of daily revenue: the low median over
     i of the high median over j of |yᵢ−yⱼ|, scaled by c = 1.1926.
@@ -299,7 +291,7 @@ def q_sn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical.
 
     Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, "orders")
 
     def _sn(batches):
         import numpy as np
@@ -345,15 +337,12 @@ def q_sn_scale_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _bwmv_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bwmv_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
     med AS (
-      SELECT max(CASE WHEN s.r = (n.n + 1){div}2 THEN s.y END) AS m
+      SELECT max(CASE WHEN s.r = (n.n + 1){dialect.div}2 THEN s.y END) AS m
       FROM (
         SELECT y, row_number() OVER (ORDER BY y) AS r FROM day
       ) s CROSS JOIN n
@@ -363,23 +352,23 @@ def _bwmv_sql(dialect: str) -> str:
       FROM day d CROSS JOIN med
     ),
     mad AS (
-      SELECT max(CASE WHEN s.r = (n.n + 1){div}2 THEN s.aa END) AS mad
+      SELECT max(CASE WHEN s.r = (n.n + 1){dialect.div}2 THEN s.aa END) AS mad
       FROM (
         SELECT aa, row_number() OVER (ORDER BY aa) AS r FROM adev
       ) s CROSS JOIN n
     ),
     u AS (
       SELECT a,
-        CAST((CAST(a AS {big}) * a * 1000000)
-             {div}(81 * CAST(mad AS {big}) * mad) AS BIGINT) AS u2_e6
+        CAST((CAST(a AS {dialect.big}) * a * 1000000)
+             {dialect.div}(81 * CAST(mad AS {dialect.big}) * mad) AS BIGINT) AS u2_e6
       FROM adev CROSS JOIN mad
     ),
     terms AS (
       SELECT
-        CAST(a AS {big}) * a
+        CAST(a AS {dialect.big}) * a
           * (1000000 - u2_e6) * (1000000 - u2_e6)
           * (1000000 - u2_e6) * (1000000 - u2_e6) AS num_t,
-        CAST(1000000 - u2_e6 AS {big})
+        CAST(1000000 - u2_e6 AS {dialect.big})
           * (1000000 - 5 * u2_e6) AS den_t
       FROM u WHERE u2_e6 < 1000000
     ),
@@ -387,14 +376,14 @@ def _bwmv_sql(dialect: str) -> str:
       SELECT sum(num_t) AS num, sum(den_t) AS den FROM terms
     ),
     sv AS (
-      SELECT sum(CAST(y AS {big}) * y) AS syy,
-        sum(CAST(y AS {big})) AS sy
+      SELECT sum(CAST(y AS {dialect.big}) * y) AS syy,
+        sum(CAST(y AS {dialect.big})) AS sy
       FROM day
     )
     SELECT n.n AS n_days,
-      CAST((n.n * agg.num){div}(agg.den * agg.den) AS BIGINT) AS bwmv,
+      CAST((n.n * agg.num){dialect.div}(agg.den * agg.den) AS BIGINT) AS bwmv,
       CAST((sv.syy * n.n - sv.sy * sv.sy)
-           {div}(n.n * (n.n - 1)) AS BIGINT) AS sample_var
+           {dialect.div}(n.n * (n.n - 1)) AS BIGINT) AS sample_var
     FROM agg CROSS JOIN n CROSS JOIN sv
     """
 
@@ -422,8 +411,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _trimean_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _trimean_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -431,8 +419,8 @@ def _trimean_sql(dialect: str) -> str:
       SELECT y, row_number() OVER (ORDER BY y) AS r FROM day
     ),
     pos AS (
-      SELECT n, (n + 1){div}2 AS mpos,
-        ((n + 1){div}2 + 1){div}2 AS hpos
+      SELECT n, (n + 1){dialect.div}2 AS mpos,
+        ((n + 1){dialect.div}2 + 1){dialect.div}2 AS hpos
       FROM n
     ),
     qs AS (
@@ -444,9 +432,9 @@ def _trimean_sql(dialect: str) -> str:
       GROUP BY p.n
     )
     SELECT n AS n_days, q1, q2, q3,
-      CAST(((q1 + 2 * q2 + q3) * 100){div}4 AS BIGINT) AS trimean_e2,
+      CAST(((q1 + 2 * q2 + q3) * 100){dialect.div}4 AS BIGINT) AS trimean_e2,
       CAST(((q3 + q1 - 2 * q2) * 1000000)
-           {div}(q3 - q1) AS BIGINT) AS bowley_skew_e6
+           {dialect.div}(q3 - q1) AS BIGINT) AS bowley_skew_e6
     FROM qs
     """
 
@@ -474,19 +462,18 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _medcouple_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _medcouple_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
     med AS (
       SELECT y AS m FROM (
         SELECT y, row_number() OVER (ORDER BY y) AS r FROM day
-      ) s CROSS JOIN n WHERE s.r = (n.n + 1){div}2
+      ) s CROSS JOIN n WHERE s.r = (n.n + 1){dialect.div}2
     ),
     kern AS (
       SELECT CAST((((b.y - med.m) - (med.m - a.y)) * 1000000)
-                  {div}(b.y - a.y) AS BIGINT) AS h_e6
+                  {dialect.div}(b.y - a.y) AS BIGINT) AS h_e6
       FROM day a JOIN med ON a.y < med.m
       JOIN day b ON b.y > med.m
     ),
@@ -497,7 +484,7 @@ def _medcouple_sql(dialect: str) -> str:
     SELECT kn.kn AS n_kernel_pairs,
       r.h_e6 AS medcouple_e6,
       r.h_e6 > 0 AS right_skewed
-    FROM ranked r CROSS JOIN kn WHERE r.r = (kn.kn + 1){div}2
+    FROM ranked r CROSS JOIN kn WHERE r.r = (kn.kn + 1){dialect.div}2
     """
 
 
@@ -526,8 +513,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _hampel_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _hampel_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     nbr AS (
@@ -541,7 +527,7 @@ def _hampel_sql(dialect: str) -> str:
       FROM nbr
     ),
     center_med AS (
-      SELECT t, y, ys AS med_y FROM med WHERE r = (m + 1){div}2
+      SELECT t, y, ys AS med_y FROM med WHERE r = (m + 1){dialect.div}2
     ),
     adev AS (
       SELECT n.t, cm.y, cm.med_y, abs(n.ys - cm.med_y) AS ad
@@ -555,7 +541,7 @@ def _hampel_sql(dialect: str) -> str:
     )
     SELECT t AS day_t, y, med_y, ad AS mad_y,
       abs(y - med_y) * 10000 > {_HAMPEL_K_E4} * ad AS is_outlier
-    FROM madr WHERE r = (m + 1){div}2
+    FROM madr WHERE r = (m + 1){dialect.div}2
     ORDER BY t
     """
 
@@ -586,14 +572,13 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _siegel_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _siegel_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
     pslope AS (
       SELECT a.t AS i,
-        CAST(((b.y - a.y) * 1000000){div}(b.t - a.t) AS BIGINT) AS s_e6
+        CAST(((b.y - a.y) * 1000000){dialect.div}(b.t - a.t) AS BIGINT) AS s_e6
       FROM day a JOIN day b ON b.t <> a.t
     ),
     per_i AS (
@@ -603,14 +588,14 @@ def _siegel_sql(dialect: str) -> str:
       FROM pslope
     ),
     imed AS (
-      SELECT i, s_e6 AS med_i FROM per_i WHERE r = (m + 1){div}2
+      SELECT i, s_e6 AS med_i FROM per_i WHERE r = (m + 1){dialect.div}2
     ),
     outer_rank AS (
       SELECT med_i, row_number() OVER (ORDER BY med_i) AS r FROM imed
     ),
     slope AS (
       SELECT o.med_i AS slope_e6 FROM outer_rank o CROSS JOIN n
-      WHERE o.r = (n.n + 1){div}2
+      WHERE o.r = (n.n + 1){dialect.div}2
     ),
     resid AS (
       SELECT d.y * 1000000 - s.slope_e6 * d.t AS res_e6
@@ -620,12 +605,12 @@ def _siegel_sql(dialect: str) -> str:
       SELECT res_e6, row_number() OVER (ORDER BY res_e6) AS r FROM resid
     )
     SELECT n.n AS n_days, s.slope_e6,
-      CAST(ic.res_e6{div}1000000 AS BIGINT) AS intercept
-    FROM slope s CROSS JOIN n JOIN ic ON ic.r = (n.n + 1){div}2
+      CAST(ic.res_e6{dialect.div}1000000 AS BIGINT) AS intercept
+    FROM slope s CROSS JOIN n JOIN ic ON ic.r = (n.n + 1){dialect.div}2
     """
 
 
-@query("repeated_median_slope", oracle=_siegel_sql("duck"))
+@query("repeated_median_slope", oracle=_siegel_sql(DUCK))
 def q_repeated_median_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Siegel's repeated median regression of daily revenue on time:
     slope = med_i med_{j≠i} (yⱼ−yᵢ)/(tⱼ−tᵢ), intercept = med(yᵢ −
@@ -647,7 +632,7 @@ def q_repeated_median_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-identical exact integers.
 
     Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, "orders")
 
     def _siegel(batches):
         import numpy as np
@@ -707,14 +692,11 @@ def q_repeated_median_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _yuen_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _yuen_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     g AS (
-      SELECT n1, n2, n1{div}5 AS g1, n2{div}5 AS g2 FROM tot
+      SELECT n1, n2, n1{dialect.div}5 AS g1, n2{dialect.div}5 AS g2 FROM tot
     ),
     cut AS (
       SELECT max(g.n1) AS n1, max(g.n2) AS n2,
@@ -738,10 +720,10 @@ def _yuen_sql(dialect: str) -> str:
     ),
     sums AS (
       SELECT n1, n2, g1, g2, lo1, hi1, lo2, hi2,
-        sum(CAST(v AS {big}) * k1) AS ts1,
-        sum(CAST(v AS {big}) * k2) AS ts2,
-        sum(CAST(v AS {big}) * v * k1) AS tss1,
-        sum(CAST(v AS {big}) * v * k2) AS tss2
+        sum(CAST(v AS {dialect.big}) * k1) AS ts1,
+        sum(CAST(v AS {dialect.big}) * k2) AS ts2,
+        sum(CAST(v AS {dialect.big}) * v * k1) AS tss1,
+        sum(CAST(v AS {dialect.big}) * v * k2) AS tss2
       FROM kept
       GROUP BY n1, n2, g1, g2, lo1, hi1, lo2, hi2
     ),
@@ -749,17 +731,17 @@ def _yuen_sql(dialect: str) -> str:
       SELECT n1, n2, g1, g2,
         n1 - 2 * g1 AS h1, n2 - 2 * g2 AS h2,
         ts1, ts2,
-        ts1 + g1 * (CAST(lo1 AS {big}) + hi1) AS ws1,
-        ts2 + g2 * (CAST(lo2 AS {big}) + hi2) AS ws2,
-        tss1 + g1 * (CAST(lo1 AS {big}) * lo1
-                     + CAST(hi1 AS {big}) * hi1) AS wss1,
-        tss2 + g2 * (CAST(lo2 AS {big}) * lo2
-                     + CAST(hi2 AS {big}) * hi2) AS wss2
+        ts1 + g1 * (CAST(lo1 AS {dialect.big}) + hi1) AS ws1,
+        ts2 + g2 * (CAST(lo2 AS {dialect.big}) + hi2) AS ws2,
+        tss1 + g1 * (CAST(lo1 AS {dialect.big}) * lo1
+                     + CAST(hi1 AS {dialect.big}) * hi1) AS wss1,
+        tss2 + g2 * (CAST(lo2 AS {dialect.big}) * lo2
+                     + CAST(hi2 AS {dialect.big}) * hi2) AS wss2
       FROM sums
     )
     SELECT n1, n2, h1, h2,
-      CAST((ts1 * 1000000){div}h1 AS BIGINT) AS trim_mean1_e6,
-      CAST((ts2 * 1000000){div}h2 AS BIGINT) AS trim_mean2_e6,
+      CAST((ts1 * 1000000){dialect.div}h1 AS BIGINT) AS trim_mean1_e6,
+      CAST((ts2 * 1000000){dialect.div}h2 AS BIGINT) AS trim_mean2_e6,
       CAST(floor(
         (CAST(ts1 AS DOUBLE) / h1 - CAST(ts2 AS DOUBLE) / h2)
         / sqrt(

@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import Dialect, query, sql_query
 from .catalog_r6b import _HOLT_BASE_SQL
 from .catalog_r7g import _stl_sql
 from .catalog_r8d import _day_sql
@@ -63,10 +63,7 @@ _Z975_E6 = 1_959_963
 # ---------------------------------------------------------------------------
 
 
-def _vn_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _vn_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     seq AS (
@@ -74,14 +71,14 @@ def _vn_sql(dialect: str) -> str:
     ),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        sum(CAST(y AS {big})) AS sy,
-        sum(CAST(y AS {big}) * y) AS syy,
+        sum(CAST(y AS {dialect.big})) AS sy,
+        sum(CAST(y AS {dialect.big}) * y) AS syy,
         sum(CASE WHEN yp IS NOT NULL
-            THEN CAST(y - yp AS {big}) * (y - yp) END) AS sdd
+            THEN CAST(y - yp AS {dialect.big}) * (y - yp) END) AS sdd
       FROM seq
     )
     SELECT n,
-      CAST((sdd * n * 1000000){div}(syy * n - sy * sy) AS BIGINT)
+      CAST((sdd * n * 1000000){dialect.div}(syy * n - sy * sy) AS BIGINT)
         AS vn_ratio_e6,
       CAST(floor((CAST(sdd AS DOUBLE) * n
                   / (CAST(syy AS DOUBLE) * n
@@ -121,10 +118,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _bartels_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bartels_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     rk AS (
@@ -136,11 +130,11 @@ def _bartels_sql(dialect: str) -> str:
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         sum(CASE WHEN rp IS NOT NULL
-            THEN CAST(r - rp AS {big}) * (r - rp) END) AS sdd
+            THEN CAST(r - rp AS {dialect.big}) * (r - rp) END) AS sdd
       FROM seq
     )
     SELECT n,
-      CAST((sdd * 12 * 1000000){div}(CAST(n AS {big}) * (n * n - 1))
+      CAST((sdd * 12 * 1000000){dialect.div}(CAST(n AS {dialect.big}) * (n * n - 1))
            AS BIGINT) AS rvn_e6,
       CAST(floor((CAST(sdd AS DOUBLE) * 12
                   / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) * n - 1))
@@ -174,8 +168,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _fs_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _fs_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     idx AS (
@@ -198,7 +191,7 @@ def _fs_sql(dialect: str) -> str:
         CAST(sum(l) AS BIGINT) AS n_lower,
         CAST(sum(u - l) AS BIGINT) AS d_stat,
         CAST(sum(u + l) AS BIGINT) AS s_stat,
-        CAST(sum(CASE WHEN i > 1 THEN 1000000{div}i ELSE 0 END)
+        CAST(sum(CASE WHEN i > 1 THEN 1000000{dialect.div}i ELSE 0 END)
              AS BIGINT) AS h_ppm
       FROM rec
     )
@@ -237,17 +230,14 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _mosum_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _mosum_sql(dialect: Dialect) -> str:
     g = _MOSUM_G
     return f"""
     WITH {_day_sql(dialect)},
     sv AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        sum(CAST(y AS {big})) AS sy,
-        sum(CAST(y AS {big}) * y) AS syy
+        sum(CAST(y AS {dialect.big})) AS sy,
+        sum(CAST(y AS {dialect.big}) * y) AS syy
       FROM day
     ),
     win AS (
@@ -311,7 +301,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _rud_sql(dialect: str) -> str:
+def _rud_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     d AS (
@@ -564,10 +554,7 @@ def q_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sstrength_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _sstrength_sql(dialect: Dialect) -> str:
     return f"""
     WITH stl AS ({_stl_sql(dialect)}),
     comp AS (
@@ -578,22 +565,22 @@ def _sstrength_sql(dialect: str) -> str:
     ),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        sum(CAST(r AS {big})) AS s_r,
-        sum(CAST(r AS {big}) * r) AS s_rr,
-        sum(CAST(sr AS {big})) AS s_s,
-        sum(CAST(sr AS {big}) * sr) AS s_ss,
-        sum(CAST(tr AS {big})) AS s_t,
-        sum(CAST(tr AS {big}) * tr) AS s_tt
+        sum(CAST(r AS {dialect.big})) AS s_r,
+        sum(CAST(r AS {dialect.big}) * r) AS s_rr,
+        sum(CAST(sr AS {dialect.big})) AS s_s,
+        sum(CAST(sr AS {dialect.big}) * sr) AS s_ss,
+        sum(CAST(tr AS {dialect.big})) AS s_t,
+        sum(CAST(tr AS {dialect.big}) * tr) AS s_tt
       FROM comp
     )
     SELECT n,
       greatest(CAST(0 AS BIGINT),
         1000000 - CAST(((s_rr * n - s_r * s_r) * 1000000)
-                       {div}(s_ss * n - s_s * s_s) AS BIGINT))
+                       {dialect.div}(s_ss * n - s_s * s_s) AS BIGINT))
         AS seasonal_strength_e6,
       greatest(CAST(0 AS BIGINT),
         1000000 - CAST(((s_rr * n - s_r * s_r) * 1000000)
-                       {div}(s_tt * n - s_t * s_t) AS BIGINT))
+                       {dialect.div}(s_tt * n - s_t * s_t) AS BIGINT))
         AS trend_strength_e6
     FROM agg
     """

@@ -44,7 +44,7 @@ from __future__ import annotations
 import math
 from statistics import NormalDist
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: floor(1e6 · χ²₀.₀₅) for df = 10 (Bowker, 5 priorities) and df = 2
 #: (Stuart-Maxwell, 3 classes).
@@ -126,10 +126,7 @@ def _seg_region_cells_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def _bowker_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bowker_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_priority_pairs_sql()},
     c AS (
@@ -145,10 +142,10 @@ def _bowker_sql(dialect: str) -> str:
       FROM c WHERE p97 <> p98 GROUP BY 1, 2
     )
     SELECT CAST(count(*) AS BIGINT) AS df,
-      CAST(sum((CAST(nij - nji AS {big}) * (nij - nji) * 1000000)
-               {div}(nij + nji)) AS BIGINT) AS chi2_e6,
-      CAST(sum((CAST(nij - nji AS {big}) * (nij - nji) * 1000000)
-               {div}(nij + nji)) AS BIGINT) > {_CHI2_DF10_E6}
+      CAST(sum((CAST(nij - nji AS {dialect.big}) * (nij - nji) * 1000000)
+               {dialect.div}(nij + nji)) AS BIGINT) AS chi2_e6,
+      CAST(sum((CAST(nij - nji AS {dialect.big}) * (nij - nji) * 1000000)
+               {dialect.div}(nij + nji)) AS BIGINT) > {_CHI2_DF10_E6}
         AND CAST(count(*) AS BIGINT) = 10 AS reject_symmetry
     FROM sym
     """
@@ -178,10 +175,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _sm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _sm_sql(dialect: Dialect) -> str:
     cls = (
         "CASE WHEN {c} IN ('1-URGENT', '2-HIGH') THEN 1 "
         "WHEN {c} = '3-MEDIUM' THEN 2 ELSE 3 END"
@@ -218,15 +212,15 @@ def _sm_sql(dialect: str) -> str:
       FROM m
     )
     SELECT n_pairs, d1, d2,
-      CAST(((CAST(d1 AS {big}) * d1 * s22
-             - 2 * CAST(d1 AS {big}) * d2 * s12
-             + CAST(d2 AS {big}) * d2 * s11) * 1000000)
-           {div}(CAST(s11 AS {big}) * s22 - CAST(s12 AS {big}) * s12)
+      CAST(((CAST(d1 AS {dialect.big}) * d1 * s22
+             - 2 * CAST(d1 AS {dialect.big}) * d2 * s12
+             + CAST(d2 AS {dialect.big}) * d2 * s11) * 1000000)
+           {dialect.div}(CAST(s11 AS {dialect.big}) * s22 - CAST(s12 AS {dialect.big}) * s12)
            AS BIGINT) AS chi2_e6,
-      CAST(((CAST(d1 AS {big}) * d1 * s22
-             - 2 * CAST(d1 AS {big}) * d2 * s12
-             + CAST(d2 AS {big}) * d2 * s11) * 1000000)
-           {div}(CAST(s11 AS {big}) * s22 - CAST(s12 AS {big}) * s12)
+      CAST(((CAST(d1 AS {dialect.big}) * d1 * s22
+             - 2 * CAST(d1 AS {dialect.big}) * d2 * s12
+             + CAST(d2 AS {dialect.big}) * d2 * s11) * 1000000)
+           {dialect.div}(CAST(s11 AS {dialect.big}) * s22 - CAST(s12 AS {dialect.big}) * s12)
            AS BIGINT) > {_CHI2_DF2_E6} AS reject_marginal_homogeneity
     FROM s
     """
@@ -255,8 +249,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _lambda_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _lambda_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_seg_region_cells_sql()},
     tot AS (SELECT CAST(sum(n) AS BIGINT) AS n FROM cells),
@@ -273,9 +266,9 @@ def _lambda_sql(dialect: str) -> str:
     )
     SELECT tot.n AS n_rows,
       CAST(((sum_max_by_x - max_marg_y) * 1000000)
-           {div}(tot.n - max_marg_y) AS BIGINT) AS lambda_y_given_x_e6,
+           {dialect.div}(tot.n - max_marg_y) AS BIGINT) AS lambda_y_given_x_e6,
       CAST(((sum_max_by_y - max_marg_x) * 1000000)
-           {div}(tot.n - max_marg_x) AS BIGINT) AS lambda_x_given_y_e6
+           {dialect.div}(tot.n - max_marg_x) AS BIGINT) AS lambda_x_given_y_e6
     FROM bymax CROSS JOIN tot
     """
 
@@ -303,28 +296,25 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _gk_tau_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _gk_tau_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_seg_region_cells_sql()},
     tot AS (SELECT CAST(sum(n) AS BIGINT) AS n FROM cells),
     condx AS (
       SELECT CAST(sum(s_e6) AS BIGINT) AS s_e6 FROM (
-        SELECT CAST((sum(CAST(n AS {big}) * n) * 1000000)
-                    {div}sum(n) AS BIGINT) AS s_e6
+        SELECT CAST((sum(CAST(n AS {dialect.big}) * n) * 1000000)
+                    {dialect.div}sum(n) AS BIGINT) AS s_e6
         FROM cells GROUP BY x
       ) t
     ),
     margy AS (
-      SELECT CAST(sum(CAST(ny AS {big}) * ny) AS {big}) AS syy FROM (
+      SELECT CAST(sum(CAST(ny AS {dialect.big}) * ny) AS {dialect.big}) AS syy FROM (
         SELECT CAST(sum(n) AS BIGINT) AS ny FROM cells GROUP BY y
       ) t
     )
     SELECT tot.n AS n_rows,
-      CAST((CAST(condx.s_e6 AS {big}) * tot.n - 1000000 * margy.syy)
-           {div}(CAST(tot.n AS {big}) * tot.n - margy.syy)
+      CAST((CAST(condx.s_e6 AS {dialect.big}) * tot.n - 1000000 * margy.syy)
+           {dialect.div}(CAST(tot.n AS {dialect.big}) * tot.n - margy.syy)
            AS BIGINT) AS tau_y_given_x_e6
     FROM condx CROSS JOIN margy CROSS JOIN tot
     """
@@ -351,8 +341,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _theil_u_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _theil_u_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_seg_region_cells_sql()},
     marg AS (
@@ -379,7 +368,7 @@ def _theil_u_sql(dialect: str) -> str:
             FROM marg GROUP BY y) t
     )
     SELECT mi.n_rows, mi.mi_microbits, hy.hy_microbits,
-      CAST((mi.mi_microbits * 1000000){div}hy.hy_microbits AS BIGINT)
+      CAST((mi.mi_microbits * 1000000){dialect.div}hy.hy_microbits AS BIGINT)
         AS u_y_given_x_e6
     FROM mi CROSS JOIN hy
     """
@@ -408,10 +397,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _yule_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _yule_sql(dialect: Dialect) -> str:
     return f"""
     WITH t AS (
       SELECT
@@ -426,14 +412,14 @@ def _yule_sql(dialect: str) -> str:
       FROM lineitem
     )
     SELECT a, b, c, d,
-      CAST(((CAST(a AS {big}) * d - CAST(b AS {big}) * c) * 1000000)
-           {div}(CAST(a AS {big}) * d + CAST(b AS {big}) * c)
+      CAST(((CAST(a AS {dialect.big}) * d - CAST(b AS {dialect.big}) * c) * 1000000)
+           {dialect.div}(CAST(a AS {dialect.big}) * d + CAST(b AS {dialect.big}) * c)
            AS BIGINT) AS yule_q_e6,
       CAST(floor((sqrt(CAST(a AS DOUBLE) * d) - sqrt(CAST(b AS DOUBLE) * c))
                  / (sqrt(CAST(a AS DOUBLE) * d) + sqrt(CAST(b AS DOUBLE) * c))
                  * 1e6) AS BIGINT) AS yule_y_e6,
-      CAST((CAST(a AS {big}) * d * 1000000)
-           {div}(CAST(b AS {big}) * c) AS BIGINT) AS odds_ratio_e6
+      CAST((CAST(a AS {dialect.big}) * d * 1000000)
+           {dialect.div}(CAST(b AS {dialect.big}) * c) AS BIGINT) AS odds_ratio_e6
     FROM t
     """
 
@@ -462,16 +448,13 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _newcombe_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _newcombe_sql(dialect: Dialect) -> str:
     z2 = _Z2_E6
     wilson = f"""
       SELECT seg, n, a,
-        CAST((a * 1000000){div}n AS BIGINT) AS p_ppm,
-        CAST(((CAST(a AS {big}) * 1000000 + {z2 // 2}) * 1000000)
-             {div}(CAST(n AS {big}) * 1000000 + {z2}) AS BIGINT)
+        CAST((a * 1000000){dialect.div}n AS BIGINT) AS p_ppm,
+        CAST(((CAST(a AS {dialect.big}) * 1000000 + {z2 // 2}) * 1000000)
+             {dialect.div}(CAST(n AS {dialect.big}) * 1000000 + {z2}) AS BIGINT)
           AS center_ppm,
         CAST(floor(
           sqrt({z2} / 1e6 * (CAST(a * (n - a) AS DOUBLE) / n
@@ -548,7 +531,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _by_sql(dialect: str) -> str:
+def _by_sql(dialect: Dialect) -> str:
     return f"""
     WITH per_order AS (
       SELECT o.o_orderkey, o.o_custkey,

@@ -46,7 +46,7 @@ Reference parity: beyond-reference embedding/graph/layout tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8e import _cos_e6_pre, _dot, _norm
 from .catalog_r9e import _cent_assign_ctes
 
@@ -62,8 +62,7 @@ _PLAN_PARTS = 32
 # ---------------------------------------------------------------------------
 
 
-def _core_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _core_sql(dialect: Dialect) -> str:
     cos_ab = _cos_e6_pre(
         dialect, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
     )
@@ -93,7 +92,7 @@ def _core_sql(dialect: str) -> str:
     )
     SELECT p.cell_id, p.n_pts,
       CAST(count(c.vec_id) AS BIGINT) AS n_with_core,
-      CAST(sum(c.core_dist_e6){div}count(c.vec_id) AS BIGINT)
+      CAST(sum(c.core_dist_e6){dialect.div}count(c.vec_id) AS BIGINT)
         AS mean_core_dist_e6,
       CAST(max(c.core_dist_e6) AS BIGINT) AS max_core_dist_e6
     FROM pop p LEFT JOIN core c ON c.cell_id = p.cell_id
@@ -128,8 +127,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _recip_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _recip_sql(dialect: Dialect) -> str:
     cos_ab = _cos_e6_pre(
         dialect, "ea.embedding", "eb.embedding", "ea.nrm", "eb.nrm"
     )
@@ -154,7 +152,7 @@ def _recip_sql(dialect: str) -> str:
       CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
            AS BIGINT) AS n_reciprocal,
       CAST((sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
-            * 1000000){div}count(*) AS BIGINT) AS reciprocity_ppm
+            * 1000000){dialect.div}count(*) AS BIGINT) AS reciprocity_ppm
     FROM knn k
     LEFT JOIN knn r ON r.src = k.dst AND r.dst = k.src
     """
@@ -185,10 +183,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _drift_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    if spark:
+def _drift_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         epos = """
       SELECT a.cell_id, pos,
         CAST(floor(CAST(val AS DOUBLE) * 1000000) AS BIGINT) AS v_e6
@@ -216,7 +212,7 @@ def _drift_sql(dialect: str) -> str:
     epos AS ({epos}),
     mean AS (
       SELECT cell_id, pos,
-        CAST(sum(v_e6){div}count(*) AS BIGINT) AS m_e6
+        CAST(sum(v_e6){dialect.div}count(*) AS BIGINT) AS m_e6
       FROM epos GROUP BY cell_id, pos
     ),
     cpos AS ({cpos}),
@@ -272,8 +268,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _overlap_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _overlap_sql(dialect: Dialect) -> str:
     # The test corpus is unit-norm (cosine == dot, overlap trivially
     # 1.0), so the instrument is CALIBRATED against an injected
     # deterministic norm profile: corpus vector e gets length factor
@@ -319,7 +314,7 @@ def _overlap_sql(dialect: str) -> str:
                THEN 1 ELSE 0 END) AS BIGINT) AS n_common,
       CAST((sum(CASE WHEN rn_cos <= {_OVERLAP_K}
                       AND rn_dot <= {_OVERLAP_K}
-                THEN 1 ELSE 0 END) * 1000000){div}{_OVERLAP_K}
+                THEN 1 ELSE 0 END) * 1000000){dialect.div}{_OVERLAP_K}
            AS BIGINT) AS overlap_ppm
     FROM scored
     GROUP BY query_id
@@ -361,8 +356,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _contrast_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _contrast_sql(dialect: Dialect) -> str:
     cos_eq = _cos_e6_pre(
         dialect, "e.embedding", "q.embedding", "e.nrm", "q.nrm"
     )
@@ -383,9 +377,9 @@ def _contrast_sql(dialect: str) -> str:
     SELECT query_id,
       CAST(count(*) AS BIGINT) AS n_corpus,
       CAST(min(dist_e6) AS BIGINT) AS nn_dist_e6,
-      CAST(sum(dist_e6){div}count(*) AS BIGINT) AS mean_dist_e6,
-      CAST(((sum(dist_e6){div}count(*)) * 1000000)
-           {div}min(dist_e6) AS BIGINT) AS relative_contrast_e6
+      CAST(sum(dist_e6){dialect.div}count(*) AS BIGINT) AS mean_dist_e6,
+      CAST(((sum(dist_e6){dialect.div}count(*)) * 1000000)
+           {dialect.div}min(dist_e6) AS BIGINT) AS relative_contrast_e6
     FROM dists
     GROUP BY query_id
     ORDER BY query_id
@@ -417,10 +411,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _dgini_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _dgini_sql(dialect: Dialect) -> str:
     return f"""
     WITH edges AS (
       SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
@@ -439,13 +430,13 @@ def _dgini_sql(dialect: str) -> str:
     ),
     agg AS (
       SELECT CAST(sum(m) AS BIGINT) AS n,
-        sum(CAST(d AS {big}) * m) AS t,
-        sum(CAST(d AS {big}) * (2 * CAST(m AS {big}) * a
-            + CAST(m AS {big}) * (m + 1))) AS s2
+        sum(CAST(d AS {dialect.big}) * m) AS t,
+        sum(CAST(d AS {dialect.big}) * (2 * CAST(m AS {dialect.big}) * a
+            + CAST(m AS {dialect.big}) * (m + 1))) AS s2
       FROM cum
     )
     SELECT n AS n_suppliers, CAST(t AS BIGINT) AS n_edges,
-      CAST(((s2 - (n + 1) * t) * 1000000){div}(n * t) AS BIGINT)
+      CAST(((s2 - (n + 1) * t) * 1000000){dialect.div}(n * t) AS BIGINT)
         AS degree_gini_e6
     FROM agg
     """
@@ -476,18 +467,14 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _planner_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _planner_sql(dialect: Dialect) -> str:
     pids = ", ".join(f"({i})" for i in range(1, _PLAN_PARTS + 1))
     pidtab = (
-        f"SELECT CAST(pid AS BIGINT) AS pid FROM VALUES {pids} AS t(pid)"
-        if spark
-        else f"SELECT CAST(pid AS BIGINT) AS pid FROM (VALUES {pids}) t(pid)"
+        f"SELECT CAST(pid AS BIGINT) AS pid FROM {dialect.values(pids, 't(pid)')}"
     )
     return f"""
     WITH h AS (
-      SELECT CAST(round(o_totalprice * 100) AS BIGINT){div}1000 AS v,
+      SELECT CAST(round(o_totalprice * 100) AS BIGINT){dialect.div}1000 AS v,
         CAST(count(*) AS BIGINT) AS m
       FROM orders GROUP BY 1
     ),
@@ -502,7 +489,7 @@ def _planner_sql(dialect: str) -> str:
     bounds AS (
       SELECT p.pid, min(cum.v) AS hi_v
       FROM pids p CROSS JOIN tot
-      JOIN cum ON cum.c >= (p.pid * tot.n){div}{_PLAN_PARTS}
+      JOIN cum ON cum.c >= (p.pid * tot.n){dialect.div}{_PLAN_PARTS}
       GROUP BY p.pid
     ),
     parts AS (
@@ -520,7 +507,7 @@ def _planner_sql(dialect: str) -> str:
     SELECT s.pid, CAST(s.lo_v AS BIGINT) AS lo_bucket_excl,
       CAST(s.hi_v AS BIGINT) AS hi_bucket_incl,
       s.rows_planned,
-      CAST((s.rows_planned * {_PLAN_PARTS} * 1000000){div}tot.n
+      CAST((s.rows_planned * {_PLAN_PARTS} * 1000000){dialect.div}tot.n
            AS BIGINT) AS skew_ppm
     FROM sized s CROSS JOIN tot
     ORDER BY s.pid
@@ -560,10 +547,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _loglen_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _loglen_sql(dialect: Dialect) -> str:
     return f"""
     WITH l AS (
       SELECT n_chars,
@@ -573,8 +557,8 @@ def _loglen_sql(dialect: str) -> str:
     ),
     mom AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        sum(CAST(ln_e6 AS {big})) AS s1,
-        sum(CAST(ln_e6 AS {big}) * ln_e6) AS s2
+        sum(CAST(ln_e6 AS {dialect.big})) AS s1,
+        sum(CAST(ln_e6 AS {dialect.big}) * ln_e6) AS s2
       FROM l
     ),
     hist AS (
@@ -587,12 +571,12 @@ def _loglen_sql(dialect: str) -> str:
           sum(m) OVER (ORDER BY v
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
         FROM hist
-      ) t CROSS JOIN mom WHERE t.c >= (mom.n + 1){div}2
+      ) t CROSS JOIN mom WHERE t.c >= (mom.n + 1){dialect.div}2
     )
     SELECT mom.n AS n_docs,
-      CAST(mom.s1{div}mom.n AS BIGINT) AS ln_mu_e6,
+      CAST(mom.s1{dialect.div}mom.n AS BIGINT) AS ln_mu_e6,
       CAST(((mom.s2 * mom.n - mom.s1 * mom.s1)
-            {div}(CAST(mom.n AS {big}) * (mom.n - 1))){div}1000000
+            {dialect.div}(CAST(mom.n AS {dialect.big}) * (mom.n - 1))){dialect.div}1000000
            AS BIGINT) AS ln_sigma2_e6,
       med.median_chars
     FROM mom CROSS JOIN med

@@ -32,7 +32,7 @@ Reference parity: beyond-reference text tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: floor(1e6 · χ²₀.₀₅) at df = 19 (20 sources − 1).
 _CHI2_DF19_E6 = 30_143_527
@@ -48,10 +48,10 @@ _STOPWORDS = (
 _STOP_SQL = ", ".join(f"'{w}'" for w in _STOPWORDS)
 
 
-def _tok_cte(dialect: str) -> str:
+def _tok_cte(dialect: Dialect) -> str:
     """doc_id/source → token OCCURRENCES (``tok``), the r9f whitespace
     split convention."""
-    if dialect == "spark":
+    if dialect.spark:
         return r"""
     tok AS (
       SELECT doc_id, source, explode(split(lower(trim(text)), '\\s+'))
@@ -73,8 +73,7 @@ def _tok_cte(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _kl_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _kl_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     wc AS (
@@ -137,8 +136,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _js_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _js_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     wc AS (
@@ -173,8 +171,8 @@ def _js_sql(dialect: str) -> str:
     )
     SELECT bp.sa AS src_a, bp.sb AS src_b,
       CAST(bp.shared_microbits
-        + ((ta.ns - bp.ca_shared) * 500000){div}ta.ns
-        + ((tb.ns - bp.cb_shared) * 500000){div}tb.ns
+        + ((ta.ns - bp.ca_shared) * 500000){dialect.div}ta.ns
+        + ((tb.ns - bp.cb_shared) * 500000){dialect.div}tb.ns
         AS BIGINT) AS js_microbits
     FROM both_part bp
     JOIN stot ta ON ta.source = bp.sa
@@ -212,10 +210,8 @@ sql_query(
 _MSTTR_SEG = 50
 
 
-def _msttr_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    if spark:
+def _msttr_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         pos_cte = r"""
     ptok AS (
       SELECT doc_id, source, pos, w
@@ -241,10 +237,10 @@ def _msttr_sql(dialect: str) -> str:
       FROM ptok GROUP BY doc_id
     ),
     seg AS (
-      SELECT p.source, p.doc_id, p.pos{div}{_MSTTR_SEG} AS seg_id,
+      SELECT p.source, p.doc_id, p.pos{dialect.div}{_MSTTR_SEG} AS seg_id,
         p.w
       FROM ptok p JOIN doclen l ON l.doc_id = p.doc_id
-      WHERE p.pos{div}{_MSTTR_SEG} < l.len{div}{_MSTTR_SEG}
+      WHERE p.pos{dialect.div}{_MSTTR_SEG} < l.len{dialect.div}{_MSTTR_SEG}
     ),
     per_seg AS (
       SELECT source, doc_id, seg_id,
@@ -253,7 +249,7 @@ def _msttr_sql(dialect: str) -> str:
     )
     SELECT source,
       CAST(count(*) AS BIGINT) AS n_segments,
-      CAST((sum(v) * 1000000){div}(count(*) * {_MSTTR_SEG})
+      CAST((sum(v) * 1000000){dialect.div}(count(*) * {_MSTTR_SEG})
            AS BIGINT) AS msttr_e6
     FROM per_seg
     GROUP BY source
@@ -285,10 +281,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _stopchi_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _stopchi_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     per_src AS (
@@ -304,13 +297,13 @@ def _stopchi_sql(dialect: str) -> str:
       FROM per_src
     )
     SELECT t.s AS n_sources, t.n AS n_tokens, t.o AS n_stopwords,
-      CAST(sum(CAST((p.o_s * t.n - p.n_s * t.o) AS {big})
+      CAST(sum(CAST((p.o_s * t.n - p.n_s * t.o) AS {dialect.big})
                * (p.o_s * t.n - p.n_s * t.o) * 1000000
-               {div}(CAST(p.n_s AS {big}) * t.o * t.n)) AS BIGINT)
+               {dialect.div}(CAST(p.n_s AS {dialect.big}) * t.o * t.n)) AS BIGINT)
         AS chi2_e6,
-      CAST(sum(CAST((p.o_s * t.n - p.n_s * t.o) AS {big})
+      CAST(sum(CAST((p.o_s * t.n - p.n_s * t.o) AS {dialect.big})
                * (p.o_s * t.n - p.n_s * t.o) * 1000000
-               {div}(CAST(p.n_s AS {big}) * t.o * t.n)) AS BIGINT)
+               {dialect.div}(CAST(p.n_s AS {dialect.big}) * t.o * t.n)) AS BIGINT)
           > {_CHI2_DF19_E6}
         AND t.s = 20 AS reject_homogeneity
     FROM per_src p CROSS JOIN tot t
@@ -341,8 +334,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _hapax_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _hapax_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     wc AS (
@@ -355,9 +347,9 @@ def _hapax_sql(dialect: str) -> str:
       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
       CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
       CAST((sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) * 1000000)
-           {div}count(*) AS BIGINT) AS hapax_ratio_e6,
+           {dialect.div}count(*) AS BIGINT) AS hapax_ratio_e6,
       CAST((sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) * 1000000)
-           {div}count(*) AS BIGINT) AS sichel_e6,
+           {dialect.div}count(*) AS BIGINT) AS sichel_e6,
       CAST(floor(10000 * ln(CAST(sum(c) AS DOUBLE)) * count(*)
                  / nullif(count(*)
                    - sum(CASE WHEN c = 1 THEN 1 ELSE 0 END), 0))

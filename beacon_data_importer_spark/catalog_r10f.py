@@ -29,7 +29,7 @@ J1's first-wins dedup is the reference's only dedup surface).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: md5 first-hex-char band for a chunk boundary: 2/16 = 1/8 of tokens
 #: end a chunk → mean chunk length 8 tokens.
@@ -42,11 +42,9 @@ _NGRAM_N = 8
 # ---------------------------------------------------------------------------
 
 
-def _cdc_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _cdc_sql(dialect: Dialect) -> str:
     band = ", ".join(f"'{c}'" for c in _CDC_BAND)
-    if spark:
+    if dialect.spark:
         pos_cte = r"""
     ptok AS (
       SELECT doc_id, pos, w
@@ -97,10 +95,10 @@ def _cdc_sql(dialect: str) -> str:
     )
     SELECT CAST(sum(c) AS BIGINT) AS n_chunks,
       CAST(count(*) AS BIGINT) AS n_distinct_chunks,
-      CAST(((sum(c) - count(*)) * 1000000){div}sum(c) AS BIGINT)
+      CAST(((sum(c) - count(*)) * 1000000){dialect.div}sum(c) AS BIGINT)
         AS dup_chunk_ppm,
       CAST(max(c) AS BIGINT) AS top_dup_count,
-      CAST((sum(c * chunk_len) * 100){div}sum(c) AS BIGINT)
+      CAST((sum(c * chunk_len) * 100){dialect.div}sum(c) AS BIGINT)
         AS mean_chunk_len_e2
     FROM byhash
     """
@@ -133,11 +131,9 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _xsource_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _xsource_sql(dialect: Dialect) -> str:
     n = _NGRAM_N
-    if spark:
+    if dialect.spark:
         tk = r"split(lower(trim(text)), '\\s+')"
         gs = (
             f"transform(sequence(0, size(tk) - {n}),"
@@ -181,7 +177,7 @@ def _xsource_sql(dialect: str) -> str:
     )
     SELECT i.sa AS src_a, i.sb AS src_b, ta.n_sh AS n_shingles_a,
       i.n_common,
-      CAST((i.n_common * 1000000){div}ta.n_sh AS BIGINT)
+      CAST((i.n_common * 1000000){dialect.div}ta.n_sh AS BIGINT)
         AS containment_ppm
     FROM inter i JOIN stot ta ON ta.source = i.sa
     ORDER BY containment_ppm DESC, i.sa, i.sb
@@ -217,7 +213,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _wdbt_sql(dialect: str) -> str:
+def _wdbt_sql(dialect: Dialect) -> str:
     return """
     SELECT date_trunc('hour', ts) AS window_start, event_type,
       CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users

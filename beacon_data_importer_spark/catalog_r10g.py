@@ -46,9 +46,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _ordinal_pairs_sql, _two_group_hist_sql
+from .sources.parquet import register_views
 
 #: floor(1e6 · z₀.₉₇₅) — two-sided 5% normal gate (Mann-Kendall z).
 _Z975_E6 = 1_959_963
@@ -56,22 +57,12 @@ _Z975_E6 = 1_959_963
 _CUCCONI_CRIT_E6 = 2_995_732
 
 
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
-
-
 # ---------------------------------------------------------------------------
 # hoeffding_d
 # ---------------------------------------------------------------------------
 
 
-def _hoeffding_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hoeffding_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -90,16 +81,16 @@ def _hoeffding_sql(dialect: str) -> str:
     sums AS (
       SELECT
         CAST(sum(c * (c - 1)) AS BIGINT) AS d1,
-        CAST(sum(CAST((r - 1) * (r - 2) AS {big}) * (s - 1) * (s - 2))
-             AS {big}) AS d2,
-        CAST(sum(CAST((r - 2) * (s - 2) AS {big}) * c) AS {big}) AS d3
+        CAST(sum(CAST((r - 1) * (r - 2) AS {dialect.big}) * (s - 1) * (s - 2))
+             AS {dialect.big}) AS d2,
+        CAST(sum(CAST((r - 2) * (s - 2) AS {dialect.big}) * c) AS {dialect.big}) AS d3
       FROM q
     )
     SELECT n.n AS n_days, s.d1 AS d1, CAST(s.d2 AS BIGINT) AS d2,
       CAST(s.d3 AS BIGINT) AS d3,
-      CAST((CAST((n.n - 2) * (n.n - 3) AS {big}) * s.d1
+      CAST((CAST((n.n - 2) * (n.n - 3) AS {dialect.big}) * s.d1
             + s.d2 - 2 * (n.n - 2) * s.d3) * 30000000
-           {div}(CAST(n.n AS {big}) * (n.n - 1) * (n.n - 2)
+           {dialect.div}(CAST(n.n AS {dialect.big}) * (n.n - 1) * (n.n - 2)
                  * (n.n - 3) * (n.n - 4))
         AS BIGINT) AS hoeffding_d_e6
     FROM sums s CROSS JOIN n
@@ -138,15 +129,12 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _dcor_sql(dialect: str, par: int | None = None) -> str:
+def _dcor_sql(dialect: Dialect, par: int | None = None) -> str:
     # par: parallelize the exact-integer pair expansion (see
     # catalog_r10a._sn_sql; r11 round, guide §2)
     src = (f"(SELECT /*+ REPARTITION({par}) */ * FROM day)"
            if par else "day")
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    hint = "/*+ BROADCAST(b) */ " if spark else ""
+    hint = dialect.broadcast("b")
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -160,36 +148,36 @@ def _dcor_sql(dialect: str, par: int | None = None) -> str:
       SELECT i,
         CAST(sum(da) AS BIGINT) AS ra,
         CAST(sum(db) AS BIGINT) AS rb,
-        CAST(sum(CAST(da AS {big}) * db) AS {big}) AS sab,
-        CAST(sum(CAST(da AS {big}) * da) AS {big}) AS saa,
-        CAST(sum(CAST(db AS {big}) * db) AS {big}) AS sbb
+        CAST(sum(CAST(da AS {dialect.big}) * db) AS {dialect.big}) AS sab,
+        CAST(sum(CAST(da AS {dialect.big}) * da) AS {dialect.big}) AS saa,
+        CAST(sum(CAST(db AS {dialect.big}) * db) AS {dialect.big}) AS sbb
       FROM p GROUP BY i
     ),
     g AS (
       SELECT
-        CAST(sum(CAST(ra AS {big})) AS {big}) AS sa,
-        CAST(sum(CAST(rb AS {big})) AS {big}) AS sb,
-        CAST(sum(sab) AS {big}) AS sab,
-        CAST(sum(saa) AS {big}) AS saa,
-        CAST(sum(sbb) AS {big}) AS sbb,
-        CAST(sum(CAST(ra AS {big}) * rb) AS {big}) AS srarb,
-        CAST(sum(CAST(ra AS {big}) * ra) AS {big}) AS srara,
-        CAST(sum(CAST(rb AS {big}) * rb) AS {big}) AS srbrb
+        CAST(sum(CAST(ra AS {dialect.big})) AS {dialect.big}) AS sa,
+        CAST(sum(CAST(rb AS {dialect.big})) AS {dialect.big}) AS sb,
+        CAST(sum(sab) AS {dialect.big}) AS sab,
+        CAST(sum(saa) AS {dialect.big}) AS saa,
+        CAST(sum(sbb) AS {dialect.big}) AS sbb,
+        CAST(sum(CAST(ra AS {dialect.big}) * rb) AS {dialect.big}) AS srarb,
+        CAST(sum(CAST(ra AS {dialect.big}) * ra) AS {dialect.big}) AS srara,
+        CAST(sum(CAST(rb AS {dialect.big}) * rb) AS {dialect.big}) AS srbrb
       FROM rowsum
     ),
     moments AS (
       SELECT n.n AS n,
-        CAST(n.n AS {big}) * n.n * g.sab + g.sa * g.sb
+        CAST(n.n AS {dialect.big}) * n.n * g.sab + g.sa * g.sb
           - 2 * n.n * g.srarb AS ncov,
-        CAST(n.n AS {big}) * n.n * g.saa + g.sa * g.sa
+        CAST(n.n AS {dialect.big}) * n.n * g.saa + g.sa * g.sa
           - 2 * n.n * g.srara AS nx,
-        CAST(n.n AS {big}) * n.n * g.sbb + g.sb * g.sb
+        CAST(n.n AS {dialect.big}) * n.n * g.sbb + g.sb * g.sb
           - 2 * n.n * g.srbrb AS ny
       FROM g CROSS JOIN n
     )
     SELECT n AS n_days,
       CAST((ncov * 1000000)
-           {div}(CAST(n AS {big}) * n * n * n) AS BIGINT) AS dcov2_e6,
+           {dialect.div}(CAST(n AS {dialect.big}) * n * n * n) AS BIGINT) AS dcov2_e6,
       CAST(floor(1000000 * (CAST(ncov AS DOUBLE) / CAST(nx AS DOUBLE))
                  * (CAST(ncov AS DOUBLE) / CAST(ny AS DOUBLE)))
         AS BIGINT) AS dcor4_e6
@@ -198,7 +186,7 @@ def _dcor_sql(dialect: str, par: int | None = None) -> str:
 
 
 @query(
-    "distance_correlation_lite", oracle=_dcor_sql("duck")
+    "distance_correlation_lite", oracle=_dcor_sql(DUCK)
 )
 def q_distance_correlation_lite(
     spark: SparkSession, sf_dir: str
@@ -224,9 +212,9 @@ def q_distance_correlation_lite(
     aggregate.  DECIMAL(38)/HUGEINT holds the ≤1e35 intermediate.
 
     Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
-        _dcor_sql("spark", par=spark.sparkContext.defaultParallelism)
+        _dcor_sql(SPARK, par=spark.sparkContext.defaultParallelism)
     )
 
 
@@ -235,8 +223,7 @@ def q_distance_correlation_lite(
 # ---------------------------------------------------------------------------
 
 
-def _blomqvist_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _blomqvist_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -248,8 +235,8 @@ def _blomqvist_sql(dialect: str) -> str:
     ),
     med AS (
       SELECT
-        max(CASE WHEN rk.rt = (n.n + 1){div}2 THEN rk.t END) AS mt,
-        max(CASE WHEN rk.ry = (n.n + 1){div}2 THEN rk.y END) AS my
+        max(CASE WHEN rk.rt = (n.n + 1){dialect.div}2 THEN rk.t END) AS mt,
+        max(CASE WHEN rk.ry = (n.n + 1){dialect.div}2 THEN rk.y END) AS my
       FROM rk CROSS JOIN n
     ),
     cnt AS (
@@ -263,7 +250,7 @@ def _blomqvist_sql(dialect: str) -> str:
       FROM day CROSS JOIN med
     )
     SELECT n.n AS n_days, cnt.conc AS concordant, cnt.disc AS discordant,
-      CAST(((cnt.conc - cnt.disc) * 1000000){div}(cnt.conc + cnt.disc)
+      CAST(((cnt.conc - cnt.disc) * 1000000){dialect.div}(cnt.conc + cnt.disc)
         AS BIGINT) AS beta_e6
     FROM cnt CROSS JOIN n
     """
@@ -293,8 +280,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _footrule_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _footrule_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -309,7 +295,7 @@ def _footrule_sql(dialect: str) -> str:
     )
     SELECT n.n AS n_days, f.f AS footrule_distance,
       CAST(((n.n * n.n - 1 - 3 * f.f) * 1000000)
-           {div}(n.n * n.n - 1) AS BIGINT) AS footrule_sim_e6
+           {dialect.div}(n.n * n.n - 1) AS BIGINT) AS footrule_sim_e6
     FROM f CROSS JOIN n
     """
 
@@ -337,7 +323,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _mk_sql(dialect: str) -> str:
+def _mk_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -403,9 +389,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _cucconi_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _cucconi_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     r2 AS (
@@ -414,10 +398,10 @@ def _cucconi_sql(dialect: str) -> str:
     ),
     q AS (
       SELECT t.n1 AS n1, t.n2 AS n2, t.n1 + t.n2 AS nn,
-        CAST(sum(CAST(r2.c2 AS {big}) * r2.r2 * r2.r2) AS {big}) AS q2,
-        CAST(sum(CAST(r2.c2 AS {big})
+        CAST(sum(CAST(r2.c2 AS {dialect.big}) * r2.r2 * r2.r2) AS {dialect.big}) AS q2,
+        CAST(sum(CAST(r2.c2 AS {dialect.big})
                  * (2 * (t.n1 + t.n2 + 1) - r2.r2)
-                 * (2 * (t.n1 + t.n2 + 1) - r2.r2)) AS {big}) AS q2c
+                 * (2 * (t.n1 + t.n2 + 1) - r2.r2)) AS {dialect.big}) AS q2c
       FROM r2 CROSS JOIN tot t
       GROUP BY t.n1, t.n2
     ),
@@ -476,42 +460,36 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _cronbach_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cronbach_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(o_orderdate, (SELECT min(o_orderdate) FROM orders))"
-        if spark
-        else "datediff('day', (SELECT min(o_orderdate) FROM orders),"
-        " o_orderdate)"
+        dialect.datediff("(SELECT min(o_orderdate) FROM orders)", "o_orderdate")
     )
     return f"""
     WITH base AS (
       SELECT o_custkey AS ck, CAST({dd} AS BIGINT) AS dd,
-        CAST(round(o_totalprice * 100) AS BIGINT){div}1000 AS x
+        CAST(round(o_totalprice * 100) AS BIGINT){dialect.div}1000 AS x
       FROM orders
     ),
     sp AS (SELECT CAST(max(dd) + 1 AS BIGINT) AS span FROM base),
     items AS (
       SELECT ck,
-        CAST(sum(CASE WHEN (3 * dd){div}span = 0 THEN x ELSE 0 END)
+        CAST(sum(CASE WHEN (3 * dd){dialect.div}span = 0 THEN x ELSE 0 END)
              AS BIGINT) AS x1,
-        CAST(sum(CASE WHEN (3 * dd){div}span = 1 THEN x ELSE 0 END)
+        CAST(sum(CASE WHEN (3 * dd){dialect.div}span = 1 THEN x ELSE 0 END)
              AS BIGINT) AS x2,
-        CAST(sum(CASE WHEN (3 * dd){div}span = 2 THEN x ELSE 0 END)
+        CAST(sum(CASE WHEN (3 * dd){dialect.div}span = 2 THEN x ELSE 0 END)
              AS BIGINT) AS x3
       FROM base CROSS JOIN sp GROUP BY ck
     ),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(x1) AS {big}) AS s1, CAST(sum(x2) AS {big}) AS s2,
-        CAST(sum(x3) AS {big}) AS s3,
-        CAST(sum(CAST(x1 AS {big}) * x1) AS {big}) AS q1,
-        CAST(sum(CAST(x2 AS {big}) * x2) AS {big}) AS q2,
-        CAST(sum(CAST(x3 AS {big}) * x3) AS {big}) AS q3,
-        CAST(sum(CAST(x1 + x2 + x3 AS {big}) * (x1 + x2 + x3))
-             AS {big}) AS qt
+        CAST(sum(x1) AS {dialect.big}) AS s1, CAST(sum(x2) AS {dialect.big}) AS s2,
+        CAST(sum(x3) AS {dialect.big}) AS s3,
+        CAST(sum(CAST(x1 AS {dialect.big}) * x1) AS {dialect.big}) AS q1,
+        CAST(sum(CAST(x2 AS {dialect.big}) * x2) AS {dialect.big}) AS q2,
+        CAST(sum(CAST(x3 AS {dialect.big}) * x3) AS {dialect.big}) AS q3,
+        CAST(sum(CAST(x1 + x2 + x3 AS {dialect.big}) * (x1 + x2 + x3))
+             AS {dialect.big}) AS qt
       FROM items
     ),
     nd AS (
@@ -522,8 +500,8 @@ def _cronbach_sql(dialect: str) -> str:
       FROM agg
     )
     SELECT n AS n_customers,
-      CAST((num * 1000000){div}den AS BIGINT) AS item_var_share_e6,
-      CAST((3 * (den - num) * 1000000){div}(2 * den) AS BIGINT)
+      CAST((num * 1000000){dialect.div}den AS BIGINT) AS item_var_share_e6,
+      CAST((3 * (den - num) * 1000000){dialect.div}(2 * den) AS BIGINT)
         AS alpha_e6
     FROM nd
     """
@@ -557,10 +535,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _tauc_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _tauc_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_ordinal_pairs_sql(dialect)},
     dims AS (
@@ -573,7 +548,7 @@ def _tauc_sql(dialect: str) -> str:
       CAST(pm.qd AS BIGINT) AS discordant,
       dims.m AS m_min_dim, dims.nt AS n_rows,
       CAST((2 * dims.m * (pm.p - pm.qd) * 1000000)
-           {div}(CAST(dims.nt AS {big}) * dims.nt * (dims.m - 1))
+           {dialect.div}(CAST(dims.nt AS {dialect.big}) * dims.nt * (dims.m - 1))
         AS BIGINT) AS tau_c_ppm
     FROM pm CROSS JOIN dims
     """

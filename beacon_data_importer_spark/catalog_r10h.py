@@ -44,7 +44,7 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: KMV sketch size: rel. std. error ≈ 1/√(k−2) ≈ 9%.  128 (not the
 #: production 1024+) so the sketch stays meaningfully SMALLER than the
@@ -55,20 +55,17 @@ _KMV_K = 128
 _HASH_SPACE = 1 << 60
 
 
-def _cust_hist_sql(dialect: str) -> str:
+def _cust_hist_sql(dialect: Dialect) -> str:
     """Customer revenue coarsened to $1000 buckets (v = cents div 1e5),
     the r9d ``gini_lorenz_audit`` frame: h(v, c) histogram over the
     DISTINCT buckets, cum(cn, cs) ascending cumulatives, tot(n, s).
     The cumulative window runs over the DISTINCT-bucket frame
     (price-range-bounded — BOUNDED_FRAME_AUDITED class)."""
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
     return f"""
     cust AS (
       SELECT c.c_custkey,
         CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
-                      0) AS BIGINT){div}100000 AS v
+                      0) AS BIGINT){dialect.div}100000 AS v
       FROM customer c
       LEFT JOIN orders o ON o.o_custkey = c.c_custkey
       GROUP BY c.c_custkey
@@ -78,13 +75,13 @@ def _cust_hist_sql(dialect: str) -> str:
       SELECT v, c,
         sum(c) OVER (ORDER BY v
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn,
-        sum(CAST(c AS {big}) * v) OVER (ORDER BY v
+        sum(CAST(c AS {dialect.big}) * v) OVER (ORDER BY v
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
       FROM h
     ),
     tot AS (
       SELECT CAST(sum(c) AS BIGINT) AS n,
-        CAST(sum(CAST(c AS {big}) * v) AS {big}) AS s
+        CAST(sum(CAST(c AS {dialect.big}) * v) AS {dialect.big}) AS s
       FROM h
     )"""
 
@@ -94,21 +91,18 @@ def _cust_hist_sql(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _hoover_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hoover_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cust_hist_sql(dialect)},
     dev AS (
-      SELECT CAST(sum(CAST(h.c AS {big})
-                      * abs(CAST(h.v AS {big}) * tot.n - tot.s))
-                  AS {big}) AS sumdev
+      SELECT CAST(sum(CAST(h.c AS {dialect.big})
+                      * abs(CAST(h.v AS {dialect.big}) * tot.n - tot.s))
+                  AS {dialect.big}) AS sumdev
       FROM h CROSS JOIN tot
     )
     SELECT tot.n AS n_customers, CAST(tot.s AS BIGINT) AS total_rev_k,
       CAST((dev.sumdev * 1000000)
-           {div}(2 * CAST(tot.n AS {big}) * tot.s) AS BIGINT)
+           {dialect.div}(2 * CAST(tot.n AS {dialect.big}) * tot.s) AS BIGINT)
         AS hoover_e6
     FROM dev CROSS JOIN tot
     """
@@ -138,27 +132,24 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _gmd_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _gmd_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cust_hist_sql(dialect)},
     pairmass AS (
-      SELECT CAST(sum(CAST(cum.c AS {big}) * cum.v * (cum.cn - cum.c)
-                      - cum.c * (cum.cs - CAST(cum.c AS {big}) * cum.v))
-                  AS {big}) AS pm
+      SELECT CAST(sum(CAST(cum.c AS {dialect.big}) * cum.v * (cum.cn - cum.c)
+                      - cum.c * (cum.cs - CAST(cum.c AS {dialect.big}) * cum.v))
+                  AS {dialect.big}) AS pm
       FROM cum
     )
     SELECT tot.n AS n_customers,
       CAST((2 * pairmass.pm * 1000000)
-           {div}(CAST(tot.n AS {big}) * (tot.n - 1)) AS BIGINT)
+           {dialect.div}(CAST(tot.n AS {dialect.big}) * (tot.n - 1)) AS BIGINT)
         AS gmd_e6,
       CAST((pairmass.pm * 1000000)
-           {div}(CAST(tot.n AS {big}) * tot.s) AS BIGINT)
+           {dialect.div}(CAST(tot.n AS {dialect.big}) * tot.s) AS BIGINT)
         AS gini_ppm,
       CAST((pairmass.pm * 1000000)
-           {div}(CAST(tot.n - 1 AS {big}) * tot.s) AS BIGINT)
+           {dialect.div}(CAST(tot.n - 1 AS {dialect.big}) * tot.s) AS BIGINT)
         AS gmd_over_2mu_e6
     FROM pairmass CROSS JOIN tot
     """
@@ -189,16 +180,14 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _atkinson_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _atkinson_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cust_hist_sql(dialect)},
     pos AS (
       SELECT CAST(sum(c) AS BIGINT) AS np,
-        CAST(sum(CAST(c AS {big}) * v) AS {big}) AS sp,
+        CAST(sum(CAST(c AS {dialect.big}) * v) AS {dialect.big}) AS sp,
         CAST(sum(c * CAST(floor(1000000 * ln(CAST(v AS DOUBLE)))
-                          AS BIGINT)) AS {big}) AS slog_e6
+                          AS BIGINT)) AS {dialect.big}) AS slog_e6
       FROM h WHERE v > 0
     )
     SELECT np AS n_positive,
@@ -237,15 +226,12 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _theil_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _theil_sql(dialect: Dialect) -> str:
     return f"""
     WITH cust AS (
       SELECT c.c_custkey, n.n_name AS nation,
         CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
-                      0) AS BIGINT){div}100000 AS v
+                      0) AS BIGINT){dialect.div}100000 AS v
       FROM customer c
       JOIN nation n ON n.n_nationkey = c.c_nationkey
       LEFT JOIN orders o ON o.o_custkey = c.c_custkey
@@ -257,16 +243,16 @@ def _theil_sql(dialect: str) -> str:
     ),
     tot AS (
       SELECT CAST(sum(c) AS BIGINT) AS n,
-        CAST(sum(CAST(c AS {big}) * v) AS {big}) AS s,
+        CAST(sum(CAST(c AS {dialect.big}) * v) AS {dialect.big}) AS s,
         CAST(sum(CASE WHEN v > 0 THEN
-          CAST(c AS {big}) * v
+          CAST(c AS {dialect.big}) * v
           * CAST(floor(1000000 * ln(CAST(v AS DOUBLE))) AS BIGINT)
-          ELSE 0 END) AS {big}) AS sxlog_e6
+          ELSE 0 END) AS {dialect.big}) AS sxlog_e6
       FROM hh
     ),
     bynat AS (
       SELECT nation, CAST(sum(c) AS BIGINT) AS ng,
-        CAST(sum(CAST(c AS {big}) * v) AS {big}) AS sg
+        CAST(sum(CAST(c AS {dialect.big}) * v) AS {dialect.big}) AS sg
       FROM hh GROUP BY nation
     ),
     tb AS (
@@ -322,41 +308,38 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _palma_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _palma_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cust_hist_sql(dialect)},
     k AS (
-      SELECT n, s, (4 * n){div}10 AS k40, (9 * n){div}10 AS k90
+      SELECT n, s, (4 * n){dialect.div}10 AS k40, (9 * n){dialect.div}10 AS k90
       FROM tot
     ),
     b40 AS (
       SELECT min(cum.v) AS v, min(cum.c) AS c, min(cum.cn) AS cn,
-        CAST(min(cum.cs) AS {big}) AS cs
+        CAST(min(cum.cs) AS {dialect.big}) AS cs
       FROM cum CROSS JOIN k WHERE cum.cn >= k.k40
     ),
     b90 AS (
       SELECT min(cum.v) AS v, min(cum.c) AS c, min(cum.cn) AS cn,
-        CAST(min(cum.cs) AS {big}) AS cs
+        CAST(min(cum.cs) AS {dialect.big}) AS cs
       FROM cum CROSS JOIN k WHERE cum.cn >= k.k90
     ),
     shares AS (
       SELECT k.n, k.s,
-        (b40.cs - CAST(b40.c AS {big}) * b40.v)
-          + CAST(k.k40 - (b40.cn - b40.c) AS {big}) * b40.v
+        (b40.cs - CAST(b40.c AS {dialect.big}) * b40.v)
+          + CAST(k.k40 - (b40.cn - b40.c) AS {dialect.big}) * b40.v
           AS bottom40_rev,
-        k.s - ((b90.cs - CAST(b90.c AS {big}) * b90.v)
-               + CAST(k.k90 - (b90.cn - b90.c) AS {big}) * b90.v)
+        k.s - ((b90.cs - CAST(b90.c AS {dialect.big}) * b90.v)
+               + CAST(k.k90 - (b90.cn - b90.c) AS {dialect.big}) * b90.v)
           AS top10_rev
       FROM k CROSS JOIN b40 CROSS JOIN b90
     )
     SELECT n AS n_customers,
-      CAST((bottom40_rev * 1000000){div}s AS BIGINT)
+      CAST((bottom40_rev * 1000000){dialect.div}s AS BIGINT)
         AS bottom40_share_e6,
-      CAST((top10_rev * 1000000){div}s AS BIGINT) AS top10_share_e6,
-      CAST((top10_rev * 1000000){div}bottom40_rev AS BIGINT)
+      CAST((top10_rev * 1000000){dialect.div}s AS BIGINT) AS top10_share_e6,
+      CAST((top10_rev * 1000000){dialect.div}bottom40_rev AS BIGINT)
         AS palma_e6
     FROM shares
     """
@@ -388,26 +371,23 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _lac_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _lac_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cust_hist_sql(dialect)},
     below AS (
       SELECT CAST(sum(h.c) AS BIGINT) AS cnt_b,
-        CAST(coalesce(sum(CAST(h.c AS {big}) * h.v), 0) AS {big})
+        CAST(coalesce(sum(CAST(h.c AS {dialect.big}) * h.v), 0) AS {dialect.big})
           AS rev_b
       FROM h CROSS JOIN tot
-      WHERE CAST(h.v AS {big}) * tot.n < tot.s
+      WHERE CAST(h.v AS {dialect.big}) * tot.n < tot.s
     )
     SELECT tot.n AS n_customers,
-      CAST((below.cnt_b * 1000000){div}tot.n AS BIGINT) AS f_mu_e6,
-      CAST((below.rev_b * 1000000){div}tot.s AS BIGINT) AS l_mu_e6,
-      CAST((below.cnt_b * 1000000){div}tot.n
-           + (below.rev_b * 1000000){div}tot.s AS BIGINT) AS lac_e6,
-      CAST((below.cnt_b * 1000000){div}tot.n
-           + (below.rev_b * 1000000){div}tot.s AS BIGINT) > 1000000
+      CAST((below.cnt_b * 1000000){dialect.div}tot.n AS BIGINT) AS f_mu_e6,
+      CAST((below.rev_b * 1000000){dialect.div}tot.s AS BIGINT) AS l_mu_e6,
+      CAST((below.cnt_b * 1000000){dialect.div}tot.n
+           + (below.rev_b * 1000000){dialect.div}tot.s AS BIGINT) AS lac_e6,
+      CAST((below.cnt_b * 1000000){dialect.div}tot.n
+           + (below.rev_b * 1000000){dialect.div}tot.s AS BIGINT) > 1000000
         AS large_value_driven
     FROM below CROSS JOIN tot
     """
@@ -438,10 +418,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _hill_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hill_sql(dialect: Dialect) -> str:
     return f"""
     WITH src AS (
       SELECT source, CAST(count(*) AS BIGINT) AS c
@@ -450,9 +427,9 @@ def _hill_sql(dialect: str) -> str:
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS q0,
         CAST(sum(c) AS BIGINT) AS n,
-        CAST(sum(CAST(c AS {big}) * c) AS {big}) AS sc2,
+        CAST(sum(CAST(c AS {dialect.big}) * c) AS {dialect.big}) AS sc2,
         CAST(sum(c * CAST(floor(1000000 * ln(CAST(c AS DOUBLE)))
-                          AS BIGINT)) AS {big}) AS sclog_e6
+                          AS BIGINT)) AS {dialect.big}) AS sclog_e6
       FROM src
     )
     SELECT q0 AS hill_q0_richness, n AS n_docs,
@@ -460,7 +437,7 @@ def _hill_sql(dialect: str) -> str:
         ln(CAST(n AS DOUBLE))
         - CAST(sclog_e6 AS DOUBLE) / n / 1000000)) AS BIGINT)
         AS hill_q1_e6,
-      CAST((CAST(n AS {big}) * n * 1000000){div}sc2 AS BIGINT)
+      CAST((CAST(n AS {dialect.big}) * n * 1000000){dialect.div}sc2 AS BIGINT)
         AS hill_q2_e6
     FROM agg
     """
@@ -493,14 +470,11 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _kmv_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kmv_sql(dialect: Dialect) -> str:
     h = (
         "CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 15),"
         " 16, 10) AS BIGINT)"
-        if spark
+        if dialect.spark
         else "CAST('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),"
         " 1, 15) AS BIGINT)"
     )
@@ -522,8 +496,8 @@ def _kmv_sql(dialect: str) -> str:
     ),
     est AS (
       SELECT kf, hk,
-        CAST(CASE WHEN kf < {_KMV_K} THEN CAST(kf AS {big})
-          ELSE (CAST({_KMV_K} - 1 AS {big}) * {_HASH_SPACE}){div}hk
+        CAST(CASE WHEN kf < {_KMV_K} THEN CAST(kf AS {dialect.big})
+          ELSE (CAST({_KMV_K} - 1 AS {dialect.big}) * {_HASH_SPACE}){dialect.div}hk
         END AS BIGINT) AS kmv_est
       FROM kth
     )
@@ -531,7 +505,7 @@ def _kmv_sql(dialect: str) -> str:
       est.kmv_est AS kmv_estimate,
       exact.exact_nd AS exact_distinct,
       CAST((est.kmv_est - exact.exact_nd)
-           * 1000000{div}exact.exact_nd AS BIGINT) AS rel_err_e6
+           * 1000000{dialect.div}exact.exact_nd AS BIGINT) AS rel_err_e6
     FROM est CROSS JOIN exact
     """
 

@@ -40,7 +40,7 @@ analytics; SURVEY §2 X-series is covered by catalog.py)."""
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r10e import _tok_cte
 
 #: Gries DP document-frequency floor: terms with fewer total
@@ -49,7 +49,7 @@ from .catalog_r10e import _tok_cte
 _DP_MIN_FREQ = 30
 
 
-def _spectrum_cte(dialect: str) -> str:
+def _spectrum_cte(dialect: Dialect) -> str:
     """Corpus term frequencies (``tf``: w, c) and the frequency
     spectrum (``spec``: r, n_r) on top of the r9f/r10e whitespace
     token convention."""
@@ -68,23 +68,20 @@ def _spectrum_cte(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _yule_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _yule_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_spectrum_cte(dialect)},
     agg AS (
       SELECT CAST(sum(c) AS BIGINT) AS n,
         CAST(count(*) AS BIGINT) AS v,
-        CAST(sum(CAST(c AS {big}) * c) AS {big}) AS sc2
+        CAST(sum(CAST(c AS {dialect.big}) * c) AS {dialect.big}) AS sc2
       FROM tf
     )
     SELECT n AS n_tokens, v AS vocab,
-      CAST(((sc2 - n) * 10000000000){div}(CAST(n AS {big}) * n)
+      CAST(((sc2 - n) * 10000000000){dialect.div}(CAST(n AS {dialect.big}) * n)
         AS BIGINT) AS yule_k_e6,
       CAST(((sc2 - n) * 1000000)
-           {div}(CAST(n AS {big}) * (n - 1)) AS BIGINT)
+           {dialect.div}(CAST(n AS {dialect.big}) * (n - 1)) AS BIGINT)
         AS simpson_repeat_e6
     FROM agg
     """
@@ -115,8 +112,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _honore_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _honore_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_spectrum_cte(dialect)},
     agg AS (
@@ -137,7 +133,7 @@ def _honore_sql(dialect: str) -> str:
       CAST(floor(1000000 * 100.0 * ln(CAST(agg.n AS DOUBLE))
                  / (1.0 - CAST(slots.v1 AS DOUBLE) / agg.v))
         AS BIGINT) AS honore_r_e6,
-      CAST((slots.v2 * 1000000){div}agg.v AS BIGINT) AS sichel_s_e6
+      CAST((slots.v2 * 1000000){dialect.div}agg.v AS BIGINT) AS sichel_s_e6
     FROM agg CROSS JOIN slots
     """
 
@@ -167,13 +163,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _gt_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
-    seq = (
-        "SELECT explode(sequence(1, 5)) AS r"
-        if dialect == "spark"
-        else "SELECT unnest(generate_series(1, 5)) AS r"
-    )
+def _gt_sql(dialect: Dialect) -> str:
+    seq = f"SELECT {dialect.series(1, 5)} AS r"
     return f"""
     WITH {_spectrum_cte(dialect)},
     n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM tf),
@@ -182,14 +173,14 @@ def _gt_sql(dialect: str) -> str:
       SELECT g.r,
         CAST(coalesce(s1.nr, 0) AS BIGINT) AS n_r,
         CAST((coalesce(s2.nr, 0) * (g.r + 1) * 1000000)
-             {div}coalesce(s1.nr, 1) AS BIGINT) AS r_star_e6
+             {dialect.div}coalesce(s1.nr, 1) AS BIGINT) AS r_star_e6
       FROM grid g
       LEFT JOIN spec s1 ON s1.r = g.r
       LEFT JOIN spec s2 ON s2.r = g.r + 1
     )
     SELECT CAST(0 AS BIGINT) AS r, n.n AS n_r,
       CAST((coalesce((SELECT nr FROM spec WHERE r = 1), 0) * 1000000)
-           {div}n.n AS BIGINT) AS r_star_e6
+           {dialect.div}n.n AS BIGINT) AS r_star_e6
     FROM n
     UNION ALL
     SELECT r, n_r, r_star_e6 FROM gt
@@ -222,9 +213,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _keyness_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _keyness_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     lt AS (
@@ -253,8 +242,8 @@ def _keyness_sql(dialect: str) -> str:
               * (tot.na + tot.nb)
               / (CAST(lt.a + lt.b AS DOUBLE) * tot.nb))
           ELSE 0.0 END)) AS BIGINT) AS g2_e6,
-        lt.a * CAST(tot.nb AS {big})
-          > lt.b * CAST(tot.na AS {big}) AS overused_in_en
+        lt.a * CAST(tot.nb AS {dialect.big})
+          > lt.b * CAST(tot.na AS {dialect.big}) AS overused_in_en
       FROM lt CROSS JOIN tot
     )
     SELECT w AS term, a AS count_en, b AS count_rest, g2_e6,
@@ -291,10 +280,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _dp_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _dp_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     ws AS (
@@ -311,8 +297,8 @@ def _dp_sql(dialect: str) -> str:
     ),
     present AS (
       SELECT ws.w,
-        CAST(sum(abs(CAST(ws.c AS {big}) * n.n
-                     - CAST(wt.ct AS {big}) * st.ns)) AS {big})
+        CAST(sum(abs(CAST(ws.c AS {dialect.big}) * n.n
+                     - CAST(wt.ct AS {dialect.big}) * st.ns)) AS {dialect.big})
           AS dev_present,
         CAST(sum(st.ns) AS BIGINT) AS ns_present
       FROM ws
@@ -324,8 +310,8 @@ def _dp_sql(dialect: str) -> str:
     )
     SELECT p.w AS term, wt.ct AS total_count,
       CAST(((p.dev_present
-             + CAST(wt.ct AS {big}) * (n.n - p.ns_present)) * 1000000)
-           {div}(2 * CAST(wt.ct AS {big}) * n.n) AS BIGINT) AS dp_e6
+             + CAST(wt.ct AS {dialect.big}) * (n.n - p.ns_present)) * 1000000)
+           {dialect.div}(2 * CAST(wt.ct AS {dialect.big}) * n.n) AS BIGINT) AS dp_e6
     FROM present p
     JOIN wt ON wt.w = p.w
     CROSS JOIN n
@@ -366,11 +352,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _rep_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    if spark:
+def _rep_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         bigrams = r"""
     bg AS (
       SELECT d.doc_id,
@@ -405,11 +388,11 @@ def _rep_sql(dialect: str) -> str:
       FROM bgc GROUP BY doc_id
     )
     SELECT CAST(count(*) AS BIGINT) AS n_docs,
-      CAST((CAST(sum(mx) AS {big}) * 1000000){div}sum(tot) AS BIGINT)
+      CAST((CAST(sum(mx) AS {dialect.big}) * 1000000){dialect.div}sum(tot) AS BIGINT)
         AS micro_avg_rep_e6,
       CAST(sum(CASE WHEN mx * 5 > tot THEN 1 ELSE 0 END) AS BIGINT)
         AS docs_over_20pct,
-      CAST(max((mx * 1000000){div}tot) AS BIGINT) AS worst_doc_rep_e6
+      CAST(max((mx * 1000000){dialect.div}tot) AS BIGINT) AS worst_doc_rep_e6
     FROM perdoc
     """
 

@@ -33,7 +33,7 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py)."""
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r10e import _tok_cte
 
 #: Collocation frequency floor (bigrams rarer than this are skipped —
@@ -49,11 +49,11 @@ _KMV_SHARD_K = 64
 _HASH_SPACE = 1 << 60
 
 
-def _bigram_pair_cte(dialect: str) -> str:
+def _bigram_pair_cte(dialect: Dialect) -> str:
     """Within-document word bigrams as (doc_id, w1, w2) pairs — the
     positional-index device of ``repetition_ngram_ratio`` (r10i), kept
     as PAIRS so collocation statistics can join unigram counts."""
-    if dialect == "spark":
+    if dialect.spark:
         return r"""
     bgp AS (
       SELECT d.doc_id, element_at(d.tk, s.i) AS w1,
@@ -81,7 +81,7 @@ def _bigram_pair_cte(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _pmi_sql(dialect: str) -> str:
+def _pmi_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tok_cte(dialect)},
     uni AS (
@@ -146,10 +146,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _entropy_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    if spark:
+def _entropy_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         chars = """
     ch AS (
       SELECT substring(d.text, s.i, 1) AS g
@@ -179,7 +177,7 @@ def _entropy_sql(dialect: str) -> str:
         CAST(sum(c * CAST(floor(1000000 * ln(CAST(c AS DOUBLE)))
                           AS BIGINT)) AS {big}) AS sclog_e6
       FROM"""
-    ent = ent.replace("{big}", big)
+    ent = ent.replace("{big}", dialect.big)
     return f"""
     WITH {chars},
     u1 AS (SELECT g, CAST(count(*) AS BIGINT) AS c FROM ch GROUP BY g),
@@ -236,11 +234,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _aniso_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    if spark:
+def _aniso_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         epos = """
       SELECT e.vec_id, pos,
         CAST(floor(CAST(val AS DOUBLE) * 1000000) AS BIGINT) AS v_e6
@@ -261,14 +256,14 @@ def _aniso_sql(dialect: str) -> str:
       FROM epos GROUP BY pos
     ),
     mm AS (
-      SELECT CAST(sum(CAST(m.s_e6 AS {big}) * m.s_e6) AS {big}) AS mm,
+      SELECT CAST(sum(CAST(m.s_e6 AS {dialect.big}) * m.s_e6) AS {dialect.big}) AS mm,
         CAST(count(*) AS BIGINT) AS dim
       FROM mean m
     ),
     pervec AS (
       SELECT e.vec_id,
-        CAST(sum(CAST(e.v_e6 AS {big}) * m.s_e6) AS {big}) AS vm,
-        CAST(sum(CAST(e.v_e6 AS {big}) * e.v_e6) AS {big}) AS vv
+        CAST(sum(CAST(e.v_e6 AS {dialect.big}) * m.s_e6) AS {dialect.big}) AS vm,
+        CAST(sum(CAST(e.v_e6 AS {dialect.big}) * e.v_e6) AS {dialect.big}) AS vv
       FROM epos e JOIN mean m ON m.pos = e.pos
       GROUP BY e.vec_id
     ),
@@ -282,9 +277,9 @@ def _aniso_sql(dialect: str) -> str:
     )
     SELECT nv.n AS n_vectors, mm.dim AS dim,
       CAST(CAST(floor(sqrt(CAST(mm.mm AS DOUBLE))) AS BIGINT)
-           {div}nv.n AS BIGINT) AS centroid_norm_e6,
-      CAST(sum(p.norm_e6){div}nv.n AS BIGINT) AS avg_vec_norm_e6,
-      CAST(sum(p.cos_e6){div}nv.n AS BIGINT) AS avg_cos_centroid_e6,
+           {dialect.div}nv.n AS BIGINT) AS centroid_norm_e6,
+      CAST(sum(p.norm_e6){dialect.div}nv.n AS BIGINT) AS avg_vec_norm_e6,
+      CAST(sum(p.cos_e6){dialect.div}nv.n AS BIGINT) AS avg_cos_centroid_e6,
       CAST(max(p.cos_e6) AS BIGINT) AS max_cos_centroid_e6,
       CAST(min(p.cos_e6) AS BIGINT) AS min_cos_centroid_e6
     FROM percos p CROSS JOIN nv CROSS JOIN mm
@@ -323,21 +318,18 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _kmv_merge_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kmv_merge_sql(dialect: Dialect) -> str:
     h = (
         "CAST(conv(substring(md5(CAST(o_custkey AS STRING)), 1, 15),"
         " 16, 10) AS BIGINT)"
-        if spark
+        if dialect.spark
         else "CAST('0x' || substring(md5(CAST(o_custkey AS VARCHAR)),"
         " 1, 15) AS BIGINT)"
     )
     k = _KMV_SHARD_K
     return f"""
     WITH keys AS (
-      SELECT DISTINCT substring(CAST(o_orderdate AS {'STRING' if spark
+      SELECT DISTINCT substring(CAST(o_orderdate AS {'STRING' if dialect.spark
         else 'VARCHAR'}), 1, 7) AS shard, {h} AS hv
       FROM orders
     ),
@@ -356,9 +348,9 @@ def _kmv_merge_sql(dialect: str) -> str:
     ),
     shardest AS (
       SELECT CAST(count(*) AS BIGINT) AS n_shards,
-        CAST(sum(CASE WHEN kf < {k} THEN CAST(kf AS {big})
-             ELSE (CAST({k} - 1 AS {big}) * {_HASH_SPACE})
-                  {div}hk END) AS {big}) AS sum_est
+        CAST(sum(CASE WHEN kf < {k} THEN CAST(kf AS {dialect.big})
+             ELSE (CAST({k} - 1 AS {dialect.big}) * {_HASH_SPACE})
+                  {dialect.div}hk END) AS {dialect.big}) AS sum_est
       FROM pershard
     ),
     merged AS (
@@ -371,8 +363,8 @@ def _kmv_merge_sql(dialect: str) -> str:
       FROM merged
     ),
     mest AS (
-      SELECT CAST(CASE WHEN mk.kf < {k} THEN CAST(mk.kf AS {big})
-        ELSE (CAST({k} - 1 AS {big}) * {_HASH_SPACE}){div}mk.hk END
+      SELECT CAST(CASE WHEN mk.kf < {k} THEN CAST(mk.kf AS {dialect.big})
+        ELSE (CAST({k} - 1 AS {dialect.big}) * {_HASH_SPACE}){dialect.div}mk.hk END
         AS BIGINT) AS est, mk.hk AS hk
       FROM mk
     ),
@@ -383,10 +375,10 @@ def _kmv_merge_sql(dialect: str) -> str:
     SELECT shardest.n_shards, mest.hk AS merged_kth_hash,
       mest.est AS merged_estimate,
       exact.nd AS exact_distinct,
-      CAST((mest.est - exact.nd) * 1000000{div}exact.nd AS BIGINT)
+      CAST((mest.est - exact.nd) * 1000000{dialect.div}exact.nd AS BIGINT)
         AS rel_err_e6,
       CAST(shardest.sum_est AS BIGINT) AS sum_shard_estimates,
-      CAST((shardest.sum_est * 1000000){div}mest.est AS BIGINT)
+      CAST((shardest.sum_est * 1000000){dialect.div}mest.est AS BIGINT)
         AS duplication_factor_e6
     FROM shardest CROSS JOIN mest CROSS JOIN exact
     """

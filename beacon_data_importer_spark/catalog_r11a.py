@@ -49,7 +49,7 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
 
@@ -70,28 +70,25 @@ _CHI2_DF2_E6 = 5_991_464
 # ---------------------------------------------------------------------------
 
 
-def _cvm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cvm_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     gap AS (
       SELECT c.c1 + c.c2 AS cb,
-        (c.lt1 + c.c1) * CAST(t.n2 AS {big})
-          - (c.lt2 + c.c2) * CAST(t.n1 AS {big}) AS d
+        (c.lt1 + c.c1) * CAST(t.n2 AS {dialect.big})
+          - (c.lt2 + c.c2) * CAST(t.n1 AS {dialect.big}) AS d
       FROM cum c CROSS JOIN tot t
     ),
     s AS (
-      SELECT CAST(sum(CAST(cb AS {big}) * d * d) AS {big}) AS u
+      SELECT CAST(sum(CAST(cb AS {dialect.big}) * d * d) AS {dialect.big}) AS u
       FROM gap
     )
     SELECT t.n1, t.n2,
       CAST((s.u * 1000000)
-           {div}(CAST(t.n1 + t.n2 AS {big}) * (t.n1 + t.n2)
+           {dialect.div}(CAST(t.n1 + t.n2 AS {dialect.big}) * (t.n1 + t.n2)
                  * t.n1 * t.n2) AS BIGINT) AS cvm_t_e6,
       (s.u * 1000000)
-        {div}(CAST(t.n1 + t.n2 AS {big}) * (t.n1 + t.n2)
+        {dialect.div}(CAST(t.n1 + t.n2 AS {dialect.big}) * (t.n1 + t.n2)
               * t.n1 * t.n2) > {_CVM_CRIT_E6} AS reject_same_distribution
     FROM s CROSS JOIN tot t
     """
@@ -125,10 +122,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _bws_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bws_sql(dialect: Dialect) -> str:
     # per-observation index expansion: one row per sample member of
     # each group, carrying its within-group index i and combined-sample
     # midrank (bucket average rank).
@@ -139,7 +133,7 @@ def _bws_sql(dialect: str) -> str:
             f"(SELECT lt1, lt2, c1, c2, {c_own} AS cnt FROM cum"
             f" WHERE {c_own} > 0) c"
         )
-        if spark:
+        if dialect.spark:
             return f"""
       SELECT {grp} AS g, c.{lt_own} + u.i AS i,
         2 * (c.lt1 + c.lt2) + (c.c1 + c.c2) + 1 AS r2
@@ -175,16 +169,16 @@ def _bws_sql(dialect: str) -> str:
     ),
     b AS (
       SELECT
-        CAST(sum(CASE WHEN g = 1 THEN w_e6 END) AS {big}) AS bx_e6,
-        CAST(sum(CASE WHEN g = 2 THEN w_e6 END) AS {big}) AS by_e6
+        CAST(sum(CASE WHEN g = 1 THEN w_e6 END) AS {dialect.big}) AS bx_e6,
+        CAST(sum(CASE WHEN g = 2 THEN w_e6 END) AS {dialect.big}) AS by_e6
       FROM term
     )
     SELECT t.n1, t.n2,
-      CAST(b.bx_e6{div}t.n1 AS BIGINT) AS bx_e6,
-      CAST(b.by_e6{div}t.n2 AS BIGINT) AS by_e6,
-      CAST((b.bx_e6{div}t.n1 + b.by_e6{div}t.n2){div}2 AS BIGINT)
+      CAST(b.bx_e6{dialect.div}t.n1 AS BIGINT) AS bx_e6,
+      CAST(b.by_e6{dialect.div}t.n2 AS BIGINT) AS by_e6,
+      CAST((b.bx_e6{dialect.div}t.n1 + b.by_e6{dialect.div}t.n2){dialect.div}2 AS BIGINT)
         AS bws_b_e6,
-      (b.bx_e6{div}t.n1 + b.by_e6{div}t.n2){div}2 > {_BWS_CRIT_E6}
+      (b.bx_e6{dialect.div}t.n1 + b.by_e6{dialect.div}t.n2){dialect.div}2 > {_BWS_CRIT_E6}
         AS reject_same_distribution
     FROM b CROSS JOIN tot t
     """
@@ -223,10 +217,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _st_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _st_sql(dialect: Dialect) -> str:
     # Zig-zag label sums over a combined-order index range [lo, hi],
     # in CLOSED FORM (no expansion): labels from the LOW end (i <= H,
     # H = (N+1) div 2) follow 2i-1 (i odd) / 2i (i even), so their sum
@@ -245,7 +236,7 @@ def _st_sql(dialect: str) -> str:
         -- N = 3 (mod 4) (caught by tools/stat_audit.py's brute
         -- process replay; both engines shared the wrong boundary, so
         -- oracle parity alone could not see it).
-        2 * ((t.n1 + t.n2){div}4)
+        2 * ((t.n1 + t.n2){dialect.div}4)
           + CASE WHEN (t.n1 + t.n2) % 4 = 0 THEN 0 ELSE 1 END AS h,
         t.n1 + t.n2 AS nn
       FROM cum c CROSS JOIN tot t
@@ -255,24 +246,24 @@ def _st_sql(dialect: str) -> str:
         -- low-end segment [lo, min(hi, h)]
         CASE WHEN lo <= h THEN
           (lo + least(hi, h)) * (least(hi, h) - lo + 1)
-          - ((least(hi, h) + 1){div}2 - lo{div}2)
+          - ((least(hi, h) + 1){dialect.div}2 - lo{dialect.div}2)
         ELSE 0 END AS s_low,
         -- high-end segment [max(lo, h+1), hi] -> j = nn+1-i desc
         CASE WHEN hi > h THEN
           ((nn + 1 - hi) + (nn + 1 - greatest(lo, h + 1)))
             * ((nn + 1 - greatest(lo, h + 1)) - (nn + 1 - hi) + 1)
-          - ((nn + 1 - greatest(lo, h + 1)){div}2
-             - ((nn + 1 - hi) - 1){div}2)
+          - ((nn + 1 - greatest(lo, h + 1)){dialect.div}2
+             - ((nn + 1 - hi) - 1){dialect.div}2)
         ELSE 0 END AS s_high
       FROM rng
     ),
     w AS (
       SELECT max(n1) AS n1, max(n2) AS n2,
-        CAST(sum((CAST(c2 AS {big}) * (s_low + s_high) * 1000000)
-                 {div}(c1 + c2)) AS {big}) AS w2_e6
+        CAST(sum((CAST(c2 AS {dialect.big}) * (s_low + s_high) * 1000000)
+                 {dialect.div}(c1 + c2)) AS {dialect.big}) AS w2_e6
       FROM seg WHERE c1 + c2 > 0
     )
-    SELECT n1, n2, CAST(w2_e6{div}1000000 AS BIGINT) AS w2_labels,
+    SELECT n1, n2, CAST(w2_e6{dialect.div}1000000 AS BIGINT) AS w2_labels,
       CAST(floor(
         (CAST(w2_e6 AS DOUBLE) / 1e6
          - CAST(n2 AS DOUBLE) * (n1 + n2 + 1) / 2.0)
@@ -315,17 +306,15 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _k2_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _k2_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     m AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS s1,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS s2,
-        CAST(sum(CAST(y AS {big}) * y * y) AS {big}) AS s3,
-        CAST(sum(CAST(y AS {big}) * y * y * y) AS {big}) AS s4
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS s1,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS s2,
+        CAST(sum(CAST(y AS {dialect.big}) * y * y) AS {dialect.big}) AS s3,
+        CAST(sum(CAST(y AS {dialect.big}) * y * y * y) AS {dialect.big}) AS s4
       FROM day
     ),
     c AS (
@@ -336,12 +325,12 @@ def _k2_sql(dialect: str) -> str:
       -- double m2/m3/m4 form cancels catastrophically and drifted
       -- ~3e-5 between engines).
       SELECT n,
-        CAST(n AS {big}) * s2 - s1 * s1 AS c2,
-        CAST(n AS {big}) * n * s3 - 3 * CAST(n AS {big}) * s1 * s2
+        CAST(n AS {dialect.big}) * s2 - s1 * s1 AS c2,
+        CAST(n AS {dialect.big}) * n * s3 - 3 * CAST(n AS {dialect.big}) * s1 * s2
           + 2 * s1 * s1 * s1 AS c3,
-        CAST(n AS {big}) * n * n * s4
-          - 4 * CAST(n AS {big}) * n * s1 * s3
-          + 6 * CAST(n AS {big}) * s1 * s1 * s2
+        CAST(n AS {dialect.big}) * n * n * s4
+          - 4 * CAST(n AS {dialect.big}) * n * s1 * s3
+          + 6 * CAST(n AS {dialect.big}) * s1 * s1 * s2
           - 3 * s1 * s1 * s1 * s1 AS c4
       FROM m
     ),
@@ -445,8 +434,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _prr_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _prr_sql(dialect: Dialect) -> str:
     return f"""
     WITH s AS (
       SELECT c.c_mktsegment AS seg,
@@ -467,7 +455,7 @@ def _prr_sql(dialect: str) -> str:
     )
     SELECT a1 AS events_building, n1 AS exposure_building,
       a2 AS events_machinery, n2 AS exposure_machinery,
-      (CAST(a1 AS BIGINT) * n2 * 1000000){div}(CAST(a2 AS BIGINT) * n1)
+      (CAST(a1 AS BIGINT) * n2 * 1000000){dialect.div}(CAST(a2 AS BIGINT) * n1)
         AS rate_ratio_e6,
       CAST(floor(CAST(a1 AS DOUBLE) * n2 / (CAST(a2 AS DOUBLE) * n1)
         * exp(-1.959964 * sqrt(1.0 / a1 + 1.0 / a2)) * 1e6) AS BIGINT)
@@ -510,10 +498,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _lmom_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _lmom_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     rk AS (
@@ -522,11 +507,11 @@ def _lmom_sql(dialect: str) -> str:
     ),
     b AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS b0n,
-        CAST(sum(CAST(y AS {big}) * (i - 1)) AS {big}) AS b1n,
-        CAST(sum(CAST(y AS {big}) * (i - 1) * (i - 2)) AS {big}) AS b2n,
-        CAST(sum(CAST(y AS {big}) * (i - 1) * (i - 2) * (i - 3))
-             AS {big}) AS b3n
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS b0n,
+        CAST(sum(CAST(y AS {dialect.big}) * (i - 1)) AS {dialect.big}) AS b1n,
+        CAST(sum(CAST(y AS {dialect.big}) * (i - 1) * (i - 2)) AS {dialect.big}) AS b2n,
+        CAST(sum(CAST(y AS {dialect.big}) * (i - 1) * (i - 2) * (i - 3))
+             AS {dialect.big}) AS b3n
       FROM rk
     ),
     l AS (
@@ -541,13 +526,13 @@ def _lmom_sql(dialect: str) -> str:
       FROM b
     )
     SELECT n AS n_days,
-      CAST((d0 * 100){div}(CAST(n AS {big}) * (n - 1) * (n - 2)
+      CAST((d0 * 100){dialect.div}(CAST(n AS {dialect.big}) * (n - 1) * (n - 2)
                            * (n - 3)) AS BIGINT) AS l1_e2,
-      CAST((d2 * 100){div}(CAST(n AS {big}) * (n - 1) * (n - 2)
+      CAST((d2 * 100){dialect.div}(CAST(n AS {dialect.big}) * (n - 1) * (n - 2)
                            * (n - 3)) AS BIGINT) AS l2_e2,
-      CAST((d2 * 1000000){div}d0 AS BIGINT) AS t2_lcv_e6,
-      CAST((d3 * 1000000){div}d2 AS BIGINT) AS t3_lskew_e6,
-      CAST((d4 * 1000000){div}d2 AS BIGINT) AS t4_lkurt_e6
+      CAST((d2 * 1000000){dialect.div}d0 AS BIGINT) AS t2_lcv_e6,
+      CAST((d3 * 1000000){dialect.div}d2 AS BIGINT) AS t3_lskew_e6,
+      CAST((d4 * 1000000){dialect.div}d2 AS BIGINT) AS t4_lkurt_e6
     FROM l
     """
 

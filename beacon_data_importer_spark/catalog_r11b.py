@@ -51,24 +51,23 @@ ships no analytics; SURVEY §2 X-series is covered by catalog.py).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r10c import _priority_pairs_sql
 
 #: floor(1e6 · z₀.₉₇₅) — the Bland-Altman LoA multiplier, ppm.
 _Z975_E6 = 1_959_963
 
 
-def _year_rev_pairs_sql(dialect: str) -> str:
+def _year_rev_pairs_sql(dialect: Dialect) -> str:
     """Per-customer (1997 revenue, 1998 revenue) in $10 units — the
     paired-measurement frame for CCC / Bland-Altman / Deming.  Only
     customers with orders in BOTH years survive (a method comparison
     needs both instruments' readings)."""
-    div = " div " if dialect == "spark" else " // "
     return f"""
     yr AS (
       SELECT o_custkey AS ck, year(o_orderdate) AS y,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-             AS BIGINT){div}1000 AS v
+             AS BIGINT){dialect.div}1000 AS v
       FROM orders WHERE year(o_orderdate) IN (1997, 1998)
       GROUP BY o_custkey, year(o_orderdate)
     ),
@@ -84,10 +83,7 @@ def _year_rev_pairs_sql(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _kripp_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kripp_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_priority_pairs_sql()},
     co AS (
@@ -111,17 +107,17 @@ def _kripp_sql(dialect: str) -> str:
       -- sum over c != k of n_c*n_k = (sum n_c)^2 - sum n_c^2: the
       -- algebraic identity replaces the (tiny but flagged) <> pair
       -- join with one aggregate
-      SELECT CAST(sum(CAST(nc AS {big})) * sum(CAST(nc AS {big}))
-                  - sum(CAST(nc AS {big}) * nc) AS {big}) AS d_exp
+      SELECT CAST(sum(CAST(nc AS {dialect.big})) * sum(CAST(nc AS {dialect.big}))
+                  - sum(CAST(nc AS {dialect.big}) * nc) AS {dialect.big}) AS d_exp
       FROM marg
     )
-    SELECT n.n{div}2 AS n_units,
-      CAST((dis.d_obs * 1000000){div}n.n AS BIGINT) AS d_obs_e6,
-      CAST((de.d_exp * 1000000){div}(CAST(n.n AS {big}) * (n.n - 1))
+    SELECT n.n{dialect.div}2 AS n_units,
+      CAST((dis.d_obs * 1000000){dialect.div}n.n AS BIGINT) AS d_obs_e6,
+      CAST((de.d_exp * 1000000){dialect.div}(CAST(n.n AS {dialect.big}) * (n.n - 1))
         AS BIGINT) AS d_exp_e6,
       CAST(1000000
-        - (CAST(dis.d_obs AS {big}) * (n.n - 1) * 1000000)
-          {div}de.d_exp AS BIGINT) AS alpha_e6
+        - (CAST(dis.d_obs AS {dialect.big}) * (n.n - 1) * 1000000)
+          {dialect.div}de.d_exp AS BIGINT) AS alpha_e6
     FROM n CROSS JOIN dis CROSS JOIN de
     """
 
@@ -152,10 +148,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ac1_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ac1_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_priority_pairs_sql()},
     co AS (
@@ -181,18 +174,18 @@ def _ac1_sql(dialect: str) -> str:
     pe AS (
       -- pe_gamma = 1/(K-1) * sum_c pi_c (1 - pi_c), pi_c = nc/(2n);
       -- exact over the common denominator (K-1) * 4n^2
-      SELECT CAST(sum(CAST(nc AS {big}) * (2 * n.n - nc)) AS {big})
+      SELECT CAST(sum(CAST(nc AS {dialect.big}) * (2 * n.n - nc)) AS {dialect.big})
         AS pe_num
       FROM pi CROSS JOIN nn n
     )
     SELECT nn.n AS n_units, k.k AS n_categories,
-      CAST((pa.agree * 1000000){div}nn.n AS BIGINT) AS pa_e6,
+      CAST((pa.agree * 1000000){dialect.div}nn.n AS BIGINT) AS pa_e6,
       CAST((pe.pe_num * 1000000)
-           {div}((k.k - 1) * 4 * CAST(nn.n AS {big}) * nn.n)
+           {dialect.div}((k.k - 1) * 4 * CAST(nn.n AS {dialect.big}) * nn.n)
         AS BIGINT) AS pe_gamma_e6,
-      CAST(((CAST(pa.agree AS {big}) * (k.k - 1) * 4 * nn.n - pe.pe_num)
+      CAST(((CAST(pa.agree AS {dialect.big}) * (k.k - 1) * 4 * nn.n - pe.pe_num)
             * 1000000)
-           {div}((k.k - 1) * 4 * CAST(nn.n AS {big}) * nn.n - pe.pe_num)
+           {dialect.div}((k.k - 1) * 4 * CAST(nn.n AS {dialect.big}) * nn.n - pe.pe_num)
         AS BIGINT) AS ac1_e6
     FROM nn CROSS JOIN k CROSS JOIN pa CROSS JOIN pe
     """
@@ -225,10 +218,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _wkappa_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _wkappa_sql(dialect: Dialect) -> str:
     ordv = "CAST(substring({c}, 1, 1) AS BIGINT)"
     return f"""
     WITH {_priority_pairs_sql()},
@@ -252,27 +242,27 @@ def _wkappa_sql(dialect: str) -> str:
     ),
     obs AS (
       SELECT
-        CAST(sum(abs(i - j) * m) AS {big}) AS dl_obs,
-        CAST(sum((i - j) * (i - j) * m) AS {big}) AS dq_obs
+        CAST(sum(abs(i - j) * m) AS {dialect.big}) AS dl_obs,
+        CAST(sum((i - j) * (i - j) * m) AS {dialect.big}) AS dq_obs
       FROM co
     ),
     exp AS (
       -- expected disagreement over the literal 5x5 ordinal grid,
       -- equi-joined to the row/column margins (no cross join)
       SELECT
-        CAST(sum(abs(g.i - g.j) * CAST(a.r AS {big}) * b.cc) AS {big})
+        CAST(sum(abs(g.i - g.j) * CAST(a.r AS {dialect.big}) * b.cc) AS {dialect.big})
           AS dl_exp,
         CAST(sum((g.i - g.j) * (g.i - g.j)
-                 * CAST(a.r AS {big}) * b.cc) AS {big}) AS dq_exp
+                 * CAST(a.r AS {dialect.big}) * b.cc) AS {dialect.big}) AS dq_exp
       FROM (VALUES (1, 1), (1, 2), (1, 3), (1, 4), (1, 5), (2, 1), (2, 2), (2, 3), (2, 4), (2, 5), (3, 1), (3, 2), (3, 3), (3, 4), (3, 5), (4, 1), (4, 2), (4, 3), (4, 4), (4, 5), (5, 1), (5, 2), (5, 3), (5, 4), (5, 5)) AS g(i, j)
       JOIN rc a ON a.c = g.i
       JOIN rc b ON b.c = g.j
     )
     SELECT nn.n AS n_units,
-      CAST(1000000 - (obs.dl_obs * CAST(nn.n AS {big}) * 1000000)
-           {div}exp.dl_exp AS BIGINT) AS kappa_linear_e6,
-      CAST(1000000 - (obs.dq_obs * CAST(nn.n AS {big}) * 1000000)
-           {div}exp.dq_exp AS BIGINT) AS kappa_quadratic_e6
+      CAST(1000000 - (obs.dl_obs * CAST(nn.n AS {dialect.big}) * 1000000)
+           {dialect.div}exp.dl_exp AS BIGINT) AS kappa_linear_e6,
+      CAST(1000000 - (obs.dq_obs * CAST(nn.n AS {dialect.big}) * 1000000)
+           {dialect.div}exp.dq_exp AS BIGINT) AS kappa_quadratic_e6
     FROM nn CROSS JOIN obs CROSS JOIN exp
     """
 
@@ -304,19 +294,16 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ccc_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ccc_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_year_rev_pairs_sql(dialect)},
     m AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS syy,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS sxy
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS syy,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS sxy
       FROM pr
     ),
     c AS (
@@ -328,7 +315,7 @@ def _ccc_sql(dialect: str) -> str:
       FROM m
     )
     SELECT n AS n_customers,
-      CAST((2 * cxy * 1000000){div}(cxx + cyy + dmean2) AS BIGINT)
+      CAST((2 * cxy * 1000000){dialect.div}(cxx + cyy + dmean2) AS BIGINT)
         AS ccc_e6,
       CAST(floor(CAST(cxy AS DOUBLE)
         / sqrt(CAST(cxx AS DOUBLE) * CAST(cyy AS DOUBLE)) * 1e6)
@@ -370,22 +357,19 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ba_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ba_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_year_rev_pairs_sql(dialect)},
     d AS (SELECT ck, x - y AS d FROM pr),
     m AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(d AS {big})) AS {big}) AS sd1,
-        CAST(sum(CAST(d AS {big}) * d) AS {big}) AS sd2
+        CAST(sum(CAST(d AS {dialect.big})) AS {dialect.big}) AS sd1,
+        CAST(sum(CAST(d AS {dialect.big}) * d) AS {dialect.big}) AS sd2
       FROM d
     ),
     lim AS (
       SELECT n, sd1, sd2,
-        CAST((sd1 * 100){div}n AS BIGINT) AS bias_e2,
+        CAST((sd1 * 100){dialect.div}n AS BIGINT) AS bias_e2,
         CAST(floor(sqrt(
           (CAST(sd2 AS DOUBLE) * n - CAST(sd1 AS DOUBLE)
            * CAST(sd1 AS DOUBLE))
@@ -394,8 +378,8 @@ def _ba_sql(dialect: str) -> str:
     ),
     loa AS (
       SELECT n, bias_e2, sd_e2,
-        bias_e2 - ({_Z975_E6} * sd_e2){div}1000000 AS loa_lo_e2,
-        bias_e2 + ({_Z975_E6} * sd_e2){div}1000000 AS loa_hi_e2
+        bias_e2 - ({_Z975_E6} * sd_e2){dialect.div}1000000 AS loa_lo_e2,
+        bias_e2 + ({_Z975_E6} * sd_e2){dialect.div}1000000 AS loa_hi_e2
       FROM lim
     )
     SELECT loa.n AS n_customers, loa.bias_e2, loa.sd_e2,
@@ -433,18 +417,16 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _deming_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _deming_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_year_rev_pairs_sql(dialect)},
     m AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS syy,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS sxy
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS syy,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS sxy
       FROM pr
     ),
     c AS (

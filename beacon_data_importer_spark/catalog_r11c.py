@@ -50,7 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
+from .sources.parquet import register_views
 
 #: floor(1e6 · z₀.₉₇₅).
 _Z975_E6 = 1_959_963
@@ -60,23 +61,15 @@ _CHI2_DF2_E6 = 5_991_464
 _MARKOV_ITERS = 20
 
 
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
-
-
-def _nation_rev_sql(dialect: str) -> str:
+def _nation_rev_sql(dialect: Dialect) -> str:
     """Per-nation total customer revenue in $1000 units, with region —
     the lattice variable for the spatial trio.  Every nation appears
     (LEFT JOINs), zero-revenue nations carry 0."""
-    div = " div " if dialect == "spark" else " // "
     return f"""
     nrev AS (
       SELECT n.n_nationkey AS nk, n.n_regionkey AS rk,
         CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
-                      0) AS BIGINT){div}100000 AS x
+                      0) AS BIGINT){dialect.div}100000 AS x
       FROM nation n
       LEFT JOIN customer c ON c.c_nationkey = n.n_nationkey
       LEFT JOIN orders o ON o.o_custkey = c.c_custkey
@@ -89,38 +82,35 @@ def _nation_rev_sql(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _moran_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _moran_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_nation_rev_sql(dialect)},
     tot AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS s
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS s
       FROM nrev
     ),
     -- scaled deviations d_i = n*x_i - S (exact; z_i = d_i/n)
     dev AS (
       SELECT nrev.nk, nrev.rk,
-        CAST(tot.n AS {big}) * nrev.x - tot.s AS d
+        CAST(tot.n AS {dialect.big}) * nrev.x - tot.s AS d
       FROM nrev CROSS JOIN tot
     ),
     byreg AS (
       SELECT rk, CAST(count(*) AS BIGINT) AS m,
-        CAST(sum(d) AS {big}) AS sd,
-        CAST(sum(d * d) AS {big}) AS sdd
+        CAST(sum(d) AS {dialect.big}) AS sd,
+        CAST(sum(d * d) AS {dialect.big}) AS sdd
       FROM dev GROUP BY rk
     ),
     agg AS (
       SELECT
-        CAST(sum(sd * sd - sdd) AS {big}) AS cross_mass,
+        CAST(sum(sd * sd - sdd) AS {dialect.big}) AS cross_mass,
         CAST(sum(m * (m - 1)) AS BIGINT) AS w,
-        CAST(sum(CAST(m AS {big}) * (m - 1) * (m - 1)) AS {big}) AS s2q
+        CAST(sum(CAST(m AS {dialect.big}) * (m - 1) * (m - 1)) AS {dialect.big}) AS s2q
       FROM byreg
     ),
     den AS (
-      SELECT CAST(sum(d * d) AS {big}) AS szz FROM dev
+      SELECT CAST(sum(d * d) AS {dialect.big}) AS szz FROM dev
     ),
     stat AS (
       SELECT tot.n, agg.w, agg.cross_mass, den.szz,
@@ -172,42 +162,39 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _geary_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _geary_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_nation_rev_sql(dialect)},
     tot AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS s
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS s
       FROM nrev
     ),
     byreg AS (
       SELECT rk, CAST(count(*) AS BIGINT) AS m,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx
       FROM nrev GROUP BY rk
     ),
     agg AS (
       -- sum over same-region ordered pairs of (x_i - x_j)^2 =
       -- 2*(m*sum x^2 - (sum x)^2) per region
-      SELECT CAST(sum(2 * (m * sxx - sx * sx)) AS {big}) AS diff_mass,
+      SELECT CAST(sum(2 * (m * sxx - sx * sx)) AS {dialect.big}) AS diff_mass,
         CAST(sum(m * (m - 1)) AS BIGINT) AS w
       FROM byreg
     ),
     den AS (
-      SELECT CAST(sum((CAST(t.n AS {big}) * r.x - t.s)
-                      * (CAST(t.n AS {big}) * r.x - t.s)) AS {big})
+      SELECT CAST(sum((CAST(t.n AS {dialect.big}) * r.x - t.s)
+                      * (CAST(t.n AS {dialect.big}) * r.x - t.s)) AS {dialect.big})
         AS szz_n2
       FROM nrev r CROSS JOIN tot t
     )
     SELECT t.n AS n_nations, a.w AS n_adjacent_pairs,
-      CAST((CAST(t.n - 1 AS {big}) * t.n * t.n * a.diff_mass * 1000000)
-           {div}(2 * CAST(a.w AS {big}) * d.szz_n2) AS BIGINT)
+      CAST((CAST(t.n - 1 AS {dialect.big}) * t.n * t.n * a.diff_mass * 1000000)
+           {dialect.div}(2 * CAST(a.w AS {dialect.big}) * d.szz_n2) AS BIGINT)
         AS geary_c_e6,
-      CAST((CAST(t.n - 1 AS {big}) * t.n * t.n * a.diff_mass * 1000000)
-           {div}(2 * CAST(a.w AS {big}) * d.szz_n2) AS BIGINT)
+      CAST((CAST(t.n - 1 AS {dialect.big}) * t.n * t.n * a.diff_mass * 1000000)
+           {dialect.div}(2 * CAST(a.w AS {dialect.big}) * d.szz_n2) AS BIGINT)
         < 1000000 AS positive_autocorrelation
     FROM tot t CROSS JOIN agg a CROSS JOIN den d
     """
@@ -238,10 +225,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _jc_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _jc_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_nation_rev_sql(dialect)},
     rk AS (
@@ -253,7 +237,7 @@ def _jc_sql(dialect: str) -> str:
     lab AS (
       -- hi = above the (low) median rank: strictly more than
       -- floor(n/2) nations below
-      SELECT nk, reg, CASE WHEN r > n{div}2 THEN 1 ELSE 0 END AS b
+      SELECT nk, reg, CASE WHEN r > n{dialect.div}2 THEN 1 ELSE 0 END AS b
       FROM rk
     ),
     byreg AS (
@@ -263,10 +247,10 @@ def _jc_sql(dialect: str) -> str:
     ),
     obs AS (
       SELECT
-        CAST(sum(hi * (hi - 1)){div}2 AS BIGINT) AS bb,
-        CAST(sum((m - hi) * (m - hi - 1)){div}2 AS BIGINT) AS ww,
+        CAST(sum(hi * (hi - 1)){dialect.div}2 AS BIGINT) AS bb,
+        CAST(sum((m - hi) * (m - hi - 1)){dialect.div}2 AS BIGINT) AS ww,
         CAST(sum(hi * (m - hi)) AS BIGINT) AS bw,
-        CAST(sum(m * (m - 1)){div}2 AS BIGINT) AS j,
+        CAST(sum(m * (m - 1)){dialect.div}2 AS BIGINT) AS j,
         CAST(sum(m) AS BIGINT) AS n,
         CAST(sum(hi) AS BIGINT) AS nb
       FROM byreg
@@ -275,12 +259,12 @@ def _jc_sql(dialect: str) -> str:
       bb AS bb_obs, bw AS bw_obs, ww AS ww_obs,
       -- nonfree (hypergeometric) expectations:
       -- E[BB] = J*nb*(nb-1)/(n(n-1)), E[BW] = 2J*nb*(n-nb)/(n(n-1))
-      CAST((CAST(j AS {big}) * nb * (nb - 1) * 1000000)
-           {div}(CAST(n AS {big}) * (n - 1)) AS BIGINT) AS bb_exp_e6,
-      CAST((2 * CAST(j AS {big}) * nb * (n - nb) * 1000000)
-           {div}(CAST(n AS {big}) * (n - 1)) AS BIGINT) AS bw_exp_e6,
-      bw * 1000000 < (2 * CAST(j AS {big}) * nb * (n - nb) * 1000000)
-                     {div}(CAST(n AS {big}) * (n - 1))
+      CAST((CAST(j AS {dialect.big}) * nb * (nb - 1) * 1000000)
+           {dialect.div}(CAST(n AS {dialect.big}) * (n - 1)) AS BIGINT) AS bb_exp_e6,
+      CAST((2 * CAST(j AS {dialect.big}) * nb * (n - nb) * 1000000)
+           {dialect.div}(CAST(n AS {dialect.big}) * (n - 1)) AS BIGINT) AS bw_exp_e6,
+      bw * 1000000 < (2 * CAST(j AS {dialect.big}) * nb * (n - nb) * 1000000)
+                     {dialect.div}(CAST(n AS {dialect.big}) * (n - 1))
         AS clustered
     FROM obs
     """
@@ -311,7 +295,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _trans_cte(dialect: str) -> str:
+def _trans_cte(dialect: Dialect) -> str:
     """Per-user consecutive event-type transitions (s -> t) counts."""
     return """
     ev AS (
@@ -326,10 +310,7 @@ def _trans_cte(dialect: str) -> str:
     )"""
 
 
-def _mte_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _mte_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_trans_cte(dialect)},
     rowm AS (
@@ -358,7 +339,7 @@ def _mte_sql(dialect: str) -> str:
       hrate.h_e6 AS entropy_rate_e6,
       h0.h0_e6 AS marginal_entropy_e6,
       h0.h0_e6 - hrate.h_e6 AS predictability_gain_e6,
-      CAST((hrate.h_e6 * 1000000){div}h0.h0_e6 AS BIGINT)
+      CAST((hrate.h_e6 * 1000000){dialect.div}h0.h0_e6 AS BIGINT)
         AS entropy_ratio_e6
     FROM n CROSS JOIN hrate CROSS JOIN h0
     """
@@ -392,10 +373,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _msd_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _msd_sql(dialect: Dialect) -> str:
     return f"""
     WITH RECURSIVE {_trans_cte(dialect)},
     rowm AS (
@@ -404,20 +382,20 @@ def _msd_sql(dialect: str) -> str:
     p AS (
       -- transition probabilities as e6 integers (truncating div)
       SELECT tr.s, tr.t,
-        CAST((tr.c * 1000000){div}rowm.cs AS BIGINT) AS p_e6
+        CAST((tr.c * 1000000){dialect.div}rowm.cs AS BIGINT) AS p_e6
       FROM tr JOIN rowm ON rowm.s = tr.s
     ),
     k AS (SELECT CAST(count(*) AS BIGINT) AS k FROM rowm),
     init AS (
       -- uniform start over the observed source states, e12 fixed point
-      SELECT s, CAST(1000000000000 AS BIGINT){div}k.k AS pi_e12
+      SELECT s, CAST(1000000000000 AS BIGINT){dialect.div}k.k AS pi_e12
       FROM rowm CROSS JOIN k
     ),
     it(iter, s, pi_e12) AS (
       SELECT CAST(0 AS BIGINT), init.s, init.pi_e12 FROM init
       UNION ALL
       SELECT it.iter + 1, p.t,
-        CAST(sum((CAST(it.pi_e12 AS {big}) * p.p_e6){div}1000000)
+        CAST(sum((CAST(it.pi_e12 AS {dialect.big}) * p.p_e6){dialect.div}1000000)
              AS BIGINT)
       FROM it JOIN p ON p.s = it.s
       WHERE it.iter < {_MARKOV_ITERS}
@@ -434,18 +412,18 @@ def _msd_sql(dialect: str) -> str:
     ),
     nn AS (SELECT CAST(sum(cs) AS BIGINT) AS n FROM emp)
     SELECT l.s AS state,
-      CAST(l.pi_fin{div}1000000 AS BIGINT) AS pi_e6,
-      CAST(abs(l.pi_fin - l.pi_prev){div}1000000 AS BIGINT)
+      CAST(l.pi_fin{dialect.div}1000000 AS BIGINT) AS pi_e6,
+      CAST(abs(l.pi_fin - l.pi_prev){dialect.div}1000000 AS BIGINT)
         AS iter_gap_e6,
-      CAST((e.cs * 1000000){div}nn.n AS BIGINT) AS empirical_e6,
-      CAST(abs(l.pi_fin{div}1000000 - (e.cs * 1000000){div}nn.n)
+      CAST((e.cs * 1000000){dialect.div}nn.n AS BIGINT) AS empirical_e6,
+      CAST(abs(l.pi_fin{dialect.div}1000000 - (e.cs * 1000000){dialect.div}nn.n)
         AS BIGINT) AS dist_to_empirical_e6
     FROM last2 l JOIN emp e ON e.s = l.s CROSS JOIN nn
     ORDER BY l.s
     """
 
 
-@query("markov_stationary_dist", oracle=_msd_sql("duck"))
+@query("markov_stationary_dist", oracle=_msd_sql(DUCK))
 def q_markov_stationary_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the event-type Markov chain by
     {_MARKOV_ITERS} power-iteration steps: π₀ uniform, πₜ₊₁(t) =
@@ -469,7 +447,7 @@ def q_markov_stationary_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     K rows out.
 
     Reference parity: beyond-reference statistics tier."""
-    _views(spark, sf_dir, "events")
+    register_views(spark, sf_dir, "events")
     # Spark's WITH RECURSIVE forbids aggregates inside the recursive
     # term (INVALID_RECURSIVE_REFERENCE — engine lesson, see PERF.md),
     # so the Spark side collects the alphabet-squared probability cells
@@ -479,7 +457,7 @@ def q_markov_stationary_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value hash is bit-identical because both paths truncate per
     # (step, cell) in the same order-free sum.
     cells = spark.sql(
-        f"WITH {_trans_cte('spark')},"
+        f"WITH {_trans_cte(SPARK)},"
         " rowm AS (SELECT s, CAST(sum(c) AS BIGINT) AS cs"
         " FROM tr GROUP BY s)"
         " SELECT tr.s, tr.t, tr.c, rowm.cs FROM tr"
@@ -528,8 +506,7 @@ q_markov_stationary_dist.__doc__ = (
 # ---------------------------------------------------------------------------
 
 
-def _edwards_sql(dialect: str) -> str:
-    spark = dialect == "spark"
+def _edwards_sql(dialect: Dialect) -> str:
     pi = "3.141592653589793"
     return f"""
     WITH mc AS (

@@ -47,7 +47,7 @@ reference ships no analytics; SURVEY §2 X-series is in catalog.py).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r9a import _two_group_hist_sql
 from .catalog_r8d import _day_sql
 
@@ -80,10 +80,10 @@ _MAP_Q = 8
 # ---------------------------------------------------------------------------
 
 
-def _rank_pair_cte(dialect: str) -> str:
+def _rank_pair_cte(dialect: Dialect) -> str:
     """Exact-cosine and raw-dot rankings of every non-query vector
     against vec_id 0, with deterministic (score desc, vec_id) order."""
-    if dialect == "spark":
+    if dialect.spark:
         dot = (
             "aggregate(zip_with(e.embedding, q.embedding,"
             " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -105,12 +105,12 @@ def _rank_pair_cte(dialect: str) -> str:
         qn = "sqrt(list_dot_product(q.ev, q.ev))"
     src = (
         "embeddings e"
-        if dialect == "spark"
+        if dialect.spark
         else "(SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings) e"
     )
     qsrc = (
         "(SELECT embedding FROM embeddings WHERE vec_id = 0) q"
-        if dialect == "spark"
+        if dialect.spark
         else "(SELECT embedding::DOUBLE[] AS ev FROM embeddings"
         " WHERE vec_id = 0) q"
     )
@@ -144,10 +144,7 @@ def _rank_pair_cte(dialect: str) -> str:
     )"""
 
 
-def _rbo_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _rbo_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_rank_pair_cte(dialect)},
     contrib AS (
@@ -159,7 +156,7 @@ def _rbo_sql(dialect: str) -> str:
     ),
     depth AS (
       SELECT CAST(count(*) AS BIGINT) AS n_agree,
-        CAST(coalesce(sum(w_e9), 0) AS {big}) AS s_e9
+        CAST(coalesce(sum(w_e9), 0) AS {dialect.big}) AS s_e9
       FROM contrib
     ),
     ov AS (
@@ -167,9 +164,9 @@ def _rbo_sql(dialect: str) -> str:
     )
     SELECT d.n_agree AS n_items_in_both_prefixes,
       o.overlap_at_depth,
-      CAST((CAST({int((1 - _RBO_P) * 1e6)} AS {big}) * d.s_e9)
-           {div}1000000000 AS BIGINT) AS rbo_base_e6,
-      CAST((o.overlap_at_depth * 1000000){div}{_RBO_DEPTH} AS BIGINT)
+      CAST((CAST({int((1 - _RBO_P) * 1e6)} AS {dialect.big}) * d.s_e9)
+           {dialect.div}1000000000 AS BIGINT) AS rbo_base_e6,
+      CAST((o.overlap_at_depth * 1000000){dialect.div}{_RBO_DEPTH} AS BIGINT)
         AS jaccard_style_overlap_e6
     FROM depth d CROSS JOIN ov o
     """
@@ -206,11 +203,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _map_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    if spark:
+def _map_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         dot = (
             "aggregate(zip_with(e.embedding, q.embedding,"
             " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -266,7 +260,7 @@ def _map_sql(dialect: str) -> str:
     perq AS (
       SELECT r.qid,
         CAST(coalesce(min(h.rb), 0) AS BIGINT) AS first_hit_rank,
-        CAST(coalesce(sum((h.hit_idx * 1000000){div}h.rb), 0)
+        CAST(coalesce(sum((h.hit_idx * 1000000){dialect.div}h.rb), 0)
              AS BIGINT) AS ap_num_e6,
         CAST(count(h.rb) AS BIGINT) AS n_hits
       FROM (SELECT DISTINCT qid FROM ranked) r
@@ -275,10 +269,10 @@ def _map_sql(dialect: str) -> str:
     )
     SELECT CAST(count(*) AS BIGINT) AS n_queries,
       CAST(sum(CASE WHEN first_hit_rank > 0
-               THEN 1000000{div}first_hit_rank ELSE 0 END)
-           {div}count(*) AS BIGINT) AS mrr_e6,
-      CAST(sum(ap_num_e6{div}10){div}count(*) AS BIGINT) AS map_at_10_e6,
-      CAST(sum(n_hits * 1000000){div}(count(*) * 10) AS BIGINT)
+               THEN 1000000{dialect.div}first_hit_rank ELSE 0 END)
+           {dialect.div}count(*) AS BIGINT) AS mrr_e6,
+      CAST(sum(ap_num_e6{dialect.div}10){dialect.div}count(*) AS BIGINT) AS map_at_10_e6,
+      CAST(sum(n_hits * 1000000){dialect.div}(count(*) * 10) AS BIGINT)
         AS recall_at_10_e6
     FROM perq
     """
@@ -311,16 +305,13 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ace_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ace_sql(dialect: Dialect) -> str:
     # word 4-gram spectrum: the corpus' word unigrams saturate (a
     # bounded synthetic vocabulary), but the 4-gram CONTEXT space is
     # ~vocab^4, so the frequency spectrum keeps a genuine rare tail at
     # every SF — and 4-gram-context coverage is precisely what an LM
     # smoothing / dedup-shingle pipeline wants estimated.
-    if spark:
+    if dialect.spark:
         grams = r"""
     g4 AS (
       SELECT concat_ws(' ', element_at(d.tk, s.i),
@@ -358,7 +349,7 @@ def _ace_sql(dialect: str) -> str:
         CAST(coalesce(sum(CASE WHEN r = 1 THEN nr END), 0) AS BIGINT)
           AS f1,
         CAST(sum(CASE WHEN r <= {_ACE_CUT} THEN r * (r - 1) * nr
-                 ELSE 0 END) AS {big}) AS sum_ii1
+                 ELSE 0 END) AS {dialect.big}) AS sum_ii1
       FROM spec
     ),
     est AS (
@@ -417,9 +408,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _chao_shared_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _chao_shared_sql(dialect: Dialect) -> str:
     from .catalog_r10e import _tok_cte
 
     return f"""
@@ -457,9 +446,9 @@ def _chao_shared_sql(dialect: str) -> str:
     )
     SELECT d12 AS shared_observed, only_a, only_b,
       f1p AS rare_in_a, fp1 AS rare_in_b, f11 AS rare_in_both,
-      d12 + (f1p * fp1 * 1000000){div}(2 * (f11 + 1) * 1000000)
+      d12 + (f1p * fp1 * 1000000){dialect.div}(2 * (f11 + 1) * 1000000)
         AS chao_shared_estimate,
-      CAST(((f1p * fp1 * 1000000){div}(2 * (f11 + 1))) AS BIGINT)
+      CAST(((f1p * fp1 * 1000000){dialect.div}(2 * (f11 + 1))) AS BIGINT)
         AS unseen_shared_e6
     FROM shared
     """
@@ -490,27 +479,21 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _qte_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    seq = (
-        "SELECT explode(sequence(1, 9)) AS d"
-        if spark
-        else "SELECT unnest(generate_series(1, 9)) AS d"
-    )
+def _qte_sql(dialect: Dialect) -> str:
+    seq = f"SELECT {dialect.series(1, 9)} AS d"
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     dec AS (SELECT CAST(d AS BIGINT) AS d FROM ({seq}) t),
     q1 AS (
       SELECT dec.d, min(c.v) AS q
       FROM dec CROSS JOIN tot t
-      JOIN cum c ON c.lt1 + c.c1 >= (dec.d * t.n1 + 9){div}10
+      JOIN cum c ON c.lt1 + c.c1 >= (dec.d * t.n1 + 9){dialect.div}10
       GROUP BY dec.d
     ),
     q2 AS (
       SELECT dec.d, min(c.v) AS q
       FROM dec CROSS JOIN tot t
-      JOIN cum c ON c.lt2 + c.c2 >= (dec.d * t.n2 + 9){div}10
+      JOIN cum c ON c.lt2 + c.c2 >= (dec.d * t.n2 + 9){dialect.div}10
       GROUP BY dec.d
     )
     SELECT q1.d AS decile,
@@ -546,14 +529,11 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _cvar_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cvar_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
-    k AS (SELECT n, (n * 5 + 99){div}100 AS k FROM n),
+    k AS (SELECT n, (n * 5 + 99){dialect.div}100 AS k FROM n),
     rk AS (
       SELECT y, row_number() OVER (ORDER BY y, t) AS r FROM day
     ),
@@ -561,16 +541,16 @@ def _cvar_sql(dialect: str) -> str:
       SELECT k.n, k.k,
         CAST(max(CASE WHEN rk.r = k.k THEN rk.y END) AS BIGINT)
           AS var_y,
-        CAST(sum(CASE WHEN rk.r <= k.k THEN CAST(rk.y AS {big})
-                 ELSE 0 END) AS {big}) AS tail_sum
+        CAST(sum(CASE WHEN rk.r <= k.k THEN CAST(rk.y AS {dialect.big})
+                 ELSE 0 END) AS {dialect.big}) AS tail_sum
       FROM rk CROSS JOIN k
       GROUP BY k.n, k.k
     )
     SELECT n AS n_days, k AS n_tail_days,
       var_y AS var5_revenue_k,
-      CAST((tail_sum * 100){div}k AS BIGINT) AS cvar5_revenue_k_e2,
+      CAST((tail_sum * 100){dialect.div}k AS BIGINT) AS cvar5_revenue_k_e2,
       CAST((tail_sum * 100 * 1000000)
-           {div}(CAST(k AS {big}) * var_y * 100) AS BIGINT)
+           {dialect.div}(CAST(k AS {dialect.big}) * var_y * 100) AS BIGINT)
         AS cvar_over_var_e6
     FROM tail
     """

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query, sql_query
+from .catalog import Dialect, query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -165,13 +165,11 @@ def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IPF_ROUNDS = 3
 
 
-def _ipf_sql(dialect: str) -> str:
+def _ipf_sql(dialect: Dialect) -> str:
     """Full raking chain for one dialect.  ``spark`` uses DECIMAL(38,0)
     + `` div ``; ``duck`` uses HUGEINT + ``//``.  Identical structure,
     identical floor placement — every weight stays an exact ppm
     integer in both engines."""
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
-    div = " div " if dialect == "spark" else " // "
     steps = []
     prev = "w0"
     for r in range(_IPF_ROUNDS):
@@ -182,11 +180,11 @@ def _ipf_sql(dialect: str) -> str:
                 f"""
     {cur} AS (
       SELECT nation, segment, n, t_n, t_s,
-             CAST(CAST(w AS {big})
-                  * ((CAST({tcol} AS {big}) * 1000000)
-                     {div} sum(CAST(n AS {big}) * w)
+             CAST(CAST(w AS {dialect.big})
+                  * ((CAST({tcol} AS {dialect.big}) * 1000000)
+                     {dialect.div} sum(CAST(n AS {dialect.big}) * w)
                            OVER (PARTITION BY {key}))
-                  {div} 1000000 AS BIGINT) AS w
+                  {dialect.div} 1000000 AS BIGINT) AS w
       FROM {prev}
     )"""
             )
@@ -214,9 +212,9 @@ def _ipf_sql(dialect: str) -> str:
     ),
     w0 AS (
       SELECT sc.nation, sc.segment, sc.n,
-             CAST(CAST(pn.pop AS {big}) * t.s * 1000000 {div} t.p
+             CAST(CAST(pn.pop AS {dialect.big}) * t.s * 1000000 {dialect.div} t.p
                   AS BIGINT) AS t_n,
-             CAST(CAST(ps.pop AS {big}) * t.s * 1000000 {div} t.p
+             CAST(CAST(ps.pop AS {dialect.big}) * t.s * 1000000 {dialect.div} t.p
                   AS BIGINT) AS t_s,
              CAST(1000000 AS BIGINT) AS w
       FROM sample_cells sc

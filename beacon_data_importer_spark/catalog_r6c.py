@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -48,14 +48,12 @@ _FS_U0 = (300_000, 200_000, 100_000)
 _FS_P0 = 50_000
 
 
-def _fs_sql(dialect: str) -> str:
+def _fs_sql(dialect: Dialect) -> str:
     """Shared EM chain.  Pattern table: nation-blocked customer pairs
     (a < b) with three agreement bits — same market segment, same
     account-balance sign, same 2-char name suffix — grouped to ≤8 rows.
     Every E-step weight and M-step rate is an exact ppm integer with
     identical floor placement in both engines."""
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
-    div = " div " if dialect == "spark" else " // "
 
     def prob(prefix: str, params: str) -> str:
         """Π_k (γ_k ? m_k : 1e6−m_k), floored to ppm stepwise."""
@@ -63,8 +61,8 @@ def _fs_sql(dialect: str) -> str:
         f2 = f"(CASE WHEN pt.g2 = 1 THEN {params}2 ELSE 1000000 - {params}2 END)"
         f3 = f"(CASE WHEN pt.g3 = 1 THEN {params}3 ELSE 1000000 - {params}3 END)"
         return (
-            f"((CAST({f1} AS {big}) * {f2} {div} 1000000)"
-            f" * {f3} {div} 1000000)"
+            f"((CAST({f1} AS {dialect.big}) * {f2} {dialect.div} 1000000)"
+            f" * {f3} {dialect.div} 1000000)"
         )
 
     steps = []
@@ -75,35 +73,35 @@ def _fs_sql(dialect: str) -> str:
             f"""
     w{i} AS (
       SELECT pt.g1, pt.g2, pt.g3, pt.n,
-             CAST(CAST(a AS {big}) * 1000000 {div} (a + b) AS BIGINT) AS w
+             CAST(CAST(a AS {dialect.big}) * 1000000 {dialect.div} (a + b) AS BIGINT) AS w
       FROM (
         SELECT pt.g1, pt.g2, pt.g3, pt.n,
-               CAST(CAST(pp.p AS {big}) * {pm} {div} 1000000 AS BIGINT)
+               CAST(CAST(pp.p AS {dialect.big}) * {pm} {dialect.div} 1000000 AS BIGINT)
                  AS a,
-               CAST(CAST(1000000 - pp.p AS {big}) * {pu} {div} 1000000
+               CAST(CAST(1000000 - pp.p AS {dialect.big}) * {pu} {dialect.div} 1000000
                     AS BIGINT) AS b
         FROM patterns pt CROSS JOIN {prev} pp
       ) pt
     ),
     params{i} AS (
       SELECT
-        CAST(sum(CAST(n AS {big}) * w) * 1000000
-             {div} sum(CAST(n AS {big}) * 1000000) AS BIGINT) AS p,
-        CAST(sum(CASE WHEN g1 = 1 THEN CAST(n AS {big}) * w ELSE 0 END)
-             * 1000000 {div} sum(CAST(n AS {big}) * w) AS BIGINT) AS m1,
-        CAST(sum(CASE WHEN g2 = 1 THEN CAST(n AS {big}) * w ELSE 0 END)
-             * 1000000 {div} sum(CAST(n AS {big}) * w) AS BIGINT) AS m2,
-        CAST(sum(CASE WHEN g3 = 1 THEN CAST(n AS {big}) * w ELSE 0 END)
-             * 1000000 {div} sum(CAST(n AS {big}) * w) AS BIGINT) AS m3,
-        CAST(sum(CASE WHEN g1 = 1 THEN CAST(n AS {big}) * (1000000 - w)
+        CAST(sum(CAST(n AS {dialect.big}) * w) * 1000000
+             {dialect.div} sum(CAST(n AS {dialect.big}) * 1000000) AS BIGINT) AS p,
+        CAST(sum(CASE WHEN g1 = 1 THEN CAST(n AS {dialect.big}) * w ELSE 0 END)
+             * 1000000 {dialect.div} sum(CAST(n AS {dialect.big}) * w) AS BIGINT) AS m1,
+        CAST(sum(CASE WHEN g2 = 1 THEN CAST(n AS {dialect.big}) * w ELSE 0 END)
+             * 1000000 {dialect.div} sum(CAST(n AS {dialect.big}) * w) AS BIGINT) AS m2,
+        CAST(sum(CASE WHEN g3 = 1 THEN CAST(n AS {dialect.big}) * w ELSE 0 END)
+             * 1000000 {dialect.div} sum(CAST(n AS {dialect.big}) * w) AS BIGINT) AS m3,
+        CAST(sum(CASE WHEN g1 = 1 THEN CAST(n AS {dialect.big}) * (1000000 - w)
                       ELSE 0 END) * 1000000
-             {div} sum(CAST(n AS {big}) * (1000000 - w)) AS BIGINT) AS u1,
-        CAST(sum(CASE WHEN g2 = 1 THEN CAST(n AS {big}) * (1000000 - w)
+             {dialect.div} sum(CAST(n AS {dialect.big}) * (1000000 - w)) AS BIGINT) AS u1,
+        CAST(sum(CASE WHEN g2 = 1 THEN CAST(n AS {dialect.big}) * (1000000 - w)
                       ELSE 0 END) * 1000000
-             {div} sum(CAST(n AS {big}) * (1000000 - w)) AS BIGINT) AS u2,
-        CAST(sum(CASE WHEN g3 = 1 THEN CAST(n AS {big}) * (1000000 - w)
+             {dialect.div} sum(CAST(n AS {dialect.big}) * (1000000 - w)) AS BIGINT) AS u2,
+        CAST(sum(CASE WHEN g3 = 1 THEN CAST(n AS {dialect.big}) * (1000000 - w)
                       ELSE 0 END) * 1000000
-             {div} sum(CAST(n AS {big}) * (1000000 - w)) AS BIGINT) AS u3
+             {dialect.div} sum(CAST(n AS {dialect.big}) * (1000000 - w)) AS BIGINT) AS u3
       FROM w{i}
     )"""
         )
@@ -135,12 +133,12 @@ def _fs_sql(dialect: str) -> str:
              CAST({_FS_U0[2]} AS BIGINT) AS u3
     ),{chain}
     SELECT pt.g1, pt.g2, pt.g3, pt.n AS n_pairs,
-           CAST(CAST(CAST(pp.p AS {big}) * {pm_f} {div} 1000000 AS {big})
+           CAST(CAST(CAST(pp.p AS {dialect.big}) * {pm_f} {dialect.div} 1000000 AS {dialect.big})
                 * 1000000
-                {div} (CAST(CAST(pp.p AS {big}) * {pm_f} {div} 1000000
-                            AS {big})
-                       + CAST(CAST(1000000 - pp.p AS {big}) * {pu_f}
-                              {div} 1000000 AS {big}))
+                {dialect.div} (CAST(CAST(pp.p AS {dialect.big}) * {pm_f} {dialect.div} 1000000
+                            AS {dialect.big})
+                       + CAST(CAST(1000000 - pp.p AS {dialect.big}) * {pu_f}
+                              {dialect.div} 1000000 AS {dialect.big}))
                 AS BIGINT) AS w_ppm,
            pp.p AS p_ppm,
            pp.m1 AS m1_ppm, pp.m2 AS m2_ppm, pp.m3 AS m3_ppm,
@@ -192,8 +190,8 @@ _DSIR_BUCKETS = 256
 _DSIR_TOPK = 100
 
 
-def _dsir_hash(dialect: str) -> str:
-    if dialect == "spark":
+def _dsir_hash(dialect: Dialect) -> str:
+    if dialect.spark:
         return (
             "CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)"
             f" % {_DSIR_BUCKETS}"
@@ -204,14 +202,13 @@ def _dsir_hash(dialect: str) -> str:
     )
 
 
-def _dsir_sql(dialect: str) -> str:
+def _dsir_sql(dialect: Dialect) -> str:
     h = _dsir_hash(dialect)
     split = (
         "explode(split(text, ' ')) AS tok"
-        if dialect == "spark"
+        if dialect.spark
         else "unnest(string_split(text, ' ')) AS tok"
     )
-    div = " div " if dialect == "spark" else " // "
     return f"""
     WITH toks AS (
       SELECT doc_id, lang, source, {split}
@@ -237,9 +234,9 @@ def _dsir_sql(dialect: str) -> str:
       SELECT r.b,
              CAST(floor(1e6 * ln(
                CAST((coalesce(t.tc, 0) + 1) * 1000000
-                    {div} (tot.tt + {_DSIR_BUCKETS}) AS DOUBLE)
+                    {dialect.div} (tot.tt + {_DSIR_BUCKETS}) AS DOUBLE)
                / CAST((r.rc + 1) * 1000000
-                      {div} (tot.rt + {_DSIR_BUCKETS}) AS DOUBLE)
+                      {dialect.div} (tot.rt + {_DSIR_BUCKETS}) AS DOUBLE)
              )) AS BIGINT) AS llr_e6
       FROM raw r LEFT JOIN target t ON t.b = r.b CROSS JOIN tot
     ),
@@ -259,7 +256,7 @@ def _dsir_sql(dialect: str) -> str:
 
 @query(
     "dsir_importance_sample",
-    oracle=_dsir_sql("duck"),
+    oracle=_dsir_sql(DUCK),
 )
 def q_dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al.
@@ -286,7 +283,7 @@ def q_dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus of what you WANT."""
     d = read_table(spark, sf_dir, "documents")
     d.createOrReplaceTempView("documents")
-    return spark.sql(_dsir_sql("spark"))
+    return spark.sql(_dsir_sql(SPARK))
 
 
 q_dsir_importance_sample.__doc__ = (

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import ORACLES, QUERIES, query
+from .catalog import DUCK, ORACLES, QUERIES, SPARK, Dialect, query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -58,9 +58,8 @@ _MBA_CURVE_VALUES = ", ".join(
 )
 
 
-def _mba_sql(dialect: str, truth_sql: str) -> str:
-    div = " div " if dialect == "spark" else " // "
-    if dialect == "spark":
+def _mba_sql(dialect: Dialect, truth_sql: str) -> str:
+    if dialect.spark:
         curve = (
             f"SELECT col1 AS bands, col2 AS rows_per_band, col3 AS s_pct,"
             f" col4 AS p_ppm FROM VALUES {_MBA_CURVE_VALUES}"
@@ -74,7 +73,7 @@ def _mba_sql(dialect: str, truth_sql: str) -> str:
     WITH truth AS ({truth_sql}),
     curve AS ({curve}),
     rounded AS (
-      SELECT CAST((jaccard_e6 + 5000) {div} 10000 AS BIGINT) AS s_pct
+      SELECT CAST((jaccard_e6 + 5000) {dialect.div} 10000 AS BIGINT) AS s_pct
       FROM truth
     ),
     joined AS (
@@ -84,7 +83,7 @@ def _mba_sql(dialect: str, truth_sql: str) -> str:
     SELECT j.bands AS bands,
            j.rows_per_band AS rows_per_band,
            CAST(count(*) AS BIGINT) AS n_true_pairs,
-           CAST(sum(j.p_ppm) {div} count(*) AS BIGINT)
+           CAST(sum(j.p_ppm) {dialect.div} count(*) AS BIGINT)
              AS expected_recall_ppm,
            CAST(max(c50.p_ppm) AS BIGINT) AS p_at_50_ppm,
            CAST(max(c70.p_ppm) AS BIGINT) AS p_at_70_ppm,
@@ -103,7 +102,7 @@ def _mba_sql(dialect: str, truth_sql: str) -> str:
 
 @query(
     "minhash_band_advisor",
-    oracle=_mba_sql("duck", ORACLES["prefix_filter_jaccard_join"]),
+    oracle=_mba_sql(DUCK, ORACLES["prefix_filter_jaccard_join"]),
 )
 def q_minhash_band_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding advisor: which (bands × rows) split of the 16-hash
@@ -130,7 +129,7 @@ def q_minhash_band_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = QUERIES["prefix_filter_jaccard_join"](spark, sf_dir)
     truth.createOrReplaceTempView("__mba_truth")
     return spark.sql(
-        _mba_sql("spark", "SELECT * FROM __mba_truth")
+        _mba_sql(SPARK, "SELECT * FROM __mba_truth")
     )
 
 

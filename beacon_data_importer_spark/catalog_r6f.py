@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query, sql_query
+from .catalog import Dialect, query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -92,9 +92,7 @@ def q_collated_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACF_LAGS = (1, 7, 28)
 
 
-def _acf_sql(dialect: str) -> str:
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
-    div = " div " if dialect == "spark" else " // "
+def _acf_sql(dialect: Dialect) -> str:
     lag_rows = " UNION ALL ".join(f"SELECT {k} AS k" for k in _ACF_LAGS)
     return f"""
     WITH daily AS (
@@ -110,14 +108,14 @@ def _acf_sql(dialect: str) -> str:
     tot AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(sum(y) AS BIGINT) AS s,
-             CAST(sum(CAST(y AS {big}) * y) AS {big}) AS q
+             CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS q
       FROM idx
     ),
     lags AS ({lag_rows}),
     paired AS (
       SELECT l.k,
              CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(CAST(a.y AS {big}) * b.y) AS {big}) AS p,
+             CAST(sum(CAST(a.y AS {dialect.big}) * b.y) AS {dialect.big}) AS p,
              CAST(sum(a.y) AS BIGINT) AS sh,
              CAST(sum(b.y) AS BIGINT) AS st
       FROM lags l
@@ -126,11 +124,11 @@ def _acf_sql(dialect: str) -> str:
       GROUP BY l.k
     )
     SELECT p.k AS lag, p.n_pairs,
-           CAST((CAST(t.n AS {big}) * t.n * p.p
-                 - CAST(t.n AS {big}) * t.s * (p.sh + p.st)
-                 + CAST(p.n_pairs AS {big}) * t.s * t.s) * 1000000
-                {div} (CAST(t.n AS {big}) * t.n * t.q
-                       - CAST(t.n AS {big}) * t.s * t.s)
+           CAST((CAST(t.n AS {dialect.big}) * t.n * p.p
+                 - CAST(t.n AS {dialect.big}) * t.s * (p.sh + p.st)
+                 + CAST(p.n_pairs AS {dialect.big}) * t.s * t.s) * 1000000
+                {dialect.div} (CAST(t.n AS {dialect.big}) * t.n * t.q
+                       - CAST(t.n AS {dialect.big}) * t.s * t.s)
                 AS BIGINT) AS r_ppm
     FROM paired p CROSS JOIN tot t
     ORDER BY p.k

@@ -24,7 +24,7 @@ closes the two-table-join case.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: deterministic "new arrivals": 10% of orders, 5% of customers
 _IVM_SPLIT_SQL = {
@@ -35,8 +35,7 @@ _IVM_SPLIT_SQL = {
 }
 
 
-def _ivm_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _ivm_sql(dialect: Dialect) -> str:
     s = _IVM_SPLIT_SQL
     return f"""
     WITH a_old AS (SELECT c_custkey, c_nationkey FROM customer
@@ -97,7 +96,7 @@ def _ivm_sql(dialect: str) -> str:
            CASE WHEN m.n = r.n AND m.rev_c = r.rev_c
                 THEN 1 ELSE 0 END AS delta_matches,
            CAST(coalesce(vd.rev_c, 0) * 1000000
-                {div} m.rev_c AS BIGINT) AS delta_share_ppm
+                {dialect.div} m.rev_c AS BIGINT) AS delta_share_ppm
     FROM maintained m
     JOIN recomputed r ON r.nation = m.nation
     LEFT JOIN view_delta vd ON vd.nation = m.nation

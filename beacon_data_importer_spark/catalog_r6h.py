@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, Dialect, query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -39,8 +39,7 @@ _DEC = "decimal(38,0)"
 _PAK_K = 5
 
 
-def _pak_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _pak_sql(dialect: Dialect) -> str:
     # fail_ppm = 1e6 · Π_{i=0..k-1} (n-c-i)/(n-i), floored per factor;
     # a factor with n-c-i <= 0 zeroes the product (some success in
     # every k-subset).
@@ -48,7 +47,7 @@ def _pak_sql(dialect: str) -> str:
     for i in range(_PAK_K):
         prod = (
             f"(CASE WHEN n - c - {i} <= 0 THEN 0 ELSE"
-            f" ({prod}) * (n - c - {i}) {div} (n - {i}) END)"
+            f" ({prod}) * (n - c - {i}) {dialect.div} (n - {i}) END)"
         )
     return f"""
     WITH trials AS (
@@ -65,7 +64,7 @@ def _pak_sql(dialect: str) -> str:
       FROM eligible
     )
     SELECT CAST(count(*) AS BIGINT) AS n_tasks,
-           CAST(sum(pass_ppm) {div} count(*) AS BIGINT)
+           CAST(sum(pass_ppm) {dialect.div} count(*) AS BIGINT)
              AS mean_pass_at_k_ppm,
            CAST(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_zero_success,
@@ -149,15 +148,13 @@ _BT_ITERS = 3
 _BT_TOTAL = 25_000_000  # normalized rating mass: 25 nations × 1e6
 
 
-def _bt_sql(dialect: str) -> str:
+def _bt_sql(dialect: Dialect) -> str:
     """DuckDB-only since the round-6 perf fix (the Spark side runs the
     iterations as materialized DataFrame steps); every multiply-
     referenced CTE is AS MATERIALIZED — DuckDB otherwise re-inlines
     them and the iteration chain re-evaluates the pair expansion
     3^iters times (measured 8.2 s at sf0.001 → 0.3 s materialized)."""
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
-    div = " div " if dialect == "spark" else " // "
-    mat = "" if dialect == "spark" else " MATERIALIZED"
+    mat = "" if dialect.spark else " MATERIALIZED"
     steps = []
     prev = "r0"
     for it in range(1, _BT_ITERS + 1):
@@ -166,9 +163,9 @@ def _bt_sql(dialect: str) -> str:
             f"""
     {cur}_raw AS{mat} (
       SELECT t.nat,
-             CAST(CAST(t.wins AS {big}) * 1000000000000
-                  {div} sum(CAST(g.games AS {big}) * 1000000000000
-                            {div} (ri.r + rj.r))
+             CAST(CAST(t.wins AS {dialect.big}) * 1000000000000
+                  {dialect.div} sum(CAST(g.games AS {dialect.big}) * 1000000000000
+                            {dialect.div} (ri.r + rj.r))
                   AS BIGINT) AS r
       FROM teams t
       JOIN games g ON g.i = t.nat
@@ -178,8 +175,8 @@ def _bt_sql(dialect: str) -> str:
     ),
     {cur} AS{mat} (
       SELECT nat,
-             CAST(CAST(r AS {big}) * {_BT_TOTAL}
-                  {div} (SELECT sum(r) FROM {cur}_raw) AS BIGINT) AS r
+             CAST(CAST(r AS {dialect.big}) * {_BT_TOTAL}
+                  {dialect.div} (SELECT sum(r) FROM {cur}_raw) AS BIGINT) AS r
       FROM {cur}_raw
     )"""
         )
@@ -220,7 +217,7 @@ def _bt_sql(dialect: str) -> str:
 
 @query(
     "bradley_terry_rating",
-    oracle=_bt_sql("duck"),
+    oracle=_bt_sql(DUCK),
 )
 def q_bradley_terry_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bradley-Terry paired-comparison strengths for supplier nations,
@@ -308,8 +305,7 @@ q_bradley_terry_rating.__doc__ = (q_bradley_terry_rating.__doc__ or "").format(
 # preference_cycle_audit
 # ---------------------------------------------------------------------------
 
-def _cycle_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _cycle_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_BT_LINES_SQL},{_BT_MATCHES_SQL},
     oriented AS (
@@ -348,7 +344,7 @@ def _cycle_sql(dialect: str) -> str:
     SELECT CAST(count(*) AS BIGINT) AS n_closed_triads,
            CAST(sum(cyclic) AS BIGINT) AS n_cyclic,
            CAST(sum(transitive) AS BIGINT) AS n_transitive,
-           CAST(sum(cyclic) * 1000000 {div} count(*) AS BIGINT)
+           CAST(sum(cyclic) * 1000000 {dialect.div} count(*) AS BIGINT)
              AS cyclic_ppm
     FROM closed
     """

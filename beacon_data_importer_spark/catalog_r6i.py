@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query, sql_query
+from .catalog import Dialect, query, sql_query
 from .sources.parquet import read_table
 
 _DEC = "decimal(38,0)"
@@ -44,14 +44,12 @@ _EMD_BIN_CENTS = 2_000_000  # $20k-wide value bins
 _EMD_MAX_BIN = 40  # top bin open-ended → ≤41 bins, bounded frame
 
 
-def _emd_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
+def _emd_sql(dialect: Dialect) -> str:
     return f"""
     WITH binned AS (
       SELECT least({_EMD_MAX_BIN},
                    CAST(round(o_totalprice * 100) AS BIGINT)
-                   {div} {_EMD_BIN_CENTS}) AS bin,
+                   {dialect.div} {_EMD_BIN_CENTS}) AS bin,
              CASE WHEN o_orderdate < DATE '{_EMD_CUTOFF}' THEN 1 ELSE 0 END
                AS pre
       FROM orders
@@ -71,9 +69,9 @@ def _emd_sql(dialect: str) -> str:
                  CAST(sum(c2) AS BIGINT) AS n2 FROM counts)
     SELECT n.n1, n.n2,
            CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(abs(CAST(s.cum1 AS {big}) * n.n2
-                        - CAST(s.cum2 AS {big}) * n.n1)) * 1000000
-                {div} (CAST(n.n1 AS {big}) * n.n2) AS BIGINT)
+           CAST(sum(abs(CAST(s.cum1 AS {dialect.big}) * n.n2
+                        - CAST(s.cum2 AS {dialect.big}) * n.n1)) * 1000000
+                {dialect.div} (CAST(n.n1 AS {dialect.big}) * n.n2) AS BIGINT)
              AS emd_bins_e6
     FROM scanned s CROSS JOIN n
     GROUP BY n.n1, n.n2
@@ -251,8 +249,7 @@ q_best_split_finder.__doc__ = (q_best_split_finder.__doc__ or "").format(
 # woe_iv_encoding
 # ---------------------------------------------------------------------------
 
-def _woe_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _woe_sql(dialect: Dialect) -> str:
     return f"""
     WITH labeled AS (
       SELECT c.c_mktsegment AS segment,
@@ -276,9 +273,9 @@ def _woe_sql(dialect: str) -> str:
     ),
     shares AS (
       SELECT p.segment, p.n_good, p.n_bad,
-             CAST((p.n_good + 1) * 1000000 {div} (t.g + t.k) AS BIGINT)
+             CAST((p.n_good + 1) * 1000000 {dialect.div} (t.g + t.k) AS BIGINT)
                AS good_ppm,
-             CAST((p.n_bad + 1) * 1000000 {div} (t.b + t.k) AS BIGINT)
+             CAST((p.n_bad + 1) * 1000000 {dialect.div} (t.b + t.k) AS BIGINT)
                AS bad_ppm
       FROM per_seg p CROSS JOIN tot t
     )

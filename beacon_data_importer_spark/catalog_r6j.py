@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -43,8 +43,8 @@ from .sources.parquet import read_table
 _CR_P_PPM = 400_000
 
 
-def _cr_u(seed: str, dialect: str) -> str:
-    if dialect == "spark":
+def _cr_u(seed: str, dialect: Dialect) -> str:
+    if dialect.spark:
         return (
             f"CAST(conv(substring(md5(concat('{seed}|',"
             " cast(c_custkey as string))), 1, 15), 16, 10) AS BIGINT)"
@@ -56,8 +56,7 @@ def _cr_u(seed: str, dialect: str) -> str:
     )
 
 
-def _cr_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _cr_sql(dialect: Dialect) -> str:
     u1, u2 = _cr_u("cr1", dialect), _cr_u("cr2", dialect)
     return f"""
     WITH active AS (
@@ -75,7 +74,7 @@ def _cr_sql(dialect: str) -> str:
            CAST(sum(s2) AS BIGINT) AS n2,
            CAST(sum(s1 * s2) AS BIGINT) AS m,
            CAST((sum(s1) + 1) * (sum(s2) + 1)
-                {div} (sum(s1 * s2) + 1) - 1 AS BIGINT) AS chapman_est
+                {dialect.div} (sum(s1 * s2) + 1) - 1 AS BIGINT) AS chapman_est
     FROM tagged
     """
 
@@ -106,11 +105,10 @@ sql_query(
 # chao1_unseen_vocab
 # ---------------------------------------------------------------------------
 
-def _chao_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _chao_sql(dialect: Dialect) -> str:
     split = (
         "explode(split(text, ' ')) AS tok"
-        if dialect == "spark"
+        if dialect.spark
         else "unnest(string_split(text, ' ')) AS tok"
     )
     return f"""
@@ -128,18 +126,18 @@ def _chao_sql(dialect: str) -> str:
            CAST(count(*)
                 + sum(CASE WHEN f = 1 THEN 1 ELSE 0 END)
                   * sum(CASE WHEN f = 1 THEN 1 ELSE 0 END)
-                  {div} (2 * greatest(sum(CASE WHEN f = 2 THEN 1 ELSE 0 END),
+                  {dialect.div} (2 * greatest(sum(CASE WHEN f = 2 THEN 1 ELSE 0 END),
                                       1))
                 AS BIGINT) AS chao1_est,
            CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) * 1000000
-                {div} sum(f) AS BIGINT) AS gt_unseen_ppm
+                {dialect.div} sum(f) AS BIGINT) AS gt_unseen_ppm
     FROM freq
     """
 
 
 @query(
     "chao1_unseen_vocab",
-    oracle=_chao_sql("duck"),
+    oracle=_chao_sql(DUCK),
 )
 def q_chao1_unseen_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open-vocabulary extrapolation from the token frequency spectrum:
@@ -163,7 +161,7 @@ def q_chao1_unseen_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "documents"
     )
-    return spark.sql(_chao_sql("spark"))
+    return spark.sql(_chao_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -175,10 +173,9 @@ _CHOW_CUTOFF_YM = 199801  # split the monthly series at 1998-01
 _CHOW_F_CRIT_E6 = 3_110_766
 
 
-def _chow_sql(dialect: str) -> str:
+def _chow_sql(dialect: Dialect) -> str:
     # SSE of OLS y~x from exact integer sufficient statistics, as ONE
     # IEEE chain (identical text both engines): sse = syy - sxy^2/sxx
-    div = " div " if dialect == "spark" else " // "
 
     # UNIT CHOICE IS A PARITY DEVICE HERE: with y in cents, Σy² needs a
     # wide integer (int64 wraps — measured: negative SSEs in Spark), and
@@ -206,7 +203,7 @@ def _chow_sql(dialect: str) -> str:
                ORDER BY year(o_orderdate) * 100 + month(o_orderdate))
                AS BIGINT) AS t,
              CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS BIGINT) {div} 100000 AS y_k
+                  AS BIGINT) {dialect.div} 100000 AS y_k
       FROM orders
       GROUP BY year(o_orderdate) * 100 + month(o_orderdate)
     ),

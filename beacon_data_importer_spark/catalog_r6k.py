@@ -17,16 +17,14 @@ Reference parity: beyond-reference experimentation tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 #: floor(1e6·(z_{0.975} + z_power)) — Python-computed once
 _PW_ZSUM_E6 = {80: 2_801_585, 90: 3_241_515}
 _PW_LIFT_PPM = 100_000  # +10% relative lift to detect
 
 
-def _pw_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
+def _pw_sql(dialect: Dialect) -> str:
     arms = " UNION ALL ".join(
         f"SELECT {p} AS power_pct, CAST({z} AS BIGINT) AS zsum_e6"
         for p, z in sorted(_PW_ZSUM_E6.items())
@@ -34,23 +32,23 @@ def _pw_sql(dialect: str) -> str:
     return f"""
     WITH base AS (
       SELECT CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                  * 1000000 {div} count(*) AS BIGINT) AS p1_ppm
+                  * 1000000 {dialect.div} count(*) AS BIGINT) AS p1_ppm
       FROM events
     ),
     rates AS (
       SELECT p1_ppm,
-             CAST(p1_ppm + p1_ppm * {_PW_LIFT_PPM} {div} 1000000
+             CAST(p1_ppm + p1_ppm * {_PW_LIFT_PPM} {dialect.div} 1000000
                   AS BIGINT) AS p2_ppm
       FROM base
     ),
     zs AS ({arms})
     SELECT z.power_pct, r.p1_ppm, r.p2_ppm,
-           CAST((CAST(z.zsum_e6 AS {big}) * z.zsum_e6
-                 * (CAST(r.p1_ppm AS {big}) * (1000000 - r.p1_ppm)
-                    + CAST(r.p2_ppm AS {big}) * (1000000 - r.p2_ppm))
-                 + CAST(r.p2_ppm - r.p1_ppm AS {big})
+           CAST((CAST(z.zsum_e6 AS {dialect.big}) * z.zsum_e6
+                 * (CAST(r.p1_ppm AS {dialect.big}) * (1000000 - r.p1_ppm)
+                    + CAST(r.p2_ppm AS {dialect.big}) * (1000000 - r.p2_ppm))
+                 + CAST(r.p2_ppm - r.p1_ppm AS {dialect.big})
                    * (r.p2_ppm - r.p1_ppm) * 1000000000000 - 1)
-                {div} (CAST(r.p2_ppm - r.p1_ppm AS {big})
+                {dialect.div} (CAST(r.p2_ppm - r.p1_ppm AS {dialect.big})
                        * (r.p2_ppm - r.p1_ppm) * 1000000000000)
                 AS BIGINT) AS n_per_arm
     FROM rates r CROSS JOIN zs z

@@ -51,7 +51,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -79,13 +79,12 @@ _BENFORD_CASE = (
 )
 
 
-def _benford_sql(dialect: str) -> str:
+def _benford_sql(dialect: Dialect) -> str:
     """Shared text: cents → second significant digit via
     integer-to-string (identical in both engines; float formatting is
     not), then integer ppm shares and chi-square terms with identical
     truncation placement."""
-    div = " div " if dialect == "spark" else " // "
-    str_t = "STRING" if dialect == "spark" else "VARCHAR"
+    str_t = "STRING" if dialect.spark else "VARCHAR"
     return f"""
     WITH d AS (
       SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
@@ -99,11 +98,11 @@ def _benford_sql(dialect: str) -> str:
       FROM d GROUP BY digit
     )
     SELECT p.digit, p.n_orders,
-      CAST((p.n_orders * 1000000){div}t.n AS BIGINT) AS observed_ppm,
+      CAST((p.n_orders * 1000000){dialect.div}t.n AS BIGINT) AS observed_ppm,
       CAST({_BENFORD_CASE} AS BIGINT) AS expected_ppm,
-      CAST(((p.n_orders * 1000000){div}t.n - {_BENFORD_CASE})
-           * ((p.n_orders * 1000000){div}t.n - {_BENFORD_CASE})
-           {div} {_BENFORD_CASE} AS BIGINT) AS chi2_term_ppm
+      CAST(((p.n_orders * 1000000){dialect.div}t.n - {_BENFORD_CASE})
+           * ((p.n_orders * 1000000){dialect.div}t.n - {_BENFORD_CASE})
+           {dialect.div} {_BENFORD_CASE} AS BIGINT) AS chi2_term_ppm
     FROM per p CROSS JOIN tot t
     """
 
@@ -135,13 +134,10 @@ sql_query(
 _ZIPF_TOP = 200
 
 
-def _zipf_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _zipf_sql(dialect: Dialect) -> str:
     words = (
         "SELECT explode(split(text, ' ')) AS w FROM documents"
-        if spark
+        if dialect.spark
         else "SELECT unnest(string_split(text, ' ')) AS w FROM documents"
     )
     return f"""
@@ -159,22 +155,22 @@ def _zipf_sql(dialect: str) -> str:
       FROM ranked WHERE r <= {_ZIPF_TOP}
     ),
     s AS (
-      SELECT CAST(count(*) AS {big}) AS n,
-             CAST(sum(x) AS {big}) AS sx, CAST(sum(y) AS {big}) AS sy,
-             CAST(sum(x * y) AS {big}) AS sxy,
-             CAST(sum(x * x) AS {big}) AS sxx
+      SELECT CAST(count(*) AS {dialect.big}) AS n,
+             CAST(sum(x) AS {dialect.big}) AS sx, CAST(sum(y) AS {dialect.big}) AS sy,
+             CAST(sum(x * y) AS {dialect.big}) AS sxy,
+             CAST(sum(x * x) AS {dialect.big}) AS sxx
       FROM pts
     )
     SELECT CAST(n AS BIGINT) AS n_ranks,
       CAST(((n * sxy - sx * sy) * 1000000)
-           {div} (n * sxx - sx * sx) AS BIGINT) AS slope_ppm
+           {dialect.div} (n * sxx - sx * sx) AS BIGINT) AS slope_ppm
     FROM s
     """
 
 
 @query(
     "zipf_slope_audit",
-    oracle=_zipf_sql("duck"),
+    oracle=_zipf_sql(DUCK),
 )
 def q_zipf_slope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-health gauge: OLS slope of ln(frequency) on ln(rank) over
@@ -192,7 +188,7 @@ def q_zipf_slope_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "documents"
     )
-    return spark.sql(_zipf_sql("spark"))
+    return spark.sql(_zipf_sql(SPARK))
 
 
 q_zipf_slope_audit.__doc__ = (q_zipf_slope_audit.__doc__ or "").format(
@@ -205,9 +201,7 @@ q_zipf_slope_audit.__doc__ = (q_zipf_slope_audit.__doc__ or "").format(
 # ---------------------------------------------------------------------------
 
 
-def _simpson_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _simpson_sql(dialect: Dialect) -> str:
     return f"""
     WITH li AS (
       SELECT c.c_nationkey AS nationkey,
@@ -218,17 +212,17 @@ def _simpson_sql(dialect: str) -> str:
       JOIN customer c ON c.c_custkey = o.o_custkey
     ),
     strat AS (
-      SELECT nationkey, CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x * y AS {big})) AS {big}) AS sxy
+      SELECT nationkey, CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x * y AS {dialect.big})) AS {dialect.big}) AS sxy
       FROM li GROUP BY nationkey
     ),
     pool AS (
-      SELECT CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x * y AS {big})) AS {big}) AS sxy
+      SELECT CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x * y AS {dialect.big})) AS {dialect.big}) AS sxy
       FROM li
     )
     SELECT s.nationkey,
@@ -271,8 +265,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _isotonic_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _isotonic_sql(dialect: Dialect) -> str:
     return f"""
     WITH pts AS (
       SELECT CAST(round(l_discount * 100) AS BIGINT) AS bin,
@@ -291,7 +284,7 @@ def _isotonic_sql(dialect: str) -> str:
     ),
     rates AS (
       SELECT j.bin AS jb, k.bin AS kb,
-        ((k.cs - j.cs + j.s) * 1000000){div}(k.cw - j.cw + j.w) AS r
+        ((k.cs - j.cs + j.s) * 1000000){dialect.div}(k.cw - j.cw + j.w) AS r
       FROM cum j JOIN cum k ON k.bin >= j.bin
     ),
     mins AS (
@@ -300,7 +293,7 @@ def _isotonic_sql(dialect: str) -> str:
       GROUP BY i.bin, r.jb
     )
     SELECT b.bin, b.w AS n_items,
-      CAST((b.s * 1000000){div}b.w AS BIGINT) AS rate_ppm,
+      CAST((b.s * 1000000){dialect.div}b.w AS BIGINT) AS rate_ppm,
       CAST(max(m.mn) AS BIGINT) AS isotonic_ppm
     FROM bins b JOIN mins m ON m.ib = b.bin
     GROUP BY b.bin, b.w, b.s

@@ -38,7 +38,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -46,16 +46,13 @@ from .catalog import sql_query
 # ---------------------------------------------------------------------------
 
 
-def _mk_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    yr = "year(o_orderdate)" if spark else "year(o_orderdate)"
-    mo = "month(o_orderdate)" if spark else "month(o_orderdate)"
+def _mk_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
-      SELECT {yr} * 100 + {mo} AS ym,
+      SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
           AS rev
-      FROM orders GROUP BY {yr} * 100 + {mo}
+      FROM orders GROUP BY year(o_orderdate) * 100 + month(o_orderdate)
     ),
     stats AS (SELECT CAST(count(*) AS BIGINT) AS n FROM m),
     s AS (
@@ -104,10 +101,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _runs_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _runs_sql(dialect: Dialect) -> str:
     return f"""
     WITH d AS (
       SELECT date_trunc('day', o_orderdate) AS day,
@@ -120,7 +114,7 @@ def _runs_sql(dialect: str) -> str:
              count(*) OVER () AS n_all
       FROM d
     ),
-    med AS (SELECT rev AS medv FROM ranked WHERE rn = (n_all + 1){div}2),
+    med AS (SELECT rev AS medv FROM ranked WHERE rn = (n_all + 1){dialect.div}2),
     signs AS (
       SELECT day, CASE WHEN rev > medv THEN 1 ELSE 0 END AS sg
       FROM d CROSS JOIN med WHERE rev <> medv
@@ -137,11 +131,11 @@ def _runs_sql(dialect: str) -> str:
       CAST(CASE WHEN r * n > n + 2 * n1 * n2 THEN 1
                 WHEN r * n < n + 2 * n1 * n2 THEN -1 ELSE 0 END AS INT)
         AS z_sign,
-      (CAST(r * n - (n + 2 * n1 * n2) AS {big})
-         * CAST(r * n - (n + 2 * n1 * n2) AS {big})
-         * CAST(n - 1 AS {big}) * 1000000
-       > CAST(3841600 AS {big}) * CAST(2 * n1 * n2 AS {big})
-         * CAST(2 * n1 * n2 - n AS {big})) AS significant_95
+      (CAST(r * n - (n + 2 * n1 * n2) AS {dialect.big})
+         * CAST(r * n - (n + 2 * n1 * n2) AS {dialect.big})
+         * CAST(n - 1 AS {dialect.big}) * 1000000
+       > CAST(3841600 AS {dialect.big}) * CAST(2 * n1 * n2 AS {dialect.big})
+         * CAST(2 * n1 * n2 - n AS {dialect.big})) AS significant_95
     FROM runs
     """
 
@@ -168,10 +162,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _kendall_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kendall_sql(dialect: Dialect) -> str:
     return f"""
     WITH cells AS (
       SELECT CAST(round(l_discount * 100) AS BIGINT) AS x,
@@ -183,20 +174,20 @@ def _kendall_sql(dialect: str) -> str:
     pairs AS (
       SELECT
         CAST(sum(CASE WHEN a.x < b.x AND a.y < b.y
-                      THEN CAST(a.c * b.c AS {big}) ELSE CAST(0 AS {big})
-                 END) AS {big}) AS conc,
+                      THEN CAST(a.c * b.c AS {dialect.big}) ELSE CAST(0 AS {dialect.big})
+                 END) AS {dialect.big}) AS conc,
         CAST(sum(CASE WHEN a.x < b.x AND a.y > b.y
-                      THEN CAST(a.c * b.c AS {big}) ELSE CAST(0 AS {big})
-                 END) AS {big}) AS disc
+                      THEN CAST(a.c * b.c AS {dialect.big}) ELSE CAST(0 AS {dialect.big})
+                 END) AS {dialect.big}) AS disc
       FROM cells a JOIN cells b
         ON a.x < b.x OR (a.x = b.x AND a.y < b.y)
     )
     SELECT t.n AS n_items,
-      CAST(CAST(t.n AS {big}) * (t.n - 1){div}2 AS BIGINT) AS n_pairs,
+      CAST(CAST(t.n AS {dialect.big}) * (t.n - 1){dialect.div}2 AS BIGINT) AS n_pairs,
       CAST(p.conc AS BIGINT) AS concordant,
       CAST(p.disc AS BIGINT) AS discordant,
       CAST(((p.conc - p.disc) * 1000000)
-           {div} (CAST(t.n AS {big}) * (t.n - 1){div}2) AS BIGINT)
+           {dialect.div} (CAST(t.n AS {dialect.big}) * (t.n - 1){dialect.div}2) AS BIGINT)
         AS tau_a_ppm
     FROM tot t CROSS JOIN pairs p
     """
@@ -227,8 +218,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _mcnemar_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _mcnemar_sql(dialect: Dialect) -> str:
     return f"""
     WITH cust AS (
       SELECT o_custkey,
@@ -247,11 +237,11 @@ def _mcnemar_sql(dialect: str) -> str:
       CAST(CASE WHEN n_97_only + n_98_only = 0 THEN 0
            ELSE ((abs(n_97_only - n_98_only) - 1)
                  * (abs(n_97_only - n_98_only) - 1) * 1000000)
-                {div} (n_97_only + n_98_only) END AS BIGINT) AS chi2_ppm,
+                {dialect.div} (n_97_only + n_98_only) END AS BIGINT) AS chi2_ppm,
       (n_97_only + n_98_only > 0 AND abs(n_97_only - n_98_only) > 1 AND
        ((abs(n_97_only - n_98_only) - 1)
         * (abs(n_97_only - n_98_only) - 1) * 1000000)
-       {div} (n_97_only + n_98_only) > 3841459) AS significant_95
+       {dialect.div} (n_97_only + n_98_only) > 3841459) AS significant_95
     FROM cellsq
     """
 
@@ -276,10 +266,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _cramers_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cramers_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT l_returnflag AS rf, l_linestatus AS ls,
@@ -291,11 +278,11 @@ def _cramers_sql(dialect: str) -> str:
     n AS (SELECT CAST(sum(obs) AS BIGINT) AS n FROM o),
     terms AS (
       SELECT CAST(sum(
-        ((CAST(o.obs AS {big}) * n.n - CAST(rt.rtot AS {big}) * ct.ctot)
-         * (CAST(o.obs AS {big}) * n.n - CAST(rt.rtot AS {big}) * ct.ctot)
+        ((CAST(o.obs AS {dialect.big}) * n.n - CAST(rt.rtot AS {dialect.big}) * ct.ctot)
+         * (CAST(o.obs AS {dialect.big}) * n.n - CAST(rt.rtot AS {dialect.big}) * ct.ctot)
          * 1000000)
-        {div} (CAST(n.n AS {big}) * rt.rtot * ct.ctot)
-      ) AS {big}) AS chi2n_ppm
+        {dialect.div} (CAST(n.n AS {dialect.big}) * rt.rtot * ct.ctot)
+      ) AS {dialect.big}) AS chi2n_ppm
       FROM o JOIN rt ON rt.rf = o.rf JOIN ct ON ct.ls = o.ls
       CROSS JOIN n
     )
@@ -308,7 +295,7 @@ def _cramers_sql(dialect: str) -> str:
       -- 2-level min-dim) as "chi2" and chi2/n² as "v2".  V² divides
       -- by n·(min(r,c) − 1).
       CAST(t.chi2n_ppm AS BIGINT) AS chi2_ppm,
-      CAST(t.chi2n_ppm {div} (CAST(n.n AS {big})
+      CAST(t.chi2n_ppm {dialect.div} (CAST(n.n AS {dialect.big})
            * (least((SELECT count(*) FROM rt),
                     (SELECT count(*) FROM ct)) - 1)) AS BIGINT)
         AS v2_ppm
@@ -337,10 +324,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _grubbs_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _grubbs_sql(dialect: Dialect) -> str:
     return f"""
     WITH d AS (
       SELECT date_trunc('day', o_orderdate) AS day,
@@ -349,14 +333,14 @@ def _grubbs_sql(dialect: str) -> str:
       FROM orders GROUP BY date_trunc('day', o_orderdate)
     ),
     st AS (
-      SELECT CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(rev AS {big})) AS {big}) AS s,
-        CAST(sum(CAST(rev AS {big}) * rev) AS {big}) AS q
+      SELECT CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(rev AS {dialect.big})) AS {dialect.big}) AS s,
+        CAST(sum(CAST(rev AS {dialect.big}) * rev) AS {dialect.big}) AS q
       FROM d
     ),
     dev AS (
       SELECT day, rev,
-        CAST(rev AS {big}) * st.n - st.s AS a,
+        CAST(rev AS {dialect.big}) * st.n - st.s AS a,
         st.n AS n, st.s AS s, st.q AS q
       FROM d CROSS JOIN st
     ),
@@ -366,7 +350,7 @@ def _grubbs_sql(dialect: str) -> str:
       FROM dev
     )
     SELECT day, rev AS revenue_cents,
-      CAST((a * a * (n - 1) * 1000000) {div} (n * (n * q - s * s))
+      CAST((a * a * (n - 1) * 1000000) {dialect.div} (n * (n * q - s * s))
            AS BIGINT) AS g2_ppm,
       (a * a * (n - 1) > 16 * n * (n * q - s * s)) AS outlier_4sigma
     FROM top WHERE rn = 1

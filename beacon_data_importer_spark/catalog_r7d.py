@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401 (dialect-shared SQL)
 
-from .catalog import query, sql_query
+from .catalog import DUCK, Dialect, query, sql_query
 from .catalog_r2 import _duck_hash64
 from .sources.parquet import read_table
 
@@ -58,12 +58,9 @@ def _spark_hash64(expr: str, seed: int = 0) -> str:
 _CUPED_SEED = 13
 
 
-def _cuped_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    h = (_spark_hash64 if spark else _duck_hash64)(
-        "CAST(o_custkey AS VARCHAR)" if not spark
+def _cuped_sql(dialect: Dialect) -> str:
+    h = (_spark_hash64 if dialect.spark else _duck_hash64)(
+        "CAST(o_custkey AS VARCHAR)" if not dialect.spark
         else "CAST(o_custkey AS STRING)",
         seed=_CUPED_SEED,
     )
@@ -73,19 +70,19 @@ def _cuped_sql(dialect: str) -> str:
         CAST({h} % 2 AS INT) AS grp,
         CAST(sum(CASE WHEN year(o_orderdate) = 1997
                  THEN CAST(round(o_totalprice * 100) AS BIGINT)
-                 ELSE 0 END) {div} 1000 AS BIGINT) AS x,
+                 ELSE 0 END) {dialect.div} 1000 AS BIGINT) AS x,
         CAST(sum(CASE WHEN year(o_orderdate) = 1998
                  THEN CAST(round(o_totalprice * 100) AS BIGINT)
-                 ELSE 0 END) {div} 1000 AS BIGINT) AS y
+                 ELSE 0 END) {dialect.div} 1000 AS BIGINT) AS y
       FROM orders GROUP BY o_custkey
     ),
     mom AS (
-      SELECT CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS syy,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS sxy
+      SELECT CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS syy,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS sxy
       FROM cust
     ),
     grps AS (
@@ -106,17 +103,17 @@ def _cuped_sql(dialect: str) -> str:
     SELECT CAST(m.n AS BIGINT) AS n_units,
       w.nt AS n_treat, w.nc AS n_control,
       CAST(((m.n * m.sxy - m.sx * m.sy) * 1000000)
-           {div} (m.n * m.sxx - m.sx * m.sx) AS BIGINT) AS theta_ppm,
+           {dialect.div} (m.n * m.sxx - m.sx * m.sx) AS BIGINT) AS theta_ppm,
       CAST((((m.n * m.sxy - m.sx * m.sy) * (m.n * m.sxy - m.sx * m.sy)
-             {div} (m.n * m.sxx - m.sx * m.sx)) * 1000000)
-           {div} (m.n * m.syy - m.sy * m.sy) AS BIGINT) AS rho2_ppm,
-      CAST((w.syt * 1000000) {div} w.nt
-           - (w.syc * 1000000) {div} w.nc AS BIGINT) AS naive_diff_e6,
-      CAST((w.syt * 1000000) {div} w.nt - (w.syc * 1000000) {div} w.nc
+             {dialect.div} (m.n * m.sxx - m.sx * m.sx)) * 1000000)
+           {dialect.div} (m.n * m.syy - m.sy * m.sy) AS BIGINT) AS rho2_ppm,
+      CAST((w.syt * 1000000) {dialect.div} w.nt
+           - (w.syc * 1000000) {dialect.div} w.nc AS BIGINT) AS naive_diff_e6,
+      CAST((w.syt * 1000000) {dialect.div} w.nt - (w.syc * 1000000) {dialect.div} w.nc
         - ((((m.n * m.sxy - m.sx * m.sy) * 1000000)
-            {div} (m.n * m.sxx - m.sx * m.sx))
-           * ((w.sxt * 1000000) {div} w.nt
-              - (w.sxc * 1000000) {div} w.nc)) {div} 1000000
+            {dialect.div} (m.n * m.sxx - m.sx * m.sx))
+           * ((w.sxt * 1000000) {dialect.div} w.nt
+              - (w.sxc * 1000000) {dialect.div} w.nc)) {dialect.div} 1000000
         AS BIGINT) AS cuped_diff_e6
     FROM mom m CROSS JOIN wide w
     """
@@ -154,12 +151,9 @@ sql_query(
 _SRM_SEED = 29
 
 
-def _srm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    h = (_spark_hash64 if spark else _duck_hash64)(
-        "CAST(o_orderkey AS VARCHAR)" if not spark
+def _srm_sql(dialect: Dialect) -> str:
+    h = (_spark_hash64 if dialect.spark else _duck_hash64)(
+        "CAST(o_orderkey AS VARCHAR)" if not dialect.spark
         else "CAST(o_orderkey AS STRING)",
         seed=_SRM_SEED,
     )
@@ -174,9 +168,9 @@ def _srm_sql(dialect: str) -> str:
       FROM assign
     )
     SELECT n, n_a, n_b,
-      CAST((CAST(2 * n_a - n AS {big}) * (2 * n_a - n) * 1000000)
-           {div} n AS BIGINT) AS chi2_ppm,
-      ((CAST(2 * n_a - n AS {big}) * (2 * n_a - n) * 1000000) {div} n
+      CAST((CAST(2 * n_a - n AS {dialect.big}) * (2 * n_a - n) * 1000000)
+           {dialect.div} n AS BIGINT) AS chi2_ppm,
+      ((CAST(2 * n_a - n AS {dialect.big}) * (2 * n_a - n) * 1000000) {dialect.div} n
        > 10827566) AS srm_flag
     FROM counts
     """
@@ -204,9 +198,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _winsor_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _winsor_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT c.c_mktsegment AS seg, o.o_orderkey AS k,
@@ -221,8 +213,8 @@ def _winsor_sql(dialect: str) -> str:
     ),
     cuts AS (
       SELECT seg,
-        max(CASE WHEN rn = (5 * n + 99) {div} 100 THEN v END) AS lo,
-        max(CASE WHEN rn = (95 * n) {div} 100 + 1 THEN v END) AS hi,
+        max(CASE WHEN rn = (5 * n + 99) {dialect.div} 100 THEN v END) AS lo,
+        max(CASE WHEN rn = (95 * n) {dialect.div} 100 + 1 THEN v END) AS hi,
         max(n) AS n
       FROM ranked GROUP BY seg
     )
@@ -230,8 +222,8 @@ def _winsor_sql(dialect: str) -> str:
       c.lo AS lo_cents, c.hi AS hi_cents,
       CAST((sum(CASE WHEN r.v < c.lo THEN c.lo
                      WHEN r.v > c.hi THEN c.hi ELSE r.v END) * 10000)
-           {div} c.n AS BIGINT) AS winsorized_mean_microdollars,
-      CAST((sum(r.v) * 10000) {div} c.n AS BIGINT)
+           {dialect.div} c.n AS BIGINT) AS winsorized_mean_microdollars,
+      CAST((sum(r.v) * 10000) {dialect.div} c.n AS BIGINT)
         AS raw_mean_microdollars
     FROM ranked r JOIN cuts c ON c.seg = r.seg
     GROUP BY r.seg, c.n, c.lo, c.hi
@@ -240,7 +232,7 @@ def _winsor_sql(dialect: str) -> str:
 
 @query(
     "winsorized_mean_revenue",
-    oracle=_winsor_sql("duck"),
+    oracle=_winsor_sql(DUCK),
 )
 def q_winsorized_mean_revenue(
     spark: SparkSession, sf_dir: str

@@ -23,7 +23,7 @@ Reference parity: beyond-reference statistics/ML tiers.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -34,21 +34,18 @@ _WELCH_A = "BUILDING"
 _WELCH_B = "MACHINERY"
 
 
-def _welch_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _welch_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT c.c_mktsegment AS seg,
-        CAST(round(o.o_totalprice * 100) AS BIGINT){div}1000 AS v
+        CAST(round(o.o_totalprice * 100) AS BIGINT){dialect.div}1000 AS v
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       WHERE c.c_mktsegment IN ('{_WELCH_A}', '{_WELCH_B}')
     ),
     m AS (
-      SELECT seg, CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(v AS {big})) AS {big}) AS s,
-        CAST(sum(CAST(v AS {big}) * v) AS {big}) AS q
+      SELECT seg, CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(v AS {dialect.big})) AS {dialect.big}) AS s,
+        CAST(sum(CAST(v AS {dialect.big}) * v) AS {dialect.big}) AS q
       FROM o GROUP BY seg
     ),
     wide AS (
@@ -64,18 +61,18 @@ def _welch_sql(dialect: str) -> str:
     parts AS (
       SELECT
         CAST(n1 AS BIGINT) AS n_a, CAST(n2 AS BIGINT) AS n_b,
-        (s1 * 1000000){div}n1 - (s2 * 1000000){div}n2 AS diff_e6,
-        ((n1 * q1 - s1 * s1) * 1000000){div}(n1 * n1 * (n1 - 1))
+        (s1 * 1000000){dialect.div}n1 - (s2 * 1000000){dialect.div}n2 AS diff_e6,
+        ((n1 * q1 - s1 * s1) * 1000000){dialect.div}(n1 * n1 * (n1 - 1))
           AS v1n1_e6,
-        ((n2 * q2 - s2 * s2) * 1000000){div}(n2 * n2 * (n2 - 1))
+        ((n2 * q2 - s2 * s2) * 1000000){dialect.div}(n2 * n2 * (n2 - 1))
           AS v2n2_e6
       FROM wide
     )
     SELECT n_a, n_b,
       CAST(diff_e6 AS BIGINT) AS mean_diff_e6,
-      CAST((CAST(diff_e6 AS {big}) * diff_e6)
-           {div} (v1n1_e6 + v2n2_e6) AS BIGINT) AS t2_ppm,
-      ((CAST(diff_e6 AS {big}) * diff_e6) {div} (v1n1_e6 + v2n2_e6)
+      CAST((CAST(diff_e6 AS {dialect.big}) * diff_e6)
+           {dialect.div} (v1n1_e6 + v2n2_e6) AS BIGINT) AS t2_ppm,
+      ((CAST(diff_e6 AS {dialect.big}) * diff_e6) {dialect.div} (v1n1_e6 + v2n2_e6)
        > 3841600) AS significant_95
     FROM parts
     """
@@ -104,8 +101,7 @@ sql_query(
 _KAPPA_PRICE_C = 15_000_000  # $150k in cents — "expensive" threshold
 
 
-def _kappa_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _kappa_sql(dialect: Dialect) -> str:
     return f"""
     WITH rated AS (
       SELECT
@@ -125,16 +121,16 @@ def _kappa_sql(dialect: str) -> str:
     ),
     probs AS (
       SELECT n, n11, n10, n01, n00,
-        ((n11 + n00) * 1000000){div}n AS po_ppm,
-        ((n11 + n10) * (n11 + n01)){div}n AS e11,
-        ((n01 + n00) * (n10 + n00)){div}n AS e00
+        ((n11 + n00) * 1000000){dialect.div}n AS po_ppm,
+        ((n11 + n10) * (n11 + n01)){dialect.div}n AS e11,
+        ((n01 + n00) * (n10 + n00)){dialect.div}n AS e00
       FROM cells
     )
     SELECT n AS n_orders, n11, n10, n01, n00,
       CAST(po_ppm AS BIGINT) AS po_ppm,
-      CAST(((e11 + e00) * 1000000){div}n AS BIGINT) AS pe_ppm,
-      CAST(((po_ppm - ((e11 + e00) * 1000000){div}n) * 1000000)
-           {div} (1000000 - ((e11 + e00) * 1000000){div}n) AS BIGINT)
+      CAST(((e11 + e00) * 1000000){dialect.div}n AS BIGINT) AS pe_ppm,
+      CAST(((po_ppm - ((e11 + e00) * 1000000){dialect.div}n) * 1000000)
+           {dialect.div} (1000000 - ((e11 + e00) * 1000000){dialect.div}n) AS BIGINT)
         AS kappa_ppm
     FROM probs
     """

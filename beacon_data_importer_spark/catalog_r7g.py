@@ -39,14 +39,8 @@ from statistics import NormalDist
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import DUCK, Dialect, query, sql_query
+from .sources.parquet import register_views
 
 
 # ---------------------------------------------------------------------------
@@ -54,11 +48,11 @@ from .sources.parquet import register_views as _views  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-def _stl_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _stl_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
-      SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
+      SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)
+          AS ym,
         month(o_orderdate) AS mo,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
           AS rev
@@ -77,7 +71,7 @@ def _stl_sql(dialect: str) -> str:
     t AS (
       SELECT ym, mo, rev,
         CASE WHEN x6p IS NOT NULL AND x6f IS NOT NULL AND c11 = 11
-             THEN (x6p + 2 * s11 + x6f){div}24 END AS trend
+             THEN (x6p + 2 * s11 + x6f){dialect.div}24 END AS trend
       FROM w
     ),
     s AS (
@@ -85,7 +79,7 @@ def _stl_sql(dialect: str) -> str:
         CASE WHEN count(trend) = 0 THEN NULL
              ELSE CAST(sum(CASE WHEN trend IS NOT NULL
                            THEN rev - trend END)
-                       AS BIGINT){div}count(trend) END AS seasonal
+                       AS BIGINT){dialect.div}count(trend) END AS seasonal
       FROM t GROUP BY mo
     )
     SELECT t.ym, t.rev AS revenue_cents,
@@ -233,7 +227,7 @@ def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two shuffles to the 25-row test table; everything after is
     bounded."""
-    _views(spark, sf_dir, "orders", "lineitem", "customer")
+    register_views(spark, sf_dir, "orders", "lineitem", "customer")
     return spark.sql(_holm_sql())
 
 
@@ -242,14 +236,11 @@ def q_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _levene_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _levene_sql(dialect: Dialect) -> str:
     return f"""
     WITH x AS (
       SELECT l_returnflag AS g,
-        CAST(round(l_extendedprice * 100) AS BIGINT){div}100 AS v,
+        CAST(round(l_extendedprice * 100) AS BIGINT){dialect.div}100 AS v,
         l_orderkey AS ok, l_linenumber AS ln, l_partkey AS pk
       FROM lineitem
     ),
@@ -260,7 +251,7 @@ def _levene_sql(dialect: str) -> str:
       FROM x
     ),
     med AS (
-      SELECT g, max(CASE WHEN rn = (ng + 1){div}2 THEN v END) AS medv
+      SELECT g, max(CASE WHEN rn = (ng + 1){dialect.div}2 THEN v END) AS medv
       FROM ranked GROUP BY g
     ),
     z AS (
@@ -268,23 +259,23 @@ def _levene_sql(dialect: str) -> str:
       FROM x JOIN med m ON m.g = x.g
     ),
     grp AS (
-      SELECT g, CAST(count(*) AS {big}) AS n,
-        CAST(sum(CAST(z AS {big})) AS {big}) AS s,
-        CAST(sum(CAST(z AS {big}) * z) AS {big}) AS q
+      SELECT g, CAST(count(*) AS {dialect.big}) AS n,
+        CAST(sum(CAST(z AS {dialect.big})) AS {dialect.big}) AS s,
+        CAST(sum(CAST(z AS {dialect.big}) * z) AS {dialect.big}) AS q
       FROM z GROUP BY g
     ),
     tot AS (
-      SELECT CAST(sum(n) AS {big}) AS nt, CAST(sum(s) AS {big}) AS st,
+      SELECT CAST(sum(n) AS {dialect.big}) AS nt, CAST(sum(s) AS {dialect.big}) AS st,
         CAST(count(*) AS BIGINT) AS k,
-        CAST(sum(q - (s * s){div}n) AS {big}) AS ssw
+        CAST(sum(q - (s * s){dialect.div}n) AS {dialect.big}) AS ssw
       FROM grp
     ),
     ssb AS (
       SELECT CAST(sum(
-        ((g.s * 1000){div}g.n - (t.st * 1000){div}t.nt)
-        * ((g.s * 1000){div}g.n - (t.st * 1000){div}t.nt)
+        ((g.s * 1000){dialect.div}g.n - (t.st * 1000){dialect.div}t.nt)
+        * ((g.s * 1000){dialect.div}g.n - (t.st * 1000){dialect.div}t.nt)
         * g.n
-      ) AS {big}) AS ssb_e6
+      ) AS {dialect.big}) AS ssb_e6
       FROM grp g CROSS JOIN tot t
     )
     SELECT CAST(t.nt AS BIGINT) AS n_items, t.k AS n_groups,
@@ -292,11 +283,11 @@ def _levene_sql(dialect: str) -> str:
       -- ssw*1e6 sit on the SAME e6 scale, so the old quotient was the
       -- plain truncated F (≈2), not ppm — the 2995732 gate could
       -- never fire.  Scale the numerator by 1e6 before dividing.
-      CAST((CAST(b.ssb_e6{div}(t.k - 1) AS {big}) * 1000000)
-           {div} ((t.ssw * 1000000){div}(t.nt - t.k)) AS BIGINT)
+      CAST((CAST(b.ssb_e6{dialect.div}(t.k - 1) AS {dialect.big}) * 1000000)
+           {dialect.div} ((t.ssw * 1000000){dialect.div}(t.nt - t.k)) AS BIGINT)
         AS f_ppm,
-      ((CAST(b.ssb_e6{div}(t.k - 1) AS {big}) * 1000000)
-       {div} ((t.ssw * 1000000){div}(t.nt - t.k)) > 2995732)
+      ((CAST(b.ssb_e6{dialect.div}(t.k - 1) AS {dialect.big}) * 1000000)
+       {dialect.div} ((t.ssw * 1000000){dialect.div}(t.nt - t.k)) > 2995732)
         AS significant_95
     FROM tot t CROSS JOIN ssb b
     """
@@ -371,7 +362,7 @@ def _levene_spark_hist_sql() -> str:
 
 @query(
     "levene_test",
-    oracle=_levene_sql("duck"),
+    oracle=_levene_sql(DUCK),
 )
 def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe variance-homogeneity test across the three
@@ -392,7 +383,7 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (g, dollar) count frame instead of a per-row ranking window
     over the full stream; bit-identical exact integers, and the one
     volume-bearing stage map-side combines."""
-    _views(spark, sf_dir, "lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_levene_spark_hist_sql())
 
 
@@ -401,8 +392,7 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _friedman_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _friedman_sql(dialect: Dialect) -> str:
     return f"""
     WITH cells AS (
       SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS ym,
@@ -432,9 +422,9 @@ def _friedman_sql(dialect: str) -> str:
       FROM sums
     )
     SELECT n AS n_blocks, k AS n_treatments,
-      CAST((12 * sr2 * 1000000){div}(n * k * (k + 1))
+      CAST((12 * sr2 * 1000000){dialect.div}(n * k * (k + 1))
            - 3 * n * (k + 1) * 1000000 AS BIGINT) AS chi2_ppm,
-      ((12 * sr2 * 1000000){div}(n * k * (k + 1))
+      ((12 * sr2 * 1000000){dialect.div}(n * k * (k + 1))
        - 3 * n * (k + 1) * 1000000 > 9487729) AS significant_95
     FROM stat
     """

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query
+from .catalog import DUCK, SPARK, Dialect, query
 from .sources.parquet import read_table
 
 _MRA_CHANNELS = ("click", "error", "signup", "view")
@@ -45,8 +45,7 @@ _MRA_ITERS = 30
 
 #: Shared transition-matrix SQL — identical text in both engines (the
 #: only dialect token is integer division in the ppm normalization).
-def _mra_matrix_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _mra_matrix_sql(dialect: Dialect) -> str:
     return f"""
     ev AS (
       SELECT user_id, ts, event_id,
@@ -92,7 +91,7 @@ def _mra_matrix_sql(dialect: str) -> str:
     outc AS (SELECT src, CAST(sum(c) AS BIGINT) AS oc FROM cnt GROUP BY src),
     tmat AS (
       SELECT c.src, c.dst,
-        CAST((c.c * 1000000){div}o.oc AS BIGINT) AS p_ppm
+        CAST((c.c * 1000000){dialect.div}o.oc AS BIGINT) AS p_ppm
       FROM cnt c JOIN outc o ON o.src = c.src
     )"""
 
@@ -116,7 +115,7 @@ def _mra_oracle() -> str:
       LEFT JOIN cv ON cv.scenario = st.scenario AND cv.src = st.state
     )""")
     return f"""
-    WITH {_mra_matrix_sql("duck")},
+    WITH {_mra_matrix_sql(DUCK)},
     scen AS (
       SELECT 'base' AS scenario
       UNION ALL SELECT ch FROM (VALUES {ch}) v(ch)
@@ -196,7 +195,7 @@ def q_markov_removal_attribution(
     Reference parity: beyond-reference attribution tier."""
     read_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     tmat = spark.sql(
-        "WITH " + _mra_matrix_sql("spark") + " SELECT * FROM tmat"
+        "WITH " + _mra_matrix_sql(SPARK) + " SELECT * FROM tmat"
     ).collect()
     # Schema-drift guard (ADVICE r7): the state space is a SCHEMA
     # constant baked into both this loop and the oracle's VALUES

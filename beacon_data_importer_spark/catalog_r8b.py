@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import query
+from .catalog import DUCK, SPARK, Dialect, query
 from .catalog_r6b import _HOLT_BASE_SQL
 from .sources.parquet import read_table
 
@@ -52,7 +52,7 @@ _HW_H = 12           # forecast horizon, months
 _ONE = 1_000_000
 
 
-def _hw_sql(dialect: str) -> str:
+def _hw_sql(dialect: Dialect) -> str:
     """Holt-Winters additive recursion for one dialect.  Identical
     structure in both engines (array-carry is load-bearing — see
     module docstring); only the list/array function names, the
@@ -65,12 +65,9 @@ def _hw_sql(dialect: str) -> str:
       bₜ = (β(lₜ − l) + (1−β)b) div 1e6
       sₜ = (γ(yₜ − lₜ) + (1−γ)s_old) div 1e6
     with s_old the ring head and the ring rotated each step."""
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
     a, b1, g, one, m = _HW_ALPHA, _HW_BETA, _HW_GAMMA, _ONE, _HW_M
 
-    if spark:
+    if dialect.spark:
         ys_agg = "transform(array_sort(collect_list(struct(t, y_c))), x -> x.y_c)"
         def lsum(lo: int) -> str:
             return (
@@ -84,7 +81,6 @@ def _hw_sql(dialect: str) -> str:
         s_init = "transform(slice(ys, 1, 12), y -> y - l0)"
         append = "concat({ring}, array({x}))"
         size = "size"
-        hseries = f"SELECT explode(sequence(1, {_HW_H})) AS h"
     else:
         ys_agg = "list(y_c ORDER BY t)"
         def lsum(lo: int) -> str:
@@ -96,32 +92,32 @@ def _hw_sql(dialect: str) -> str:
         s_init = "list_transform(ys[1:12], y -> y - l0)"
         append = "list_append({ring}, {x})"
         size = "len"
-        hseries = f"SELECT unnest(generate_series(1, {_HW_H})) AS h"
+    hseries = f"SELECT {dialect.series(1, _HW_H)} AS h"
 
     y_t = el("r.rest", "1")
     s_old = el("r.s", "1")
     l_t = (
-        f"CAST(((CAST({a} AS {big}) * ({y_t} - {s_old}))"
-        f" + (CAST({one - a} AS {big}) * (r.l + r.b))){div}{one}"
+        f"CAST(((CAST({a} AS {dialect.big}) * ({y_t} - {s_old}))"
+        f" + (CAST({one - a} AS {dialect.big}) * (r.l + r.b))){dialect.div}{one}"
         " AS BIGINT)"
     )
     b_t = (
-        f"CAST(((CAST({b1} AS {big}) * ({l_t} - r.l))"
-        f" + (CAST({one - b1} AS {big}) * r.b)){div}{one} AS BIGINT)"
+        f"CAST(((CAST({b1} AS {dialect.big}) * ({l_t} - r.l))"
+        f" + (CAST({one - b1} AS {dialect.big}) * r.b)){dialect.div}{one} AS BIGINT)"
     )
     s_t = (
-        f"CAST(((CAST({g} AS {big}) * ({y_t} - {l_t}))"
-        f" + (CAST({one - g} AS {big}) * {s_old})){div}{one} AS BIGINT)"
+        f"CAST(((CAST({g} AS {dialect.big}) * ({y_t} - {l_t}))"
+        f" + (CAST({one - g} AS {dialect.big}) * {s_old})){dialect.div}{one} AS BIGINT)"
     )
     ring = sl("r.s", "2", str(m - 1))
-    base_cte = "" if spark else f"__hw_base AS ({_HOLT_BASE_SQL}),"
+    base_cte = "" if dialect.spark else f"__hw_base AS ({_HOLT_BASE_SQL}),"
     return f"""
     WITH RECURSIVE {base_cte}
     arr AS (SELECT {ys_agg} AS ys FROM __hw_base),
     init AS (
       SELECT ys,
-        CAST(({lsum(1)}){div}{m} AS BIGINT) AS l0,
-        CAST((({lsum(m + 1)}) - ({lsum(1)})){div}{m * m} AS BIGINT) AS b0
+        CAST(({lsum(1)}){dialect.div}{m} AS BIGINT) AS l0,
+        CAST((({lsum(m + 1)}) - ({lsum(1)})){dialect.div}{m * m} AS BIGINT) AS b0
       FROM arr
     ),
     rec(t, l, b, s, rest) AS (
@@ -151,7 +147,7 @@ def _hw_sql(dialect: str) -> str:
 
 @query(
     "holt_winters_seasonal",
-    oracle=_hw_sql("duck"),
+    oracle=_hw_sql(DUCK),
 )
 def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters additive smoothing (level + trend + 12-month
@@ -173,7 +169,7 @@ def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql(f"SELECT * FROM ({_HOLT_BASE_SQL})").createOrReplaceTempView(
         "__hw_base"
     )
-    return spark.sql(_hw_sql("spark"))
+    return spark.sql(_hw_sql(SPARK))
 
 
 # ---------------------------------------------------------------------------

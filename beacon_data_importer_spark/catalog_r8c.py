@@ -33,7 +33,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -47,14 +47,11 @@ from .catalog import sql_query
 _TUKEY_Q2_E6 = 14_884_164
 
 
-def _tukey_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _tukey_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT r.r_name AS grp,
-        CAST(round(ord.o_totalprice * 100) AS BIGINT){div}1000 AS v
+        CAST(round(ord.o_totalprice * 100) AS BIGINT){dialect.div}1000 AS v
       FROM orders ord
       JOIN customer c ON c.c_custkey = ord.o_custkey
       JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -63,30 +60,30 @@ def _tukey_sql(dialect: str) -> str:
     g AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
         CAST(sum(v) AS BIGINT) AS s,
-        CAST(sum(CAST(v AS {big}) * v) AS {big}) AS q
+        CAST(sum(CAST(v AS {dialect.big}) * v) AS {dialect.big}) AS q
       FROM o GROUP BY grp
     ),
     w AS (
       SELECT CAST(sum(n) AS BIGINT) AS n_tot,
         CAST(count(*) AS BIGINT) AS k,
-        CAST(sum((CAST(q AS {big}) * n - CAST(s AS {big}) * s){div}n)
-             AS {big}) AS ssw
+        CAST(sum((CAST(q AS {dialect.big}) * n - CAST(s AS {dialect.big}) * s){dialect.div}n)
+             AS {dialect.big}) AS ssw
       FROM g
     )
-    SELECT {"/*+ BROADCAST(b), BROADCAST(w) */" if spark else ""}
+    SELECT {"/*+ BROADCAST(b), BROADCAST(w) */" if dialect.spark else ""}
       a.grp AS region_a, b.grp AS region_b,
       a.n AS n_a, b.n AS n_b,
-      CAST((a.s * 1000000){div}a.n - (b.s * 1000000){div}b.n AS BIGINT)
+      CAST((a.s * 1000000){dialect.div}a.n - (b.s * 1000000){dialect.div}b.n AS BIGINT)
         AS mean_diff_e6,
-      CAST((CAST(a.s AS {big}) * b.n - CAST(b.s AS {big}) * a.n)
-           * (CAST(a.s AS {big}) * b.n - CAST(b.s AS {big}) * a.n)
-           {div} ((CAST(a.n AS {big}) * b.n) * (a.n + b.n))
+      CAST((CAST(a.s AS {dialect.big}) * b.n - CAST(b.s AS {dialect.big}) * a.n)
+           * (CAST(a.s AS {dialect.big}) * b.n - CAST(b.s AS {dialect.big}) * a.n)
+           {dialect.div} ((CAST(a.n AS {dialect.big}) * b.n) * (a.n + b.n))
            AS BIGINT) AS contrast_stat,
-      (CAST((CAST(a.s AS {big}) * b.n - CAST(b.s AS {big}) * a.n)
-            * (CAST(a.s AS {big}) * b.n - CAST(b.s AS {big}) * a.n)
-            {div} ((CAST(a.n AS {big}) * b.n) * (a.n + b.n)) AS {big})
+      (CAST((CAST(a.s AS {dialect.big}) * b.n - CAST(b.s AS {dialect.big}) * a.n)
+            * (CAST(a.s AS {dialect.big}) * b.n - CAST(b.s AS {dialect.big}) * a.n)
+            {dialect.div} ((CAST(a.n AS {dialect.big}) * b.n) * (a.n + b.n)) AS {dialect.big})
        * 2 * (w.n_tot - w.k) * 1000000
-       > CAST({_TUKEY_Q2_E6} AS {big}) * w.ssw) AS significant
+       > CAST({_TUKEY_Q2_E6} AS {dialect.big}) * w.ssw) AS significant
     FROM g a JOIN g b ON a.grp < b.grp CROSS JOIN w
     """
 
@@ -118,15 +115,12 @@ _MOOD_BUCKET_C = 100_000  # $1000 buckets, in cents
 _MOOD_CHI2_CRIT_E6 = 9_487_729
 
 
-def _mood_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _mood_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT r.r_name AS grp,
         CAST(round(ord.o_totalprice * 100) AS BIGINT)
-          {div}{_MOOD_BUCKET_C} AS vb
+          {dialect.div}{_MOOD_BUCKET_C} AS vb
       FROM orders ord
       JOIN customer c ON c.c_custkey = ord.o_custkey
       JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -141,7 +135,7 @@ def _mood_sql(dialect: str) -> str:
           sum(c) OVER (ORDER BY vb ROWS UNBOUNDED PRECEDING) AS cum,
           (SELECT sum(c) FROM dist) AS tot
         FROM dist
-      ) t WHERE cum >= (tot + 1){div}2
+      ) t WHERE cum >= (tot + 1){dialect.div}2
     ),
     cells AS (
       SELECT grp,
@@ -159,12 +153,12 @@ def _mood_sql(dialect: str) -> str:
     ),
     chi AS (
       SELECT CAST(sum(
-          (CAST(above AS {big}) * t - (above + below) * ca)
-          * (CAST(above AS {big}) * t - (above + below) * ca) * 1000000
-          {div} (CAST(t AS {big}) * (above + below) * ca)
-        + (CAST(below AS {big}) * t - (above + below) * cb)
-          * (CAST(below AS {big}) * t - (above + below) * cb) * 1000000
-          {div} (CAST(t AS {big}) * (above + below) * cb)
+          (CAST(above AS {dialect.big}) * t - (above + below) * ca)
+          * (CAST(above AS {dialect.big}) * t - (above + below) * ca) * 1000000
+          {dialect.div} (CAST(t AS {dialect.big}) * (above + below) * ca)
+        + (CAST(below AS {dialect.big}) * t - (above + below) * cb)
+          * (CAST(below AS {dialect.big}) * t - (above + below) * cb) * 1000000
+          {dialect.div} (CAST(t AS {dialect.big}) * (above + below) * cb)
       ) AS BIGINT) AS chi2_ppm
       FROM cells CROSS JOIN tots
     )
@@ -203,10 +197,7 @@ sql_query(
 _CA_Z2_E6 = 3_841_600
 
 
-def _ca_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ca_sql(dialect: Dialect) -> str:
     return f"""
     WITH y AS (
       SELECT CAST(year(o_orderdate) - 1995 AS BIGINT) AS s,
@@ -226,19 +217,19 @@ def _ca_sql(dialect: str) -> str:
       FROM g
     )
     SELECT nn AS n_orders, rr AS n_urgent,
-      CAST(CAST(nn AS {big}) * sr - CAST(rr AS {big}) * sn AS BIGINT)
+      CAST(CAST(nn AS {dialect.big}) * sr - CAST(rr AS {dialect.big}) * sn AS BIGINT)
         AS trend_num,
-      CAST((CAST(nn AS {big}) * sr - CAST(rr AS {big}) * sn)
-           * (CAST(nn AS {big}) * sr - CAST(rr AS {big}) * sn)
+      CAST((CAST(nn AS {dialect.big}) * sr - CAST(rr AS {dialect.big}) * sn)
+           * (CAST(nn AS {dialect.big}) * sr - CAST(rr AS {dialect.big}) * sn)
            * nn * 1000000
-           {div} (CAST(rr AS {big}) * (nn - rr)
-                  * (CAST(nn AS {big}) * ssn - CAST(sn AS {big}) * sn))
+           {dialect.div} (CAST(rr AS {dialect.big}) * (nn - rr)
+                  * (CAST(nn AS {dialect.big}) * ssn - CAST(sn AS {dialect.big}) * sn))
            AS BIGINT) AS z2_ppm,
-      CAST((CAST(nn AS {big}) * sr - CAST(rr AS {big}) * sn)
-           * (CAST(nn AS {big}) * sr - CAST(rr AS {big}) * sn)
+      CAST((CAST(nn AS {dialect.big}) * sr - CAST(rr AS {dialect.big}) * sn)
+           * (CAST(nn AS {dialect.big}) * sr - CAST(rr AS {dialect.big}) * sn)
            * nn * 1000000
-           {div} (CAST(rr AS {big}) * (nn - rr)
-                  * (CAST(nn AS {big}) * ssn - CAST(sn AS {big}) * sn))
+           {dialect.div} (CAST(rr AS {dialect.big}) * (nn - rr)
+                  * (CAST(nn AS {dialect.big}) * ssn - CAST(sn AS {dialect.big}) * sn))
            AS BIGINT) > {_CA_Z2_E6} AS reject_no_trend
     FROM t
     """
@@ -265,10 +256,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _nb_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _nb_sql(dialect: Dialect) -> str:
     return f"""
     WITH cnt AS (
       SELECT c.c_custkey,
@@ -283,21 +271,21 @@ def _nb_sql(dialect: str) -> str:
       FROM cnt
     )
     SELECT n AS n_customers, sx AS n_orders,
-      CAST((sx * 1000000){div}n AS BIGINT) AS mean_ppm,
-      CAST((CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx) * 1000000
-           {div} (CAST(n AS {big}) * sx) AS BIGINT) AS dispersion_ppm,
-      CAST((CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx) * 1000000
-           {div} (CAST(n AS {big}) * sx) AS BIGINT) > 1000000
+      CAST((sx * 1000000){dialect.div}n AS BIGINT) AS mean_ppm,
+      CAST((CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx) * 1000000
+           {dialect.div} (CAST(n AS {dialect.big}) * sx) AS BIGINT) AS dispersion_ppm,
+      CAST((CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx) * 1000000
+           {dialect.div} (CAST(n AS {dialect.big}) * sx) AS BIGINT) > 1000000
         AS overdispersed,
-      CASE WHEN CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx
-                - CAST(n AS {big}) * sx > 0
-        THEN CAST((CAST(sx AS {big}) * sx * 1000000)
-             {div} (CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx
-                    - CAST(n AS {big}) * sx) AS BIGINT)
+      CASE WHEN CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx
+                - CAST(n AS {dialect.big}) * sx > 0
+        THEN CAST((CAST(sx AS {dialect.big}) * sx * 1000000)
+             {dialect.div} (CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx
+                    - CAST(n AS {dialect.big}) * sx) AS BIGINT)
         ELSE CAST(NULL AS BIGINT) END AS nb_r_ppm,
-      CASE WHEN CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx > 0
-        THEN CAST((CAST(sx AS {big}) * n * 1000000)
-             {div} (CAST(n AS {big}) * sxx - CAST(sx AS {big}) * sx)
+      CASE WHEN CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx > 0
+        THEN CAST((CAST(sx AS {dialect.big}) * n * 1000000)
+             {dialect.div} (CAST(n AS {dialect.big}) * sxx - CAST(sx AS {dialect.big}) * sx)
              AS BIGINT)
         ELSE CAST(NULL AS BIGINT) END AS nb_p_ppm
     FROM s
@@ -326,15 +314,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _weibull_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    datediff = (
-        "datediff(l.l_shipdate, o.o_orderdate)"
-        if spark
-        else "datediff('day', o.o_orderdate, l.l_shipdate)"
-    )
+def _weibull_sql(dialect: Dialect) -> str:
+    datediff = dialect.datediff("o.o_orderdate", "l.l_shipdate")
     return f"""
     WITH lat AS (
       SELECT CAST({datediff} AS BIGINT) AS t
@@ -359,19 +340,19 @@ def _weibull_sql(dialect: str) -> str:
       FROM ranked
     ),
     s AS (
-      SELECT CAST(count(*) AS {big}) AS m,
-        CAST(sum(CAST(x AS {big})) AS {big}) AS sx,
-        CAST(sum(CAST(y AS {big})) AS {big}) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS sxy
+      SELECT CAST(count(*) AS {dialect.big}) AS m,
+        CAST(sum(CAST(x AS {dialect.big})) AS {dialect.big}) AS sx,
+        CAST(sum(CAST(y AS {dialect.big})) AS {dialect.big}) AS sy,
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS sxy
       FROM pts
     )
     SELECT CAST(m AS BIGINT) AS n_points,
       CAST((m * sxy - sx * sy) * 1000000
-           {div} (m * sxx - sx * sx) AS BIGINT) AS shape_ppm,
+           {dialect.div} (m * sxx - sx * sx) AS BIGINT) AS shape_ppm,
       CAST((sy - ((m * sxy - sx * sy) * 1000000
-                  {div} (m * sxx - sx * sx)) * sx{div}1000000)
-           {div} m AS BIGINT) AS intercept_e6
+                  {dialect.div} (m * sxx - sx * sx)) * sx{dialect.div}1000000)
+           {dialect.div} m AS BIGINT) AS intercept_e6
     FROM s
     """
 

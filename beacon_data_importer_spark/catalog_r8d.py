@@ -43,14 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
+from .sources.parquet import register_views
 
 
 # ---------------------------------------------------------------------------
@@ -58,20 +52,15 @@ from .sources.parquet import register_views as _views  # noqa: E402
 # ---------------------------------------------------------------------------
 
 
-def _day_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _day_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(o_orderdate, (SELECT min(o_orderdate) FROM orders))"
-        if spark
-        else "datediff('day', (SELECT min(o_orderdate) FROM orders),"
-        " o_orderdate)"
+        dialect.datediff("(SELECT min(o_orderdate) FROM orders)", "o_orderdate")
     )
     return f"""
     day AS (
       SELECT CAST({dd} AS BIGINT) AS t,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-             AS BIGINT){div}100000 AS y
+             AS BIGINT){dialect.div}100000 AS y
       FROM orders GROUP BY 1
     )"""
 
@@ -86,20 +75,9 @@ _COX_STEPS = 4
 _CHI2_DF1_E6 = 3_841_458
 
 
-def _cox_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    dd = (
-        "datediff(l.l_shipdate, o.o_orderdate)"
-        if spark
-        else "datediff('day', o.o_orderdate, l.l_shipdate)"
-    )
-    grid = (
-        f"SELECT explode(sequence(1, {_COX_HORIZON})) AS t"
-        if spark
-        else f"SELECT unnest(generate_series(1, {_COX_HORIZON})) AS t"
-    )
+def _cox_sql(dialect: Dialect) -> str:
+    dd = dialect.datediff("o.o_orderdate", "l.l_shipdate")
+    grid = f"SELECT {dialect.series(1, _COX_HORIZON)} AS t"
     h = _COX_HORIZON
 
     def score(prev: str) -> str:
@@ -110,13 +88,13 @@ def _cox_sql(dialect: str) -> str:
         return f"""(
       SELECT
         CAST(sum(d1 * 1000000
-          - (CAST(d0 + d1 AS {big}) * n1 * p.w * 1000000)
-            {div} (CAST(n0 AS {big}) * 1000000 + n1 * p.w)) AS {big}) AS u,
+          - (CAST(d0 + d1 AS {dialect.big}) * n1 * p.w * 1000000)
+            {dialect.div} (CAST(n0 AS {dialect.big}) * 1000000 + n1 * p.w)) AS {dialect.big}) AS u,
         CAST(sum(
-          (CAST(d0 + d1 AS {big}) * (CAST(n0 AS {big}) * 1000000)
-             * (CAST(n1 AS {big}) * p.w) * 1000000)
-          {div} ((CAST(n0 AS {big}) * 1000000 + n1 * p.w)
-                 * (CAST(n0 AS {big}) * 1000000 + n1 * p.w))) AS {big}) AS i
+          (CAST(d0 + d1 AS {dialect.big}) * (CAST(n0 AS {dialect.big}) * 1000000)
+             * (CAST(n1 AS {dialect.big}) * p.w) * 1000000)
+          {dialect.div} ((CAST(n0 AS {dialect.big}) * 1000000 + n1 * p.w)
+                 * (CAST(n0 AS {dialect.big}) * 1000000 + n1 * p.w))) AS {dialect.big}) AS i
       FROM evd CROSS JOIN {prev} p
     )"""
 
@@ -124,7 +102,7 @@ def _cox_sql(dialect: str) -> str:
     for k in range(1, _COX_STEPS + 1):
         steps.append(f"s{k} AS {score(f'it{k - 1}')}")
         steps.append(
-            f"it{k} AS (SELECT CAST(p.w + (s.u * p.w) {div} s.i AS BIGINT)"
+            f"it{k} AS (SELECT CAST(p.w + (s.u * p.w) {dialect.div} s.i AS BIGINT)"
             f" AS w FROM it{k - 1} p CROSS JOIN s{k} s)"
         )
     newton = ",\n    ".join(steps)
@@ -168,10 +146,10 @@ def _cox_sql(dialect: str) -> str:
     )
     SELECT tot.n_events, tot.n_event_days,
       f.w AS hazard_ratio_ppm,
-      CAST((s0.u * f.w) {div} s0.i AS BIGINT) AS first_step_ppm,
-      CAST((sf.u * sf.u) {div} sf.i AS BIGINT) AS final_score_sq_ppm,
-      CAST((s0.u * s0.u) {div} s0.i AS BIGINT) AS score_chi2_ppm,
-      (s0.u * s0.u) {div} s0.i > {_CHI2_DF1_E6} AS reject_equal_hazard
+      CAST((s0.u * f.w) {dialect.div} s0.i AS BIGINT) AS first_step_ppm,
+      CAST((sf.u * sf.u) {dialect.div} sf.i AS BIGINT) AS final_score_sq_ppm,
+      CAST((s0.u * s0.u) {dialect.div} s0.i AS BIGINT) AS score_chi2_ppm,
+      (s0.u * s0.u) {dialect.div} s0.i > {_CHI2_DF1_E6} AS reject_equal_hazard
     FROM it{_COX_STEPS} f
     CROSS JOIN s1 s0
     CROSS JOIN {score(f"it{_COX_STEPS}")} sf
@@ -180,7 +158,7 @@ def _cox_sql(dialect: str) -> str:
     return days_ctes, newton_part
 
 
-_COX_DUCK_DAYS, _COX_DUCK_NEWTON = _cox_sql("duck")
+_COX_DUCK_DAYS, _COX_DUCK_NEWTON = _cox_sql(DUCK)
 
 
 @query(
@@ -206,8 +184,8 @@ def q_cox_ph_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash matches the oracle's pure-SQL unrolled replay bit-for-bit) —
     the unrolled-SQL form was 33 nested single-partition exchanges for
     what is a 365-number sequential solve (VERDICT r10 item 8)."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    days_ctes, _ = _cox_sql("spark")
+    register_views(spark, sf_dir, "orders", "lineitem")
+    days_ctes, _ = _cox_sql(SPARK)
     evd = spark.sql(f"WITH {days_ctes} SELECT * FROM evd")
     rows = evd.collect()
 
@@ -270,16 +248,9 @@ _LB_LAGS = 10
 _CHI2_DF10_E6 = 18_307_038
 
 
-def _lb_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    lags = (
-        f"SELECT explode(sequence(1, {_LB_LAGS})) AS k"
-        if spark
-        else f"SELECT unnest(generate_series(1, {_LB_LAGS})) AS k"
-    )
-    hint = "/*+ BROADCAST(k) */ " if spark else ""
+def _lb_sql(dialect: Dialect) -> str:
+    lags = f"SELECT {dialect.series(1, _LB_LAGS)} AS k"
+    hint = dialect.broadcast("k")
     return f"""
     WITH {_day_sql(dialect)},
     st AS (
@@ -287,32 +258,32 @@ def _lb_sql(dialect: str) -> str:
       FROM day
     ),
     den AS (
-      SELECT CAST(sum(CAST(st.n * day.y - st.s AS {big})
-                      * (st.n * day.y - st.s)) AS {big}) AS d
+      SELECT CAST(sum(CAST(st.n * day.y - st.s AS {dialect.big})
+                      * (st.n * day.y - st.s)) AS {dialect.big}) AS d
       FROM day CROSS JOIN st
     ),
     ac AS (
       SELECT {hint}k.k AS k, CAST(count(*) AS BIGINT) AS pairs,
-        CAST(sum(CAST(st.n * a.y - st.s AS {big})
-                 * (st.n * b.y - st.s)) AS {big}) AS num
+        CAST(sum(CAST(st.n * a.y - st.s AS {dialect.big})
+                 * (st.n * b.y - st.s)) AS {dialect.big}) AS num
       FROM day a CROSS JOIN ({lags}) k CROSS JOIN st
       JOIN day b ON b.t = a.t + k.k
       GROUP BY k.k
     ),
     rk AS (
       SELECT ac.k, ac.pairs,
-        CAST((ac.num * 1000000) {div} den.d AS BIGINT) AS r_ppm
+        CAST((ac.num * 1000000) {dialect.div} den.d AS BIGINT) AS r_ppm
       FROM ac CROSS JOIN den
     ),
     q AS (
       SELECT CAST((st.n * (st.n + 2)
-          * sum((CAST(rk.r_ppm AS {big}) * rk.r_ppm) {div} (st.n - rk.k)))
-          {div} 1000000 AS BIGINT) AS q_ppm,
+          * sum((CAST(rk.r_ppm AS {dialect.big}) * rk.r_ppm) {dialect.div} (st.n - rk.k)))
+          {dialect.div} 1000000 AS BIGINT) AS q_ppm,
         CAST(max(st.n) AS BIGINT) AS n
       FROM rk CROSS JOIN st GROUP BY st.n
     )
-    SELECT {"/*+ BROADCAST(q) */" if spark else ""}
-      rk.k AS lag, rk.pairs, rk.r_ppm,
+    SELECT {"/*+ BROADCAST(q) */" if dialect.spark else ""}
+      CAST(rk.k AS BIGINT) AS lag, rk.pairs, rk.r_ppm,
       q.n AS n_days, q.q_ppm,
       q.q_ppm > {_CHI2_DF10_E6} AS reject_white_noise
     FROM rk CROSS JOIN q
@@ -343,52 +314,46 @@ sql_query(
 _RESID_SHIFT = 1_000_000_000
 
 
-def _resid_ctes(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _resid_ctes(dialect: Dialect) -> str:
     return f"""
     {_day_sql(dialect)},
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(t) AS BIGINT) AS s_t, CAST(sum(y) AS BIGINT) AS s_y,
-        CAST(sum(CAST(t AS {big}) * t) AS {big}) AS s_tt,
-        CAST(sum(CAST(t AS {big}) * y) AS {big}) AS s_ty
+        CAST(sum(CAST(t AS {dialect.big}) * t) AS {dialect.big}) AS s_tt,
+        CAST(sum(CAST(t AS {dialect.big}) * y) AS {dialect.big}) AS s_ty
       FROM day
     ),
     co AS (
       SELECT n,
-        CAST(n * s_tt - CAST(s_t AS {big}) * s_t AS {big}) AS dd,
-        CAST(n * s_ty - CAST(s_t AS {big}) * s_y AS {big}) AS bb,
-        CAST(s_y * s_tt - CAST(s_t AS {big}) * s_ty AS {big}) AS aa
+        CAST(n * s_tt - CAST(s_t AS {dialect.big}) * s_t AS {dialect.big}) AS dd,
+        CAST(n * s_ty - CAST(s_t AS {dialect.big}) * s_y AS {dialect.big}) AS bb,
+        CAST(s_y * s_tt - CAST(s_t AS {dialect.big}) * s_ty AS {dialect.big}) AS aa
       FROM st
     ),
     e AS (
       SELECT day.t,
         CAST((co.dd * day.y - co.aa - co.bb * day.t)
-             {div} {_RESID_SHIFT} AS BIGINT) AS es
+             {dialect.div} {_RESID_SHIFT} AS BIGINT) AS es
       FROM day CROSS JOIN co
     )"""
 
 
-def _dw_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _dw_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_resid_ctes(dialect)},
     dsum AS (
       SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-        CAST(sum(CAST(b.es - a.es AS {big}) * (b.es - a.es)) AS {big}) AS num
+        CAST(sum(CAST(b.es - a.es AS {dialect.big}) * (b.es - a.es)) AS {dialect.big}) AS num
       FROM e a JOIN e b ON b.t = a.t + 1
     ),
     esum AS (
-      SELECT CAST(sum(CAST(es AS {big}) * es) AS {big}) AS den FROM e
+      SELECT CAST(sum(CAST(es AS {dialect.big}) * es) AS {dialect.big}) AS den FROM e
     )
     SELECT co.n AS n_days, dsum.n_pairs,
-      CAST((co.bb * 1000000) {div} co.dd AS BIGINT) AS slope_ppm,
-      CAST((dsum.num * 1000000) {div} esum.den AS BIGINT) AS dw_ppm,
-      (dsum.num * 1000000) {div} esum.den < 1000000 AS positive_autocorr_side
+      CAST((co.bb * 1000000) {dialect.div} co.dd AS BIGINT) AS slope_ppm,
+      CAST((dsum.num * 1000000) {dialect.div} esum.den AS BIGINT) AS dw_ppm,
+      (dsum.num * 1000000) {dialect.div} esum.den < 1000000 AS positive_autocorr_side
     FROM co CROSS JOIN dsum CROSS JOIN esum
     """
 
@@ -408,31 +373,28 @@ sql_query(
 )
 
 
-def _bp_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bp_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_resid_ctes(dialect)},
     g AS (
       SELECT t,
-        (CAST(es AS {big}) * es) {div} 1000000 AS gv
+        (CAST(es AS {dialect.big}) * es) {dialect.div} 1000000 AS gv
       FROM e
     ),
     gs AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(t) AS BIGINT) AS s_t, CAST(sum(gv) AS {big}) AS s_g,
-        CAST(sum(CAST(t AS {big}) * t) AS {big}) AS s_tt,
-        CAST(sum(CAST(t AS {big}) * gv) AS {big}) AS s_tg,
-        CAST(sum(CAST(gv AS {big}) * gv) AS {big}) AS s_gg
+        CAST(sum(t) AS BIGINT) AS s_t, CAST(sum(gv) AS {dialect.big}) AS s_g,
+        CAST(sum(CAST(t AS {dialect.big}) * t) AS {dialect.big}) AS s_tt,
+        CAST(sum(CAST(t AS {dialect.big}) * gv) AS {dialect.big}) AS s_tg,
+        CAST(sum(CAST(gv AS {dialect.big}) * gv) AS {dialect.big}) AS s_gg
       FROM g
     ),
     r2 AS (
       SELECT n,
         CAST((((n * s_tg - s_t * s_g) * 1000000)
-              {div} (n * s_tt - CAST(s_t AS {big}) * s_t))
+              {dialect.div} (n * s_tt - CAST(s_t AS {dialect.big}) * s_t))
              * (n * s_tg - s_t * s_g)
-             {div} (n * s_gg - s_g * s_g) AS BIGINT) AS r2_ppm
+             {dialect.div} (n * s_gg - s_g * s_g) AS BIGINT) AS r2_ppm
       FROM gs
     )
     SELECT n AS n_days, r2_ppm,
@@ -463,15 +425,12 @@ _JT_BUCKET_C = 1000  # $10 units, in cents
 _Z2_CRIT_E6 = 3_841_458
 
 
-def _jt_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    hint = "/*+ BROADCAST(gg) */ " if spark else ""
+def _jt_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("gg")
     return f"""
     WITH o AS (
       SELECT CAST(year(o_orderdate) AS BIGINT) AS g,
-        CAST(round(o_totalprice * 100) AS BIGINT){div}{_JT_BUCKET_C} AS v
+        CAST(round(o_totalprice * 100) AS BIGINT){dialect.div}{_JT_BUCKET_C} AS v
       FROM orders
     ),
     h AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM o GROUP BY g, v),
@@ -489,17 +448,17 @@ def _jt_sql(dialect: str) -> str:
       FROM grid LEFT JOIN h ON h.g = grid.g AND h.v = grid.v
     ),
     jt AS (
-      SELECT CAST(sum(2 * CAST(b.c AS {big}) * a.cumlt
-                      + CAST(a.c AS {big}) * b.c) AS {big}) AS jt2
+      SELECT CAST(sum(2 * CAST(b.c AS {dialect.big}) * a.cumlt
+                      + CAST(a.c AS {dialect.big}) * b.c) AS {dialect.big}) AS jt2
       FROM cum a JOIN cum b ON a.v = b.v AND a.g < b.g
     ),
     gs AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM o GROUP BY g),
     mv AS (
       SELECT
-        CAST((CAST(sum(n) AS {big}) * sum(n) - sum(CAST(n AS {big}) * n))
-             {div} 2 AS {big}) AS mean2,
-        CAST(CAST(sum(n) AS {big}) * sum(n) * (2 * sum(n) + 3)
-             - sum(CAST(n AS {big}) * n * (2 * n + 3)) AS {big}) AS var72,
+        CAST((CAST(sum(n) AS {dialect.big}) * sum(n) - sum(CAST(n AS {dialect.big}) * n))
+             {dialect.div} 2 AS {dialect.big}) AS mean2,
+        CAST(CAST(sum(n) AS {dialect.big}) * sum(n) * (2 * sum(n) + 3)
+             - sum(CAST(n AS {dialect.big}) * n * (2 * n + 3)) AS {dialect.big}) AS var72,
         CAST(count(*) AS BIGINT) AS k_groups,
         CAST(sum(n) AS BIGINT) AS n_total
       FROM gs
@@ -508,8 +467,8 @@ def _jt_sql(dialect: str) -> str:
       CAST(jt.jt2 AS BIGINT) AS jt2,
       CAST(mv.mean2 AS BIGINT) AS mean2,
       CAST(((jt.jt2 - mv.mean2) * (jt.jt2 - mv.mean2) * 18000000)
-           {div} mv.var72 AS BIGINT) AS z2_ppm,
-      ((jt.jt2 - mv.mean2) * (jt.jt2 - mv.mean2) * 18000000) {div} mv.var72
+           {dialect.div} mv.var72 AS BIGINT) AS z2_ppm,
+      ((jt.jt2 - mv.mean2) * (jt.jt2 - mv.mean2) * 18000000) {dialect.div} mv.var72
         > {_Z2_CRIT_E6} AS monotone_trend,
       jt.jt2 > mv.mean2 AS increasing_side
     FROM jt CROSS JOIN mv

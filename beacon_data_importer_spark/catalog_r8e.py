@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import hashlib
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 DIM = 64
 _JL_DIMS = 16
@@ -60,11 +60,11 @@ _SHORTLIST = 40  # 4k Hamming shortlist before exact re-rank
 # ---------------------------------------------------------------------------
 
 
-def _pack_word(dialect: str, lo: int) -> str:
+def _pack_word(dialect: Dialect, lo: int) -> str:
     """Sign bits of embedding[lo..lo+31] packed into one BIGINT
     (bit j ← dimension lo+j; 32-bit words so no BIGINT sign bit is
     ever touched)."""
-    if dialect == "spark":
+    if dialect.spark:
         return (
             f"aggregate(sequence({lo}, {lo + 31}), CAST(0 AS BIGINT),"
             " (acc, i) -> acc + (CASE WHEN element_at(embedding, i) > 0"
@@ -79,8 +79,8 @@ def _pack_word(dialect: str, lo: int) -> str:
     )
 
 
-def _hamming(dialect: str, a0: str, a1: str, b0: str, b1: str) -> str:
-    if dialect == "spark":
+def _hamming(dialect: Dialect, a0: str, a1: str, b0: str, b1: str) -> str:
+    if dialect.spark:
         return (
             f"CAST(bit_count({a0} ^ {b0}) + bit_count({a1} ^ {b1})"
             " AS BIGINT)"
@@ -91,10 +91,10 @@ def _hamming(dialect: str, a0: str, a1: str, b0: str, b1: str) -> str:
     )
 
 
-def _dot(dialect: str, a: str, b: str) -> str:
+def _dot(dialect: Dialect, a: str, b: str) -> str:
     """Left-to-right sequential dot product (operators/similarity.py
     ordering, so both engines agree bitwise on the double)."""
-    if dialect == "spark":
+    if dialect.spark:
         return (
             f"aggregate(zip_with({a}, {b},"
             " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -103,7 +103,7 @@ def _dot(dialect: str, a: str, b: str) -> str:
     return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
 
 
-def _cos_e6(dialect: str, a: str, b: str) -> str:
+def _cos_e6(dialect: Dialect, a: str, b: str) -> str:
     return (
         f"CAST(floor(1000000 * {_dot(dialect, a, b)}"
         f" / (sqrt({_dot(dialect, a, a)}) * sqrt({_dot(dialect, b, b)})))"
@@ -111,14 +111,14 @@ def _cos_e6(dialect: str, a: str, b: str) -> str:
     )
 
 
-def _norm(dialect: str, v: str) -> str:
+def _norm(dialect: Dialect, v: str) -> str:
     """sqrt of the self-dot — the per-VECTOR factor of _cos_e6's
     denominator, precomputable once per vector instead of once per
     pair (r11 optimization round; guide §1.2 step 2)."""
     return f"sqrt({_dot(dialect, v, v)})"
 
 
-def _cos_e6_pre(dialect: str, a: str, b: str, na: str, nb: str) -> str:
+def _cos_e6_pre(dialect: Dialect, a: str, b: str, na: str, nb: str) -> str:
     """_cos_e6 with precomputed norms: floor(1e6·dot/(na·nb)).
 
     Bit-identical to _cos_e6 — sqrt(dot(v,v)) is the same double
@@ -139,7 +139,7 @@ def _cos_e6_pre(dialect: str, a: str, b: str, na: str, nb: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _bq_packed(dialect: str) -> str:
+def _bq_packed(dialect: Dialect) -> str:
     return f"""packed AS (
       SELECT vec_id, embedding,
         {_pack_word(dialect, 1)} AS w0,
@@ -152,9 +152,8 @@ def _bq_packed(dialect: str) -> str:
     )"""
 
 
-def _bq_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    hint = "/*+ BROADCAST(q) */ " if spark else ""
+def _bq_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("q")
     ham = _hamming(dialect, "p.w0", "p.w1", "q.q0", "q.q1")
     return f"""
     WITH {_bq_packed(dialect)},
@@ -196,13 +195,11 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _bqr_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    hint = "/*+ BROADCAST(q) */ " if spark else ""
-    div = " div " if spark else " // "
+def _bqr_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("q")
     ham = _hamming(dialect, "p.w0", "p.w1", "q.q0", "q.q1")
     cos = _cos_e6(dialect, "emb", "qvec")
-    if spark:
+    if dialect.spark:
         # spark side: per-vector norm computed once in packedn/qsn, the
         # rerank and brute-truth pair stages then pay ONE fold per pair
         # instead of three (r11 round; bit-identical — see _cos_e6_pre).
@@ -257,7 +254,7 @@ def _bqr_sql(dialect: str) -> str:
     )
     SELECT t.query_id,
       CAST(count(r.vec_id) AS BIGINT) AS n_matched,
-      CAST((count(r.vec_id) * 1000000){div}{_TOPK} AS BIGINT) AS recall_ppm
+      CAST((count(r.vec_id) * 1000000){dialect.div}{_TOPK} AS BIGINT) AS recall_ppm
     FROM truth t
     LEFT JOIN rerank r ON r.query_id = t.query_id AND r.vec_id = t.vec_id
     GROUP BY t.query_id
@@ -300,7 +297,7 @@ def _bqr_sql(dialect: str) -> str:
     )
     SELECT t.query_id,
       CAST(count(r.vec_id) AS BIGINT) AS n_matched,
-      CAST((count(r.vec_id) * 1000000){div}{_TOPK} AS BIGINT) AS recall_ppm
+      CAST((count(r.vec_id) * 1000000){dialect.div}{_TOPK} AS BIGINT) AS recall_ppm
     FROM truth t
     LEFT JOIN rerank r ON r.query_id = t.query_id AND r.vec_id = t.vec_id
     GROUP BY t.query_id
@@ -341,24 +338,21 @@ def _jl_plane(p: int) -> list[float]:
 _JL_PLANES = [_jl_plane(p) for p in range(_JL_DIMS)]
 
 
-def _jl_proj(dialect: str) -> str:
+def _jl_proj(dialect: Dialect) -> str:
     """16-element DOUBLE array of plane dot products."""
-    spark = dialect == "spark"
     terms = []
     for p in range(_JL_DIMS):
         lit = "[" + ",".join(str(x) for x in _JL_PLANES[p]) + "]"
-        arr = f"array({lit[1:-1]})" if spark else f"{lit}::DOUBLE[]"
+        arr = f"array({lit[1:-1]})" if dialect.spark else f"{lit}::DOUBLE[]"
         terms.append(_dot(dialect, "embedding", arr))
-    if spark:
+    if dialect.spark:
         return "array(" + ", ".join(terms) + ")"
     return "[" + ", ".join(terms) + "]"
 
 
-def _jl_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    hint = "/*+ BROADCAST(q) */ " if spark else ""
-    div = " div " if spark else " // "
-    if spark:
+def _jl_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("q")
+    if dialect.spark:
         # spark side: per-vector norms (full-dim AND 16-dim sketch)
         # computed once in proj/qs; both pair rankings then pay ONE
         # fold per pair instead of three (r11 round; bit-identical —
@@ -405,7 +399,7 @@ def _jl_sql(dialect: str) -> str:
     )
     SELECT t.query_id,
       CAST(count(r.vec_id) AS BIGINT) AS n_matched,
-      CAST((count(r.vec_id) * 1000000){div}{_TOPK} AS BIGINT) AS recall_ppm
+      CAST((count(r.vec_id) * 1000000){dialect.div}{_TOPK} AS BIGINT) AS recall_ppm
     FROM truth t
     LEFT JOIN sketch r ON r.query_id = t.query_id AND r.vec_id = t.vec_id
     GROUP BY t.query_id
@@ -445,7 +439,7 @@ def _jl_sql(dialect: str) -> str:
     )
     SELECT t.query_id,
       CAST(count(r.vec_id) AS BIGINT) AS n_matched,
-      CAST((count(r.vec_id) * 1000000){div}{_TOPK} AS BIGINT) AS recall_ppm
+      CAST((count(r.vec_id) * 1000000){dialect.div}{_TOPK} AS BIGINT) AS recall_ppm
     FROM truth t
     LEFT JOIN sketch r ON r.query_id = t.query_id AND r.vec_id = t.vec_id
     GROUP BY t.query_id
@@ -475,13 +469,12 @@ sql_query(
 _BAYES_CONV_MIN = 14  # ≥14 purchase events ≈ median user → p near 0.5
 
 
-def _bayes_sql(dialect: str) -> str:
-    spark = dialect == "spark"
+def _bayes_sql(dialect: Dialect) -> str:
 
     def seq(n_expr: str) -> str:
         # duck range is half-open; spark sequence is inclusive
         return (
-            f"sequence(0, {n_expr} - 1)" if spark else f"range(0, {n_expr})"
+            f"sequence(0, {n_expr} - 1)" if dialect.spark else f"range(0, {n_expr})"
         )
 
     # Two SCALAR left folds only: DuckDB's list_reduce mis-evaluates
@@ -490,7 +483,7 @@ def _bayes_sql(dialect: str) -> str:
     # test), so the sum is Horner-rearranged to need just one carried
     # double: Σᵢ Π_{l<i} r_l = 1 + r₀(1 + r₁(1 + …)), a left fold over
     # the REVERSED ratio list.
-    if spark:
+    if dialect.spark:
         t0 = (
             "aggregate(transform({s}, j ->"
             " (CAST(bb_a + j AS DOUBLE)) / CAST(aa_a + bb_a + j AS DOUBLE)),"
@@ -583,14 +576,12 @@ sql_query(
 _RAPPOR_F_PPM = 250_000  # flip probability 1/4 → est = (p̂−f)/(1−2f)
 
 
-def _rappor_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    hint = "/*+ BROADCAST(t) */ " if spark else ""
+def _rappor_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("t")
     coin = (
         "substring(md5(CAST(g.user_id AS STRING) || '|' || g.event_type),"
         " 1, 1) IN ('0', '1', '2', '3')"
-        if spark
+        if dialect.spark
         else "substring(md5(CAST(g.user_id AS VARCHAR) || '|' ||"
         " g.event_type), 1, 1) IN ('0', '1', '2', '3')"
     )
@@ -614,10 +605,10 @@ def _rappor_sql(dialect: str) -> str:
       FROM bits GROUP BY event_type
     )
     SELECT event_type, n_users, reported,
-      ((reported * 1000000){div}n_users - {_RAPPOR_F_PPM}) * 2 AS est_ppm,
-      (true_cnt * 1000000){div}n_users AS true_ppm,
-      ((reported * 1000000){div}n_users - {_RAPPOR_F_PPM}) * 2
-        - (true_cnt * 1000000){div}n_users AS err_ppm
+      ((reported * 1000000){dialect.div}n_users - {_RAPPOR_F_PPM}) * 2 AS est_ppm,
+      (true_cnt * 1000000){dialect.div}n_users AS true_ppm,
+      ((reported * 1000000){dialect.div}n_users - {_RAPPOR_F_PPM}) * 2
+        - (true_cnt * 1000000){dialect.div}n_users AS err_ppm
     FROM rep
     """
 

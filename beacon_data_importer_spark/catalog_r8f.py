@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .catalog_r8d import _day_sql
 
 
@@ -48,10 +48,8 @@ from .catalog_r8d import _day_sql
 # ---------------------------------------------------------------------------
 
 
-def _lm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    if spark:
+def _lm_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         words = "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"
         # [1..size-1] via filter (sequence(1, 0) would run DOWNWARD)
         bigs = (
@@ -101,13 +99,13 @@ def _lm_sql(dialect: str) -> str:
       GROUP BY big.doc_id
     )
     SELECT doc_id, n_bigrams, nll_e6,
-      nll_e6{div}n_bigrams AS avg_nll_e6
+      nll_e6{dialect.div}n_bigrams AS avg_nll_e6
     FROM scored
     """
     return tok_sql, rest
 
 
-_LM_DUCK_TOK, _LM_DUCK_REST = _lm_sql("duck")
+_LM_DUCK_TOK, _LM_DUCK_REST = _lm_sql(DUCK)
 
 
 @query(
@@ -136,7 +134,7 @@ def q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .catalog_ext import _docs_parallel
 
     _docs_parallel(spark, sf_dir).createOrReplaceTempView("documents")
-    tok_sql, rest = _lm_sql("spark")
+    tok_sql, rest = _lm_sql(SPARK)
     # The token-array frame feeds the bigram stream TWICE (LM training
     # groupBys + per-doc scoring join) and the vocab count once: left
     # as a CTE, Catalyst re-inlines it and the regex tokenization runs
@@ -156,9 +154,7 @@ def q_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PETTITT_LN_E6 = 3_688_879
 
 
-def _pettitt_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _pettitt_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     st AS (SELECT CAST(count(*) AS BIGINT) AS n FROM day),
@@ -184,9 +180,9 @@ def _pettitt_sql(dialect: str) -> str:
     SELECT st.n AS n_days, k.change_day,
       CAST(k.k_stat AS BIGINT) AS k_stat,
       k.u_t > 0 AS level_drop_side,
-      CAST(6 AS {big}) * k.k_stat * k.k_stat * 1000000
-        > CAST({_PETTITT_LN_E6} AS {big})
-          * (CAST(st.n AS {big}) * st.n * st.n + CAST(st.n AS {big}) * st.n)
+      CAST(6 AS {dialect.big}) * k.k_stat * k.k_stat * 1000000
+        > CAST({_PETTITT_LN_E6} AS {dialect.big})
+          * (CAST(st.n AS {dialect.big}) * st.n * st.n + CAST(st.n AS {dialect.big}) * st.n)
         AS reject_no_change
     FROM k CROSS JOIN st
     """
@@ -215,18 +211,16 @@ sql_query(
 _CROSTON_ALPHA_PPM = 100_000  # α = 0.1
 
 
-def _croston_sql(dialect: str) -> str:
+def _croston_sql(dialect: Dialect) -> str:
     """Croston as TWO independent scalar integer folds — the z (size)
     recurrence reads only the demand sizes and the p (interval)
     recurrence only the inter-arrival gaps, so neither needs the
     other's carry.  A WITH RECURSIVE join-per-level formulation was
     measured at ~1.5 s/level in Spark (196 s for 144 demand days); the
     array fold is one job."""
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
     a = _CROSTON_ALPHA_PPM
     na = 1_000_000 - a
-    if spark:
+    if dialect.spark:
         ts_agg = "transform(array_sort(collect_list(struct(t, q))), x -> x.t)"
         qs_agg = "transform(array_sort(collect_list(struct(t, q))), x -> x.q)"
         ivs = (
@@ -241,12 +235,12 @@ def _croston_sql(dialect: str) -> str:
         )
         zfold = (
             f"aggregate(qtail, CAST({head} AS BIGINT),"
-            f" (z, q) -> ({a} * q + {na} * z){div}1000000)"
+            f" (z, q) -> ({a} * q + {na} * z){dialect.div}1000000)"
         )
         pfold = (
             f"aggregate(ivs, p0,"
             f" (p, iv) -> ({a} * (iv * 1000000) + CAST({na} AS BIGINT) * p)"
-            f"{div}1000000)"
+            f"{dialect.div}1000000)"
         )
         kk = "size(qs)"
     else:
@@ -259,19 +253,18 @@ def _croston_sql(dialect: str) -> str:
         sum_iv = "CAST(list_sum(ivs) AS BIGINT)"
         zfold = (
             f"list_reduce(list_prepend(CAST({head} AS BIGINT), qtail),"
-            f" (z, q) -> ({a} * q + {na} * z){div}1000000)"
+            f" (z, q) -> ({a} * q + {na} * z){dialect.div}1000000)"
         )
         pfold = (
             f"list_reduce(list_prepend(p0, ivs),"
             f" (p, iv) -> ({a} * (iv * 1000000) + {na}::BIGINT * p)"
-            f"{div}1000000)"
+            f"{dialect.div}1000000)"
         )
         kk = "len(qs)"
     return f"""
     WITH dem AS (
       SELECT
-        CAST(datediff{"(l.l_shipdate, DATE '1995-01-01')" if spark
-             else "('day', DATE '1995-01-01', l.l_shipdate)"}
+        CAST({dialect.datediff("DATE '1995-01-01'", "l.l_shipdate")}
              AS BIGINT) AS t,
         CAST(sum(CAST(round(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
           AS q
@@ -283,7 +276,7 @@ def _croston_sql(dialect: str) -> str:
     pre AS (SELECT ts, qs, {ivs} AS ivs FROM arr),
     ini AS (
       SELECT ts, qs, ivs, {qtail} AS qtail,
-        CAST(({sum_iv} * 1000000){div}{n_iv} AS BIGINT) AS p0
+        CAST(({sum_iv} * 1000000){dialect.div}{n_iv} AS BIGINT) AS p0
       FROM pre
     ),
     fin AS (
@@ -293,7 +286,7 @@ def _croston_sql(dialect: str) -> str:
       FROM ini
     )
     SELECT demand_days, size_ewma_c, interval_ewma_ppm,
-      CAST((size_ewma_c * 1000000){div}interval_ewma_ppm AS BIGINT)
+      CAST((size_ewma_c * 1000000){dialect.div}interval_ewma_ppm AS BIGINT)
         AS demand_rate_c_per_day
     FROM fin
     """
@@ -333,10 +326,7 @@ _CHI2_DF2_E6 = 5_991_464
 _JB_SHIFT = 1000
 
 
-def _jb_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _jb_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     st AS (
@@ -344,31 +334,31 @@ def _jb_sql(dialect: str) -> str:
       FROM day
     ),
     d AS (
-      SELECT (st.n * day.y - st.s){div}{_JB_SHIFT} AS ds
+      SELECT (st.n * day.y - st.s){dialect.div}{_JB_SHIFT} AS ds
       FROM day CROSS JOIN st
     ),
     m AS (
       SELECT
-        CAST(sum(CAST(ds AS {big}) * ds) AS {big}) AS m2,
-        CAST(sum(CAST(ds AS {big}) * ds * ds) AS {big}) AS m3,
-        CAST(sum(CAST(ds AS {big}) * ds * ds * ds) AS {big}) AS m4
+        CAST(sum(CAST(ds AS {dialect.big}) * ds) AS {dialect.big}) AS m2,
+        CAST(sum(CAST(ds AS {dialect.big}) * ds * ds) AS {dialect.big}) AS m3,
+        CAST(sum(CAST(ds AS {dialect.big}) * ds * ds * ds) AS {dialect.big}) AS m4
       FROM d
     ),
     jb AS (
       SELECT st.n,
-        CAST((((m.m3 * 1000000){div}m.m2) * ((m.m3 * 1000000){div}m.m2))
-             {div}m.m2 * st.n{div}1000000 AS BIGINT) AS skew2_ppm,
-        CAST((m.m4 * st.n * 1000000){div}(m.m2 * m.m2) - 3000000
+        CAST((((m.m3 * 1000000){dialect.div}m.m2) * ((m.m3 * 1000000){dialect.div}m.m2))
+             {dialect.div}m.m2 * st.n{dialect.div}1000000 AS BIGINT) AS skew2_ppm,
+        CAST((m.m4 * st.n * 1000000){dialect.div}(m.m2 * m.m2) - 3000000
              AS BIGINT) AS exkurt_ppm
       FROM m CROSS JOIN st
     )
     SELECT n AS n_days, skew2_ppm, exkurt_ppm,
       CAST(n * (skew2_ppm
-        + (CAST(exkurt_ppm AS {big}) * exkurt_ppm{div}1000000){div}4)
-        {div}6 AS BIGINT) AS jb_ppm,
+        + (CAST(exkurt_ppm AS {dialect.big}) * exkurt_ppm{dialect.div}1000000){dialect.div}4)
+        {dialect.div}6 AS BIGINT) AS jb_ppm,
       n * (skew2_ppm
-        + (CAST(exkurt_ppm AS {big}) * exkurt_ppm{div}1000000){div}4)
-        {div}6 > {_CHI2_DF2_E6} AS reject_normality
+        + (CAST(exkurt_ppm AS {dialect.big}) * exkurt_ppm{dialect.div}1000000){dialect.div}4)
+        {dialect.div}6 > {_CHI2_DF2_E6} AS reject_normality
     FROM jb
     """
 
@@ -398,10 +388,7 @@ _Z2_ONESIDED_E6 = 2_705_543
 _PAGE_K = 12  # treatments = months within a year
 
 
-def _page_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _page_sql(dialect: Dialect) -> str:
     k = _PAGE_K
     return f"""
     WITH m AS (
@@ -426,25 +413,25 @@ def _page_sql(dialect: str) -> str:
       FROM ranked
     )
     SELECT l.b AS n_years, {k} AS k_months, l.l_stat,
-      CAST(l.b * {k} * ({k} + 1) * ({k} + 1){div}4 AS BIGINT) AS l_mean,
-      CAST(((CAST(4 AS {big}) * l.l_stat
-             - CAST(l.b AS {big}) * {k} * ({k} + 1) * ({k} + 1))
-            * (CAST(4 AS {big}) * l.l_stat
-               - CAST(l.b AS {big}) * {k} * ({k} + 1) * ({k} + 1))
+      CAST(l.b * {k} * ({k} + 1) * ({k} + 1){dialect.div}4 AS BIGINT) AS l_mean,
+      CAST(((CAST(4 AS {dialect.big}) * l.l_stat
+             - CAST(l.b AS {dialect.big}) * {k} * ({k} + 1) * ({k} + 1))
+            * (CAST(4 AS {dialect.big}) * l.l_stat
+               - CAST(l.b AS {dialect.big}) * {k} * ({k} + 1) * ({k} + 1))
             * 9 * 1000000)
-        {div} (CAST(l.b AS {big}) * {k} * {k} * ({k} + 1)
+        {dialect.div} (CAST(l.b AS {dialect.big}) * {k} * {k} * ({k} + 1)
                * ({k} * {k} - 1))
         AS BIGINT) AS z2_ppm,
-      ((CAST(4 AS {big}) * l.l_stat
-        - CAST(l.b AS {big}) * {k} * ({k} + 1) * ({k} + 1))
-       * (CAST(4 AS {big}) * l.l_stat
-          - CAST(l.b AS {big}) * {k} * ({k} + 1) * ({k} + 1))
+      ((CAST(4 AS {dialect.big}) * l.l_stat
+        - CAST(l.b AS {dialect.big}) * {k} * ({k} + 1) * ({k} + 1))
+       * (CAST(4 AS {dialect.big}) * l.l_stat
+          - CAST(l.b AS {dialect.big}) * {k} * ({k} + 1) * ({k} + 1))
        * 9 * 1000000)
-        {div} (CAST(l.b AS {big}) * {k} * {k} * ({k} + 1)
+        {dialect.div} (CAST(l.b AS {dialect.big}) * {k} * {k} * ({k} + 1)
                * ({k} * {k} - 1))
         > {_Z2_ONESIDED_E6}
-       AND CAST(4 AS {big}) * l.l_stat
-           > CAST(l.b AS {big}) * {k} * ({k} + 1) * ({k} + 1)
+       AND CAST(4 AS {dialect.big}) * l.l_stat
+           > CAST(l.b AS {dialect.big}) * {k} * ({k} + 1) * ({k} + 1)
         AS monotone_seasonal_trend
     FROM l
     """

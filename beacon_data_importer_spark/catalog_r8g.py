@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, Dialect, query, sql_query
 from .catalog_r8d import _day_sql, _resid_ctes
 from .sources.parquet import read_table
 
@@ -54,31 +54,28 @@ _HITS_ITERS = 3
 _HITS_TOPK = 10
 
 
-def _hits_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hits_sql(dialect: Dialect) -> str:
 
     steps = []
     prev_h = "h0"
     for it in range(1, _HITS_ITERS + 1):
         steps.append(f"""a{it}r AS (
-      SELECT e.p, CAST(sum(h.s) AS {big}) AS raw
+      SELECT e.p, CAST(sum(h.s) AS {dialect.big}) AS raw
       FROM edges e JOIN {prev_h} h ON h.k = e.s GROUP BY e.p
     ),
     a{it} AS (
       SELECT p AS k,
-        CAST((raw * 1000000){div}(SELECT sum(raw) FROM a{it}r)
+        CAST((raw * 1000000){dialect.div}(SELECT sum(raw) FROM a{it}r)
              AS BIGINT) AS s
       FROM a{it}r
     ),
     h{it}r AS (
-      SELECT e.s, CAST(sum(a.s) AS {big}) AS raw
+      SELECT e.s, CAST(sum(a.s) AS {dialect.big}) AS raw
       FROM edges e JOIN a{it} a ON a.k = e.p GROUP BY e.s
     ),
     h{it} AS (
       SELECT s AS k,
-        CAST((raw * 1000000){div}(SELECT sum(raw) FROM h{it}r)
+        CAST((raw * 1000000){dialect.div}(SELECT sum(raw) FROM h{it}r)
              AS BIGINT) AS s
       FROM h{it}r
     )""")
@@ -108,7 +105,7 @@ def _hits_sql(dialect: str) -> str:
 
 @query(
     "hits_hub_authority",
-    oracle=_hits_sql("duck"),
+    oracle=_hits_sql(DUCK),
 )
 def q_hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS over the distinct supplier→part shipment edges: three
@@ -202,15 +199,12 @@ _DUNN_BUCKET_C = 1000  # $10 units, the kruskal_wallis coarsening
 _DUNN_Z2_E6 = 7_879_438
 
 
-def _dunn_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    hint = "/*+ BROADCAST(b), BROADCAST(v) */ " if spark else ""
+def _dunn_sql(dialect: Dialect) -> str:
+    hint = dialect.broadcast("b", "v")
     return f"""
     WITH o AS (
       SELECT r.r_name AS grp,
-        CAST(round(ord.o_totalprice * 100) AS BIGINT){div}{_DUNN_BUCKET_C}
+        CAST(round(ord.o_totalprice * 100) AS BIGINT){dialect.div}{_DUNN_BUCKET_C}
           AS v
       FROM orders ord
       JOIN customer c ON c.c_custkey = ord.o_custkey
@@ -227,29 +221,29 @@ def _dunn_sql(dialect: str) -> str:
     ),
     gsum AS (
       SELECT o.grp, CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(rmap.r2) AS {big}) AS s2
+        CAST(sum(rmap.r2) AS {dialect.big}) AS s2
       FROM o JOIN rmap ON rmap.v = o.v GROUP BY o.grp
     ),
     vpool AS (
       SELECT CAST(sum(c) AS BIGINT) AS nn,
-        CAST(sum(CAST(c AS {big}) * c * c - c) AS {big}) AS ties
+        CAST(sum(CAST(c AS {dialect.big}) * c * c - c) AS {dialect.big}) AS ties
       FROM dist
     ),
     pairs AS (
       SELECT {hint}a.grp AS region_a, b.grp AS region_b,
         a.n AS n_a, b.n AS n_b,
         CAST(((a.s2 * b.n - b.s2 * a.n) * 1000000)
-             {div}(CAST(a.n AS {big}) * b.n) AS BIGINT) AS rank_diff2_ppm,
-        CAST((((CAST(v.nn AS {big}) * (v.nn + 1) * (v.nn - 1) - v.ties)
-               {div}(3 * (v.nn - 1)))
+             {dialect.div}(CAST(a.n AS {dialect.big}) * b.n) AS BIGINT) AS rank_diff2_ppm,
+        CAST((((CAST(v.nn AS {dialect.big}) * (v.nn + 1) * (v.nn - 1) - v.ties)
+               {dialect.div}(3 * (v.nn - 1)))
               * (a.n + b.n) * 1000000)
-             {div}(CAST(a.n AS {big}) * b.n) AS BIGINT) AS var2_ppm
+             {dialect.div}(CAST(a.n AS {dialect.big}) * b.n) AS BIGINT) AS var2_ppm
       FROM gsum a JOIN gsum b ON a.grp < b.grp CROSS JOIN vpool v
     )
     SELECT region_a, region_b, n_a, n_b, rank_diff2_ppm, var2_ppm,
-      CAST((CAST(rank_diff2_ppm AS {big}) * rank_diff2_ppm)
-           {div}var2_ppm AS BIGINT) AS z2_ppm,
-      (CAST(rank_diff2_ppm AS {big}) * rank_diff2_ppm){div}var2_ppm
+      CAST((CAST(rank_diff2_ppm AS {dialect.big}) * rank_diff2_ppm)
+           {dialect.div}var2_ppm AS BIGINT) AS z2_ppm,
+      (CAST(rank_diff2_ppm AS {dialect.big}) * rank_diff2_ppm){dialect.div}var2_ppm
         > {_DUNN_Z2_E6} AS significant_bonferroni
     FROM pairs
     """
@@ -280,14 +274,11 @@ _AB_Z2_E6 = 3_841_458
 _AB_BUCKET_C = 1000
 
 
-def _ab_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ab_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS g,
-        CAST(round(o_totalprice * 100) AS BIGINT){div}{_AB_BUCKET_C} AS v
+        CAST(round(o_totalprice * 100) AS BIGINT){dialect.div}{_AB_BUCKET_C} AS v
       FROM orders
     ),
     dist AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM o GROUP BY v),
@@ -307,7 +298,7 @@ def _ab_sql(dialect: str) -> str:
     ),
     st AS (
       SELECT
-        CAST(sum(CASE WHEN g = 1 THEN s2 ELSE 0 END) AS {big}) AS ab2,
+        CAST(sum(CASE WHEN g = 1 THEN s2 ELSE 0 END) AS {dialect.big}) AS ab2,
         CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
         CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
       FROM sc
@@ -315,24 +306,24 @@ def _ab_sql(dialect: str) -> str:
     mo AS (
       SELECT ab2, n1, n0, n1 + n0 AS n,
         CASE WHEN (n1 + n0) % 2 = 0
-          THEN CAST(n1 AS {big}) * (n1 + n0 + 2){div}2
-          ELSE CAST(n1 AS {big}) * (n1 + n0 + 1) * (n1 + n0 + 1)
-               {div}(2 * (n1 + n0)) END AS mean2,
+          THEN CAST(n1 AS {dialect.big}) * (n1 + n0 + 2){dialect.div}2
+          ELSE CAST(n1 AS {dialect.big}) * (n1 + n0 + 1) * (n1 + n0 + 1)
+               {dialect.div}(2 * (n1 + n0)) END AS mean2,
         CASE WHEN (n1 + n0) % 2 = 0
-          THEN (CAST(n1 AS {big}) * n0 * (n1 + n0 + 2) * (n1 + n0 - 2)
-                * 1000000){div}(12 * (n1 + n0 - 1))
-          ELSE (CAST(n1 AS {big}) * n0 * (n1 + n0 + 1)
-                * (3 + CAST(n1 + n0 AS {big}) * (n1 + n0)) * 1000000)
-               {div}(12 * CAST(n1 + n0 AS {big}) * (n1 + n0)) END
+          THEN (CAST(n1 AS {dialect.big}) * n0 * (n1 + n0 + 2) * (n1 + n0 - 2)
+                * 1000000){dialect.div}(12 * (n1 + n0 - 1))
+          ELSE (CAST(n1 AS {dialect.big}) * n0 * (n1 + n0 + 1)
+                * (3 + CAST(n1 + n0 AS {dialect.big}) * (n1 + n0)) * 1000000)
+               {dialect.div}(12 * CAST(n1 + n0 AS {dialect.big}) * (n1 + n0)) END
           AS var_e6
       FROM st
     )
     SELECT CAST(n1 AS BIGINT) AS n_urgent, CAST(n0 AS BIGINT) AS n_rest,
       CAST(ab2 AS BIGINT) AS ab2_stat, CAST(mean2 AS BIGINT) AS ab2_mean,
       CAST(((ab2 - mean2) * (ab2 - mean2) * 1000000)
-           {div}(var_e6{div}1000000) AS BIGINT) AS z2_ppm,
+           {dialect.div}(var_e6{dialect.div}1000000) AS BIGINT) AS z2_ppm,
       ((ab2 - mean2) * (ab2 - mean2) * 1000000)
-        {div}(var_e6{div}1000000) > {_AB_Z2_E6}
+        {dialect.div}(var_e6{dialect.div}1000000) > {_AB_Z2_E6}
         AS reject_equal_dispersion
     FROM mo
     """
@@ -358,11 +349,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _smk_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    sgn = "sign" if spark else "sign"
+def _smk_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
       SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
@@ -372,7 +359,7 @@ def _smk_sql(dialect: str) -> str:
       FROM orders GROUP BY year(o_orderdate), month(o_orderdate)
     ),
     s AS (
-      SELECT CAST(sum(CAST({sgn}(b.y_c - a.y_c) AS BIGINT)) AS BIGINT)
+      SELECT CAST(sum(CAST(sign(b.y_c - a.y_c) AS BIGINT)) AS BIGINT)
         AS s_stat
       FROM m a JOIN m b ON b.mo = a.mo AND b.yr > a.yr
     ),
@@ -382,9 +369,9 @@ def _smk_sql(dialect: str) -> str:
     )
     SELECT s.s_stat, v.var18,
       CAST(((abs(s.s_stat) - 1) * (abs(s.s_stat) - 1) * 18 * 1000000)
-           {div}CAST(v.var18 AS {big}) AS BIGINT) AS z2_ppm,
+           {dialect.div}CAST(v.var18 AS {dialect.big}) AS BIGINT) AS z2_ppm,
       ((abs(s.s_stat) - 1) * (abs(s.s_stat) - 1) * 18 * 1000000)
-        {div}CAST(v.var18 AS {big}) > {_AB_Z2_E6}
+        {dialect.div}CAST(v.var18 AS {dialect.big}) > {_AB_Z2_E6}
         AND abs(s.s_stat) > 1 AS seasonal_trend,
       s.s_stat > 0 AS increasing_side
     FROM s CROSS JOIN v
@@ -413,23 +400,20 @@ sql_query(
 _COOK_TOPK = 10
 
 
-def _cook_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cook_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_resid_ctes(dialect)},
     sse AS (
-      SELECT CAST(sum(CAST(es AS {big}) * es) AS {big}) AS sse,
+      SELECT CAST(sum(CAST(es AS {dialect.big}) * es) AS {dialect.big}) AS sse,
         CAST(count(*) AS BIGINT) AS n
       FROM e
     ),
     lev AS (
       SELECT e.t, e.es,
-        1000000{div}sse.n
-          + ((CAST(sse.n AS {big}) * e.t - co.s_t2)
-             * (CAST(sse.n AS {big}) * e.t - co.s_t2) * 1000000)
-            {div}(CAST(sse.n AS {big}) * co.dd) AS h_ppm,
+        1000000{dialect.div}sse.n
+          + ((CAST(sse.n AS {dialect.big}) * e.t - co.s_t2)
+             * (CAST(sse.n AS {dialect.big}) * e.t - co.s_t2) * 1000000)
+            {dialect.div}(CAST(sse.n AS {dialect.big}) * co.dd) AS h_ppm,
         sse.sse, sse.n
       FROM e CROSS JOIN sse
       CROSS JOIN (SELECT dd, n AS cn, s_t2 FROM (
@@ -438,9 +422,9 @@ def _cook_sql(dialect: str) -> str:
     ),
     d AS (
       SELECT t, es, h_ppm,
-        CAST((CAST(es AS {big}) * es * (n - 2) * h_ppm{div}sse
+        CAST((CAST(es AS {dialect.big}) * es * (n - 2) * h_ppm{dialect.div}sse
               * 1000000 * 1000000)
-             {div}((1000000 - h_ppm) * (1000000 - h_ppm) * 2)
+             {dialect.div}((1000000 - h_ppm) * (1000000 - h_ppm) * 2)
              AS BIGINT) AS cook_d_ppm,
         n
       FROM lev
@@ -477,10 +461,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _u2_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _u2_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     tri AS (
@@ -491,16 +472,16 @@ def _u2_sql(dialect: str) -> str:
     ),
     s AS (
       SELECT CAST(count(*) AS BIGINT) AS n_triples,
-        CAST(sum(CAST(2 * y1 - y0 - y2 AS {big}) * (2 * y1 - y0 - y2))
-             AS {big}) AS sse_drift,
-        CAST(sum(CAST(y1 - y2 AS {big}) * (y1 - y2)) AS {big}) AS sse_naive
+        CAST(sum(CAST(2 * y1 - y0 - y2 AS {dialect.big}) * (2 * y1 - y0 - y2))
+             AS {dialect.big}) AS sse_drift,
+        CAST(sum(CAST(y1 - y2 AS {dialect.big}) * (y1 - y2)) AS {dialect.big}) AS sse_naive
       FROM tri
     )
     SELECT n_triples,
       CAST(sse_drift AS BIGINT) AS sse_drift,
       CAST(sse_naive AS BIGINT) AS sse_naive,
-      CAST((sse_drift * 1000000){div}sse_naive AS BIGINT) AS u2_sq_ppm,
-      (sse_drift * 1000000){div}sse_naive < 1000000 AS drift_beats_naive
+      CAST((sse_drift * 1000000){dialect.div}sse_naive AS BIGINT) AS u2_sq_ppm,
+      (sse_drift * 1000000){dialect.div}sse_naive < 1000000 AS drift_beats_naive
     FROM s
     """
 

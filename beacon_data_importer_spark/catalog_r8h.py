@@ -45,17 +45,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import query, sql_query
+from .catalog import DUCK, SPARK, Dialect, query, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r8e import _cos_e6
-from .sources.parquet import read_table
-
-
-# ONE shared _views (r12 round): documents/embeddings route through the
-# split-gated parallel scan — repartition only when the source has fewer
-# scan splits than cores (sources/parquet.py register_views), so no
-# Exchange is inserted at warehouse scale.
-from .sources.parquet import register_views as _views  # noqa: E402
+from .sources.parquet import read_table, register_views
 
 
 # ---------------------------------------------------------------------------
@@ -70,18 +63,17 @@ _MMR_CENT_MOD = 100  # deterministic centroids, same as ivf_search
 _MMR_RATIO = (4, 5)  # nprobe = ceil(4·nlist/5) — the PERF doctrine ratio
 
 
-def _mmr_base_sql(dialect: str) -> tuple[str, str]:
+def _mmr_base_sql(dialect: Dialect) -> tuple[str, str]:
     """(BRUTE shortlist SELECT, pairsim SELECT over view ``short``).
 
     The brute shortlist (full corpus × broadcast queries) is the
     exactness twin — consumed only by ``mmr_shortlist_recall_audit``,
     which deliberately pays the full scan to price the IVF shortlist's
     recall (VERDICT r8 item 3)."""
-    spark = dialect == "spark"
-    hint = "/*+ BROADCAST(q) */ " if spark else ""
+    hint = dialect.broadcast("q")
     cos = _cos_e6(dialect, "emb", "qvec")
     pcos = _cos_e6(dialect, "a.emb", "b.emb")
-    if spark:
+    if dialect.spark:
         # spark side: norm once per vector → one interpreted fold per
         # pair in ``rel`` (r11 round; bit-identical to _cos_e6 — see
         # catalog_r8e._cos_e6_pre).  Duck twin keeps the plain form.
@@ -129,7 +121,7 @@ def _mmr_base_sql(dialect: str) -> tuple[str, str]:
     )
     SELECT query_id, vec_id, emb, rel_e6 FROM scored
     WHERE rn <= {_MMR_SHORTLIST}"""
-    if spark:
+    if dialect.spark:
         # norm once per shortlist row, one fold per pair (r11 round;
         # bit-identical to _cos_e6 — see catalog_r8e._cos_e6_pre)
         from .catalog_r8e import _cos_e6_pre, _norm
@@ -165,7 +157,7 @@ def _mmr_ivf_short_duck() -> str:
 
     cos_ec = _DUCK_COS.format(a="e.embedding", b="c.cvec")
     cos_qc = _DUCK_COS.format(a="q.qvec", b="c.cvec")
-    rel = _cos_e6("duck", "e.embedding", "q.qvec")
+    rel = _cos_e6(DUCK, "e.embedding", "q.qvec")
     num, den = _MMR_RATIO
     nprobe = (
         f"greatest(1, ({num} * (SELECT count(*) FROM cent)"
@@ -311,14 +303,13 @@ def _mmr_ivf_short(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mmr_steps_sql(dialect: str) -> str:
+def _mmr_steps_sql(dialect: Dialect) -> str:
     """Greedy unroll over views ``short``/``psim``: selk = picks 1..k."""
     lam, k = _MMR_LAMBDA10, _MMR_PICKS
-    div = " div " if dialect == "spark" else " // "
     steps = [
         f"""sel1 AS (
       SELECT query_id, vec_id, CAST(1 AS BIGINT) AS pick_rank,
-        CAST(({lam} * rel_e6){div}10 AS BIGINT) AS mmr_score_e6
+        CAST(({lam} * rel_e6){dialect.div}10 AS BIGINT) AS mmr_score_e6
       FROM (
         SELECT query_id, vec_id, rel_e6,
           row_number() OVER (PARTITION BY query_id
@@ -342,12 +333,12 @@ def _mmr_steps_sql(dialect: str) -> str:
     ),
     pick{step} AS (
       SELECT query_id, vec_id, CAST({step} AS BIGINT) AS pick_rank,
-        CAST(({lam} * rel_e6 - {10 - lam} * maxsim_e6){div}10 AS BIGINT)
+        CAST(({lam} * rel_e6 - {10 - lam} * maxsim_e6){dialect.div}10 AS BIGINT)
           AS mmr_score_e6
       FROM (
         SELECT query_id, vec_id, rel_e6, maxsim_e6,
           row_number() OVER (PARTITION BY query_id
-            ORDER BY ({lam} * rel_e6 - {10 - lam} * maxsim_e6){div}10 DESC,
+            ORDER BY ({lam} * rel_e6 - {10 - lam} * maxsim_e6){dialect.div}10 DESC,
                      vec_id) AS rn
         FROM cand{step}
       ) s WHERE rn = 1
@@ -373,7 +364,7 @@ def _mmr_greedy(spark: SparkSession, short_df: DataFrame) -> DataFrame:
     measured 15 s warm vs ~2 s materialized at sf0.1)."""
     from pyspark.sql import functions as F  # noqa: F401 (parity import)
 
-    _, ps = _mmr_base_sql("spark")
+    _, ps = _mmr_base_sql(SPARK)
     # localCheckpoint, not persist: the shortlist feeds the pairsim SQL
     # AND the cogroup directly; checkpointing materializes it once and
     # needs no unpersist hand-off to the (lazy) caller.
@@ -467,8 +458,8 @@ def _mmr_greedy(spark: SparkSession, short_df: DataFrame) -> DataFrame:
     "mmr_diversified_rerank",
     oracle=(
         lambda sl=_mmr_ivf_short_duck(),
-        ps=_mmr_base_sql("duck")[1],
-        st=_mmr_steps_sql("duck"): st.replace(
+        ps=_mmr_base_sql(DUCK)[1],
+        st=_mmr_steps_sql(DUCK): st.replace(
             "WITH ",
             f"WITH short AS ({sl}),\n    psim AS ({ps}),\n    ",
             1,
@@ -494,14 +485,14 @@ def q_mmr_diversified_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     relevance shuffle is the cell-bounded equi-join (candidates ≤
     nprobe × cell population, √n-scaled nlist doctrine); the greedy
     stage runs on Q×20 persisted rows with Q-row bounded collects."""
-    _views(spark, sf_dir, "embeddings")
+    register_views(spark, sf_dir, "embeddings")
     return _mmr_greedy(spark, _mmr_ivf_short(spark, sf_dir))
 
 
 @query(
     "mmr_shortlist_recall_audit",
     oracle=f"""
-    WITH bshort AS ({_mmr_base_sql("duck")[0]}),
+    WITH bshort AS ({_mmr_base_sql(DUCK)[0]}),
     ishort AS ({_mmr_ivf_short_duck()}),
     hit AS (
       SELECT b.query_id, count(*) AS n_hit
@@ -532,8 +523,8 @@ def q_mmr_shortlist_recall_audit(
     approximation's price as a recorded number, not a doctrine."""
     from pyspark.sql import functions as F
 
-    _views(spark, sf_dir, "embeddings")
-    brute = spark.sql(_mmr_base_sql("spark")[0]).select(
+    register_views(spark, sf_dir, "embeddings")
+    brute = spark.sql(_mmr_base_sql(SPARK)[0]).select(
         "query_id", "vec_id"
     )
     ivf = _mmr_ivf_short(spark, sf_dir).select("query_id", "vec_id")
@@ -568,13 +559,12 @@ def q_mmr_shortlist_recall_audit(
 _FISHER_CONV_MIN = 17  # rarer than the bayes_ab 14 → c1 stays interior
 
 
-def _fisher_sql(dialect: str) -> str:
-    spark = dialect == "spark"
+def _fisher_sql(dialect: Dialect) -> str:
 
     def seq(n: str) -> str:
-        return f"sequence(0, {n} - 1)" if spark else f"range(0, {n})"
+        return f"sequence(0, {n} - 1)" if dialect.spark else f"range(0, {n})"
 
-    if spark:
+    if dialect.spark:
         pmf0 = (
             f"aggregate(transform({seq('c1')}, j ->"
             " CAST(r2 - j AS DOUBLE) / CAST(nn - j AS DOUBLE)),"
@@ -668,19 +658,16 @@ sql_query(
 _HURST_WINDOWS = (16, 32, 64, 128)
 
 
-def _hurst_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hurst_sql(dialect: Dialect) -> str:
     ws = ", ".join(
         f"({w})" for w in _HURST_WINDOWS
     )
     wtab = (
         f"SELECT w FROM (VALUES {ws}) AS t(w)"
-        if not spark
+        if not dialect.spark
         else "SELECT w FROM VALUES " + ws + " AS t(w)"
     )
-    hint = "/*+ BROADCAST(wt) */ " if spark else ""
+    hint = dialect.broadcast("wt")
     return f"""
     WITH {_day_sql(dialect)},
     idx AS (
@@ -688,13 +675,13 @@ def _hurst_sql(dialect: str) -> str:
       FROM day
     ),
     blocks AS (
-      SELECT {hint}wt.w, (idx.i - 1){div}wt.w AS b, idx.i, idx.y
+      SELECT {hint}wt.w, (idx.i - 1){dialect.div}wt.w AS b, idx.i, idx.y
       FROM idx CROSS JOIN ({wtab}) wt
     ),
     bstat AS (
       SELECT w, b, CAST(count(*) AS BIGINT) AS cnt,
         CAST(sum(y) AS BIGINT) AS s,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS q
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS q
       FROM blocks GROUP BY w, b
     ),
     fullb AS (SELECT * FROM bstat WHERE cnt = w),
@@ -709,14 +696,14 @@ def _hurst_sql(dialect: str) -> str:
     rs AS (
       SELECT w, b,
         CAST(floor(1000000 * (max(cd) - min(cd))
-          / sqrt(CAST(max(q) * w - CAST(max(s) AS {big}) * max(s)
+          / sqrt(CAST(max(q) * w - CAST(max(s) AS {dialect.big}) * max(s)
                       AS DOUBLE))) AS BIGINT) AS rs_e6
       FROM cum GROUP BY w, b
     ),
     pts AS (
       SELECT w, CAST(floor(1000000 * ln(CAST(w AS DOUBLE))) AS BIGINT) AS x,
         CAST(floor(1000000 * ln(
-          CAST(sum(rs_e6){div}count(*) AS DOUBLE) / 1000000e0)) AS BIGINT)
+          CAST(sum(rs_e6){dialect.div}count(*) AS DOUBLE) / 1000000e0)) AS BIGINT)
           AS yv,
         CAST(count(*) AS BIGINT) AS n_blocks
       FROM rs GROUP BY w
@@ -724,16 +711,16 @@ def _hurst_sql(dialect: str) -> str:
     fit AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(yv) AS BIGINT) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(x AS {big}) * yv) AS {big}) AS sxy
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(x AS {dialect.big}) * yv) AS {dialect.big}) AS sxy
       FROM pts
     )
     SELECT k AS n_window_sizes,
-      CAST(((k * sxy - CAST(sx AS {big}) * sy) * 1000000)
-           {div}(k * sxx - CAST(sx AS {big}) * sx) AS BIGINT)
+      CAST(((k * sxy - CAST(sx AS {dialect.big}) * sy) * 1000000)
+           {dialect.div}(k * sxx - CAST(sx AS {dialect.big}) * sx) AS BIGINT)
         AS hurst_ppm,
-      ((k * sxy - CAST(sx AS {big}) * sy) * 1000000)
-        {div}(k * sxx - CAST(sx AS {big}) * sx) > 500000
+      ((k * sxy - CAST(sx AS {dialect.big}) * sy) * 1000000)
+        {dialect.div}(k * sxx - CAST(sx AS {dialect.big}) * sx) > 500000
         AS persistent_memory
     FROM fit
     """
@@ -764,33 +751,27 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _pcorr_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _pcorr_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(l_shipdate, (SELECT min(l_shipdate) FROM lineitem))"
-        if spark
-        else "datediff('day', (SELECT min(l_shipdate) FROM lineitem),"
-        " l_shipdate)"
+        dialect.datediff("(SELECT min(l_shipdate) FROM lineitem)", "l_shipdate")
     )
 
     def corr(u: str, v: str) -> str:
         """floor(1e6·corr) via sqrt of exact integer dispersions."""
         return (
             f"CAST(floor(1000000 * CAST(n * s_{u}{v}"
-            f" - CAST(s_{u} AS {big}) * s_{v} AS DOUBLE)"
-            f" / (sqrt(CAST(n * s_{u}{u} - CAST(s_{u} AS {big}) * s_{u}"
+            f" - CAST(s_{u} AS {dialect.big}) * s_{v} AS DOUBLE)"
+            f" / (sqrt(CAST(n * s_{u}{u} - CAST(s_{u} AS {dialect.big}) * s_{u}"
             f" AS DOUBLE)) * sqrt(CAST(n * s_{v}{v}"
-            f" - CAST(s_{v} AS {big}) * s_{v} AS DOUBLE)))) AS BIGINT)"
+            f" - CAST(s_{v} AS {dialect.big}) * s_{v} AS DOUBLE)))) AS BIGINT)"
         )
 
     def partial(xy: str, xz: str, yz: str) -> str:
         """1e6-scaled partial corr numerator and squared form from the
         three ppm marginals (exact integers after the floors)."""
         return (
-            f"CAST((CAST(r_{xy} AS {big}) * 1000000"
-            f" - CAST(r_{xz} AS {big}) * r_{yz}){div}1000000 AS BIGINT)"
+            f"CAST((CAST(r_{xy} AS {dialect.big}) * 1000000"
+            f" - CAST(r_{xz} AS {dialect.big}) * r_{yz}){dialect.div}1000000 AS BIGINT)"
         )
 
     return f"""
@@ -798,7 +779,7 @@ def _pcorr_sql(dialect: str) -> str:
       SELECT CAST({dd} AS BIGINT) AS t,
         CAST(count(*) AS BIGINT) AS x,
         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-             AS BIGINT){div}100000 AS y,
+             AS BIGINT){dialect.div}100000 AS y,
         CAST(sum(CAST(round(l_discount * 100) AS BIGINT)) AS BIGINT) AS z
       FROM lineitem GROUP BY 1
     ),
@@ -806,12 +787,12 @@ def _pcorr_sql(dialect: str) -> str:
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(x) AS BIGINT) AS s_x, CAST(sum(y) AS BIGINT) AS s_y,
         CAST(sum(z) AS BIGINT) AS s_z,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS s_xx,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS s_yy,
-        CAST(sum(CAST(z AS {big}) * z) AS {big}) AS s_zz,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS s_xy,
-        CAST(sum(CAST(x AS {big}) * z) AS {big}) AS s_xz,
-        CAST(sum(CAST(y AS {big}) * z) AS {big}) AS s_yz
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS s_xx,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS s_yy,
+        CAST(sum(CAST(z AS {dialect.big}) * z) AS {dialect.big}) AS s_zz,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS s_xy,
+        CAST(sum(CAST(x AS {dialect.big}) * z) AS {dialect.big}) AS s_xz,
+        CAST(sum(CAST(y AS {dialect.big}) * z) AS {dialect.big}) AS s_yz
       FROM d
     ),
     r AS (
@@ -821,32 +802,32 @@ def _pcorr_sql(dialect: str) -> str:
     )
     SELECT 'orders_revenue_given_discount' AS pair, n AS n_days,
       r_xy AS marginal_ppm, {partial("xy", "xz", "yz")} AS partial_num_ppm,
-      CAST(((CAST(r_xy AS {big}) * 1000000 - CAST(r_xz AS {big}) * r_yz)
-        * (CAST(r_xy AS {big}) * 1000000 - CAST(r_xz AS {big}) * r_yz))
-        {div}(((1000000000000 - CAST(r_xz AS {big}) * r_xz)
-          {div}1000000)
-          * ((1000000000000 - CAST(r_yz AS {big}) * r_yz){div}1000000))
-        {div}1000000 AS BIGINT) AS partial_r2_ppm
+      CAST(((CAST(r_xy AS {dialect.big}) * 1000000 - CAST(r_xz AS {dialect.big}) * r_yz)
+        * (CAST(r_xy AS {dialect.big}) * 1000000 - CAST(r_xz AS {dialect.big}) * r_yz))
+        {dialect.div}(((1000000000000 - CAST(r_xz AS {dialect.big}) * r_xz)
+          {dialect.div}1000000)
+          * ((1000000000000 - CAST(r_yz AS {dialect.big}) * r_yz){dialect.div}1000000))
+        {dialect.div}1000000 AS BIGINT) AS partial_r2_ppm
     FROM r
     UNION ALL
     SELECT 'orders_discount_given_revenue', n, r_xz,
       {partial("xz", "xy", "yz")},
-      CAST(((CAST(r_xz AS {big}) * 1000000 - CAST(r_xy AS {big}) * r_yz)
-        * (CAST(r_xz AS {big}) * 1000000 - CAST(r_xy AS {big}) * r_yz))
-        {div}(((1000000000000 - CAST(r_xy AS {big}) * r_xy)
-          {div}1000000)
-          * ((1000000000000 - CAST(r_yz AS {big}) * r_yz){div}1000000))
-        {div}1000000 AS BIGINT)
+      CAST(((CAST(r_xz AS {dialect.big}) * 1000000 - CAST(r_xy AS {dialect.big}) * r_yz)
+        * (CAST(r_xz AS {dialect.big}) * 1000000 - CAST(r_xy AS {dialect.big}) * r_yz))
+        {dialect.div}(((1000000000000 - CAST(r_xy AS {dialect.big}) * r_xy)
+          {dialect.div}1000000)
+          * ((1000000000000 - CAST(r_yz AS {dialect.big}) * r_yz){dialect.div}1000000))
+        {dialect.div}1000000 AS BIGINT)
     FROM r
     UNION ALL
     SELECT 'revenue_discount_given_orders', n, r_yz,
       {partial("yz", "xy", "xz")},
-      CAST(((CAST(r_yz AS {big}) * 1000000 - CAST(r_xy AS {big}) * r_xz)
-        * (CAST(r_yz AS {big}) * 1000000 - CAST(r_xy AS {big}) * r_xz))
-        {div}(((1000000000000 - CAST(r_xy AS {big}) * r_xy)
-          {div}1000000)
-          * ((1000000000000 - CAST(r_xz AS {big}) * r_xz){div}1000000))
-        {div}1000000 AS BIGINT)
+      CAST(((CAST(r_yz AS {dialect.big}) * 1000000 - CAST(r_xy AS {dialect.big}) * r_xz)
+        * (CAST(r_yz AS {dialect.big}) * 1000000 - CAST(r_xy AS {dialect.big}) * r_xz))
+        {dialect.div}(((1000000000000 - CAST(r_xy AS {dialect.big}) * r_xy)
+          {dialect.div}1000000)
+          * ((1000000000000 - CAST(r_xz AS {dialect.big}) * r_xz){dialect.div}1000000))
+        {dialect.div}1000000 AS BIGINT)
     FROM r
     """
 
@@ -874,14 +855,11 @@ sql_query(
 _BARTLETT_CHI2_E6 = 9_487_729
 
 
-def _bartlett_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bartlett_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT r.r_name AS grp,
-        CAST(round(ord.o_totalprice * 100) AS BIGINT){div}1000 AS v
+        CAST(round(ord.o_totalprice * 100) AS BIGINT){dialect.div}1000 AS v
       FROM orders ord
       JOIN customer c ON c.c_custkey = ord.o_custkey
       JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -890,7 +868,7 @@ def _bartlett_sql(dialect: str) -> str:
     g AS (
       SELECT grp, CAST(count(*) AS BIGINT) AS n,
         CAST(sum(v) AS BIGINT) AS s,
-        CAST(sum(CAST(v AS {big}) * v) AS {big}) AS q
+        CAST(sum(CAST(v AS {dialect.big}) * v) AS {dialect.big}) AS q
       FROM o GROUP BY grp
     ),
     gi AS (
@@ -902,10 +880,10 @@ def _bartlett_sql(dialect: str) -> str:
         -- forcing reject=true; both engines shared it, so parity was
         -- green (the gumbel √n class).
         (n - 1) * CAST(floor(1000000 * ln(
-          CAST(n * q - CAST(s AS {big}) * s AS DOUBLE)
-          / CAST(CAST(n AS {big}) * (n - 1) AS DOUBLE))) AS BIGINT)
+          CAST(n * q - CAST(s AS {dialect.big}) * s AS DOUBLE)
+          / CAST(CAST(n AS {dialect.big}) * (n - 1) AS DOUBLE))) AS BIGINT)
           AS term_e6,
-        CAST(n * q - CAST(s AS {big}) * s AS {big}) AS disp,
+        CAST(n * q - CAST(s AS {dialect.big}) * s AS {dialect.big}) AS disp,
         n - 1 AS dof
       FROM g
     ),
@@ -913,7 +891,7 @@ def _bartlett_sql(dialect: str) -> str:
       SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(count(*) AS BIGINT) AS k,
         CAST(sum(term_e6) AS BIGINT) AS sum_terms_e6,
         -- (nᵢ−1)·sᵢ² = dispᵢ/nᵢ, so s_p²·(N−k) = Σ dispᵢ/nᵢ
-        CAST(sum(disp{div}n) AS {big}) AS pooled_num,
+        CAST(sum(disp{dialect.div}n) AS {dialect.big}) AS pooled_num,
         CAST(sum(n - 1) AS BIGINT) AS dof_tot
       FROM gi
     ),

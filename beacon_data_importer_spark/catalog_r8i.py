@@ -32,7 +32,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 
 
@@ -45,10 +45,7 @@ _CQ_MIN_EVENTS = 13  # per-user per-type engagement bar ≈ the type mean
 _CHI2_DF4_E6 = 9_487_729
 
 
-def _cq_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cq_sql(dialect: Dialect) -> str:
     return f"""
     WITH x AS (
       SELECT user_id, event_type,
@@ -58,22 +55,22 @@ def _cq_sql(dialect: str) -> str:
     ctot AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
         CAST(sum(cj) AS BIGINT) AS t,
-        CAST(sum(CAST(cj AS {big}) * cj) AS {big}) AS sc2
+        CAST(sum(CAST(cj AS {dialect.big}) * cj) AS {dialect.big}) AS sc2
       FROM (SELECT event_type, CAST(sum(b) AS BIGINT) AS cj
             FROM x GROUP BY event_type) c
     ),
     rtot AS (
       SELECT CAST(sum(ru) AS BIGINT) AS sr,
-        CAST(sum(CAST(ru AS {big}) * ru) AS {big}) AS sr2
+        CAST(sum(CAST(ru AS {dialect.big}) * ru) AS {dialect.big}) AS sr2
       FROM (SELECT user_id, CAST(sum(b) AS BIGINT) AS ru
             FROM x GROUP BY user_id) r
     )
     SELECT ctot.k AS k_treatments, ctot.t AS n_successes,
-      CAST(((ctot.k - 1) * (ctot.k * ctot.sc2 - CAST(ctot.t AS {big})
+      CAST(((ctot.k - 1) * (ctot.k * ctot.sc2 - CAST(ctot.t AS {dialect.big})
              * ctot.t) * 1000000)
-           {div}(ctot.k * ctot.t - rtot.sr2) AS BIGINT) AS q_ppm,
-      ((ctot.k - 1) * (ctot.k * ctot.sc2 - CAST(ctot.t AS {big}) * ctot.t)
-       * 1000000) {div}(ctot.k * ctot.t - rtot.sr2) > {_CHI2_DF4_E6}
+           {dialect.div}(ctot.k * ctot.t - rtot.sr2) AS BIGINT) AS q_ppm,
+      ((ctot.k - 1) * (ctot.k * ctot.sc2 - CAST(ctot.t AS {dialect.big}) * ctot.t)
+       * 1000000) {dialect.div}(ctot.k * ctot.t - rtot.sr2) > {_CHI2_DF4_E6}
         AS reject_equal_rates
     FROM ctot CROSS JOIN rtot
     """
@@ -102,10 +99,7 @@ _MH_HIGH_VALUE_C = 30_000_000  # > $300k ⇒ "high-value" outcome
 _CHI2_DF1_E6 = 3_841_458
 
 
-def _mh_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _mh_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT r.r_name AS stratum,
@@ -128,28 +122,28 @@ def _mh_sql(dialect: str) -> str:
     ),
     agg AS (
       SELECT
-        CAST(sum(a) * 1000000 AS {big}) AS sa_e6,
-        CAST(sum((CAST(a AS {big}) * d * 1000000){div}n) AS {big})
+        CAST(sum(a) * 1000000 AS {dialect.big}) AS sa_e6,
+        CAST(sum((CAST(a AS {dialect.big}) * d * 1000000){dialect.div}n) AS {dialect.big})
           AS or_num_e6,
-        CAST(sum((CAST(b AS {big}) * c * 1000000){div}n) AS {big})
+        CAST(sum((CAST(b AS {dialect.big}) * c * 1000000){dialect.div}n) AS {dialect.big})
           AS or_den_e6,
-        CAST(sum((CAST(a + b AS {big}) * (a + c) * 1000000){div}n)
-             AS {big}) AS se_e6,
-        CAST(sum((CAST(a + b AS {big}) * (c + d) * (a + c) * (b + d)
+        CAST(sum((CAST(a + b AS {dialect.big}) * (a + c) * 1000000){dialect.div}n)
+             AS {dialect.big}) AS se_e6,
+        CAST(sum((CAST(a + b AS {dialect.big}) * (c + d) * (a + c) * (b + d)
                   * 1000000000000)
-                 {div}(CAST(n AS {big}) * n * (n - 1))) AS {big})
+                 {dialect.div}(CAST(n AS {dialect.big}) * n * (n - 1))) AS {dialect.big})
           AS sv_e12,
         CAST(count(*) AS BIGINT) AS n_strata
       FROM s
     )
     SELECT n_strata,
-      CAST((or_num_e6 * 1000000){div}or_den_e6 AS BIGINT) AS or_mh_ppm,
+      CAST((or_num_e6 * 1000000){dialect.div}or_den_e6 AS BIGINT) AS or_mh_ppm,
       CAST(((abs(sa_e6 - se_e6) - 500000)
             * (abs(sa_e6 - se_e6) - 500000) * 1000000)
-           {div}sv_e12 AS BIGINT) AS cmh_chi2_ppm,
+           {dialect.div}sv_e12 AS BIGINT) AS cmh_chi2_ppm,
       ((abs(sa_e6 - se_e6) - 500000)
        * (abs(sa_e6 - se_e6) - 500000) * 1000000)
-        {div}sv_e12 > {_CHI2_DF1_E6} AS reject_no_association
+        {dialect.div}sv_e12 > {_CHI2_DF1_E6} AS reject_no_association
     FROM agg
     """
 
@@ -177,17 +171,10 @@ _KPSS_Q = 4  # Bartlett truncation
 _KPSS_CRIT_E6 = 463_000
 
 
-def _kpss_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kpss_sql(dialect: Dialect) -> str:
     q = _KPSS_Q
-    hint = "/*+ BROADCAST(l) */ " if spark else ""
-    lags = (
-        f"SELECT explode(sequence(1, {q})) AS l"
-        if spark
-        else f"SELECT unnest(generate_series(1, {q})) AS l"
-    )
+    hint = dialect.broadcast("l")
+    lags = f"SELECT {dialect.series(1, q)} AS l"
     return f"""
     WITH {_day_sql(dialect)},
     st AS (
@@ -199,18 +186,18 @@ def _kpss_sql(dialect: str) -> str:
       FROM day CROSS JOIN st
     ),
     g0 AS (
-      SELECT CAST(sum(CAST(d AS {big}) * d) AS {big}) AS g FROM dev
+      SELECT CAST(sum(CAST(d AS {dialect.big}) * d) AS {dialect.big}) AS g FROM dev
     ),
     gl AS (
       SELECT {hint}k.l AS l,
-        CAST(sum(CAST(a.d AS {big}) * b.d) AS {big}) AS g
+        CAST(sum(CAST(a.d AS {dialect.big}) * b.d) AS {dialect.big}) AS g
       FROM dev a CROSS JOIN ({lags}) k
       JOIN dev b ON b.t = a.t + k.l
       GROUP BY k.l
     ),
     lrv AS (
-      SELECT CAST({q + 1} AS {big}) * g0.g
-        + 2 * (SELECT CAST(sum(({q + 1} - l) * g) AS {big}) FROM gl)
+      SELECT CAST({q + 1} AS {dialect.big}) * g0.g
+        + 2 * (SELECT CAST(sum(({q + 1} - l) * g) AS {dialect.big}) FROM gl)
         AS ln_num
       FROM g0
     ),
@@ -220,12 +207,12 @@ def _kpss_sql(dialect: str) -> str:
       FROM dev
     ),
     num AS (
-      SELECT CAST(sum(CAST(c AS {big}) * c) AS {big}) AS sc2 FROM cum
+      SELECT CAST(sum(CAST(c AS {dialect.big}) * c) AS {dialect.big}) AS sc2 FROM cum
     )
     SELECT st.n AS n_days,
-      CAST((num.sc2 * {q + 1} * 1000000){div}(st.n * lrv.ln_num)
+      CAST((num.sc2 * {q + 1} * 1000000){dialect.div}(st.n * lrv.ln_num)
            AS BIGINT) AS kpss_eta_ppm,
-      (num.sc2 * {q + 1} * 1000000){div}(st.n * lrv.ln_num)
+      (num.sc2 * {q + 1} * 1000000){dialect.div}(st.n * lrv.ln_num)
         > {_KPSS_CRIT_E6} AS reject_level_stationary
     FROM num CROSS JOIN lrv CROSS JOIN st
     """
@@ -254,27 +241,20 @@ sql_query(
 _PACF_LAGS = 6
 
 
-def _pacf_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _pacf_sql(dialect: Dialect) -> str:
     L = _PACF_LAGS
-    hint = "/*+ BROADCAST(k) */ " if spark else ""
-    lags = (
-        f"SELECT explode(sequence(1, {L})) AS l"
-        if spark
-        else f"SELECT unnest(generate_series(1, {L})) AS l"
-    )
+    hint = dialect.broadcast("k")
+    lags = f"SELECT {dialect.series(1, L)} AS l"
 
     def el(arr: str, i: str) -> str:
         return (
-            f"element_at({arr}, {i})" if spark else f"list_extract({arr}, {i})"
+            f"element_at({arr}, {i})" if dialect.spark else f"list_extract({arr}, {i})"
         )
 
     def fold_sum(terms: str) -> str:
         """Deterministic left-fold sum of a double list (list_sum's
         internal order is not pinned; an explicit fold is)."""
-        if spark:
+        if dialect.spark:
             return (
                 f"aggregate({terms}, CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
             )
@@ -285,21 +265,21 @@ def _pacf_sql(dialect: str) -> str:
 
     def rng(n: str) -> str:
         return (
-            f"sequence(1, {n})" if spark else f"range(1, ({n}) + 1)"
+            f"sequence(1, {n})" if dialect.spark else f"range(1, ({n}) + 1)"
         )
 
     def transform(src: str, lam: str) -> str:
         return (
             f"transform({src}, {lam})"
-            if spark
+            if dialect.spark
             else f"list_transform({src}, {lam})"
         )
 
     arr_empty = (
-        "CAST(array() AS ARRAY<DOUBLE>)" if spark else "[]::DOUBLE[]"
+        "CAST(array() AS ARRAY<DOUBLE>)" if dialect.spark else "[]::DOUBLE[]"
     )
-    concat = "concat" if spark else "list_concat"
-    mkarr = (lambda x: f"array({x})") if spark else (lambda x: f"[{x}]")
+    concat = "concat" if dialect.spark else "list_concat"
+    mkarr = (lambda x: f"array({x})") if dialect.spark else (lambda x: f"[{x}]")
 
     # stage k: phi_k = phi_{k-1} - pkk*reverse(phi_{k-1}) ++ [pkk]
     # pkk = (rho_k - sum_j phi_{k-1,j} rho_{k-j}) / (1 - sum_j phi_{k-1,j} rho_j)
@@ -311,13 +291,13 @@ def _pacf_sql(dialect: str) -> str:
     for k in range(2, L + 1):
         num_terms = transform(
             rng(str(k - 1)),
-            f"j -> {el('phi', 'CAST(j AS INT)') if spark else 'phi[j]'}"
-            f" * {el('rho', f'CAST({k} - j AS INT)') if spark else f'rho[{k} - j]'}",
+            f"j -> {el('phi', 'CAST(j AS INT)') if dialect.spark else 'phi[j]'}"
+            f" * {el('rho', f'CAST({k} - j AS INT)') if dialect.spark else f'rho[{k} - j]'}",
         )
         den_terms = transform(
             rng(str(k - 1)),
-            f"j -> {el('phi', 'CAST(j AS INT)') if spark else 'phi[j]'}"
-            f" * {el('rho', 'CAST(j AS INT)') if spark else 'rho[j]'}",
+            f"j -> {el('phi', 'CAST(j AS INT)') if dialect.spark else 'phi[j]'}"
+            f" * {el('rho', 'CAST(j AS INT)') if dialect.spark else 'rho[j]'}",
         )
         pkk = (
             f"({el('rho', str(k))} - {fold_sum(num_terms)})"
@@ -325,11 +305,11 @@ def _pacf_sql(dialect: str) -> str:
         )
         newphi_head = transform(
             rng(str(k - 1)),
-            f"j -> {el('phi', 'CAST(j AS INT)') if spark else 'phi[j]'}"
+            f"j -> {el('phi', 'CAST(j AS INT)') if dialect.spark else 'phi[j]'}"
             f" - pkk * "
             + (
                 f"element_at(phi, CAST({k} - j AS INT))"
-                if spark
+                if dialect.spark
                 else f"phi[{k} - j]"
             ),
         )
@@ -341,14 +321,9 @@ def _pacf_sql(dialect: str) -> str:
         prev = f"s{k}"
     chain = ",\n    ".join(stages)
 
-    explode_out = (
-        f"SELECT explode(sequence(1, {L})) AS lag, phi FROM s{L}"
-        if spark
-        else f"SELECT unnest(generate_series(1, {L})) AS lag, phi"
-        f" FROM s{L}"
-    )
+    explode_out = f"SELECT {dialect.series(1, L)} AS lag, phi FROM s{L}"
     phi_at = (
-        "element_at(phi, CAST(lag AS INT))" if spark else "phi[lag]"
+        "element_at(phi, CAST(lag AS INT))" if dialect.spark else "phi[lag]"
     )
 
     return f"""
@@ -362,22 +337,22 @@ def _pacf_sql(dialect: str) -> str:
       FROM day CROSS JOIN st
     ),
     den AS (
-      SELECT CAST(sum(CAST(d AS {big}) * d) AS {big}) AS g FROM dev
+      SELECT CAST(sum(CAST(d AS {dialect.big}) * d) AS {dialect.big}) AS g FROM dev
     ),
     ac AS (
       SELECT {hint}k.l AS l,
-        CAST(sum(CAST(a.d AS {big}) * b.d) AS {big}) AS g
+        CAST(sum(CAST(a.d AS {dialect.big}) * b.d) AS {dialect.big}) AS g
       FROM dev a CROSS JOIN ({lags}) k
       JOIN dev b ON b.t = a.t + k.l
       GROUP BY k.l
     ),
     rk AS (
-      SELECT l, CAST((ac.g * 1000000){div}den.g AS BIGINT) AS r_ppm
+      SELECT l, CAST((ac.g * 1000000){dialect.div}den.g AS BIGINT) AS r_ppm
       FROM ac CROSS JOIN den
     ),
     rhos AS (
       SELECT {("transform(array_sort(collect_list(struct(l, r_ppm))),"
-               " x -> CAST(x.r_ppm AS DOUBLE) / 1000000)") if spark
+               " x -> CAST(x.r_ppm AS DOUBLE) / 1000000)") if dialect.spark
               else "list_transform(list(r_ppm ORDER BY l),"
               " x -> x::DOUBLE / 1000000)"} AS rho
       FROM rk

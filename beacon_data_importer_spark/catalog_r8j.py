@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import math
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 
 
@@ -47,17 +47,14 @@ def _trig_rows() -> str:
     return ", ".join(rows)
 
 
-def _pgram_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _pgram_sql(dialect: Dialect) -> str:
     vals = _trig_rows()
     trig = (
         f"SELECT p, r, c, s FROM VALUES {vals} AS t(p, r, c, s)"
-        if spark
+        if dialect.spark
         else f"SELECT p, r, c, s FROM (VALUES {vals}) AS t(p, r, c, s)"
     )
-    hint = "/*+ BROADCAST(tg) */ " if spark else ""
+    hint = dialect.broadcast("tg")
     return f"""
     WITH {_day_sql(dialect)},
     st AS (
@@ -70,27 +67,27 @@ def _pgram_sql(dialect: str) -> str:
     ),
     spine AS (SELECT DISTINCT p FROM ({trig}) x),
     devp AS (
-      SELECT {"/*+ BROADCAST(sp) */ " if spark else ""}dev.d, sp.p,
+      SELECT {dialect.broadcast("sp")}dev.d, sp.p,
         dev.t % sp.p AS r
       FROM dev CROSS JOIN spine sp
     ),
     comps AS (
       SELECT {hint}devp.p AS period,
-        CAST(sum(CAST(devp.d AS {big}) * tg.c) AS {big}) AS cc,
-        CAST(sum(CAST(devp.d AS {big}) * tg.s) AS {big}) AS ss
+        CAST(sum(CAST(devp.d AS {dialect.big}) * tg.c) AS {dialect.big}) AS cc,
+        CAST(sum(CAST(devp.d AS {dialect.big}) * tg.s) AS {dialect.big}) AS ss
       FROM devp JOIN ({trig}) tg
         ON tg.p = devp.p AND tg.r = devp.r
       GROUP BY devp.p
     ),
     pw AS (
       SELECT period,
-        CAST((cc{div}1000000) * (cc{div}1000000)
-             + (ss{div}1000000) * (ss{div}1000000) AS {big}) AS power
+        CAST((cc{dialect.div}1000000) * (cc{dialect.div}1000000)
+             + (ss{dialect.div}1000000) * (ss{dialect.div}1000000) AS {dialect.big}) AS power
       FROM comps
     ),
     mx AS (SELECT max(power) AS mp FROM pw)
     SELECT pw.period, CAST(pw.power AS BIGINT) AS power,
-      CAST((pw.power * 1000000){div}mx.mp AS BIGINT) AS rel_power_ppm,
+      CAST((pw.power * 1000000){dialect.div}mx.mp AS BIGINT) AS rel_power_ppm,
       pw.power = mx.mp AS dominant
     FROM pw CROSS JOIN mx
     """
@@ -121,12 +118,10 @@ _MCI_BUCKET_C = 1000  # $10 units
 _Z_E6 = 1_959_964
 
 
-def _mci_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _mci_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
-      SELECT CAST(round(o_totalprice * 100) AS BIGINT){div}{_MCI_BUCKET_C}
+      SELECT CAST(round(o_totalprice * 100) AS BIGINT){dialect.div}{_MCI_BUCKET_C}
         AS v
       FROM orders
     ),
@@ -145,9 +140,9 @@ def _mci_sql(dialect: str) -> str:
     ),
     ranks AS (
       SELECT n,
-        (n - halfw){div}2 AS l_rank,
-        n + 1 - (n - halfw){div}2 AS u_rank,
-        (n + 1){div}2 AS m_rank
+        (n - halfw){dialect.div}2 AS l_rank,
+        n + 1 - (n - halfw){dialect.div}2 AS u_rank,
+        (n + 1){dialect.div}2 AS m_rank
       FROM st
     )
     SELECT r.n AS n_orders, r.l_rank, r.u_rank,

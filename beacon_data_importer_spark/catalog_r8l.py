@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import math
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -36,10 +36,7 @@ from .catalog import sql_query
 _Z2_E6 = 3_841_458
 
 
-def _wilson_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _wilson_sql(dialect: Dialect) -> str:
     z2 = _Z2_E6
     return f"""
     WITH s AS (
@@ -55,9 +52,9 @@ def _wilson_sql(dialect: str) -> str:
     ),
     w AS (
       SELECT region, n, a,
-        CAST((a * 1000000){div}n AS BIGINT) AS p_ppm,
-        CAST(((CAST(a AS {big}) * 1000000 + {z2 // 2}) * 1000000)
-             {div}(CAST(n AS {big}) * 1000000 + {z2}) AS BIGINT)
+        CAST((a * 1000000){dialect.div}n AS BIGINT) AS p_ppm,
+        CAST(((CAST(a AS {dialect.big}) * 1000000 + {z2 // 2}) * 1000000)
+             {dialect.div}(CAST(n AS {dialect.big}) * 1000000 + {z2}) AS BIGINT)
           AS center_ppm,
         CAST(floor(
           sqrt({z2} / 1e6 * (CAST(a * (n - a) AS DOUBLE) / n
@@ -108,13 +105,9 @@ _SPRT_A_E6 = math.floor(1e6 * math.log((1 - _SPRT_ALPHA) / _SPRT_ALPHA))
 _SPRT_B_E6 = -_SPRT_A_E6
 
 
-def _sprt_sql(dialect: str) -> str:
-    spark = dialect == "spark"
+def _sprt_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(o_orderdate, (SELECT min(o_orderdate) FROM orders))"
-        if spark
-        else "datediff('day', (SELECT min(o_orderdate) FROM orders),"
-        " o_orderdate)"
+        dialect.datediff("(SELECT min(o_orderdate) FROM orders)", "o_orderdate")
     )
     return f"""
     WITH d AS (
@@ -181,10 +174,7 @@ sql_query(
 _BD_CHI2_DF4_E6 = 9_487_729
 
 
-def _bd_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bd_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT r.r_name AS stratum,
@@ -207,9 +197,9 @@ def _bd_sql(dialect: str) -> str:
     ),
     mh AS (
       SELECT
-        CAST(sum((CAST(a AS {big}) * d * 1000000){div}n) AS {big})
+        CAST(sum((CAST(a AS {dialect.big}) * d * 1000000){dialect.div}n) AS {dialect.big})
           AS num_e6,
-        CAST(sum((CAST(b AS {big}) * c * 1000000){div}n) AS {big})
+        CAST(sum((CAST(b AS {dialect.big}) * c * 1000000){dialect.div}n) AS {dialect.big})
           AS den_e6
       FROM s
     ),
@@ -259,7 +249,7 @@ def _bd_sql(dialect: str) -> str:
       FROM atil
     )
     SELECT CAST(count(*) AS BIGINT) AS n_strata,
-      CAST((SELECT (num_e6 * 1000000){div}den_e6 FROM mh) AS BIGINT)
+      CAST((SELECT (num_e6 * 1000000){dialect.div}den_e6 FROM mh) AS BIGINT)
         AS or_mh_ppm,
       CAST(sum(t_e6) AS BIGINT) AS bd_chi2_ppm,
       sum(t_e6) <= {_BD_CHI2_DF4_E6} AS or_homogeneous

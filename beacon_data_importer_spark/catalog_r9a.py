@@ -36,7 +36,7 @@ petl→Postgres importer, has no test surface; SURVEY §2 'beyond' set).
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 
 #: floor(1e6 · χ²(df=1, α=0.05)) — shared literal convention (r8d/r8g)
@@ -67,10 +67,7 @@ def _paired_months_sql() -> str:
     )"""
 
 
-def _wilcoxon_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _wilcoxon_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_paired_months_sql()},
     nz AS (SELECT d, abs(d) AS ad FROM paired WHERE d <> 0),
@@ -89,14 +86,14 @@ def _wilcoxon_sql(dialect: str) -> str:
       SELECT CAST(sum(c) AS BIGINT) AS n,
         CAST(sum(cpos * r2) AS BIGINT) AS w2_plus,
         CAST(sum(c * r2) AS BIGINT) AS sr2,
-        CAST(sum(CAST(c AS {big}) * r2 * r2) AS {big}) AS sr2sq
+        CAST(sum(CAST(c AS {dialect.big}) * r2 * r2) AS {dialect.big}) AS sr2sq
       FROM r
     )
     SELECT n AS n_pairs, w2_plus,
       CAST(((2 * w2_plus - sr2) * (2 * w2_plus - sr2) * 1000000)
-           {div}sr2sq AS BIGINT) AS z2_ppm,
+           {dialect.div}sr2sq AS BIGINT) AS z2_ppm,
       ((2 * w2_plus - sr2) * (2 * w2_plus - sr2) * 1000000)
-        {div}sr2sq > {_CHI2_DF1_E6} AS reject_no_shift
+        {dialect.div}sr2sq > {_CHI2_DF1_E6} AS reject_no_shift
     FROM s
     """
 
@@ -129,21 +126,15 @@ _FACTS = ", ".join(f"({j}, {__import__('math').factorial(j)})"
                    for j in range(13))
 
 
-def _sign_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    shl = "shiftleft(1, CAST(s.m AS INT))" if spark else "(1 << s.m)"
+def _sign_sql(dialect: Dialect) -> str:
+    shl = "shiftleft(1, CAST(s.m AS INT))" if dialect.spark else "(1 << s.m)"
     itab = (
         "SELECT CAST(i AS BIGINT) AS i FROM"
         " (SELECT explode(sequence(0, 12)) AS i)"
-        if spark
+        if dialect.spark
         else "SELECT CAST(unnest(generate_series(0, 12)) AS BIGINT) AS i"
     )
-    ftab = (
-        f"SELECT j, v FROM VALUES {_FACTS} AS t(j, v)"
-        if spark
-        else f"SELECT j, v FROM (VALUES {_FACTS}) t(j, v)"
-    )
+    ftab = f"SELECT j, v FROM {dialect.values(_FACTS, 't(j, v)')}"
     return f"""
     WITH {_paired_months_sql()},
     s AS (
@@ -153,7 +144,7 @@ def _sign_sql(dialect: str) -> str:
     ),
     binom AS (
       SELECT s.m, s.k, it.i,
-        fm.v{div}(fi.v * fmi.v) AS c
+        fm.v{dialect.div}(fi.v * fmi.v) AS c
       FROM s
       JOIN ({itab}) it ON it.i <= s.m
       JOIN ({ftab}) fm ON fm.j = s.m
@@ -168,10 +159,10 @@ def _sign_sql(dialect: str) -> str:
     )
     SELECT s.m AS n_nonzero, s.k AS n_positive,
       CAST(least(1000000,
-        2 * ((least(t.num_ge, t.num_le) * 1000000){div}{shl}))
+        2 * ((least(t.num_ge, t.num_le) * 1000000){dialect.div}{shl}))
         AS BIGINT) AS p_two_sided_e6,
       least(1000000,
-        2 * ((least(t.num_ge, t.num_le) * 1000000){div}{shl})) < 50000
+        2 * ((least(t.num_ge, t.num_le) * 1000000){dialect.div}{shl})) < 50000
         AS reject_at_5pct
     FROM s JOIN tails t ON t.m = s.m AND t.k = s.k
     """
@@ -200,9 +191,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _cox_stuart_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _cox_stuart_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     idx AS (
@@ -214,8 +203,8 @@ def _cox_stuart_sql(dialect: str) -> str:
       SELECT a.y AS y1, b.y AS y2
       FROM idx a
       JOIN n ON true
-      JOIN idx b ON b.i = a.i + (n.n + 1){div}2
-      WHERE a.i <= n.n{div}2
+      JOIN idx b ON b.i = a.i + (n.n + 1){dialect.div}2
+      WHERE a.i <= n.n{dialect.div}2
     ),
     s AS (
       SELECT CAST(sum(CASE WHEN y2 <> y1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -226,10 +215,10 @@ def _cox_stuart_sql(dialect: str) -> str:
     SELECT m AS n_untied_pairs, s_pos AS n_increases,
       CAST((greatest(abs(2 * s_pos - m) - 1, 0)
             * greatest(abs(2 * s_pos - m) - 1, 0) * 1000000)
-           {div}m AS BIGINT) AS z2_ppm,
+           {dialect.div}m AS BIGINT) AS z2_ppm,
       (greatest(abs(2 * s_pos - m) - 1, 0)
        * greatest(abs(2 * s_pos - m) - 1, 0) * 1000000)
-        {div}m > {_CHI2_DF1_E6} AS reject_no_trend
+        {dialect.div}m > {_CHI2_DF1_E6} AS reject_no_trend
     FROM s
     """
 
@@ -257,9 +246,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _turning_points_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _turning_points_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     idx AS (
@@ -279,11 +266,11 @@ def _turning_points_sql(dialect: str) -> str:
       FROM trip
     )
     SELECT n AS n_days, tp AS n_turning_points,
-      CAST(2 * (n - 2) AS BIGINT) * 1000000{div}3 AS expected_tp_e6,
+      CAST(2 * (n - 2) AS BIGINT) * 1000000{dialect.div}3 AS expected_tp_e6,
       CAST(((3 * tp - 2 * (n - 2)) * (3 * tp - 2 * (n - 2)) * 10000000)
-           {div}(16 * n - 29) AS BIGINT) AS z2_ppm,
+           {dialect.div}(16 * n - 29) AS BIGINT) AS z2_ppm,
       ((3 * tp - 2 * (n - 2)) * (3 * tp - 2 * (n - 2)) * 10000000)
-        {div}(16 * n - 29) > {_CHI2_DF1_E6} AS reject_randomness
+        {dialect.div}(16 * n - 29) > {_CHI2_DF1_E6} AS reject_randomness
     FROM s
     """
 
@@ -313,16 +300,15 @@ _BM_SEG_A = "BUILDING"
 _BM_SEG_B = "MACHINERY"
 
 
-def _two_group_hist_sql(dialect: str) -> str:
+def _two_group_hist_sql(dialect: Dialect) -> str:
     """$10-bucket value histograms for the two market segments, full
     frame with both groups' counts and strictly-less cumulatives — the
     dunn/ansari midrank device specialized to two groups.  The window
     runs over the DISTINCT-bucket frame (price-range-bounded, the
     BOUNDED_FRAME_AUDITED class)."""
-    div = " div " if dialect == "spark" else " // "
     return f"""
     ov AS (
-      SELECT CAST(round(o.o_totalprice * 100) AS BIGINT){div}1000 AS v,
+      SELECT CAST(round(o.o_totalprice * 100) AS BIGINT){dialect.div}1000 AS v,
         c.c_mktsegment AS seg
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       WHERE c.c_mktsegment IN ('{_BM_SEG_A}', '{_BM_SEG_B}')
@@ -351,10 +337,7 @@ def _two_group_hist_sql(dialect: str) -> str:
     )"""
 
 
-def _bm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _bm_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     pl AS (
@@ -365,30 +348,30 @@ def _bm_sql(dialect: str) -> str:
     ),
     s AS (
       SELECT
-        CAST(sum(CAST(c1 AS {big}) * p2_vs2) AS {big}) AS m2_1,
-        CAST(sum(CAST(c1 AS {big}) * p2_vs2 * p2_vs2) AS {big}) AS q2_1,
-        CAST(sum(CAST(c2 AS {big}) * p2_vs1) AS {big}) AS m2_2,
-        CAST(sum(CAST(c2 AS {big}) * p2_vs1 * p2_vs1) AS {big}) AS q2_2
+        CAST(sum(CAST(c1 AS {dialect.big}) * p2_vs2) AS {dialect.big}) AS m2_1,
+        CAST(sum(CAST(c1 AS {dialect.big}) * p2_vs2 * p2_vs2) AS {dialect.big}) AS q2_1,
+        CAST(sum(CAST(c2 AS {dialect.big}) * p2_vs1) AS {dialect.big}) AS m2_2,
+        CAST(sum(CAST(c2 AS {dialect.big}) * p2_vs1 * p2_vs1) AS {dialect.big}) AS q2_2
       FROM pl
     ),
     fin AS (
       SELECT t.n1, t.n2,
-        CAST((s.m2_2 * 1000000){div}(2 * CAST(t.n1 AS {big}) * t.n2)
+        CAST((s.m2_2 * 1000000){dialect.div}(2 * CAST(t.n1 AS {dialect.big}) * t.n2)
              AS BIGINT) AS p_hat_ppm,
         CAST(((t.n1 * s.q2_1 - s.m2_1 * s.m2_1) * 1000000000000)
-             {div}(CAST(t.n1 AS {big}) * (t.n1 - 1) * 4
-                   * CAST(t.n2 AS {big}) * t.n2 * t.n1)
+             {dialect.div}(CAST(t.n1 AS {dialect.big}) * (t.n1 - 1) * 4
+                   * CAST(t.n2 AS {dialect.big}) * t.n2 * t.n1)
           + ((t.n2 * s.q2_2 - s.m2_2 * s.m2_2) * 1000000000000)
-             {div}(CAST(t.n2 AS {big}) * (t.n2 - 1) * 4
-                   * CAST(t.n1 AS {big}) * t.n1 * t.n2)
+             {dialect.div}(CAST(t.n2 AS {dialect.big}) * (t.n2 - 1) * 4
+                   * CAST(t.n1 AS {dialect.big}) * t.n1 * t.n2)
           AS BIGINT) AS var_e12
       FROM tot t CROSS JOIN s
     )
     SELECT n1, n2, p_hat_ppm, var_e12,
       CAST(((p_hat_ppm - 500000) * (p_hat_ppm - 500000) * 1000000)
-           {div}var_e12 AS BIGINT) AS z2_ppm,
+           {dialect.div}var_e12 AS BIGINT) AS z2_ppm,
       ((p_hat_ppm - 500000) * (p_hat_ppm - 500000) * 1000000)
-        {div}var_e12 > {_CHI2_DF1_E6} AS reject_stochastic_equality
+        {dialect.div}var_e12 > {_CHI2_DF1_E6} AS reject_stochastic_equality
     FROM fin
     """
 
@@ -411,30 +394,27 @@ sql_query(
 )
 
 
-def _cliffs_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _cliffs_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     s AS (
       SELECT
-        CAST(sum(CAST(c1 AS {big}) * lt2) AS {big}) AS n_gt,
-        CAST(sum(CAST(c2 AS {big}) * lt1) AS {big}) AS n_lt
+        CAST(sum(CAST(c1 AS {dialect.big}) * lt2) AS {dialect.big}) AS n_gt,
+        CAST(sum(CAST(c2 AS {dialect.big}) * lt1) AS {dialect.big}) AS n_lt
       FROM cum
     )
     SELECT t.n1, t.n2,
       CAST(((s.n_gt - s.n_lt) * 1000000)
-           {div}(CAST(t.n1 AS {big}) * t.n2) AS BIGINT) AS delta_ppm,
+           {dialect.div}(CAST(t.n1 AS {dialect.big}) * t.n2) AS BIGINT) AS delta_ppm,
       CASE
         WHEN abs(((s.n_gt - s.n_lt) * 1000000)
-                 {div}(CAST(t.n1 AS {big}) * t.n2)) < 147000
+                 {dialect.div}(CAST(t.n1 AS {dialect.big}) * t.n2)) < 147000
           THEN 'negligible'
         WHEN abs(((s.n_gt - s.n_lt) * 1000000)
-                 {div}(CAST(t.n1 AS {big}) * t.n2)) < 330000
+                 {dialect.div}(CAST(t.n1 AS {dialect.big}) * t.n2)) < 330000
           THEN 'small'
         WHEN abs(((s.n_gt - s.n_lt) * 1000000)
-                 {div}(CAST(t.n1 AS {big}) * t.n2)) < 474000
+                 {dialect.div}(CAST(t.n1 AS {dialect.big}) * t.n2)) < 474000
           THEN 'medium'
         ELSE 'large'
       END AS magnitude
@@ -465,16 +445,13 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _hl_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _hl_sql(dialect: Dialect) -> str:
     # the diff cross is bounded (B×B histogram buckets) — broadcast the
     # smaller histogram so the plan is a BNL join, not a CartesianProduct
-    hint = "/*+ BROADCAST(h2) */ " if spark else ""
+    hint = dialect.broadcast("h2")
     return f"""
     WITH ov AS (
-      SELECT CAST(round(o.o_totalprice * 100) AS BIGINT){div}100000 AS b,
+      SELECT CAST(round(o.o_totalprice * 100) AS BIGINT){dialect.div}100000 AS b,
         c.c_mktsegment AS seg
       FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
       WHERE c.c_mktsegment IN ('{_BM_SEG_A}', '{_BM_SEG_B}')
@@ -485,11 +462,11 @@ def _hl_sql(dialect: str) -> str:
            WHERE seg = '{_BM_SEG_B}' GROUP BY b),
     diffs AS (
       SELECT {hint}h1.b - h2.b AS d,
-        CAST(sum(CAST(h1.c AS {big}) * h2.c) AS {big}) AS w
+        CAST(sum(CAST(h1.c AS {dialect.big}) * h2.c) AS {dialect.big}) AS w
       FROM h1 CROSS JOIN h2
       GROUP BY h1.b - h2.b
     ),
-    tot AS (SELECT CAST(sum(w) AS {big}) AS t FROM diffs),
+    tot AS (SELECT CAST(sum(w) AS {dialect.big}) AS t FROM diffs),
     cw AS (
       SELECT d, sum(w) OVER (ORDER BY d
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
@@ -499,7 +476,7 @@ def _hl_sql(dialect: str) -> str:
       CAST(min(cw.d) AS BIGINT) AS hl_shift_bucket,
       CAST(min(cw.d) * 100000 AS BIGINT) AS hl_shift_cents
     FROM cw CROSS JOIN tot
-    WHERE cw.cum >= (tot.t + 1){div}2
+    WHERE cw.cum >= (tot.t + 1){dialect.div}2
     GROUP BY tot.t
     """
 
@@ -529,12 +506,10 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ordinal_pairs_sql(dialect: str) -> str:
+def _ordinal_pairs_sql(dialect: Dialect) -> str:
     """Concordant/discordant/tied pair masses from the (discount,
     quantity) value-cell collapse — the ``kendall_tau_cells`` device,
     extended with the single-tie margins gamma and Somers' D need."""
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
     return f"""
     cells AS (
       SELECT l_discount AS d, l_quantity AS q,
@@ -544,25 +519,24 @@ def _ordinal_pairs_sql(dialect: str) -> str:
     pm AS (
       SELECT
         CAST(sum(CASE WHEN b.d > a.d AND b.q > a.q
-                 THEN CAST(a.c AS {big}) * b.c ELSE 0 END) AS {big}) AS p,
+                 THEN CAST(a.c AS {dialect.big}) * b.c ELSE 0 END) AS {dialect.big}) AS p,
         CAST(sum(CASE WHEN b.d > a.d AND b.q < a.q
-                 THEN CAST(a.c AS {big}) * b.c ELSE 0 END) AS {big}) AS qd,
+                 THEN CAST(a.c AS {dialect.big}) * b.c ELSE 0 END) AS {dialect.big}) AS qd,
         CAST(sum(CASE WHEN b.d > a.d AND b.q = a.q
-                 THEN CAST(a.c AS {big}) * b.c ELSE 0 END) AS {big}) AS ty,
+                 THEN CAST(a.c AS {dialect.big}) * b.c ELSE 0 END) AS {dialect.big}) AS ty,
         CAST(sum(CASE WHEN b.d = a.d AND b.q > a.q
-                 THEN CAST(a.c AS {big}) * b.c ELSE 0 END) AS {big}) AS tx
+                 THEN CAST(a.c AS {dialect.big}) * b.c ELSE 0 END) AS {dialect.big}) AS tx
       FROM cells a JOIN cells b
         ON b.d > a.d OR (b.d = a.d AND b.q > a.q)
     )"""
 
 
-def _gamma_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _gamma_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_ordinal_pairs_sql(dialect)}
     SELECT CAST(p AS BIGINT) AS concordant,
       CAST(qd AS BIGINT) AS discordant,
-      CAST(((p - qd) * 1000000){div}(p + qd) AS BIGINT) AS gamma_ppm
+      CAST(((p - qd) * 1000000){dialect.div}(p + qd) AS BIGINT) AS gamma_ppm
     FROM pm
     """
 
@@ -584,17 +558,16 @@ sql_query(
 )
 
 
-def _somers_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _somers_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_ordinal_pairs_sql(dialect)}
     SELECT CAST(p AS BIGINT) AS concordant,
       CAST(qd AS BIGINT) AS discordant,
       CAST(ty AS BIGINT) AS tied_qty_only,
       CAST(tx AS BIGINT) AS tied_disc_only,
-      CAST(((p - qd) * 1000000){div}(p + qd + ty) AS BIGINT)
+      CAST(((p - qd) * 1000000){dialect.div}(p + qd + ty) AS BIGINT)
         AS somers_d_qty_given_disc_ppm,
-      CAST(((p - qd) * 1000000){div}(p + qd + tx) AS BIGINT)
+      CAST(((p - qd) * 1000000){dialect.div}(p + qd + tx) AS BIGINT)
         AS somers_d_disc_given_qty_ppm
     FROM pm
     """

@@ -26,25 +26,24 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql, _resid_ctes
 
 #: floor(1e6 · χ²(df=1, α=0.05))
 _CHI2_DF1_E6 = 3_841_458
 
 
-def _corr_e6(dialect: str, n: str, su: str, sv: str, suu: str,
+def _corr_e6(dialect: Dialect, n: str, su: str, sv: str, suu: str,
              svv: str, suv: str) -> str:
     """floor(1e6·corr) from exact integer moment columns — the
     ``partial_correlation_triples`` device (one sqrt per marginal,
     radicands exact)."""
-    big = "DECIMAL(38,0)" if dialect == "spark" else "HUGEINT"
     return (
         f"CAST(floor(1000000 * CAST({n} * {suv}"
-        f" - CAST({su} AS {big}) * {sv} AS DOUBLE)"
-        f" / (sqrt(CAST({n} * {suu} - CAST({su} AS {big}) * {su}"
+        f" - CAST({su} AS {dialect.big}) * {sv} AS DOUBLE)"
+        f" / (sqrt(CAST({n} * {suu} - CAST({su} AS {dialect.big}) * {su}"
         f" AS DOUBLE)) * sqrt(CAST({n} * {svv}"
-        f" - CAST({sv} AS {big}) * {sv} AS DOUBLE)))) AS BIGINT)"
+        f" - CAST({sv} AS {dialect.big}) * {sv} AS DOUBLE)))) AS BIGINT)"
     )
 
 
@@ -56,36 +55,33 @@ _QR_ITERS = 3
 _QR_DELTA_E6 = 1_000_000  # |r| floor: 1 revenue unit, in e6 scale
 
 
-def _qr_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _qr_sql(dialect: Dialect) -> str:
     stages = []
     prev = "c0"
     for k in range(1, _QR_ITERS + 1):
         stages.append(f"""w{k} AS (
       SELECT day.t, day.y,
-        1000000000000{div}greatest(
+        1000000000000{dialect.div}greatest(
           abs(day.y * 1000000 - p.a_ppm - p.b_ppm * day.t),
           {_QR_DELTA_E6}) AS w
       FROM day CROSS JOIN {prev} p
     ),
     s{k} AS (
       SELECT CAST(sum(w) AS BIGINT) AS sw,
-        CAST(sum(CAST(w AS {big}) * t) AS {big}) AS swt,
-        CAST(sum(CAST(w AS {big}) * y) AS {big}) AS swy,
-        CAST(sum(CAST(w AS {big}) * t * t) AS {big}) AS swtt,
-        CAST(sum(CAST(w AS {big}) * t * y) AS {big}) AS swty
+        CAST(sum(CAST(w AS {dialect.big}) * t) AS {dialect.big}) AS swt,
+        CAST(sum(CAST(w AS {dialect.big}) * y) AS {dialect.big}) AS swy,
+        CAST(sum(CAST(w AS {dialect.big}) * t * t) AS {dialect.big}) AS swtt,
+        CAST(sum(CAST(w AS {dialect.big}) * t * y) AS {dialect.big}) AS swty
       FROM w{k}
     ),
     c{k} AS (
       SELECT
         CAST(((sw * swty - swt * swy) * 1000000)
-             {div}(sw * swtt - swt * swt) AS BIGINT) AS b_ppm,
+             {dialect.div}(sw * swtt - swt * swt) AS BIGINT) AS b_ppm,
         CAST((swy * 1000000
               - ((sw * swty - swt * swy) * 1000000)
-                {div}(sw * swtt - swt * swt) * swt)
-             {div}sw AS BIGINT) AS a_ppm
+                {dialect.div}(sw * swtt - swt * swt) * swt)
+             {dialect.div}sw AS BIGINT) AS a_ppm
       FROM s{k}
     )""")
         prev = f"c{k}"
@@ -95,26 +91,26 @@ def _qr_sql(dialect: str) -> str:
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(t) AS BIGINT) AS s_t, CAST(sum(y) AS BIGINT) AS s_y,
-        CAST(sum(CAST(t AS {big}) * t) AS {big}) AS s_tt,
-        CAST(sum(CAST(t AS {big}) * y) AS {big}) AS s_ty
+        CAST(sum(CAST(t AS {dialect.big}) * t) AS {dialect.big}) AS s_tt,
+        CAST(sum(CAST(t AS {dialect.big}) * y) AS {dialect.big}) AS s_ty
       FROM day
     ),
     c0 AS (
       SELECT
-        CAST(((n * s_ty - CAST(s_t AS {big}) * s_y) * 1000000)
-             {div}(n * s_tt - CAST(s_t AS {big}) * s_t) AS BIGINT)
+        CAST(((n * s_ty - CAST(s_t AS {dialect.big}) * s_y) * 1000000)
+             {dialect.div}(n * s_tt - CAST(s_t AS {dialect.big}) * s_t) AS BIGINT)
           AS b_ppm,
-        CAST((CAST(s_y AS {big}) * 1000000
-              - ((n * s_ty - CAST(s_t AS {big}) * s_y) * 1000000)
-                {div}(n * s_tt - CAST(s_t AS {big}) * s_t) * s_t)
-             {div}n AS BIGINT) AS a_ppm
+        CAST((CAST(s_y AS {dialect.big}) * 1000000
+              - ((n * s_ty - CAST(s_t AS {dialect.big}) * s_y) * 1000000)
+                {dialect.div}(n * s_tt - CAST(s_t AS {dialect.big}) * s_t) * s_t)
+             {dialect.div}n AS BIGINT) AS a_ppm
       FROM st
     ),
     {chain},
     fin AS (
       SELECT st.n,
         CAST(sum(abs(day.y * 1000000 - p.a_ppm - p.b_ppm * day.t))
-             {div}st.n AS BIGINT) AS mean_abs_resid_e6,
+             {dialect.div}st.n AS BIGINT) AS mean_abs_resid_e6,
         min(p.a_ppm) AS a_ppm, min(p.b_ppm) AS b_ppm
       FROM day CROSS JOIN {prev} p CROSS JOIN st
       GROUP BY st.n
@@ -154,15 +150,9 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _granger_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _granger_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(o_orderdate, (SELECT min(o_orderdate) FROM orders))"
-        if spark
-        else "datediff('day', (SELECT min(o_orderdate) FROM orders),"
-        " o_orderdate)"
+        dialect.datediff("(SELECT min(o_orderdate) FROM orders)", "o_orderdate")
     )
     corr = lambda u, v: _corr_e6(  # noqa: E731
         dialect, "n", f"s_{u}", f"s_{v}", f"s_{u}{u}", f"s_{v}{v}",
@@ -173,7 +163,7 @@ def _granger_sql(dialect: str) -> str:
       SELECT CAST({dd} AS BIGINT) AS t,
         CAST(count(*) AS BIGINT) AS x,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-             AS BIGINT){div}100000 AS y
+             AS BIGINT){dialect.div}100000 AS y
       FROM orders GROUP BY 1
     ),
     lagf AS (
@@ -184,12 +174,12 @@ def _granger_sql(dialect: str) -> str:
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(a) AS BIGINT) AS s_a, CAST(sum(b) AS BIGINT) AS s_b,
         CAST(sum(c) AS BIGINT) AS s_c,
-        CAST(sum(CAST(a AS {big}) * a) AS {big}) AS s_aa,
-        CAST(sum(CAST(b AS {big}) * b) AS {big}) AS s_bb,
-        CAST(sum(CAST(c AS {big}) * c) AS {big}) AS s_cc,
-        CAST(sum(CAST(a AS {big}) * b) AS {big}) AS s_ab,
-        CAST(sum(CAST(a AS {big}) * c) AS {big}) AS s_ac,
-        CAST(sum(CAST(b AS {big}) * c) AS {big}) AS s_bc
+        CAST(sum(CAST(a AS {dialect.big}) * a) AS {dialect.big}) AS s_aa,
+        CAST(sum(CAST(b AS {dialect.big}) * b) AS {dialect.big}) AS s_bb,
+        CAST(sum(CAST(c AS {dialect.big}) * c) AS {dialect.big}) AS s_cc,
+        CAST(sum(CAST(a AS {dialect.big}) * b) AS {dialect.big}) AS s_ab,
+        CAST(sum(CAST(a AS {dialect.big}) * c) AS {dialect.big}) AS s_ac,
+        CAST(sum(CAST(b AS {dialect.big}) * c) AS {dialect.big}) AS s_bc
       FROM lagf
     ),
     r AS (
@@ -199,21 +189,21 @@ def _granger_sql(dialect: str) -> str:
     ),
     r2 AS (
       SELECT n,
-        CAST((CAST(r_yl AS {big}) * r_yl){div}1000000 AS BIGINT)
+        CAST((CAST(r_yl AS {dialect.big}) * r_yl){dialect.div}1000000 AS BIGINT)
           AS r2r_ppm,
-        CAST(((CAST(r_yl AS {big}) * r_yl + CAST(r_yx AS {big}) * r_yx
-               - ((2 * CAST(r_yl AS {big}) * r_yx){div}1000000) * r_lx)
+        CAST(((CAST(r_yl AS {dialect.big}) * r_yl + CAST(r_yx AS {dialect.big}) * r_yx
+               - ((2 * CAST(r_yl AS {dialect.big}) * r_yx){dialect.div}1000000) * r_lx)
               * 1000000)
-             {div}(1000000000000 - CAST(r_lx AS {big}) * r_lx)
+             {dialect.div}(1000000000000 - CAST(r_lx AS {dialect.big}) * r_lx)
              AS BIGINT) AS r2u_ppm
       FROM r
     )
     SELECT n AS n_pairs, r2r_ppm AS r2_restricted_ppm,
       r2u_ppm AS r2_unrestricted_ppm,
       CAST(((r2u_ppm - r2r_ppm) * (n - 3) * 1000000)
-           {div}(1000000 - r2u_ppm) AS BIGINT) AS f_ppm,
+           {dialect.div}(1000000 - r2u_ppm) AS BIGINT) AS f_ppm,
       ((r2u_ppm - r2r_ppm) * (n - 3) * 1000000)
-        {div}(1000000 - r2u_ppm) > {_CHI2_DF1_E6}
+        {dialect.div}(1000000 - r2u_ppm) > {_CHI2_DF1_E6}
         AS order_count_granger_causes_revenue
     FROM r2
     """
@@ -240,17 +230,14 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _arch_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _arch_sql(dialect: Dialect) -> str:
     corr = _corr_e6(
         dialect, "n", "s_u", "s_v", "s_uu", "s_vv", "s_uv"
     )
     return f"""
     WITH {_resid_ctes(dialect)},
     sq AS (
-      SELECT t, CAST(CAST(es AS {big}) * es{div}1000000 AS BIGINT) AS e2
+      SELECT t, CAST(CAST(es AS {dialect.big}) * es{dialect.div}1000000 AS BIGINT) AS e2
       FROM e
     ),
     pairs AS (
@@ -260,16 +247,16 @@ def _arch_sql(dialect: str) -> str:
     st2 AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(u) AS BIGINT) AS s_u, CAST(sum(v) AS BIGINT) AS s_v,
-        CAST(sum(CAST(u AS {big}) * u) AS {big}) AS s_uu,
-        CAST(sum(CAST(v AS {big}) * v) AS {big}) AS s_vv,
-        CAST(sum(CAST(u AS {big}) * v) AS {big}) AS s_uv
+        CAST(sum(CAST(u AS {dialect.big}) * u) AS {dialect.big}) AS s_uu,
+        CAST(sum(CAST(v AS {dialect.big}) * v) AS {dialect.big}) AS s_vv,
+        CAST(sum(CAST(u AS {dialect.big}) * v) AS {dialect.big}) AS s_uv
       FROM pairs
     ),
     r AS (SELECT n, {corr} AS r_ppm FROM st2)
     SELECT n AS n_pairs, r_ppm AS lag1_sq_corr_ppm,
-      CAST((n * CAST(r_ppm AS {big}) * r_ppm){div}1000000 AS BIGINT)
+      CAST((n * CAST(r_ppm AS {dialect.big}) * r_ppm){dialect.div}1000000 AS BIGINT)
         AS lm_ppm,
-      (n * CAST(r_ppm AS {big}) * r_ppm){div}1000000 > {_CHI2_DF1_E6}
+      (n * CAST(r_ppm AS {dialect.big}) * r_ppm){dialect.div}1000000 > {_CHI2_DF1_E6}
         AS reject_no_arch
     FROM r
     """
@@ -296,10 +283,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _yw_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _yw_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     st AS (
@@ -311,36 +295,36 @@ def _yw_sql(dialect: str) -> str:
       FROM day CROSS JOIN st
     ),
     den AS (
-      SELECT CAST(sum(CAST(d AS {big}) * d) AS {big}) AS g FROM dev
+      SELECT CAST(sum(CAST(d AS {dialect.big}) * d) AS {dialect.big}) AS g FROM dev
     ),
     ac1 AS (
-      SELECT CAST(sum(CAST(a.d AS {big}) * b.d) AS {big}) AS g
+      SELECT CAST(sum(CAST(a.d AS {dialect.big}) * b.d) AS {dialect.big}) AS g
       FROM dev a JOIN dev b ON b.t = a.t + 1
     ),
     ac2 AS (
-      SELECT CAST(sum(CAST(a.d AS {big}) * b.d) AS {big}) AS g
+      SELECT CAST(sum(CAST(a.d AS {dialect.big}) * b.d) AS {dialect.big}) AS g
       FROM dev a JOIN dev b ON b.t = a.t + 2
     ),
     r AS (
-      SELECT CAST((ac1.g * 1000000){div}den.g AS BIGINT) AS r1,
-        CAST((ac2.g * 1000000){div}den.g AS BIGINT) AS r2
+      SELECT CAST((ac1.g * 1000000){dialect.div}den.g AS BIGINT) AS r1,
+        CAST((ac2.g * 1000000){dialect.div}den.g AS BIGINT) AS r2
       FROM ac1 CROSS JOIN ac2 CROSS JOIN den
     ),
     phi AS (
       SELECT r1, r2,
-        CAST((CAST(r1 AS {big}) * (1000000 - r2) * 1000000)
-             {div}(1000000000000 - CAST(r1 AS {big}) * r1) AS BIGINT)
+        CAST((CAST(r1 AS {dialect.big}) * (1000000 - r2) * 1000000)
+             {dialect.div}(1000000000000 - CAST(r1 AS {dialect.big}) * r1) AS BIGINT)
           AS phi1_ppm,
-        CAST(((CAST(r2 AS {big}) * 1000000
-               - CAST(r1 AS {big}) * r1) * 1000000)
-             {div}(1000000000000 - CAST(r1 AS {big}) * r1) AS BIGINT)
+        CAST(((CAST(r2 AS {dialect.big}) * 1000000
+               - CAST(r1 AS {dialect.big}) * r1) * 1000000)
+             {dialect.div}(1000000000000 - CAST(r1 AS {dialect.big}) * r1) AS BIGINT)
           AS phi2_ppm
       FROM r
     )
     SELECT r1 AS r1_ppm, r2 AS r2_ppm, phi1_ppm, phi2_ppm,
       CAST(1000000
-           - (CAST(phi1_ppm AS {big}) * r1){div}1000000
-           - (CAST(phi2_ppm AS {big}) * r2){div}1000000 AS BIGINT)
+           - (CAST(phi1_ppm AS {dialect.big}) * r1){dialect.div}1000000
+           - (CAST(phi2_ppm AS {dialect.big}) * r2){dialect.div}1000000 AS BIGINT)
         AS innovation_ratio_ppm,
       (phi2_ppm + phi1_ppm < 1000000
        AND phi2_ppm - phi1_ppm < 1000000
@@ -368,10 +352,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _dm_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _dm_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     trip AS (
@@ -388,16 +369,16 @@ def _dm_sql(dialect: str) -> str:
     s AS (
       SELECT CAST(count(*) AS BIGINT) AS m,
         CAST(sum(d) AS BIGINT) AS sd,
-        CAST(sum(CAST(d AS {big}) * d) AS {big}) AS sdd
+        CAST(sum(CAST(d AS {dialect.big}) * d) AS {dialect.big}) AS sdd
       FROM ld
     )
     SELECT m AS n_triples, sd AS loss_diff_sum,
-      CAST((CAST(sd AS {big}) * sd * (m - 1) * 1000000)
-           {div}(m * sdd - CAST(sd AS {big}) * sd) AS BIGINT) AS z2_ppm,
+      CAST((CAST(sd AS {dialect.big}) * sd * (m - 1) * 1000000)
+           {dialect.div}(m * sdd - CAST(sd AS {dialect.big}) * sd) AS BIGINT) AS z2_ppm,
       sd < 0 AS drift_loss_lower,
       (sd < 0 AND
-       (CAST(sd AS {big}) * sd * (m - 1) * 1000000)
-         {div}(m * sdd - CAST(sd AS {big}) * sd) > {_CHI2_DF1_E6})
+       (CAST(sd AS {dialect.big}) * sd * (m - 1) * 1000000)
+         {dialect.div}(m * sdd - CAST(sd AS {dialect.big}) * sd) > {_CHI2_DF1_E6})
         AS drift_significantly_better
     FROM s
     """
@@ -425,10 +406,7 @@ sql_query(
 _TS_BAND_E6 = 4_000_000  # classic |TS| > 4 ops alarm
 
 
-def _ts_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ts_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     err AS (
@@ -446,7 +424,7 @@ def _ts_sql(dialect: str) -> str:
     ),
     ts AS (
       SELECT t, i,
-        CAST((CAST(ce AS {big}) * i * 1000000){div}ca AS BIGINT)
+        CAST((CAST(ce AS {dialect.big}) * i * 1000000){dialect.div}ca AS BIGINT)
           AS ts_ppm
       FROM walk WHERE ca > 0
     ),
@@ -465,7 +443,7 @@ def _ts_sql(dialect: str) -> str:
     )
     SELECT agg.n_days, agg.n_alarm_days, last.final_ts_ppm,
       worst.worst_day, worst.worst_ts_ppm,
-      agg.n_alarm_days * 1000000{div}agg.n_days AS alarm_share_ppm
+      agg.n_alarm_days * 1000000{dialect.div}agg.n_days AS alarm_share_ppm
     FROM agg CROSS JOIN last CROSS JOIN worst
     """
 
@@ -493,9 +471,7 @@ sql_query(
 _LN6_E6 = 1_791_759
 
 
-def _pe_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _pe_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     idx AS (
@@ -520,12 +496,12 @@ def _pe_sql(dialect: str) -> str:
       SELECT tot.m, tot.k,
         CAST(floor(1000000 * ln(CAST(tot.m AS DOUBLE))) AS BIGINT)
           - CAST(sum(c * CAST(floor(1000000 * ln(CAST(c AS DOUBLE)))
-                              AS BIGINT)) AS BIGINT){div}tot.m AS h_e6
+                              AS BIGINT)) AS BIGINT){dialect.div}tot.m AS h_e6
       FROM pc CROSS JOIN tot
       GROUP BY tot.m, tot.k
     )
     SELECT m AS n_triples, k AS n_patterns_observed, h_e6,
-      (h_e6 * 1000000){div}{_LN6_E6} AS normalized_ppm
+      (h_e6 * 1000000){dialect.div}{_LN6_E6} AS normalized_ppm
     FROM h
     """
 
@@ -552,10 +528,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _sen_seasonal_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _sen_seasonal_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
       SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
@@ -564,8 +537,8 @@ def _sen_seasonal_sql(dialect: str) -> str:
       FROM orders GROUP BY year(o_orderdate), month(o_orderdate)
     ),
     sl AS (
-      SELECT CAST((CAST(b.rev - a.rev AS {big}) * 1000000)
-                  {div}(CAST(b.yr - a.yr AS BIGINT) * 12) AS BIGINT)
+      SELECT CAST((CAST(b.rev - a.rev AS {dialect.big}) * 1000000)
+                  {dialect.div}(CAST(b.yr - a.yr AS BIGINT) * 12) AS BIGINT)
         AS s
       FROM m a JOIN m b ON b.mo = a.mo AND b.yr > a.yr
     ),
@@ -579,7 +552,7 @@ def _sen_seasonal_sql(dialect: str) -> str:
     SELECT tot.n AS n_pairs,
       CAST(min(cw.s) AS BIGINT) AS sen_slope_cents_per_month_e6
     FROM cw CROSS JOIN tot
-    WHERE cw.cum >= (tot.n + 1){div}2
+    WHERE cw.cum >= (tot.n + 1){dialect.div}2
     GROUP BY tot.n
     """
 
@@ -611,10 +584,7 @@ _ECC_W64 = (64, 32, 16, 8, 4, 2, 1)
 _ECC_FULL_DEN = sum(_ECC_W64)  # 127: the burn-in-complete denominator
 
 
-def _ecc_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ecc_sql(dialect: Dialect) -> str:
     lags = " + ".join(
         f"{w} * lag(y, {j}, CAST(0 AS BIGINT)) OVER (ORDER BY t)"
         for j, w in enumerate(_ECC_W64)
@@ -630,7 +600,7 @@ def _ecc_sql(dialect: str) -> str:
     WITH {_day_sql(dialect)},
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS q
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS q
       FROM day
     ),
     z AS (
@@ -641,18 +611,18 @@ def _ecc_sql(dialect: str) -> str:
     ),
     mon AS (
       SELECT t,
-        CAST((CAST(z64 AS {big}) * 1000000){div}den64 AS BIGINT) AS z_e6
+        CAST((CAST(z64 AS {dialect.big}) * 1000000){dialect.div}den64 AS BIGINT) AS z_e6
       FROM z WHERE den64 = {_ECC_FULL_DEN}
     ),
     lim AS (
-      SELECT n, (s * 1000000){div}n AS mu_e6,
-        CAST((3 * (n * q - CAST(s AS {big}) * s) * 1000000000000)
-             {div}(CAST(n AS {big}) * n) AS {big}) AS band2_e12
+      SELECT n, (s * 1000000){dialect.div}n AS mu_e6,
+        CAST((3 * (n * q - CAST(s AS {dialect.big}) * s) * 1000000000000)
+             {dialect.div}(CAST(n AS {dialect.big}) * n) AS {dialect.big}) AS band2_e12
       FROM st
     ),
     flags AS (
       SELECT mon.t, mon.z_e6, lim.mu_e6,
-        CAST(mon.z_e6 - lim.mu_e6 AS {big})
+        CAST(mon.z_e6 - lim.mu_e6 AS {dialect.big})
           * (mon.z_e6 - lim.mu_e6) AS dev2_e12,
         lim.band2_e12
       FROM mon CROSS JOIN lim
@@ -665,7 +635,7 @@ def _ecc_sql(dialect: str) -> str:
     ),
     worst AS (
       SELECT t AS worst_day,
-        CAST((dev2_e12 * 1000000){div}band2_e12 AS BIGINT)
+        CAST((dev2_e12 * 1000000){dialect.div}band2_e12 AS BIGINT)
           AS worst_dev2_ratio_ppm
       FROM flags ORDER BY dev2_e12 DESC, t LIMIT 1
     )

@@ -33,7 +33,7 @@ Reference parity: beyond-reference statistics/experimentation tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 _CHI2_DF1_E6 = 3_841_458
 _CHI2_DF2_E6 = 5_991_464
@@ -45,10 +45,7 @@ _CHI2_DF4_E6 = 9_487_729
 # ---------------------------------------------------------------------------
 
 
-def _gtest_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _gtest_sql(dialect: Dialect) -> str:
     return f"""
     WITH cell AS (
       SELECT l_returnflag AS rf, l_linestatus AS ls,
@@ -62,8 +59,8 @@ def _gtest_sql(dialect: str) -> str:
     terms AS (
       SELECT cell.o,
         CAST(floor(1000000 * ln(
-          CAST(CAST(cell.o AS {big}) * n.n AS DOUBLE)
-          / CAST(CAST(rm.r AS {big}) * cm.c AS DOUBLE))) AS BIGINT)
+          CAST(CAST(cell.o AS {dialect.big}) * n.n AS DOUBLE)
+          / CAST(CAST(rm.r AS {dialect.big}) * cm.c AS DOUBLE))) AS BIGINT)
           AS ln_e6
       FROM cell
       JOIN rm ON rm.rf = cell.rf
@@ -71,7 +68,7 @@ def _gtest_sql(dialect: str) -> str:
       CROSS JOIN n
     ),
     g AS (
-      SELECT CAST(sum(2 * o * ln_e6) AS {big}) AS g_num FROM terms
+      SELECT CAST(sum(2 * o * ln_e6) AS {dialect.big}) AS g_num FROM terms
     ),
     df AS (
       SELECT CAST((SELECT count(*) FROM rm) - 1 AS BIGINT)
@@ -110,12 +107,9 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ebshrink_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ebshrink_sql(dialect: Dialect) -> str:
     # kap is ONE row — broadcast it so the cross is a BNL join
-    hint = "/*+ BROADCAST(kap) */ " if spark else ""
+    hint = dialect.broadcast("kap")
     return f"""
     WITH s AS (
       SELECT n.n_name AS nation,
@@ -128,16 +122,16 @@ def _ebshrink_sql(dialect: str) -> str:
       GROUP BY n.n_name
     ),
     p AS (SELECT nation, n, a,
-                 CAST((a * 1000000){div}n AS BIGINT) AS p_ppm FROM s),
+                 CAST((a * 1000000){dialect.div}n AS BIGINT) AS p_ppm FROM s),
     mom AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
-        CAST(sum(p_ppm){div}count(*) AS BIGINT) AS m_ppm
+        CAST(sum(p_ppm){dialect.div}count(*) AS BIGINT) AS m_ppm
       FROM p
     ),
     vv AS (
       SELECT mom.k, mom.m_ppm,
-        CAST(sum(CAST(p.p_ppm - mom.m_ppm AS {big})
-                 * (p.p_ppm - mom.m_ppm)){div}(mom.k - 1) AS BIGINT)
+        CAST(sum(CAST(p.p_ppm - mom.m_ppm AS {dialect.big})
+                 * (p.p_ppm - mom.m_ppm)){dialect.div}(mom.k - 1) AS BIGINT)
           AS v_e12
       FROM p CROSS JOIN mom
       GROUP BY mom.k, mom.m_ppm
@@ -145,17 +139,17 @@ def _ebshrink_sql(dialect: str) -> str:
     kap AS (
       SELECT k, m_ppm, v_e12,
         greatest(CAST(0 AS BIGINT),
-          CAST((CAST(m_ppm AS {big}) * (1000000 - m_ppm) * 1000000)
-               {div}v_e12 - 1000000 AS BIGINT)) AS kappa_e6
+          CAST((CAST(m_ppm AS {dialect.big}) * (1000000 - m_ppm) * 1000000)
+               {dialect.div}v_e12 - 1000000 AS BIGINT)) AS kappa_e6
       FROM vv
     )
     SELECT {hint}p.nation, p.n, p.a, p.p_ppm AS raw_ppm,
-      CAST(((CAST(kap.m_ppm AS {big}) * kap.kappa_e6){div}1000000
+      CAST(((CAST(kap.m_ppm AS {dialect.big}) * kap.kappa_e6){dialect.div}1000000
             + p.a * 1000000) * 1000000
-           {div}(kap.kappa_e6 + p.n * 1000000) AS BIGINT)
+           {dialect.div}(kap.kappa_e6 + p.n * 1000000) AS BIGINT)
         AS shrunk_ppm,
-      CAST((CAST(kap.kappa_e6 AS {big}) * 1000000)
-           {div}(kap.kappa_e6 + p.n * 1000000) AS BIGINT)
+      CAST((CAST(kap.kappa_e6 AS {dialect.big}) * 1000000)
+           {dialect.div}(kap.kappa_e6 + p.n * 1000000) AS BIGINT)
         AS prior_weight_ppm,
       kap.m_ppm AS grand_rate_ppm
     FROM p CROSS JOIN kap
@@ -189,10 +183,7 @@ sql_query(
 _Z_E6 = 1_959_963
 
 
-def _ratio_ci_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ratio_ci_sql(dialect: Dialect) -> str:
     return f"""
     WITH cust AS (
       SELECT o_custkey, o_custkey % 2 AS variant,
@@ -204,17 +195,17 @@ def _ratio_ci_sql(dialect: str) -> str:
     st AS (
       SELECT variant, CAST(count(*) AS BIGINT) AS n,
         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        CAST(sum(CAST(x AS {big}) * x) AS {big}) AS sxx,
-        CAST(sum(CAST(y AS {big}) * y) AS {big}) AS syy,
-        CAST(sum(CAST(x AS {big}) * y) AS {big}) AS sxy
+        CAST(sum(CAST(x AS {dialect.big}) * x) AS {dialect.big}) AS sxx,
+        CAST(sum(CAST(y AS {dialect.big}) * y) AS {dialect.big}) AS syy,
+        CAST(sum(CAST(x AS {dialect.big}) * y) AS {dialect.big}) AS sxy
       FROM cust GROUP BY variant
     ),
     d AS (
       SELECT variant, n, sx, sy,
-        CAST((CAST(sx AS {big}) * 100){div}sy AS BIGINT) AS ratio_c,
-        CAST(n * sxx - CAST(sx AS {big}) * sx AS {big}) AS cxx,
-        CAST(n * syy - CAST(sy AS {big}) * sy AS {big}) AS cyy,
-        CAST(n * sxy - CAST(sx AS {big}) * sy AS {big}) AS cxy
+        CAST((CAST(sx AS {dialect.big}) * 100){dialect.div}sy AS BIGINT) AS ratio_c,
+        CAST(n * sxx - CAST(sx AS {dialect.big}) * sx AS {dialect.big}) AS cxx,
+        CAST(n * syy - CAST(sy AS {dialect.big}) * sy AS {dialect.big}) AS cyy,
+        CAST(n * sxy - CAST(sx AS {dialect.big}) * sy AS {dialect.big}) AS cxy
       FROM st
     ),
     se AS (
@@ -265,10 +256,7 @@ sql_query(
 _EV_HIGH_VALUE_C = 30_000_000  # > $300k ⇒ "high-value" (the CMH cut)
 
 
-def _evalue_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _evalue_sql(dialect: Dialect) -> str:
     return f"""
     WITH o AS (
       SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
@@ -286,14 +274,14 @@ def _evalue_sql(dialect: str) -> str:
     ),
     rr AS (
       SELECT a, b, c, d,
-        CAST((CAST(a AS {big}) * (c + d) * 1000000)
-             {div}(CAST(c AS {big}) * (a + b)) AS BIGINT) AS rr_ppm
+        CAST((CAST(a AS {dialect.big}) * (c + d) * 1000000)
+             {dialect.div}(CAST(c AS {dialect.big}) * (a + b)) AS BIGINT) AS rr_ppm
       FROM t
     ),
     star AS (
       SELECT a, b, c, d, rr_ppm,
         CASE WHEN rr_ppm >= 1000000 THEN rr_ppm
-             ELSE CAST(1000000000000{div}rr_ppm AS BIGINT)
+             ELSE CAST(1000000000000{dialect.div}rr_ppm AS BIGINT)
         END AS rr_star_ppm
       FROM rr
     )
@@ -332,19 +320,12 @@ sql_query(
 _ATO_BUCKET_C = 2_500_000  # $25k propensity-score buckets
 
 
-def _ato_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    lat = (
-        "datediff(l.l_shipdate, o.o_orderdate)"
-        if spark
-        else "datediff('day', o.o_orderdate, l.l_shipdate)"
-    )
+def _ato_sql(dialect: Dialect) -> str:
+    lat = dialect.datediff("o.o_orderdate", "l.l_shipdate")
     return f"""
     WITH u AS (
       SELECT o.o_orderkey AS k,
-        CAST(round(o.o_totalprice * 100) AS BIGINT){div}{_ATO_BUCKET_C}
+        CAST(round(o.o_totalprice * 100) AS BIGINT){dialect.div}{_ATO_BUCKET_C}
           AS bkt,
         CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS z,
         CAST(min({lat}) AS BIGINT) AS lat
@@ -352,7 +333,7 @@ def _ato_sql(dialect: str) -> str:
       GROUP BY 1, 2, 3
     ),
     ps AS (
-      SELECT bkt, CAST((sum(z) * 1000000){div}count(*) AS BIGINT)
+      SELECT bkt, CAST((sum(z) * 1000000){dialect.div}count(*) AS BIGINT)
         AS e_ppm
       FROM u GROUP BY bkt
     ),
@@ -368,24 +349,24 @@ def _ato_sql(dialect: str) -> str:
         CAST(sum(CASE WHEN z = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
         CAST(sum(CASE WHEN z = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c,
         CAST(sum(CASE WHEN z = 1
-                 THEN CAST(w_ppm AS {big}) * lat ELSE 0 END) AS {big})
+                 THEN CAST(w_ppm AS {dialect.big}) * lat ELSE 0 END) AS {dialect.big})
           AS num_t,
-        CAST(sum(CASE WHEN z = 1 THEN w_ppm ELSE 0 END) AS {big})
+        CAST(sum(CASE WHEN z = 1 THEN w_ppm ELSE 0 END) AS {dialect.big})
           AS den_t,
         CAST(sum(CASE WHEN z = 0
-                 THEN CAST(w_ppm AS {big}) * lat ELSE 0 END) AS {big})
+                 THEN CAST(w_ppm AS {dialect.big}) * lat ELSE 0 END) AS {dialect.big})
           AS num_c,
-        CAST(sum(CASE WHEN z = 0 THEN w_ppm ELSE 0 END) AS {big})
+        CAST(sum(CASE WHEN z = 0 THEN w_ppm ELSE 0 END) AS {dialect.big})
           AS den_c,
         CAST(sum(CASE WHEN z = 1 THEN lat ELSE 0 END) AS BIGINT) AS s_t,
         CAST(sum(CASE WHEN z = 0 THEN lat ELSE 0 END) AS BIGINT) AS s_c
       FROM w
     )
     SELECT n_t AS n_treated, n_c AS n_control,
-      CAST((num_t * 1000000){div}den_t
-           - (num_c * 1000000){div}den_c AS BIGINT)
+      CAST((num_t * 1000000){dialect.div}den_t
+           - (num_c * 1000000){dialect.div}den_c AS BIGINT)
         AS ato_latency_days_e6,
-      CAST((s_t * 1000000){div}n_t - (s_c * 1000000){div}n_c AS BIGINT)
+      CAST((s_t * 1000000){dialect.div}n_t - (s_c * 1000000){dialect.div}n_c AS BIGINT)
         AS naive_diff_days_e6
     FROM agg
     """
@@ -416,10 +397,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _kw_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _kw_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
       SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS ym,
@@ -444,15 +422,15 @@ def _kw_sql(dialect: str) -> str:
     nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM full_m),
     s2 AS (
       SELECT nb.n,
-        CAST(sum(CAST(2 * cs.rj - nb.n * 6 AS {big})
-                 * (2 * cs.rj - nb.n * 6)) AS {big}) AS s2
+        CAST(sum(CAST(2 * cs.rj - nb.n * 6 AS {dialect.big})
+                 * (2 * cs.rj - nb.n * 6)) AS {dialect.big}) AS s2
       FROM cs CROSS JOIN nb
       GROUP BY nb.n
     ),
     w AS (
       SELECT n,
         CAST((3 * s2 * 1000000)
-             {div}(CAST(n AS {big}) * n * 5 * 24) AS BIGINT) AS w_ppm
+             {dialect.div}(CAST(n AS {dialect.big}) * n * 5 * 24) AS BIGINT) AS w_ppm
       FROM s2
     )
     SELECT n AS n_blocks, w_ppm,

@@ -24,7 +24,7 @@ Reference parity: beyond-reference analytics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
 # ---------------------------------------------------------------------------
@@ -32,21 +32,18 @@ from .catalog import sql_query
 # ---------------------------------------------------------------------------
 
 
-def _gini_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _gini_sql(dialect: Dialect) -> str:
     dectab = (
         "SELECT CAST(d AS BIGINT) AS d FROM"
         " (SELECT explode(sequence(1, 10)) AS d)"
-        if spark
+        if dialect.spark
         else "SELECT CAST(unnest(generate_series(1, 10)) AS BIGINT) AS d"
     )
     return f"""
     WITH cust AS (
       SELECT c.c_custkey,
         CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
-                      0) AS BIGINT){div}100000 AS v
+                      0) AS BIGINT){dialect.div}100000 AS v
       FROM customer c
       LEFT JOIN orders o ON o.o_custkey = c.c_custkey
       GROUP BY c.c_custkey
@@ -56,23 +53,23 @@ def _gini_sql(dialect: str) -> str:
       SELECT v, c,
         sum(c) OVER (ORDER BY v
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn,
-        sum(CAST(c AS {big}) * v) OVER (ORDER BY v
+        sum(CAST(c AS {dialect.big}) * v) OVER (ORDER BY v
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
       FROM h
     ),
     tot AS (
       SELECT CAST(sum(c) AS BIGINT) AS n,
-        CAST(sum(CAST(c AS {big}) * v) AS {big}) AS s
+        CAST(sum(CAST(c AS {dialect.big}) * v) AS {dialect.big}) AS s
       FROM h
     ),
     pairmass AS (
-      SELECT CAST(sum(CAST(cum.c AS {big}) * cum.v * (cum.cn - cum.c)
-                      - cum.c * (cum.cs - CAST(cum.c AS {big}) * cum.v))
-                  AS {big}) AS pm
+      SELECT CAST(sum(CAST(cum.c AS {dialect.big}) * cum.v * (cum.cn - cum.c)
+                      - cum.c * (cum.cs - CAST(cum.c AS {dialect.big}) * cum.v))
+                  AS {dialect.big}) AS pm
       FROM cum
     ),
     gini AS (
-      SELECT CAST((pm.pm * 1000000){div}(CAST(tot.n AS {big}) * tot.s)
+      SELECT CAST((pm.pm * 1000000){dialect.div}(CAST(tot.n AS {dialect.big}) * tot.s)
                   AS BIGINT) AS gini_ppm
       FROM pairmass pm CROSS JOIN tot
     ),
@@ -88,8 +85,8 @@ def _gini_sql(dialect: str) -> str:
       GROUP BY dt.d
     )
     SELECT dec.d AS decile,
-      CAST((dec.cn_at * 1000000){div}tot.n AS BIGINT) AS pop_share_ppm,
-      CAST((CAST(dec.cs_at AS {big}) * 1000000){div}tot.s AS BIGINT)
+      CAST((dec.cn_at * 1000000){dialect.div}tot.n AS BIGINT) AS pop_share_ppm,
+      CAST((CAST(dec.cs_at AS {dialect.big}) * 1000000){dialect.div}tot.s AS BIGINT)
         AS rev_share_ppm,
       gini.gini_ppm
     FROM dec CROSS JOIN tot CROSS JOIN gini
@@ -127,31 +124,20 @@ _DD_QS = (50, 90, 99)
 _DD_POWS = ", ".join(f"({j}, {1 << j})" for j in range(41))
 
 
-def _dd_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
-    ptab = (
-        f"SELECT j, lo FROM VALUES {_DD_POWS} AS t(j, lo)"
-        if spark
-        else f"SELECT j, lo FROM (VALUES {_DD_POWS}) t(j, lo)"
-    )
+def _dd_sql(dialect: Dialect) -> str:
+    ptab = f"SELECT j, lo FROM {dialect.values(_DD_POWS, 't(j, lo)')}"
     qtab = (
-        "SELECT CAST(q AS BIGINT) AS q FROM VALUES (50), (90), (99)"
-        " AS t(q)"
-        if spark
-        else "SELECT CAST(q AS BIGINT) AS q FROM (VALUES (50), (90),"
-        " (99)) t(q)"
+        f"SELECT CAST(q AS BIGINT) AS q FROM {dialect.values('(50), (90), (99)', 't(q)')}"
     )
-    hint = "/*+ BROADCAST(p) */ " if spark else ""
+    hint = dialect.broadcast("p")
     return f"""
     WITH v AS (
       SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
     ),
     b AS (
       SELECT {hint}p.j * {_DD_SUB}
-               + ((v.c - p.lo) * {_DD_SUB}){div}p.lo AS bkt,
-        p.lo + (((v.c - p.lo) * {_DD_SUB}){div}p.lo * p.lo){div}{_DD_SUB}
+               + ((v.c - p.lo) * {_DD_SUB}){dialect.div}p.lo AS bkt,
+        p.lo + (((v.c - p.lo) * {_DD_SUB}){dialect.div}p.lo * p.lo){dialect.div}{_DD_SUB}
           AS lb
       FROM v JOIN ({ptab}) p ON v.c >= p.lo AND v.c < 2 * p.lo
     ),
@@ -191,7 +177,7 @@ def _dd_sql(dialect: str) -> str:
     )
     SELECT est.q AS quantile_pct, est.est_c, exact.exact_c,
       CAST((abs(est.est_c - exact.exact_c) * 1000000)
-           {div}exact.exact_c AS BIGINT) AS rel_err_ppm,
+           {dialect.div}exact.exact_c AS BIGINT) AS rel_err_ppm,
       n.n_buckets AS sketch_size
     FROM est JOIN exact ON exact.q = est.q CROSS JOIN n
     """
@@ -225,9 +211,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _zip_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _zip_sql(dialect: Dialect) -> str:
     return f"""
     WITH cnt AS (
       SELECT c.c_custkey,
@@ -244,13 +228,13 @@ def _zip_sql(dialect: str) -> str:
       FROM cnt
     )
     SELECT n AS n_customers, z AS n_zero,
-      CAST((tot * 1000000){div}n AS BIGINT) AS lambda_e6,
+      CAST((tot * 1000000){dialect.div}n AS BIGINT) AS lambda_e6,
       CAST(floor(1000000 * ln(CAST(z AS DOUBLE) / n)) AS BIGINT)
         AS ln_p0_obs_e6,
       CAST(floor(1000000 * ln(CAST(z AS DOUBLE) / n))
-           + (tot * 1000000){div}n AS BIGINT) AS zi_score_e6,
+           + (tot * 1000000){dialect.div}n AS BIGINT) AS zi_score_e6,
       floor(1000000 * ln(CAST(z AS DOUBLE) / n))
-        + (tot * 1000000){div}n > 0 AS excess_zeros
+        + (tot * 1000000){dialect.div}n > 0 AS excess_zeros
     FROM s
     """
 

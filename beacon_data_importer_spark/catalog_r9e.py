@@ -26,14 +26,14 @@ Reference parity: beyond-reference embedding/graph tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8e import _cos_e6_pre, _norm
 
 
 _CENT_MOD = 100  # ivf_search's deterministic centroid rule
 
 
-def _cent_assign_ctes(dialect: str) -> str:
+def _cent_assign_ctes(dialect: Dialect) -> str:
     """embn + cent + assign: the ``ivf_search``/``hard_negative_mining_ivf``
     CTE pair (nearest-centroid map over the corpus), with per-vector
     norms precomputed in ``embn`` (r11: one fold per pair instead of
@@ -63,8 +63,7 @@ def _cent_assign_ctes(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _balance_sql(dialect: str) -> str:
-    div = " div " if dialect == "spark" else " // "
+def _balance_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_cent_assign_ctes(dialect)},
     pop AS (
@@ -75,9 +74,9 @@ def _balance_sql(dialect: str) -> str:
       CAST(sum(c) AS BIGINT) AS n_vectors,
       CAST(max(c) AS BIGINT) AS max_cell,
       CAST(min(c) AS BIGINT) AS min_cell,
-      CAST((max(c) * count(*) * 1000000){div}sum(c) AS BIGINT)
+      CAST((max(c) * count(*) * 1000000){dialect.div}sum(c) AS BIGINT)
         AS imbalance_ppm,
-      CAST((max(c) * 1000000){div}sum(c) AS BIGINT)
+      CAST((max(c) * 1000000){dialect.div}sum(c) AS BIGINT)
         AS largest_cell_share_ppm
     FROM pop
     """
@@ -111,18 +110,14 @@ _CURVE_MAX_NPROBE = 5
 _CURVE_K = 10
 
 
-def _curve_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _curve_sql(dialect: Dialect) -> str:
     cos_qc = _cos_e6_pre(dialect, "q.qvec", "c.cvec", "q.qnrm", "c.cnrm")
     cos_eq = _cos_e6_pre(
         dialect, "e.embedding", "q.qvec", "e.nrm", "q.qnrm"
     )
     nps = ", ".join(f"({i})" for i in range(1, _CURVE_MAX_NPROBE + 1))
     nptab = (
-        f"SELECT CAST(np AS BIGINT) AS np FROM VALUES {nps} AS t(np)"
-        if spark
-        else f"SELECT CAST(np AS BIGINT) AS np FROM (VALUES {nps}) t(np)"
+        f"SELECT CAST(np AS BIGINT) AS np FROM {dialect.values(nps, 't(np)')}"
     )
     return f"""
     WITH {_cent_assign_ctes(dialect)},
@@ -160,7 +155,7 @@ def _curve_sql(dialect: str) -> str:
     SELECT a.np AS nprobe,
       CAST(min(a.n_cand) AS BIGINT) AS n_candidates,
       CAST(count(e.vec_id) AS BIGINT) AS n_hits,
-      CAST((count(e.vec_id) * 1000000){div}{_CURVE_K} AS BIGINT)
+      CAST((count(e.vec_id) * 1000000){dialect.div}{_CURVE_K} AS BIGINT)
         AS recall_ppm
     FROM approx a LEFT JOIN exact e ON e.vec_id = a.vec_id
     GROUP BY a.np
@@ -196,10 +191,8 @@ _PQ_K = 16
 _PQ_DSUB = 8
 
 
-def _pq_dist_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    if spark:
+def _pq_dist_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         sub = (
             f"slice(CAST(e.ev AS ARRAY<DOUBLE>),"
             f" cw.s * {_PQ_DSUB} + 1, {_PQ_DSUB})"
@@ -246,7 +239,7 @@ def _pq_dist_sql(dialect: str) -> str:
       {'''SELECT vec_id, s, min(struct(d2, c)).d2 AS d2 FROM (
         SELECT e.vec_id, cw.s, cw.c, ''' + d2(sub, "cw.w") + ''' AS d2
         FROM emb e CROSS JOIN cw
-      ) t GROUP BY vec_id, s''' if spark else '''SELECT vec_id, s, d2 FROM (
+      ) t GROUP BY vec_id, s''' if dialect.spark else '''SELECT vec_id, s, d2 FROM (
         SELECT e.vec_id, cw.s, ''' + d2(sub, "cw.w") + ''' AS d2,
                row_number() OVER (PARTITION BY e.vec_id, cw.s
                  ORDER BY ''' + d2(sub, "cw.w") + ''', cw.c) AS rn
@@ -258,7 +251,7 @@ def _pq_dist_sql(dialect: str) -> str:
     )
     SELECT s AS subspace,
       CAST(count(*) AS BIGINT) AS n_vectors,
-      CAST(sum(d2_e6){div}count(*) AS BIGINT) AS mean_sq_err_e6,
+      CAST(sum(d2_e6){dialect.div}count(*) AS BIGINT) AS mean_sq_err_e6,
       CAST(max(d2_e6) AS BIGINT) AS max_sq_err_e6
     FROM fl GROUP BY s
     """
@@ -289,9 +282,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _assort_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
+def _assort_sql(dialect: Dialect) -> str:
     return f"""
     WITH edges AS (
       SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
@@ -305,21 +296,21 @@ def _assort_sql(dialect: str) -> str:
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(u) AS BIGINT) AS s_u, CAST(sum(v) AS BIGINT) AS s_v,
-        CAST(sum(CAST(u AS {big}) * u) AS {big}) AS s_uu,
-        CAST(sum(CAST(v AS {big}) * v) AS {big}) AS s_vv,
-        CAST(sum(CAST(u AS {big}) * v) AS {big}) AS s_uv
+        CAST(sum(CAST(u AS {dialect.big}) * u) AS {dialect.big}) AS s_uu,
+        CAST(sum(CAST(v AS {dialect.big}) * v) AS {dialect.big}) AS s_vv,
+        CAST(sum(CAST(u AS {dialect.big}) * v) AS {dialect.big}) AS s_uv
       FROM ed
     )
     SELECT n AS n_edges,
       CAST(floor(1000000 * CAST(n * s_uv
-             - CAST(s_u AS {big}) * s_v AS DOUBLE)
-           / (sqrt(CAST(n * s_uu - CAST(s_u AS {big}) * s_u AS DOUBLE))
-              * sqrt(CAST(n * s_vv - CAST(s_v AS {big}) * s_v
+             - CAST(s_u AS {dialect.big}) * s_v AS DOUBLE)
+           / (sqrt(CAST(n * s_uu - CAST(s_u AS {dialect.big}) * s_u AS DOUBLE))
+              * sqrt(CAST(n * s_vv - CAST(s_v AS {dialect.big}) * s_v
                           AS DOUBLE)))) AS BIGINT) AS assortativity_ppm,
       floor(1000000 * CAST(n * s_uv
-             - CAST(s_u AS {big}) * s_v AS DOUBLE)
-           / (sqrt(CAST(n * s_uu - CAST(s_u AS {big}) * s_u AS DOUBLE))
-              * sqrt(CAST(n * s_vv - CAST(s_v AS {big}) * s_v
+             - CAST(s_u AS {dialect.big}) * s_v AS DOUBLE)
+           / (sqrt(CAST(n * s_uu - CAST(s_u AS {dialect.big}) * s_u AS DOUBLE))
+              * sqrt(CAST(n * s_vv - CAST(s_v AS {dialect.big}) * s_v
                           AS DOUBLE)))) > 0 AS assortative
     FROM st
     """

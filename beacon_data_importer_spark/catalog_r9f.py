@@ -21,15 +21,14 @@ Reference parity: beyond-reference text tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 
 
-def _tri_cte(dialect: str) -> str:
+def _tri_cte(dialect: Dialect) -> str:
     """doc_id → word-trigram OCCURRENCES (``tri``): the array-device
     form — trigrams come from one ``transform`` over the token array
     (no per-doc window, no posexplode shuffle)."""
-    spark = dialect == "spark"
-    if spark:
+    if dialect.spark:
         tk = r"split(lower(trim(text)), '\\s+')"
         gs = (
             "transform(sequence(0, size(tk) - 3),"
@@ -63,9 +62,7 @@ def _tri_cte(dialect: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _novelty_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _novelty_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tri_cte(dialect)},
     firstd AS (SELECT g, CAST(min(doc_id) AS BIGINT) AS fd
@@ -85,16 +82,16 @@ def _novelty_sql(dialect: str) -> str:
     )
     SELECT
       least(CAST(9 AS BIGINT),
-            ((perdoc.doc_id - rng.lo) * 10){div}(rng.hi - rng.lo + 1))
+            ((perdoc.doc_id - rng.lo) * 10){dialect.div}(rng.hi - rng.lo + 1))
         AS decile,
       CAST(count(*) AS BIGINT) AS n_docs,
       CAST(sum(n_tri) AS BIGINT) AS n_trigrams,
       CAST(sum(n_novel) AS BIGINT) AS n_novel,
-      CAST((sum(n_novel) * 1000000){div}sum(n_tri) AS BIGINT)
+      CAST((sum(n_novel) * 1000000){dialect.div}sum(n_tri) AS BIGINT)
         AS novelty_ppm
     FROM perdoc CROSS JOIN rng
     GROUP BY least(CAST(9 AS BIGINT),
-             ((perdoc.doc_id - rng.lo) * 10){div}(rng.hi - rng.lo + 1))
+             ((perdoc.doc_id - rng.lo) * 10){dialect.div}(rng.hi - rng.lo + 1))
     """
 
 
@@ -127,9 +124,7 @@ _SC_DF_MAX = 10    # inverted-index blocking: shingles in >10 docs drop
 _SC_MIN_SHARED = 3  # emit pairs sharing >= 3 rare shingles
 
 
-def _containment_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _containment_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_tri_cte(dialect)},
     ds AS (SELECT DISTINCT doc_id, g FROM tri),
@@ -150,9 +145,9 @@ def _containment_sql(dialect: str) -> str:
     )
     SELECT p.doc_a, p.doc_b, p.n_shared,
       ra.n_rare AS n_rare_a, rb.n_rare AS n_rare_b,
-      (p.n_shared * 1000000){div}ra.n_rare AS containment_a_ppm,
-      (p.n_shared * 1000000){div}rb.n_rare AS containment_b_ppm,
-      (p.n_shared * 1000000){div}least(ra.n_rare, rb.n_rare)
+      (p.n_shared * 1000000){dialect.div}ra.n_rare AS containment_a_ppm,
+      (p.n_shared * 1000000){dialect.div}rb.n_rare AS containment_b_ppm,
+      (p.n_shared * 1000000){dialect.div}least(ra.n_rare, rb.n_rare)
         AS max_containment_ppm
     FROM pairs p
     JOIN rsize ra ON ra.doc_id = p.doc_a
@@ -190,10 +185,8 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _fertility_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
-    if spark:
+def _fertility_sql(dialect: Dialect) -> str:
+    if dialect.spark:
         n_words = r"size(split(trim(text), '\\s+'))"
         n_tok = (
             "size(regexp_extract_all(text, '[A-Za-z0-9_]+', 0))"
@@ -218,8 +211,8 @@ def _fertility_sql(dialect: str) -> str:
       CAST(sum(w) AS BIGINT) AS n_words,
       CAST(sum(t) AS BIGINT) AS n_tokens,
       CAST(sum(ch) AS BIGINT) AS n_chars,
-      CAST((sum(t) * 1000000){div}sum(w) AS BIGINT) AS fertility_ppm,
-      CAST((sum(ch) * 1000000){div}sum(t) AS BIGINT)
+      CAST((sum(t) * 1000000){dialect.div}sum(w) AS BIGINT) AS fertility_ppm,
+      CAST((sum(ch) * 1000000){dialect.div}sum(t) AS BIGINT)
         AS chars_per_token_ppm
     FROM d GROUP BY source
     """

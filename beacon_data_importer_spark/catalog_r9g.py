@@ -32,7 +32,7 @@ Reference parity: beyond-reference statistics tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _ordinal_pairs_sql, _two_group_hist_sql
 
@@ -46,10 +46,7 @@ _AD2_CRIT_E6 = 2_492_000
 # ---------------------------------------------------------------------------
 
 
-def _ad2_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ad2_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     strat AS (
@@ -59,17 +56,17 @@ def _ad2_sql(dialect: str) -> str:
       FROM cum
     ),
     terms AS (
-      SELECT CAST((CAST(c AS {big})
+      SELECT CAST((CAST(c AS {dialect.big})
                    * (t.n2 * ca - t.n1 * cb) * (t.n2 * ca - t.n1 * cb)
                    * 1000000)
-                  {div}(CAST(cn AS {big}) * (t.n1 + t.n2 - cn))
-                  AS {big}) AS term_e6
+                  {dialect.div}(CAST(cn AS {dialect.big}) * (t.n1 + t.n2 - cn))
+                  AS {dialect.big}) AS term_e6
       FROM strat CROSS JOIN tot t
       WHERE cn < t.n1 + t.n2
     ),
     a2 AS (
       SELECT CAST(sum(term_e6)
-                  {div}(CAST(t.n1 AS {big}) * t.n2)
+                  {dialect.div}(CAST(t.n1 AS {dialect.big}) * t.n2)
                   AS BIGINT) AS a2_e6
       FROM terms CROSS JOIN tot t
       GROUP BY t.n1, t.n2
@@ -105,14 +102,11 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _ph_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _ph_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     lam AS (
-      SELECT CAST((sum(y) * 1000000{div}count(*)){div}10 AS BIGINT)
+      SELECT CAST((sum(y) * 1000000{dialect.div}count(*)){dialect.div}10 AS BIGINT)
         AS lambda_e6
       FROM day
     ),
@@ -126,7 +120,7 @@ def _ph_sql(dialect: str) -> str:
     ),
     dev AS (
       SELECT t, i,
-        CAST(y * 1000000 - (cy * 1000000){div}i AS BIGINT) AS d_e6
+        CAST(y * 1000000 - (cy * 1000000){dialect.div}i AS BIGINT) AS d_e6
       FROM walk
     ),
     m AS (
@@ -191,10 +185,7 @@ sql_query(
 _TS_Z2_E6 = 3_841_458
 
 
-def _tsci_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _tsci_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
       SELECT year(o_orderdate) * 100 + month(o_orderdate) AS ym,
@@ -207,8 +198,8 @@ def _tsci_sql(dialect: str) -> str:
       FROM m
     ),
     sl AS (
-      SELECT CAST((CAST(b.rev - a.rev AS {big}) * 1000000)
-                  {div}(b.i - a.i) AS BIGINT) AS s
+      SELECT CAST((CAST(b.rev - a.rev AS {dialect.big}) * 1000000)
+                  {dialect.div}(b.i - a.i) AS BIGINT) AS s
       FROM idx a JOIN idx b ON b.i > a.i
     ),
     h AS (SELECT s, CAST(count(*) AS BIGINT) AS c FROM sl GROUP BY s),
@@ -226,9 +217,9 @@ def _tsci_sql(dialect: str) -> str:
     ),
     bounds AS (
       SELECT ns, n, c_alpha,
-        greatest(CAST(1 AS BIGINT), (ns - c_alpha){div}2) AS r_lo,
-        least(ns, (ns + c_alpha){div}2 + 1) AS r_hi,
-        (ns + 1){div}2 AS r_med
+        greatest(CAST(1 AS BIGINT), (ns - c_alpha){dialect.div}2) AS r_lo,
+        least(ns, (ns + c_alpha){dialect.div}2 + 1) AS r_hi,
+        (ns + 1){dialect.div}2 AS r_med
       FROM ranks
     ),
     cw AS (
@@ -275,7 +266,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _taub_sql(dialect: str) -> str:
+def _taub_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_ordinal_pairs_sql(dialect)}
     SELECT CAST(p AS BIGINT) AS concordant,
@@ -313,9 +304,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _mp_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    div = " div " if spark else " // "
+def _mp_sql(dialect: Dialect) -> str:
     # rank-defined LOWER median of a partition: the ((cnt+1) div 2)-th
     # value under (value, tiebreak) total order
     return f"""
@@ -345,7 +334,7 @@ def _mp_sql(dialect: str) -> str:
           ORDER BY v, ym) AS rn,
           count(*) OVER (PARTITION BY seg) AS cnt
         FROM s1
-      ) t WHERE rn = (cnt + 1){div}2
+      ) t WHERE rn = (cnt + 1){dialect.div}2
     ),
     s2 AS (
       SELECT s1.ym, s1.seg, s1.v - cm1.med AS v, cm1.med AS ce1
@@ -367,7 +356,7 @@ def _mp_sql(dialect: str) -> str:
           ORDER BY v, ym) AS rn,
           count(*) OVER (PARTITION BY seg) AS cnt
         FROM s3
-      ) t WHERE rn = (cnt + 1){div}2
+      ) t WHERE rn = (cnt + 1){dialect.div}2
     ),
     resid AS (
       SELECT s3.ym, s3.seg, s3.v - cm2.med AS r,
@@ -378,7 +367,7 @@ def _mp_sql(dialect: str) -> str:
       CAST(min(col_effect) AS BIGINT) AS segment_effect_c,
       CAST(count(*) AS BIGINT) AS n_months,
       CAST(max(abs(r)) AS BIGINT) AS max_abs_resid_c,
-      CAST(sum(abs(r)){div}count(*) AS BIGINT) AS mean_abs_resid_c
+      CAST(sum(abs(r)){dialect.div}count(*) AS BIGINT) AS mean_abs_resid_c
     FROM resid GROUP BY seg
     """
 

@@ -32,7 +32,7 @@ Reference parity: beyond-reference statistics/EVT tier.
 
 from __future__ import annotations
 
-from .catalog import sql_query
+from .catalog import Dialect, sql_query
 from .catalog_r8d import _day_sql
 from .catalog_r9a import _two_group_hist_sql
 
@@ -45,23 +45,17 @@ _CHI2_DF4_E6 = 9_487_729
 # ---------------------------------------------------------------------------
 
 
-def _xi_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _xi_sql(dialect: Dialect) -> str:
     dd = (
-        "datediff(o_orderdate, (SELECT min(o_orderdate) FROM orders))"
-        if spark
-        else "datediff('day', (SELECT min(o_orderdate) FROM orders),"
-        " o_orderdate)"
+        dialect.datediff("(SELECT min(o_orderdate) FROM orders)", "o_orderdate")
     )
 
     def direction(label: str, x: str, y: str) -> str:
         return f"""
     SELECT '{label}' AS direction, st_{label}.n AS n_days,
       CAST(1000000
-           - (CAST(st_{label}.n AS {big}) * d_{label}.sum_dr * 1000000)
-             {div}st_{label}.den AS BIGINT) AS xi_ppm
+           - (CAST(st_{label}.n AS {dialect.big}) * d_{label}.sum_dr * 1000000)
+             {dialect.div}st_{label}.den AS BIGINT) AS xi_ppm
     FROM st_{label} CROSS JOIN d_{label}"""
 
     def chain(label: str, x: str, y: str) -> str:
@@ -93,7 +87,7 @@ def _xi_sql(dialect: str) -> str:
     ),
     st_{label} AS (
       SELECT nn.n,
-        CAST(sum(CAST(yr.l AS {big}) * (nn.n - yr.l)) AS {big}) * 2
+        CAST(sum(CAST(yr.l AS {dialect.big}) * (nn.n - yr.l)) AS {dialect.big}) * 2
           AS den
       FROM yrank_{label} yr CROSS JOIN nn_{label} nn
       GROUP BY nn.n
@@ -108,7 +102,7 @@ def _xi_sql(dialect: str) -> str:
       SELECT CAST({dd} AS BIGINT) AS t,
         CAST(count(*) AS BIGINT) AS x,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-             AS BIGINT){div}100000 AS y
+             AS BIGINT){dialect.div}100000 AS y
       FROM orders GROUP BY 1
     ),
     {chain("y_on_x", "x", "y").lstrip()},
@@ -145,10 +139,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _lepage_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _lepage_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_two_group_hist_sql(dialect)},
     sc AS (
@@ -161,12 +152,12 @@ def _lepage_sql(dialect: str) -> str:
     ),
     mo AS (
       SELECT t.n1, t.n2, t.n1 + t.n2 AS nn,
-        CAST(sum(CAST(c1 AS {big}) * r2) AS {big}) AS w1,
-        CAST(sum(CAST(c1 + c2 AS {big}) * r2) AS {big}) AS tw,
-        CAST(sum(CAST(c1 + c2 AS {big}) * r2 * r2) AS {big}) AS sw2,
-        CAST(sum(CAST(c1 AS {big}) * a2) AS {big}) AS a1,
-        CAST(sum(CAST(c1 + c2 AS {big}) * a2) AS {big}) AS ta,
-        CAST(sum(CAST(c1 + c2 AS {big}) * a2 * a2) AS {big}) AS sa2
+        CAST(sum(CAST(c1 AS {dialect.big}) * r2) AS {dialect.big}) AS w1,
+        CAST(sum(CAST(c1 + c2 AS {dialect.big}) * r2) AS {dialect.big}) AS tw,
+        CAST(sum(CAST(c1 + c2 AS {dialect.big}) * r2 * r2) AS {dialect.big}) AS sw2,
+        CAST(sum(CAST(c1 AS {dialect.big}) * a2) AS {dialect.big}) AS a1,
+        CAST(sum(CAST(c1 + c2 AS {dialect.big}) * a2) AS {dialect.big}) AS ta,
+        CAST(sum(CAST(c1 + c2 AS {dialect.big}) * a2 * a2) AS {dialect.big}) AS sa2
       FROM sc CROSS JOIN tot t
       GROUP BY t.n1, t.n2
     ),
@@ -176,13 +167,13 @@ def _lepage_sql(dialect: str) -> str:
       -- 100x data (the cuped rho-squared staging doctrine)
       SELECT n1, n2, nn,
         CAST((CAST(((nn * w1 - n1 * tw) * (nn * w1 - n1 * tw))
-                   {div}(CAST(n1 AS {big}) * n2) AS {big})
+                   {dialect.div}(CAST(n1 AS {dialect.big}) * n2) AS {dialect.big})
               * (nn - 1) * 1000000)
-             {div}(nn * sw2 - tw * tw) AS BIGINT) AS zw2_ppm,
+             {dialect.div}(nn * sw2 - tw * tw) AS BIGINT) AS zw2_ppm,
         CAST((CAST(((nn * a1 - n1 * ta) * (nn * a1 - n1 * ta))
-                   {div}(CAST(n1 AS {big}) * n2) AS {big})
+                   {dialect.div}(CAST(n1 AS {dialect.big}) * n2) AS {dialect.big})
               * (nn - 1) * 1000000)
-             {div}(nn * sa2 - ta * ta) AS BIGINT) AS za2_ppm
+             {dialect.div}(nn * sa2 - ta * ta) AS BIGINT) AS za2_ppm
       FROM mo
     )
     SELECT n1, n2, zw2_ppm AS wilcoxon_z2_ppm,
@@ -216,10 +207,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _quade_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _quade_sql(dialect: Dialect) -> str:
     return f"""
     WITH m AS (
       SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS ym,
@@ -257,18 +245,18 @@ def _quade_sql(dialect: str) -> str:
     agg AS (
       SELECT
         (SELECT CAST(count(*) AS BIGINT) FROM full_m) AS n,
-        CAST(sum(CAST(s2 AS {big}) * s2) AS {big}) AS a2
+        CAST(sum(CAST(s2 AS {dialect.big}) * s2) AS {dialect.big}) AS a2
       FROM s
     ),
     bsum AS (
-      SELECT CAST(sum(CAST(sj AS {big}) * sj) AS {big}) AS sb2
+      SELECT CAST(sum(CAST(sj AS {dialect.big}) * sj) AS {dialect.big}) AS sb2
       FROM colsum
     )
     SELECT agg.n AS n_blocks,
       CAST(((agg.n - 1) * bsum.sb2 * 1000000)
-           {div}(agg.n * agg.a2 - bsum.sb2) AS BIGINT) AS quade_f_ppm,
+           {dialect.div}(agg.n * agg.a2 - bsum.sb2) AS BIGINT) AS quade_f_ppm,
       4 * (((agg.n - 1) * bsum.sb2 * 1000000)
-           {div}(agg.n * agg.a2 - bsum.sb2)) > {_CHI2_DF4_E6}
+           {dialect.div}(agg.n * agg.a2 - bsum.sb2)) > {_CHI2_DF4_E6}
         AS reject_equal_segments
     FROM agg CROSS JOIN bsum
     """
@@ -303,27 +291,24 @@ _EULER = "0.5772156649015329"
 _GUMBEL_Y100 = "4.600149226776579"
 
 
-def _gumbel_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _gumbel_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     blk AS (
-      SELECT t{div}30 AS b, CAST(max(y) AS BIGINT) AS mx
-      FROM day GROUP BY t{div}30
+      SELECT t{dialect.div}30 AS b, CAST(max(y) AS BIGINT) AS mx
+      FROM day GROUP BY t{dialect.div}30
     ),
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
         CAST(sum(mx) AS BIGINT) AS s,
-        CAST(sum(CAST(mx AS {big}) * mx) AS {big}) AS q
+        CAST(sum(CAST(mx AS {dialect.big}) * mx) AS {dialect.big}) AS q
       FROM blk
     ),
     fit AS (
       SELECT n,
-        CAST((s * 1000000){div}n AS BIGINT) AS mean_e6,
+        CAST((s * 1000000){dialect.div}n AS BIGINT) AS mean_e6,
         CAST(floor(1000000
-          * sqrt(6e0 * CAST(n * q - CAST(s AS {big}) * s AS DOUBLE)
+          * sqrt(6e0 * CAST(n * q - CAST(s AS {dialect.big}) * s AS DOUBLE)
                  / (CAST(n AS DOUBLE) * (n - 1)))
           / {_PI}) AS BIGINT) AS scale_e6
       FROM st
@@ -377,10 +362,7 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-def _pot_sql(dialect: str) -> str:
-    spark = dialect == "spark"
-    big = "DECIMAL(38,0)" if spark else "HUGEINT"
-    div = " div " if spark else " // "
+def _pot_sql(dialect: Dialect) -> str:
     return f"""
     WITH {_day_sql(dialect)},
     h AS (SELECT y, CAST(count(*) AS BIGINT) AS c FROM day GROUP BY y),
@@ -402,23 +384,23 @@ def _pot_sql(dialect: str) -> str:
     st AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
         CAST(sum(e) AS BIGINT) AS s,
-        CAST(sum(CAST(e AS {big}) * e) AS {big}) AS q
+        CAST(sum(CAST(e AS {dialect.big}) * e) AS {dialect.big}) AS q
       FROM exc
     ),
     mom AS (
       SELECT k,
-        CAST((s * 1000000){div}k AS BIGINT) AS m_e6,
-        CAST(((CAST(s AS {big}) * s) * 1000000)
-             {div}(k * q - CAST(s AS {big}) * s) * (k - 1){div}k
+        CAST((s * 1000000){dialect.div}k AS BIGINT) AS m_e6,
+        CAST(((CAST(s AS {dialect.big}) * s) * 1000000)
+             {dialect.div}(k * q - CAST(s AS {dialect.big}) * s) * (k - 1){dialect.div}k
              AS BIGINT) AS m2v_ppm
       FROM st
     )
     SELECT thr.u AS threshold, mom.k AS n_exceedances,
       mom.m_e6 AS mean_excess_e6,
-      CAST((1000000 - mom.m2v_ppm){div}2 AS BIGINT) AS xi_ppm,
-      CAST((CAST(mom.m_e6 AS {big}) * (1000000 + mom.m2v_ppm))
-           {div}2000000 AS BIGINT) AS sigma_e6,
-      (1000000 - mom.m2v_ppm){div}2 > 0 AS heavy_tail
+      CAST((1000000 - mom.m2v_ppm){dialect.div}2 AS BIGINT) AS xi_ppm,
+      CAST((CAST(mom.m_e6 AS {dialect.big}) * (1000000 + mom.m2v_ppm))
+           {dialect.div}2000000 AS BIGINT) AS sigma_e6,
+      (1000000 - mom.m2v_ppm){dialect.div}2 > 0 AS heavy_tail
     FROM mom CROSS JOIN thr
     """
 

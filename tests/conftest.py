@@ -1,13 +1,21 @@
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+_spec = importlib.util.spec_from_file_location(
+    "check_oracle", os.path.join(REPO, "tools", "check_oracle.py")
+)
+check_oracle = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check_oracle)
 
 
 @pytest.fixture(scope="session")
@@ -50,3 +58,62 @@ def shuffle4(spark):
         yield spark
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = check_oracle.duck_views(SF_DIR)
+    yield con
+    con.close()
+
+
+def oracle_gate_results(request, spark, test_name: str) -> dict:
+    """name → pandas frame (or the raised exception) for the queries
+    pytest selected as ``test_name[<name>]``, so one selected ID runs
+    one query.  Plans are built serially (queries may
+    createOrReplaceTempView shared table names, and spark.sql resolves
+    views eagerly, so a built plan no longer reads the view registry);
+    then the independent executions fan out over 8 threads (concurrent
+    actions on one SparkSession are supported)."""
+    import concurrent.futures
+
+    from beacon_data_importer_spark import all_catalogs as catalog
+
+    names = sorted(
+        {
+            item.callspec.params["name"]
+            for item in request.session.items
+            if getattr(item, "originalname", None) == test_name
+        }
+    )
+    built = {}
+    for n in names:
+        try:
+            built[n] = catalog.QUERIES[n](spark, SF_DIR)
+        except Exception as ex:  # surfaced by that query's own test
+            built[n] = ex
+
+    def run(n):
+        if isinstance(built[n], Exception):
+            return built[n]
+        try:
+            return built[n].toPandas()
+        except Exception as ex:
+            return ex
+
+    with concurrent.futures.ThreadPoolExecutor(8) as pool:
+        futs = {n: pool.submit(run, n) for n in built}
+        return {n: f.result() for n, f in futs.items()}
+
+
+def assert_matches_oracle(spark_results: dict, duck, name: str) -> None:
+    """The driver-mimicking gate for one query: ``check_oracle.compare``
+    of its Spark result against its DuckDB oracle."""
+    from beacon_data_importer_spark import catalog
+
+    spdf = spark_results[name]
+    if isinstance(spdf, Exception):
+        raise spdf
+    dpdf = duck.execute(catalog.ORACLES[name]).df()
+    problems = check_oracle.compare(spdf, dpdf)
+    assert not problems, f"{name}: " + "; ".join(problems)

@@ -3,7 +3,8 @@
 The authoritative check is the driver's sf0.01 gate, but that only runs
 once per round — this module applies the identical driver-mimicking
 comparison (row count, sorted columns, type-sensitive order-insensitive
-value hash vs the DuckDB oracle) at sf0.001 on every pytest run, so a
+value hash and integer-width drift vs the DuckDB oracle, through
+``check_oracle.compare``) at sf0.001 on every pytest run, so a
 regression in a registered query (e.g. an environment change in how
 parquet timestamps are read) fails CI immediately instead of surfacing
 in the next CORRECTNESS_r{N}.json.
@@ -13,43 +14,12 @@ from __future__ import annotations
 
 import ast
 import glob
-import importlib.util
 import os
 import re
-import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tests.conftest import SF_DIR
-
-_spec = importlib.util.spec_from_file_location(
-    "check_oracle",
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tools",
-        "check_oracle.py",
-    ),
-)
-check_oracle = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check_oracle)
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
-
-
-@pytest.fixture(scope="module")
-def duck():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    yield con
-    con.close()
+from tests.conftest import assert_matches_oracle, oracle_gate_results
 
 
 def _registered_names():
@@ -64,52 +34,17 @@ def _registered_names():
 
 
 @pytest.fixture(scope="module")
-def spark_results(spark):
-    """name → pandas frame (or raised exception) for every registered
-    query, built serially / executed on 8 threads — the same
-    serial-analysis + parallel-execution split as
-    test_extra_queries.spark_results (see its docstring for why the
-    split is what makes the concurrency safe)."""
-    import concurrent.futures
-
-    from beacon_data_importer_spark import all_catalogs as catalog
-
-    built = {}
-    for n in _registered_names():
-        try:
-            built[n] = catalog.QUERIES[n](spark, SF_DIR)
-        except Exception as ex:
-            built[n] = ex
-
-    def run(n):
-        if isinstance(built[n], Exception):
-            return built[n]
-        try:
-            return built[n].toPandas()
-        except Exception as ex:
-            return ex
-
-    with concurrent.futures.ThreadPoolExecutor(8) as pool:
-        futs = {n: pool.submit(run, n) for n in built}
-        return {n: f.result() for n, f in futs.items()}
+def spark_results(request, spark):
+    """Results of the selected driver-slot queries, computed once per
+    module (``oracle_gate_results``)."""
+    return oracle_gate_results(
+        request, spark, "test_registered_query_matches_oracle"
+    )
 
 
 @pytest.mark.parametrize("name", _registered_names())
-def test_registered_query_matches_oracle(spark, duck, spark_results, name):
-    from beacon_data_importer_spark import catalog
-
-    spdf = spark_results[name]
-    if isinstance(spdf, Exception):
-        raise spdf
-    dpdf = duck.execute(catalog.ORACLES[name]).df()
-
-    assert len(spdf) == len(dpdf), f"{name}: rowcount {len(spdf)} != {len(dpdf)}"
-    assert sorted(spdf.columns) == sorted(dpdf.columns), f"{name}: schema"
-    sh, slines = check_oracle.frame_digest(spdf)
-    dh, dlines = check_oracle.frame_digest(dpdf)
-    if sh != dh:
-        diff = [(a, b) for a, b in zip(slines, dlines) if a != b][:3]
-        pytest.fail(f"{name}: value hash mismatch; first diffs {diff}")
+def test_registered_query_matches_oracle(duck, spark_results, name):
+    assert_matches_oracle(spark_results, duck, name)
 
 
 # ---------------------------------------------------------------------------
@@ -182,8 +117,8 @@ def _plain_view_registration(stmt: ast.stmt) -> bool:
 
 def test_pure_sql_queries_register_through_sql_query():
     """Ratchet: an ``@query`` whose body only registers views and
-    returns ``spark.sql(R("spark"))`` with ``oracle=R("duck")`` is
-    exactly ``sql_query(name, R, *tables)`` — write it that way."""
+    returns ``spark.sql(R(SPARK))`` with ``oracle=R(DUCK)`` is exactly
+    ``sql_query(name, R, *tables)`` — write it that way."""
     hand_written = []
     for path in _CATALOG_SOURCES:
         for fn in _parse(path).body:
@@ -202,12 +137,12 @@ def test_pure_sql_queries_register_through_sql_query():
             if not (
                 isinstance(oracle, ast.Call)
                 and isinstance(oracle.func, ast.Name)
-                and [ast.unparse(a) for a in oracle.args] == ["'duck'"]
+                and [ast.unparse(a) for a in oracle.args] == ["DUCK"]
             ):
                 continue
             body = fn.body[1:] if ast.get_docstring(fn) else fn.body
             if ast.unparse(body[-1]) == (
-                f"return spark.sql({oracle.func.id}('spark'))"
+                f"return spark.sql({oracle.func.id}(SPARK))"
             ) and all(_plain_view_registration(s) for s in body[:-1]):
                 hand_written.append(f"{os.path.basename(path)}:{fn.name}")
     assert not hand_written, f"use sql_query for: {hand_written}"
@@ -219,6 +154,7 @@ def test_sql_query_keeps_query_metadata():
     oracle (QUERIES.md and the driver read these)."""
     import __spark_entry__ as entry
     from beacon_data_importer_spark import catalog_r9f
+    from beacon_data_importer_spark.catalog import DUCK
 
     fn = entry.queries()["trigram_novelty_curve"]
     assert fn.__module__.endswith("catalog_r9f")
@@ -226,7 +162,7 @@ def test_sql_query_keeps_query_metadata():
     assert (fn.__doc__ or "").strip()
     assert (
         entry.oracle_sql()["trigram_novelty_curve"]
-        == catalog_r9f._novelty_sql("duck")
+        == catalog_r9f._novelty_sql(DUCK)
     )
 
 
@@ -254,3 +190,50 @@ def test_driver_slots_are_the_only_slot_policy():
                 names = [getattr(node, "id", None) or getattr(node, "attr", None)]
             found += [f"{rel}:{node.lineno}: {n}" for n in names if n in retired]
     assert not found, f"slot policy outside DRIVER_SLOTS: {found}"
+
+
+def test_engine_spellings_live_in_dialect():
+    """Ratchet: ``catalog.Dialect`` is the one place that decides how
+    Spark and DuckDB spell a construct.  Outside that class and its two
+    instances ``SPARK``/``DUCK``, no catalog module compares against
+    ``"spark"``/``"duck"``, passes either as a call's first argument, or
+    takes a ``dialect`` first parameter not annotated ``Dialect``."""
+    engines = {"spark", "duck"}
+    instances = ("SPARK = Dialect('spark')", "DUCK = Dialect('duck')")
+    found = []
+    for path in _CATALOG_SOURCES:
+        tree = _parse(path)
+        exempt = {
+            id(n)
+            for c in tree.body
+            if (isinstance(c, ast.ClassDef) and c.name == "Dialect")
+            or ast.unparse(c) in instances
+            for n in ast.walk(c)
+        }
+        for node in ast.walk(tree):
+            if id(node) in exempt:
+                continue
+            where = f"{os.path.basename(path)}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Compare) and any(
+                isinstance(x, ast.Constant) and x.value in engines
+                for x in (node.left, *node.comparators)
+            ):
+                found.append(f"{where}: {ast.unparse(node)}")
+            elif (
+                isinstance(node, ast.Call)
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and node.args[0].value in engines
+            ):
+                found.append(f"{where}: {ast.unparse(node)}")
+            elif (
+                isinstance(node, ast.FunctionDef)
+                and node.args.args
+                and node.args.args[0].arg == "dialect"
+                and not (
+                    isinstance(node.args.args[0].annotation, ast.Name)
+                    and node.args.args[0].annotation.id == "Dialect"
+                )
+            ):
+                found.append(f"{where}: def {node.name}(dialect) not Dialect")
+    assert not found, f"{len(found)} engine spellings outside Dialect: {found}"

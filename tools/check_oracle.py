@@ -9,8 +9,9 @@ the driver, so engine type drift surfaces as a value difference:
 - DuckDB ``sum(BIGINT)`` returns HUGEINT, which pandas renders float64 —
   ``123.0`` never equals Spark's int64 ``123`` (this is the round-1
   failure mode: 8/50 queries hash-failed on exactly this).
-- Integer width (int32 vs int64) is reported as a WARNING: the plain
-  string render matches, but it is drift we fix at the source anyway.
+- Integer width (int32 vs int64) is a failure even though the plain
+  string render matches: a schema comparison strict on types would
+  reject it, so the fix is a cast at the source.
 - Spark DATE arrives as ``datetime.date`` objects while DuckDB DATE
   arrives as midnight ``datetime64`` — the round-1 driver treated those
   equal (scd2_merge passed), so both render "YYYY-MM-DD 00:00:00".
@@ -86,25 +87,65 @@ def dtype_map(pdf) -> dict[str, str]:
     return {c: str(pdf[c].dtype) for c in pdf.columns}
 
 
+def compare(spdf, dpdf) -> list[str]:
+    """What makes the Spark frame ``spdf`` differ from the oracle's
+    ``dpdf``: row count, sorted column names, the type-sensitive value
+    hash, then integer-width drift.  Empty when they match."""
+    problems = []
+    if len(spdf) != len(dpdf):
+        problems.append(f"rowcount spark={len(spdf)} duck={len(dpdf)}")
+    if sorted(spdf.columns) != sorted(dpdf.columns):
+        problems.append(
+            f"schema spark={sorted(spdf.columns)} duck={sorted(dpdf.columns)}"
+        )
+    if problems:
+        return problems
+    sh, slines = frame_digest(spdf)
+    dh, dlines = frame_digest(dpdf)
+    if sh != dh:
+        diff = [(a, b) for a, b in zip(slines, dlines) if a != b][:3]
+        return [
+            f"valuehash; dtypes spark={dtype_map(spdf)} "
+            f"duck={dtype_map(dpdf)}; first diffs: {diff}"
+        ]
+    # Equal renders can still differ in dtype (int32 vs int64).  DATE
+    # and TIMESTAMP are exempt: the driver treats Spark's
+    # datetime.date objects and DuckDB's datetime64 as equal.
+    dd = dtype_map(dpdf)
+    drift = {
+        c: (t, dd[c])
+        for c, t in dtype_map(spdf).items()
+        if dd.get(c) != t
+        and not (t.startswith("datetime64") and dd[c].startswith("datetime64"))
+        and not (t == "object" and dd[c].startswith("datetime64"))
+    }
+    return [f"dtype drift {drift}"] if drift else []
+
+
+def duck_views(sf_dir: str):
+    """DuckDB connection with every catalog table of ``sf_dir`` as a
+    view over its parquet file, for running oracles."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings".split()
+    ):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-
-    import duckdb
 
     import __spark_entry__ as entrymod
     from beacon_data_importer_spark.session import get_spark
 
     spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -123,46 +164,13 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {str(ex)[:400]}")
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"ok?  {name}: rows={len(spdf)} (no oracle — rows-only)")
-            continue
         try:
             dpdf = con.execute(oracles[name]).df()
         except Exception as ex:
             print(f"FAIL {name}: duckdb error: {str(ex)[:400]}")
             failures.append(name)
             continue
-        problems = []
-        if len(spdf) != len(dpdf):
-            problems.append(f"rowcount spark={len(spdf)} duck={len(dpdf)}")
-        if sorted(spdf.columns) != sorted(dpdf.columns):
-            problems.append(
-                f"schema spark={sorted(spdf.columns)} duck={sorted(dpdf.columns)}"
-            )
-        if not problems:
-            sh, slines = frame_digest(spdf)
-            dh, dlines = frame_digest(dpdf)
-            if sh != dh:
-                diff = [(a, b) for a, b in zip(slines, dlines) if a != b][:3]
-                problems.append(
-                    f"valuehash; dtypes spark={dtype_map(spdf)} "
-                    f"duck={dtype_map(dpdf)}; first diffs: {diff}"
-                )
-            else:
-                # exact-dtype drift that still hashes equal (e.g. int32 vs
-                # int64): warn so we align it before the driver can care
-                dd = dtype_map(dpdf)
-                drift = {
-                    c: (t, dd[c])
-                    for c, t in dtype_map(spdf).items()
-                    if dd.get(c) != t
-                    and not (
-                        t.startswith("datetime64") and dd[c].startswith("datetime64")
-                    )
-                    and not (t == "object" and dd[c].startswith("datetime64"))
-                }
-                if drift:
-                    warnings.append((name, drift))
+        problems = compare(spdf, dpdf)
         dt = time.time() - t0
         if problems:
             print(f"FAIL {name} ({dt:.1f}s): " + "; ".join(problems)[:800])
@@ -175,9 +183,8 @@ def main() -> int:
                 # caught important_parts_q11's GERMANY-vs-NATION_x filter
                 # and the every-customer-has-orders anti join)
                 warnings.append((name, "0-row result — vacuous check"))
-    for name, drift in warnings:
-        print(f"WARN {name}: {drift}" if isinstance(drift, str)
-              else f"WARN {name}: dtype drift {drift}")
+    for name, warning in warnings:
+        print(f"WARN {name}: {warning}")
     # VERDICT r7 fix: tally counts only queries actually RUN — a
     # filtered invocation must never read as a full-registry sweep.
     print(
