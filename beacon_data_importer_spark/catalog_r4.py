@@ -14,7 +14,6 @@ the layout step was lossless.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,6 +21,7 @@ from pyspark.sql import functions as F
 from .catalog import ORACLES, QUERIES, cents, query
 from .catalog_r2 import _duck_hash64
 from .operators.distinct_window import sliding_distinct_count
+from .plans.staging_meter import stage_dir
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -271,36 +271,12 @@ def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Data-layout tier: the physical-design operators a 100 TB warehouse
-# lives and dies by.  Each query stages a layout into a session temp
-# dir / warehouse table ONCE per (sf_dir, process), then answers a
-# relational question THROUGH the layout; the oracle answers the same
-# question from the raw table, so a green row proves the layout step
-# lossless AND the layout-side plan correct.
+# lives and dies by.  Each query stages a layout into a stage dir
+# (plans/staging_meter.stage_dir) ONCE per (sf_dir, session), then
+# answers a relational question THROUGH the layout; the oracle answers
+# the same question from the raw table, so a green row proves the
+# layout step lossless AND the layout-side plan correct.
 # ===========================================================================
-
-_STAGED: dict[tuple, str] = {}
-# staging is stage-once-per-process; the lock makes concurrent query
-# threads (a multi-tenant driver) serialize the write instead of
-# racing saveAsTable/overwrite on the same location.  CROSS-process
-# isolation comes from the PID suffix in _sf_tag: two processes (e.g.
-# bench.py and pytest on the same sf_dir) stage to disjoint paths and
-# table names, so neither can overwrite a layout the other is still
-# reading — an flock around the write alone could not guarantee that.
-_STAGE_LOCK = __import__("threading").Lock()
-
-
-def _sf_tag(sf_dir: str) -> str:
-    base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    return f"{base}_p{os.getpid()}"
-
-
-def _stage_path(tag: str, sf_dir: str) -> str:
-    """Per-(sf, process) staging dir (overwritten by
-    mode('overwrite') on re-stage within a process; disjoint across
-    processes via the PID suffix)."""
-    return os.path.join(
-        tempfile.gettempdir(), f"r4_{tag}_{_sf_tag(sf_dir)}"
-    )
 
 
 @query(
@@ -327,41 +303,27 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange between the scans and the SortMergeJoin.  The oracle
     answers from the raw tables — green means the bucketed write was
     lossless and the bucket-pruned join correct."""
-    tag = _sf_tag(sf_dir)
-    key = ("bucketed", sf_dir)
+    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     ot, ct = f"r4_orders_b_{tag}", f"r4_customer_b_{tag}"
-    with _STAGE_LOCK:
-      if key not in _STAGED:
-        # A fresh process gets a fresh metastore, but the warehouse
-        # DIRECTORY persists — drop both the entry and the location or
-        # saveAsTable refuses with LOCATION_ALREADY_EXISTS.
-        import shutil
 
-        warehouse = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-        for t in (ot, ct):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-        o = read_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        c = read_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_nationkey"
-        )
-        (
-            o.write.bucketBy(8, "o_custkey")
-            .sortBy("o_custkey")
-            .mode("overwrite")
-            .saveAsTable(ot)
-        )
-        (
-            c.write.bucketBy(8, "c_custkey")
-            .sortBy("c_custkey")
-            .mode("overwrite")
-            .saveAsTable(ct)
-        )
-        _STAGED[key] = ot
+    def write(path: str) -> None:
+        # external tables (explicit path): the bucket files live in the
+        # stage dir, never in the warehouse dir
+        for table, src, key, cols in (
+            (ot, "orders", "o_custkey", ("o_orderkey", "o_custkey", "o_totalprice")),
+            (ct, "customer", "c_custkey", ("c_custkey", "c_nationkey")),
+        ):
+            (
+                read_table(spark, sf_dir, src)
+                .select(*cols)
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .mode("overwrite")
+                .option("path", os.path.join(path, src))
+                .saveAsTable(table)
+            )
+
+    stage_dir(spark, f"bucketed|{sf_dir}", write)
     ob, cb = spark.table(ot), spark.table(ct)
     return (
         ob.join(cb, ob.o_custkey == cb.c_custkey)
@@ -397,18 +359,15 @@ def q_partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; typed values re-parse under partition-column inference) —
     the oracle answering from the raw table proves the round-trip
     lossless."""
-    key = ("part_docs", sf_dir)
-    with _STAGE_LOCK:
-      if key not in _STAGED:
-        out = _stage_path("part_docs", sf_dir)
-        (
-            read_table(spark, sf_dir, "documents")
-            .write.partitionBy("source")
-            .mode("overwrite")
-            .parquet(out)
-        )
-        _STAGED[key] = out
-    d = spark.read.parquet(_STAGED[key])
+    out = stage_dir(
+        spark,
+        f"part_docs|{sf_dir}",
+        lambda path: read_table(spark, sf_dir, "documents")
+        .write.partitionBy("source")
+        .mode("overwrite")
+        .parquet(path),
+    )
+    d = spark.read.parquet(out)
     return (
         d.filter(F.col("source").isin("src1", "src7", "src12"))
         .groupBy("source")
@@ -635,17 +594,16 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum prove the text column — including whatever needed JSON
     escaping — round-tripped byte-exactly; the oracle never sees the
     JSONL, only the raw table."""
-    key = ("jsonl_docs", sf_dir)
-    with _STAGE_LOCK:
-      if key not in _STAGED:
-        out = _stage_path("jsonl_docs", sf_dir)
-        read_table(spark, sf_dir, "documents").write.mode("overwrite").json(
-            out
-        )
-        _STAGED[key] = out
+    out = stage_dir(
+        spark,
+        f"jsonl_docs|{sf_dir}",
+        lambda path: read_table(spark, sf_dir, "documents")
+        .write.mode("overwrite")
+        .json(path),
+    )
     d = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    ).json(_STAGED[key])
+    ).json(out)
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -674,13 +632,14 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     max, and an md5 checksum over the composite row key.  Green against the parquet-side oracle proves doubles,
     dates and strings survive the format hop bit-exactly (ORC and
     parquet have different logical-type encodings for all three)."""
-    key = ("orc_lineitem", sf_dir)
-    with _STAGE_LOCK:
-      if key not in _STAGED:
-        out = _stage_path("orc_li", sf_dir)
-        read_table(spark, sf_dir, "lineitem").write.mode("overwrite").orc(out)
-        _STAGED[key] = out
-    li = spark.read.orc(_STAGED[key])
+    out = stage_dir(
+        spark,
+        f"orc_lineitem|{sf_dir}",
+        lambda path: read_table(spark, sf_dir, "lineitem")
+        .write.mode("overwrite")
+        .orc(path),
+    )
+    li = spark.read.orc(out)
     return li.groupBy(
         F.col("l_returnflag").alias("returnflag"),
         F.col("l_linestatus").alias("linestatus"),
@@ -2029,20 +1988,21 @@ def q_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the line scan.  The oracle reads the original table — green means
     pad→carve round-tripped every value (including the rpad-then-trim
     of space-bearing names)."""
-    key = ("fixed_width", sf_dir)
-    with _STAGE_LOCK:
-      if key not in _STAGED:
-        out = _stage_path("fixed_width", sf_dir)
-        n = read_table(spark, sf_dir, "nation")
-        line = F.format_string(
-            "%4d%-26s%4d",
-            F.col("n_nationkey"),
-            F.col("n_name"),
-            F.col("n_regionkey"),
-        )
-        n.select(line.alias("value")).write.mode("overwrite").text(out)
-        _STAGED[key] = out
-    txt = spark.read.text(_STAGED[key])
+    line = F.format_string(
+        "%4d%-26s%4d",
+        F.col("n_nationkey"),
+        F.col("n_name"),
+        F.col("n_regionkey"),
+    )
+    out = stage_dir(
+        spark,
+        f"fixed_width|{sf_dir}",
+        lambda path: read_table(spark, sf_dir, "nation")
+        .select(line.alias("value"))
+        .write.mode("overwrite")
+        .text(path),
+    )
+    txt = spark.read.text(out)
     pos = 1
     cols = []
     for name, width in _FW_COLS:

@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 
 from .catalog import query
 from .catalog_r2 import _duck_hash64
-from .catalog_r4 import _CKSUM_MOD, _STAGE_LOCK, _STAGED, _cksum, _stage_path
+from .catalog_r4 import _CKSUM_MOD, _cksum
+from .plans.staging_meter import stage_dir
 from .sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
@@ -60,16 +61,16 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: extends the S-family source/sink matrix
     (``COVERAGE.md §2.1``)."""
-    key = ("xml_docs", sf_dir)
-    with _STAGE_LOCK:
-        if key not in _STAGED:
-            out = _stage_path("xml_docs", sf_dir)
-            read_table(spark, sf_dir, "documents").write.mode(
-                "overwrite"
-            ).format("xml").option("rootTag", "docs").option(
-                "rowTag", "doc"
-            ).save(out)
-            _STAGED[key] = out
+    out = stage_dir(
+        spark,
+        f"xml_docs|{sf_dir}",
+        lambda path: read_table(spark, sf_dir, "documents")
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "docs")
+        .option("rowTag", "doc")
+        .save(path),
+    )
     d = (
         spark.read.schema(
             "doc_id bigint, text string, lang string,"
@@ -77,7 +78,7 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .format("xml")
         .option("rowTag", "doc")
-        .load(_STAGED[key])
+        .load(out)
         .select(
             "doc_id",
             F.coalesce(F.col("text"), F.lit("")).alias("text"),

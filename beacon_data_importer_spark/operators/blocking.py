@@ -46,8 +46,6 @@ lexicographic order.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -334,10 +332,6 @@ def candidate_pairs(
 # Shared staged fuzzy-pair stream (one materialization, many consumers)
 # ---------------------------------------------------------------------------
 
-# session -> {(sf_dir, k, coarse): pairs DataFrame}.  WeakKey so a
-# stopped session's entry disappears with it.
-_STAGE: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
 
 def staged_fuzzy_pairs(
     spark: SparkSession,
@@ -363,15 +357,12 @@ def staged_fuzzy_pairs(
     construction.  On a multi-node cluster, swap for ``checkpoint`` on
     shared storage (or a staging parquet write) for fault tolerance.
     """
-    key = (stage_key, k, coarse_key, strategy)
-    per_session = _STAGE.setdefault(spark, {})
-    if key not in per_session:
-        from ..plans.staging_meter import staged_build
+    from ..plans.staging_meter import stage
 
-        with staged_build(f"fuzzy_pairs|{stage_key}|{strategy}"):
-            pairs = candidate_pairs(
-                df, id_col, name_col, k=k, coarse_key=coarse_key,
-                strategy=strategy,
-            )
-            per_session[key] = pairs.localCheckpoint()
-    return per_session[key]
+    return stage(
+        spark,
+        f"fuzzy_pairs|{stage_key}|{k}|{coarse_key}|{strategy}",
+        lambda: candidate_pairs(
+            df, id_col, name_col, k=k, coarse_key=coarse_key, strategy=strategy
+        ),
+    )

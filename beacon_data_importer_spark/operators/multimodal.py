@@ -252,52 +252,3 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
         F.concat(F.lit("synthetic://"), F.col("doc_id")).alias("source_uri"),
     )
 
-
-def decode_media_arrow(df: DataFrame) -> DataFrame:
-    """``decode_media``'s stub path on ``mapInArrow``: the batch
-    iterator receives/emits pyarrow RecordBatches directly, skipping
-    the Arrow→pandas→Arrow conversion ``mapInPandas`` pays on both
-    sides of every batch (object-boxing of the binary column is the
-    expensive part).  Same output, same schema — equality is pinned by
-    tests/test_tables_and_media.py; the decode itself is identical
-    Python, so the delta isolates pure interchange overhead."""
-
-    def batches(it):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in it:
-            media_id = batch.column("media_id").to_pylist()
-            media_type = batch.column("media_type").to_pylist()
-            payload = batch.column("payload").to_pylist()
-            cols = {n: [] for n in (
-                "media_id", "media_type", "byte_len", "content_md5",
-                "width", "height", "n_frames",
-            )}
-            for mid, mt, pl in zip(media_id, media_type, payload):
-                raw = bytes(pl) if pl is not None else b""
-                w, h, nf = _fake_decode(raw, mt)
-                cols["media_id"].append(mid)
-                cols["media_type"].append(mt)
-                cols["byte_len"].append(len(raw))
-                cols["content_md5"].append(hashlib.md5(raw).hexdigest())
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["n_frames"].append(nf)
-            # explicit arrow schema: pydict inference would produce
-            # int64 for the int32 fields and fail the vector accessor
-            pa_schema = pa.schema(
-                [
-                    ("media_id", pa.int64()),
-                    ("media_type", pa.string()),
-                    ("byte_len", pa.int64()),
-                    ("content_md5", pa.string()),
-                    ("width", pa.int32()),
-                    ("height", pa.int32()),
-                    ("n_frames", pa.int32()),
-                ]
-            )
-            yield pa.RecordBatch.from_pydict(cols, schema=pa_schema)
-
-    return df.mapInArrow(batches, DECODED_SCHEMA)

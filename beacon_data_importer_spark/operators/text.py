@@ -39,10 +39,6 @@ def token_count_wordlike(text: Column | str) -> Column:
     return F.regexp_count(t, F.lit(WORD_RE)) + F.regexp_count(t, F.lit(PUNCT_RE))
 
 
-def char_count(text: Column | str) -> Column:
-    return F.length(_c(text))
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Punctuation chars / total chars (0 for empty text).  Raw double —
     callers integerize for cross-engine output (floor(x*1e6)); engine

@@ -15,20 +15,16 @@ per graph build; the ``localCheckpoint`` is the local stand-in.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet import read_table
-from .staging_meter import staged_build
+from .staging_meter import stage
 
 #: minimum shared distinct parts for a customer pair to form an edge
 #: (the sparsity knob triangle_count established: ≥3 gives 14.8k edges
 #: over 10k nodes at sf0.1 where the supplier projections are cliques)
 MIN_SHARED = 3
-
-_STAGE: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def co_purchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,9 +34,8 @@ def co_purchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     session and scale factor.  The unweighted consumers project it
     away; weighted-graph consumers (``weighted_sssp``) derive integer
     edge costs from ``shared`` — one pair expansion serves both."""
-    per_session = _STAGE.setdefault(spark, {})
-    key = ("edges", sf_dir)
-    if key not in per_session:
+
+    def build() -> DataFrame:
         li = read_table(spark, sf_dir, "lineitem")
         o = read_table(spark, sf_dir, "orders")
         # r11 optimization round (guide §2.3/§4.2): the per-part pair
@@ -67,14 +62,13 @@ def co_purchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from ..operators.pairgen import posting_pair_counts
 
-        edges = (
+        return (
             posting_pair_counts(pos, "p", "c", repartition=False)
             .select("a", "b", F.col("i").alias("shared"))
             .filter(F.col("shared") >= MIN_SHARED)
         )
-        with staged_build(f"co_purchase_edges|{sf_dir}"):
-            per_session[key] = edges.localCheckpoint()
-    return per_session[key]
+
+    return stage(spark, f"co_purchase_edges|{sf_dir}", build)
 
 
 def co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,8 +18,6 @@ corpus, which is a different input by construction.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog_ext import (
@@ -31,38 +29,33 @@ from ..catalog_ext import (
 )
 from ..operators.dedup import lsh_candidate_pairs
 from ..operators.text_arrow import minhash_signatures_arrow
-from .staging_meter import staged_build
-
-_STAGE: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+from .staging_meter import stage
 
 
 def corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, sig) MinHash signature table for the documents corpus,
     staged once per session and scale factor."""
-    per_session = _STAGE.setdefault(spark, {})
-    key = ("sigs", sf_dir)
-    if key not in per_session:
-        with staged_build(f"corpus_sigs|{sf_dir}"):
-            d = _docs_parallel(spark, sf_dir)
-            # r12: Arrow kernel — bit-identical to the SQL form
-            # (tests/test_text_arrow.py), one vectorized pass instead
-            # of the interpreted per-shingle md5+conv+fold chain
-            sigs = minhash_signatures_arrow(d, "text", "doc_id", NUM_HASHES)
-            per_session[key] = sigs.localCheckpoint()
-    return per_session[key]
+    # r12: Arrow kernel — bit-identical to the SQL form
+    # (tests/test_text_arrow.py), one vectorized pass instead of the
+    # interpreted per-shingle md5+conv+fold chain
+    return stage(
+        spark,
+        f"corpus_sigs|{sf_dir}",
+        lambda: minhash_signatures_arrow(
+            _docs_parallel(spark, sf_dir), "text", "doc_id", NUM_HASHES
+        ),
+    )
 
 
 def corpus_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id_a, id_b) banded LSH candidate pairs over the staged
     signatures, staged once per session and scale factor."""
-    per_session = _STAGE.setdefault(spark, {})
-    key = ("pairs", sf_dir)
-    if key not in per_session:
-        sigs = corpus_signatures(spark, sf_dir)
-        with staged_build(f"corpus_pairs|{sf_dir}"):
-            pairs = lsh_candidate_pairs(sigs, BANDS, ROWS_PER_BAND, MAX_BUCKET)
-            per_session[key] = pairs.localCheckpoint()
-    return per_session[key]
+    sigs = corpus_signatures(spark, sf_dir)
+    return stage(
+        spark,
+        f"corpus_pairs|{sf_dir}",
+        lambda: lsh_candidate_pairs(sigs, BANDS, ROWS_PER_BAND, MAX_BUCKET),
+    )
 
 
 def corpus_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,14 +70,11 @@ def corpus_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import _shingles
 
-    per_session = _STAGE.setdefault(spark, {})
-    key = ("shingle_sets", sf_dir)
-    if key not in per_session:
-        with staged_build(f"corpus_shingle_sets|{sf_dir}"):
-            d = _docs_parallel(spark, sf_dir)
-            shd = d.select(
-                F.col("doc_id").alias("id"),
-                F.array_distinct(_shingles(F.col("text"))).alias("s"),
-            )
-            per_session[key] = shd.localCheckpoint()
-    return per_session[key]
+    return stage(
+        spark,
+        f"corpus_shingle_sets|{sf_dir}",
+        lambda: _docs_parallel(spark, sf_dir).select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(_shingles(F.col("text"))).alias("s"),
+        ),
+    )

@@ -1,38 +1,90 @@
-"""Wall-clock accounting for once-per-(session, sf_dir) staged frames
-(r12 round, VERDICT r11 "what's wrong" #3).
+"""Once-per-session staged inputs: one cache, one lock, one build timer
+and one temp-dir lifecycle for every shared frame or on-disk layout.
 
-The staging plans (plans/corpus_lsh.py, plans/co_purchase.py,
-operators/blocking.staged_fuzzy_pairs) ``localCheckpoint`` a shared
-frame the first time any consumer asks for it; that build cost lands
-inside whichever TIMED query happens to run first (entity_clusters
-~10 s cold in BENCH_r11) and later consumers look artificially cheap
-(triangle_count 0.68 s warm).  Total suite time was always honest —
-the work runs once inside some timed region — but per-query numbers
-misattributed ~8-10 s.
+A staged input is work several catalog queries share: the corpus
+signature and shingle tables (plans/corpus_lsh.py), the co-purchase
+edge list (plans/co_purchase.py), the fuzzy-pair stream
+(operators/blocking.staged_fuzzy_pairs), the data-layout copies the
+layout queries read back (catalog_r4, catalog_r5l) and the stream
+source dir (streaming/events).  At warehouse scale each is a table the
+pipeline writes once per build; here it lives as long as the session
+that built it.
 
-This module records each staged build's wall seconds; ``bench.py``
-reports the sum as its own ``staging_sec`` line item (additions-only:
-no timed query, rep count, or sink changed).
+* ``stage`` returns ``build()``'s ``localCheckpoint``;
+* ``stage_dir`` returns a directory ``write(path)`` filled.
+
+Both build at most once per (session, name).  The cache is weakly
+keyed by session, so a stopped-and-rebuilt session restages instead of
+reading tables its catalog no longer has.  One re-entrant lock covers
+check and build, so concurrent query threads never race a write to the
+same location.  Stage dirs sit under one temp root per process,
+removed at interpreter exit.
+
+Each build's wall seconds land in ``STAGING_SEC``: that cost runs
+inside whichever timed query asks first, and ``bench.py`` reports the
+sum as its own ``staging_sec`` line item so per-query numbers are not
+misattributed.  A build that needs another staged input fetches it
+before calling ``stage``, so no second is counted twice.
 """
 
 from __future__ import annotations
 
+import atexit
+import re
+import shutil
+import tempfile
+import threading
 import time
-from contextlib import contextmanager
+from typing import Callable, TypeVar
+from weakref import WeakKeyDictionary
+
+from pyspark.sql import DataFrame, SparkSession
 
 #: {stage name: build wall seconds}, accumulated per process.  Build
 #: cost metadata only — never query results.
 STAGING_SEC: dict[str, float] = {}
 
+_T = TypeVar("_T")
+_CACHE: "WeakKeyDictionary[SparkSession, dict[str, object]]" = WeakKeyDictionary()
+_LOCK = threading.RLock()
+_ROOT: str | None = None
 
-@contextmanager
-def staged_build(name: str):
-    """Time one staged-frame build (the once-per-session branch of a
-    staging plan — call INSIDE the cache-miss branch only)."""
-    t0 = time.time()
-    try:
-        yield
-    finally:
-        STAGING_SEC[name] = round(
-            STAGING_SEC.get(name, 0.0) + (time.time() - t0), 3
+
+def _once(spark: SparkSession, name: str, build: Callable[[], _T]) -> _T:
+    with _LOCK:
+        per_session = _CACHE.setdefault(spark, {})
+        if name not in per_session:
+            t0 = time.time()
+            try:
+                per_session[name] = build()
+            finally:
+                STAGING_SEC[name] = round(
+                    STAGING_SEC.get(name, 0.0) + (time.time() - t0), 3
+                )
+        return per_session[name]
+
+
+def stage(
+    spark: SparkSession, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()``'s ``localCheckpoint``, built once per session."""
+    return _once(spark, name, lambda: build().localCheckpoint())
+
+
+def stage_dir(
+    spark: SparkSession, name: str, write: Callable[[str], object]
+) -> str:
+    """A directory ``write(path)`` filled, once per session."""
+
+    def build() -> str:
+        global _ROOT
+        if _ROOT is None:
+            _ROOT = tempfile.mkdtemp(prefix="spark_graft_stage_")
+            atexit.register(shutil.rmtree, _ROOT, ignore_errors=True)
+        path = tempfile.mkdtemp(
+            prefix=re.sub(r"\W+", "_", name)[:64] + "_", dir=_ROOT
         )
+        write(path)
+        return path
+
+    return _once(spark, name, build)

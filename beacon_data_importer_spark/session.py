@@ -26,6 +26,47 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: SQL confs the engine's results and plans depend on: ``get_spark``
+#: builds with them, ``configure_session`` sets them on an
+#: externally-owned session.
+SQL_CONF = (
+    ("spark.sql.ansi.enabled", "false"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    # coalesce small shuffles to the advisory size instead of
+    # preserving cluster parallelism: iterative small-frame stages
+    # (k-core peel, pagerank rounds, value-level windows) otherwise
+    # schedule 32 near-empty tasks per exchange — measured 3.6x on
+    # the 8-round peel, no frozen-set regression (BENCH r5 A/B).
+    # Explicit repartition() calls (the CPU-parallelism paths, e.g.
+    # _docs_parallel) are NOT coalesced by AQE, so wide narrow-CPU
+    # stages keep their width.
+    ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
+    # allow joins whose children are hash-partitioned on the SAME
+    # SUBSET of the join keys to run without re-exchanging (r11
+    # optimization round, guide §2.4 "remove shuffles outright"):
+    # the engine deliberately keys iterative/multi-consumer frames
+    # on ONE column (e.g. negative_sampling's custkey feeds a
+    # distinct, an anti-join and two aggregates from a single
+    # exchange) — with the default `true` Spark re-shuffles both
+    # sides onto the full key set even though same-key rows are
+    # already co-located.  Measured: negative_sampling warm
+    # 7.4 → 1.9 s, shuffle 37 → 17 MB at sf0.1; correctness is the
+    # planner's invariant (both sides must share the identical
+    # subset partitioning), oracle-verified suite-wide.  Scale
+    # note: subset co-partitioning only engages when BOTH sides
+    # carry the same explicit partitioning, so the 100 TB skew
+    # posture is unchanged — a hot subset key would already be hot
+    # in the explicit repartition that created it.
+    ("spark.sql.requireAllClusterKeysForCoPartition", "false"),
+    # the driver testdata writes TIMESTAMP(NANOS) parquet, which Spark
+    # rejects by default; read as long and convert at the scan layer
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # the reference's call-log scan is windows-1252 (prepare_calls.py:32);
+    # Spark 4 only allows the full JVM charset list under this flag
+    ("spark.sql.legacy.javaCharsets", "true"),
+)
+
 
 def get_spark(
     app_name: str = "beacon-data-importer-spark",
@@ -42,51 +83,13 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{DEFAULT_CPUS}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_CPUS))
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # coalesce small shuffles to the advisory size instead of
-        # preserving cluster parallelism: iterative small-frame stages
-        # (k-core peel, pagerank rounds, value-level windows) otherwise
-        # schedule 32 near-empty tasks per exchange — measured 3.6x on
-        # the 8-round peel, no frozen-set regression (BENCH r5 A/B).
-        # Explicit repartition() calls (the CPU-parallelism paths, e.g.
-        # _docs_parallel) are NOT coalesced by AQE, so wide narrow-CPU
-        # stages keep their width.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "false",
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # allow joins whose children are hash-partitioned on the SAME
-        # SUBSET of the join keys to run without re-exchanging (r11
-        # optimization round, guide §2.4 "remove shuffles outright"):
-        # the engine deliberately keys iterative/multi-consumer frames
-        # on ONE column (e.g. negative_sampling's custkey feeds a
-        # distinct, an anti-join and two aggregates from a single
-        # exchange) — with the default `true` Spark re-shuffles both
-        # sides onto the full key set even though same-key rows are
-        # already co-located.  Measured: negative_sampling warm
-        # 7.4 → 1.9 s, shuffle 37 → 17 MB at sf0.1; correctness is the
-        # planner's invariant (both sides must share the identical
-        # subset partitioning), oracle-verified suite-wide.  Scale
-        # note: subset co-partitioning only engages when BOTH sides
-        # carry the same explicit partitioning, so the 100 TB skew
-        # posture is unchanged — a hot subset key would already be hot
-        # in the explicit repartition that created it.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the driver testdata writes TIMESTAMP(NANOS) parquet, which Spark
-        # rejects by default; read as long and convert at the scan layer
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # the reference's call-log scan is windows-1252 (prepare_calls.py:32);
-        # Spark 4 only allows the full JVM charset list under this flag
-        .config("spark.sql.legacy.javaCharsets", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in (*SQL_CONF, *(extra_conf or {}).items()):
         builder = builder.config(k, v)
     # Deployment-specific overrides without code edits (the "keep
     # scale-dependent settings parameterised" contract): semicolon-
@@ -108,24 +111,12 @@ def configure_session(spark: SparkSession) -> SparkSession:
     the error-as-null contract and UTC rendering are correctness
     requirements for oracle parity, not tuning.
     """
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # runtime-settable perf conf (rationale at get_spark): coalesce
-    # small shuffles to the advisory size on external sessions too
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-    )
-    # subset-key co-partitioning (rationale at get_spark)
-    spark.conf.set(
-        "spark.sql.requireAllClusterKeysForCoPartition", "false"
-    )
-    for k, v in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.legacy.javaCharsets", "true"),
-    ):
+    for k, v in SQL_CONF:
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # static in some builds; get_spark sets them at construction
+            # the legacy keys are static in some builds; get_spark sets
+            # them at construction
+            if not k.startswith("spark.sql.legacy."):
+                raise
     return spark

@@ -1,11 +1,10 @@
-from .csv import read_csv_stringly, write_csv, write_csv_single
+from .csv import read_csv_stringly, write_csv
 from .jsonl import read_jsonl, read_orc, write_jsonl, write_orc
 from .parquet import read_table
 
 __all__ = [
     "read_csv_stringly",
     "write_csv",
-    "write_csv_single",
     "read_jsonl",
     "write_jsonl",
     "read_orc",

@@ -65,14 +65,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", True).csv(path)
 
 
-def write_csv_single(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Single-file CSV sink for byte-level parity with the reference CLI
-    (small outputs only — coalesce(1) funnels through one task; never use
-    on large frames).
-    """
-    df.coalesce(1).write.mode(mode).option("header", True).csv(path)
-
-
 def _petl_cell(v) -> str:
     """petl tocsv cell formatting: None → '', bool → 'True'/'False',
     dates → ISO (reference writes Python str())."""

@@ -19,29 +19,12 @@ sources with identical plan shapes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-_STREAM_DIRS: dict = {}
-
-
-def _staging_dir_for(src: str) -> str:
-    """One symlink staging dir per source file per process, removed at
-    interpreter exit (previously mkdtemp-per-call, which leaked a temp
-    dir on every invocation across test/bench runs)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    key = os.path.abspath(src)
-    if key not in _STREAM_DIRS:
-        stream_dir = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(key, os.path.join(stream_dir, os.path.basename(src)))
-        atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-        _STREAM_DIRS[key] = stream_dir
-    return _STREAM_DIRS[key]
+from ..plans.staging_meter import stage_dir
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,10 +32,14 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch reader; nano-long ts converted to a real timestamp).
 
     The file-stream source requires a DIRECTORY; the testdata ships one
-    file, so a cached temp dir with a symlink stands in (a real
-    deployment streams an arriving-files directory or a queue source)."""
-    src = f"{sf_dir}/events.parquet"
-    stream_dir = _staging_dir_for(src)
+    file, so a staged dir with a symlink stands in (a real deployment
+    streams an arriving-files directory or a queue source)."""
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
+    stream_dir = stage_dir(
+        spark,
+        f"events_stream|{sf_dir}",
+        lambda path: os.symlink(src, os.path.join(path, "events.parquet")),
+    )
 
     batch_schema = spark.read.parquet(src).schema
     df = spark.readStream.schema(batch_schema).parquet(stream_dir)

@@ -152,21 +152,17 @@ def test_concurrent_layout_staging_is_safe(spark, sf_dir):
     """Four threads invoking the bucketed-join query concurrently from
     a COLD staging cache must all succeed with identical results — the
     staging lock serializes the one-time table write instead of racing
-    overwrites on the same warehouse location."""
+    overwrites of the same tables."""
     import threading
 
-    from beacon_data_importer_spark import catalog_r4
-
-    # force a cold staging path for this process
-    for k in [k for k in catalog_r4._STAGED if k[0] == "bucketed"]:
-        del catalog_r4._STAGED[k]
-
+    # a new session shares the context but not the staging cache
+    cold = spark.newSession()
     results, errors = [], []
 
     def run():
         try:
             rows = sorted(
-                map(tuple, QUERIES["bucketed_join"](spark, sf_dir).collect())
+                map(tuple, QUERIES["bucketed_join"](cold, sf_dir).collect())
             )
             results.append(rows)
         except Exception as e:  # noqa: BLE001 — surfacing into the assert
@@ -180,3 +176,59 @@ def test_concurrent_layout_staging_is_safe(spark, sf_dir):
     assert not errors, errors
     assert len(results) == 4 and all(r == results[0] for r in results)
     assert len(results[0]) > 0
+
+
+_RESTART_SCRIPT = """
+import json, sys
+from beacon_data_importer_spark import catalog_r4, catalog_r5l  # noqa: F401
+from beacon_data_importer_spark.catalog import QUERIES
+from beacon_data_importer_spark.session import get_spark
+
+out = []
+for _ in range(2):
+    spark = get_spark(master="local[2]", shuffle_partitions=2,
+                      extra_conf={"spark.ui.enabled": "false"})
+    out.append({
+        q: sorted(map(list, QUERIES[q](spark, sys.argv[1]).collect()))
+        for q in ("bucketed_join", "xml_roundtrip")
+    })
+    spark.stop()
+print(json.dumps(out, default=str))
+"""
+
+
+def test_layout_staging_survives_session_restart(tmp_path, sf_dir):
+    """Staged layouts live as long as the session that built them: a
+    stopped-and-rebuilt session restages instead of reading tables its
+    catalog no longer has, and a finished process leaves no bucketed
+    table in the warehouse dir and no stage dir in the temp dir."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(
+        os.environ,
+        PYTHONPATH=repo,
+        TMPDIR=str(tmp),
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, os.path.abspath(sf_dir)],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert first == second and all(first.values())
+    warehouse = tmp_path / "spark-warehouse"
+    left = sorted(p.name for p in warehouse.glob("r4_*"))
+    assert not left, left
+    stray = [
+        p.name
+        for p in tmp.iterdir()
+        if p.name.startswith(("spark_graft_stage_", "r4_"))
+    ]
+    assert not stray, stray

@@ -237,3 +237,39 @@ def test_engine_spellings_live_in_dialect():
             ):
                 found.append(f"{where}: def {node.name}(dialect) not Dialect")
     assert not found, f"{len(found)} engine spellings outside Dialect: {found}"
+
+
+def test_staged_inputs_live_in_staging_meter():
+    """Ratchet: ``plans/staging_meter.py`` is the one place that decides
+    how long a staged input lives, what keys it, who serialises its
+    build and who times it.  Elsewhere in the package, no subscript
+    assignment caches a ``.localCheckpoint()`` and no module-level
+    ``Lock()``/``RLock()`` guards a private stage-once cache."""
+    pkg = os.path.dirname(_CATALOG_SOURCES[0])
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("plans", "staging_meter.py"):
+            continue
+        tree = _parse(path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Assign)
+                and any(isinstance(t, ast.Subscript) for t in node.targets)
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "localCheckpoint"
+            ):
+                found.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+        module_level = (
+            node
+            for stmt in tree.body
+            if not isinstance(stmt, (ast.FunctionDef, ast.ClassDef))
+            for node in ast.walk(stmt)
+        )
+        for node in module_level:
+            if isinstance(node, ast.Call) and (
+                ast.unparse(node.func).split(".")[-1] in ("Lock", "RLock")
+            ):
+                found.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+    assert not found, f"{len(found)} stage-once caches outside staging_meter: {found}"

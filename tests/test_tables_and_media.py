@@ -95,16 +95,3 @@ def test_decode_media_import_try_fallback(spark, sf_dir):
     stub = MM.decode_media(media, decode_stub=True).collect()
     auto = MM.decode_media(media, decode_stub=False).collect()
     assert sorted(map(tuple, stub)) == sorted(map(tuple, auto))
-
-
-def test_decode_media_arrow_matches_pandas_path(spark, sf_dir):
-    """mapInArrow and mapInPandas decode paths must be row-identical —
-    the Arrow variant exists purely to skip interchange overhead."""
-    from beacon_data_importer_spark.operators import multimodal as MM
-    from beacon_data_importer_spark.sources.parquet import read_table
-
-    d = read_table(spark, sf_dir, "documents").limit(100)
-    media = MM.media_from_documents(d)
-    a = sorted(map(tuple, MM.decode_media(media).collect()))
-    b = sorted(map(tuple, MM.decode_media_arrow(media).collect()))
-    assert a == b and len(a) == 100
