@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import sys
 from datetime import datetime
+from functools import partial
 from os.path import join
 
 
@@ -103,7 +104,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: unknown query: {args.name}", file=sys.stderr)
             return 1
 
-    from .session import get_spark
+    from .session import get_spark, run_concurrently
     from .sources.csv import csv_to_stdout, write_csv_file
 
     spark = get_spark(app_name=f"beacon-spark-{args.command}")
@@ -131,8 +132,12 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: {e}", file=sys.stderr)
             return 1
         os.makedirs(args.output_dir, exist_ok=True)
-        for name, df in outputs.items():
-            write_csv_file(df, join(args.output_dir, f"{name}.csv"))
+        # the seven sinks read none of each other's output: run them as
+        # concurrent jobs rather than leave the executor idle between them
+        run_concurrently([
+            partial(write_csv_file, df, join(args.output_dir, f"{name}.csv"))
+            for name, df in outputs.items()
+        ])
         return 0
 
     if args.command == "query":

@@ -25,6 +25,7 @@ import csv
 import os
 import shutil
 from dataclasses import dataclass
+from functools import partial
 from os.path import join
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -40,6 +41,7 @@ from pyspark.sql.types import (
 
 from ..operators.surrogate import assign_surrogate_ids
 from ..operators.upsert import update_from
+from ..session import run_concurrently
 
 # Typed staging boundary — the engine's equivalent of
 # ``create_tmp_tables.sql:1-41`` (S7): the all-string prepared CSVs are
@@ -161,6 +163,25 @@ def _append(table: DataFrame, rows: DataFrame) -> DataFrame:
     )
 
 
+# the needs numbering key: the batch, the reference's sort columns, then
+# every other column an inserted row can carry (a triage batch lacks the
+# last three staged ones; contact_id separates the contacts that share
+# an NHS number)
+_NEED_ORDER = (
+    "__batch",
+    "nhs_number",
+    "category",
+    "name",
+    "created_at",
+    "updated_at",
+    "completed_on",
+    "supplemental_data",
+    "user_id",
+    "start_on",
+    "contact_id",
+)
+
+
 def _insert_needs(
     contacts: DataFrame, batches: list[DataFrame], needs: DataFrame
 ) -> DataFrame:
@@ -168,9 +189,12 @@ def _insert_needs(
     6-27``, ``import_original_triage_needs_and_notes.sql:5-20``): resolve
     each contact id (inner join — unmatched NHS numbers drop out) and
     number the rows past ``needs``' max id in one window, batch by batch,
-    then by (nhs_number, category, name).  Postgres RETURNING order is
-    arbitrary; the engine pins this deterministic one.  Rows keep
-    ``__batch`` (their index in ``batches``)."""
+    then by (nhs_number, category, name), then by the row's remaining
+    columns.  Postgres RETURNING order is arbitrary; the engine's order
+    is total, so only identical rows tie and the ids do not depend on
+    the physical plan (which join the optimizer picks, or whether a
+    cached input already exists).  Rows keep ``__batch`` (their index in
+    ``batches``)."""
     staged = None
     for i, batch in enumerate(batches):
         batch = batch.withColumn("__batch", F.lit(i))
@@ -180,7 +204,8 @@ def _insert_needs(
             else staged.unionByName(batch, allowMissingColumns=True)
         )
     resolved = staged.join(F.broadcast(contacts_map(contacts)), "nhs_number")
-    return _ids_after(resolved, ["__batch", "nhs_number", "category", "name"], needs)
+    order = [c for c in _NEED_ORDER if c in resolved.columns]
+    return _ids_after(resolved, order, needs)
 
 
 def _attach_notes(
@@ -190,7 +215,8 @@ def _attach_notes(
     notes: DataFrame,
 ) -> DataFrame:
     """notes ⋈ contacts_map ⋈ inserted triage needs ON contact_id, numbered
-    past ``notes``' max id.  N×M fan-out preserved (``…sql:29-39``)."""
+    past ``notes``' max id in the order of all of a note's columns (total,
+    as in `_insert_needs`).  N×M fan-out preserved (``…sql:29-39``)."""
     ins_keys = inserted_triage.select(
         F.col("id").alias("need_id"), F.col("contact_id").alias("__cid")
     )
@@ -201,7 +227,7 @@ def _attach_notes(
             "need_id", "category", "body", "created_at", "updated_at", "import_data"
         )
     )
-    return _ids_after(attached, ["need_id", "category", "body"], notes)
+    return _ids_after(attached, attached.columns, notes)
 
 
 def import_original_triage_needs_and_notes(
@@ -316,8 +342,10 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
     No value is read back to the driver: the id watermarks are JVM-side
     aggregates, the inserted needs are cached once for both the needs and
     the notes write, and the returned row counts per table are observed
-    on the writes themselves.  Writes go to ``*.new`` then rename — Spark
-    cannot overwrite an input path it is lazily reading.
+    on the writes themselves.  The three writes read none of each
+    other's output and run as concurrent jobs (`run_concurrently`).
+    They go to ``*.new``, and the renames run once all three are written
+    — Spark cannot overwrite an input path it is lazily reading.
     """
     contacts = spark.read.parquet(join(db_dir, "contacts.parquet"))
     needs = _table_or_empty(spark, join(db_dir, "needs.parquet"), NEEDS_SCHEMA)
@@ -340,13 +368,16 @@ def run_import(spark: SparkSession, db_dir: str, staging_dir: str) -> dict[str, 
         "needs": _append(needs, inserted),
         "notes": _append(notes, _attach_notes(contacts, tmp_notes, triage, notes)),
     }
-    counts: dict[str, int] = {}
-    for name, df in outputs.items():
+
+    def write(name: str, df: DataFrame) -> int:
         written = Observation(name)
         df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"
         ).parquet(join(db_dir, f"{name}.parquet.new"))
-        counts[name] = written.get["rows"]
+        return written.get["rows"]
+
+    rows = run_concurrently([partial(write, n, df) for n, df in outputs.items()])
+    counts = dict(zip(outputs, rows))
     inserted.unpersist()
     for name in outputs:
         final = join(db_dir, f"{name}.parquet")

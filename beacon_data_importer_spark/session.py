@@ -21,8 +21,11 @@ Performance (the 100 TB posture):
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -120,3 +123,37 @@ def configure_session(spark: SparkSession) -> SparkSession:
             if not k.startswith("spark.sql.legacy."):
                 raise
     return spark
+
+
+def run_concurrently(actions: Sequence[Callable[[], Any]]) -> list[Any]:
+    """Run independent Spark actions at once, one driver thread each, and
+    return their results in submission order.
+
+    Every action's jobs carry the caller's job group, description and
+    tags (``inheritable_thread_target`` copies them when the action is
+    wrapped, in the caller's thread).  Spark's scheduler queues the
+    concurrent jobs.  All actions run to the end; then the first failure
+    in submission order, if any, is raised.
+    """
+    spark = SparkSession.active()
+    results: list[Any] = [None] * len(actions)
+    errors: list[BaseException | None] = [None] * len(actions)
+
+    def run(i: int, action: Callable[[], Any]) -> None:
+        try:
+            results[i] = action()
+        except BaseException as e:  # re-raised in the caller's thread
+            errors[i] = e
+
+    target = inheritable_thread_target(spark)(run)
+    threads = [
+        threading.Thread(target=target, args=(i, a)) for i, a in enumerate(actions)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

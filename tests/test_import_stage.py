@@ -293,3 +293,57 @@ def test_run_import_twice_into_existing_db(spark, tmp_path):
         assert notes.filter(notes.id <= notes_top).count() == old_notes + (k - 1) * n_notes
         needs_top = max(r.id for r in new)
         notes_top = max(r.id for r in fresh)
+
+
+def test_run_import_ids_do_not_depend_on_the_plan(spark, tmp_path, monkeypatch):
+    """Needs and notes are numbered in a total order, so the ids do not
+    depend on the physical plan.  Three imports of the fixtures into
+    fresh DBs write the same tables, ids included: a plain one, one whose
+    inserted needs are materialised before the concurrent writes start
+    (the notes query is then planned against the cache), and one whose
+    staged CSVs list their rows in reverse (tied rows then reach the
+    numbering windows in another order)."""
+    import csv
+
+    import fixtures
+    from beacon_data_importer_spark.plans.calls import CallsUsers, prepare_calls
+    from beacon_data_importer_spark.plans.contacts import prepare_contacts
+    from beacon_data_importer_spark.sources.csv import write_csv_file
+
+    staging, reversed_staging = tmp_path / "staging", tmp_path / "reversed"
+    staging.mkdir()
+    reversed_staging.mkdir()
+    calls_csv, gds_csv = str(tmp_path / "calls.csv"), str(tmp_path / "gds.csv")
+    contacts_csv = str(tmp_path / "contacts.csv")
+    fixtures.write_calls_csv(calls_csv)
+    fixtures.write_gds_csv(gds_csv)
+    for name, df in prepare_calls(spark, calls_csv, CallsUsers(101, 102, 103, 104)).items():
+        write_csv_file(df, str(staging / f"{name}.csv"))
+        with open(staging / f"{name}.csv", newline="") as fh:
+            header, *rows = csv.reader(fh)
+        with open(reversed_staging / f"{name}.csv", "w", newline="") as fh:
+            csv.writer(fh).writerows([header, *rows[::-1]])
+    write_csv_file(prepare_contacts(spark, gds_csv, "2020-05-01T12:00:00"), contacts_csv)
+
+    def import_into(db, staged=staging):
+        imp.init_contacts_from_csv(spark, contacts_csv).write.parquet(
+            str(db / "contacts.parquet"))
+        imp.run_import(spark, str(db), str(staged))
+        return {
+            name: sorted(spark.read.parquet(str(db / f"{name}.parquet")).collect(), key=repr)
+            for name in ("contacts", "needs", "notes")
+        }
+
+    plain = import_into(tmp_path / "plain")
+    assert [len(plain[n]) for n in ("contacts", "needs", "notes")] == [4, 10, 16]
+    assert import_into(tmp_path / "from_reversed", reversed_staging) == plain
+
+    insert_needs = imp._insert_needs
+
+    def materialised(*args):
+        df = insert_needs(*args).cache()
+        df.count()
+        return df
+
+    monkeypatch.setattr(imp, "_insert_needs", materialised)
+    assert import_into(tmp_path / "cached") == plain
