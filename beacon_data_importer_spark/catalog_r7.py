@@ -410,7 +410,7 @@ def q_event_type_distinct_sketch(
     the SAME ``batch_type_sketches`` → ``sketch_estimates`` code path
     the ``foreachBatch`` sink maintains incrementally — the
     streaming-vs-batch equality test
-    (tests/test_streaming_sketches.py) proves the two produce
+    (tests/test_streaming.py) proves the two produce
     identical estimates, and this registered twin gives that surface a
     driver CORRECTNESS row.  The estimate is audited as a boolean
     bound (|est − exact| ≤ 10%, >6× the lgK=12 rse of ~1.6%) next to

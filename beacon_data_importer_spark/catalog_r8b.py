@@ -25,7 +25,7 @@ ROADMAP tiers):
   inclusion-exclusion error stacking — theta intersects natively.
   Estimates audited as boolean 10% bounds against exact flag
   aggregation (hll_distinct_audit device);
-  tests/test_streaming_sketches.py asserts streaming == batch
+  tests/test_streaming.py asserts streaming == batch
   estimates for the theta path too.
 
 Reference parity: beyond-reference analytics/streaming tiers.
@@ -211,9 +211,9 @@ def q_event_type_theta_overlap(
     """Batch twin of the streaming THETA state: audience set algebra
     between '{a}' and '{b}' users — |A|, |B|, |A∪B|, |A∩B|, |A∖B| —
     from the per-type sketch table the ``foreachBatch`` sink maintains
-    (``streaming/sketches.py:merge_batch_theta``; equality of
+    (``streaming/sketches.py:union_theta``; equality of
     streaming and batch estimates is asserted by
-    tests/test_streaming_sketches.py).  This is the operation HLL
+    tests/test_streaming.py).  This is the operation HLL
     state structurally cannot serve (intersection only via
     inclusion-exclusion, error stacking with small overlaps); theta
     intersects natively, which is why both sketch families are

@@ -24,7 +24,6 @@ from __future__ import annotations
 import csv
 import os
 import shutil
-from dataclasses import dataclass
 from functools import partial
 from os.path import join
 
@@ -141,13 +140,6 @@ def _ids_after(
     )
 
 
-@dataclass
-class ImportResult:
-    contacts: DataFrame
-    needs: DataFrame
-    notes: DataFrame
-
-
 def contacts_map(contacts: DataFrame) -> DataFrame:
     """``WITH contacts_map AS (SELECT id AS contact_id, nhs_number …)``
     (M1, ``import_identified_needs.sql:1-5``)."""
@@ -228,32 +220,6 @@ def _attach_notes(
         )
     )
     return _ids_after(attached, attached.columns, notes)
-
-
-def import_original_triage_needs_and_notes(
-    contacts: DataFrame,
-    needs: DataFrame,
-    notes: DataFrame,
-    tmp_needs: DataFrame,
-    tmp_notes: DataFrame,
-) -> ImportResult:
-    """``import_original_triage_needs_and_notes.sql`` — the RETURNING
-    pipeline: insert the triage needs, then attach the staged notes to
-    those fresh ids."""
-    inserted = _insert_needs(contacts, [tmp_needs], needs)
-    return ImportResult(
-        contacts=contacts,
-        needs=_append(needs, inserted),
-        notes=_append(notes, _attach_notes(contacts, tmp_notes, inserted, notes)),
-    )
-
-
-def import_identified_needs(
-    contacts: DataFrame, needs: DataFrame, tmp_identified_needs: DataFrame
-) -> DataFrame:
-    """``import_identified_needs.sql:6-27`` — INSERT…SELECT with the
-    contact-id resolution join."""
-    return _append(needs, _insert_needs(contacts, [tmp_identified_needs], needs))
 
 
 PROFILE_COLS = [
@@ -393,14 +359,6 @@ def import_contact_profile_updates(
     """``import_contact_profile_updates.sql:1-7`` — UPDATE…FROM with
     per-column COALESCE, as join-coalesce-overwrite.  The staging side is
     first-wins deduplicated (Postgres picks an arbitrary match on 1:N;
-    the engine pins first-by-input-order when __source_row is present,
-    else lexicographic)."""
-    order: list[str | Column] = (
-        ["__source_row"] if "__source_row" in tmp_updates.columns else PROFILE_COLS
-    )
-    staging = tmp_updates.select(
-        "nhs_number",
-        *PROFILE_COLS,
-        *(["__source_row"] if "__source_row" in tmp_updates.columns else []),
-    )
-    return update_from(contacts, staging, "nhs_number", PROFILE_COLS, order)
+    the engine keeps the lexicographically first profile)."""
+    staging = tmp_updates.select("nhs_number", *PROFILE_COLS)
+    return update_from(contacts, staging, "nhs_number", PROFILE_COLS, PROFILE_COLS)

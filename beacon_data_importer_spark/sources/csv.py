@@ -16,7 +16,9 @@ still reaches the FileScan because the projection is per-column.
 
 from __future__ import annotations
 
+import csv
 import os
+import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,53 +58,25 @@ def read_csv_stringly(
     )
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Distributed CSV sink (one file per partition) — the scale path.
-
-    Mirrors the reference's ``.tocsv(path)`` (``prepare_calls.py:176-191``)
-    but partitioned: at 100 TB a single output file is an anti-goal.
-    """
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def _petl_cell(v) -> str:
-    """petl tocsv cell formatting: None → '', bool → 'True'/'False',
-    dates → ISO (reference writes Python str())."""
-    if v is None:
-        return ""
-    if v is True:
-        return "True"
-    if v is False:
-        return "False"
-    return str(v)
+def _write_rows(df: DataFrame, fh, lineterminator: str) -> None:
+    """Header, then every row through ``csv.writer`` — petl's ``tocsv``
+    cell formatting (None → '', everything else ``str()``).  Streams
+    through the driver (toLocalIterator): CLI parity for council-sized
+    outputs, inherently a driver funnel."""
+    w = csv.writer(fh, lineterminator=lineterminator)
+    w.writerow(df.columns)
+    for row in df.toLocalIterator():
+        w.writerow(row)
 
 
 def write_csv_file(df: DataFrame, path: str) -> None:
-    """Write ONE real CSV file at ``path`` with petl-compatible cell
-    formatting — byte-parity with the reference's ``.tocsv(path)``
-    (``prepare_calls.py:176-191``).  Streams through the driver
-    (toLocalIterator): CLI-parity path for council-sized outputs; the
-    scale path is :func:`write_csv`."""
-    import csv as _csv
-
+    """Write ONE real CSV file at ``path`` — byte-parity with the
+    reference's ``.tocsv(path)`` (``prepare_calls.py:176-191``)."""
     with open(path, "w", newline="") as fh:
-        w = _csv.writer(fh)
-        w.writerow(df.columns)
-        for row in df.toLocalIterator():
-            w.writerow([_petl_cell(v) for v in row])
+        _write_rows(df, fh, "\r\n")
 
 
 def csv_to_stdout(df: DataFrame) -> None:
     """Stream the frame as CSV to stdout — parity with ``.tocsv()`` piping
-    (reference ``prepare_contacts.py:44``, ``README.md:26-32``).
-
-    Uses toLocalIterator to avoid materializing the whole frame on the
-    driver; still inherently a driver funnel, CLI-parity only.
-    """
-    import csv as _csv
-    import sys
-
-    w = _csv.writer(sys.stdout, lineterminator=os.linesep)
-    w.writerow(df.columns)
-    for row in df.toLocalIterator():
-        w.writerow(["" if v is None else v for v in row])
+    (reference ``prepare_contacts.py:44``, ``README.md:26-32``)."""
+    _write_rows(df, sys.stdout, os.linesep)

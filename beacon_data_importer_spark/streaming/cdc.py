@@ -1,36 +1,23 @@
 """Streaming CDC apply: a changelog stream merged into a keyed
-dimension snapshot per micro-batch (``foreachBatch`` + last-writer-wins
-compaction with tombstones) — the streaming twin of the batch
-``cdc_apply`` catalog query, and the composition VERDICT r4's roadmap
-sketched (streaming joins/merges against a CDC-changing dimension).
-
-Spark has no native streaming MERGE sink for plain parquet; the
-standard pattern (reference behavior: the importer's
-``INSERT … ON CONFLICT DO UPDATE`` staging loads,
-/root/reference/README.md:73-78) is ``foreachBatch``: every
-micro-batch arrives as a regular DataFrame and is merged
-transactionally by batch id.  Storage is a VERSIONED snapshot
-directory (``v00000001/…``) — each batch writes a full compacted
-snapshot and readers pick the highest version, so a crashed write
-never corrupts the readable state and replayed batches (checkpoint
-recovery re-runs the last uncommitted batch) simply rewrite the same
-version idempotently.
+dimension snapshot per micro-batch (last-writer-wins compaction with
+tombstones) — the streaming twin of the batch ``cdc_apply`` catalog
+query, and the composition VERDICT r4's roadmap sketched (streaming
+joins/merges against a CDC-changing dimension).  Storage, commit and
+replay are ``streaming/versioned.py``'s: run it with
+``versioned.fold_stream(changelog, dir, apply_changes)`` and read it
+with ``live(versioned.latest(spark, dir))``.
 
 Tombstones are RETAINED in the stored snapshot (op='D' rows keep
 their seq): a delete must keep beating any stale lower-seq upsert
 that arrives in a later micro-batch — the read view filters them.
-At warehouse scale the same loop runs against a table format with
-native MERGE (Delta/Iceberg) and the snapshot becomes partitioned
-merge-on-read state; the per-batch cost here is one keyed
-hash-aggregate over snapshot ∪ batch, which is the lower bound for
-eager compaction.
+At warehouse scale the snapshot becomes partitioned merge-on-read
+state; the per-batch cost here is one keyed hash-aggregate over
+snapshot ∪ batch, which is the lower bound for eager compaction.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -68,90 +55,27 @@ def collapse_last_writer(log: DataFrame) -> DataFrame:
     )
 
 
-def _versions(target_dir: str) -> list[str]:
-    """Committed versions only: a snapshot counts once its Hadoop
-    ``_SUCCESS`` marker exists.  A crash mid-write leaves part files
-    but no marker, so the partial directory is invisible to readers
-    and to the next merge's prev-lookup — the 'crashed write never
-    corrupts readable state' contract (ADVICE r5 item 2)."""
-    if not os.path.isdir(target_dir):
-        return []
-    return sorted(
-        d for d in os.listdir(target_dir)
-        if d.startswith("v") and d[1:].isdigit()
-        and os.path.isfile(os.path.join(target_dir, d, "_SUCCESS"))
-    )
-
-
-def current_snapshot(spark: SparkSession, target_dir: str) -> DataFrame:
-    """The live dimension: highest committed version, tombstones
-    filtered out."""
-    vs = _versions(target_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed snapshot under {target_dir}")
-    snap = spark.read.parquet(os.path.join(target_dir, vs[-1]))
-    return snap.filter(F.col("op") == "U").drop("op")
-
-
-def merge_batch(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, target_dir: str
-) -> None:
-    """Merge ONE micro-batch into the versioned snapshot.
-
-    prev is keyed to the BATCH ID, not the highest version on disk:
-    batch N reads v{N} (written by batch N-1) and writes v{N+1}.
-    After a crash-after-write, the replayed batch N still reads v{N}
-    and rewrites v{N+1} idempotently — reading the highest version
-    would make replay read the very directory it then overwrites
-    (Spark refuses) and double-count n_changes (ADVICE r5 item 1)."""
-    compacted = collapse_last_writer(batch_df)
-    prev_name = f"v{batch_id:08d}"
-    if batch_id > 0:
-        if prev_name not in _versions(target_dir):
-            raise RuntimeError(
-                f"CDC merge: batch {batch_id} expects committed "
-                f"snapshot {prev_name} under {target_dir}; found "
-                f"{_versions(target_dir)}"
-            )
-        prev = spark.read.parquet(os.path.join(target_dir, prev_name))
-        merged = (
-            prev.unionByName(compacted)
-            .groupBy("key")
-            .agg(
-                F.max("seq").alias("seq"),
-                F.max_by("op", "seq").alias("op"),
-                F.max_by("cents", "seq").alias("cents"),
-                F.sum("n_changes").alias("n_changes"),
-            )
+def apply_changes(log: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The CDC ``versioned.merge`` step: compact the batch, union it with
+    the previous snapshot and compact again.  Last writer wins across
+    the union because seq is globally monotone; n_changes accumulates
+    across versions, so the stored row also audits how many changelog
+    entries ever touched the key."""
+    compacted = collapse_last_writer(log)
+    if prev is None:
+        return compacted
+    return (
+        prev.unionByName(compacted)
+        .groupBy("key")
+        .agg(
+            F.max("seq").alias("seq"),
+            F.max_by("op", "seq").alias("op"),
+            F.max_by("cents", "seq").alias("cents"),
+            F.sum("n_changes").alias("n_changes"),
         )
-    else:
-        merged = compacted
-    merged.write.mode("overwrite").parquet(
-        os.path.join(target_dir, f"v{batch_id + 1:08d}")
     )
 
 
-def streaming_cdc_merge(
-    changelog: DataFrame, target_dir: str
-) -> None:
-    """Run the changelog stream to completion (Trigger.AvailableNow),
-    merging each micro-batch into the versioned snapshot.
-
-    Per batch: compact the batch, union with the previous snapshot
-    (empty on the first batch), compact again — last writer wins
-    across the union because seq is globally monotone — and write the
-    FULL compacted snapshot as the next version.  n_changes
-    accumulates across versions, so the stored row also audits how
-    many changelog entries ever touched the key."""
-    spark = changelog.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(spark, batch_df, batch_id, target_dir)
-
-    q = (
-        changelog.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+def live(snapshot: DataFrame) -> DataFrame:
+    """The live dimension of a stored snapshot: tombstones filtered out."""
+    return snapshot.filter(F.col("op") == "U").drop("op")

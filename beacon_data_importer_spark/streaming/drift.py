@@ -28,20 +28,15 @@ asserts the streamed state equals a scalar fold over the SAME slice
 sequence bit-for-bit — integers everywhere, so "bit-for-bit" is
 literal.  Stream == one-pass batch is not a theorem and not asserted.
 
-Versioned-snapshot contract identical to topk.py/sketches.py: v{N}
-read, v{N+1} written, _SUCCESS-gated, idempotent on checkpoint
-replay.  Snapshot schema: one row
+Storage, commit and replay are ``streaming/versioned.py``'s, with
+``fold_volume`` as the step.  Snapshot schema: one row
 (n_batches, sum_x, m_e6, m_min_e6, ph_e6, lambda_e6, n_alarms,
 last_x) — all BIGINT.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from .cdc import _versions
+from pyspark.sql import DataFrame
 
 _SCHEMA = (
     "n_batches bigint, sum_x bigint, m_e6 bigint, m_min_e6 bigint,"
@@ -70,55 +65,11 @@ def ph_step(state: tuple | None, x: int) -> tuple:
     return (n, s, m, mn, ph, lam, alarms, x)
 
 
-def merge_batch_ph(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, target_dir: str
-) -> None:
-    """Fold ONE micro-batch into the versioned PH snapshot: the batch
-    reduces to a single exact count (one distributed aggregate), the
-    prior one-row snapshot loads, ph_step runs driver-side on scalars,
-    v{batch_id+1} commits."""
-    x = batch_df.count()
-    prev_name = f"v{batch_id:08d}"
-    state = None
-    if batch_id > 0:
-        if prev_name not in _versions(target_dir):
-            raise RuntimeError(
-                f"ph merge: batch {batch_id} expects committed "
-                f"snapshot {prev_name} under {target_dir}"
-            )
-        r = spark.read.parquet(
-            os.path.join(target_dir, prev_name)
-        ).collect()[0]
-        state = (
-            r.n_batches, r.sum_x, r.m_e6, r.m_min_e6,
-            r.ph_e6, r.lambda_e6, r.n_alarms, r.last_x,
-        )
-    out = ph_step(state, x)
-    spark.createDataFrame([out], _SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(target_dir, f"v{batch_id + 1:08d}")
+def fold_volume(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The PH ``versioned.merge`` step: the batch reduces to a single
+    exact count (one distributed aggregate), the prior one-row snapshot
+    loads, and ph_step runs driver-side on scalars."""
+    state = None if prev is None else tuple(prev.first())
+    return batch.sparkSession.createDataFrame(
+        [ph_step(state, batch.count())], _SCHEMA
     )
-
-
-def streaming_drift_monitor(events: DataFrame, target_dir: str) -> None:
-    """Run the stream to completion (Trigger.AvailableNow), maintaining
-    the per-batch-volume Page-Hinkley state."""
-    spark = events.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_ph(spark, batch_df, batch_id, target_dir)
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def current_drift_state(spark: SparkSession, target_dir: str) -> DataFrame:
-    """The highest committed PH snapshot (one row)."""
-    vs = _versions(target_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed snapshot under {target_dir}")
-    return spark.read.parquet(os.path.join(target_dir, vs[-1]))

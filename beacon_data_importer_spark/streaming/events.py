@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.staging_meter import stage_dir
+from .versioned import each_batch
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,23 +113,17 @@ def run_available_now(stream_df: DataFrame, table_name: str) -> None:
 
 
 def run_foreach_batch_to_parquet(stream_df, out_dir: str) -> None:
-    """Incremental parquet sink via foreachBatch — the pattern for sinks
-    Spark has no native streaming writer for (JDBC upserts, MERGE
-    targets): each micro-batch arrives as a regular DataFrame with an
-    id, written transactionally by batch."""
+    """Incremental parquet sink via ``versioned.each_batch`` — the
+    pattern for sinks Spark has no native streaming writer for (JDBC
+    upserts, MERGE targets): each micro-batch arrives as a regular
+    DataFrame with an id, written transactionally by batch."""
 
     def sink(batch_df, batch_id: int) -> None:
         batch_df.withColumn(
             "__batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(out_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", out_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    each_batch(stream_df, out_dir, sink)
 
 
 def interval_join_attribution(

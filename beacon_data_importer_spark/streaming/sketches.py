@@ -7,11 +7,9 @@ built on Spark 4's Apache DataSketches functions (``hll_sketch_agg`` /
 Why this shape: a 100 TB stream cannot keep distinct-user state per
 (event_type) as exact sets — the HLL register array is the bounded
 state (≈ KB per group at lgK=12), and register-wise max (union) is the
-merge.  ``foreachBatch`` computes each micro-batch's per-type sketch
-JVM-side, unions it with the previous snapshot's sketch, and writes a
-full compacted snapshot as the next version — the same versioned-
-directory contract as streaming/cdc.py (``_SUCCESS``-gated versions,
-batch-id-keyed prev, idempotent replay).
+merge.  ``union_hll`` computes each micro-batch's per-type sketch
+JVM-side and unions it with the previous snapshot's sketch; storage,
+commit and replay are ``streaming/versioned.py``'s.
 
 EXACTNESS CONTRACT: HLL union is register-wise max — associative and
 commutative — so the merged sketch over any micro-batch partition of
@@ -23,12 +21,12 @@ ESTIMATES, not between estimates and true counts.
 
 from __future__ import annotations
 
-import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cdc import _versions
+from .versioned import Step
 
 _LG_K = 12
 
@@ -51,74 +49,14 @@ def sketch_estimates(sketches: DataFrame) -> DataFrame:
     )
 
 
-def merge_batch(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, target_dir: str
-) -> None:
-    """Merge ONE micro-batch's sketches into the versioned snapshot.
-    Same replay contract as cdc.merge_batch: prev is keyed to the
-    batch id (v{{N}} read, v{{N+1}} written), so checkpoint replay
-    rewrites idempotently and a torn write (no _SUCCESS) is invisible."""
-    compacted = batch_type_sketches(batch_df)
-    prev_name = f"v{batch_id:08d}"
-    if batch_id > 0:
-        if prev_name not in _versions(target_dir):
-            raise RuntimeError(
-                f"sketch merge: batch {batch_id} expects committed "
-                f"snapshot {prev_name} under {target_dir}"
-            )
-        prev = spark.read.parquet(os.path.join(target_dir, prev_name))
-        merged = (
-            prev.unionByName(compacted)
-            .groupBy("event_type")
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
-        )
-    else:
-        merged = compacted
-    merged.write.mode("overwrite").parquet(
-        os.path.join(target_dir, f"v{batch_id + 1:08d}")
-    )
-
-
-def streaming_distinct_users(
-    events: DataFrame, target_dir: str
-) -> None:
-    """Run the event stream to completion (Trigger.AvailableNow),
-    maintaining per-type distinct-user HLL state across micro-batches.
-    Readers take ``sketch_estimates`` over the highest committed
-    version."""
-    spark = events.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(spark, batch_df, batch_id, target_dir)
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def current_estimates(spark: SparkSession, target_dir: str) -> DataFrame:
-    """Estimates from the highest committed snapshot."""
-    vs = _versions(target_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed snapshot under {target_dir}")
-    return sketch_estimates(
-        spark.read.parquet(os.path.join(target_dir, vs[-1]))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Theta-sketch state (round 8 — VERDICT r7 item 6)
 # ---------------------------------------------------------------------------
 #
-# Same versioned-snapshot contract as the HLL state above, but theta
-# sketches: union is still the merge (associative, so streaming ==
-# batch estimates — asserted by tests/test_streaming_sketches.py), and
-# unlike HLL the MAINTAINED state also supports INTERSECTION and
-# DIFFERENCE algebra — per-type audience overlap from KB-scale state,
+# Stored like the HLL state above, but theta sketches: union is still
+# the merge (associative, so streaming == batch estimates — asserted by
+# tests/test_streaming.py), and unlike HLL the MAINTAINED state also
+# supports INTERSECTION and DIFFERENCE algebra — per-type audience overlap from KB-scale state,
 # long after the raw events are gone.  That set algebra is what earns
 # theta its storage next to HLL (theta state is larger per group).
 
@@ -139,53 +77,6 @@ def theta_estimates(sketches: DataFrame) -> DataFrame:
             "n_distinct_est"
         ),
     )
-
-
-def merge_batch_theta(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, target_dir: str
-) -> None:
-    """Merge ONE micro-batch's theta sketches into the versioned
-    snapshot — merge_batch's contract with ``theta_union_agg`` as the
-    combine."""
-    compacted = batch_type_theta_sketches(batch_df)
-    prev_name = f"v{batch_id:08d}"
-    if batch_id > 0:
-        if prev_name not in _versions(target_dir):
-            raise RuntimeError(
-                f"theta merge: batch {batch_id} expects committed "
-                f"snapshot {prev_name} under {target_dir}"
-            )
-        prev = spark.read.parquet(os.path.join(target_dir, prev_name))
-        merged = (
-            prev.unionByName(compacted)
-            .groupBy("event_type")
-            .agg(F.theta_union_agg("sketch").alias("sketch"))
-        )
-    else:
-        merged = compacted
-    merged.write.mode("overwrite").parquet(
-        os.path.join(target_dir, f"v{batch_id + 1:08d}")
-    )
-
-
-def streaming_distinct_users_theta(
-    events: DataFrame, target_dir: str
-) -> None:
-    """Run the event stream to completion (Trigger.AvailableNow),
-    maintaining per-type distinct-user THETA state across
-    micro-batches."""
-    spark = events.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_theta(spark, batch_df, batch_id, target_dir)
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def theta_overlap(sketches: DataFrame, type_a: str, type_b: str) -> DataFrame:
@@ -211,13 +102,22 @@ def theta_overlap(sketches: DataFrame, type_a: str, type_b: str) -> DataFrame:
     )
 
 
-def current_theta_estimates(
-    spark: SparkSession, target_dir: str
-) -> DataFrame:
-    """Estimates from the highest committed theta snapshot."""
-    vs = _versions(target_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed snapshot under {target_dir}")
-    return theta_estimates(
-        spark.read.parquet(os.path.join(target_dir, vs[-1]))
-    )
+def _union_step(sketch: Callable[[DataFrame], DataFrame], union_agg) -> Step:
+    """The ``versioned.merge`` step of a per-type sketch state: sketch the
+    batch, then union it with the previous snapshot's sketches."""
+
+    def step(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        current = sketch(batch)
+        if prev is None:
+            return current
+        return (
+            prev.unionByName(current)
+            .groupBy("event_type")
+            .agg(union_agg("sketch").alias("sketch"))
+        )
+
+    return step
+
+
+union_hll = _union_step(batch_type_sketches, F.hll_union_agg)
+union_theta = _union_step(batch_type_theta_sketches, F.theta_union_agg)

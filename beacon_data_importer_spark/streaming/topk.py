@@ -16,21 +16,16 @@ state equals a batch-side fold over the SAME slice sequence
 bit-for-bit, and (b) the MG bound holds against exact counts.  It does
 NOT assert stream == one-pass batch (no such theorem exists).
 
-Versioned-snapshot contract identical to sketches.py: v{N} read,
-v{N+1} written, _SUCCESS-gated, idempotent on checkpoint replay.
-Snapshot schema: (user_id BIGINT, cnt BIGINT, err BIGINT) with err
-constant across rows (the summary's error scalar, replicated for a
-flat parquet schema).
+Storage, commit and replay are ``streaming/versioned.py``'s, with
+``merge_counts`` as the step.  Snapshot schema: (user_id BIGINT, cnt
+BIGINT, err BIGINT) with err constant across rows (the summary's error
+scalar, replicated for a flat parquet schema).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .cdc import _versions
 
 K = 32
 
@@ -63,66 +58,30 @@ def mg_compress(
     )
 
 
-def merge_batch_mg(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, target_dir: str
-) -> None:
-    """Merge ONE micro-batch into the versioned MG snapshot: sum the
-    ≤ K previous counters (a broadcast-small frame) with the slice's
-    exact counts, re-compress, write v{batch_id+1}."""
-    counts = batch_counts(batch_df)
-    prev_name = f"v{batch_id:08d}"
+def merge_counts(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """The MG ``versioned.merge`` step: sum the ≤ K previous counters (a
+    broadcast-small frame) with the slice's exact counts, re-compress."""
+    counts = batch_counts(batch)
     prev_err = 0
-    if batch_id > 0:
-        if prev_name not in _versions(target_dir):
-            raise RuntimeError(
-                f"mg merge: batch {batch_id} expects committed "
-                f"snapshot {prev_name} under {target_dir}"
-            )
-        prev = spark.read.parquet(os.path.join(target_dir, prev_name))
+    if prev is not None:
         prev_err = prev.select(F.max("err")).collect()[0][0] or 0
-        merged = (
+        counts = (
             prev.select("user_id", "cnt")
             .unionByName(counts)
             .groupBy("user_id")
             .agg(F.sum("cnt").cast("bigint").alias("cnt"))
         )
-    else:
-        merged = counts
-    rows, err = mg_compress(merged, prev_err)
-    out = spark.createDataFrame(
+    rows, err = mg_compress(counts, prev_err)
+    return batch.sparkSession.createDataFrame(
         [(r.user_id, r.cnt, err) for r in rows],
         "user_id bigint, cnt bigint, err bigint",
     )
-    out.write.mode("overwrite").parquet(
-        os.path.join(target_dir, f"v{batch_id + 1:08d}")
-    )
 
 
-def streaming_heavy_hitters(events: DataFrame, target_dir: str) -> None:
-    """Run the event stream to completion (Trigger.AvailableNow),
-    maintaining the K-bounded per-user heavy-hitter summary."""
-    spark = events.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_mg(spark, batch_df, batch_id, target_dir)
-
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", target_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def current_heavy_hitters(spark: SparkSession, target_dir: str) -> DataFrame:
-    """(user_id, cnt_lo, cnt_hi) from the highest committed snapshot:
-    the MG bound is cnt_lo ≤ true ≤ cnt_hi."""
-    vs = _versions(target_dir)
-    if not vs:
-        raise FileNotFoundError(f"no committed snapshot under {target_dir}")
-    snap = spark.read.parquet(os.path.join(target_dir, vs[-1]))
-    return snap.select(
+def heavy_hitters(snapshot: DataFrame) -> DataFrame:
+    """(user_id, cnt_lo, cnt_hi) from a stored snapshot: the MG bound is
+    cnt_lo ≤ true ≤ cnt_hi."""
+    return snapshot.select(
         "user_id",
         F.col("cnt").alias("cnt_lo"),
         (F.col("cnt") + F.col("err")).alias("cnt_hi"),

@@ -71,14 +71,17 @@ def test_returning_pipeline_ids_and_note_fanout(spark):
                 import_data=None),  # no inserted need for N2 -> dropped
         ]
     )
-    res = imp.import_original_triage_needs_and_notes(
-        contacts, _empty_needs(spark), _empty_notes(spark), tmp_needs, tmp_notes
-    )
-    needs = res.needs.collect()
+    # the RETURNING pipeline as run_import composes it: insert the triage
+    # needs, then attach the staged notes to those fresh ids
+    needs0, notes0 = _empty_needs(spark), _empty_notes(spark)
+    inserted = imp._insert_needs(contacts, [tmp_needs], needs0)
+    needs = imp._append(needs0, inserted).collect()
     assert sorted(r.id for r in needs) == [1, 2]  # dense from max(0)
     assert all(r.contact_id == 10 for r in needs)  # NX dropped
 
-    notes = res.notes.collect()
+    notes = imp._append(
+        notes0, imp._attach_notes(contacts, tmp_notes, inserted, notes0)
+    ).collect()
     # 2 inserted needs for N1 × 2 staged notes = 4 rows (SQL fan-out)
     assert len(notes) == 4
     assert sorted(r.id for r in notes) == [1, 2, 3, 4]
@@ -103,7 +106,7 @@ def test_identified_needs_resolution_and_id_offset(spark):
         "updated_at date, completed_on date, supplemental_data string, "
         "user_id long, start_on date",
     )
-    out = imp.import_identified_needs(contacts, needs, tmp).collect()
+    out = imp._append(needs, imp._insert_needs(contacts, [tmp], needs)).collect()
     assert len(out) == 2
     new = [r for r in out if r.id == 8][0]  # max(7)+1
     assert new.contact_id == 20 and new.user_id == 101

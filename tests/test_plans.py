@@ -10,7 +10,6 @@ import pytest
 
 from beacon_data_importer_spark.plans.calls import CallsUsers, prepare_calls
 from beacon_data_importer_spark.plans.contacts import prepare_contacts
-from beacon_data_importer_spark.sources.csv import _petl_cell
 
 import fixtures
 import ref_oracle
@@ -34,7 +33,7 @@ def norm_rows(cols: list[str], rows: list[dict | tuple]) -> list[tuple]:
         vals = []
         for i, c in enumerate(cols):
             v = r[c] if isinstance(r, dict) else r[i]
-            s = _petl_cell(v)
+            s = "" if v is None else str(v)
             if c in JSON_COLS and s:
                 s = json.dumps(json.loads(s), sort_keys=True)
             vals.append(s)

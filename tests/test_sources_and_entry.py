@@ -45,19 +45,6 @@ def test_queries_and_oracles_aligned():
     assert len(qs) >= 30
 
 
-def test_partitioned_csv_sink_roundtrip(spark, tmp_path):
-    from pyspark.sql import Row
-
-    from beacon_data_importer_spark.sources.csv import write_csv
-
-    df = spark.createDataFrame([Row(a=str(i), b=f"v{i}") for i in range(100)])
-    out = str(tmp_path / "csv_out")
-    write_csv(df, out)
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == 100
-    assert sorted(back.columns) == ["a", "b"]
-
-
 def test_jsonl_roundtrip_and_corrupt_line_is_null_row(spark, tmp_path):
     from beacon_data_importer_spark.sources import read_jsonl, write_jsonl
 

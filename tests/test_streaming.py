@@ -4,13 +4,17 @@ completion."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from beacon_data_importer_spark.sources.parquet import read_table
 from beacon_data_importer_spark.streaming import events as SE
+from beacon_data_importer_spark.streaming import versioned
 
 
 def test_streaming_windowed_counts_match_batch(spark, sf_dir):
@@ -594,9 +598,9 @@ def test_streaming_cdc_merge_matches_batch_snapshot(spark, sf_dir, tmp_path):
     tombstone retention (a last-op-delete key is absent from the live
     view), and the per-key changelog audit count."""
     from beacon_data_importer_spark.streaming.cdc import (
+        apply_changes,
         changelog_from_events,
-        current_snapshot,
-        streaming_cdc_merge,
+        live,
     )
     from pyspark.sql import Window
 
@@ -610,14 +614,14 @@ def test_streaming_cdc_merge_matches_batch_snapshot(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "dim_user")
-    streaming_cdc_merge(changelog_from_events(stream), target)
+    versioned.fold_stream(changelog_from_events(stream), target, apply_changes)
 
     versions = sorted(os.listdir(target))
     assert len([v for v in versions if v.startswith("v")]) >= 2
 
     live = {
         (r.key, r.seq, r.cents, r.n_changes)
-        for r in current_snapshot(spark, target).collect()
+        for r in live(versioned.latest(spark, target)).collect()
     }
 
     log = changelog_from_events(batch)
@@ -645,52 +649,107 @@ def test_streaming_cdc_merge_matches_batch_snapshot(spark, sf_dir, tmp_path):
         assert r.key not in live_keys
 
 
-def test_cdc_merge_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """Checkpoint-replay contract (ADVICE r5): re-running merge_batch
-    for the SAME batch id after its version was already written must
-    (a) not throw (prev is keyed to the batch id, never the directory
-    it is about to overwrite), (b) leave the snapshot byte-identical
-    including n_changes (no double-count), and (c) a crashed write —
-    a version directory without _SUCCESS — must be invisible to both
-    current_snapshot and the next merge's prev-lookup."""
-    from beacon_data_importer_spark.streaming.cdc import (
-        _versions,
-        changelog_from_events,
-        current_snapshot,
-        merge_batch,
-    )
+def _versioned_state(name):
+    """(step, batch preparation) of one versioned streaming state."""
+    from beacon_data_importer_spark.streaming import cdc, drift, sketches, topk
 
+    return {
+        "cdc": (cdc.apply_changes, cdc.changelog_from_events),
+        "hll": (sketches.union_hll, lambda events: events),
+        "theta": (sketches.union_theta, lambda events: events),
+        "mg": (topk.merge_counts, lambda events: events),
+        "ph": (drift.fold_volume, lambda events: events),
+    }[name]
+
+
+@pytest.mark.parametrize("state", ["cdc", "hll", "theta", "mg", "ph"])
+def test_versioned_state_replay_contract(spark, sf_dir, tmp_path, state):
+    """Checkpoint-replay contract (ADVICE r5) of streaming/versioned.py,
+    for every state it stores: re-running a merge for the SAME batch id
+    after its version was already written must (a) not throw (prev is
+    keyed to the batch id, never the directory it is about to
+    overwrite), (b) rewrite the same rows (CDC: n_changes included — no
+    double-count), and (c) a crashed write — a version directory
+    without _SUCCESS — must be invisible to both ``latest`` and the next
+    merge's prev-lookup.  A batch whose previous version is not
+    committed raises."""
+    step, prepare = _versioned_state(state)
     events = read_table(spark, sf_dir, "events")
-    log = changelog_from_events(events)
-    b0 = log.filter(F.col("seq") % 2 == 0)
-    b1 = log.filter(F.col("seq") % 2 == 1)
-    target = str(tmp_path / "dim_replay")
+    b0 = prepare(events.filter(F.col("event_id") % 2 == 0))
+    b1 = prepare(events.filter(F.col("event_id") % 2 == 1))
+    target = str(tmp_path / state)
 
-    merge_batch(spark, b0, 0, target)
-    merge_batch(spark, b1, 1, target)
-    after_once = {
-        tuple(r) for r in spark.read.parquet(target + "/v00000002").collect()
-    }
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    versioned.merge(spark, b0, 0, target, step)
+    versioned.merge(spark, b1, 1, target, step)
+    after_once = rows(spark.read.parquet(target + "/v00000002"))
+    assert after_once
 
     # Crash-after-write replay: batch 1 runs again against the same dir.
-    merge_batch(spark, b1, 1, target)
-    after_twice = {
-        tuple(r) for r in spark.read.parquet(target + "/v00000002").collect()
-    }
-    assert after_twice == after_once  # includes n_changes — no double-count
+    versioned.merge(spark, b1, 1, target, step)
+    assert rows(spark.read.parquet(target + "/v00000002")) == after_once
 
     # Crashed (uncommitted) write: v3 without _SUCCESS is ignored.
     part = os.path.join(target, "v00000003")
     os.makedirs(part)
     with open(os.path.join(part, "part-00000.parquet"), "wb") as f:
         f.write(b"torn write")
-    assert _versions(target) == ["v00000001", "v00000002"]
-    live = current_snapshot(spark, target)
-    assert live.count() == len([r for r in after_once if r[2] == "U"])
+    assert versioned.committed(target) == ["v00000001", "v00000002"]
+    assert rows(versioned.latest(spark, target)) == after_once
+
+    # Batch 3 has no committed v3 to read, and neither has batch 1 in an
+    # empty directory.
+    with pytest.raises(RuntimeError, match="v00000003"):
+        versioned.merge(spark, b0, 3, target, step)
+    empty = str(tmp_path / "empty")
+    with pytest.raises(RuntimeError, match="v00000001"):
+        versioned.merge(spark, b1, 1, empty, step)
+    with pytest.raises(FileNotFoundError):
+        versioned.latest(spark, empty)
 
     # And batch 2 merges on top of v2, not the torn v3.
-    merge_batch(spark, b0.limit(0), 2, target)
-    assert "v00000003" in _versions(target)
+    versioned.merge(spark, b0.limit(0), 2, target, step)
+    assert versioned.committed(target) == ["v00000001", "v00000002", "v00000003"]
+
+
+def test_versioned_contract_lives_in_one_module():
+    """Ratchet: the package runs ``foreachBatch``, names the ``_SUCCESS``
+    marker and formats an ``:08d`` version name only in
+    streaming/versioned.py (docstrings may still mention them)."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "beacon_data_importer_spark",
+    )
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("streaming", "versioned.py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                found.append(f"{rel}:{node.lineno}: .foreachBatch")
+            elif (
+                isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and id(node) not in docs
+                and ("_SUCCESS" in node.value
+                     or re.search(r"(^|[:%])08d", node.value))
+            ):
+                found.append(f"{rel}:{node.lineno}: {node.value!r}")
+    assert not found, (
+        f"{len(found)} versioned-snapshot pieces outside "
+        f"streaming/versioned.py: {found}"
+    )
 
 
 def test_streaming_session_timers_match_batch_sessionize(spark, sf_dir, tmp_path):
@@ -814,10 +873,8 @@ def test_streaming_hll_state_equals_batch_sketch(spark, sf_dir, tmp_path):
     estimates unchanged (idempotency)."""
     from beacon_data_importer_spark.streaming.sketches import (
         batch_type_sketches,
-        current_estimates,
-        merge_batch,
         sketch_estimates,
-        streaming_distinct_users,
+        union_hll,
     )
 
     events = read_table(spark, sf_dir, "events")
@@ -829,11 +886,11 @@ def test_streaming_hll_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "hll_state")
-    streaming_distinct_users(stream, target)
+    versioned.fold_stream(stream, target, union_hll)
 
     got = {
         r.event_type: r.n_distinct_est
-        for r in current_estimates(spark, target).collect()
+        for r in sketch_estimates(versioned.latest(spark, target)).collect()
     }
     want = {
         r.event_type: r.n_distinct_est
@@ -854,21 +911,15 @@ def test_streaming_hll_state_equals_batch_sketch(spark, sf_dir, tmp_path):
     # re-merging ALREADY-SEEN data (here: the whole stream, replayed
     # as the final batch id — a superset of what batch N really held)
     # rewrites v{N+1} with identical registers; estimates cannot move.
-    import os as _os
-
-    versions = sorted(
-        d for d in _os.listdir(target) if d.startswith("v")
-        and _os.path.isfile(_os.path.join(target, d, "_SUCCESS"))
-    )
-    last_batch = len(versions) - 1
+    last_batch = len(versioned.committed(target)) - 1
     before = {
         r.event_type: r.n_distinct_est
-        for r in current_estimates(spark, target).collect()
+        for r in sketch_estimates(versioned.latest(spark, target)).collect()
     }
-    merge_batch(spark, events, last_batch, target)
+    versioned.merge(spark, events, last_batch, target, union_hll)
     after = {
         r.event_type: r.n_distinct_est
-        for r in current_estimates(spark, target).collect()
+        for r in sketch_estimates(versioned.latest(spark, target)).collect()
     }
     assert after == before
 
@@ -883,12 +934,9 @@ def test_streaming_theta_state_equals_batch_sketch(spark, sf_dir, tmp_path):
     justifies theta next to HLL."""
     from beacon_data_importer_spark.streaming.sketches import (
         batch_type_theta_sketches,
-        current_theta_estimates,
         theta_estimates,
         theta_overlap,
-    )
-    from beacon_data_importer_spark.streaming.sketches import (
-        streaming_distinct_users_theta,
+        union_theta,
     )
 
     events = read_table(spark, sf_dir, "events")
@@ -900,11 +948,11 @@ def test_streaming_theta_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "theta_state")
-    streaming_distinct_users_theta(stream, target)
+    versioned.fold_stream(stream, target, union_theta)
 
     got = {
         r.event_type: r.n_distinct_est
-        for r in current_theta_estimates(spark, target).collect()
+        for r in theta_estimates(versioned.latest(spark, target)).collect()
     }
     want = {
         r.event_type: r.n_distinct_est
@@ -916,13 +964,8 @@ def test_streaming_theta_state_equals_batch_sketch(spark, sf_dir, tmp_path):
 
     # the set-algebra surface: streamed state and batch sketches must
     # produce identical overlap rows
-    import os as _os
-
-    versions = sorted(
-        d for d in _os.listdir(target) if d.startswith("v")
-        and _os.path.isfile(_os.path.join(target, d, "_SUCCESS"))
-    )
-    streamed = spark.read.parquet(_os.path.join(target, versions[-1]))
+    versions = versioned.committed(target)
+    streamed = spark.read.parquet(os.path.join(target, versions[-1]))
     ov_stream = theta_overlap(streamed, "view", "purchase").collect()[0]
     ov_batch = theta_overlap(
         batch_type_theta_sketches(events), "view", "purchase"
@@ -935,7 +978,7 @@ def test_streaming_theta_state_equals_batch_sketch(spark, sf_dir, tmp_path):
 
 def test_mg_state_contract_equals_catalog_fold(spark, sf_dir, tmp_path):
     """streaming/topk.py round-8 Misra-Gries path, part 1: driving the
-    foreachBatch contract (merge_batch_mg at batch ids 0..3) over the
+    versioned contract (merge_counts at batch ids 0..3) over the
     SAME event_id%4 slice sequence the catalog query folds must yield
     the IDENTICAL summary — stream == fold over the same sequence is
     the strongest true claim for an order-dependent mergeable summary
@@ -943,19 +986,20 @@ def test_mg_state_contract_equals_catalog_fold(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from beacon_data_importer_spark.streaming.topk import (
-        current_heavy_hitters,
-        merge_batch_mg,
+        heavy_hitters,
+        merge_counts,
     )
 
     events = read_table(spark, sf_dir, "events")
     target = str(tmp_path / "mg_state")
     for i in range(4):
-        merge_batch_mg(
-            spark, events.filter(F.col("event_id") % 4 == i), i, target
+        versioned.merge(
+            spark, events.filter(F.col("event_id") % 4 == i), i, target,
+            merge_counts,
         )
     got = {
         (r.user_id, r.cnt_lo, r.cnt_hi)
-        for r in current_heavy_hitters(spark, target).collect()
+        for r in heavy_hitters(versioned.latest(spark, target)).collect()
     }
     import __spark_entry__ as entry
 
@@ -977,8 +1021,8 @@ def test_mg_streaming_bound_holds_and_state_is_k_bounded(
     the order-free guarantees, asserted without assuming file order."""
     from beacon_data_importer_spark.streaming.topk import (
         K,
-        current_heavy_hitters,
-        streaming_heavy_hitters,
+        heavy_hitters,
+        merge_counts,
     )
 
     events = read_table(spark, sf_dir, "events")
@@ -990,11 +1034,11 @@ def test_mg_streaming_bound_holds_and_state_is_k_bounded(
         .parquet(src)
     )
     target = str(tmp_path / "mg_hh")
-    streaming_heavy_hitters(stream, target)
+    versioned.fold_stream(stream, target, merge_counts)
 
     import pyspark.sql.functions as F
 
-    hh = current_heavy_hitters(spark, target)
+    hh = heavy_hitters(versioned.latest(spark, target))
     rows = hh.collect()
     assert 0 < len(rows) <= K
     exact = {
@@ -1009,26 +1053,22 @@ def test_mg_streaming_bound_holds_and_state_is_k_bounded(
 
 def test_ph_state_contract_equals_scalar_fold(spark, sf_dir, tmp_path):
     """streaming/drift.py round-9 Page-Hinkley path, part 1: driving
-    the foreachBatch contract (merge_batch_ph at batch ids 0..3) over
+    the versioned contract (fold_volume at batch ids 0..3) over
     the event_id%4 slice sequence must equal the pure-Python ph_step
     fold over the same slice counts BIT-FOR-BIT (the state is all
     integers, so equality is literal — the MG stream==fold doctrine)."""
     import pyspark.sql.functions as F
 
-    from beacon_data_importer_spark.streaming.drift import (
-        current_drift_state,
-        merge_batch_ph,
-        ph_step,
-    )
+    from beacon_data_importer_spark.streaming.drift import fold_volume, ph_step
 
     events = read_table(spark, sf_dir, "events")
     target = str(tmp_path / "ph_state")
     state = None
     for i in range(4):
         sl = events.filter(F.col("event_id") % 4 == i)
-        merge_batch_ph(spark, sl, i, target)
+        versioned.merge(spark, sl, i, target, fold_volume)
         state = ph_step(state, sl.count())
-    got = current_drift_state(spark, target).collect()[0]
+    got = versioned.latest(spark, target).collect()[0]
     assert (
         got.n_batches, got.sum_x, got.m_e6, got.m_min_e6,
         got.ph_e6, got.lambda_e6, got.n_alarms, got.last_x,
@@ -1042,10 +1082,7 @@ def test_ph_streaming_invariants_hold(spark, sf_dir, tmp_path):
     source, maxFilesPerTrigger=1) maintains a ONE-ROW snapshot whose
     order-free invariants hold: PH = m − min(m) ≥ 0, min ≤ m, the
     volume total is exact, and λ was fixed by the first batch."""
-    from beacon_data_importer_spark.streaming.drift import (
-        current_drift_state,
-        streaming_drift_monitor,
-    )
+    from beacon_data_importer_spark.streaming.drift import fold_volume
 
     events = read_table(spark, sf_dir, "events")
     src = str(tmp_path / "ph_src")
@@ -1056,9 +1093,9 @@ def test_ph_streaming_invariants_hold(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "ph_mon")
-    streaming_drift_monitor(stream, target)
+    versioned.fold_stream(stream, target, fold_volume)
 
-    r = current_drift_state(spark, target).collect()[0]
+    r = versioned.latest(spark, target).collect()[0]
     assert r.n_batches >= 1
     assert r.sum_x == events.count()
     assert r.m_min_e6 <= r.m_e6
