@@ -116,12 +116,14 @@ def run_foreach_batch_to_parquet(stream_df, out_dir: str) -> None:
     """Incremental parquet sink via ``versioned.each_batch`` — the
     pattern for sinks Spark has no native streaming writer for (JDBC
     upserts, MERGE targets): each micro-batch arrives as a regular
-    DataFrame with an id, written transactionally by batch."""
+    DataFrame with an id and overwrites its own ``__batch_id=N``
+    partition, so a batch that checkpoint recovery replays (its write
+    finished, its commit did not) is stored once, not twice."""
 
     def sink(batch_df, batch_id: int) -> None:
-        batch_df.withColumn(
-            "__batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(out_dir)
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"__batch_id={batch_id}")
+        )
 
     each_batch(stream_df, out_dir, sink)
 

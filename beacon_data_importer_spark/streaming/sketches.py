@@ -56,9 +56,10 @@ def sketch_estimates(sketches: DataFrame) -> DataFrame:
 # Stored like the HLL state above, but theta sketches: union is still
 # the merge (associative, so streaming == batch estimates — asserted by
 # tests/test_streaming.py), and unlike HLL the MAINTAINED state also
-# supports INTERSECTION and DIFFERENCE algebra — per-type audience overlap from KB-scale state,
-# long after the raw events are gone.  That set algebra is what earns
-# theta its storage next to HLL (theta state is larger per group).
+# supports INTERSECTION and DIFFERENCE algebra — per-type audience
+# overlap from KB-scale state, long after the raw events are gone.
+# That set algebra is what earns theta its storage next to HLL (theta
+# state is larger per group).
 
 
 def batch_type_theta_sketches(events: DataFrame) -> DataFrame:

@@ -588,6 +588,18 @@ def test_streaming_checkpoint_recovery_is_exactly_once(spark, sf_dir, tmp_path):
     # and no event was ever written twice
     assert got.select("event_id").distinct().count() == full.count()
 
+    # a crash after the last batch's write, before its checkpoint commit:
+    # the restart re-runs that batch, and its rows must be stored once
+    commits = os.path.join(out_dir + "_ckpt", "commits")
+    last = max(int(c) for c in os.listdir(commits) if c.isdigit())
+    for name in (str(last), f".{last}.crc"):  # the commit and its checksum
+        os.remove(os.path.join(commits, name))
+    run_once()
+    assert os.path.isfile(os.path.join(commits, str(last)))
+    got = spark.read.parquet(out_dir)
+    assert got.count() == full.count()
+    assert got.select("event_id").distinct().count() == full.count()
+
 
 def test_streaming_cdc_merge_matches_batch_snapshot(spark, sf_dir, tmp_path):
     """streaming/cdc.py end-to-end: the changelog stream applied in
@@ -698,6 +710,13 @@ def test_versioned_state_replay_contract(spark, sf_dir, tmp_path, state):
         f.write(b"torn write")
     assert versioned.committed(target) == ["v00000001", "v00000002"]
     assert rows(versioned.latest(spark, target)) == after_once
+    if state == "cdc":
+        from beacon_data_importer_spark.streaming.cdc import live
+
+        v2 = spark.read.parquet(target + "/v00000002").collect()
+        assert live(versioned.latest(spark, target)).count() == len(
+            [r for r in v2 if r.op == "U"]
+        )
 
     # Batch 3 has no committed v3 to read, and neither has batch 1 in an
     # empty directory.
